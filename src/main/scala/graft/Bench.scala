@@ -393,10 +393,15 @@ object Bench {
     // reading) — emitted on STDOUT so the driver's per-query PERF
     // comparator sees them (r11 judge item 1: PERF_r11.json had
     // per_query: {} because the one-liner carried only totals).
-    val queriesCleanJson = results.map { case (name, r) =>
-      val w = if (secondWall.contains(name)) adjudicated(name) else r.wall
+    // Failed queries (the -1 sentinel) are left out of the map, as the
+    // totals filter them, and named in `failed` instead.
+    val cleanWalls = results.map { case (name, r) =>
+      name -> (if (secondWall.contains(name)) adjudicated(name) else r.wall)
+    }
+    val queriesCleanJson = cleanWalls.collect { case (name, w) if w >= 0 =>
       "\"" + name + "\":" + r3(w)
     }.mkString("{", ",", "}")
+    val failedJson = jstr(cleanWalls.collect { case (n, w) if w < 0 => n })
     val adjudication =
       s"""{"tol":$tol,"in_band":$inBand,"n_flagged":${flagged.size},
          |"flagged":$flaggedJson,
@@ -482,6 +487,7 @@ object Bench {
     println(s"""{"metric":"total","value":$totalR,"unit":"sec",""" +
       s""""value_clean":$totalClean,""" +
       s""""queries":$queriesCleanJson,""" +
+      s""""failed":$failedJson,""" +
       s""""n_queries":${results.size},"sf":"${jesc(sfDir)}",""" +
       s""""bands_adjudicated":${if (bands.isEmpty) 0 else inBand + flagged.size},""" +
       s""""bands_skipped":${bands.isEmpty},""" +

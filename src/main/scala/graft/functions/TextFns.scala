@@ -121,12 +121,6 @@ object TextFns {
         (40503L * (j + 7)) % 2147483647L)
     }
 
-  /** One MinHash signature slot: min over shingles of (a*h32(s)+b) mod P.
-    * a < 2^30 and h < 2^32 keep a*h < 2^62 — no signed overflow. */
-  def minhashSlot(shingleArr: Column, a: Long, b: Long): Column =
-    array_min(transform(shingleArr,
-      s => (lit(a) * hash32(s) + lit(b)) % MinhashP))
-
   /** BPE-ish subword-boundary tokenization (regex only — the shape a
     * byte-pair tokenizer's pre-tokenizer uses): letter runs, digit
     * chunks of at most 3 (BPE tokenizers split long numbers), and

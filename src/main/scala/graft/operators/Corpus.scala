@@ -562,15 +562,23 @@ object Corpus {
     } finally { fp.unpersist(false); () }
   }
 
-  /** The INGEST-TIME quote screen: positional containment of an
-    * arriving batch against an already-held corpus, from their
-    * fingerprint relations — batch×corpus pairs ONLY (never
-    * corpus×corpus: a 100 TB corpus's internal pairs are not this
-    * screen's question, and forming them per batch would be
-    * quadratic where this is linear in the batch). The df cap is
-    * computed over corpus ∪ batch — the maintenance rule that makes
-    * the screen equal the full [[winnowingContainment]] filtered to
-    * batch-touching pairs. Either orientation rejects: a tiny quote
+  /** The ingest-time QUOTE SCREEN: positional containment of an
+    * arriving batch against a maintained winnow table — the one form
+    * every caller (the continuous curate loop, batch audits) runs.
+    * `batchFps` is the batch's [[winnowingFingerprints]] relation;
+    * `tablePath` is a table written by [[writeWinnowTable]] and grown
+    * by [[appendToWinnowTable]], with its doc-keyed projection
+    * ([[winnowByIdPath]]) and df sidecar ([[winnowDfStatePath]]).
+    *
+    * Only batch×corpus pairs form (never corpus×corpus: a 100 TB
+    * corpus's internal pairs are not this screen's question, and
+    * forming them per batch would be quadratic where this is linear in
+    * the batch). The df cap is judged over corpus ∪ batch, hash by
+    * hash, as stored df (folded from the sidecar's deltas) + the
+    * batch's own df — so a hash the batch pushes past `maxDf` is
+    * re-judged here and a cap crossing needs no stored-state rewrite,
+    * and the result equals the full [[winnowingContainment]] filtered
+    * to batch-touching pairs. Either orientation rejects: a tiny quote
     * OF held content and a superset CONTAINING a held document both
     * read high containment, and both mean the batch row duplicates
     * held material.
@@ -578,142 +586,43 @@ object Corpus {
     * Returns (batch_id, corpus_id, n_batch, n_corpus, shared,
     * containment_bp) at `minContainmentBp` and above, where
     * containment_bp = shared·10⁴ div min(n_batch, n_corpus) in exact
-    * integer basis points over the df-capped fingerprint sets.
+    * integer basis points over the df-capped fingerprint sets,
+    * materialized under `mat`; intermediates release before return.
+    *
+    * `replay` = (the batch's own ids as column `id`, its batch id), for
+    * a curate batch that may be replaying after a crash: its ids are
+    * excluded corpus-side and the sidecar counts only deltas with
+    * `batch_id` below the batch's, so a batch never screens against
+    * its own already-landed rows. Replay is SEQUENTIAL — no rows from
+    * later batches exist in the table, projection or sidecar at replay
+    * time (true for the curate loop).
+    *
+    * Two regimes, picked by the table's data-file count:
+    *  - at most 2 × `spark.sql.shuffle.partitions` files (the table
+    *    reads whole anyway): one lazy DAG over the projection and the
+    *    sidecar — no persists, no action barriers, Catalyst shares the
+    *    exchanges;
+    *  - above that (the 100 TB steady state): every stored-table read
+    *    is file-pruned against the batch's bounded probe sets — of the
+    *    table only files whose h-envelope meets the batch's rare-hash
+    *    set, of the projection only files whose id-envelope meets the
+    *    candidate docs, of the sidecar only files whose h-envelope
+    *    meets the batch's (then candidates') hash sets. Pruning only
+    *    drops files that contain NO probe key and every pruned read
+    *    feeds an equi-semi-join on that key, so the rows are those of
+    *    the bulk DAG; crash windows degrade to reading more via
+    *    MaintainedIndex's unindexed-file rule, never to a false skip.
+    *    The probe-set collects are the screen's own broadcast sides
+    *    read driver-side, bounded by the batch and its candidates;
+    *    corpus rows never collect.
     */
   def winnowingContainmentScreen(batchFps: DataFrame,
-                                 corpusFps: DataFrame,
+                                 tablePath: String,
+                                 replay: Option[(DataFrame, Long)] = None,
                                  maxDf: Long = 50,
-                                 minContainmentBp: Long = 8000L): DataFrame = {
-    require(maxDf >= 1, s"df cap must be >= 1, got $maxDf")
-    require(minContainmentBp >= 0 && minContainmentBp <= 10000,
-      s"containment is in basis points 0..10000, got $minContainmentBp")
-    val ihB = batchFps.select(col("id"), col("h")).distinct()
-    val ihC = corpusFps.select(col("id"), col("h")).distinct()
-    val rare = ihB.unionByName(ihC)
-      .groupBy(col("h")).agg(count(lit(1)).as("d"))
-      .where(col("d") <= maxDf).select(col("h"))
-    val pB = ihB.join(rare, Seq("h"))
-    val pC = ihC.join(rare, Seq("h"))
-    val nB = pB.groupBy(col("id")).agg(count(lit(1)).as("n_batch"))
-      .withColumnRenamed("id", "batch_id")
-    val nC = pC.groupBy(col("id")).agg(count(lit(1)).as("n_corpus"))
-      .withColumnRenamed("id", "corpus_id")
-    pB.select(col("h"), col("id").as("batch_id"))
-      .join(pC.select(col("h"), col("id").as("corpus_id")), Seq("h"))
-      .groupBy(col("batch_id"), col("corpus_id"))
-      .agg(count(lit(1)).as("shared"))
-      .join(nB, Seq("batch_id"))
-      .join(nC, Seq("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        col("n_batch"), col("n_corpus"), col("shared"),
-        expr("(shared * 10000) div least(n_batch, n_corpus)")
-          .as("containment_bp"))
-      .where(col("containment_bp") >= minContainmentBp)
-  }
-
-  /** [[winnowingContainmentScreen]] with the corpus-wide document
-    * frequencies read from the MAINTAINED df sidecar
-    * ([[winnowDfStatePath]]) instead of re-aggregated from the full
-    * fingerprint table — the amortized form the continuous curate loop
-    * runs. Identical results by construction (ids are unique across
-    * batch and corpus, so df over corpus ∪ batch = stored corpus df +
-    * this batch's df, hash by hash); the one-shot
-    * [[winnowingContainmentScreen]] stays for stateless batch audits.
-    *
-    * `dfState` is the `(h, d)` delta relation, already filtered by the
-    * caller to the deltas that logically precede this batch
-    * (`batch_id < ownId` — replay safety, mirroring the corpus-side
-    * own-id exclusion on `corpusFps`).
-    *
-    * Per-batch cost is batch + delta, never the corpus:
-    *  - the batch's own hash dfs are one O(batch) aggregation;
-    *  - corpus dfs are summed ONLY for delta rows matching a
-    *    batch-bounded hash set (batch hashes, then candidate docs'
-    *    hashes), pushed as a broadcast semi-join BEFORE the aggregate —
-    *    no corpus-wide groupBy(h) ever forms;
-    *  - the fingerprint table is touched twice, each a column-pruned
-    *    scan joined against a broadcast batch-derived set (pair
-    *    candidates by rare shared hash; candidate docs' own rows for
-    *    denominators).
-    * The df cap stays exact under maintenance: df is monotone under
-    * appends, and a hash crossing the cap due to THIS batch's
-    * contribution is re-judged here (stored d + batch d), so
-    * cap-crossing needs no stored-state rewrite.
-    */
-  def winnowingContainmentScreenMaintained(batchFps: DataFrame,
-                                           corpusFps: DataFrame,
-                                           dfState: DataFrame,
-                                           maxDf: Long = 50,
-                                           minContainmentBp: Long = 8000L): DataFrame =
-    screenMaintainedCore(batchFps, corpusFps, dfState, maxDf,
-      minContainmentBp, identity)
-
-  /** [[winnowingContainmentScreenMaintained]] materialized (the
-    * incrementalNearDupAgainstPreSigsM device): the screen's plan reads
-    * its own intermediates several times (the rare batch-hash set gates
-    * both the pair join and the denominators; the pruned corpus rows
-    * feed pairs AND candidate ids), and left lazy each reuse re-runs
-    * the subtree — so the reused frames persist for the build, the
-    * result lands eagerly under `mat`, and the intermediates release
-    * before return. Per-batch callers (the curate loop) use this form;
-    * the lazy form stays for composition into larger plans.
-    */
-  def winnowingContainmentScreenMaintainedM(batchFps: DataFrame,
-                                            corpusFps: DataFrame,
-                                            dfState: DataFrame,
-                                            maxDf: Long = 50,
-                                            minContainmentBp: Long = 8000L,
-                                            mat: graft.ops.MatStrategy =
-                                              graft.ops.MatStrategy.Default): graft.ops.Materialized = {
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def hold(df: DataFrame): DataFrame = {
-      val p = df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      held += p
-      p
-    }
-    try graft.ops.Materialize(
-      screenMaintainedCore(batchFps, corpusFps, dfState, maxDf,
-        minContainmentBp, hold), mat)
-    finally { held.foreach(_.unpersist(false)); () }
-  }
-
-  /** The PRUNED maintained screen — [[winnowingContainmentScreenMaintained]]
-    * with every stored-table read file-pruned against the batch's
-    * bounded probe sets, eager and self-releasing (the M-variant's
-    * hold/release device). This is the form the continuous curate loop
-    * runs: per batch it opens
-    *  - of the winnow TABLE, only files whose h-envelope meets the
-    *    batch's rare-hash set (the pair probe);
-    *  - of the doc-keyed PROJECTION ([[winnowByIdPath]]), only files
-    *    whose id-envelope meets the candidate-doc set (the denominator
-    *    pull — the read the h-clustered table cannot prune);
-    *  - of the df SIDECAR, only files whose h-envelope meets the
-    *    batch's (then candidates') hash sets.
-    * Identical results to the unpruned screen by construction: pruning
-    * only drops files that contain NO probe key, and every pruned read
-    * feeds an equi-semi-join on that key (ScreenPruneSpec pins the
-    * equality and the file-count collapse; the crash windows degrade
-    * to reading more via MaintainedIndex's unindexed-file rule, never
-    * to a false skip).
-    *
-    * The probe-set collects are the screen's own broadcast sides read
-    * driver-side — bounded by the batch and its candidates, the same
-    * bytes a broadcast already stages through the driver; corpus rows
-    * never collect.
-    *
-    * `excludeIds` (single column `id`) is the replay-safety corpus
-    * exclusion; `ownBatchId` filters the df sidecar to deltas that
-    * logically precede this batch (`batch_id < ownBatchId`).
-    */
-  def winnowingContainmentScreenPrunedM(batchFps: DataFrame,
-                                        tablePath: String,
-                                        excludeIds: Option[DataFrame] = None,
-                                        ownBatchId: Long = Long.MaxValue,
-                                        maxDf: Long = 50,
-                                        minContainmentBp: Long = 8000L,
-                                        mat: graft.ops.MatStrategy =
-                                          graft.ops.MatStrategy.Default): graft.ops.Materialized = {
+                                 minContainmentBp: Long = 8000L,
+                                 mat: graft.ops.MatStrategy =
+                                   graft.ops.MatStrategy.Default): graft.ops.Materialized = {
     require(maxDf >= 1, s"df cap must be >= 1, got $maxDf")
     require(minContainmentBp >= 0 && minContainmentBp <= 10000,
       s"containment is in basis points 0..10000, got $minContainmentBp")
@@ -723,249 +632,164 @@ object Corpus {
     // pass builds its envelope stats
     ensureWinnowDfState(spark, tablePath)
     ensureWinnowScreenIndex(spark, tablePath)
-    // BULK / SMALL-TABLE REGIME: when the table reads whole anyway
-    // (≤ two task waves of files — the same rule the pruned reads
-    // use), the sidecar path's persist/barrier machinery buys nothing
-    // and costs plenty: four multi-million-row persists and five
-    // sequential action barriers per call (measured 6.5-7.5 s per
-    // corpus-scale batch at sf0.1, where the equivalent screen runs
-    // as ONE lazy DAG — Catalyst shares exchanges via ReusedExchange).
-    // The DAG below is the one-shot screen restated over the
-    // MAINTAINED ARTIFACTS (r12):
-    //  - the corpus side reads the doc-keyed PROJECTION
-    //    ([[winnowByIdPath]]) — already distinct (id, h) (ids are
-    //    unique across appends, so per-append distincts compose), so
-    //    the one-shot form's corpus-wide distinct exchange disappears
-    //    and the scan carries fewer, narrower rows than the (id, pos,
-    //    h) table;
-    //  - corpus document frequencies FOLD from the df sidecar (one
-    //    aggregation over pre-aggregated `(h, d)` deltas) instead of
-    //    being re-counted from the corpus fingerprint stream, and the
-    //    df cap is judged on stored-df + batch-df via a full-outer
-    //    hash join (corpus-scale batches make broadcast semi-joins —
-    //    the micro-batch path's device — driver-sized, measured 2×
-    //    slower here).
-    // Identical results in every reachable state: stored df (deltas
-    // with batch_id < ownId) + the batch's own df = df over
-    // (corpus ∖ ownIds) ∪ batch, hash by hash — appends write table
-    // rows, projection rows and df deltas under one batch-named
-    // idempotence, and replay windows exclude the batch's own rows on
-    // BOTH sides (ids corpus-side, batch_id < ownId on the sidecar).
-    // NOTE the replay contract this branch shares with the pruned
-    // path below: a caller passing `ownBatchId` relies on SEQUENTIAL
-    // replay — no rows from batches > ownBatchId exist in the table,
-    // the projection, or the sidecar at replay time (true for the
-    // curate loop; an out-of-order caller would get divergent screens
-    // on either path) — and `excludeIds`/`ownBatchId` travel together
-    // (both or neither), as in the curate loop.
-    // ScreenPruneSpec pins pruned == maintained == one-shot.
-    if (MaintainedIndex.dataFileCount(spark, tablePath) <=
-        2 * spark.sessionState.conf.numShufflePartitions) {
-      val proj = spark.read.parquet(winnowByIdPath(tablePath))
-        .select(col("id"), col("h"))
-      val ihC = excludeIds.fold(proj)(e =>
-        proj.join(broadcast(e.select(col("id"))), Seq("id"), "left_anti"))
+    val ownBatchId = replay.fold(Long.MaxValue)(_._2)
+    def exclude(df: DataFrame): DataFrame =
+      replay.fold(df) { case (ids, _) =>
+        df.join(broadcast(ids.select(col("id"))), Seq("id"), "left_anti")
+      }
+    val dfPath = winnowDfStatePath(tablePath)
+    val smallTable = 2 * spark.sessionState.conf.numShufflePartitions
+    if (MaintainedIndex.dataFileCount(spark, tablePath) <= smallTable) {
+      // BULK regime: the pruned path's persist/barrier machinery buys
+      // nothing here and costs plenty (four multi-million-row persists
+      // and five sequential action barriers per call, measured 6.5-7.5 s
+      // per corpus-scale batch at sf0.1 against one lazy DAG).
+      //  - the corpus side reads the doc-keyed PROJECTION — already
+      //    distinct (id, h) (ids are unique across appends, so
+      //    per-append distincts compose), so no corpus-wide distinct
+      //    exchange forms and the scan carries fewer, narrower rows
+      //    than the (id, pos, h) table;
+      //  - corpus dfs FOLD from the sidecar (one aggregation over
+      //    pre-aggregated `(h, d)` deltas), and the cap is judged on
+      //    stored-df + batch-df via a full-outer hash join
+      //    (corpus-scale batches make the pruned path's broadcast
+      //    semi-joins driver-sized, measured 2× slower here).
+      val ihC = exclude(spark.read.parquet(winnowByIdPath(tablePath))
+        .select(col("id"), col("h")))
       val ihB = batchFps.select(col("id"), col("h")).distinct()
       val dfB = ihB.groupBy(col("h")).agg(count(lit(1)).as("db"))
-      val dfC = spark.read.parquet(winnowDfStatePath(tablePath))
+      val dfC = spark.read.parquet(dfPath)
         .where(col("batch_id") < lit(ownBatchId))
         .groupBy(col("h")).agg(sum(col("d")).as("dc"))
       val rare = dfB.join(dfC, Seq("h"), "full_outer")
         .where(coalesce(col("db"), lit(0L)) +
           coalesce(col("dc"), lit(0L)) <= maxDf)
         .select(col("h"))
-      val pB = ihB.join(rare, Seq("h"))
       val pC = ihC.join(rare, Seq("h"))
-      val nB = pB.groupBy(col("id")).agg(count(lit(1)).as("n_batch"))
-        .withColumnRenamed("id", "batch_id")
       val nC = pC.groupBy(col("id")).agg(count(lit(1)).as("n_corpus"))
         .withColumnRenamed("id", "corpus_id")
-      val pairs = pB.select(col("h"), col("id").as("batch_id"))
-        .join(pC.select(col("h"), col("id").as("corpus_id")), Seq("h"))
-        .groupBy(col("batch_id"), col("corpus_id"))
-        .agg(count(lit(1)).as("shared"))
-      return graft.ops.Materialize(
-        pairs.join(nB, Seq("batch_id")).join(nC, Seq("corpus_id"))
-          .select(col("batch_id"), col("corpus_id"),
-            col("n_batch"), col("n_corpus"), col("shared"),
-            expr("(shared * 10000) div least(n_batch, n_corpus)")
-              .as("containment_bp"))
-          .where(col("containment_bp") >= minContainmentBp), mat)
-    }
-    val dfPath = winnowDfStatePath(tablePath)
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def hold(df: DataFrame): DataFrame = {
-      val p = df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      held += p
-      p
-    }
-    val dbgScreen = sys.env.get("GRAFT_CURATE_DEBUG").contains("1")
-    def sdbg[A](tag: String)(f: => A): A =
-      if (!dbgScreen) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[pruned screen] $tag%-14s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        r
+      graft.ops.Materialize(containment(ihB.join(rare, Seq("h")), pC, nC,
+        minContainmentBp), mat)
+    } else {
+      val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      def hold(df: DataFrame): DataFrame = {
+        val p = df.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        held += p
+        p
       }
-    def keysOf(df: DataFrame, c: String): Array[Any] =
-      df.select(col(c)).collect().map(_.get(0))
-    def exclude(df: DataFrame): DataFrame =
-      excludeIds.fold(df)(e =>
-        df.join(broadcast(e.select(col("id"))), Seq("id"), "left_anti"))
-    // Prune-or-not, decided BEFORE any probe collect: a probe set at
-    // least as large as the table's file count cannot skip a useful
-    // fraction under uniform keys, so bulk-sized batches (audits, the
-    // bench fixtures' corpus-scale batches) read tables whole and pay
-    // ZERO prune overhead — the r10 plan shape exactly. Micro-batches
-    // (the 100 TB steady state) fall through to the pruned read. The
-    // probe relations are already held, so counts are cache reads.
-    def prunedOrFull(dir: String, keyCol: String, probeRel: DataFrame,
-                     probeCol: String): (DataFrame, Boolean) = {
-      val nFiles = MaintainedIndex.dataFileCount(spark, dir)
-      // a SMALL table (≤ two task waves of files) is cheaper to read
-      // whole than to probe: skip the decision job entirely — zero
-      // added barriers in the bulk/fixture regime. At 100 TB the
-      // maintained tables are thousands of files and always take the
-      // pruned path below.
-      if (nFiles <= 2 * spark.sessionState.conf.numShufflePartitions)
-        return (spark.read.parquet(dir), false)
-      // ONE bounded job decides AND fetches: collect at most
-      // nFiles + 1 probes (an early-exit scan of the held relation).
-      // Overflow ⇒ the probe set outnumbers the files ⇒ read whole;
-      // otherwise the collected set is the prune's probe array — the
-      // driver never holds more probes than the table has files.
-      val probes = probeRel.select(col(probeCol))
-        .limit(nFiles + 1).collect().map(_.get(0))
-      if (probes.length > nFiles) (spark.read.parquet(dir), false)
-      else {
-        val (df, kept, all) = MaintainedIndex.readPrunedWithInfo(
-          spark, dir, keyCol, probes)
-        (df, kept < all)
+      // Prune-or-not, decided per stored read BEFORE any probe collect:
+      // a probe set at least as large as the read's file count cannot
+      // skip a useful fraction under uniform keys, so bulk-sized
+      // batches read it whole and pay ZERO prune overhead; micro-batches
+      // take the pruned read. The probe relations are already held, so
+      // the probe collects are cache reads.
+      def prunedOrFull(dir: String, keyCol: String, probeRel: DataFrame,
+                       probeCol: String): (DataFrame, Boolean) = {
+        val nFiles = MaintainedIndex.dataFileCount(spark, dir)
+        // a SMALL artifact (≤ two task waves of files) is cheaper to
+        // read whole than to probe: no decision job at all
+        if (nFiles <= smallTable) (spark.read.parquet(dir), false)
+        else {
+          // ONE bounded job decides AND fetches: collect at most
+          // nFiles + 1 probes (an early-exit scan of the held relation).
+          // Overflow ⇒ the probe set outnumbers the files ⇒ read whole;
+          // otherwise the collected set is the prune's probe array —
+          // the driver never holds more probes than the read has files.
+          val probes = probeRel.select(col(probeCol))
+            .limit(nFiles + 1).collect().map(_.get(0))
+          if (probes.length > nFiles) (spark.read.parquet(dir), false)
+          else {
+            val (df, kept, all) = MaintainedIndex.readPrunedWithInfo(
+              spark, dir, keyCol, probes)
+            (df, kept < all)
+          }
+        }
       }
+      def dfStateFor(probeRel: DataFrame, probeCol: String): DataFrame =
+        prunedOrFull(dfPath, "h", probeRel, probeCol)._1
+          .where(col("batch_id") < lit(ownBatchId))
+          .select(col("h"), col("d"))
+      // The bare count() barriers below fully materialize a held frame
+      // before a prune decision's `limit().collect()` probe (or a later
+      // stage) reads it: the early-exit probe alone would cache only the
+      // partitions it touched and leave the rest to re-run inside later
+      // jobs, so the barriers fix the screen's job structure.
+      try {
+        val ihB = hold(batchFps.select(col("id"), col("h")).distinct())
+        val dfB = hold(ihB.groupBy(col("h")).agg(count(lit(1)).as("db")))
+        dfB.count()
+        // corpus df for BATCH hashes: delta rows pruned to the batch's
+        // hash set before any aggregation
+        val dfCB = dfStateFor(dfB, "h")
+          .join(broadcast(dfB.select(col("h"))), Seq("h"))
+          .groupBy(col("h")).agg(sum(col("d")).as("dc"))
+        val rareB = hold(dfB.join(dfCB, Seq("h"), "left")
+          .where(coalesce(col("dc"), lit(0L)) + col("db") <= maxDf)
+          .select(col("h")))
+        rareB.count()
+        val pB = hold(ihB.join(broadcast(rareB), Seq("h")))
+        // the table read: pruned to files whose h-envelope meets the
+        // rare batch-hash set, own ids excluded (replay safety); every
+        // shared hash is by definition a batch hash
+        val (cfpRead, tablePruned) = prunedOrFull(tablePath, "h",
+          rareB, "h")
+        val cfp = hold(exclude(cfpRead).select(col("id"), col("h")))
+        val pC = hold(cfp.join(broadcast(rareB), Seq("h")).distinct())
+        pC.count()
+        // candidates come off pC: every pC doc holds a rare BATCH hash,
+        // so it necessarily pairs with some batch doc
+        val candIds = hold(pC.select(col("id")).distinct())
+        // the denominator pull needs candidate docs' FULL rare-hash
+        // counts, non-batch hashes included — ADAPTIVE between regimes:
+        //  - micro-batch: the pair probe was file-pruned, so cfp is a
+        //    partial relation and candidate docs' hash sets come from
+        //    the ID-CLUSTERED projection, itself pruned to the
+        //    candidate-id set;
+        //  - batch ~ corpus: the pair probe kept every file, cfp IS the
+        //    whole table and is already held — deriving denominators
+        //    from it shares the scan, and reading the projection would
+        //    only add a second full pass.
+        val candFps = hold(
+          (if (!tablePruned)
+             cfp.join(broadcast(candIds), Seq("id"))
+           else
+             exclude(prunedOrFull(winnowByIdPath(tablePath), "id",
+                 candIds, "id")._1)
+               .join(broadcast(candIds), Seq("id")))
+            .select(col("id"), col("h")).distinct())
+        candFps.count()
+        val candH = hold(candFps.select(col("h")).distinct())
+        val dfCC = dfStateFor(candH, "h")
+          .join(broadcast(candH), Seq("h"))
+          .groupBy(col("h")).agg(sum(col("d")).as("dc"))
+        val rareC = dfCC.join(dfB, Seq("h"), "left")
+          .where(col("dc") + coalesce(col("db"), lit(0L)) <= maxDf)
+          .select(col("h"))
+        val nC = candFps.join(broadcast(rareC), Seq("h"))
+          .groupBy(col("id")).agg(count(lit(1)).as("n_corpus"))
+          .withColumnRenamed("id", "corpus_id")
+        graft.ops.Materialize(
+          containment(pB, pC, nC, minContainmentBp), mat)
+      } finally { held.foreach(_.unpersist(false)); () }
     }
-    def dfStateFor(probeRel: DataFrame, probeCol: String): DataFrame =
-      prunedOrFull(dfPath, "h", probeRel, probeCol)._1
-        .where(col("batch_id") < lit(ownBatchId))
-        .select(col("h"), col("d"))
-    try {
-      val ihB = hold(batchFps.select(col("id"), col("h")).distinct())
-      val dfB = hold(ihB.groupBy(col("h")).agg(count(lit(1)).as("db")))
-      sdbg("dfB")(dfB.count())
-      val dfCB = dfStateFor(dfB, "h")
-        .join(broadcast(dfB.select(col("h"))), Seq("h"))
-        .groupBy(col("h")).agg(sum(col("d")).as("dc"))
-      val rareB = hold(dfB.join(dfCB, Seq("h"), "left")
-        .where(coalesce(col("dc"), lit(0L)) + col("db") <= maxDf)
-        .select(col("h")))
-      sdbg("rareB")(rareB.count())
-      val pB = hold(ihB.join(broadcast(rareB), Seq("h")))
-      val nB = pB.groupBy(col("id")).agg(count(lit(1)).as("n_batch"))
-        .withColumnRenamed("id", "batch_id")
-      // the table read: pruned to files whose h-envelope meets the
-      // rare batch-hash set, own ids excluded (replay safety)
-      val (cfpRead, tablePruned) = prunedOrFull(tablePath, "h",
-        rareB, "h")
-      val cfp = hold(exclude(cfpRead).select(col("id"), col("h")))
-      val pC = hold(cfp.join(broadcast(rareB), Seq("h")).distinct())
-      sdbg("pC")(pC.count())
-      val pairs = pB.select(col("h"), col("id").as("batch_id"))
-        .join(pC.select(col("h"), col("id").as("corpus_id")), Seq("h"))
-        .groupBy(col("batch_id"), col("corpus_id"))
-        .agg(count(lit(1)).as("shared"))
-      val candIds = hold(pC.select(col("id")).distinct())
-      // the denominator pull — ADAPTIVE between the two regimes:
-      //  - micro-batch (the 100 TB steady state): the pair probe was
-      //    file-pruned, so cfp is a partial relation and candidate
-      //    docs' full hash sets come from the ID-CLUSTERED projection,
-      //    itself pruned to the candidate-id set;
-      //  - batch ~ corpus (bulk audits, small fixtures): the pair
-      //    probe kept every file, cfp IS the whole table and is
-      //    already held — deriving denominators from it is the r10
-      //    scan-sharing shape, and reading the projection would only
-      //    add a second full pass.
-      val candFps = hold(
-        (if (!tablePruned)
-           cfp.join(broadcast(candIds), Seq("id"))
-         else
-           exclude(prunedOrFull(winnowByIdPath(tablePath), "id",
-               candIds, "id")._1)
-             .join(broadcast(candIds), Seq("id")))
-          .select(col("id"), col("h")).distinct())
-      sdbg("candFps")(candFps.count())
-      val candH = hold(candFps.select(col("h")).distinct())
-      val dfCC = dfStateFor(candH, "h")
-        .join(broadcast(candH), Seq("h"))
-        .groupBy(col("h")).agg(sum(col("d")).as("dc"))
-      val rareC = dfCC.join(dfB, Seq("h"), "left")
-        .where(col("dc") + coalesce(col("db"), lit(0L)) <= maxDf)
-        .select(col("h"))
-      val nC = candFps.join(broadcast(rareC), Seq("h"))
-        .groupBy(col("id")).agg(count(lit(1)).as("n_corpus"))
-        .withColumnRenamed("id", "corpus_id")
-      sdbg("result")(()) // marker: remaining wall is the final materialize
-      graft.ops.Materialize(
-        pairs.join(nB, Seq("batch_id")).join(nC, Seq("corpus_id"))
-          .select(col("batch_id"), col("corpus_id"),
-            col("n_batch"), col("n_corpus"), col("shared"),
-            expr("(shared * 10000) div least(n_batch, n_corpus)")
-              .as("containment_bp"))
-          .where(col("containment_bp") >= minContainmentBp), mat)
-    } finally { held.foreach(_.unpersist(false)); () }
   }
 
-  private def screenMaintainedCore(batchFps: DataFrame,
-                                   corpusFps: DataFrame,
-                                   dfState: DataFrame,
-                                   maxDf: Long,
-                                   minContainmentBp: Long,
-                                   hold: DataFrame => DataFrame): DataFrame = {
-    require(maxDf >= 1, s"df cap must be >= 1, got $maxDf")
-    require(minContainmentBp >= 0 && minContainmentBp <= 10000,
-      s"containment is in basis points 0..10000, got $minContainmentBp")
-    val ihB = hold(batchFps.select(col("id"), col("h")).distinct())
-    val dfB = hold(ihB.groupBy(col("h")).agg(count(lit(1)).as("db")))
-    // corpus df for BATCH hashes: delta rows pruned to the batch's hash
-    // set before any aggregation (the semi-join side is batch-bounded)
-    val dfCB = dfState.join(broadcast(dfB.select(col("h"))), Seq("h"))
-      .groupBy(col("h")).agg(sum(col("d")).as("dc"))
-    val rareB = hold(dfB.join(dfCB, Seq("h"), "left")
-      .where(coalesce(col("dc"), lit(0L)) + col("db") <= maxDf)
-      .select(col("h")))
-    val pB = hold(ihB.join(broadcast(rareB), Seq("h")))
+  /** The quote screen's shared tail: shared rare hashes per
+    * (batch, corpus) pair from the df-capped `(id, h)` relations `pB`
+    * and `pC`, joined to both sides' capped set sizes (`n_batch` from
+    * `pB`, `n_corpus` given as `nC`) and scored in exact integer basis
+    * points, kept at `minContainmentBp` and above. */
+  private def containment(pB: DataFrame, pC: DataFrame, nC: DataFrame,
+                          minContainmentBp: Long): DataFrame = {
     val nB = pB.groupBy(col("id")).agg(count(lit(1)).as("n_batch"))
       .withColumnRenamed("id", "batch_id")
-    // ONE corpus-table scan serves both consumers (the rare-batch-hash
-    // prune here and the candidate-doc denominator pull below) — held
-    // for the batch, released with the other intermediates. Compute
-    // per batch stays one scan + batch-bounded aggregations; the
-    // transient cache is the scan's own columns, nothing derived
-    val cfp = hold(corpusFps.select(col("id"), col("h")))
-    // pair candidates: every shared hash is by definition a batch hash,
-    // so the corpus table is read once, pruned to the rare batch set
-    val pC = hold(cfp.join(broadcast(rareB), Seq("h")).distinct())
-    val pairs = pB.select(col("h"), col("id").as("batch_id"))
+    pB.select(col("h"), col("id").as("batch_id"))
       .join(pC.select(col("h"), col("id").as("corpus_id")), Seq("h"))
       .groupBy(col("batch_id"), col("corpus_id"))
       .agg(count(lit(1)).as("shared"))
-    // denominators need the CANDIDATE corpus docs' full rare-hash
-    // counts — their non-batch hashes included, so their dfs come from
-    // the sidecar too (batch contribution zero there). Candidates come
-    // off pC, not pairs: every pC doc holds a rare BATCH hash, so it
-    // necessarily pairs with some batch doc — same set, one join
-    // shorter a lineage (pairs is expanded once, in the final result)
-    val candIds = pC.select(col("id")).distinct()
-    val candFps = hold(cfp.join(broadcast(candIds), Seq("id")).distinct())
-    val dfCC = dfState
-      .join(broadcast(candFps.select(col("h")).distinct()), Seq("h"))
-      .groupBy(col("h")).agg(sum(col("d")).as("dc"))
-    val rareC = dfCC.join(dfB, Seq("h"), "left")
-      .where(col("dc") + coalesce(col("db"), lit(0L)) <= maxDf)
-      .select(col("h"))
-    val nC = candFps.join(broadcast(rareC), Seq("h"))
-      .groupBy(col("id")).agg(count(lit(1)).as("n_corpus"))
-      .withColumnRenamed("id", "corpus_id")
-    pairs.join(nB, Seq("batch_id")).join(nC, Seq("corpus_id"))
+      .join(nB, Seq("batch_id"))
+      .join(nC, Seq("corpus_id"))
       .select(col("batch_id"), col("corpus_id"),
         col("n_batch"), col("n_corpus"), col("shared"),
         expr("(shared * 10000) div least(n_batch, n_corpus)")

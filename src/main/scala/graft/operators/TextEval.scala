@@ -55,20 +55,6 @@ object TextEval {
         i => array_join(slice(t, i, lit(n)), " ")))
   }
 
-  /** Per-pair clipped n-gram overlap:
-    * (idCol, clip_n: long, n_cand_n: long, n_ref_n: long) where
-    * clip = Σ_g min(count_cand(g), count_ref(g)) — BLEU's clip rule —
-    * and the totals are the n-gram counts of each side.
-    * Requires idCol unique per row (see the object contract). */
-  def clippedOverlap(pairs: DataFrame, idCol: String, candCol: String,
-                     refCol: String, n: Int): DataFrame =
-    pairs.select(col(idCol))
-      .join(overlapStats(pairs, idCol, candCol, refCol, Seq(n))
-          .select(col(idCol), col("clip").as(s"clip_$n"),
-            col("n_cand").as(s"n_cand_$n"), col("n_ref").as(s"n_ref_$n")),
-        Seq(idCol), "left")
-      .na.fill(0L, Seq(s"clip_$n", s"n_cand_$n", s"n_ref_$n"))
-
   /** The shared overlap engine: for each requested n, per-pair
     * (clip, n_cand, n_ref) — ONE explode over a side- and n-tagged
     * gram stream, ONE (pair, n, gram) aggregation with conditional

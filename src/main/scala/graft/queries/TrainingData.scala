@@ -7194,7 +7194,7 @@ object TrainingData {
   }
 
   // ------------------------ PRUNED maintained quote screen (batch mode)
-  // winnowingContainmentScreenPrunedM driven as a batch audit: the
+  // winnowingContainmentScreen driven as a batch audit: the
   // planted-quote batch screens against the MAINTAINED winnow table
   // with every stored read file-pruned (pair probe by the batch's rare
   // hashes on the h-clustered table; denominators by candidate ids on
@@ -7217,7 +7217,7 @@ object TrainingData {
     }
     // the fingerprint relation's id column is already named "id"
     // (the winnowingFingerprints output contract)
-    graft.operators.Corpus.winnowingContainmentScreenPrunedM(
+    graft.operators.Corpus.winnowingContainmentScreen(
       spark.read.parquet(batchFps),
       winnowTableFor(spark, dir),
       maxDf = 50, minContainmentBp = 8000L).df
@@ -7281,7 +7281,7 @@ object TrainingData {
       graft.operators.Corpus.compactWinnowTable(spark, t, out)
       out
     }
-    graft.operators.Corpus.winnowingContainmentScreenPrunedM(
+    graft.operators.Corpus.winnowingContainmentScreen(
       spark.read.parquet(batchFps), compacted,
       maxDf = 50, minContainmentBp = 8000L).df
   }

@@ -488,17 +488,6 @@ object StreamingOps {
         val marker = new org.apache.hadoop.fs.Path(admittedDir,
           s"_graft_applied_b$batchId")
         if (!fs.exists(marker)) {
-          // phase timing to stderr under GRAFT_CURATE_DEBUG=1 (local
-          // iteration only — the bench fixture's wall is otherwise one
-          // opaque number per micro-batch)
-          val dbg = sys.env.get("GRAFT_CURATE_DEBUG").contains("1")
-          def tdbg[A](tag: String)(f: => A): A =
-            if (!dbg) f else {
-              val t0 = System.nanoTime(); val r = f
-              System.err.println(
-                f"[curate b$batchId] $tag%-16s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-              r
-            }
           // the batch is tokenized ONCE: the signature relation feeds
           // both the screen and (filtered to survivors) the signature
           // append — the original shape re-shingled the survivors for
@@ -537,29 +526,24 @@ object StreamingOps {
             import scala.concurrent.{Await, Future}
             import scala.concurrent.ExecutionContext.Implicits.global
             import scala.concurrent.duration.Duration
-            val fScr = Future(tdbg("lsh screen")(graft.operators.Dedup
+            val fScr = Future(graft.operators.Dedup
               .incrementalNearDupAgainstPreSigsM(sigB, sigTablePath,
-                threshold, graft.ops.MatStrategy.Local)))
+                threshold, graft.ops.MatStrategy.Local))
             // quote screen: batch fingerprints vs the maintained table,
-            // with the batch's own ids excluded from the corpus side
-            // (replay safety — a crash after the fingerprint append
-            // must not make the replay quote-reject the batch against
-            // its own fingerprints). Stored-table reads are
-            // file-pruned against the batch's bounded probe sets in
-            // the micro-batch regime; bulk batches take the
-            // maintained-artifact one-shot DAG (projection + df
-            // sidecar) inside the screen. Deltas filtered to
-            // batch_id < ownId — the same replay safety as before.
+            // under the replay contract — the batch's own ids excluded
+            // from the corpus side and df deltas read below its batch
+            // id (a crash after the fingerprint append must not make
+            // the replay quote-reject the batch against its own
+            // fingerprints)
             val fQuote = (winnowTablePath, fpB) match {
               case (Some(wp), Some(fp)) =>
-                Some(Future(tdbg("quote screen")(graft.operators.Corpus
-                  .winnowingContainmentScreenPrunedM(fp, wp,
-                    excludeIds =
-                      Some(own.select(col("corpus_id").as("id"))),
-                    ownBatchId = batchId,
+                Some(Future(graft.operators.Corpus
+                  .winnowingContainmentScreen(fp, wp,
+                    replay =
+                      Some((own.select(col("corpus_id").as("id")), batchId)),
                     maxDf = winnowMaxDf,
                     minContainmentBp = minContainmentBp,
-                    mat = graft.ops.MatStrategy.Local))))
+                    mat = graft.ops.MatStrategy.Local)))
               case _ => None
             }
             val scrT = scala.util.Try(Await.result(fScr, Duration.Inf))
@@ -593,10 +577,10 @@ object StreamingOps {
             // MATERIALIZED once (id-only, KB-scale): dupIds feeds three
             // anti-joins (admits, signatures, fingerprints) — left lazy,
             // each would re-run the whole screen DAG per sink
-            dupIdsM = tdbg("dupIds")(graft.ops.Materialize(
+            dupIdsM = graft.ops.Materialize(
               (Seq(lshDup) ++ quoteDup ++ policyDup)
                 .reduce(_ unionByName _).distinct(),
-              graft.ops.MatStrategy.Local))
+              graft.ops.MatStrategy.Local)
             val dupIds = dupIdsM.df
             // survivors / survivorSigs are each one cheap anti-join off
             // materialized inputs (screen spilled, signatures persisted)
@@ -662,12 +646,10 @@ object StreamingOps {
                   })
               case _ => Nil
             }
-            tdbg("await writes") {
-              Await.result(fAdm, scala.concurrent.duration.Duration.Inf)
-              Await.result(fSig, scala.concurrent.duration.Duration.Inf)
-              fFp.foreach(f =>
-                Await.result(f, scala.concurrent.duration.Duration.Inf))
-            }
+            Await.result(fAdm, scala.concurrent.duration.Duration.Inf)
+            Await.result(fSig, scala.concurrent.duration.Duration.Inf)
+            fFp.foreach(f =>
+              Await.result(f, scala.concurrent.duration.Duration.Inf))
             fs.create(marker, true).close()
           } finally {
             if (screened != null) screened.release()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFns
 import graft.operators.{Corpus, Dedup}
 import graft.ops.Sampling
+import graft.sources.MaintainedIndex
 
 class CorpusSpec extends SparkSpec {
   import spark.implicits._
@@ -609,13 +610,12 @@ class CorpusSpec extends SparkSpec {
     "appends, including batch-induced cap crossings") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_winnow_state").toFile
-    val table = new java.io.File(root, "fps").toString
     try {
       // S1 lands in THREE corpus docs (two appends), so its hashes sit
       // exactly AT maxDf=3 — rare without the batch; the batch's own
-      // copy pushes them over the cap (the crossing case the maintained
-      // screen must re-judge from stored d + batch d, never from a
-      // corpus re-aggregation)
+      // copy pushes them over the cap (the crossing case the screen
+      // must re-judge from stored d + batch d, never from a corpus
+      // re-aggregation)
       val s1 = "the quick brown fox jumps over the lazy dog repeatedly"
       val u1 = "an utterly unique passage about winnowing fingerprints"
       val appendA = Seq(
@@ -625,40 +625,51 @@ class CorpusSpec extends SparkSpec {
       val appendB = Seq(
         (3L, s"third document also contains $s1 plus its own ending")
       ).toDF("doc_id", "text")
-      Corpus.writeWinnowTable(appendA, "text", "doc_id", table)
-      Corpus.appendToWinnowTable(appendB, "text", "doc_id", table)
+      def writeTable(name: String): String = {
+        val table = new java.io.File(root, name).toString
+        Corpus.writeWinnowTable(appendA, "text", "doc_id", table)
+        Corpus.appendToWinnowTable(appendB, "text", "doc_id", table)
+        table
+      }
+      // the same corpus in both of the screen's regimes: written under
+      // the default conf it is a few files (the bulk DAG); written with
+      // a one-byte file target it spreads over more than two task
+      // waves of files (the file-pruned path)
+      val bulk = writeTable("bulk")
+      val pruned = withSQLConf("spark.sql.shuffle.partitions" -> "16",
+        "graft.append.targetFileBytes" -> "1") { writeTable("pruned") }
+      val smallTable = 2 * spark.sessionState.conf.numShufflePartitions
+      assert(MaintainedIndex.dataFileCount(spark, bulk) <= smallTable)
+      assert(MaintainedIndex.dataFileCount(spark, pruned) > smallTable)
       val batch = Seq(
         (10L, s1), // crosses S1's hashes past maxDf=3
         (11L, u1)  // quotes doc 1's unique passage → real containment
       ).toDF("doc_id", "text")
       val fpB = Corpus.winnowingFingerprints(batch, "text", "doc_id")
-      val corpusFps = spark.read.parquet(table)
-      val dfState = spark.read
-        .parquet(Corpus.winnowDfStatePath(table))
-        .select(col("h"), col("d"))
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5))).toSet
-      for ((maxDf, minBp) <- Seq((3L, 0L), (50L, 0L), (50L, 8000L))) {
-        val oneShot = rows(Corpus.winnowingContainmentScreen(
-          fpB, corpusFps, maxDf, minBp))
-        val maintained = rows(Corpus.winnowingContainmentScreenMaintained(
-          fpB, corpusFps, dfState, maxDf, minBp))
-        assert(maintained == oneShot,
-          s"maintained screen diverged at maxDf=$maxDf minBp=$minBp")
+      for (table <- Seq(bulk, pruned)) {
+        def screen(maxDf: Long, minBp: Long) =
+          Corpus.winnowingContainmentScreen(fpB, table,
+            maxDf = maxDf, minContainmentBp = minBp).df
+        for ((maxDf, minBp) <- Seq((3L, 0L), (50L, 0L), (50L, 8000L))) {
+          val reference = rows(ScreenReference.oneShot(
+            fpB, spark.read.parquet(table), maxDf, minBp))
+          assert(rows(screen(maxDf, minBp)) == reference,
+            s"screen diverged at maxDf=$maxDf minBp=$minBp on $table")
+        }
+        // the quote of u1 must surface (proves the fixture is
+        // non-vacuous)
+        val hit = screen(50L, 8000L)
+          .where(col("batch_id") === 11L && col("corpus_id") === 1L)
+        assert(hit.count() == 1, s"planted quote pair missing on $table")
+        // and at maxDf=3 the S1-only pair (10, any) must NOT appear —
+        // the batch's own copy crossed S1's hashes over the cap
+        val crossed = screen(3L, 0L).where(col("batch_id") === 10L)
+        assert(crossed.count() == 0,
+          s"cap-crossing hashes still produced containment evidence on $table")
       }
-      // the quote of u1 must surface (proves the fixture is non-vacuous)
-      val hit = Corpus.winnowingContainmentScreenMaintained(
-        fpB, corpusFps, dfState, 50L, 8000L)
-        .where(col("batch_id") === 11L && col("corpus_id") === 1L)
-      assert(hit.count() == 1, "planted quote pair missing")
-      // and at maxDf=3 the S1-only pair (10, any) must NOT appear —
-      // the batch's own copy crossed S1's hashes over the cap
-      val crossed = Corpus.winnowingContainmentScreenMaintained(
-        fpB, corpusFps, dfState, 3L, 0L)
-        .where(col("batch_id") === 10L)
-      assert(crossed.count() == 0,
-        "cap-crossing hashes still produced containment evidence")
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)

@@ -674,46 +674,4 @@ class PlanSpec extends SparkSpec {
     assert("Exchange".r.findAllIn(p).length == 1,
       s"projection must cost exactly one exchange:\n$p")
   }
-
-  test("maintained winnow screen never re-aggregates the corpus: the " +
-    "one-shot Union df recount is gone, big-table reads are join-pruned") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_winnow_plan").toFile
-    try {
-      val d = Tables.load(spark, sf0001, "documents").limit(50)
-        .select(col("doc_id"), col("text"))
-      val table = new java.io.File(dir, "fps").toString
-      graft.operators.Corpus.writeWinnowTable(d, "text", "doc_id", table)
-      val fpB = graft.operators.Corpus.winnowingFingerprints(
-        d.limit(5).select((col("doc_id") + 1000L).as("doc_id"),
-          col("text")), "text", "doc_id")
-      val corpusFps = spark.read.parquet(table)
-      val dfState = spark.read
-        .parquet(graft.operators.Corpus.winnowDfStatePath(table))
-        .select(col("h"), col("d"))
-      // the one-shot screen's df recount unions batch ∪ corpus before a
-      // corpus-wide groupBy(h) — that Union is its per-call O(corpus)
-      // signature, and it must NOT appear in the maintained plan
-      val oneShot = plan(graft.operators.Corpus
-        .winnowingContainmentScreen(fpB, corpusFps))
-      assert(oneShot.contains("Union"),
-        s"contrast lost: the one-shot screen no longer recounts:\n$oneShot")
-      val p = plan(graft.operators.Corpus
-        .winnowingContainmentScreenMaintained(fpB, corpusFps, dfState))
-      assert(!p.contains("Union"),
-        s"maintained screen still recounts batch ∪ corpus:\n$p")
-      // every read of the sidecar and the fingerprint table must sit
-      // under a broadcast join against a batch-derived set — the plan
-      // has broadcast exchanges and the df aggregation keys only rows
-      // that survived one
-      assert(p.contains("BroadcastHashJoin"),
-        s"big-table reads are not broadcast-pruned:\n$p")
-    } finally {
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-        x.delete(); ()
-      }
-      rm(dir)
-    }
-  }
 }

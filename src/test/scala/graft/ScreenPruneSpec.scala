@@ -10,9 +10,10 @@ import graft.sources.MaintainedIndex
   * the per-batch screens open only the files whose envelope meets the
   * batch's bounded probe sets — per-batch read IO O(batch), never
   * O(corpus). These tests pin (1) the file-count collapse on a
-  * multi-file table, (2) bit-identical results vs the unpruned
-  * screens, (3) the safety rule that every degraded state (missing
-  * index, stale stats, pre-index tables) reads MORE, never less.
+  * multi-file table, (2) bit-identical results vs the one-shot
+  * reference screen, (3) the safety rule that every degraded state
+  * (missing index, stale stats, pre-index tables) reads MORE, never
+  * less.
   */
 class ScreenPruneSpec extends SparkSpec {
   import spark.implicits._
@@ -133,23 +134,18 @@ class ScreenPruneSpec extends SparkSpec {
     (table, Corpus.winnowingFingerprints(batch, "text", "doc_id"))
   }
 
-  test("pruned screen == unpruned maintained screen == one-shot screen, " +
-    "and the quote is caught") {
+  test("pruned screen == one-shot reference screen, and the quote is " +
+    "caught") {
     val (table, batchFps) = winnowFixture()
-    val pruned = Corpus.winnowingContainmentScreenPrunedM(
-      batchFps, table).df
+    assert(MaintainedIndex.dataFileCount(spark, table) >
+      2 * spark.sessionState.conf.numShufflePartitions,
+      "fixture does not exercise the file-pruned regime")
+    val pruned = Corpus.winnowingContainmentScreen(batchFps, table).df
       .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
-    val corpusFps = spark.read.parquet(table)
-    val dfState = spark.read
-      .parquet(Corpus.winnowDfStatePath(table))
-      .select(col("h"), col("d"))
-    val maintained = Corpus.winnowingContainmentScreenMaintained(
-      batchFps, corpusFps, dfState)
+    val reference = ScreenReference.oneShot(batchFps,
+      spark.read.parquet(table))
       .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
-    val oneShot = Corpus.winnowingContainmentScreen(batchFps, corpusFps)
-      .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
-    assert(pruned == maintained)
-    assert(pruned == oneShot)
+    assert(pruned == reference)
     assert(pruned.exists(_.contains("1007")), "the planted quote escaped")
     assert(!pruned.exists(_.contains("2001")), "the novel doc was flagged")
   }
@@ -203,8 +199,7 @@ class ScreenPruneSpec extends SparkSpec {
   test("degraded states screen identically: no byid projection, no " +
     "file indexes (pre-index tables heal or full-read)") {
     val (table, batchFps) = winnowFixture()
-    val expect = Corpus.winnowingContainmentScreenPrunedM(
-      batchFps, table).df
+    val expect = Corpus.winnowingContainmentScreen(batchFps, table).df
       .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
     val fs = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -215,8 +210,7 @@ class ScreenPruneSpec extends SparkSpec {
       MaintainedIndex.indexDir(table, "h")), true)
     fs.delete(new org.apache.hadoop.fs.Path(MaintainedIndex.indexDir(
       Corpus.winnowDfStatePath(table), "h")), true)
-    val healed = Corpus.winnowingContainmentScreenPrunedM(
-      batchFps, table).df
+    val healed = Corpus.winnowingContainmentScreen(batchFps, table).df
       .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
     assert(healed == expect)
   }
@@ -224,14 +218,12 @@ class ScreenPruneSpec extends SparkSpec {
   test("compacted winnow table: one generation, equal screens, " +
     "markers and replay stamps carried") {
     val (table, batchFps) = winnowFixture()
-    val before = Corpus.winnowingContainmentScreenPrunedM(
-      batchFps, table).df
+    val before = Corpus.winnowingContainmentScreen(batchFps, table).df
       .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
     val out = table + "_compacted"
     Corpus.compactWinnowTable(spark, table, out,
       targetFileBytes = 64L * 1024)
-    val after = Corpus.winnowingContainmentScreenPrunedM(
-      batchFps, out).df
+    val after = Corpus.winnowingContainmentScreen(batchFps, out).df
       .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
     assert(after == before)
     // geometry marker carried; row content exact
