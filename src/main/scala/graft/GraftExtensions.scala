@@ -57,9 +57,6 @@ object GraftExtensions {
       es => LshBucketsExpr(es(0),
         es(1).eval().asInstanceOf[Int],
         es(2).eval().asInstanceOf[Int])),
-    (NativeFns.ShinglesName,
-      "graft_shingles(text, k) - distinct character k-shingles",
-      es => ShinglesExpr(es(0), es(1).eval().asInstanceOf[Int])),
     (NativeFns.ShingleHashesName,
       "graft_shingle_hashes(text, k) - distinct poly-hashes of k-shingles",
       es => ShingleHashesExpr(es(0), es(1).eval().asInstanceOf[Int])),
@@ -72,18 +69,6 @@ object GraftExtensions {
     (NativeFns.SimhashName,
       "graft_simhash(text) - 48-bit SimHash over token hashes, one pass",
       es => SimhashExpr(es.head)),
-    // Spark's own (non-SQL-registered) bloom sketch pair, exposed for
-    // the dedup pre-filter: a mergeable distributed bloom build and its
-    // membership probe — the machinery behind runtime row-group filters.
-    (NativeFns.BloomAggName,
-      "graft_bloom_agg(xxh64, n) - bloom filter sketch over long hashes",
-      es => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(es(0),
-          es(1).eval().asInstanceOf[Number].longValue)),
-    (NativeFns.BloomContainsName,
-      "graft_bloom_contains(bloom, xxh64) - bloom membership probe",
-      es => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(es(0), es(1))),
     (NativeFns.ArgMaxLongName,
       "graft_argmax_long(ord, tie) - tie value of the max-ord row " +
         "(ties to smallest tie); primitive-buffer hash aggregate",

@@ -107,11 +107,6 @@ object TextFns {
   def hash32(s: Column): Column =
     conv(substring(md5(s), 1, 8), 16, 10).cast("long")
 
-  /** Portable 48-bit hash: first 12 hex chars of md5 (stays positive in
-    * a signed 64-bit lane on both engines). */
-  def hash48(s: Column): Column =
-    conv(substring(md5(s), 1, 12), 16, 10).cast("long")
-
   /** MinHash prime modulus and the (a,b) coefficient pairs; the same
     * literals are interpolated into the oracle SQL. */
   val MinhashP: Long = 2147483647L
@@ -172,28 +167,4 @@ object TextFns {
         size(array_distinct(grams)).cast("double") /
           size(grams).cast("double")), 4)
   }
-
-  /** Array of portable 48-bit hashes of the whitespace tokens of
-    * lower(trim(text)) — materialize this once (withColumn) before
-    * feeding simhash48, so the md5s aren't recomputed per bit. */
-  def tokenHashes48(text: Column): Column =
-    transform(split(lower(trim(text)), "\\s+"), t => hash48(t))
-
-  /** 48-bit SimHash over a precomputed token-hash array column: per bit k
-    * the vote is Σ(±1) over tokens, bit set iff strictly positive.
-    *
-    * Built as a SQL expression because SQL shiftright/shiftleft accept
-    * column shift amounts (the Scala wrappers only take literal Ints).
-    * `thCol` is the NAME of the array<bigint> token-hash column.
-    */
-  def simhash48(thCol: String): Column = expr(
-    s"""aggregate(
-       |  sequence(0, 47),
-       |  CAST(0 AS BIGINT),
-       |  (acc, k) -> acc + IF(
-       |    aggregate($thCol, CAST(0 AS BIGINT),
-       |      (v, h) -> v + IF(shiftright(h, k) % 2 = 1,
-       |                       CAST(1 AS BIGINT), CAST(-1 AS BIGINT))
-       |    ) > 0,
-       |    shiftleft(CAST(1 AS BIGINT), k), CAST(0 AS BIGINT)))""".stripMargin)
 }

@@ -82,13 +82,10 @@ object NativeFns {
   val DotName = "graft_dot"
   val MinhashName = "graft_minhash_sig"
   val LshName = "graft_lsh_buckets"
-  val ShinglesName = "graft_shingles"
   val ShingleHashesName = "graft_shingle_hashes"
   val PosShingleHashesName = "graft_pos_shingle_hashes"
   val JaccardName = "graft_jaccard"
   val SimhashName = "graft_simhash"
-  val BloomAggName = "graft_bloom_agg"
-  val BloomContainsName = "graft_bloom_contains"
   val HeavyHittersName = "graft_heavy_hitters"
   val ArgMaxLongName = "graft_argmax_long"
   val NfcName = "graft_nfc"
@@ -130,11 +127,6 @@ object NativeFns {
     call_function(LshName, v, lit(tables), lit(bits))
   }
 
-  def shinglesNative(text: Column, k: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function(ShinglesName, text, lit(k))
-  }
-
   def shingleHashes(text: Column, k: Int): Column = {
     import org.apache.spark.sql.functions.lit
     call_function(ShingleHashesName, text, lit(k))
@@ -174,17 +166,6 @@ object NativeFns {
     import org.apache.spark.sql.functions.typedLit
     call_function(VocabHitsName, text, typedLit(vocab))
   }
-
-  /** Distributed bloom sketch over a LONG hash column (mergeable
-    * TypedImperativeAggregate — Spark's own, not SQL-registered by
-    * default). `expectedItems` sizes the bit array. */
-  def bloomAgg(xxh64: Column, expectedItems: Long): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function(BloomAggName, xxh64, lit(expectedItems))
-  }
-
-  def bloomContains(bloom: Column, xxh64: Column): Column =
-    call_function(BloomContainsName, bloom, xxh64)
 
   /** Misra-Gries k-counter heavy-hitters candidate set over a string
     * item stream (mergeable TypedImperativeAggregate; see

@@ -68,13 +68,13 @@ case class MinhashSigExpr(child: Expression)
 
 /** Native 48-bit SimHash of a text column in one pass: tokens of
   * trim(lower(text)) split on whitespace, each hashed to 48 bits via the
-  * first 6 md5 bytes (identical to TextFns.hash48's hex-prefix fold),
-  * then the classic ±1 bit votes, bit k set iff the vote is strictly
-  * positive.
+  * first 6 md5 bytes (identical to the first 12 hex chars of md5 read
+  * as an integer), then the classic ±1 bit votes, bit k set iff the
+  * vote is strictly positive.
   *
-  * Replaces the HOF pipeline tokenHashes48 → simhash48, whose outer
-  * aggregate walks the token-hash array 48 times with interpreted
-  * lambdas and whose md5 goes through a hex-string round trip. Here:
+  * Replaces a higher-order-function pipeline whose outer aggregate
+  * walks the token-hash array 48 times with interpreted lambdas and
+  * whose md5 goes through a hex-string round trip. Here:
   * one digest per token, 48 primitive counters, no intermediate arrays.
   * Bit-equality with the HOF form is asserted in tests and by the
   * unchanged x_simhash DuckDB oracle.

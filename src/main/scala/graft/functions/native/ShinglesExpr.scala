@@ -8,71 +8,16 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Distinct character k-shingles in one pass.
-  *
-  * Semantics identical to
-  * `array_distinct(transform(sequence(1, greatest(len-k+1, 1)), i ->
-  * substring(text, i, k)))` (TextFns.shingles): codepoint-based windows,
-  * and a string shorter than k yields itself as its single shingle.
-  * The HOF form allocates a lambda-evaluated substring per position plus
-  * an intermediate array before array_distinct; this walks the UTF8
-  * bytes once, slicing windows straight into a dedup set.
-  */
-case class ShinglesExpr(child: Expression, k: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  require(k > 0)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${dt.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def prettyName: String = "graft_shingles"
-
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
-    val n = s.numChars()
-    val out = new java.util.LinkedHashSet[UTF8String]()
-    if (n <= k) {
-      out.add(s)
-    } else {
-      var i = 1
-      val last = n - k + 1
-      while (i <= last) {
-        out.add(s.substringSQL(i, k))
-        i += 1
-      }
-    }
-    val arr = new Array[AnyRef](out.size)
-    val it = out.iterator()
-    var j = 0
-    while (it.hasNext) { arr(j) = it.next(); j += 1 }
-    new GenericArrayData(arr)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Distinct polynomial hashes of the character k-shingles, fused into a
   * single pass: array<long> where each element is
   * `fold(h = (h*31 + codepoint) mod 1e9+7)` over one k-codepoint window
   * (a string shorter than k hashes as its own single window, exactly
-  * like ShinglesExpr's short-text rule). Distinctness is on the HASH
+  * like TextFns.shingles' short-text rule). Distinctness is on the HASH
   * value, mirroring the oracle's `list_distinct` over hashed shingles,
   * so an (astronomically rare) collision merges identically on both
   * engines.
   *
-  * This replaces ShinglesExpr→md5 in the MinHash pipeline: no md5
+  * This replaces shingle strings→md5 in the MinHash pipeline: no md5
   * digest, no per-window UTF8String allocation, no string dedup set —
   * the document's codepoints are decoded once and every window is five
   * multiply-adds. Downstream wins too: signature slots read longs, and

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Unicode canonical forms — the same algorithm DuckDB's utf8proc
   * implements, so `nfc_normalize`/`strip_accents` oracle these
   * bit-for-bit on decomposable characters). Row-local, no UDF; like
-  * ShinglesExpr they use CodegenFallback — string normalization is not
+  * ShingleHashesExpr they use CodegenFallback — string normalization is not
   * an inner-loop arithmetic kernel, and the fallback keeps the
   * surrounding stage codegen intact.
   */

@@ -4,7 +4,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationSupport, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,11 +22,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * row — the regex tokenization scan is x_cooccurrence's whole CPU
   * (r11 verdict item 6).
   *
-  * Equivalences pinned by the chain it replaces:
-  *  - tokenizer: Java-regex \s members, split limit -1, ROOT-locale
-  *    lowercase (the [[SimhashExpr]] precedent, asserted bit-equal on
-  *    real docs); empty tokens can never be vocab hits, so trim and
-  *    leading/trailing empty-token subtleties cannot change the result;
+  * Equivalences with the chain it replaces (NativeParitySpec):
+  *  - case mapping: the call Spark's `lower()` makes
+  *    (`CollationSupport.Lower` under the UTF8_BINARY collation and
+  *    the session's `spark.sql.icu.caseMappings.enabled`), applied
+  *    after `trim()` — so non-ASCII text lowercases under the same
+  *    library and default locale as the chain;
+  *  - tokenizer: Java-regex \s members, split limit -1. `trim()` strips
+  *    only spaces, so the chain's split yields an EMPTY token exactly
+  *    when the trimmed text is empty or starts or ends with another \s
+  *    character (tab, newline, …); "" is then a hit iff the vocabulary
+  *    contains it, as in the chain;
   *  - order: ascending UTF8String binary order — array_sort's string
   *    ordering;
   *  - a hit equals its vocab entry by definition of membership, so
@@ -68,13 +75,20 @@ case class VocabHitsExpr(left: Expression, right: Expression)
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
       c == '\r'
 
+  // read like Lower reads it: once per expression instance
+  private lazy val useICU: Boolean =
+    SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
   override def eval(input: InternalRow): Any = {
     val v = left.eval(input)
     if (v == null) return null
-    val s = v.asInstanceOf[UTF8String].toString
-      .toLowerCase(java.util.Locale.ROOT)
+    val s = CollationSupport.Lower.exec(v.asInstanceOf[UTF8String].trim(),
+      StringType.collationId, useICU).toString
     val seen = new java.util.TreeSet[UTF8String]() // sorted + distinct
     val n = s.length
+    if (vocabSet.contains("") &&
+        (n == 0 || isWs(s.charAt(0)) || isWs(s.charAt(n - 1))))
+      seen.add(UTF8String.EMPTY_UTF8)
     var i = 0
     while (i < n) {
       while (i < n && isWs(s.charAt(i))) i += 1

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *
   * STUBS — formats whose codecs the JDK does not ship (MP3/AAC/Opus
   * audio; H.264/VP9/AV1 video; WebP/HEIC images): [[decodeStub]] and
-  * [[resizeStub]] are clearly-marked deterministic fakes that keep the
-  * Spark-side contract real (schema, typed Dataset boundary, one codec
-  * init per partition, batched invocation). A cluster deployment fills
+  * the stub lane of [[resizeReal]] are clearly-marked deterministic
+  * fakes that keep the Spark-side contract real (schema, typed Dataset
+  * boundary, one codec init per partition). A cluster deployment fills
   * exactly one seam: replace the stub body at the per-partition init
   * point (where `MessageDigest.getInstance` sits) with the JNI/FFI
   * codec — nothing else changes.
@@ -268,78 +268,6 @@ object Multimodal {
         }
       }.toDF("doc_id", "is_image", "quarantined", "width", "height",
         "frames")
-  }
-
-  /** Pluggable compressed-codec seam — the extension point the codec
-    * trichotomy documents: formats the JDK ships no decoder for
-    * (MP3/AAC/H.264/WebP/HEIC) plug in HERE as a per-partition-
-    * initialized decoder, and nothing else about the pipeline changes
-    * (schema, no-shuffle mapPartitions shape, quarantine contract).
-    * [[open]] runs ONCE PER PARTITION — the place a real codec creates
-    * its heavy native state (JNI handles, an ffmpeg AVCodecContext,
-    * dictionary tables), exactly where `MessageDigest.getInstance`
-    * sits in the built-in path — and the function it returns is
-    * row-local. The library deliberately ships NO implementation of
-    * this trait for a compressed format (the honesty contract: stubs
-    * are labeled stubs, never fake "real" decoders); MultimodalSpec
-    * drives the seam with a test double and asserts init-per-partition
-    * and trichotomy preservation.
-    */
-  trait CompressedDecoder extends Serializable {
-    /** Container sniff: does this payload claim the plugged format?
-      * Must be cheap and header-structural (the [[looksLikeImage]]
-      * contract) — claiming is what routes a failed decode to
-      * QUARANTINE instead of the stub fallback. */
-    def claims(bytes: Array[Byte]): Boolean
-
-    /** Per-partition init; returns the row-local decode. A decode
-      * returning None QUARANTINES the row (claimed but undecodable) —
-      * the same never-silently-stubbed rule as the built-in image
-      * path. */
-    def open(): (Long, Array[Byte], Long) => Option[MediaMeta]
-  }
-
-  /** [[extractMetaDecoded]] with a plugged compressed-format decoder:
-    * rows the codec claims decode through it (or quarantine on decode
-    * failure); every other row keeps the built-in real / stub /
-    * quarantine trichotomy bit-exactly. The plugged format reports
-    * under its own `is_plugged` flag so the built-in `is_image`
-    * verdict stays comparable across runs with and without the plug.
-    */
-  def extractMetaPlugged(rows: DataFrame,
-                         codec: CompressedDecoder): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.select(col("doc_id"), col("media"), col("n_chars"))
-      .as[(Long, Array[Byte], Long)]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        val digest = java.security.MessageDigest.getInstance("MD5")
-        val decode = codec.open() // ONCE per partition: the codec seam
-        it.map { case (id, bytes, nChars) =>
-          if (codec.claims(bytes))
-            decode(id, bytes, nChars) match {
-              case Some(m) =>
-                (id, false, true, false,
-                  Some(m.width), Some(m.height), Some(m.frames))
-              case None =>
-                (id, false, false, true,
-                  None: Option[Long], None: Option[Long],
-                  None: Option[Long])
-            }
-          else {
-            val (m, isImg) = decodeImage(id, bytes, nChars, digest)
-            if (!isImg && looksLikeImage(bytes))
-              (id, false, false, true,
-                None: Option[Long], None: Option[Long],
-                None: Option[Long])
-            else
-              (m.doc_id, isImg, false, false,
-                Some(m.width), Some(m.height), Some(m.frames))
-          }
-        }
-      }.toDF("doc_id", "is_image", "is_plugged", "quarantined", "width",
-        "height", "frames")
   }
 
   /** Decoded WAV header facts — what a real audio pipeline keys on
@@ -1166,8 +1094,7 @@ object Multimodal {
     * arithmetic for lossless formats). Rows that CLAIM an image magic
     * but fail decode are quarantined (null raster); non-image rows
     * take the digest-cycled stub path (byte-sum replayable from the
-    * payload md5). One codec/digest instance per partition — the
-    * [[resizeStub]] batching contract with the real decode filled in.
+    * payload md5). One codec/digest instance per partition.
     */
   def resizeReal(media: DataFrame, w: Int, h: Int): DataFrame = {
     val spark = media.sparkSession
@@ -1214,35 +1141,5 @@ object Multimodal {
           }
         }
       }.toDF("doc_id", "path", "media", "out_w", "out_h", "pix_sum")
-  }
-
-  /** STUB resize: a real implementation would decode, scale to `w`×`h`
-    * and re-encode each payload. The deterministic fake keeps the batch
-    * PLUMBING a real codec needs — rows are processed in `batchSize`
-    * groups per partition (the mapInPandas/Arrow batch shape: one FFI
-    * call per BATCH, not per row) and the output schema is the real
-    * one: (doc_id, media binary, out_w, out_h).
-    */
-  def resizeStub(docs: DataFrame, w: Int, h: Int,
-                 batchSize: Int = 64): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    withMediaBinary(docs, "text")
-      .select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // real codec: init once per partition, invoked once per batch
-        val digest = java.security.MessageDigest.getInstance("MD5")
-        it.grouped(batchSize).flatMap { batch =>
-          batch.map { case (id, bytes) =>
-            digest.reset()
-            val seed = digest.digest(bytes)
-            // fake "pixels": w*h bytes cycled from the content digest,
-            // so output size is exactly the resize contract
-            val out = Array.tabulate[Byte](w * h)(i => seed(i % seed.length))
-            (id, out, w.toLong, h.toLong)
-          }
-        }
-      }.toDF("doc_id", "media", "out_w", "out_h")
   }
 }

@@ -921,9 +921,10 @@ object Corpus {
     * corpus-wide set of non-blank line fingerprints already emitted,
     * stored as `line_md5` (md5 hex of the exact line — engine-portable,
     * 32 bytes/line, content never retained). Build once over the
-    * historical corpus, persist as a parquet table, and append
-    * [[newLineFingerprints]] per batch — history is tokenized once
-    * ever, the same amortization contract as Dedup's signature table.
+    * historical corpus, persist as a parquet table, and append each
+    * emitted batch's own fingerprints not already present (left-anti
+    * on `line_md5`) — history is tokenized once ever, the same
+    * amortization contract as Dedup's signature table.
     */
   def seenLinesTable(docs: DataFrame, textCol: String,
                      sep: String = "\n"): DataFrame =
@@ -933,15 +934,6 @@ object Corpus {
       .where(length(trim(col("line"))) > 0)
       .select(md5(col("line")).as("line_md5"))
       .distinct()
-
-  /** Fingerprints a batch would add to the seen-lines table: its kept
-    * first-occurrence lines not already in `seenLines`. Append these
-    * after emitting the batch so the next batch screens against them. */
-  def newLineFingerprints(batch: DataFrame, seenLines: DataFrame,
-                          textCol: String,
-                          sep: String = "\n"): DataFrame =
-    seenLinesTable(batch, textCol, sep)
-      .join(seenLines.select(col("line_md5")), Seq("line_md5"), "left_anti")
 
   /** Incremental first-wins line dedup: clean a NEW batch against the
     * maintained [[seenLinesTable]] without re-reading historical text.

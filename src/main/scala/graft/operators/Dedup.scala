@@ -467,39 +467,13 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("n_bands"), col("jaccard"))
   }
 
-  /** Near-dup drop that keeps the BEST member of each cluster instead
-    * of the lowest id: production dedup keeps the CANONICAL copy —
-    * longest, highest-quality, most recent — not an accident of id
-    * assignment (the min-id rule silently prefers whichever copy was
-    * crawled first, which for excerpt/truncation clusters is often the
-    * WORST member). `priority` is any deterministic expression over
-    * the corpus row (bigger = better); ties break on the lower id, so
-    * the keeper is total-order unique and engine-reproducible.
-    * Clusters come from the exact MinHash screen + connected
-    * components; singletons keep themselves. Output is one row per
-    * corpus doc — (doc_id, cluster_rep, keeper_id, kept) — the keep
-    * list and the drop list in one relation (filter on `kept`), with
-    * the cluster lineage preserved for audit.
-    *
-    * Scale shape: the screen and CC are the dominant cost (both
-    * banded/bounded as documented on their operators); the keeper
-    * election is ONE WindowGroupLimit-eligible window over the
-    * assignment keyed by cluster_rep, and the keeper join ships
-    * key-only rows.
-    */
-  def dedupKeepBest(corpus: DataFrame, textCol: String, idCol: String,
-                    priority: Column, k: Int = 5,
-                    threshold: Double = 0.5): DataFrame =
-    dedupKeepBestFromPairs(corpus,
-      minhashNearDupPairs(corpus, textCol, idCol, k, threshold),
-      idCol, priority)
-
-  /** [[dedupKeepBest]] over a MAINTAINED signature table — the
-    * composition a production drop actually runs (the corpus is
-    * tokenized once at ingest; the election never touches text except
-    * through `priority`): near-dup pairs come from
+  /** Near-dup drop that keeps the BEST member of each cluster, over a
+    * MAINTAINED signature table — the composition a production drop
+    * runs (the corpus is tokenized once at ingest; the election never
+    * touches text except through `priority`): near-dup pairs come from
     * [[nearDupPairsFromSigs]], identical to the from-text screen by
     * the signature-table contract, at the stored-table family's cost.
+    * The election itself is [[dedupKeepBestFromPairs]].
     */
   def dedupKeepBestFromSigs(spark: org.apache.spark.sql.SparkSession,
                             corpus: DataFrame, sigTablePath: String,
@@ -509,12 +483,24 @@ object Dedup {
       nearDupPairsFromSigs(spark, sigTablePath, threshold),
       idCol, priority)
 
-  /** The keeper election alone, over an already-screened `(doc_a,
-    * doc_b)` near-dup pair relation — the composition point ([[
-    * dedupKeepBest]] and [[dedupKeepBestFromSigs]] are this with the
-    * two screens plugged in; any screen producing pairs composes the
-    * same way). Kept separate so the screen — the dominant cost — is a
-    * caller choice, never hard-wired into the election.
+  /** The keeper election over an already-screened `(doc_a, doc_b)`
+    * near-dup pair relation: production dedup keeps the CANONICAL copy
+    * of each cluster — longest, highest-quality, most recent — not an
+    * accident of id assignment (the min-id rule silently prefers
+    * whichever copy was crawled first, which for excerpt/truncation
+    * clusters is often the WORST member). `priority` is any
+    * deterministic expression over the corpus row (bigger = better);
+    * ties break on the lower id, so the keeper is total-order unique
+    * and engine-reproducible. Clusters are the connected components of
+    * `pairs`; singletons keep themselves. Output is one row per corpus
+    * doc — (doc_id, cluster_rep, keeper_id, kept) — the keep list and
+    * the drop list in one relation (filter on `kept`), with the
+    * cluster lineage preserved for audit.
+    *
+    * Kept separate from the screen — the dominant cost — so any screen
+    * producing pairs composes the same way. The election is ONE
+    * WindowGroupLimit-eligible window over the assignment keyed by
+    * cluster_rep, and the keeper join ships key-only rows.
     */
   def dedupKeepBestFromPairs(corpus: DataFrame, pairs: DataFrame,
                              idCol: String, priority: Column): DataFrame = {
@@ -654,7 +640,7 @@ object Dedup {
 
   /** 48-bit SimHash per document — one-pass native expression
     * (SimhashExpr: tokenize, md5-prefix token hash, ±1 bit votes);
-    * bit-identical to the HOF pipeline tokenHashes48→simhash48. */
+    * bit-identical to the tests' HOF reference (HofReference). */
   def withSimhash(docs: DataFrame, textCol: String): DataFrame =
     docs.withColumn("simhash",
       graft.functions.native.NativeFns.simhashNative(col(textCol)))
@@ -970,46 +956,6 @@ object Dedup {
     val seen = corpus.select(
       TextFns.fingerprintMd5(col(textCol)).as("fingerprint"))
     keep.join(seen, Seq("fingerprint"), "left_anti")
-  }
-
-  /** [[incrementalDedup]] with a Bloom pre-split — same output, built
-    * for the 100 TB shape where the corpus dwarfs the daily batch and
-    * MOST batch rows are genuinely novel.
-    *
-    * A mergeable Bloom sketch of the corpus fingerprints (Spark's own
-    * BloomFilterAggregate — one distributed aggregation, one compact
-    * binary blob) is broadcast to the batch, splitting it row-locally:
-    *
-    *  - bloom MISS → definitely novel (no false negatives): emitted
-    *    directly, never enters the anti-join;
-    *  - bloom HIT → maybe-dup (false-positive rate ~`fpp` for truly
-    *    novel rows): only this sliver pays the exact anti-join.
-    *
-    * The anti-join's both sides shrink from |batch| to ~|dups| + fpp·
-    * |novel| while the result stays EXACTLY incrementalDedup's —
-    * verified by equality in DedupSpec/PropertiesSpec.
-    */
-  def incrementalDedupBloom(batch: DataFrame, corpus: DataFrame,
-                            textCol: String, idCol: String,
-                            expectedItems: Long = 1000000L): DataFrame = {
-    import graft.functions.native.NativeFns
-    val fp = TextFns.fingerprintMd5(col(textCol))
-    val keep = batch.select(fp.as("fingerprint"), col(idCol))
-      .groupBy("fingerprint").agg(min(col(idCol)).as("keeper_id"))
-    // might_contain requires a CONSTANT sketch, so the blob (KBs–MBs,
-    // independent of corpus row count) is materialized at the driver and
-    // shipped as a literal — the same move Spark's injected runtime
-    // filters make with their scalar-subquery bloom
-    val blob = corpus
-      .agg(NativeFns.bloomAgg(xxhash64(fp), expectedItems).as("__bloom"))
-      .head().getAs[Array[Byte]](0)
-    val probed = keep.withColumn("__hit",
-      NativeFns.bloomContains(lit(blob), xxhash64(col("fingerprint"))))
-    val definitelyNovel = probed.where(!col("__hit")).drop("__hit")
-    val maybeDup = probed.where(col("__hit")).drop("__hit")
-    val seen = corpus.select(fp.as("fingerprint"))
-    definitelyNovel.unionByName(
-      maybeDup.join(seen, Seq("fingerprint"), "left_anti"))
   }
 
   /** Benchmark decontamination report: for every corpus document, how

@@ -68,23 +68,6 @@ object Selection {
       .select(col("id"), coalesce(col("w"), lit(0L)).as("w_micro"))
   }
 
-  /** [[dsirWeights]] plus the selection decision: the global top
-    * `keep` documents by `(w_micro DESC, id)` — a total order, so the
-    * kept set is engine-identical. Deterministic top-k stands in for
-    * the paper's Gumbel resampling (which needs a random source; the
-    * ranking is the operator, the noise is a caller policy).
-    *
-    * The cut is NOT a global window (a single-task sort of the whole
-    * corpus): the boundary key — the `keep`-th `(w, -id)` pair — comes
-    * from a distributed TakeOrdered over `keep` rows and is broadcast
-    * as one row; `selected` is then a row-local lexicographic compare.
-    */
-  def dsirSelect(corpus: DataFrame, textCol: String, idCol: String,
-                 isTarget: Column, keep: Int, n: Int = 2,
-                 buckets: Int = 256): DataFrame =
-    selectByWeight(
-      dsirWeights(corpus, textCol, idCol, isTarget, n, buckets), keep)
-
   /** The trained DSIR "model" alone: the per-bucket micro-nat
     * log-ratio table `(bucket, lr_micro)` — ≤ `buckets` rows, the
     * whole artifact a serving path needs. Train at ingest over the
@@ -150,12 +133,23 @@ object Selection {
         (graft.functions.TextFns.hash32(col("g")) % buckets).as("bucket"))
   }
 
-  /** The selection cut alone, over an already-computed (id, w_micro)
-    * weight table. Split out so callers can MATERIALIZE the weights
-    * first — the cut references them twice (boundary + flagging), and
-    * a lazy weight plan would re-run its gram explosion per reference
-    * (the [[SparseSim]] posting-table lesson); at 100 TB the weight
-    * table is an ingest artifact like the signature table anyway.
+  /** The selection decision over an already-computed (id, w_micro)
+    * weight table (from [[dsirWeights]] or [[scoreWithModel]]): the
+    * global top `keep` documents by `(w_micro DESC, id)` — a total
+    * order, so the kept set is engine-identical. Deterministic top-k
+    * stands in for the paper's Gumbel resampling (which needs a random
+    * source; the ranking is the operator, the noise is a caller
+    * policy).
+    *
+    * The cut is NOT a global window (a single-task sort of the whole
+    * corpus): the boundary key — the `keep`-th `(w, -id)` pair — comes
+    * from a distributed TakeOrdered over `keep` rows and is broadcast
+    * as one row; `selected` is then a row-local lexicographic compare.
+    * Callers MATERIALIZE the weights first — the cut references them
+    * twice (boundary + flagging), and a lazy weight plan would re-run
+    * its gram explosion per reference (the [[SparseSim]] posting-table
+    * lesson); at 100 TB the weight table is an ingest artifact like the
+    * signature table anyway.
     */
   def selectByWeight(weights: DataFrame, keep: Int): DataFrame = {
     require(keep >= 1, s"keep must be >= 1, got $keep")

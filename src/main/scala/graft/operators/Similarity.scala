@@ -24,21 +24,14 @@ object Similarity {
   /** embedding array<float> → array<double> (exact widening). */
   def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  /** Pure-HOF dot product — correct but interpreted; kept as the
-    * registration-free reference implementation (DotProductSpec asserts
-    * bit-equality with the native expression). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-
   /** Native codegen'd dot product (graft.functions.native.DotProductExpr);
     * requires NativeFns.register, which Tables.load performs. Same
-    * ascending-index fold as dotHof and DuckDB list_dot_product. */
+    * ascending-index fold as DuckDB list_dot_product (DotProductSpec
+    * pins bit-equality with a pure higher-order-function fold). */
   def dot(a: Column, b: Column): Column =
     graft.functions.native.NativeFns.dotNative(a, b)
 
   def norm(v: Column): Column = sqrt(dot(v, v))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Deterministic per-key argmax WITHOUT a window: one row per `keys`
     * — the `tieCol` (bigint) of the row with the largest `ordCol`
@@ -75,14 +68,15 @@ object Similarity {
   /** Bounded-centroid fast path: how many centroids a nearest-centroid
     * assignment will fold ROW-LOCALLY against a collected literal
     * codebook before falling back to the broadcast-join + argmax
-    * aggregation. Small codebooks (every fixed-nlist ANN lane; FAISS
+    * aggregation — the one bound for IVF assignment, k-means training
+    * and PQ encoding. Small codebooks (every fixed-nlist ANN lane; FAISS
     * keeps them in registers for the same reason) assign with ZERO
     * exchanges — the argmax fuses into the scan; large trained
     * codebooks (auto-nlist at 100 TB) keep the broadcast shape.
-    * Conf-overridable (`graft.ann.maxLiteralCents`) so the fallback is
+    * Conf-overridable (`graft.ann.maxLiteralCents`) so each fallback is
     * equality-pinned against the literal path on the SAME data
-    * (AnnFallbackSpec — the r11 judge noted every bench lane stays
-    * ≤ 128, leaving the 100 TB path verified by spec only). */
+    * (AnnFallbackSpec — every bench lane stays ≤ 128, leaving the
+    * 100 TB path verified by spec only). */
   private def maxLiteralCents(spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.getOption("graft.ann.maxLiteralCents")
       .map(_.toInt).getOrElse(128)
@@ -239,30 +233,6 @@ object Similarity {
         posexplode(buckets).as(Seq("tbl", "bucket")))
   }
 
-  /** IVF-style ANN: a coarse quantizer partitions the corpus into
-    * `nlist` inverted lists; a query probes only its `nprobe` nearest
-    * lists and brute-forces within them — the standard scale path when
-    * queries are many (LSH) or lists can be pre-partitioned on disk.
-    *
-    * This form uses the UNTRAINED quantizer (centroids = the `nlist`
-    * lowest-id corpus vectors); [[ivfTopKTrained]] runs the same search
-    * over k-means-trained centroids. Assignment is a broadcast of the
-    * tiny centroid table against the corpus — at scale this is a
-    * map-side pass whose output would be written bucketed by `list_id`
-    * so each probe reads only nprobe/nlist of the data.
-    *
-    * All rankings are total: assignment breaks cosine ties on c_id,
-    * probing on c_id, final ranking on (round(sim,4) desc, n_id).
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    val cents = corpus.orderBy(col(idCol)).limit(nlist)
-      .select(col(idCol).as("c_id"), asDouble(col(vecCol)).as("c_v"))
-      .withColumn("c_norm", norm(col("c_v")))
-    ivfSearch(queries, corpus, cents, idCol, vecCol, k, nprobe)
-  }
-
   /** The IVF search phase over a given centroid table
     * `(c_id, c_v: array<double>, c_norm)`.
     */
@@ -311,40 +281,6 @@ object Similarity {
       .where(col("rank") <= k)
       .select(col("q_id"), col("n_id"), col("sim"),
         col("rank").cast("long").as("rank"))
-  }
-
-  /** Materialize the IVF inverted lists as a parquet table partitioned
-    * by `list_id` — the layout that makes probes READ only their lists:
-    * a probe's `list_id IN (...)` filter becomes partition pruning, so
-    * each query touches nprobe/nlist of the data on disk, which is the
-    * entire point of IVF at 100 TB (the in-memory form still scans the
-    * whole corpus once per search).
-    *
-    * `cents` is `(c_id, c_v: array<double>, c_norm)` as produced by the
-    * trained or stub quantizer. Assignment is the same broadcast pass as
-    * the search path.
-    */
-  def writeIvfLists(corpus: DataFrame, cents: DataFrame,
-                    idCol: String, vecCol: String, path: String): Unit = {
-    val c = corpus.select(col(idCol).as("n_id"),
-      asDouble(col(vecCol)).as("n_v"))
-      .withColumn("n_norm", norm(col("n_v")))
-    (centsLocal(cents) match {
-      case Some(cl) =>
-        c.withColumn("c_id",
-          nearestCidExpr(col("n_v"), col("n_norm"), cl))
-      case None => argmaxPick(
-          c.crossJoin(broadcast(cents))
-            .withColumn("c_sim",
-              dot(col("n_v"), col("c_v")) /
-                (col("n_norm") * col("c_norm")))
-            .select(col("n_id"), col("c_id"), col("c_sim")),
-          Seq("n_id"), "c_sim", "c_id", Nil)
-          .join(c, "n_id")
-    })
-      .select(col("n_id"), col("n_v"), col("n_norm"),
-        col("c_id").as("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
   }
 
   /** Fixed-point quantization scale for k-means: 2^20 per unit. */
@@ -442,7 +378,7 @@ object Similarity {
         // compared similarity is bit-identical. Large auto-nlist
         // codebooks keep the broadcast + thin argmax shape.
         val assigned =
-          if (cents.size <= 128) {
+          if (cents.size <= maxLiteralCents(spark)) {
             val cl = centDf.select(col("c_id"), col("csum"), col("cn2"))
               .collect()
               .map(r => (r.getLong(0), r.getSeq[Long](1), r.getDouble(2)))
@@ -486,10 +422,18 @@ object Similarity {
     } finally mat.release()
   }
 
-  /** [[ivfTopK]] with a k-means-trained quantizer ([[kmeansQuantized]]).
-    * The centroid direction handed to the search phase is the integer
+  /** IVF-style ANN: a coarse quantizer partitions the corpus into
+    * `nlist` inverted lists; a query probes only its `nprobe` nearest
+    * lists and brute-forces within them — the standard scale path when
+    * queries are many (LSH) or lists can be pre-partitioned on disk
+    * ([[writeIvfSqIndex]]).
+    *
+    * The quantizer is k-means-trained ([[kmeansQuantized]]). The
+    * centroid direction handed to the search phase is the integer
     * sum-vector scaled back to doubles (`csum/cnt/2^20` — row-local,
     * deterministic); cosine against it equals cosine against the mean.
+    * All rankings are total: assignment breaks cosine ties on c_id,
+    * probing on c_id, final ranking on (round(sim,4) desc, n_id).
     */
   def ivfTopKTrained(queries: DataFrame, corpus: DataFrame,
                      idCol: String, vecCol: String, k: Int,
@@ -591,7 +535,7 @@ object Similarity {
     // rows, and the literal path must not resurrect them as null codes
     val ksub = codebooks.groupBy(_._1).values
       .foldLeft(0)((mx, g) => math.max(mx, g.size))
-    if (ksub <= 128) {
+    if (ksub <= maxLiteralCents(spark)) {
       val rows = cb.select(col("s"), col("c_id"), col("c_v"),
           col("c_norm")).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2),

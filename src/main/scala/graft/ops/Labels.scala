@@ -44,13 +44,6 @@ object Labels {
           col("n_annotations").cast("double"), 4).as("agreement"))
   }
 
-  /** Items whose adjudication is too contested to trust: agreement below
-    * `minAgreement` (route to re-annotation, not training). */
-  def contested(annotations: DataFrame, itemCol: String, labelCol: String,
-                minAgreement: Double): DataFrame =
-    majorityVote(annotations, itemCol, labelCol)
-      .where(col("agreement") < minAgreement)
-
   /** Fleiss' kappa — the CORPUS-level inter-annotator agreement metric
     * (chance-corrected, multi-annotator; the number an annotation
     * campaign is accepted or re-briefed on, complementing

@@ -42,11 +42,6 @@ object Sampling {
   private def inSample(key: Column, bp: Column): Column =
     TextFns.hash32(key.cast("string")) % 10000L < bp
 
-  /** Keep each row with probability ~`rate`, decided by the stable
-    * `key` column — same key, same decision, everywhere. */
-  def deterministicSample(df: DataFrame, key: Column, rate: Double): DataFrame =
-    df.where(inSample(key, lit(basisPoints(rate))))
-
   /** PER-ROW weighted deterministic Bernoulli sample: keep each row with
     * probability `weightBp`/10000, where `weightBp` is an INTEGER
     * basis-points COLUMN computed by the caller (quality-proportional

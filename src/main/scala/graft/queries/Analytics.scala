@@ -952,8 +952,7 @@ object Analytics {
       |FROM m""".stripMargin
 
   // Equal-width histogram of the events value column — the oracle-
-  // checked face of the binning family (ops.Binning's equal-frequency
-  // variant is spec-verified). The min/max scalars ride a broadcast
+  // checked binning query. The min/max scalars ride a broadcast
   // single-row join (the K5 pattern — no driver collect); the bucket
   // index is floor((v-min)/width) on identical doubles in both engines,
   // capped so v=max lands in the last bucket.

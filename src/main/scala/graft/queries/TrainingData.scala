@@ -897,8 +897,8 @@ object TrainingData {
        |WHERE j.jaccard >= 0.5""".stripMargin
 
   // --------------------------------------------- keep-best dedup drop
-  // Dedup.dedupKeepBest with priority = character length: each near-dup
-  // cluster keeps its LONGEST member (ties → lower id) instead of the
+  // Dedup.dedupKeepBestFromSigs with priority = character length: each
+  // near-dup cluster keeps its LONGEST member (ties → lower id) not the
   // min id — on the twin corpus the truncated copies (substr(text,11))
   // lose to their full-length originals by construction, the exact
   // canonical-copy behavior a production drop wants. Output keeps the
@@ -2683,7 +2683,7 @@ object TrainingData {
        |    AS converged""".stripMargin
 
   // --------------------------------- DSIR distribution-matched selection
-  // Selection.dsirSelect end to end: hashed-bigram importance weights
+  // Selection.selectByWeight end to end: hashed-bigram importance weights
   // against a trusted target slice (English docs from the first three
   // sources), top-100 kept. The weight table is materialized once per
   // session (selectByWeight reads it twice — the posting-table
@@ -3944,9 +3944,8 @@ object TrainingData {
   // id%9+1 × id%6+1), every 3rd+1 a TRUNCATED TIFF (valid II*\0 magic,
   // body cut at 10 bytes — claims, fails, QUARANTINED), the rest text
   // (stub lane). Compressed codecs (MP3/AAC/H.264/WebP/HEIC) remain
-  // honest stubs behind the CompressedDecoder seam: the container
-  // ships no decoder for them (probed: javax.sound = WAVE/AU/AIFF
-  // only; no codec jars on the classpath).
+  // honest stubs: the JDK ships no decoder for them (javax.sound =
+  // WAVE/AU/AIFF only) and the build carries no codec jars.
   def multimodalTiffQ(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val media = docs(spark, dir)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction — the table-maintenance stage every
   * long-lived 100 TB lake needs: streaming sinks, incremental appends,
@@ -55,15 +55,5 @@ object Compaction {
     spark.read.parquet(inPath).coalesce(nOut)
       .write.mode("overwrite").parquet(outPath)
     (nIn, nOut)
-  }
-
-  /** The frame a compacted rewrite produces (for plan inspection):
-    * scan → coalesce, nothing else.
-    */
-  def compactionPlan(spark: SparkSession, inPath: String,
-                     targetFileBytes: Long): DataFrame = {
-    val (_, bytes) = layoutOf(spark, inPath)
-    spark.read.parquet(inPath)
-      .coalesce(planFileCount(bytes, targetFileBytes))
   }
 }

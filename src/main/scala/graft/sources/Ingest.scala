@@ -37,9 +37,8 @@ object Ingest {
   }
 
   /** JSONL split over an already-loaded `raw_line` frame — the shared
-    * core of the batch reader and the streaming foreachBatch ingester
-    * (StreamingOps.ingestJsonlStream), so both paths parse and
-    * quarantine identically. */
+    * core of the file reader and the `ingest_props` job (which feeds a
+    * table column), so both paths parse and quarantine identically. */
   def splitLines(linesDf: DataFrame, schema: StructType): (DataFrame, DataFrame) =
     split(schema, linesDf
       .where(length(trim(col("raw_line"))) > 0)

@@ -37,17 +37,6 @@ object Sinks {
                    partCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
 
-  /** Append with rows sorted inside each task on `sortCols` — parquet
-    * row-group min/max stats become tight, so later range/equality
-    * filters on those columns prune row groups instead of scanning them.
-    * No extra shuffle: sortWithinPartitions is a per-task sort.
-    */
-  def appendPartitionedSorted(df: DataFrame, path: String,
-                              partCols: Seq[String],
-                              sortCols: Seq[String]): Unit =
-    df.sortWithinPartitions(sortCols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode("append").partitionBy(partCols: _*).parquet(path)
-
   /** Partition columns of a parquet directory, inferred from its
     * `col=value` subdirectory layout (the same convention Spark's
     * PartitioningAwareFileIndex discovers). Empty for an unpartitioned

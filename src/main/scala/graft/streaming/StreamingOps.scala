@@ -3,40 +3,20 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming variants of the batch pipeline patterns.
   *
   * The reference declares spark-streaming but never uses it (SURVEY.md
   * §2.10); these are the streaming upgrades of its patterns for a
-  * continuously-landing warehouse: micro-batch audit-append (Pattern A),
-  * watermarked event-time windowed aggregation, and stateful per-user
-  * session tracking with mapGroupsWithState.
+  * continuously-landing warehouse: watermarked event-time windowed
+  * aggregation, stateful per-user session tracking, and maintained-table
+  * ingestion through foreachBatch.
   *
-  * Scale notes: audit-append is stateless (pure map — no state store);
-  * the windowed aggregation keys state by (window, event_type) and the
-  * watermark bounds state size; session state is one small struct per
-  * active user, dropped on timeout.
+  * Scale notes: the windowed aggregation keys state by (window,
+  * event_type) and the watermark bounds state size; session state is
+  * one small struct per active user, dropped on timeout.
   */
 object StreamingOps {
-
-  /** Streaming source over a parquet directory with an explicit schema
-    * (streams require one). `tsNanosCol` is converted to a proper
-    * timestamp column `event_time` for watermarking.
-    */
-  def eventStream(spark: SparkSession, dir: String, schema: StructType,
-                  tsNanosCol: String = "ts"): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
-      .withColumn("event_time", timestamp_micros(expr(s"$tsNanosCol div 1000")))
-
-  /** Pattern A, streaming: stamp audit columns on every arriving row.
-    * Stateless — identical semantics to the batch EtlOps.withAudit. */
-  def auditAppendStream(src: DataFrame, user: String,
-                        clock: String): DataFrame =
-    src.withColumn("dwd_insert_user", lit(user))
-      .withColumn("dwd_insert_time", lit(clock).cast("timestamp"))
-      .withColumn("dwd_modify_user", lit(user))
-      .withColumn("dwd_modify_time", lit(clock).cast("timestamp"))
 
   /** Watermarked sliding-window counts/sums per event type. */
   def windowedEventStats(src: DataFrame, watermark: String = "10 minutes",
@@ -45,22 +25,13 @@ object StreamingOps {
       .groupBy(window(col("event_time"), window_), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
 
-  /** Streaming exact dedup — the streaming side of the batch W1 pattern:
-    * drop events already seen for the key within the watermark horizon
-    * (state pruned as event time advances; unbounded keys stay bounded).
-    */
-  def dedupStream(src: DataFrame, keyCols: Seq[String],
-                  watermark: String = "30 minutes"): DataFrame =
-    src.withWatermark("event_time", watermark)
-      .dropDuplicates(keyCols :+ "event_time")
-
   /** Streaming exact dedup on the business key ALONE — Spark's
-    * dropDuplicatesWithinWatermark: unlike [[dedupStream]] (which keys
-    * state on (key, event_time) and only drops exact-time repeats),
-    * this drops ANY later duplicate of a key seen within the watermark
-    * horizon, and the state store evicts each key once the watermark
-    * passes it — the semantics of an at-least-once upstream producer
-    * being collapsed to effectively-once.
+    * dropDuplicatesWithinWatermark: unlike a dropDuplicates keyed on
+    * (key, event_time), which only drops exact-time repeats, this drops
+    * ANY later duplicate of a key seen within the watermark horizon,
+    * and the state store evicts each key once the watermark passes it
+    * — the semantics of an at-least-once upstream producer being
+    * collapsed to effectively-once.
     */
   def dedupKeysStream(src: DataFrame, keyCols: Seq[String],
                       watermark: String = "30 minutes"): DataFrame =
@@ -296,58 +267,6 @@ object StreamingOps {
     q.stop()
   }
 
-  /** Continuous Count-Min sketch maintenance: each micro-batch's d×w
-    * cell DELTA lands as its own replay-stable file set (`b<id>_`
-    * prefix through [[idempotentAppend]] — at-least-once replays
-    * rewrite their own files and can never double-count), and the
-    * maintained sketch is the cell-wise sum of all deltas
-    * ([[graft.ops.Sketches.mergeCm]] linearity: merge(sketch(b1),
-    * sketch(b2)) = sketch(b1 ∪ b2), exactly). The table stays
-    * metadata-sized — O(batches · d · w) rows — and [[readSketch]]
-    * folds it in one aggregation; a periodic compaction would fold the
-    * deltas into one without changing any estimate. `checkpointDir`
-    * MUST be durable storage in production.
-    */
-  def continuousSketchMaintenance(src: DataFrame, keyCol: String,
-                                  table: String, depth: Int, width: Int,
-                                  checkpointDir: String = null): Unit = {
-    val ckpt = Option(checkpointDir).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_cm_ckpt").toString)
-    val q = src.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        idempotentAppend(
-          graft.ops.Sketches.countMinTable(batch, keyCol, depth, width),
-          table, s"b${batchId}_")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
-  /** The maintained sketch of [[continuousSketchMaintenance]]: the
-    * cell-wise sum over every batch delta in `table`. */
-  def readSketch(spark: SparkSession, table: String): DataFrame =
-    graft.ops.Sketches.mergeCm(spark.read.parquet(table))
-
-  /** Move `df`'s part files into `dir` under DETERMINISTIC names
-    * `<prefix><i>.parquet`, first deleting any files of the same prefix
-    * — a REPLAYABLE append: re-running the same (df, dir, prefix) from
-    * any crash point converges to exactly one copy of the rows, which
-    * is what makes the curate loop's at-least-once foreachBatch
-    * exactly-once at the sink. The staging dir is underscore-prefixed
-    * so a concurrent reader of `dir` never lists it.
-    */
-  /** Deterministic batch-named append — the shared commit primitive,
-    * now hosted at [[graft.sources.MaintainedIndex.idempotentAppend]]
-    * (the clustered+indexed variants live there too). */
-  private def idempotentAppend(df: DataFrame, dir: String,
-                               prefix: String): Unit = {
-    graft.sources.MaintainedIndex.idempotentAppend(df, dir, prefix)
-    ()
-  }
-
   /** Continuous corpus curation: screen each arriving batch of documents
     * against a maintained MinHash signature table
     * ([[graft.operators.Dedup.writeSignatureTable]]), append the
@@ -361,8 +280,9 @@ object StreamingOps {
     * EXACTLY-ONCE under crash/restart (foreachBatch is at-least-once;
     * CurateRestartSpec drives every window):
     *  - both sinks write DETERMINISTIC batch-named files
-    *    ([[idempotentAppend]]), so a replayed batch rewrites its own
-    *    files instead of appending a second copy;
+    *    ([[graft.sources.MaintainedIndex.idempotentAppend]]), so a
+    *    replayed batch rewrites its own files instead of appending a
+    *    second copy;
     *  - the screen EXCLUDES the batch's own ids from the corpus side:
     *    a crash after the signature append would otherwise make the
     *    replay reject every batch row against its own signatures and
@@ -595,7 +515,8 @@ object StreamingOps {
             import scala.concurrent.{Await, Future}
             import scala.concurrent.ExecutionContext.Implicits.global
             val fAdm = Future(
-              idempotentAppend(survivors, admittedDir, s"b${batchId}_"))
+              graft.sources.MaintainedIndex.idempotentAppend(
+                survivors, admittedDir, s"b${batchId}_"))
             // maintained-table appends are CLUSTERED + INDEXED (their
             // own generation of narrow-envelope files + stats rows
             // under the same batch-named idempotence), so the NEXT
@@ -680,9 +601,11 @@ object StreamingOps {
     * construction.
     *
     * EXACTLY-ONCE at the sink: foreachBatch is at-least-once, so the
-    * top-k rows land via [[idempotentAppend]] under batch-named files —
-    * a replayed batch rewrites its own files instead of appending a
-    * duplicate copy (same commit protocol as [[continuousCurate]]).
+    * top-k rows land via
+    * [[graft.sources.MaintainedIndex.idempotentAppend]] under
+    * batch-named files — a replayed batch rewrites its own files
+    * instead of appending a duplicate copy (same commit protocol as
+    * [[continuousCurate]]).
     * `checkpointDir` MUST be durable storage in production; the temp
     * default exists for single-run tests.
     */
@@ -695,7 +618,7 @@ object StreamingOps {
     val q = src.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        idempotentAppend(
+        graft.sources.MaintainedIndex.idempotentAppend(
           graft.operators.Similarity
             .ivfSqTopKFromIndex(batch, idCol, vecCol, indexPath, k, nprobe),
           outDir, s"b${batchId}_")
@@ -717,7 +640,8 @@ object StreamingOps {
     * one implementation (scoreWithModel), so streamed weights are
     * identical to the batch path by construction.
     *
-    * EXACTLY-ONCE at the sink via [[idempotentAppend]] under
+    * EXACTLY-ONCE at the sink via
+    * [[graft.sources.MaintainedIndex.idempotentAppend]] under
     * batch-named files (the [[continuousAnnServe]] commit protocol).
     * `checkpointDir` MUST be durable storage in production; the temp
     * default exists for single-run tests. `n`/`buckets` must match
@@ -734,7 +658,7 @@ object StreamingOps {
     val q = src.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        idempotentAppend(
+        graft.sources.MaintainedIndex.idempotentAppend(
           graft.operators.Selection
             .scoreWithModel(batch, textCol, idCol, model, n, buckets),
           outDir, s"b${batchId}_")
@@ -743,44 +667,6 @@ object StreamingOps {
       .start()
     q.processAllAvailable()
     q.stop()
-  }
-
-  /** Continuous ingestion with quarantine: a text-line stream split by
-    * the SAME parse expression as the batch Ingest layer, clean rows to
-    * one parquet table and raw corrupt lines to a replayable quarantine
-    * table.
-    *
-    * `checkpointDir` MUST be durable storage in production — it is what
-    * stops a restarted query from re-reading (and re-appending) the
-    * whole input directory; the temp-dir default exists for tests only.
-    * Delivery is at-least-once at the sink: foreachBatch re-runs a batch
-    * that failed between the two appends (plain parquet append has no
-    * batchId-keyed idempotence), so downstream consumers dedupe on
-    * content fingerprints — which the corpus pipeline does anyway.
-    *
-    * foreachBatch is the bridge: one streaming query, two sinks (a
-    * stream can't fork after start), and within a batch the split frame
-    * is persisted so parse work isn't done twice.
-    */
-  def ingestJsonlStream(spark: SparkSession, inDir: String,
-                        schema: StructType, cleanDir: String,
-                        quarantineDir: String,
-                        checkpointDir: String = null): org.apache.spark.sql.streaming.StreamingQuery = {
-    val ckpt = Option(checkpointDir).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_ckpt_ingest").toString)
-    val lines = spark.readStream.text(inDir).toDF("raw_line")
-    lines.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val df = batch.persist()
-        try {
-          val (clean, quarantine) =
-            graft.sources.Ingest.splitLines(df, schema)
-          clean.write.mode("append").parquet(cleanDir)
-          quarantine.write.mode("append").parquet(quarantineDir)
-        } finally { df.unpersist(); () }
-      }
-      .start()
   }
 
   /** Run a streaming DataFrame to a named in-memory sink until all

@@ -17,7 +17,9 @@ import graft.operators.Similarity
   *     window formulation it replaced, ties and NaN included;
   *  3. end to end — a >128-centroid index build takes the fallback and
   *     a conf-forced fallback build of a SMALL index equals the
-  *     literal-path build artifact for artifact (lists and search).
+  *     literal-path build artifact for artifact (lists and search);
+  *     conf-forced k-means training and PQ encoding equal their literal
+  *     paths, each run's plan showing the broadcast + argmax shape.
   */
 class AnnFallbackSpec extends SparkSpec {
   import spark.implicits._
@@ -25,6 +27,10 @@ class AnnFallbackSpec extends SparkSpec {
   private def vec(i: Long): Seq[Double] =
     (0 until 6).map(d => (((i + 1) * (d + 3) * 2654435761L) % 997L + 1L)
       .toDouble / 998.0)
+
+  /** The broadcast + graft_argmax_long assignment shape. */
+  private def isArgmaxFallback(plan: String): Boolean =
+    plan.contains("graft_argmax_long") && plan.contains("BroadcastExchange")
 
   test("argmax fallback plans as partial HashAggregate, no " +
     "SortAggregate, no Window") {
@@ -109,5 +115,45 @@ class AnnFallbackSpec extends SparkSpec {
     }
     assert(sLit.nonEmpty && sLit == sFb,
       "fallback search diverged from the literal path")
+  }
+
+  test("conf-forced fallback k-means training equals the literal path, " +
+    "and its plans take the broadcast + argmax shape") {
+    val corpus = (0L until 300L).map(i => (i, vec(i))).toDF("id", "emb")
+    def train() = Similarity.kmeansQuantized(corpus, "id", "emb",
+        nlist = 12, iters = 2)
+      .map { case (cid, csum, cnt) => (cid, csum.toSeq, cnt) }
+    val viaLit = train()
+    // training returns centroids, not a frame: its plans are read from
+    // a query listener
+    val forced = withPlans(
+      withSQLConf("graft.ann.maxLiteralCents" -> "0")(train())) { plans =>
+      assert(plans.exists(isArgmaxFallback),
+        "forced training never ran the broadcast + argmax assignment")
+    }
+    assert(viaLit == forced,
+      "fallback training diverged from the literal path")
+  }
+
+  test("conf-forced fallback PQ encode equals the literal path, and its " +
+    "plan takes the broadcast + argmax shape") {
+    val corpus = (0L until 300L).map(i => (i, vec(i))).toDF("id", "emb")
+    val books = Similarity.pqCodebooks(corpus, "id", "emb", m = 2,
+      ksub = 8, iters = 2)
+    val viaLit = Similarity.pqEncode(corpus, "id", "emb", books, m = 2)
+    val forced = withSQLConf("graft.ann.maxLiteralCents" -> "0") {
+      Similarity.pqEncode(corpus, "id", "emb", books, m = 2)
+    }
+    val fbPlan = forced.queryExecution.executedPlan.toString
+    assert(isArgmaxFallback(fbPlan),
+      s"forced encode did not take the broadcast + argmax path:\n$fbPlan")
+    assert(!viaLit.queryExecution.executedPlan.toString
+      .contains("graft_argmax_long"), "literal encode must fold row-locally")
+    def codes(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val litCodes = codes(viaLit)
+    assert(litCodes.size == 600)
+    assert(litCodes == codes(forced),
+      "fallback encode diverged from the literal path")
   }
 }

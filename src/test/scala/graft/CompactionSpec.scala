@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.sources.Compaction
 
 /** Small-file compaction: file-count collapse, exact row preservation,
@@ -42,9 +40,11 @@ class CompactionSpec extends SparkSpec {
     val root = tmp()
     Tables.load(spark, sf0001, "documents")
       .repartition(8).write.parquet(s"$root/frag")
-    val p = Compaction.compactionPlan(spark, s"$root/frag", 1L << 20)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("Coalesce"), s"no coalesce:\n$p")
-    assert(!p.contains("Exchange"), s"unexpected shuffle:\n$p")
+    withPlans(Compaction.compact(spark, s"$root/frag", s"$root/out",
+        targetFileBytes = 1L << 20)) { plans =>
+      val p = plans.find(_.contains("InsertIntoHadoopFsRelationCommand"))
+      assert(p.exists(_.contains("Coalesce")), s"no coalesce:\n$plans")
+      assert(!p.exists(_.contains("Exchange")), s"unexpected shuffle:\n$p")
+    }
   }
 }

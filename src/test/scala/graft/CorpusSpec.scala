@@ -78,11 +78,11 @@ class CorpusSpec extends SparkSpec {
 
   test("deterministic sample is partition-invariant and repeatable") {
     val docs = (1L to 400L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val a = Sampling.deterministicSample(docs, $"doc_id", 0.25)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val b = Sampling.deterministicSample(docs.repartition(7), $"doc_id", 0.25)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(a == b)                  // layout changes never change the pick
+    def pick(df: org.apache.spark.sql.DataFrame) =
+      Sampling.weightedSample(df, $"doc_id", lit(2500L))
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    val a = pick(docs)
+    assert(a == pick(docs.repartition(7))) // layout never changes the pick
     assert(a.size > 60 && a.size < 140) // ~100 of 400
   }
 
@@ -113,41 +113,6 @@ class CorpusSpec extends SparkSpec {
     assert(out(1L) == (3L, 1L, 0.3333)) // one of three 8-grams shared
     assert(out(2L) == (7L, 0L, 0.0))
     assert(out(3L) == (0L, 0L, 0.0))
-  }
-
-  test("bloom-pre-filtered incremental dedup equals the exact version") {
-    val docs = Tables.load(spark, sf0001, "documents")
-      .select($"doc_id", $"text")
-    // batch: half duplicates of the corpus, half novel (suffix-mutated)
-    val batch = docs.where($"doc_id" % 2 === 0)
-      .select(($"doc_id" + 5000L).as("doc_id"), $"text")
-      .union(docs.where($"doc_id" % 2 === 1)
-        .select(($"doc_id" + 9000L).as("doc_id"),
-          concat($"text", lit(" novel-tail"), $"doc_id").as("text")))
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val exact = key(Dedup.incrementalDedup(batch, docs, "text", "doc_id"))
-    val bloom = key(Dedup.incrementalDedupBloom(batch, docs, "text", "doc_id",
-      expectedItems = 10000L))
-    assert(bloom == exact)
-    assert(exact.nonEmpty)
-  }
-
-  test("equal-frequency binning balances buckets even on skewed values") {
-    // heavy skew: 90% of mass near zero, long tail
-    val df = (1L to 1000L)
-      .map(i => (i, if (i <= 900) i / 100.0 else math.pow(i - 890, 3)))
-      .toDF("id", "v")
-    val out = graft.ops.Binning.withBuckets(df, "v", 4)
-    val sizes = out.groupBy("v_bucket").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sizes.keySet == Set(0L, 1L, 2L, 3L))
-    // every bucket within 2x of the ideal 250 despite the skew
-    sizes.values.foreach(n => assert(n > 125 && n < 500, sizes.toString))
-    // deterministic: same bounds, same assignment
-    val again = graft.ops.Binning.withBuckets(df, "v", 4)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert(again == out.collect().map(r => (r.getLong(0), r.getLong(2))).toSet)
   }
 
   test("vocabCoverage reports per-doc OOV against a vocab, zero-token safe") {
@@ -284,19 +249,6 @@ class CorpusSpec extends SparkSpec {
     // fresh and repeat keep their first (doc,pos); blanks survive
     assert(out(10L) === (("fresh\n\nrepeat", 3L, 1L)))
     assert(out(11L) === (("", 0L, 3L)))
-  }
-
-  test("newLineFingerprints returns only the batch's novel lines") {
-    val history = Seq((1L, "a\nb")).toDF("doc_id", "text")
-    val batch = Seq((10L, "b\nc\n \nc")).toDF("doc_id", "text")
-    val seen = Corpus.seenLinesTable(history, "text")
-    val fresh = Corpus.newLineFingerprints(batch, seen, "text")
-    // only "c" is new (b seen, blank excluded, dup collapsed)
-    assert(fresh.count() === 1L)
-    val appended = seen.unionByName(fresh)
-    // re-screening the same batch against the appended table drops all
-    assert(Corpus.dedupLinesIncremental(batch, appended, "text", "doc_id")
-      .agg(sum("n_kept")).head.getLong(0) === 1L) // only the blank line
   }
 
   test("dedupLinesIncremental equals the batch slice of the global pass " +

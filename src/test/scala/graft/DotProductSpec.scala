@@ -15,7 +15,7 @@ class DotProductSpec extends SparkSpec {
       col("a.vec_id") < col("b.vec_id") && col("b.vec_id") < 30)
     val mismatches = pairs.select(
       Similarity.dot(col("a.v"), col("b.v")).as("native"),
-      Similarity.dotHof(col("a.v"), col("b.v")).as("hof"))
+      HofReference.dotHof(col("a.v"), col("b.v")).as("hof"))
       .where(col("native") =!= col("hof"))
       .count()
     assert(mismatches == 0)

@@ -1,0 +1,42 @@
+package graft
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+
+/** Pure higher-order-function forms of native expressions: the
+  * registration-free references the native `graft_dot` and
+  * `graft_simhash` are compared against bit for bit (DotProductSpec,
+  * ShinglesSpec, PropertiesSpec). Interpreted lambdas — correct, slow.
+  */
+object HofReference {
+
+  /** Dot product as an ascending-index fold in DOUBLE. */
+  def dotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
+
+  /** Portable 48-bit hash: first 12 hex chars of md5 (stays positive in
+    * a signed 64-bit lane). */
+  def hash48(s: Column): Column =
+    conv(substring(md5(s), 1, 12), 16, 10).cast("long")
+
+  /** 48-bit hashes of the whitespace tokens of lower(trim(text)) —
+    * materialize once (withColumn) before [[simhash48]], so the md5s
+    * are not recomputed per bit. */
+  def tokenHashes48(text: Column): Column =
+    transform(split(lower(trim(text)), "\\s+"), t => hash48(t))
+
+  /** 48-bit SimHash over the token-hash array column named `thCol`:
+    * per bit k the vote is Σ(±1) over tokens, bit set iff strictly
+    * positive. SQL text because SQL shiftright/shiftleft take column
+    * shift amounts. */
+  def simhash48(thCol: String): Column = expr(
+    s"""aggregate(
+       |  sequence(0, 47),
+       |  CAST(0 AS BIGINT),
+       |  (acc, k) -> acc + IF(
+       |    aggregate($thCol, CAST(0 AS BIGINT),
+       |      (v, h) -> v + IF(shiftright(h, k) % 2 = 1,
+       |                       CAST(1 AS BIGINT), CAST(-1 AS BIGINT))
+       |    ) > 0,
+       |    shiftleft(CAST(1 AS BIGINT), k), CAST(0 AS BIGINT)))""".stripMargin)
+}

@@ -25,12 +25,6 @@ class LabelsSpec extends SparkSpec {
     assert(out === ((2L, "neg", 1L, 2L, 0.5)))
   }
 
-  test("contested returns only items below the agreement floor") {
-    val out = Labels.contested(ann, "item", "label", 0.7)
-      .select("item").as[Long].collect().toSet
-    assert(out === Set(1L, 2L)) // 0.6667 and 0.5; item 3 is unanimous
-  }
-
   test("fleissKappa: hand-computed values, perfect agreement, and the " +
     "degenerate single-category / unequal-n guards") {
     def kap(rows: Seq[(Long, String)]): (Long, Long, Option[Double],

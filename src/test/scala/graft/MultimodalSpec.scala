@@ -219,16 +219,6 @@ class MultimodalSpec extends SparkSpec {
     assert(a == b && a.nonEmpty)
   }
 
-  test("resizeStub emits exactly w*h bytes per row, all rows") {
-    import org.apache.spark.sql.functions._
-    val docs = Tables.load(spark, sf0001, "documents").limit(30)
-    val out = Multimodal.resizeStub(docs, 8, 6, batchSize = 7)
-    assert(out.count() == 30)
-    assert(out.where(length(col("media")) =!= 48).count() == 0)
-    assert(out.select("out_w", "out_h").distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((8L, 6L)))
-  }
-
   test("media binary column round-trips UTF-8 byte length") {
     import org.apache.spark.sql.functions._
     val docs = Tables.load(spark, sf0001, "documents").limit(50)
@@ -381,54 +371,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out(1L).getLong(5) === s.map(math.abs).sum)
   }
 
-  test("plugged codec seam: open() runs once per PARTITION, claimed " +
-    "rows decode or quarantine, unclaimed rows keep the built-in " +
-    "trichotomy bit-exactly") {
-    import spark.implicits._
-    def grft(w: Int, h: Int, f: Int): Array[Byte] =
-      Array[Byte]('G', 'R', 'F', 'T',
-        w.toByte, h.toByte, f.toByte, ((w + h + f) & 0xFF).toByte)
-    val corruptGrft = {
-      val b = grft(9, 9, 9); b(7) = (b(7) ^ 0x5A).toByte; b
-    }
-    val fixture = Seq(
-      1L -> Multimodal.syntheticImage(5, 4, 1L, "png"),   // real image
-      6L -> Multimodal.corruptImagePayload(6L),           // image quarantine
-      7L -> "plain prose, no claim".getBytes("UTF-8"),    // stub
-      20L -> grft(12, 8, 3),                              // plugged decode
-      21L -> corruptGrft)                                 // plugged quarantine
-    val df = fixture.map { case (id, b) => (id, b, 10L) }
-      .toDF("doc_id", "media", "n_chars").repartition(3)
-    val inits = spark.sparkContext.longAccumulator("grft_codec_inits")
-    val out = Multimodal.extractMetaPlugged(df, new GrftCodecDouble(inits))
-      .collect()
-      .map(r => r.getLong(0) -> ((r.getBoolean(1), r.getBoolean(2),
-        r.getBoolean(3),
-        if (r.isNullAt(4)) -1L else r.getLong(4),
-        if (r.isNullAt(5)) -1L else r.getLong(5),
-        if (r.isNullAt(6)) -1L else r.getLong(6)))).toMap
-    // the seam contract: heavy codec state initializes once per
-    // partition — NOT once per row (5 rows, 3 partitions)
-    assert(inits.value == 3L,
-      s"open() ran ${inits.value} times for 3 partitions")
-    // plugged format: decoded with its own flag, or quarantined
-    assert(out(20L) == ((false, true, false, 12L, 8L, 3L)))
-    assert(out(21L) == ((false, false, true, -1L, -1L, -1L)))
-    // unclaimed rows keep the built-in trichotomy bit-exactly
-    val base = Multimodal.extractMetaDecoded(
-      fixture.filterNot(kv => kv._1 == 20L || kv._1 == 21L)
-        .map { case (id, b) => (id, b, 10L) }
-        .toDF("doc_id", "media", "n_chars")).collect()
-      .map(r => r.getLong(0) -> ((r.getBoolean(1), r.getBoolean(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3),
-        if (r.isNullAt(4)) -1L else r.getLong(4),
-        if (r.isNullAt(5)) -1L else r.getLong(5)))).toMap
-    base.foreach { case (id, (isImg, quar, w, h, f)) =>
-      assert(out(id) == ((isImg, false, quar, w, h, f)),
-        s"built-in trichotomy changed for unclaimed doc $id")
-    }
-  }
-
   test("EXIF: planted JPEG APP1 round-trips in both byte orders and " +
     "stays a decodable image") {
     for (big <- Seq(false, true)) {
@@ -557,29 +499,5 @@ class MultimodalSpec extends SparkSpec {
       "text: absent, never quarantined")
     assert(out(4L).getBoolean(1) && out(4L).isNullAt(3) &&
       out(4L).getBoolean(5), "real TIFF: present, MM, no orientation")
-  }
-}
-
-/** Test double for [[Multimodal.CompressedDecoder]]: a made-up "GRFT"
-  * container (magic + width/height/frames bytes + parity). Top-level —
-  * an inner class would drag the non-serializable suite into the task
-  * closure. The parity check gives the double a REAL failure mode so
-  * the quarantine path is exercised, without pretending to be a codec.
-  */
-class GrftCodecDouble(inits: org.apache.spark.util.LongAccumulator)
-  extends Multimodal.CompressedDecoder {
-  override def claims(bytes: Array[Byte]): Boolean =
-    bytes.length >= 8 && bytes(0) == 'G' && bytes(1) == 'R' &&
-      bytes(2) == 'F' && bytes(3) == 'T'
-  override def open(): (Long, Array[Byte], Long) =>
-      Option[Multimodal.MediaMeta] = {
-    inits.add(1L)
-    (id, bytes, _) => {
-      val w = bytes(4) & 0xFF; val h = bytes(5) & 0xFF
-      val f = bytes(6) & 0xFF
-      if (((w + h + f) & 0xFF) != (bytes(7) & 0xFF)) None
-      else Some(Multimodal.MediaMeta(id, bytes.length.toLong, "",
-        w.toLong, h.toLong, f.toLong))
-    }
   }
 }

@@ -40,27 +40,46 @@ class NativeParitySpec extends SparkSpec {
     assert(n == 6, s"expected 3 cells per row incl. the null key, got $n")
   }
 
-  test("graft_vocab_hits == array_sort(array_intersect(array_distinct(" +
-    "split(lower(trim(text)))))) chain") {
-    val vocab = Seq("apple", "pear", "zebra", "Ärger", "中文", "a")
-    val texts = Seq(
-      "apple pear apple", "  APPLE\tzebra  ", "", "   ",
-      "nothing matches here", "a a a pear", "ärger ÄRGER",
-      "中文 words 中文", "pear\napplezebra", null)
-    val df = texts.toDF("text")
+  /** Native vocab hits vs the chain over `texts`, asserted equal row
+    * by row; returns the native hits keyed by (non-null) text. */
+  private def vocabHitsVsChain(vocab: Seq[String],
+                               texts: Seq[String]): Map[String, Seq[String]] = {
     val chain = array_sort(array_intersect(
       array_distinct(split(lower(trim(col("text"))), "\\s+")),
       typedLit(vocab)))
-    val got = df.select(
+    val got = texts.toDF("text").select(col("text"),
         NativeFns.vocabHits(col("text"), vocab).as("native"),
         chain.as("chain"))
       .collect()
     got.foreach { r =>
-      assert(r.isNullAt(0) == r.isNullAt(1),
-        s"null-ness diverged: $r")
-      if (!r.isNullAt(0))
-        assert(r.getSeq[String](0) == r.getSeq[String](1),
+      assert(r.isNullAt(1) == r.isNullAt(2), s"null-ness diverged: $r")
+      if (!r.isNullAt(1))
+        assert(r.getSeq[String](1) == r.getSeq[String](2),
           s"hits diverged: $r")
     }
+    got.filterNot(_.isNullAt(0))
+      .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+  }
+
+  test("graft_vocab_hits == array_sort(array_intersect(array_distinct(" +
+    "split(lower(trim(text)))))) chain") {
+    vocabHitsVsChain(Seq("apple", "pear", "zebra", "Ärger", "中文", "a"),
+      Seq("apple pear apple", "  APPLE\tzebra  ", "", "   ",
+        "nothing matches here", "a a a pear", "ärger ÄRGER",
+        "中文 words 中文", "pear\napplezebra", null))
+  }
+
+  test("graft_vocab_hits matches the chain on tab-led text, an empty " +
+    "vocab entry and uppercase non-ASCII tokens") {
+    // trim() strips only spaces: a tab/newline at either end (or an
+    // all-space text) makes the chain's split emit "" — a hit when the
+    // vocabulary holds ""; lower() case-maps non-ASCII like Spark does
+    val native = vocabHitsVsChain(
+      Seq("", "apple", "pear", "ärger", "straße", "σοφος", "i\u0307stanbul"),
+      Seq("\tapple pear", "apple\n", "\n", "", "   ", " \t ",
+        "apple pear", "ÄRGER Straße", "ΣΟΦΟΣ", "İSTANBUL\t", null))
+    assert(native("\tapple pear") == Seq("", "apple", "pear"))
+    assert(native("apple pear") == Seq("apple", "pear"))
+    assert(native("ÄRGER Straße") == Seq("straße", "ärger"))
   }
 }

@@ -90,12 +90,12 @@ class PropertiesSpec extends SparkSpec {
     import graft.functions.native.NativeFns
     import graft.functions.TextFns
     val mism = df
-      .withColumn("__th", TextFns.tokenHashes48(col("text")))
+      .withColumn("__th", HofReference.tokenHashes48(col("text")))
       .select(
         (array_sort(NativeFns.shingleHashes($"text", 5)) =!=
           array_sort(TextFns.shingleHashes($"text", 5))).as("d1"),
         (NativeFns.simhashNative($"text") =!=
-          TextFns.simhash48("__th")).as("d2"))
+          HofReference.simhash48("__th")).as("d2"))
       .where($"d1" || $"d2").count()
     assert(mism == 0)
   }

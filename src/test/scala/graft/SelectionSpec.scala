@@ -97,12 +97,13 @@ class SelectionSpec extends SparkSpec {
   }
 
   test("dsirSelect is bit-identical under repartitioning") {
-    val a = Selection.dsirSelect(corpus, "text", "id", col("tgt"), keep = 2)
+    def select(c: org.apache.spark.sql.DataFrame) = Selection
+      .selectByWeight(Selection.dsirWeights(c, "text", "id", col("tgt")),
+        keep = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val b = Selection
-      .dsirSelect(corpus.repartition(7), "text", "id", col("tgt"), keep = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(a == b)
+    val a = select(corpus)
+    assert(a == select(corpus.repartition(7)))
+    assert(a.count(_._3) == 2)
   }
 
   // ------------------------------------------------- quota waterfilling

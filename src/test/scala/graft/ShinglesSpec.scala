@@ -8,25 +8,6 @@ import graft.functions.native.NativeFns
 class ShinglesSpec extends SparkSpec {
   import spark.implicits._
 
-  test("native shingles == HOF shingles as sets, on real docs") {
-    val docs = Tables.load(spark, sf0001, "documents").limit(100)
-    val mismatch = docs.select(
-      array_sort(NativeFns.shinglesNative(col("text"), 5)).as("native"),
-      array_sort(TextFns.shingles(col("text"), 5)).as("hof"))
-      .where(col("native") =!= col("hof"))
-      .count()
-    assert(mismatch == 0)
-  }
-
-  test("native shingles: short text yields itself; CJK is codepoint-based") {
-    val df = Seq(("abc", "中文字符测试")).toDF("short", "cjk")
-    val r = df.select(
-      NativeFns.shinglesNative($"short", 5),
-      NativeFns.shinglesNative($"cjk", 5)).head()
-    assert(r.getSeq[String](0) == Seq("abc"))
-    assert(r.getSeq[String](1) == Seq("中文字符测", "文字符测试"))
-  }
-
   test("native shingle hashes == HOF poly-hash of HOF shingles, real docs") {
     val docs = Tables.load(spark, sf0001, "documents").limit(100)
     val mismatch = docs.select(
@@ -64,10 +45,10 @@ class ShinglesSpec extends SparkSpec {
 
   test("native simhash == HOF tokenHashes48->simhash48 on real docs") {
     val docs = Tables.load(spark, sf0001, "documents").limit(100)
-      .withColumn("__th", TextFns.tokenHashes48(col("text")))
+      .withColumn("__th", HofReference.tokenHashes48(col("text")))
     val mismatch = docs.select(
       NativeFns.simhashNative(col("text")).as("native"),
-      TextFns.simhash48("__th").as("hof"))
+      HofReference.simhash48("__th").as("hof"))
       .where(col("native") =!= col("hof"))
       .count()
     assert(mismatch == 0)
@@ -76,8 +57,8 @@ class ShinglesSpec extends SparkSpec {
   test("native jaccard == intersect/union sizes on real shingle sets") {
     val docs = Tables.load(spark, sf0001, "documents").limit(60)
       .select($"doc_id",
-        NativeFns.shinglesNative($"text", 5).as("sh"),
-        NativeFns.shinglesNative(expr("substring(text, 11)"), 5).as("sh2"))
+        TextFns.shingles($"text", 5).as("sh"),
+        TextFns.shingles(expr("substring(text, 11)"), 5).as("sh2"))
     val mismatch = docs.select(
       NativeFns.jaccardNative($"sh", $"sh2").as("native"),
       (size(array_intersect($"sh", $"sh2")).cast("double") /

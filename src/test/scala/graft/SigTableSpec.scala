@@ -168,8 +168,9 @@ class SigTableSpec extends SparkSpec {
       (col("doc_id") + 5000000L).as("doc_id"),
       expr("substring(text, 11)").as("text"))
     val corpus = d.unionByName(twins)
-    val out = Dedup.dedupKeepBest(corpus, "text", "doc_id",
-        org.apache.spark.sql.functions.length(col("text")))
+    val out = Dedup.dedupKeepBestFromPairs(corpus,
+        Dedup.minhashNearDupPairs(corpus, "text", "doc_id", 5, 0.5),
+        "doc_id", org.apache.spark.sql.functions.length(col("text")))
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getBoolean(3)))).toMap
     assert(out.size == corpus.count())

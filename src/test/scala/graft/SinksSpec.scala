@@ -87,16 +87,6 @@ class SinksSpec extends SparkSpec {
     assert(back.where($"etl_date" === "20240101").count() > 0)
   }
 
-  test("sorted append writes row groups that prune on the sort column") {
-    val path = tmp() + "/s"
-    val df = spark.range(100000).selectExpr("id", "id * 2 as v")
-      .repartition(2)
-    Sinks.appendPartitionedSorted(df.withColumn("etl_date", lit("d1")),
-      path, Seq("etl_date"), Seq("id"))
-    val out = spark.read.parquet(path).where($"id" === 12345L)
-    assert(out.count() == 1)
-  }
-
   test("z-ordered write clusters BOTH dimensions into tight per-file ranges") {
     val path = tmp() + "/z"
     // two independent uniform dims: a row-id and a decorrelated permutation

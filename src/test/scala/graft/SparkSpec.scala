@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 /** Shared local session for all suites (one per forked test JVM). */
 trait SparkSpec extends AnyFunSuite {
@@ -30,5 +34,27 @@ trait SparkSpec extends AnyFunSuite {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
+  }
+
+  /** Run `f`, then wait until `check` passes on the executed plans of
+    * the queries and writes it ran — for operators that return no frame
+    * to inspect. Listener events arrive asynchronously, hence the wait.
+    */
+  def withPlans[A](f: => A)(check: Seq[String] => Unit): A = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(fn: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = f
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        check(plans.toArray(new Array[String](0)).toSeq)
+      }
+      out
+    } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -24,21 +25,15 @@ class StreamingSpec extends SparkSpec {
     dir.toString
   }
 
-  test("streaming audit-append stamps every arriving row (Pattern A)") {
-    val src = StreamingOps.eventStream(spark, eventsDir,
-      eventsSchema)
-    StreamingOps.runToMemory(
-      StreamingOps.auditAppendStream(src, "user1", "2024-01-01 00:00:00"),
-      "audit_out")
-    val out = spark.table("audit_out")
-    val batchCount = Tables.load(spark, sf0001, "events").count()
-    assert(out.count() == batchCount)
-    assert(out.where(col("dwd_insert_user") =!= "user1").count() == 0)
-  }
+  /** Streaming source over a parquet directory; the epoch-nanos `ts`
+    * becomes the `event_time` timestamp the watermarks key on. */
+  private def eventStream(dir: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.readStream.schema(schema).parquet(dir)
+      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
 
   test("watermarked windowed aggregation produces event-time windows") {
-    val src = StreamingOps.eventStream(spark, eventsDir,
-      eventsSchema)
+    val src = eventStream(eventsDir, eventsSchema)
     StreamingOps.runToMemory(
       StreamingOps.windowedEventStats(src), "win_out",
       OutputMode.Append())
@@ -50,22 +45,8 @@ class StreamingSpec extends SparkSpec {
       Set("window", "event_type", "n", "sum_value"))
   }
 
-  test("streaming dedup drops repeated (key, event_time) rows") {
-    val src = StreamingOps.eventStream(spark, eventsDir, eventsSchema)
-    // self-union the source dir? single dir read is already unique — so
-    // assert dedup of (user_id, event_time) matches the batch distinct
-    StreamingOps.runToMemory(
-      StreamingOps.dedupStream(src, Seq("user_id")), "dedup_out")
-    val out = spark.table("dedup_out").count()
-    // event_time is microsecond-truncated, so the batch baseline must
-    // dedup at the same precision
-    val batch = Tables.load(spark, sf0001, "events")
-      .selectExpr("user_id", "ts div 1000").distinct().count()
-    assert(out == batch)
-  }
-
   test("stream-stream attribution join equals the batch theta join") {
-    val src = StreamingOps.eventStream(spark, eventsDir, eventsSchema)
+    val src = eventStream(eventsDir, eventsSchema)
     StreamingOps.runToMemory(
       StreamingOps.streamStreamAttribution(src), "attr_out")
     val out = spark.table("attr_out")
@@ -89,32 +70,11 @@ class StreamingSpec extends SparkSpec {
     assert(out.nonEmpty)
   }
 
-  test("streaming JSONL ingest splits clean/quarantine like the batch reader") {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("v", DoubleType)))
-    val in = java.nio.file.Files.createTempDirectory("graft_sin")
-    val cleanDir = java.nio.file.Files
-      .createTempDirectory("graft_sclean").toString + "/t"
-    val qDir = java.nio.file.Files
-      .createTempDirectory("graft_sq").toString + "/t"
-    java.nio.file.Files.write(in.resolve("a.txt"),
-      Seq("""{"id": 1, "v": 0.5}""", """broken""", """{"id": 2, "v": 1.5}""")
-        .mkString("\n").getBytes("UTF-8"))
-    val q = StreamingOps.ingestJsonlStream(
-      spark, in.toString, schema, cleanDir, qDir)
-    try q.processAllAvailable() finally q.stop()
-    assert(spark.read.parquet(cleanDir).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSet == Set((1L, 0.5), (2L, 1.5)))
-    assert(spark.read.parquet(qDir).collect()
-      .map(_.getString(0)).toSeq == Seq("broken"))
-  }
-
   test("continuous SCD merge converges to the batch merge result") {
     val target = java.nio.file.Files
       .createTempDirectory("graft_scd_target").toString + "/snap"
     // stream the events dir through foreachBatch scd-merge
-    val src = StreamingOps.eventStream(spark, eventsDir, eventsSchema)
+    val src = eventStream(eventsDir, eventsSchema)
     StreamingOps.continuousScdMerge(src, target,
       Seq("user_id"), "ts", Seq("event_id"))
     val streamed = spark.read.parquet(target)
@@ -137,7 +97,7 @@ class StreamingSpec extends SparkSpec {
     val target = java.nio.file.Files
       .createTempDirectory("graft_scd_idem").toString + "/snap"
     def run(): Unit = StreamingOps.continuousScdMerge(
-      StreamingOps.eventStream(spark, eventsDir, eventsSchema),
+      eventStream(eventsDir, eventsSchema),
       target, Seq("user_id"), "ts", Seq("event_id"))
     run()
     val first = spark.read.parquet(target)
@@ -149,7 +109,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dropDuplicatesWithinWatermark collapses each key to one row") {
-    val src = StreamingOps.eventStream(spark, eventsDir, eventsSchema)
+    val src = eventStream(eventsDir, eventsSchema)
     StreamingOps.runToMemory(
       StreamingOps.dedupKeysStream(src, Seq("user_id")), "dedupk_out")
     val out = spark.table("dedupk_out").select("user_id")
@@ -164,7 +124,7 @@ class StreamingSpec extends SparkSpec {
 
   test("session_window aggregation matches the stateful sessionizer on " +
     "closed sessions") {
-    val src = StreamingOps.eventStream(spark, eventsDir, eventsSchema)
+    val src = eventStream(eventsDir, eventsSchema)
     StreamingOps.runToMemory(
       StreamingOps.sessionWindowStream(src), "sessw_out",
       OutputMode.Append())
@@ -208,7 +168,7 @@ class StreamingSpec extends SparkSpec {
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$stage/c$i")
     }
-    val src = StreamingOps.eventStream(spark, inDir.toString, eventsSchema)
+    val src = eventStream(inDir.toString, eventsSchema)
     val q = StreamingOps.userSessionStream(src).toDF()
       .writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation",
@@ -247,7 +207,7 @@ class StreamingSpec extends SparkSpec {
 
   test("session stream emits gap-closed sessions that match the batch " +
     "sessionizer (open trailing sessions excluded)") {
-    val src = StreamingOps.eventStream(spark, eventsDir, eventsSchema)
+    val src = eventStream(eventsDir, eventsSchema)
     StreamingOps.runToMemory(
       StreamingOps.userSessionStream(src).toDF(), "sess_out",
       OutputMode.Append())
@@ -393,56 +353,5 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     assert(latest == Map(1L -> (2L, 13L), 2L -> (1L, 5L), 3L -> (1L, 7L)))
-  }
-
-  test("continuousSketchMaintenance: the maintained sketch equals the " +
-    "from-scratch sketch over everything that streamed") {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_streamcm").toString
-    val b0 = Seq.fill(7)("x") ++ Seq("y", "z")
-    val b1 = Seq.fill(4)("y") ++ Seq("x", "w")
-    b0.toDF("k").coalesce(1).write.parquet(s"$root/src/b0")
-    b1.toDF("k").coalesce(1).write.parquet(s"$root/src/b1")
-    val src = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src/*")
-    val table = s"$root/sketch"
-    StreamingOps.continuousSketchMaintenance(src, "k", table,
-      depth = 3, width = 32)
-    // one delta file set per micro-batch, replay-stable names
-    val prefixes = new java.io.File(table).listFiles()
-      .map(_.getName).filter(_.endsWith(".parquet"))
-      .map(_.takeWhile(_ != '_')).toSet
-    assert(prefixes == Set("b0", "b1"), s"unexpected deltas: $prefixes")
-    val maintained = StreamingOps.readSketch(spark, table)
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    val scratch = graft.ops.Sketches
-      .countMinTable((b0 ++ b1).toDF("k"), "k", depth = 3, width = 32)
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    assert(maintained === scratch)
-
-    // FULL REPLAY: a fresh checkpoint re-delivers every batch (the
-    // worst at-least-once case — the whole history replays against a
-    // table that already has all the deltas). Sum-merges double-count
-    // under naive append; the b<id>_ rewrite protocol must converge to
-    // the identical sketch instead.
-    val src2 = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src/*")
-    StreamingOps.continuousSketchMaintenance(src2, "k", table,
-      depth = 3, width = 32)
-    val replayed = StreamingOps.readSketch(spark, table)
-      .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    assert(replayed === scratch, "replay double-counted the deltas")
   }
 }
