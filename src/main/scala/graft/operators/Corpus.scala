@@ -420,8 +420,8 @@ object Corpus {
     * pruned screens' file bound (kept ≤ probes × generations) degrades
     * linearly with batch count. Re-clusters all three screen artifacts
     * (fingerprint table by h, doc-keyed projection by id, df sidecar
-    * by h) into single generations sized by bytes, carries the
-    * (k, window) geometry marker, and rebuilds every stats index.
+    * by h) into single generations sized by bytes and carries the
+    * (k, window) geometry marker.
     * Rows are preserved exactly — screens before and after are equal
     * by the prune-safety rule (CompactionSpec-style assertion in
     * ScreenPruneSpec). The df sidecar's delta rows keep their batch_id
@@ -449,9 +449,8 @@ object Corpus {
       targetFileBytes)
   }
 
-  /** Heal a winnow table that predates the doc-keyed projection (or
-    * the file indexes): build them once from the table. No-op when
-    * present. */
+  /** Heal a winnow table that predates the doc-keyed projection: build
+    * it once from the table. No-op when present. */
   def ensureWinnowScreenIndex(spark: org.apache.spark.sql.SparkSession,
                               path: String): Unit = {
     import graft.sources.MaintainedIndex
@@ -463,9 +462,6 @@ object Corpus {
       MaintainedIndex.writeClusteredIndexed(
         spark.read.parquet(path).select(col("id"), col("h")).distinct(),
         winnowByIdPath(path), "id")
-    MaintainedIndex.ensureIndexed(spark, path, "h")
-    MaintainedIndex.ensureIndexed(spark, winnowDfStatePath(path), "h")
-    MaintainedIndex.ensureIndexed(spark, winnowByIdPath(path), "id")
   }
 
   /** The df-state sidecar of a winnow fingerprint table: an
@@ -610,8 +606,8 @@ object Corpus {
     *    meets the batch's (then candidates') hash sets. Pruning only
     *    drops files that contain NO probe key and every pruned read
     *    feeds an equi-semi-join on that key, so the rows are those of
-    *    the bulk DAG; crash windows degrade to reading more via
-    *    MaintainedIndex's unindexed-file rule, never to a false skip.
+    *    the bulk DAG; a file without usable footer statistics is
+    *    always read (MaintainedIndex's safety rule), never skipped.
     *    The probe-set collects are the screen's own broadcast sides
     *    read driver-side, bounded by the batch and its candidates;
     *    corpus rows never collect.
@@ -628,8 +624,6 @@ object Corpus {
       s"containment is in basis points 0..10000, got $minContainmentBp")
     import graft.sources.MaintainedIndex
     val spark = batchFps.sparkSession
-    // heal order matters: the df sidecar must exist before the index
-    // pass builds its envelope stats
     ensureWinnowDfState(spark, tablePath)
     ensureWinnowScreenIndex(spark, tablePath)
     val ownBatchId = replay.fold(Long.MaxValue)(_._2)

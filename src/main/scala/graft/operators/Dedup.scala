@@ -266,8 +266,8 @@ object Dedup {
 
   /** Compact a maintained signature table INTO `outPath` — re-clusters
     * the accumulated per-batch generations on doc_id into one (file
-    * count from bytes), rebuilds the stats index, and carries the
-    * shingle-size marker. Layout only; rows preserved exactly. */
+    * count from bytes) and carries the shingle-size marker. Layout
+    * only; rows preserved exactly. */
   def compactSignatureTable(spark: org.apache.spark.sql.SparkSession,
                             inPath: String, outPath: String,
                             targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
@@ -352,8 +352,8 @@ object Dedup {
       // scan. The prune engages only when the candidate set is smaller
       // than the table's file count (the micro-batch regime); bulk
       // screens with corpus-scale candidate sets read the table whole
-      // and skip the probe collect. Falls back to the whole table when
-      // the index is absent (pre-clustering tables) — correct either way.
+      // and skip the probe collect. Files whose footers carry no usable
+      // doc_id statistics are always read — correct either way.
       val nFiles = graft.sources.MaintainedIndex
         .dataFileCount(spark, sigTablePath)
       // small tables (≤ two task waves of files) read whole with zero

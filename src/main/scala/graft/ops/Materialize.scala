@@ -32,10 +32,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    local disks.
   *
   * Every materialization returns a [[Materialized]] handle whose
-  * `release()` frees the backing storage (unpersists blocks / deletes
-  * checkpoint or spill files). Operators that return a plain DataFrame
-  * use [[MatStrategy.Default]] so NO RDD blocks outlive the call —
-  * `sc.getPersistentRDDs` stays empty (asserted in LeakSpec).
+  * `release()` frees exactly the storage that call created: the blocks
+  * of the RDD behind the returned frame (Local), that RDD's checkpoint
+  * directory (Reliable) or the spill directory (Spill/Default). Each
+  * handle reaches its storage through its own frame, never through
+  * session-wide state, so no lock is needed: materializations on
+  * concurrent driver threads run concurrently and never release each
+  * other's storage. Caches the caller persisted upstream stay the
+  * caller's to unpersist. Operators that return a
+  * plain DataFrame use [[MatStrategy.Default]] so NO RDD blocks outlive
+  * the call — `sc.getPersistentRDDs` stays empty (asserted in LeakSpec).
   */
 sealed trait MatStrategy
 
@@ -80,14 +86,6 @@ final case class Materialized(df: DataFrame, release: () => Unit)
 object Materialize {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Guards the registry/listing diffs below: without it, two threads
-    * materializing on the same session would each capture the OTHER's
-    * newly-registered storage and release() could free a live peer.
-    * Materializations are coarse-grained (an eager checkpoint each), so
-    * serializing them costs little next to the work they pin.
-    */
-  private val trackingLock = new Object
 
   /** Default spill root per (JVM, default filesystem): a temp dir on
     * the session's `fs.defaultFS` so executor tasks of a real cluster
@@ -166,23 +164,25 @@ object Materialize {
     n
   }
 
-  /** `localCheckpoint` with release tracking. `eager = false` defers
+  /** The RDD a checkpointed frame reads: `checkpoint` and
+    * `localCheckpoint` return a frame over exactly one `LogicalRDD`,
+    * whose RDD owns the blocks (Local) or the checkpoint dir (Reliable).
+    */
+  private def checkpointRdd(out: DataFrame): org.apache.spark.rdd.RDD[_] =
+    out.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+
+  /** `localCheckpoint` with its release. `eager = false` defers
     * materialization to the FIRST ACTION the caller runs on the returned
     * frame (the blocks persist and the lineage truncates when that job
     * lands) — the fusion seam [[localWithScalar]] builds on.
     */
-  private def local(df: DataFrame, eager: Boolean): (Materialized, DataFrame) =
-    trackingLock.synchronized {
-      val sc = df.sparkSession.sparkContext
-      // localCheckpoint registers new persistent RDDs; diffing the
-      // registry before/after (under the lock) yields exactly the
-      // blocks this call created.
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(eager)
-      val ids = sc.getPersistentRDDs.keySet.diff(before)
-      (Materialized(out, () => ids.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))), out)
-    }
+  private def local(df: DataFrame, eager: Boolean): (Materialized, DataFrame) = {
+    val out = df.localCheckpoint(eager)
+    val rdd = checkpointRdd(out)
+    (Materialized(out, () => { rdd.unpersist(false); () }), out)
+  }
 
   /** Local materialization FUSED with a bounded one-row aggregate fetch:
     * the lazy localCheckpoint is materialized by the aggregate's own
@@ -215,28 +215,17 @@ object Materialize {
 
     case MatStrategy.Local => local(df, eager = true)._1
 
-    case MatStrategy.Reliable => trackingLock.synchronized {
-      val spark = df.sparkSession
-      val sc = spark.sparkContext
+    case MatStrategy.Reliable =>
+      val sc = df.sparkSession.sparkContext
       // reliable checkpoint needs a checkpoint dir; default to a local
       // temp one so tests/local runs work — production sets a DFS path.
       if (sc.getCheckpointDir.isEmpty)
         sc.setCheckpointDir(
           java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-      val ckptRoot = new Path(sc.getCheckpointDir.get)
-      val fs = ckptRoot.getFileSystem(sc.hadoopConfiguration)
-      // checkpoint files land under checkpointDir/rdd-<id>; diff the
-      // listing around the call (under the lock) to learn which dirs
-      // this one created
-      def rddDirs(): Set[String] =
-        if (!fs.exists(ckptRoot)) Set.empty
-        else fs.listStatus(ckptRoot).map(_.getPath.toString).toSet
-      val before = rddDirs()
       val out = df.checkpoint(true)
-      val created = rddDirs().diff(before)
-      Materialized(out, () =>
-        created.foreach(d => fs.delete(new Path(d), true)))
-    }
+      val dir = checkpointRdd(out).getCheckpointFile.map(new Path(_))
+      Materialized(out, () => dir.foreach { d =>
+        d.getFileSystem(sc.hadoopConfiguration).delete(d, true); () })
 
     case MatStrategy.Spill(root) => spill(df, root)._1
   }

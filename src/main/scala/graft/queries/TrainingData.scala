@@ -7250,7 +7250,7 @@ object TrainingData {
 
   // ------------------- the same screen against a COMPACTED table
   // Corpus.compactWinnowTable re-clusters a maintained table's append
-  // generations into one and rebuilds every stats index; this lane
+  // generations into one (fresh footers, fresh envelopes); this lane
   // certifies the whole lifecycle in the correctness gate: the
   // compacted copy must screen BIT-IDENTICALLY (same oracle as
   // x_quote_screen_pruned - compaction is layout, never content). The

@@ -1,10 +1,16 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnPath
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{ColumnOrder, LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
-/** Hash-clustered layout + per-file stats index for the MAINTAINED
+/** Hash-clustered layout + per-file key envelopes for the MAINTAINED
   * corpus tables (winnow fingerprints, df sidecar, signature table) —
   * the machinery that turns the continuous-ingest screens' per-batch
   * table reads from O(corpus) file IO into O(batch).
@@ -15,40 +21,33 @@ import org.apache.spark.sql.functions._
   *  - every write (initial or append) range-clusters its rows on the
   *    table's probe key, so each landed file covers a narrow key
   *    range — one clustered GENERATION per append;
-  *  - each landed file's [min, max] key envelope goes into a stats
-  *    sidecar (`_graft_fileidx_<key>/`, invisible to plain parquet
-  *    readers) under the SAME batch-named idempotence as the data, so
-  *    a replayed batch rewrites its own stats rows exactly like its
-  *    own data files;
+  *  - each data file's [min, max] key envelope is read from its OWN
+  *    parquet footer (the row-group statistics Spark's row-group filter
+  *    pushdown trusts), so appends write nothing beside the data;
   *  - a screen with a bounded probe-key set opens ONLY the files whose
   *    envelope intersects it ([[readPruned]]). With uniform hash keys
   *    the surviving file count is min(|probes|, |files|): bounded by
   *    the batch, never the corpus — the asymptotic that makes a
   *    100 TB maintained table affordable to probe per micro-batch.
   *
-  * SAFETY RULE (what makes pruning always-correct): a data file with
-  * no live stats row is ALWAYS read, and a stats row whose file no
-  * longer exists is ignored. Every crash window therefore degrades to
-  * reading more, never to a false skip: data landed / stats lost →
-  * unindexed, read; stats landed / data rolled back → ignored;
-  * pre-existing tables with no index at all → full read, exactly
-  * today's behavior. CurateRestartSpec's replay windows exercise this
-  * through the loop; ScreenPruneSpec pins equality and the file-count
-  * collapse directly.
+  * SAFETY RULE (what makes pruning always-correct): the envelope comes
+  * from the file's own footer, so it can never disagree with the file,
+  * and a file without usable statistics — a row group holding keys but
+  * lacking min/max, or a key type other than byte/short/int/long/string
+  * — has no envelope and is ALWAYS read. A crash between data and
+  * metadata cannot exist; tables written before clustering (or by a
+  * foreign writer) prune only as far as their footers allow.
+  * CurateRestartSpec's replay windows exercise this through the loop;
+  * ScreenPruneSpec pins equality and the file-count collapse directly.
   *
   * The probe set crosses to the driver ([[readPruned]] takes an
   * in-memory array): that is NOT new data movement — every caller
   * already ships the same bounded relation to executors as a broadcast
   * (the screens' semi-join sides), and a broadcast stages through the
-  * driver anyway. The stats relation itself is metadata-plane:
-  * O(#files) rows, the same order as the FileIndex every Spark scan
-  * holds driver-side.
+  * driver anyway. The envelopes are metadata-plane: O(#files) values,
+  * the same order as the FileIndex every Spark scan holds driver-side.
   */
 object MaintainedIndex {
-
-  /** Where the per-file stats for `keyCol` of the table at `dir` live. */
-  def indexDir(dir: String, keyCol: String): String =
-    new Path(dir, s"_graft_fileidx_$keyCol").toString
 
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
@@ -65,24 +64,21 @@ object MaintainedIndex {
     dataFiles(fs, p).size
   }
 
-  /** Visible data files (basenames) of a parquet directory — the same
-    * filter Spark's own listing applies (no underscore/dot names). */
-  private def dataFiles(fs: FileSystem, dir: Path): Seq[String] =
+  /** Visible data files of a parquet directory — the same filter
+    * Spark's own listing applies (no underscore/dot names). */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
         !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
-      .map(_.getPath.getName)
 
   /** Deterministic batch-named append (the curate loop's commit
     * primitive, hoisted from StreamingOps so every maintained artifact
     * shares it): stage-write, delete any stale files of the SAME
-    * prefix (a crashed attempt's leftovers), rename into place.
-    * Returns the FULL PATHS of the landed files, so callers can index
-    * exactly what landed without re-listing. */
+    * prefix (a crashed attempt's leftovers), rename into place. */
   def idempotentAppend(df: DataFrame, dir: String,
-                       prefix: String): Seq[String] = {
+                       prefix: String): Unit = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf)
@@ -94,43 +90,26 @@ object MaintainedIndex {
       fs.listStatus(dirPath)
         .filter(s => s.isFile && s.getPath.getName.startsWith(prefix))
         .foreach(s => fs.delete(s.getPath, false))
-    val landed = fs.listStatus(tmp).map(_.getPath)
+    fs.listStatus(tmp).map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.map { case (p, i) =>
-        val dst = new Path(dirPath, s"$prefix$i.parquet")
-        fs.rename(p, dst)
-        dst.toString
-      }.toSeq
+      .zipWithIndex.foreach { case (p, i) =>
+        fs.rename(p, new Path(dirPath, s"$prefix$i.parquet"))
+      }
     fs.delete(tmp, true)
-    landed
+    ()
   }
-
-  /** Per-file (file, lo, hi, n_rows) stats over exactly `files` — the
-    * post-append index rows. One column-pruned scan of the new files
-    * (O(batch)); `_metadata.file_path` is the constant-per-split
-    * metadata column, no UDF, no extra IO. */
-  private def statsFor(spark: SparkSession, files: Seq[String],
-                       keyCol: String): DataFrame =
-    spark.read.parquet(files: _*)
-      .select(col(keyCol), col("_metadata.file_path").as("__fp"))
-      .groupBy(expr("element_at(split(__fp, '/'), -1)").as("file"))
-      .agg(min(col(keyCol)).as("lo"), max(col(keyCol)).as("hi"),
-        count(lit(1)).as("n_rows"))
 
   /** [[idempotentAppend]] of a batch CLUSTERED on `keyCol` (range
     * partition + in-file sort — each landed file covers a narrow key
-    * range), followed by the stats append for the landed files under
-    * the same prefix. The extra cost per batch is one O(batch) range
-    * shuffle and one O(batch) column-pruned re-read for the envelopes.
-    */
+    * range whose envelope its footer records). The extra cost per
+    * batch is one O(batch) range shuffle. */
   def clusteredIdempotentAppend(df: DataFrame, dir: String, prefix: String,
                                 keyCol: String): Unit = {
     val spark = df.sparkSession
     // SCALE-ADAPTIVE file count (guide §6): the session's shuffle
     // width is a parallelism knob, not a file-sizing one. At local[32]
     // a micro-batch append range-partitioned into 32 landed 32 sliver
-    // files PER ARTIFACT per batch (and the post-append stats pass
-    // then re-read 32 footers); at 100 TB a fixed 32 would make
+    // files PER ARTIFACT per batch; at 100 TB a fixed 32 would make
     // multi-GB files. Plan the range-partition count from the
     // optimizer's size estimate of the batch against a target file
     // size (conf `graft.append.targetFileBytes`; the estimate is
@@ -148,29 +127,13 @@ object MaintainedIndex {
       .getOrElse(BigInt(maxParts))
     val parts =
       if (estParts >= maxParts) maxParts else math.max(1, estParts.toInt)
-    val landed = idempotentAppend(
+    idempotentAppend(
       df.repartitionByRange(parts, col(keyCol))
         .sortWithinPartitions(col(keyCol)),
       dir, prefix)
-    if (landed.nonEmpty) {
-      idempotentAppend(statsFor(spark, landed, keyCol),
-        indexDir(dir, keyCol), prefix)
-      ()
-    } else {
-      // an empty batch landed no data: clear any stale stats of a
-      // crashed attempt that DID land files (the data delete already
-      // ran inside idempotentAppend; mirror it for stats)
-      val (fs, _) = fsOf(spark, dir)
-      val idx = new Path(indexDir(dir, keyCol))
-      if (fs.exists(idx))
-        fs.listStatus(idx)
-          .filter(s => s.isFile && s.getPath.getName.startsWith(prefix))
-          .foreach(s => fs.delete(s.getPath, false))
-      ()
-    }
   }
 
-  /** Initial clustered write (overwrite) + full stats build. */
+  /** Initial clustered write (overwrite). */
   def writeClusteredIndexed(df: DataFrame, dir: String,
                             keyCol: String): Unit =
     writeClusteredIndexed(df, dir, keyCol,
@@ -180,13 +143,10 @@ object MaintainedIndex {
     * compaction form (file count planned from bytes, not from the
     * session's shuffle width). */
   def writeClusteredIndexed(df: DataFrame, dir: String, keyCol: String,
-                            partitions: Int): Unit = {
-    val spark = df.sparkSession
+                            partitions: Int): Unit =
     df.repartitionByRange(math.max(1, partitions), col(keyCol))
       .sortWithinPartitions(col(keyCol))
       .write.mode("overwrite").parquet(dir)
-    rebuildStats(spark, dir, keyCol)
-  }
 
   /** Compact a maintained clustered table: every append leaves its own
     * generation of narrow-envelope files, and the pruned reads' bound
@@ -196,9 +156,9 @@ object MaintainedIndex {
     * resetting the bound to kept ≤ probes and restoring large sorted
     * files. Lands in `outPath` (never in place — a mid-write failure
     * must not destroy the input; publish via rename or
-    * [[graft.sources.Versioned]]) with a freshly built stats index.
-    * Unlike [[Compaction.compact]] this pays one range shuffle — that
-    * IS the re-clustering; row content is preserved exactly. */
+    * [[graft.sources.Versioned]]). Unlike [[Compaction.compact]] this
+    * pays one range shuffle — that IS the re-clustering; row content is
+    * preserved exactly. */
   def compactClusteredIndexed(spark: SparkSession, inPath: String,
                               outPath: String, keyCol: String,
                               targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
@@ -208,125 +168,150 @@ object MaintainedIndex {
     (nIn, nOut)
   }
 
-  /** Rebuild the whole stats index from the table (one column-pruned
-    * scan) — initial writes and healing of pre-index tables. */
-  def rebuildStats(spark: SparkSession, dir: String,
-                   keyCol: String): Unit = {
-    val (fs, dirPath) = fsOf(spark, dir)
-    val files = dataFiles(fs, dirPath).map(n => new Path(dirPath, n).toString)
-    if (files.nonEmpty)
-      statsFor(spark, files, keyCol)
-        .write.mode("overwrite").parquet(indexDir(dir, keyCol))
-    ()
+  // ----------------------------------------------------- file envelopes
+
+  /** Driver-side ordering for envelope probing. Integral values widen
+    * to Long; strings compare as their UTF-8 bytes, unsigned — both
+    * UTF8String's order and the parquet footer's (Java's UTF-16
+    * compareTo would differ above the BMP and could FALSE-SKIP). Any
+    * other value is unorderable (null). */
+  private def orderable(v: Any): Any = v match {
+    case l: java.lang.Long => l
+    case i: java.lang.Integer => i.longValue(): java.lang.Long
+    case s: java.lang.Short => s.longValue(): java.lang.Long
+    case b: java.lang.Byte => b.longValue(): java.lang.Long
+    case s: String => s.getBytes("UTF-8")
+    case _ => null
   }
 
-  /** Heal a table that predates its index: build the stats sidecar
-    * once if absent. No-op when index files exist. Pruning remains
-    * CORRECT either way (no index → every file reads); this only buys
-    * the skip. */
-  def ensureIndexed(spark: SparkSession, dir: String,
-                    keyCol: String): Unit = {
-    val (fs, _) = fsOf(spark, dir)
-    val idx = new Path(indexDir(dir, keyCol))
-    val hasIdx = fs.exists(idx) && fs.listStatus(idx)
-      .exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (!hasIdx) rebuildStats(spark, dir, keyCol)
-    ()
+  private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
+    case (x: java.lang.Long, y: java.lang.Long) =>
+      Some(java.lang.Long.compare(x, y))
+    case (x: Array[Byte], y: Array[Byte]) =>
+      Some(java.util.Arrays.compareUnsigned(x, y))
+    case _ => None
+  }
+
+  /** A data file's identity for the envelope cache: a rewrite under
+    * the same name changes its length or mtime. */
+  private[graft] final case class FileKey(name: String, len: Long,
+                                          mtime: Long)
+
+  /** Driver cache of footer envelopes per (table dir, key column),
+    * each entry pruned to the table's current listing on every probe —
+    * a screen probes the same tables 2-4 times per micro-batch, and an
+    * append adds new keys without invalidating the old ones, so only
+    * the new files' footers are read. Bounded by the maintained tables'
+    * live files. `None` = no usable statistics (always read). */
+  private[graft] val envelopeCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), Map[FileKey, Option[(Any, Any)]]]
+
+  /** A footer min/max in [[orderable]] form (strings are Binary). */
+  private def statValue(v: Any): Any = v match {
+    case b: org.apache.parquet.io.api.Binary => b.getBytes
+    case other => orderable(other)
+  }
+
+  /** [lo, hi] of `keyCol` over the row groups of one parquet footer,
+    * normalized by [[orderable]] — or None when any row group holding
+    * keys lacks min/max, the file holds no non-null key, or the key is
+    * not a top-level byte/short/int/long/string column with
+    * type-defined ordering. */
+  private def footerEnvelope(conf: Configuration, file: FileStatus,
+                             keyCol: String): Option[(Any, Any)] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    val schema = footer.getFileMetaData.getSchema
+    if (!schema.containsField(keyCol)) return None
+    val t = schema.getType(schema.getFieldIndex(keyCol))
+    if (!t.isPrimitive) return None
+    val pt = t.asPrimitiveType()
+    val intAnn = Option(pt.getLogicalTypeAnnotation).forall {
+      case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+      case _ => false
+    }
+    val supported = pt.columnOrder() == ColumnOrder.typeDefined() && (
+      pt.getPrimitiveTypeName match {
+        case PrimitiveType.PrimitiveTypeName.INT32 |
+             PrimitiveType.PrimitiveTypeName.INT64 => intAnn
+        case PrimitiveType.PrimitiveTypeName.BINARY =>
+          pt.getLogicalTypeAnnotation ==
+            LogicalTypeAnnotation.stringType()
+        case _ => false
+      })
+    if (!supported) return None
+    val path = ColumnPath.get(keyCol)
+    var env: Option[(Any, Any)] = None
+    val blocks = footer.getBlocks.iterator()
+    while (blocks.hasNext) {
+      val chunks = blocks.next().getColumns.iterator()
+      while (chunks.hasNext) {
+        val c = chunks.next()
+        if (c.getPath == path && c.getValueCount > 0) {
+          val st: org.apache.parquet.column.statistics.Statistics[_] =
+            c.getStatistics
+          val allNull = st != null && st.isNumNullsSet &&
+            st.getNumNulls == c.getValueCount
+          if (st == null || (!st.hasNonNullValue && !allNull)) return None
+          if (st.hasNonNullValue) {
+            val lo = statValue(st.genericGetMin)
+            val hi = statValue(st.genericGetMax)
+            env = Some(env.fold((lo, hi)) { case (plo, phi) =>
+              (if (cmp(lo, plo).exists(_ < 0)) lo else plo,
+                if (cmp(hi, phi).exists(_ > 0)) hi else phi)
+            })
+          }
+        }
+      }
+    }
+    env
+  }
+
+  /** Envelopes of every listed file of `dirPath`: cached ones reused,
+    * the rest read from their footers in ONE Spark job (parallel over
+    * files, so a cold 10⁵-file table reads at cluster speed). */
+  private def envelopes(spark: SparkSession, dirPath: Path,
+                        listing: Seq[FileStatus],
+                        keyCol: String): Map[String, Option[(Any, Any)]] = {
+    val cacheKey = (dirPath.toString, keyCol)
+    val keys = listing.map(s =>
+      FileKey(s.getPath.getName, s.getLen, s.getModificationTime))
+    val cached = Option(envelopeCache.get(cacheKey)).getOrElse(Map.empty)
+    val missing = keys.filterNot(cached.contains)
+    val read =
+      if (missing.isEmpty) Map.empty[FileKey, Option[(Any, Any)]]
+      else {
+        val sc = spark.sparkContext
+        val conf = new SerializableConfiguration(sc.hadoopConfiguration)
+        val base = dirPath.toString
+        sc.parallelize(missing, math.min(missing.size, sc.defaultParallelism))
+          .map(k => k -> footerEnvelope(conf.value,
+            new FileStatus(k.len, false, 0, 0, k.mtime, new Path(base, k.name)),
+            keyCol))
+          .collect().toMap
+      }
+    val current = keys.map(k => k -> cached.getOrElse(k, read(k))).toMap
+    envelopeCache.put(cacheKey, current)
+    current.map { case (k, e) => k.name -> e }
   }
 
   // ----------------------------------------------------- pruned reads
 
-  /** Spark-compatible orderings for envelope probing, driver-side.
-    * Integral types widen to Long; strings compare on unsigned UTF-8
-    * bytes (UTF8String's binary order — Java's UTF-16 compareTo would
-    * differ above the BMP and could FALSE-SKIP). Unsupported key types
-    * return None → the caller reads everything (correct, unpruned). */
-  private def norm(v: Any): Any = v match {
-    case i: java.lang.Integer => i.longValue(): java.lang.Long
-    case s: java.lang.Short => s.longValue(): java.lang.Long
-    case b: java.lang.Byte => b.longValue(): java.lang.Long
-    case f: java.lang.Float => f.doubleValue(): java.lang.Double
-    case other => other
-  }
-
-  private def cmp(a: Any, b: Any): Option[Int] = (norm(a), norm(b)) match {
-    case (x: java.lang.Long, y: java.lang.Long) =>
-      Some(java.lang.Long.compare(x, y))
-    case (x: java.lang.Double, y: java.lang.Double) =>
-      Some(java.lang.Double.compare(x, y))
-    case (x: String, y: String) =>
-      val xa = x.getBytes("UTF-8"); val ya = y.getBytes("UTF-8")
-      val n = math.min(xa.length, ya.length)
-      var i = 0
-      while (i < n) {
-        val d = (xa(i) & 0xff) - (ya(i) & 0xff)
-        if (d != 0) return Some(d)
-        i += 1
-      }
-      Some(xa.length - ya.length)
-    case _ => None
-  }
-
-  /** Driver-side stats cache: the per-file envelope relation is
-    * metadata-plane (O(#files) rows) but reading it is a Spark job,
-    * and a screen probes the same index 2-4 times per micro-batch.
-    * Entries key on the index directory and validate against the
-    * LISTING SIGNATURE (names + lengths + mtimes of the index files),
-    * so an append — which lands new stats files — invalidates exactly
-    * the tables it touched. Bounded by the number of maintained
-    * tables in the JVM. */
-  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[org.apache.spark.sql.Row])]
-
   /** The file-selection core, test-visible: (files to read, all live
-    * data files). A file survives iff it is unindexed OR its [lo, hi]
-    * envelope contains at least one probe. None = no pruning possible
-    * (unsupported key type or unreadable index) → read everything. */
+    * data files). A file survives iff it has no envelope OR its
+    * [lo, hi] envelope contains at least one probe. An unorderable
+    * probe (type outside [[orderable]]) reads everything. */
   private[graft] def pruneFiles(spark: SparkSession, dir: String,
                                 keyCol: String,
                                 probes: Array[Any]): (Seq[String], Seq[String]) = {
     val (fs, dirPath) = fsOf(spark, dir)
-    val all = dataFiles(fs, dirPath)
-    val idx = new Path(indexDir(dir, keyCol))
-    val idxFiles =
-      if (!fs.exists(idx)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(idx)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (idxFiles.isEmpty || all.isEmpty) return (all, all)
-    val listingSig = idxFiles.sortBy(_.getPath.getName)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .mkString("|")
-    val cachedEntry = statsCache.get(idx.toString)
-    val stats =
-      if (cachedEntry != null && cachedEntry._1 == listingSig) cachedEntry._2
-      else {
-        val statsTry = scala.util.Try {
-          spark.read.parquet(idx.toString)
-            .select(col("file"), col("lo"), col("hi")).collect()
-        }
-        if (statsTry.isFailure) return (all, all)
-        statsCache.put(idx.toString, (listingSig, statsTry.get))
-        statsTry.get
-      }
-    // conservative merge if a file ever has two rows: widest envelope
-    val env = new scala.collection.mutable.HashMap[String, (Any, Any)]
-    stats.foreach { r =>
-      val f = r.getString(0); val lo = r.get(1); val hi = r.get(2)
-      env.get(f) match {
-        case None => env(f) = (lo, hi)
-        case Some((plo, phi)) =>
-          val nlo = if (plo == null || lo == null) null
-            else if (cmp(lo, plo).exists(_ < 0)) lo else plo
-          val nhi = if (phi == null || hi == null) null
-            else if (cmp(hi, phi).exists(_ > 0)) hi else phi
-          env(f) = (nlo, nhi)
-      }
-    }
-    val ps = probes.filter(_ != null)
-    if (ps.isEmpty) {
-      // null probes match nothing; files with stats can all skip
-      return (all.filter(f => !env.contains(f)), all)
-    }
+    val listing = dataFiles(fs, dirPath)
+    val all = listing.map(_.getPath.getName)
+    val ps = probes.filter(_ != null).map(orderable)
+    if (all.isEmpty || ps.contains(null)) return (all, all)
+    val env = envelopes(spark, dirPath, listing, keyCol)
+    // null probes match nothing; files with envelopes can all skip
+    if (ps.isEmpty) return (all.filter(f => env(f).isEmpty), all)
     // sort probes once; bail to unpruned on any uncomparable pair
     val sorted =
       try ps.sortWith((a, b) => cmp(a, b) match {
@@ -335,7 +320,6 @@ object MaintainedIndex {
       })
       catch { case _: IllegalArgumentException => return (all, all) }
     def anyProbeIn(lo: Any, hi: Any): Boolean = {
-      if (lo == null || hi == null) return true // degrade to read
       // binary search: smallest probe >= lo, then check <= hi
       var a = 0; var b = sorted.length
       while (a < b) {
@@ -343,24 +327,21 @@ object MaintainedIndex {
         cmp(sorted(m), lo) match {
           case Some(c) if c < 0 => a = m + 1
           case Some(_) => b = m
-          case None => return true // uncomparable: degrade to read
+          case None => return true // probe/key type mismatch: read
         }
       }
       a < sorted.length && cmp(sorted(a), hi).forall(_ <= 0)
     }
-    val kept = all.filter { f =>
-      env.get(f) match {
-        case None => true // unindexed (crash window / foreign writer)
-        case Some((lo, hi)) => anyProbeIn(lo, hi)
-      }
-    }
+    val kept = all.filter(f => env(f).forall { case (lo, hi) =>
+      anyProbeIn(lo, hi) })
     (kept, all)
   }
 
   /** Probe-pruned table read: rows of files whose key envelope may
-    * contain a probe, plus every unindexed file — a SUPERSET of the
-    * rows matching the probe set, so any downstream equi-semi-join on
-    * the key gives results identical to reading the whole table. */
+    * contain a probe, plus every file without an envelope — a SUPERSET
+    * of the rows matching the probe set, so any downstream
+    * equi-semi-join on the key gives results identical to reading the
+    * whole table. */
   def readPruned(spark: SparkSession, dir: String, keyCol: String,
                  probes: Array[Any]): DataFrame =
     readPrunedWithInfo(spark, dir, keyCol, probes)._1

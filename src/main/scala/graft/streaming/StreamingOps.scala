@@ -391,13 +391,12 @@ object StreamingOps {
     // every micro-batch after reads maintained state only
     winnowTablePath.foreach(p =>
       graft.operators.Corpus.ensureWinnowDfState(src.sparkSession, p))
-    // likewise the screen indexes: the doc-keyed projection + per-file
-    // envelopes heal ONCE for pre-index tables, then every micro-batch
-    // probe is a file-pruned read (O(batch) IO, never O(corpus))
+    // likewise the doc-keyed projection heals ONCE for pre-projection
+    // tables; per-file envelopes come from the data files' own footers,
+    // so every micro-batch probe is a file-pruned read (O(batch) IO,
+    // never O(corpus)) with nothing to heal
     winnowTablePath.foreach(p =>
       graft.operators.Corpus.ensureWinnowScreenIndex(src.sparkSession, p))
-    graft.sources.MaintainedIndex.ensureIndexed(
-      src.sparkSession, sigTablePath, "doc_id")
     val q = src.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -441,8 +440,11 @@ object StreamingOps {
             // from two driver threads and their jobs OVERLAP (guide
             // §2.6: each screen's stage tails leave most of the
             // machine idle; the other screen's stages back-fill it).
-            // Both handles are captured before either failure
-            // re-throws, so the finally releases whatever landed.
+            // Materialize takes no lock, and each handle releases only
+            // the blocks its own call created, so neither screen waits
+            // on the other or frees the other's result. Both handles
+            // are captured before either failure re-throws, so the
+            // finally releases whatever landed.
             import scala.concurrent.{Await, Future}
             import scala.concurrent.ExecutionContext.Implicits.global
             import scala.concurrent.duration.Duration
@@ -496,12 +498,16 @@ object StreamingOps {
                 .select(col(idCol)))
             // MATERIALIZED once (id-only, KB-scale): dupIds feeds three
             // anti-joins (admits, signatures, fingerprints) — left lazy,
-            // each would re-run the whole screen DAG per sink
+            // each would re-run the whole screen DAG per sink. It is a
+            // subset of the batch's ids (already broadcast as `own`), so
+            // each anti-join broadcasts it: the checkpoint's size
+            // estimate is unknown, and unhinted they plan as sort-merge
+            // joins with two extra shuffle stages apiece
             dupIdsM = graft.ops.Materialize(
               (Seq(lshDup) ++ quoteDup ++ policyDup)
                 .reduce(_ unionByName _).distinct(),
               graft.ops.MatStrategy.Local)
-            val dupIds = dupIdsM.df
+            val dupIds = broadcast(dupIdsM.df)
             // survivors / survivorSigs are each one cheap anti-join off
             // materialized inputs (screen spilled, signatures persisted)
             val survivors = batch.join(dupIds, Seq(idCol), "left_anti")
@@ -517,10 +523,10 @@ object StreamingOps {
             val fAdm = Future(
               graft.sources.MaintainedIndex.idempotentAppend(
                 survivors, admittedDir, s"b${batchId}_"))
-            // maintained-table appends are CLUSTERED + INDEXED (their
-            // own generation of narrow-envelope files + stats rows
-            // under the same batch-named idempotence), so the NEXT
-            // batch's screens prune against them too
+            // maintained-table appends are CLUSTERED (their own
+            // generation of narrow-envelope files under the same
+            // batch-named idempotence), so the NEXT batch's screens
+            // prune against their footers too
             val fSig = Future(
               graft.sources.MaintainedIndex.clusteredIdempotentAppend(
                 survivorSigs, sigTablePath, s"b${batchId}_sig_",
@@ -622,7 +628,6 @@ object StreamingOps {
           graft.operators.Similarity
             .ivfSqTopKFromIndex(batch, idCol, vecCol, indexPath, k, nprobe),
           outDir, s"b${batchId}_")
-        ()
       }
       .start()
     q.processAllAvailable()
@@ -662,7 +667,6 @@ object StreamingOps {
           graft.operators.Selection
             .scoreWithModel(batch, textCol, idCol, model, n, buckets),
           outDir, s"b${batchId}_")
-        ()
       }
       .start()
     q.processAllAvailable()

@@ -126,4 +126,53 @@ class LeakSpec extends SparkSpec {
     m.release()
     assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty)
   }
+
+  test("continuousCurate with both screens and a blocklist leaves no " +
+    "persistent RDD blocks") {
+    val session = spark
+    import session.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft_leak_curate")
+      .toFile
+    def path(n: String) = new java.io.File(root, n).toString
+    def text(i: Long) = (1 to 24).map(j => s"w${i}t$j").mkString(" ")
+    val corpus = (0L until 30L).map(i => (i, text(i))).toDF("doc_id", "text")
+    // many files per artifact (> 2 x shuffle width): the quote screen
+    // takes its file-pruned regime and its held persists
+    withSQLConf("spark.sql.shuffle.partitions" -> "16",
+      "graft.append.targetFileBytes" -> "1") {
+      Dedup.writeSignatureTable(corpus, "text", "doc_id", path("sigs"))
+      graft.operators.Corpus.writeWinnowTable(
+        corpus, "text", "doc_id", path("fps"))
+    }
+    val srcDir = new java.io.File(root, "src"); srcDir.mkdirs()
+    val batches = Seq(
+      Seq((100L, text(3)), // exact copy: LSH reject
+        (101L, text(5).split(" ").slice(4, 16).mkString(" ")), // quote
+        (102L, "fresh words only here " + text(900)),
+        (103L, text(901) + " qzxspam")), // blocked
+      Seq((200L, text(902)), // quote of batch 0's admitted 102:
+        (201L, text(900).split(" ").take(12).mkString(" "))))
+    batches.zipWithIndex.foreach { case (rows, i) =>
+      val tmp = path(s"tmp$i")
+      rows.toDF("doc_id", "text").coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(srcDir, s"b$i.parquet")
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      dst.setLastModified(1000000000000L + i * 60000L)
+    }
+    val src = spark.readStream.schema(corpus.schema)
+      .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
+    val leaked = leakedBlocks {
+      graft.streaming.StreamingOps.continuousCurate(src, path("sigs"),
+        path("admitted"), "text", "doc_id",
+        winnowTablePath = path("fps"), blocklist = Seq("qzxspam"))
+    }
+    assert(leaked.isEmpty, s"leaked RDD blocks: $leaked")
+    val admitted = spark.read.parquet(path("admitted"))
+      .select(col("doc_id")).as[Long].collect().toSet
+    assert(admitted == Set(102L, 200L),
+      s"expected the screens to admit {102, 200}, got $admitted")
+  }
 }

@@ -41,6 +41,37 @@ class MaterializeSpec extends SparkSpec {
       "release must delete the rdd checkpoint dirs it created")
   }
 
+  test("two Local materializations on two threads run concurrently and " +
+    "each release frees only its own blocks") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    MaterializeSpec.latch = new java.util.concurrent.CountDownLatch(2)
+    // each frame's one task counts down, then waits for the other's:
+    // both see `true` only if the two materializations run at once
+    val meet = udf { (_: Long) =>
+      val l = MaterializeSpec.latch
+      l.countDown()
+      l.await(20, java.util.concurrent.TimeUnit.SECONDS)
+    }.asNondeterministic()
+    def frame(tag: Long) =
+      spark.range(tag, tag + 1, 1, 1).select(col("id"), meet(col("id")).as("met"))
+    val fs = Seq(1L, 2L).map(t => Future(Materialize(frame(t), MatStrategy.Local)))
+    val Seq(m1, m2) = fs.map(Await.result(_, 2.minutes))
+    assert(m1.df.collect().head.getBoolean(1) &&
+      m2.df.collect().head.getBoolean(1),
+      "the two materializations did not overlap")
+    assert(sc.getPersistentRDDs.keySet.diff(before).size == 2)
+    m1.release()
+    assert(sc.getPersistentRDDs.keySet.diff(before).size == 1)
+    assert(m2.df.collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq ==
+      Seq((2L, true)), "releasing one handle freed the other's blocks")
+    m2.release()
+    assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty)
+  }
+
   test("Spill round-trips rows+schema through parquet; release deletes files") {
     val root = java.nio.file.Files.createTempDirectory("graft_mat").toString
     val src = df.withColumn("d", col("id").cast("double"))
@@ -77,4 +108,10 @@ class MaterializeSpec extends SparkSpec {
       empty.schema.fields.map(f => (f.name, f.dataType)).toSeq)
     m.release()
   }
+}
+
+object MaterializeSpec {
+  /** Shared by the concurrency test's UDF: tasks run in this JVM
+    * (local master), so the closure reads the live latch, not a copy. */
+  @volatile var latch: java.util.concurrent.CountDownLatch = _
 }

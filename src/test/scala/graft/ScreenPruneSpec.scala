@@ -11,9 +11,8 @@ import graft.sources.MaintainedIndex
   * batch's bounded probe sets — per-batch read IO O(batch), never
   * O(corpus). These tests pin (1) the file-count collapse on a
   * multi-file table, (2) bit-identical results vs the one-shot
-  * reference screen, (3) the safety rule that every degraded state
-  * (missing index, stale stats, pre-index tables) reads MORE, never
-  * less.
+  * reference screen, (3) the footer envelopes themselves and the safety
+  * rule that a file without usable statistics reads, never skips.
   */
 class ScreenPruneSpec extends SparkSpec {
   import spark.implicits._
@@ -64,46 +63,161 @@ class ScreenPruneSpec extends SparkSpec {
       .count() == 0)
   }
 
-  test("safety rule: unindexed files always read; stale stats rows " +
-    "(deleted files) ignored; missing index = full read") {
-    val dir = tmpDir("safety")
+  /** The footer envelopes of `dir`'s listed files, as the prune's
+    * driver cache holds them after one probe. */
+  private def envelopesOf(dir: String, keyCol: String)
+      : Map[MaintainedIndex.FileKey, Option[(Any, Any)]] = {
+    MaintainedIndex.pruneFiles(spark, dir, keyCol, Array(0L))
+    MaintainedIndex.envelopeCache.get(
+      (new org.apache.hadoop.fs.Path(dir).toString, keyCol))
+  }
+
+  /** Per-file (min, max) of `keyCol` read back through Spark. */
+  private def sparkMinMax(dir: String, keyCol: String): Map[String, (Any, Any)] =
+    spark.read.parquet(dir)
+      .groupBy(expr("element_at(split(_metadata.file_path, '/'), -1)"))
+      .agg(min(col(keyCol)), max(col(keyCol)))
+      .collect().map(r => r.getString(0) -> (r.get(1), r.get(2))).toMap
+
+  test("(a) every landed file's footer envelope equals the min/max of its " +
+    "key read back through Spark: long and multi-byte UTF-8 string keys") {
+    val longDir = tmpDir("env_long")
+    val strDir = tmpDir("env_str")
+    // U+FF61 sorts BELOW U+1F600 in UTF-8 bytes but ABOVE it in UTF-16
+    // code units: an envelope built in Java string order would be wrong
+    val strKeys = (0 until 300).map(i => Seq("k", "é", "日本", "\uFF61",
+      "\uD83D\uDE00")(i % 5) + f"$i%03d")
+    withSQLConf("spark.sql.shuffle.partitions" -> "8",
+      "graft.append.targetFileBytes" -> "1") {
+      MaintainedIndex.writeClusteredIndexed(
+        (0L until 800L).map(i => (i * 7919L % 1000L, i)).toDF("h", "v"),
+        longDir, "h")
+      MaintainedIndex.clusteredIdempotentAppend(
+        (800L until 900L).map(i => (i, i)).toDF("h", "v"),
+        longDir, "b1_", "h")
+      MaintainedIndex.writeClusteredIndexed(
+        strKeys.take(200).map(k => (k, 1L)).toDF("k", "v"), strDir, "k")
+      MaintainedIndex.clusteredIdempotentAppend(
+        strKeys.drop(200).map(k => (k, 2L)).toDF("k", "v"),
+        strDir, "b1_", "k")
+    }
+    val longEnv = envelopesOf(longDir, "h")
+    val longTruth = sparkMinMax(longDir, "h")
+    assert(longEnv.size >= 8 && longEnv.keys.map(_.name).toSet ==
+      longTruth.keySet)
+    longEnv.foreach { case (f, e) =>
+      assert(e == Some(longTruth(f.name)), s"${f.name}: $e")
+    }
+    val strEnv = envelopesOf(strDir, "k")
+    val strTruth = sparkMinMax(strDir, "k")
+    assert(strEnv.size >= 8 && strEnv.keys.map(_.name).toSet ==
+      strTruth.keySet)
+    strEnv.foreach { case (f, e) =>
+      val (lo, hi) = e.getOrElse(fail(s"${f.name} has no envelope"))
+      val (tlo, thi) = strTruth(f.name)
+      assert(lo.asInstanceOf[Array[Byte]].sameElements(
+        tlo.toString.getBytes("UTF-8")), s"${f.name} lo")
+      assert(hi.asInstanceOf[Array[Byte]].sameElements(
+        thi.toString.getBytes("UTF-8")), s"${f.name} hi")
+    }
+    // and the string prune keeps every file holding a probe
+    val probes = Seq(strKeys(3), strKeys(4), strKeys(251))
+    val (kept, all) = MaintainedIndex.pruneFiles(spark, strDir, "k",
+      probes.toArray[Any])
+    assert(kept.size < all.size, s"kept ${kept.size} of ${all.size}")
+    val full = spark.read.parquet(strDir).where(col("k").isin(probes: _*))
+      .collect().map(_.toString).sorted.toSeq
+    val pruned = MaintainedIndex.readPruned(spark, strDir, "k",
+      probes.toArray[Any]).where(col("k").isin(probes: _*))
+      .collect().map(_.toString).sorted.toSeq
+    assert(pruned.size == 3 && pruned == full)
+  }
+
+  test("(b) a file appended without column statistics has no envelope, " +
+    "is always kept, and the pruned read equals the full read") {
+    val dir = tmpDir("nostats")
     withSQLConf("spark.sql.shuffle.partitions" -> "8") {
       MaintainedIndex.writeClusteredIndexed(
         (0L until 800L).map(i => (i, i)).toDF("h", "v"), dir, "h")
-      MaintainedIndex.clusteredIdempotentAppend(
-        (800L until 900L).map(i => (i, i)).toDF("h", "v"),
-        dir, "bx_", "h")
     }
+    val before = MaintainedIndex.dataFileCount(spark, dir)
+    (800L until 900L).map(i => (i, i)).toDF("h", "v").coalesce(1)
+      .write.option("parquet.column.statistics.enabled", "false")
+      .mode("append").parquet(dir)
+    val env = envelopesOf(dir, "h")
+    assert(env.size == before + 1)
+    val bare = env.collect { case (f, None) => f.name }.toSeq
+    assert(bare.size == 1, s"expected one stats-less file, got $bare")
+    for (probe <- Seq(850L, 5L, 999999L)) {
+      val (kept, all) = MaintainedIndex.pruneFiles(spark, dir, "h",
+        Array(probe))
+      assert(kept.contains(bare.head), s"probe $probe skipped it")
+      assert(kept.size < all.size, s"probe $probe: no pruning")
+      val full = spark.read.parquet(dir).where(col("h") === probe)
+        .collect().map(_.toString).toSeq
+      val pruned = MaintainedIndex.readPruned(spark, dir, "h", Array(probe))
+        .where(col("h") === probe).collect().map(_.toString).toSeq
+      assert(pruned == full)
+    }
+  }
+
+  test("a file with one row group holding keys but lacking min/max has " +
+    "no envelope, and its keys are never skipped") {
+    val dir = tmpDir("partial_stats")
+    // parquet writes no min/max for a chunk whose values exceed its
+    // stats size limit: the oversized key's row group has none, the
+    // small keys' row groups do
+    val huge = "z" * 8192
+    withSQLConf("spark.sql.shuffle.partitions" -> "4") {
+      MaintainedIndex.writeClusteredIndexed(
+        Seq("m1", "m2").map(k => (k, 0L)).toDF("k", "v"), dir, "k")
+    }
+    Seq("a", "b", huge).map(k => (k, 1L)).toDF("k", "v").coalesce(1)
+      .sortWithinPartitions("k")
+      .write.option("parquet.block.size", "1")
+      .option("parquet.page.size.row.check.min", "1")
+      .option("parquet.page.size.row.check.max", "1")
+      .mode("append").parquet(dir)
+    val mixed = spark.read.parquet(dir).where(col("k") === "a")
+      .select(expr("element_at(split(_metadata.file_path, '/'), -1)"))
+      .head().getString(0)
+    assert(envelopesOf(dir, "k").collect { case (f, None) => f.name }
+      .toSeq == Seq(mixed))
+    val (kept, all) = MaintainedIndex.pruneFiles(spark, dir, "k",
+      Array[Any](huge))
+    assert(kept == Seq(mixed) && all.size > 1)
+    assert(MaintainedIndex.readPruned(spark, dir, "k", Array[Any](huge))
+      .where(col("k") === huge).count() == 1)
+  }
+
+  test("(c) after compactClusteredIndexed is published over the table, " +
+    "the envelope cache holds no entries for files no longer listed") {
+    val root = tmpDir("env_compact")
+    val dir = new java.io.File(root, "t").toString
+    val out = new java.io.File(root, "t_compacted").toString
+    withSQLConf("spark.sql.shuffle.partitions" -> "8",
+      "graft.append.targetFileBytes" -> "1") {
+      MaintainedIndex.writeClusteredIndexed(
+        (0L until 800L).map(i => (i, i)).toDF("h", "v"), dir, "h")
+      MaintainedIndex.clusteredIdempotentAppend(
+        (800L until 900L).map(i => (i, i)).toDF("h", "v"), dir, "b1_", "h")
+    }
+    val old = envelopesOf(dir, "h").keySet
+    MaintainedIndex.compactClusteredIndexed(spark, dir, out, "h",
+      targetFileBytes = 1024L)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash window A: data landed, its stats lost → file must be read
-    val idx = new org.apache.hadoop.fs.Path(
-      MaintainedIndex.indexDir(dir, "h"))
-    fs.listStatus(idx).filter(_.getPath.getName.startsWith("bx_"))
-      .foreach(s => fs.delete(s.getPath, false))
-    val (keptA, _) = MaintainedIndex.pruneFiles(spark, dir, "h",
-      Array(850L))
-    assert(keptA.exists(_.startsWith("bx_")),
-      "unindexed appended files must always be read")
-    assert(MaintainedIndex.readPruned(spark, dir, "h", Array(850L))
-      .where(col("h") === 850L).count() == 1)
-    // crash window B: stats row survives a rolled-back file → ignored
-    // (prune must not try to open the missing file)
-    withSQLConf("spark.sql.shuffle.partitions" -> "8") {
-      MaintainedIndex.clusteredIdempotentAppend(
-        (900L until 950L).map(i => (i, i)).toDF("h", "v"),
-        dir, "by_", "h")
-    }
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(s => s.isFile && s.getPath.getName.startsWith("by_"))
-      .foreach(s => fs.delete(s.getPath, false))
-    assert(MaintainedIndex.readPruned(spark, dir, "h", Array(920L))
-      .where(col("h") === 920L).count() == 0)
-    // no index at all → everything reads (pre-index tables stay green)
-    fs.delete(idx, true)
-    val (keptC, allC) = MaintainedIndex.pruneFiles(spark, dir, "h",
-      Array(1L))
-    assert(keptC == allC)
+    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+    fs.rename(new org.apache.hadoop.fs.Path(out),
+      new org.apache.hadoop.fs.Path(dir))
+    val listed = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath.getName).filter(n => n.endsWith(".parquet") &&
+        !n.startsWith("_") && !n.startsWith(".")).toSet
+    val now = envelopesOf(dir, "h")
+    assert(now.keys.map(_.name).toSet == listed)
+    assert(now.keySet.intersect(old).isEmpty,
+      "envelopes of the replaced files survived compaction")
+    assert(spark.read.parquet(dir).count() == 900L)
   }
 
   // --------------------------------------------- the pruned quote screen
@@ -203,13 +317,29 @@ class ScreenPruneSpec extends SparkSpec {
       .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
     val fs = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // drop every index artifact; keep data + sidecar
+    // drop the byid projection, and rewrite the table and the df
+    // sidecar as files without column statistics (no envelopes): the
+    // projection heals, and every footer-less read keeps every file
     fs.delete(new org.apache.hadoop.fs.Path(
       Corpus.winnowByIdPath(table)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      MaintainedIndex.indexDir(table, "h")), true)
-    fs.delete(new org.apache.hadoop.fs.Path(MaintainedIndex.indexDir(
-      Corpus.winnowDfStatePath(table), "h")), true)
+    for (dir <- Seq(table, Corpus.winnowDfStatePath(table))) {
+      val path = new org.apache.hadoop.fs.Path(dir)
+      val files = fs.listStatus(path).map(_.getPath)
+        .filter(p => p.getName.endsWith(".parquet") &&
+          !p.getName.startsWith("_"))
+      val bare = dir + "_bare"
+      spark.read.parquet(dir).repartition(files.length)
+        .write.option("parquet.column.statistics.enabled", "false")
+        .parquet(bare)
+      files.foreach(fs.delete(_, false))
+      fs.listStatus(new org.apache.hadoop.fs.Path(bare)).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
+        .foreach(p => fs.rename(p, new org.apache.hadoop.fs.Path(path,
+          p.getName)))
+      val (kept, all) = MaintainedIndex.pruneFiles(spark, dir, "h",
+        Array(7L))
+      assert(all.size == files.length && kept == all)
+    }
     val healed = Corpus.winnowingContainmentScreen(batchFps, table).df
       .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
     assert(healed == expect)
