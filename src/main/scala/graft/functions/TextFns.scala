@@ -78,12 +78,6 @@ object TextFns {
       .otherwise(lit("es"))
   }
 
-  /** Distinct character k-shingles of the raw text (MinHash input). */
-  def shingles(text: Column, k: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
-      i => text.substr(i, lit(k))))
-
   /** Polynomial codepoint hash of a string:
     * fold(h = (h*31 + codepoint) mod 1e9+7) — the portable shingle hash.
     * DuckDB computes the identical value with list_reduce over
@@ -95,12 +89,6 @@ object TextFns {
       transform(split(s, ""), c => ascii(c).cast("long")),
       lit(0L),
       (acc, c) => (acc * 31 + c) % PolyP)
-
-  /** HOF mirror of ShingleHashesExpr (distinct poly-hashes of the
-    * k-shingles; distinctness on the hash value). Kept for bit-equality
-    * testing of the native expression. */
-  def shingleHashes(text: Column, k: Int): Column =
-    array_distinct(transform(shingles(text, k), s => polyHash(s)))
 
   /** Portable 32-bit hash: first 8 hex chars of md5 as an unsigned int.
     * DuckDB computes the identical value from the same md5 hex. */

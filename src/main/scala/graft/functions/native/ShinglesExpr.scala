@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * single pass: array<long> where each element is
   * `fold(h = (h*31 + codepoint) mod 1e9+7)` over one k-codepoint window
   * (a string shorter than k hashes as its own single window, exactly
-  * like TextFns.shingles' short-text rule). Distinctness is on the HASH
+  * like the HOF reference's short-text rule). Distinctness is on the HASH
   * value, mirroring the oracle's `list_distinct` over hashed shingles,
   * so an (astronomically rare) collision merges identically on both
   * engines.

@@ -245,10 +245,9 @@ object Jobs {
     * date-sliced scans skip files from footer stats alone. */
   private def clusterLineitemJob(spark: SparkSession, sfDir: String,
                                  outDir: String): Unit = {
-    graft.sources.ClusteredWrite.writeClustered(
+    graft.sources.MaintainedIndex.writeClusteredIndexed(
       Tables.load(spark, sfDir, "lineitem"),
-      s"$outDir/lineitem_clustered", Seq("l_shipdate"), partitions = 32)
-    ()
+      s"$outDir/lineitem_clustered", "l_shipdate", partitions = 32)
   }
 
   /** lineitem laid out on the HILBERT curve of (l_partkey, l_suppkey)
@@ -265,7 +264,6 @@ object Jobs {
       Tables.load(spark, sfDir, "lineitem"),
       s"$outDir/lineitem_hilbert", "l_partkey", "l_suppkey",
       partitions = 32)
-    ()
   }
 
   /** Master-data cleanup: the dirtied customer master resolved end to
@@ -368,19 +366,17 @@ object Jobs {
       .write.mode("overwrite").parquet(s"$outDir/user_availability")
   }
 
-  /** Skip-index build: lineitem rewritten range-clustered on
-    * l_orderkey with a per-file min/max stats table, then a pruned
-    * range read exercised against the fresh index — the ingest-time
-    * layout work that makes later point/range scans touch only their
-    * files. */
+  /** Skip layout: lineitem rewritten range-clustered on l_orderkey,
+    * then a range read that opens only the files whose footer
+    * envelope intersects the range — the ingest-time layout work that
+    * makes later point/range scans touch only their files. */
   private def indexLineitemJob(spark: SparkSession, sfDir: String,
                                outDir: String): Unit = {
     val p = s"$outDir/lineitem_skip"
-    graft.sources.ClusteredWrite.writeClustered(
-      Tables.load(spark, sfDir, "lineitem"),
-      p, Seq("l_orderkey"), partitions = 8)
-    graft.sources.SkippingIndex.buildStats(spark, p, Seq("l_orderkey"))
-    graft.sources.SkippingIndex.readRange(spark, p, "l_orderkey",
+    graft.sources.MaintainedIndex.writeClusteredIndexed(
+      Tables.load(spark, sfDir, "lineitem"), p, "l_orderkey",
+      partitions = 8)
+    graft.sources.MaintainedIndex.readRange(spark, p, "l_orderkey",
         1000L, 5000L)
       .write.mode("overwrite").parquet(s"$outDir/lineitem_slice")
   }
@@ -441,8 +437,8 @@ object Jobs {
   private def scanRowkeysJob(spark: SparkSession, sfDir: String,
                              outDir: String): Unit = {
     val p = s"$outDir/docs_by_source"
-    graft.sources.ClusteredWrite.writeClustered(
-      Tables.load(spark, sfDir, "documents"), p, Seq("source"), 8)
+    graft.sources.MaintainedIndex.writeClusteredIndexed(
+      Tables.load(spark, sfDir, "documents"), p, "source", 8)
     EtlOps.keyedSnapshotScan(spark.read.parquet(p), "source",
         "^src1[0-9]$")
       .write.mode("overwrite").parquet(s"$outDir/docs_src1x")

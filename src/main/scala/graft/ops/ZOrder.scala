@@ -3,30 +3,25 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton) bit interleaving — the primitive under BOTH of the
-  * library's multi-dimensional layouts:
-  *
-  *  - [[zValue]] on RAW keys: plain integer bit arithmetic,
-  *    engine-exact (oracle-gated by p_zorder_scan against DuckDB's bit
-  *    ops) — right when keys are dense non-negative ids whose low bits
-  *    are already balanced;
-  *  - [[graft.sources.Sinks.writeZOrdered]]: the production write for
-  *    arbitrary/skewed numeric domains — equal-frequency quantile
-  *    buckets per column first, then this same interleave over the
-  *    bucket ids, so skew can't collapse the curve.
-  *
-  * Either way a box predicate touches a bounded set of z-ranges, so
-  * per-file min/max footer stats skip most files (the technique behind
-  * Delta/Iceberg OPTIMIZE ZORDER), where single-key range clustering
-  * (sources.ClusteredWrite) only prunes on its one key.
+/** Z-order (Morton) bit interleaving on RAW keys: plain integer bit
+  * arithmetic, engine-exact (oracle-gated by p_zorder_scan against
+  * DuckDB's bit ops) — right when keys are dense non-negative ids whose
+  * low bits are already balanced. [[writeZOrdered]] range-clusters a
+  * table on the interleaved value through the one clustered writer
+  * ([[graft.sources.MaintainedIndex.writeClusteredIndexed]]), so a box
+  * predicate touches a bounded set of z-ranges and per-file min/max
+  * footer stats skip most files (the technique behind Delta/Iceberg
+  * OPTIMIZE ZORDER), where single-key range clustering only prunes on
+  * its one key. Skewed or non-integer domains rank-normalize first
+  * (map each column to equal-frequency bucket ids, then interleave the
+  * ids), so skew can't collapse the curve.
   */
 object ZOrder {
 
   /** Interleaved bit value: bit j of column c lands at z-bit
     * j*n + c, for `bits` bits per column. n*bits must stay <= 63;
     * inputs are cast to long. Columns must be non-negative and fit in
-    * `bits` bits (rank-normalize first otherwise — see
-    * Sinks.writeZOrdered). */
+    * `bits` bits (rank-normalize first otherwise). */
   def zValue(cols: Seq[Column], bits: Int = 21): Column = {
     val n = cols.length
     require(n >= 2, "z-ordering needs at least two columns")
@@ -42,10 +37,10 @@ object ZOrder {
   /** Range-cluster `df` on the interleaved z-value of `zCols` (the
     * z column is kept in the output for audit/pruning inspection). */
   def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
-                    partitions: Int, bits: Int = 21): DataFrame =
-    graft.sources.ClusteredWrite.writeClustered(
+                    partitions: Int, bits: Int = 21): Unit =
+    graft.sources.MaintainedIndex.writeClusteredIndexed(
       df.withColumn("z", zValue(zCols.map(col), bits)),
-      path, Seq("z"), partitions)
+      path, "z", partitions)
 }
 
 /** Hilbert-curve 2-D layout — the z-order alternative with strictly
@@ -59,8 +54,7 @@ object ZOrder {
   * interleave — pay it when the workload is box-heavy, keep z when
   * write throughput dominates. Same conventions as [[ZOrder]]: keys
   * non-negative, masked to `bits` bits, rank-normalize skewed domains
-  * first (Sinks.writeZOrdered's quantile-bucket device applies
-  * unchanged).
+  * first; the same clustered writer lands the table.
   */
 object Hilbert {
 
@@ -74,8 +68,8 @@ object Hilbert {
     * column is kept in the output for audit/pruning inspection). */
   def writeHilbertOrdered(df: DataFrame, path: String,
                           xCol: String, yCol: String,
-                          partitions: Int, bits: Int = 18): DataFrame =
-    graft.sources.ClusteredWrite.writeClustered(
+                          partitions: Int, bits: Int = 18): Unit =
+    graft.sources.MaintainedIndex.writeClusteredIndexed(
       df.withColumn("h", hValue(col(xCol), col(yCol), bits)),
-      path, Seq("h"), partitions)
+      path, "h", partitions)
 }

@@ -15,8 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   key >= 'prefix' AND key < 'prefix+1'
   *
   * which parquet CAN evaluate against row-group/file min-max stats —
-  * so on a key-clustered layout (sources.ClusteredWrite) the regex
-  * scan prunes files instead of reading the table. The regex itself
+  * so on a key-clustered layout
+  * (sources.MaintainedIndex.writeClusteredIndexed) the regex scan
+  * prunes files instead of reading the table. The regex itself
   * stays in the plan (the range is implied, never a replacement), so
   * results are bit-identical with the rule on or off; the rule only
   * manufactures pushdown-capable redundancy. This is the deepest

@@ -831,21 +831,21 @@ object Parity {
     "SELECT doc_id, text, lang, source, n_chars FROM documents"
 
   // ----------------------------------------------- clustered-scan layout
-  // ClusteredWrite.writeClustered gated end to end: lineitem rewritten
-  // range-clustered on l_shipdate (disjoint per-file key ranges +
-  // in-file sort, ClusteredWriteSpec proves the layout), then a month
-  // slice is read back FROM THE CLUSTERED FILES — content must equal
-  // the same filter over the original table, proving the layout
+  // MaintainedIndex.writeClusteredIndexed gated end to end: lineitem
+  // rewritten range-clustered on l_shipdate (disjoint per-file key
+  // ranges + in-file sort, ClusteredWriteSpec proves the layout), then
+  // a month slice is read back FROM THE CLUSTERED FILES — content must
+  // equal the same filter over the original table, proving the layout
   // transformation is lossless while the footer stats make the scan
   // skip every out-of-range file at 100 TB.
   def clusteredScanQ(spark: SparkSession, dir: String): DataFrame = {
     val path = Fixtures.cached("clustered", dir) { root =>
       val p = new java.io.File(root, "li").toString
-      graft.sources.ClusteredWrite.writeClustered(
+      graft.sources.MaintainedIndex.writeClusteredIndexed(
         Tables.load(spark, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"),
             col("l_shipdate"), col("l_quantity")),
-        p, Seq("l_shipdate"), partitions = 8)
+        p, "l_shipdate", partitions = 8)
       p
     }
     spark.read.parquet(path)
@@ -864,25 +864,24 @@ object Parity {
       |  AND l_shipdate < TIMESTAMP '1995-04-01'""".stripMargin
 
   // ---------------------------------------------- file-skipping index
-  // SkippingIndex gated end to end: lineitem range-clustered on
-  // l_orderkey (8 disjoint-range files), a per-file min/max stats
-  // table built over it, then an orderkey range read THROUGH the stats
-  // table — only files whose envelope intersects the range are opened
-  // (FileSkipSpec asserts the file-count collapse); content must equal
-  // the same filter over the original table. The Delta-style skip at
-  // planner level, above parquet's own footer stats.
+  // MaintainedIndex.readRange gated end to end: lineitem
+  // range-clustered on l_orderkey (8 disjoint-range files), then an
+  // orderkey range read that opens only the files whose footer
+  // envelope intersects the range (FileSkipSpec asserts the file-count
+  // collapse); content must equal the same filter over the original
+  // table. The Delta-style skip at planner level, above parquet's own
+  // row-group filter.
   def fileskipScanQ(spark: SparkSession, dir: String): DataFrame = {
     val path = Fixtures.cached("fileskip", dir) { root =>
       val p = new java.io.File(root, "li").toString
-      graft.sources.ClusteredWrite.writeClustered(
+      graft.sources.MaintainedIndex.writeClusteredIndexed(
         Tables.load(spark, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"),
             col("l_quantity"), col("l_extendedprice")),
-        p, Seq("l_orderkey"), partitions = 8)
-      graft.sources.SkippingIndex.buildStats(spark, p, Seq("l_orderkey"))
+        p, "l_orderkey", partitions = 8)
       p
     }
-    graft.sources.SkippingIndex
+    graft.sources.MaintainedIndex
       .readRange(spark, path, "l_orderkey", 1000L, 5000L)
       .select(col("l_orderkey"), col("l_linenumber").cast("long")
           .as("l_linenumber"),

@@ -15,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   * (no exchange, plan-asserted in CompactionSpec). Rows are preserved
   * exactly; ordering within files is whatever the input files carried
   * (compaction is a layout operation, not a sort — use
-  * [[ClusteredWrite]] to impose order while rewriting).
+  * [[MaintainedIndex.compactClusteredIndexed]] to impose order while
+  * rewriting).
   *
   * The rewrite lands in a fresh directory and is atomically published
   * by the caller (or via [[graft.sources.Versioned]] snapshots);

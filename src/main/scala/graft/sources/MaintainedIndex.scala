@@ -10,35 +10,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
-/** Hash-clustered layout + per-file key envelopes for the MAINTAINED
-  * corpus tables (winnow fingerprints, df sidecar, signature table) —
-  * the machinery that turns the continuous-ingest screens' per-batch
-  * table reads from O(corpus) file IO into O(batch).
+/** File layout and file skipping for parquet tables clustered on one
+  * key — the storage-side lever the reference's date-partitioned Hive
+  * tables use for ONE column (directory partitioning,
+  * SimpleDataCleanUtils.scala:19), generalized to any sortable key at
+  * file/row-group granularity, and the machinery that turns the
+  * continuous-ingest screens' per-batch table reads (winnow
+  * fingerprints, df sidecar, signature table) from O(corpus) file IO
+  * into O(batch).
   *
-  * The model is [[ClusteredWrite]] + [[SkippingIndex]] re-cast for
-  * tables that GROW by idempotent batch-named appends:
-  *
-  *  - every write (initial or append) range-clusters its rows on the
-  *    table's probe key, so each landed file covers a narrow key
-  *    range — one clustered GENERATION per append;
+  *  - every write (initial, append or compaction) range-clusters its
+  *    rows on the table's key and sorts within each file, so each file
+  *    covers a narrow key range and each row group carries tight
+  *    min/max stats — one clustered GENERATION per append;
   *  - each data file's [min, max] key envelope is read from its OWN
   *    parquet footer (the row-group statistics Spark's row-group filter
-  *    pushdown trusts), so appends write nothing beside the data;
-  *  - a screen with a bounded probe-key set opens ONLY the files whose
-  *    envelope intersects it ([[readPruned]]). With uniform hash keys
-  *    the surviving file count is min(|probes|, |files|): bounded by
-  *    the batch, never the corpus — the asymptotic that makes a
-  *    100 TB maintained table affordable to probe per micro-batch.
+  *    pushdown trusts), so writes put nothing beside the data;
+  *  - a probe set ([[readPruned]]) or a key range ([[readRange]])
+  *    opens ONLY the files whose envelope can hold a match. With
+  *    uniform hash keys a probe read keeps min(|probes|, |files|)
+  *    files: bounded by the batch, never the corpus — the asymptotic
+  *    that makes a 100 TB maintained table affordable to probe per
+  *    micro-batch.
   *
   * SAFETY RULE (what makes pruning always-correct): the envelope comes
   * from the file's own footer, so it can never disagree with the file,
   * and a file without usable statistics — a row group holding keys but
   * lacking min/max, or a key type other than byte/short/int/long/string
-  * — has no envelope and is ALWAYS read. A crash between data and
-  * metadata cannot exist; tables written before clustering (or by a
-  * foreign writer) prune only as far as their footers allow.
+  * (dates and timestamps included) — has no envelope and is ALWAYS
+  * read. Files appended by any writer are read until their footer says
+  * otherwise, and files that are no longer listed are never opened.
   * CurateRestartSpec's replay windows exercise this through the loop;
-  * ScreenPruneSpec pins equality and the file-count collapse directly.
+  * ScreenPruneSpec and FileSkipSpec pin equality and the file-count
+  * collapse directly.
   *
   * The probe set crosses to the driver ([[readPruned]] takes an
   * in-memory array): that is NOT new data movement — every caller
@@ -66,7 +70,7 @@ object MaintainedIndex {
 
   /** Visible data files of a parquet directory — the same filter
     * Spark's own listing applies (no underscore/dot names). */
-  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+  private[sources] def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
@@ -139,9 +143,14 @@ object MaintainedIndex {
     writeClusteredIndexed(df, dir, keyCol,
       df.sparkSession.sessionState.conf.numShufflePartitions)
 
-  /** [[writeClusteredIndexed]] at an explicit output file count — the
-    * compaction form (file count planned from bytes, not from the
-    * session's shuffle width). */
+  /** [[writeClusteredIndexed]] at an explicit output file count: the
+    * table's one clustered writer (layout rewrites, Z-order/Hilbert
+    * curves and compaction all land through it). `repartitionByRange`
+    * gives every output file a narrow, pairwise disjoint key range
+    * (equal keys land in one partition) and `sortWithinPartitions`
+    * gives each row group tight min/max stats. The range boundaries
+    * come from Spark's reservoir sample, so file SIZES are approximate;
+    * content, clustering and the skipping guarantee are exact. */
   def writeClusteredIndexed(df: DataFrame, dir: String, keyCol: String,
                             partitions: Int): Unit =
     df.repartitionByRange(math.max(1, partitions), col(keyCol))
@@ -297,45 +306,69 @@ object MaintainedIndex {
 
   // ----------------------------------------------------- pruned reads
 
-  /** The file-selection core, test-visible: (files to read, all live
-    * data files). A file survives iff it has no envelope OR its
-    * [lo, hi] envelope contains at least one probe. An unorderable
-    * probe (type outside [[orderable]]) reads everything. */
-  private[graft] def pruneFiles(spark: SparkSession, dir: String,
-                                keyCol: String,
-                                probes: Array[Any]): (Seq[String], Seq[String]) = {
+  /** The file-selection core: (files to read, all live data files). A
+    * file survives iff it has no envelope OR `overlaps(lo, hi)` holds
+    * for its envelope. `None` (a probe that cannot be ordered) reads
+    * every file without touching a footer. */
+  private def selectFiles(spark: SparkSession, dir: String, keyCol: String,
+                          overlaps: Option[(Any, Any) => Boolean])
+      : (Seq[String], Seq[String]) = {
     val (fs, dirPath) = fsOf(spark, dir)
     val listing = dataFiles(fs, dirPath)
     val all = listing.map(_.getPath.getName)
+    overlaps match {
+      case Some(f) if all.nonEmpty =>
+        val env = envelopes(spark, dirPath, listing, keyCol)
+        (all.filter(n => env(n).forall { case (lo, hi) => f(lo, hi) }), all)
+      case _ => (all, all)
+    }
+  }
+
+  /** Probe-set selection, test-visible: a file survives iff it has no
+    * envelope OR its [lo, hi] envelope contains at least one probe. An
+    * unorderable probe (type outside [[orderable]]) reads everything;
+    * null probes match nothing. */
+  private[graft] def pruneFiles(spark: SparkSession, dir: String,
+                                keyCol: String,
+                                probes: Array[Any]): (Seq[String], Seq[String]) = {
     val ps = probes.filter(_ != null).map(orderable)
-    if (all.isEmpty || ps.contains(null)) return (all, all)
-    val env = envelopes(spark, dirPath, listing, keyCol)
-    // null probes match nothing; files with envelopes can all skip
-    if (ps.isEmpty) return (all.filter(f => env(f).isEmpty), all)
-    // sort probes once; bail to unpruned on any uncomparable pair
+    // sort probes once; any uncomparable pair reads everything
     val sorted =
-      try ps.sortWith((a, b) => cmp(a, b) match {
+      if (ps.contains(null)) None
+      else try Some(ps.sortWith((a, b) => cmp(a, b) match {
         case Some(c) => c < 0
         case None => throw new IllegalArgumentException("unorderable")
-      })
-      catch { case _: IllegalArgumentException => return (all, all) }
-    def anyProbeIn(lo: Any, hi: Any): Boolean = {
+      }))
+      catch { case _: IllegalArgumentException => None }
+    def anyProbeIn(in: Array[Any])(lo: Any, hi: Any): Boolean = {
       // binary search: smallest probe >= lo, then check <= hi
-      var a = 0; var b = sorted.length
+      var a = 0; var b = in.length
       while (a < b) {
         val m = (a + b) >>> 1
-        cmp(sorted(m), lo) match {
+        cmp(in(m), lo) match {
           case Some(c) if c < 0 => a = m + 1
           case Some(_) => b = m
           case None => return true // probe/key type mismatch: read
         }
       }
-      a < sorted.length && cmp(sorted(a), hi).forall(_ <= 0)
+      a < in.length && cmp(in(a), hi).forall(_ <= 0)
     }
-    val kept = all.filter(f => env(f).forall { case (lo, hi) =>
-      anyProbeIn(lo, hi) })
-    (kept, all)
+    selectFiles(spark, dir, keyCol, sorted.map(anyProbeIn))
   }
+
+  /** Read exactly the files `kept` of `all` (names in `dir`): the whole
+    * table when nothing was skipped or the listing is empty (a missing
+    * table then fails with Spark's own error), a schema-preserving
+    * empty relation when everything was. */
+  private[sources] def readFiles(spark: SparkSession, dir: String,
+                                 kept: Seq[String],
+                                 all: Seq[String]): DataFrame =
+    if (all.isEmpty || kept.size == all.size) spark.read.parquet(dir)
+    else if (kept.isEmpty) spark.read.parquet(dir).where(lit(false))
+    else {
+      val base = new Path(dir)
+      spark.read.parquet(kept.map(n => new Path(base, n).toString): _*)
+    }
 
   /** Probe-pruned table read: rows of files whose key envelope may
     * contain a probe, plus every file without an envelope — a SUPERSET
@@ -353,15 +386,25 @@ object MaintainedIndex {
   def readPrunedWithInfo(spark: SparkSession, dir: String, keyCol: String,
                          probes: Array[Any]): (DataFrame, Int, Int) = {
     val (kept, all) = pruneFiles(spark, dir, keyCol, probes)
-    val df =
-      if (all.isEmpty) spark.read.parquet(dir) // empty/missing: schema err
-      else if (kept.isEmpty)
-        spark.read.parquet(dir).where(lit(false)) // schema-preserving empty
-      else if (kept.size == all.size) spark.read.parquet(dir)
-      else {
-        val base = new Path(dir)
-        spark.read.parquet(kept.map(n => new Path(base, n).toString): _*)
-      }
-    (df, kept.size, all.size)
+    (readFiles(spark, dir, kept, all), kept.size, all.size)
+  }
+
+  /** Range read with file skipping: the rows with lo <= key <= hi,
+    * reading only files whose envelope intersects [lo, hi] plus every
+    * file without one, then applying the residual predicate (envelopes
+    * admit false positives at their edges, never false negatives).
+    * Equal to the unpruned `read.where(...)` by construction. Bounds
+    * outside [[orderable]]'s types (dates, timestamps, doubles) read
+    * every file. */
+  def readRange(spark: SparkSession, dir: String, keyCol: String,
+                lo: Any, hi: Any): DataFrame = {
+    val (l, h) = (orderable(lo), orderable(hi))
+    val overlaps =
+      if (l == null || h == null) None
+      else Some((flo: Any, fhi: Any) =>
+        cmp(fhi, l).forall(_ >= 0) && cmp(flo, h).forall(_ <= 0))
+    val (kept, all) = selectFiles(spark, dir, keyCol, overlaps)
+    readFiles(spark, dir, kept, all)
+      .where(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
   }
 }

@@ -1,18 +1,18 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** File-level data-skipping index — the lakehouse-table-format move
-  * (Delta/Iceberg keep per-file column stats in the transaction log)
-  * as a freestanding operator over plain parquet directories.
-  * [[ClusteredWrite]] already gives each file a narrow key range and
-  * row groups tight footer stats; this layer lifts the per-FILE
-  * min/max into a stats TABLE so the planner never has to touch the
-  * skipped files at all — at 100 TB the difference between opening a
-  * million parquet footers (a million random reads before the first
-  * data byte) and scanning a stats table whose row count is the file
-  * count.
+/** Per-file Bloom skipping for POINT lookups on an UNSORTED
+  * high-cardinality column — the regime where min/max envelopes
+  * ([[MaintainedIndex.readRange]]) are useless: a hash- or
+  * arrival-ordered layout gives every file a near-full value range,
+  * while each file still holds only a SUBSET of the values. The Bloom
+  * filters live in a postings table beside the data (the
+  * lakehouse-table-format move, as a freestanding operator over plain
+  * parquet directories), so a probe opens only the files that may hold
+  * the value.
   *
   * The pruning step materializes the surviving file LIST on the
   * driver. That is the metadata plane, not the data plane: its size is
@@ -22,55 +22,6 @@ import org.apache.spark.sql.functions._
   * planner inputs — never row data.
   */
 object SkippingIndex {
-
-  /** Where the stats table for `path` lives. */
-  def statsPath(path: String): String = path + "_stats"
-
-  /** Build (or rebuild) the per-file stats table for `statsCols` over
-    * the parquet directory at `path`: one row per data file with
-    * min/max per column and the row count. One scan, one hash
-    * aggregation keyed on the file path (`_metadata.file_path` — the
-    * constant-per-split metadata column, no UDF, no extra IO).
-    */
-  def buildStats(spark: SparkSession, path: String,
-                 statsCols: Seq[String]): DataFrame = {
-    require(statsCols.nonEmpty, "need at least one stats column")
-    val df = spark.read.parquet(path)
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
-      count(lit(1)).as("n_rows")
-    df.select(col("_metadata.file_path").as("file") +:
-        statsCols.map(col): _*)
-      .groupBy("file")
-      .agg(aggs.head, aggs.tail: _*)
-      .write.mode("overwrite").parquet(statsPath(path))
-    spark.read.parquet(statsPath(path))
-  }
-
-  /** Range read with file-level skipping: keep only files whose
-    * [min, max] envelope intersects [lo, hi], read exactly those, and
-    * apply the residual predicate (file stats admit false positives at
-    * the envelope edges, never false negatives). Equal results to the
-    * unpruned `read.where(...)` by construction; FileSkipSpec asserts
-    * both the equality and the file-count collapse.
-    */
-  def readRange(spark: SparkSession, path: String, colName: String,
-                lo: Any, hi: Any): DataFrame = {
-    val stats = spark.read.parquet(statsPath(path))
-    val files = stats
-      .where(col(s"max_$colName") >= lit(lo) &&
-        col(s"min_$colName") <= lit(hi))
-      .select(col("file"))
-      .collect().map(_.getString(0))
-    val residual = (d: DataFrame) =>
-      d.where(col(colName) >= lit(lo) && col(colName) <= lit(hi))
-    if (files.isEmpty)
-      // preserve the schema with an empty relation
-      residual(spark.read.parquet(path)).where(lit(false))
-    else residual(spark.read.parquet(files: _*))
-  }
-
-  // ------------------------------------------------ per-file Bloom skip
 
   /** Where the Bloom postings table for `path` lives. */
   def bloomPath(path: String): String = path + "_bloom"
@@ -86,18 +37,14 @@ object SkippingIndex {
     d.take(4).foldLeft(0L)((a, b) => (a << 8) | (b & 0xffL))
   }
 
-  /** Build the per-file Bloom postings table for POINT lookups on an
-    * UNSORTED high-cardinality column — the regime where min/max
-    * envelopes are useless (a hash- or arrival-ordered layout gives
-    * every file a near-full value range, so [[readRange]] prunes
-    * nothing, while each file still holds only a SUBSET of the
-    * values). One scan, then distinct `(file, pos)` rows where the
-    * positions of value v are `hash32("bf<j>:" || v) % bits` for
-    * j < numHashes — a Bloom filter stored RELATIONALLY as its set-bit
-    * postings, so building is one distinct aggregation and the
-    * OR-merge across rows is set union: order-independent, retryable,
-    * and appendable (new files just add their rows). Table size is at
-    * most `#files × bits` rows — metadata-plane, like the stats table.
+  /** Build the per-file Bloom postings table over `colName`: one scan,
+    * then distinct `(file, pos)` rows where the positions of value v
+    * are `hash32("bf<j>:" || v) % bits` for j < numHashes — a Bloom
+    * filter stored RELATIONALLY as its set-bit postings, so building
+    * is one distinct aggregation and the OR-merge across rows is set
+    * union: order-independent, retryable, and appendable (new files
+    * just add their rows). Table size is at most `#files × bits` rows
+    * — metadata-plane.
     */
   def buildBloom(spark: SparkSession, path: String, colName: String,
                  bits: Int = 8192, numHashes: Int = 3): DataFrame = {
@@ -120,26 +67,33 @@ object SkippingIndex {
     * apply the residual equality predicate (Bloom admits false
     * positives — a file may match and contribute nothing — but never
     * false negatives: every stored value set all of its bits at build
-    * time). The probe positions are computed driver-side from the
-    * literal; the surviving file list is the same O(#files) planner
-    * metadata every FileIndex holds. `bits`/`numHashes` must match the
-    * build call.
+    * time). Same safety rule as [[MaintainedIndex]]: the live listing
+    * decides what exists, so a data file the postings do not name (one
+    * appended after [[buildBloom]]) is always read, and a named file
+    * that is no longer listed is never opened. The probe positions are
+    * computed driver-side from the literal. `bits`/`numHashes` must
+    * match the build call.
     */
   def readPoint(spark: SparkSession, path: String, colName: String,
                 value: Any, bits: Int = 8192,
                 numHashes: Int = 3): DataFrame = {
     val probe = (0 until numHashes).map(j =>
       hash32Local(s"bf$j:$value") % bits)
-    val files = spark.read.parquet(bloomPath(path))
-      .where(col("pos").isin(probe.map(Long.box): _*))
+    // every named file -> whether its filter holds all probe positions
+    val mayHold = spark.read.parquet(bloomPath(path))
       .groupBy(col("file"))
-      .agg(countDistinct(col("pos")).as("nhit"))
-      .where(col("nhit") === numHashes.toLong)
-      .select(col("file"))
-      .collect().map(_.getString(0))
-    val residual = (d: DataFrame) => d.where(col(colName) === lit(value))
-    if (files.isEmpty)
-      residual(spark.read.parquet(path)).where(lit(false))
-    else residual(spark.read.parquet(files: _*))
+      .agg(countDistinct(when(col("pos").isin(probe.map(Long.box): _*),
+        col("pos"))).as("nhit"))
+      .collect()
+      .map(r => new Path(new java.net.URI(r.getString(0))).getName ->
+        (r.getLong(1) == numHashes))
+      .toMap
+    val dir = new Path(path)
+    val all = MaintainedIndex.dataFiles(
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+      .map(_.getPath.getName)
+    MaintainedIndex.readFiles(spark, path,
+        all.filter(f => mayHold.getOrElse(f, true)), all)
+      .where(col(colName) === lit(value))
   }
 }

@@ -66,6 +66,32 @@ class BloomSkipSpec extends SparkSpec {
     assert(pruned === full)
   }
 
+  test("a file appended after buildBloom is read by readPoint") {
+    // a space in the directory: postings name files by URI, the
+    // listing by decoded path, and the two must still match
+    val path = writeFixture("append copy")
+    // the postings do not name the new file: it must be read anyway
+    Seq((123L, "late_123")).toDF("k", "v").write.mode("append").parquet(path)
+    val read = SkippingIndex.readPoint(spark, path, "k", 123L,
+      bits = 4096, numHashes = 3)
+    // the one true file (as in the collapse test) plus the new file
+    assert(read.inputFiles.length === 2,
+      s"expected 2 files, read ${read.inputFiles.length}")
+    val got = read.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(got === Set((123L, "payload_123"), (123L, "late_123")))
+  }
+
+  test("a named file that is no longer listed is not opened by readPoint") {
+    val path = writeFixture("deleted")
+    val file = spark.read.parquet(path).where(col("k") === 123L)
+      .select(input_file_name()).head().getString(0)
+    assert(new java.io.File(new java.net.URI(file)).delete())
+    val got = SkippingIndex.readPoint(spark, path, "k", 123L,
+      bits = 4096, numHashes = 3)
+    assert(got.count() === 0L)
+    assert(got.columns.toSeq === Seq("k", "v"))
+  }
+
   test("bloom postings table is bounded by files x bits and append-shaped") {
     val path = writeFixture("bounded")
     val bloom = spark.read.parquet(SkippingIndex.bloomPath(path))

@@ -2,17 +2,17 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.ClusteredWrite
+import graft.sources.MaintainedIndex
 
 class ClusteredWriteSpec extends SparkSpec {
 
   private def writeFixture(): String = {
     val path = java.nio.file.Files
       .createTempDirectory("graft_clustered").toString + "/li"
-    ClusteredWrite.writeClustered(
+    MaintainedIndex.writeClusteredIndexed(
       Tables.load(spark, sf0001, "lineitem")
         .select("l_orderkey", "l_shipdate", "l_quantity"),
-      path, Seq("l_shipdate"), partitions = 8)
+      path, "l_shipdate", partitions = 8)
     path
   }
 

@@ -1,31 +1,36 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{ClusteredWrite, SkippingIndex}
+import graft.sources.MaintainedIndex
 
 class FileSkipSpec extends SparkSpec {
 
-  private lazy val path: String = {
+  private def lineitem: DataFrame = Tables.load(spark, sf0001, "lineitem")
+    .select("l_orderkey", "l_linenumber", "l_quantity")
+
+  private def writeFixture(tag: String): String = {
     val p = java.nio.file.Files
-      .createTempDirectory("graft_fileskip").toString + "/li"
-    ClusteredWrite.writeClustered(
-      Tables.load(spark, sf0001, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity"),
-      p, Seq("l_orderkey"), partitions = 8)
-    SkippingIndex.buildStats(spark, p, Seq("l_orderkey"))
+      .createTempDirectory(s"graft_fileskip_$tag").toString + "/li"
+    MaintainedIndex.writeClusteredIndexed(lineitem, p, "l_orderkey",
+      partitions = 8)
     p
   }
 
-  test("stats table: one row per data file, counts sum to the table") {
-    val files = spark.read.parquet(path).inputFiles.length
-    val stats = spark.read.parquet(SkippingIndex.statsPath(path))
-    assert(stats.count() == files.toLong)
-    val total = stats.agg(sum("n_rows")).head().getLong(0)
-    assert(total == spark.read.parquet(path).count())
-    // envelopes must be well-formed
-    assert(stats.where(col("min_l_orderkey") > col("max_l_orderkey"))
-      .count() == 0)
+  private lazy val path: String = writeFixture("shared")
+
+  private def name(file: String): String =
+    file.substring(file.lastIndexOf('/') + 1)
+
+  /** readRange equals the unpruned filter, row for row. */
+  private def assertExact(p: String, lo: Long, hi: Long): Long = {
+    val pruned = MaintainedIndex.readRange(spark, p, "l_orderkey", lo, hi)
+    val expected = spark.read.parquet(p)
+      .where(col("l_orderkey") >= lo && col("l_orderkey") <= hi)
+    assert(pruned.exceptAll(expected).isEmpty &&
+      expected.exceptAll(pruned).isEmpty)
+    expected.count()
   }
 
   test("readRange opens strictly fewer files and returns the exact " +
@@ -35,7 +40,7 @@ class FileSkipSpec extends SparkSpec {
     // sf0.001 orderkeys span 0..1499 over 8 range-clustered files — a
     // 100..300 slice intersects ~1-2 of them
     val lo = 100L; val hi = 300L
-    val pruned = SkippingIndex.readRange(spark, path, "l_orderkey", lo, hi)
+    val pruned = MaintainedIndex.readRange(spark, path, "l_orderkey", lo, hi)
     assert(pruned.inputFiles.length < all,
       s"no files skipped: ${pruned.inputFiles.length} of $all read")
     val expected = spark.read.parquet(path)
@@ -46,7 +51,7 @@ class FileSkipSpec extends SparkSpec {
   }
 
   test("a range beyond every envelope yields zero rows, schema intact") {
-    val out = SkippingIndex.readRange(
+    val out = MaintainedIndex.readRange(
       spark, path, "l_orderkey", Long.MaxValue - 1, Long.MaxValue)
     assert(out.count() == 0)
     assert(out.columns.toSeq ==
@@ -54,16 +59,44 @@ class FileSkipSpec extends SparkSpec {
   }
 
   test("stats envelopes admit no false negatives on a point probe") {
-    // every orderkey in the table must fall inside the envelope of at
-    // least one file that a point readRange would open
-    val keys = spark.read.parquet(path)
-      .select("l_orderkey").distinct().limit(20)
-      .collect().map(_.getLong(0))
-    val stats = spark.read.parquet(SkippingIndex.statsPath(path))
-    keys.foreach { k =>
-      val hit = stats.where(col("min_l_orderkey") <= k &&
-        col("max_l_orderkey") >= k).count()
-      assert(hit >= 1, s"key $k matched no file envelope")
+    // each file's edge keys (its min and max, where an off-by-one
+    // envelope would drop it): the point read readRange(k, k) must keep
+    // the file holding k
+    val edges = spark.read.parquet(path)
+      .groupBy(input_file_name().as("f"))
+      .agg(min("l_orderkey").as("lo"), max("l_orderkey").as("hi"))
+      .collect()
+      .flatMap(r => Seq(r.getString(0) -> r.getLong(1),
+        r.getString(0) -> r.getLong(2)))
+    assert(edges.length > 2)
+    edges.foreach { case (file, k) =>
+      val kept = MaintainedIndex.readRange(spark, path, "l_orderkey", k, k)
+        .inputFiles.map(name)
+      assert(kept.contains(name(file)),
+        s"key $k: its file ${name(file)} not among ${kept.toSeq}")
     }
+  }
+
+  test("a file appended after the clustered write is read by readRange") {
+    val p = writeFixture("append")
+    val before = assertExact(p, 100L, 300L)
+    // ten more rows inside the range (copies of rows already there)
+    // land in one extra file after the envelopes were read and cached
+    val extra = spark.read.parquet(p)
+      .where(col("l_orderkey").between(100L, 300L)).limit(10).collect()
+    spark.createDataFrame(java.util.Arrays.asList(extra: _*),
+        spark.read.parquet(p).schema)
+      .coalesce(1).write.mode("append").parquet(p)
+    assert(assertExact(p, 100L, 300L) == before + 10)
+  }
+
+  test("a rewritten table range-reads without PATH_NOT_FOUND") {
+    val p = writeFixture("rewrite")
+    val before = assertExact(p, 100L, 300L)
+    // every file is replaced by files of new names; envelopes cached
+    // for the old files must never be opened
+    MaintainedIndex.writeClusteredIndexed(lineitem, p, "l_orderkey",
+      partitions = 4)
+    assert(assertExact(p, 100L, 300L) == before)
   }
 }

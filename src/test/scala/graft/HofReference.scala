@@ -4,11 +4,24 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Pure higher-order-function forms of native expressions: the
-  * registration-free references the native `graft_dot` and
-  * `graft_simhash` are compared against bit for bit (DotProductSpec,
-  * ShinglesSpec, PropertiesSpec). Interpreted lambdas — correct, slow.
+  * registration-free references the native `graft_dot`,
+  * `graft_simhash` and `graft_shingle_hashes` are compared against bit
+  * for bit (DotProductSpec, ShinglesSpec, PropertiesSpec). Interpreted
+  * lambdas — correct, slow.
   */
 object HofReference {
+
+  /** Distinct character k-shingles of the raw text (MinHash input). */
+  def shingles(text: Column, k: Int): Column =
+    array_distinct(transform(
+      sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
+      i => text.substr(i, lit(k))))
+
+  /** HOF mirror of ShingleHashesExpr (distinct poly-hashes of the
+    * k-shingles; distinctness on the hash value). */
+  def shingleHashes(text: Column, k: Int): Column =
+    array_distinct(transform(shingles(text, k),
+      s => graft.functions.TextFns.polyHash(s)))
 
   /** Dot product as an ascending-index fold in DOUBLE. */
   def dotHof(a: Column, b: Column): Column =

@@ -20,9 +20,10 @@ class JobsSpec extends SparkSpec {
     // emit two tables each; clean_corpus also persists the maintained
     // signature table; curate_stream adds its feed + admitted tables
     // (it reuses clean_corpus's signature table, running right after
-    // it); index_lineitem and bloom_orders emit three each (layout,
-    // its index table, the pruned read); govern_corpus emits five
-    // release tables; audit_privacy emits four; clean_lines,
+    // it); index_lineitem emits two (layout, the pruned read) and
+    // bloom_orders three (layout, its Bloom table, the pruned read);
+    // govern_corpus emits five release tables; audit_privacy emits
+    // four; clean_lines,
     // sketch_users, audit_leakage and scan_rowkeys two each
     // rank_missing_edges, excerpt_audit, quote_audit and embed_pca also
     // emit two tables each; train_tokenizer emits three (vocab,
@@ -30,8 +31,8 @@ class JobsSpec extends SparkSpec {
     // train_quality_model two (weights, scores); screen_blocklist
     // three (hits, verdicts, clean); compact_screen_tables four
     // (winnow + sig tables and their compacted rewrites)
-    assert(dirs.size == Jobs.all.size + 42,
-      s"expected ${Jobs.all.size + 42} output tables, got $dirs")
+    assert(dirs.size == Jobs.all.size + 41,
+      s"expected ${Jobs.all.size + 41} output tables, got $dirs")
     dirs.foreach {
       case "ann_index" =>
         // composite SQ8/IVF layout, not one parquet relation — validate

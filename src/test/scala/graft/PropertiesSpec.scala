@@ -88,12 +88,11 @@ class PropertiesSpec extends SparkSpec {
       textGen.pureApply(Gen.Parameters.default, Seed(11L + i)))
     val df = texts.toDF("text")
     import graft.functions.native.NativeFns
-    import graft.functions.TextFns
     val mism = df
       .withColumn("__th", HofReference.tokenHashes48(col("text")))
       .select(
         (array_sort(NativeFns.shingleHashes($"text", 5)) =!=
-          array_sort(TextFns.shingleHashes($"text", 5))).as("d1"),
+          array_sort(HofReference.shingleHashes($"text", 5))).as("d1"),
         (NativeFns.simhashNative($"text") =!=
           HofReference.simhash48("__th")).as("d2"))
       .where($"d1" || $"d2").count()

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFns
 import graft.functions.native.NativeFns
 
 class ShinglesSpec extends SparkSpec {
@@ -12,7 +11,7 @@ class ShinglesSpec extends SparkSpec {
     val docs = Tables.load(spark, sf0001, "documents").limit(100)
     val mismatch = docs.select(
       array_sort(NativeFns.shingleHashes(col("text"), 5)).as("native"),
-      array_sort(TextFns.shingleHashes(col("text"), 5)).as("hof"))
+      array_sort(HofReference.shingleHashes(col("text"), 5)).as("hof"))
       .where(col("native") =!= col("hof"))
       .count()
     assert(mismatch == 0)
@@ -57,8 +56,8 @@ class ShinglesSpec extends SparkSpec {
   test("native jaccard == intersect/union sizes on real shingle sets") {
     val docs = Tables.load(spark, sf0001, "documents").limit(60)
       .select($"doc_id",
-        TextFns.shingles($"text", 5).as("sh"),
-        TextFns.shingles(expr("substring(text, 11)"), 5).as("sh2"))
+        HofReference.shingles($"text", 5).as("sh"),
+        HofReference.shingles(expr("substring(text, 11)"), 5).as("sh2"))
     val mismatch = docs.select(
       NativeFns.jaccardNative($"sh", $"sh2").as("native"),
       (size(array_intersect($"sh", $"sh2")).cast("double") /
