@@ -822,17 +822,14 @@ object Jobs {
         .write.mode("overwrite").parquet(ranksPath)
     else {
       // warm path emits the STALENESS WITNESS beside the ranks: the
-      // final round carries the previous rank (zero extra shuffle), so
-      // the max round-over-round movement — whether 3 rounds sufficed
-      // for this delta — is one ungrouped max. A non-converged refresh
-      // is visible in pagerank_witness instead of shipping silently.
-      val r = graft.operators.Graph.pageRankWarmM(pairs, "doc_a",
+      // final round carries the previous rank, so the max
+      // round-over-round movement — whether 3 rounds sufficed for this
+      // delta — is one ungrouped max. A non-converged refresh is
+      // visible in pagerank_witness instead of shipping silently.
+      val r = graft.operators.Graph.pageRankWarm(pairs, "doc_a",
         "doc_b", spark.read.parquet(ranksPath), "node", "rank",
-        iters = 3, keepPrevRank = true).df
-      r.agg(max(abs(col("rank") - col("prev_rank")))
-          .as("max_delta_micro"))
-        .select(col("max_delta_micro"),
-          (col("max_delta_micro") <= 1000L).as("converged"))
+        iters = 3, keepPrevRank = true)
+      graft.operators.Graph.pageRankStaleness(r)
         .write.mode("overwrite").parquet(s"$outDir/pagerank_witness")
       r.select(col("node"), col("rank"))
         .write.mode("overwrite").parquet(ranksPath)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.{MatStrategy, Materialize, Materialized}
+
 /** Distributed graph analytics beyond connected components
   * ([[Dedup.connectedComponents]]): triangle counting — the
   * clustering-coefficient / community-density signal over similarity
@@ -236,23 +238,21 @@ object Graph {
     * at least one surviving triangle": the screen's high-precision
     * backbone, with bridges and one-off collisions peeled away.
     *
-    * Same loop contract as [[kCoreM]]: each round is one
+    * Same loop contract as [[kCore]]: each round is one
     * degree-oriented triangle pass + one hash aggregation + two
     * key-only joins, rounds are materialized with lineage truncation,
     * convergence is an O(1) count witness, and `maxRounds` bounds the
     * peel depth (the oracle unrolls the same rounds — extra rounds
     * past the fixed point are no-ops on both sides, so results agree
     * at any maxRounds). Output: the surviving edges with their support
-    * RECOMPUTED on the final edge set.
+    * RECOMPUTED on the final edge set, spill-materialized so no RDD
+    * blocks outlive the call.
     */
-  def kTrussM(edges: DataFrame, aCol: String, bCol: String, k: Int,
-              maxRounds: Int = 5,
-              roundMat: graft.ops.MatStrategy = graft.ops.MatStrategy.Local,
-              mat: graft.ops.MatStrategy = graft.ops.MatStrategy.Default)
-      : graft.ops.Materialized =
-    kTrussWitnessedM(edges, aCol, bCol, k, maxRounds, roundMat, mat).edges
+  def kTruss(edges: DataFrame, aCol: String, bCol: String, k: Int,
+             maxRounds: Int = 5): DataFrame =
+    kTrussWitnessed(edges, aCol, bCol, k, maxRounds).edges
 
-  /** [[kTrussM]]'s result WITH its fixed-point witness: `converged`
+  /** [[kTruss]]'s result WITH its fixed-point witness: `converged`
     * true means the last peel deleted nothing, so the result IS the
     * k-truss; false means `maxRounds` ran out first and the result is
     * a partially peeled SUPERSET (some surviving edges may still have
@@ -262,19 +262,14 @@ object Graph {
     * deletions dropping the next round's supports, peel depth ≈ the
     * cascade length) fails HONESTLY at production depth instead of
     * returning a non-truss silently. */
-  final case class TrussResult(edges: graft.ops.Materialized,
-                               converged: Boolean, rounds: Int)
+  final case class TrussResult(edges: DataFrame, converged: Boolean,
+                               rounds: Int)
 
-  def kTrussWitnessedM(edges: DataFrame, aCol: String, bCol: String,
-                       k: Int, maxRounds: Int = 5,
-                       roundMat: graft.ops.MatStrategy =
-                         graft.ops.MatStrategy.Local,
-                       mat: graft.ops.MatStrategy =
-                         graft.ops.MatStrategy.Default): TrussResult = {
-    import graft.ops.Materialize
+  def kTrussWitnessed(edges: DataFrame, aCol: String, bCol: String,
+                      k: Int, maxRounds: Int = 5): TrussResult = {
     require(k >= 3, s"k must be >= 3 for a truss, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var eM = Materialize(canonicalEdges(edges, aCol, bCol), roundMat)
+    var eM = Materialize(canonicalEdges(edges, aCol, bCol), MatStrategy.Local)
     try {
       var nEdges = eM.df.count()
       var round = 0
@@ -287,11 +282,9 @@ object Graph {
       // skipped. A maxRounds exhaustion still recomputes honestly.
       var haveSupport = false
       while (round < maxRounds && !converged) {
-        val e = eM.df
         val nextM = Materialize(
-          edgeSupport(e, "a", "b")
-            .where(col("support") >= k - 2),
-          roundMat)
+          edgeSupport(eM.df, "a", "b").where(col("support") >= k - 2),
+          MatStrategy.Local)
         val nNext = nextM.df.count() // O(1) convergence witness
         converged = nNext == nEdges
         nEdges = nNext
@@ -305,29 +298,13 @@ object Graph {
           s"kTruss(k=$k) did not reach its fixed point in $maxRounds " +
             "rounds: returning a partially peeled SUPERSET of the " +
             "truss (check TrussResult.converged)")
-      val outM = Materialize(
+      val out = Materialize(
         if (converged && haveSupport)
           eM.df.select(col("a"), col("b"), col("support"))
-        else edgeSupport(eM.df, "a", "b"), mat)
-      val out =
-        if (mat == graft.ops.MatStrategy.PassThrough) {
-          // a lazy result replays edgeSupport over the final round's
-          // blocks: defer the round-state release into the handle
-          // (the Similarity.scala stored-index device) instead of
-          // freeing lineage-truncated blocks the caller still needs
-          val dep = eM
-          graft.ops.Materialized(outM.df,
-            () => { outM.release(); dep.release() })
-        } else { eM.release(); outM }
-      TrussResult(out, converged, round)
-    } catch { case t: Throwable => eM.release(); throw t }
+        else edgeSupport(eM.df, "a", "b"), MatStrategy.Default)
+      TrussResult(out.df, converged, round)
+    } finally eM.release()
   }
-
-  /** [[kTrussM]] with default materialization, returning the bare
-    * frame: no RDD blocks outlive the call. */
-  def kTruss(edges: DataFrame, aCol: String, bCol: String, k: Int,
-             maxRounds: Int = 5): DataFrame =
-    kTrussM(edges, aCol, bCol, k, maxRounds).df
 
   /** [[clusteringCoefficients]] maintained under edge APPEND: the
     * stored per-node triangle counts fold with [[triangleDelta]]'s
@@ -538,6 +515,108 @@ object Graph {
       .where(col("d") > maxDegree)
   }
 
+  /** The iterative operators' round loop: `iters` applications of
+    * `step` (given the current state and the 1-based round number) to
+    * `start`. The round state is checkpointed (Local) every second
+    * round and after the last, so the lazy round between truncations
+    * is planned and executed with the next one — half the per-round
+    * job/commit fixed cost, identical results (every lane is integer,
+    * so values are materialization-independent) — and lineage never
+    * grows past two rounds. A checkpoint's predecessor is released
+    * only after the checkpoint has landed. `out` of the final state is
+    * spill-materialized (Default) before that state's blocks are
+    * released, so no RDD blocks outlive the call.
+    */
+  private def iterate(start: DataFrame, iters: Int)(
+      step: (DataFrame, Int) => DataFrame)(
+      out: DataFrame => DataFrame): DataFrame = {
+    require(iters >= 1, s"iters must be >= 1, got $iters")
+    var state = start
+    var free: () => Unit = () => ()
+    try {
+      for (i <- 1 to iters) {
+        val next = step(state, i)
+        if (i % 2 == 0 || i == iters) {
+          val m = Materialize(next, MatStrategy.Local)
+          free()
+          state = m.df
+          free = m.release
+        } else state = next
+      }
+      Materialize(out(state), MatStrategy.Default).df
+    } finally free()
+  }
+
+  /** The rank-round core that [[pageRank]], [[pageRankWarm]] and
+    * [[personalizedPageRank]] share; they differ only in the restart
+    * mass and the start vector. Every round is
+    *
+    *   r'(v) = b(v) + (17 · Σ_{u~v} (r(u) div deg(u))) div 20
+    *
+    * in integer micro-units. `restart` maps the node set `(v)` to the
+    * node-complete restart relation `(v, b)`; `start` maps that
+    * relation to the round-0 ranks `(v, r)`.
+    *
+    * Scale shape: the directed edge list CARRIES its source degree
+    * (one grouped-window count over the src-partitioned union, no
+    * degree join per round) and is materialized once, as is the
+    * restart relation. The restart mass rides the contribution
+    * aggregation as one zero-contribution row per node, which also
+    * completes the node set, so each round is ONE |E|-scale hash join
+    * plus ONE aggregation (sum(b) recovers b(v) exactly: one restart
+    * row per node). Rounds run through [[iterate]].
+    *
+    * `keepPrevRank`: the LAST round joins the previous ranks onto its
+    * sums (same rows — every round is node-complete), so the
+    * penultimate rank rides into the output as `prev_rank`, the
+    * staleness witness's input, for one |V| join on the final round.
+    */
+  private def rankRounds(edges: DataFrame, aCol: String, bCol: String,
+                         iters: Int, keepPrevRank: Boolean = false)(
+      restart: DataFrame => DataFrame,
+      start: DataFrame => DataFrame): DataFrame = {
+    val e = canonicalEdges(edges, aCol, bCol)
+    val directedM = Materialize(
+      e.select(col("a").as("src"), col("b").as("dst"))
+        .union(e.select(col("b").as("src"), col("a").as("dst")))
+        .repartition(col("src"))
+        .withColumn("d",
+          count(lit(1)).over(Window.partitionBy(col("src")))),
+      MatStrategy.Local)
+    var restartM: Materialized = null
+    try {
+      val directed = directedM.df
+      restartM = Materialize(
+        restart(directed.select(col("src").as("v")).distinct()),
+        MatStrategy.Local)
+      val rs = restartM.df
+      val restartRows = rs.select(col("v"), lit(0L).as("c"), col("b"))
+      val r = (col("b") + expr("(17 * s) div 20")).as("r")
+      iterate(start(rs), iters) { (ranks, i) =>
+        val sums = directed
+          .join(ranks.select(col("v").as("src"), col("r")), "src")
+          .select(col("dst").as("v"), expr("r div d").as("c"),
+            lit(0L).as("b"))
+          .union(restartRows)
+          .groupBy("v")
+          .agg(sum(col("c")).as("s"), sum(col("b")).as("b"))
+        if (keepPrevRank && i == iters)
+          ranks.select(col("v"), col("r").as("__pr"))
+            .join(sums, Seq("v"))
+            .select(col("v"), r, col("__pr"))
+        else sums.select(col("v"), r)
+      } { ranks =>
+        val cols = Seq(col("v").as("node"), col("r").as("rank"))
+        ranks.select(
+          (if (keepPrevRank) cols :+ col("__pr").as("prev_rank")
+           else cols): _*)
+      }
+    } finally {
+      directedM.release()
+      if (restartM != null) restartM.release()
+    }
+  }
+
   /** Deterministic FIXED-POINT PageRank over the undirected graph —
     * the same integer-arithmetic determinism trick as the k-means
     * quantizer (Similarity.kmeansQuantized): ranks live in integer
@@ -551,94 +630,17 @@ object Graph {
     * engines — a floating-point PageRank is none of these. Dangling
     * mass is dropped (every node here has degree ≥ 1 by construction).
     *
-    * Scale shape: the edge list, degrees, and node set are materialized
-    * ONCE and reused every round; each round is one hash join onto the
-    * current ranks plus one aggregation, checkpoint-truncated like
-    * [[Dedup.connectedComponentsM]] so lineage never grows unboundedly.
+    * Scale shape: [[rankRounds]] — the edge list and node set are
+    * materialized ONCE and reused every round; each round is one hash
+    * join onto the current ranks plus one aggregation, checkpoint-
+    * truncated every second round so lineage never grows unboundedly.
     * Fixed `iters` (power iteration), no convergence collect.
-    *
-    * `matEvery` sets the checkpoint cadence: rounds between checkpoints
-    * stay lazy, so Catalyst plans (and one action executes) a
-    * `matEvery`-round chain — halving the per-round job/commit fixed
-    * cost at cadence 2 with identical results (integer arithmetic is
-    * materialization-independent). Lineage depth between truncations is
-    * bounded by `matEvery` joins+aggregations; keep it small (2-3) so
-    * plan size and retry cost stay flat at 1000-executor scale.
     */
-  def pageRankM(edges: DataFrame, aCol: String, bCol: String,
-                iters: Int = 10,
-                roundMat: graft.ops.MatStrategy = graft.ops.MatStrategy.Local,
-                mat: graft.ops.MatStrategy = graft.ops.MatStrategy.Default,
-                matEvery: Int = 2)
-      : graft.ops.Materialized = {
-    import graft.ops.Materialize
-    require(mat != graft.ops.MatStrategy.PassThrough,
-      "mat must be an eager strategy: the iterative round state this " +
-        "operator's output plan reads is released before return, so a " +
-        "PassThrough result would replay freed lineage-truncated blocks")
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(matEvery >= 1, s"matEvery must be >= 1, got $matEvery")
-    val e = canonicalEdges(edges, aCol, bCol)
-    // The materialized edge list CARRIES the source degree (one
-    // grouped-window count over the src-partitioned union — no join):
-    // the original shape re-joined a separate degree relation into
-    // every round, one |E|-scale hash join per iteration that this
-    // column makes free.
-    val directedM = Materialize(
-      e.select(col("a").as("src"), col("b").as("dst"))
-        .union(e.select(col("b").as("src"), col("a").as("dst")))
-        .repartition(col("src"))
-        .withColumn("d",
-          count(lit(1)).over(Window.partitionBy(col("src")))),
-      roundMat)
-    var nodesM: graft.ops.Materialized = null
-    try {
-      val directed = directedM.df
-      nodesM = Materialize(
-        directed.select(col("src").as("v")).distinct(), roundMat)
-      val nodes = nodesM.df
-      var ranks = nodes.withColumn("r", lit(1000000L))
-      var freeRanks: () => Unit = () => ()
-      for (i <- 1 to iters) {
-        // Node completion rides the aggregation itself: a zero
-        // contribution row per node unions into the same groupBy, so
-        // the per-round left join that re-completed the node set is
-        // gone — each round is ONE |E|-scale hash join + ONE
-        // aggregation (sum(0 ∪ contribs) = coalesce(sum(contribs), 0)
-        // exactly, all integer lanes).
-        val contrib = directed
-          .join(ranks.withColumnRenamed("v", "src"), "src")
-          .select(col("dst").as("v"), expr("r div d").as("c"))
-        val nextDf = contrib
-          .union(nodes.select(col("v"), lit(0L).as("c")))
-          .groupBy("v").agg(sum(col("c")).as("s"))
-          .select(col("v"),
-            (lit(150000L) + expr("(17 * s) div 20")).as("r"))
-        if (i % matEvery == 0 || i == iters) {
-          val next = Materialize(nextDf, roundMat)
-          // the lazy rounds since the last checkpoint rebuilt from the
-          // previous materialized ranks — release it only after the new
-          // checkpoint has landed
-          freeRanks()
-          ranks = next.df
-          freeRanks = next.release
-        } else ranks = nextDf
-      }
-      val out = Materialize(
-        ranks.select(col("v").as("node"), col("r").as("rank")), mat)
-      freeRanks()
-      out
-    } finally {
-      directedM.release()
-      if (nodesM != null) nodesM.release()
-    }
-  }
-
-  /** [[pageRankM]] with default materialization, returning the bare
-    * frame: no RDD blocks outlive the call (the CC contract). */
   def pageRank(edges: DataFrame, aCol: String, bCol: String,
                iters: Int = 10): DataFrame =
-    pageRankM(edges, aCol, bCol, iters).df
+    rankRounds(edges, aCol, bCol, iters)(
+      _.select(col("v"), lit(150000L).as("b")),
+      _.select(col("v"), lit(1000000L).as("r")))
 
   /** WARM-START PageRank — the incremental-maintenance form: instead
     * of re-running the full iteration count from the uniform start
@@ -649,144 +651,68 @@ object Graph {
     * that touches a small neighborhood leaves most stored ranks
     * already at (or near) the new fixed point — so the 100 TB refresh
     * costs `iters` rounds instead of the cold count, with the SAME
-    * per-round shuffle shape as [[pageRankM]]. Nodes new in this
+    * per-round shuffle shape as [[pageRank]]. Nodes new in this
     * version (absent from `prev`) start at the uniform 1000000; nodes
     * that left the graph drop out (ranks are per-node-set, not
     * carried). Everything stays in the exact integer lanes
     * (r div d, damping 17/20, restart 150000), so a SQL oracle unrolls
     * cold rounds + warm rounds and must match bit-for-bit — and
     * because the recurrence is identical, warm-starting with
-    * prev = uniform reproduces [[pageRankM]] exactly (GraphSpec pins
-    * both properties).
+    * prev = uniform reproduces [[pageRank]] exactly (GraphSpec pins
+    * both properties). The seed join runs inside the first
+    * checkpointed round, which truncates `prev`'s lineage.
+    *
+    * `keepPrevRank` adds the penultimate round's rank as `prev_rank`
+    * ([[pageRankStaleness]]'s input).
     */
-  def pageRankWarmM(edges: DataFrame, aCol: String, bCol: String,
-                    prev: DataFrame, nodeCol: String, rankCol: String,
-                    iters: Int = 3,
-                    roundMat: graft.ops.MatStrategy =
-                      graft.ops.MatStrategy.Local,
-                    mat: graft.ops.MatStrategy =
-                      graft.ops.MatStrategy.Default,
-                    matEvery: Int = 2,
-                    keepPrevRank: Boolean = false): graft.ops.Materialized = {
-    import graft.ops.Materialize
-    require(mat != graft.ops.MatStrategy.PassThrough,
-      "mat must be an eager strategy: the iterative round state this " +
-        "operator's output plan reads is released before return, so a " +
-        "PassThrough result would replay freed lineage-truncated blocks")
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(matEvery >= 1, s"matEvery must be >= 1, got $matEvery")
-    val e = canonicalEdges(edges, aCol, bCol)
-    // degree carried on the materialized edge list + node completion
-    // fused into the round aggregation — see [[pageRankM]]
-    val directedM = Materialize(
-      e.select(col("a").as("src"), col("b").as("dst"))
-        .union(e.select(col("b").as("src"), col("a").as("dst")))
-        .repartition(col("src"))
-        .withColumn("d",
-          count(lit(1)).over(Window.partitionBy(col("src")))),
-      roundMat)
-    var nodesM: graft.ops.Materialized = null
-    var r0M: graft.ops.Materialized = null
-    try {
-      val directed = directedM.df
-      nodesM = Materialize(
-        directed.select(col("src").as("v")).distinct(), roundMat)
-      val nodes = nodesM.df
-      // seed from the stored ranks; the left join prices one hash
-      // shuffle of |V| rows — ~one extra round — and truncates the
-      // caller's prev lineage out of every subsequent round
-      r0M = Materialize(
-        nodes.join(
-          prev.select(col(nodeCol).as("v"), col(rankCol).as("__r0")),
-          Seq("v"), "left")
-          .select(col("v"),
-            coalesce(col("__r0"), lit(1000000L)).as("r")),
-        roundMat)
-      var ranks = r0M.df
-      var freeRanks: () => Unit = () => ()
-      for (i <- 1 to iters) {
-        val contrib = directed
-          .join(ranks.withColumnRenamed("v", "src"), "src")
-          .select(col("dst").as("v"), expr("r div d").as("c"))
-        val sums = contrib
-          .union(nodes.select(col("v"), lit(0L).as("c")))
-          .groupBy("v").agg(sum(col("c")).as("s"))
-        // keepPrevRank: the LAST round's seed join reads the previous
-        // ranks instead of the bare node set (same rows — every round
-        // is node-complete), so the penultimate rank rides into the
-        // output as a column — the staleness witness (round-over-round
-        // delta) costs one |V| join on the final round only
-        val nextDf =
-          if (keepPrevRank && i == iters)
-            ranks.select(col("v"), col("r").as("__pr"))
-              .join(sums, Seq("v"), "left")
-              .select(col("v"),
-                (lit(150000L) + expr("(17 * coalesce(s, 0L)) div 20"))
-                  .as("r"),
-                col("__pr"))
-          else sums
-            .select(col("v"),
-              (lit(150000L) + expr("(17 * s) div 20")).as("r"))
-        if (i % matEvery == 0 || i == iters) {
-          val next = Materialize(nextDf, roundMat)
-          freeRanks()
-          ranks = next.df
-          freeRanks = next.release
-        } else ranks = nextDf
-      }
-      val outCols =
-        if (keepPrevRank)
-          Seq(col("v").as("node"), col("r").as("rank"),
-            col("__pr").as("prev_rank"))
-        else Seq(col("v").as("node"), col("r").as("rank"))
-      val out = Materialize(ranks.select(outCols: _*), mat)
-      freeRanks()
-      out
-    } finally {
-      directedM.release()
-      if (nodesM != null) nodesM.release()
-      if (r0M != null) r0M.release()
-    }
-  }
-
-  /** [[pageRankWarmM]] with default materialization, returning the
-    * bare frame (the [[pageRank]] contract). */
   def pageRankWarm(edges: DataFrame, aCol: String, bCol: String,
                    prev: DataFrame, nodeCol: String, rankCol: String,
-                   iters: Int = 3): DataFrame =
-    pageRankWarmM(edges, aCol, bCol, prev, nodeCol, rankCol, iters).df
+                   iters: Int = 3,
+                   keepPrevRank: Boolean = false): DataFrame =
+    rankRounds(edges, aCol, bCol, iters, keepPrevRank)(
+      _.select(col("v"), lit(150000L).as("b")),
+      _.join(prev.select(col(nodeCol).as("v"), col(rankCol).as("__r0")),
+          Seq("v"), "left")
+        .select(col("v"), coalesce(col("__r0"), lit(1000000L)).as("r")))
 
-  /** STALENESS WITNESS of a warm refresh — the x_ktruss_witness device
-    * applied to the fixed-point family: one row
-    * `(max_delta_micro, converged)` where max_delta_micro is the
-    * largest round-over-round rank movement |r_iters − r_{iters−1}|
-    * across all nodes and converged = (max_delta_micro ≤ tolMicro).
-    * x_pagerank_incr proves the warm rounds reproduce the spec'd fixed
-    * point; THIS tells `refresh_pagerank` whether `iters` rounds
-    * actually sufficed for a given edge delta — a too-stale warm start
-    * (deep delta, too few rounds) fails loudly instead of shipping
-    * half-refreshed ranks. Exact integers end to end, so a SQL oracle
-    * replays the flag bit-for-bit.
-    *
-    * Cost: the refresh itself — the final round carries the previous
-    * rank as a column (zero extra shuffle), and the witness is one
-    * ungrouped max over the output.
+  /** The staleness verdict over a [[pageRankWarm]] result computed
+    * with `keepPrevRank`: one row `(max_delta_micro, converged)` where
+    * max_delta_micro is the largest round-over-round rank movement
+    * |rank − prev_rank| across all nodes and converged =
+    * (max_delta_micro ≤ tolMicro). One ungrouped max over the output.
     */
-  def pageRankWarmWitness(edges: DataFrame, aCol: String, bCol: String,
-                          prev: DataFrame, nodeCol: String,
-                          rankCol: String, iters: Int = 3,
-                          tolMicro: Long = 1000L): DataFrame = {
+  def pageRankStaleness(warm: DataFrame,
+                        tolMicro: Long = 1000L): DataFrame = {
     require(tolMicro >= 0, s"tolMicro must be >= 0, got $tolMicro")
-    pageRankWarmM(edges, aCol, bCol, prev, nodeCol, rankCol, iters,
-        keepPrevRank = true).df
-      .agg(max(abs(col("rank") - col("prev_rank")))
+    warm.agg(max(abs(col("rank") - col("prev_rank")))
         .as("max_delta_micro"))
       .select(col("max_delta_micro"),
         (col("max_delta_micro") <= tolMicro).as("converged"))
   }
 
+  /** STALENESS WITNESS of a warm refresh — the x_ktruss_witness device
+    * applied to the fixed-point family: [[pageRankStaleness]] of a
+    * `keepPrevRank` [[pageRankWarm]]. x_pagerank_incr proves the warm
+    * rounds reproduce the spec'd fixed point; THIS tells
+    * `refresh_pagerank` whether `iters` rounds actually sufficed for a
+    * given edge delta — a too-stale warm start (deep delta, too few
+    * rounds) fails loudly instead of shipping half-refreshed ranks.
+    * Exact integers end to end, so a SQL oracle replays the flag
+    * bit-for-bit.
+    *
+    * Cost: the refresh itself — the final round carries the previous
+    * rank as a column (one |V| join), and the witness is one ungrouped
+    * max over the output.
+    */
+  def pageRankWarmWitness(edges: DataFrame, aCol: String, bCol: String,
+                          prev: DataFrame, nodeCol: String,
+                          rankCol: String, iters: Int = 3,
+                          tolMicro: Long = 1000L): DataFrame =
+    pageRankStaleness(pageRankWarm(edges, aCol, bCol, prev, nodeCol,
+      rankCol, iters, keepPrevRank = true), tolMicro)
+
   /** Personalized (topic-sensitive) PageRank — Haveliwala, WWW 2002 —
-    * in the same exact-integer lanes as [[pageRankM]]: the restart
+    * in the same exact-integer lanes as [[pageRank]]: the restart
     * mass that the global variant spreads as 150000 micro-units per
     * node is instead concentrated uniformly on the SEED nodes
     * ((150000 · |V|) div |S| each, exact integer division), so rank
@@ -803,46 +729,21 @@ object Graph {
     * (with zero seeds every base is null-coalesced to 0 and all ranks
     * collapse to 0 — deterministic, but meaningless).
     *
-    * Scale shape: identical to [[pageRankM]] — edges/degrees/nodes
-    * materialized once, the per-node base rides with the node table
-    * (the |V|/|S| scalars join as a broadcast one-row stat, nothing
-    * collected), checkpoint-truncated rounds.
+    * Scale shape: identical to [[pageRank]] ([[rankRounds]]); the
+    * per-node base is the restart relation (the |V|/|S| scalars join
+    * as a broadcast one-row stat, nothing collected) and the start
+    * vector.
     */
-  def personalizedPageRankM(edges: DataFrame, aCol: String, bCol: String,
-                            seeds: DataFrame, seedCol: String,
-                            iters: Int = 6,
-                            roundMat: graft.ops.MatStrategy =
-                              graft.ops.MatStrategy.Local,
-                            mat: graft.ops.MatStrategy =
-                              graft.ops.MatStrategy.Default,
-                            matEvery: Int = 2)
-      : graft.ops.Materialized = {
-    import graft.ops.Materialize
-    require(mat != graft.ops.MatStrategy.PassThrough,
-      "mat must be an eager strategy: the iterative round state this " +
-        "operator's output plan reads is released before return, so a " +
-        "PassThrough result would replay freed lineage-truncated blocks")
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(matEvery >= 1, s"matEvery must be >= 1, got $matEvery")
-    val e = canonicalEdges(edges, aCol, bCol)
-    // degree carried on the materialized edge list — see [[pageRankM]]
-    val directedM = Materialize(
-      e.select(col("a").as("src"), col("b").as("dst"))
-        .union(e.select(col("b").as("src"), col("a").as("dst")))
-        .repartition(col("src"))
-        .withColumn("d",
-          count(lit(1)).over(Window.partitionBy(col("src")))),
-      roundMat)
-    var baseM: graft.ops.Materialized = null
-    try {
-      val directed = directedM.df
-      val nodes = directed.select(col("src").as("v")).distinct()
-      val seedSet = nodes.join(
-        seeds.select(col(seedCol).as("v")).distinct(), Seq("v"),
-        "left_semi")
-      val stats = nodes.agg(count(lit(1)).as("n_nodes"))
-        .crossJoin(seedSet.agg(count(lit(1)).as("n_seeds")))
-      baseM = Materialize(
+  def personalizedPageRank(edges: DataFrame, aCol: String, bCol: String,
+                           seeds: DataFrame, seedCol: String,
+                           iters: Int = 6): DataFrame =
+    rankRounds(edges, aCol, bCol, iters)(
+      nodes => {
+        val seedSet = nodes.join(
+          seeds.select(col(seedCol).as("v")).distinct(), Seq("v"),
+          "left_semi")
+        val stats = nodes.agg(count(lit(1)).as("n_nodes"))
+          .crossJoin(seedSet.agg(count(lit(1)).as("n_seeds")))
         nodes
           .join(seedSet.select(col("v"), lit(1L).as("__seed")),
             Seq("v"), "left")
@@ -850,51 +751,9 @@ object Graph {
           .select(col("v"),
             coalesce(when(col("__seed").isNotNull,
               expr("(150000 * n_nodes) div n_seeds")), lit(0L))
-              .as("base")),
-        roundMat)
-      val base = baseM.df
-      var ranks = base.select(col("v"), col("base").as("r"))
-      var freeRanks: () => Unit = () => ()
-      for (i <- 1 to iters) {
-        // the per-node restart base rides the contribution aggregation
-        // as a tagged zero-contribution row (node completion included:
-        // the base relation is node-complete), so each round is ONE
-        // |E| join + ONE aggregation — the per-round base left join is
-        // gone. sum(b) recovers base exactly (one base row per node),
-        // sum(c) the contributions; integer lanes unchanged.
-        val contrib = directed
-          .join(ranks.select(col("v").as("src"), col("r")), "src")
-          .select(col("dst").as("v"), expr("r div d").as("c"),
-            lit(0L).as("b"))
-        val nextDf = contrib
-          .union(base.select(col("v"), lit(0L).as("c"),
-            col("base").as("b")))
-          .groupBy("v")
-          .agg(sum(col("c")).as("s"), sum(col("b")).as("bb"))
-          .select(col("v"),
-            (col("bb") + expr("(17 * s) div 20")).as("r"))
-        if (i % matEvery == 0 || i == iters) {
-          val next = Materialize(nextDf, roundMat)
-          freeRanks()
-          ranks = next.df
-          freeRanks = next.release
-        } else ranks = nextDf
-      }
-      val out = Materialize(
-        ranks.select(col("v").as("node"), col("r").as("rank")), mat)
-      freeRanks()
-      out
-    } finally {
-      directedM.release()
-      if (baseM != null) baseM.release()
-    }
-  }
-
-  /** [[personalizedPageRankM]] without the release handle. */
-  def personalizedPageRank(edges: DataFrame, aCol: String, bCol: String,
-                           seeds: DataFrame, seedCol: String,
-                           iters: Int = 6): DataFrame =
-    personalizedPageRankM(edges, aCol, bCol, seeds, seedCol, iters).df
+              .as("b"))
+      },
+      _.select(col("v"), col("b").as("r")))
 
   /** Deterministic SYNCHRONOUS label propagation (Raghavan, Albert &
     * Kumara 2007) for community detection — the mesoscale between
@@ -914,72 +773,38 @@ object Graph {
     * labels, one (node, label) count aggregation, and one
     * deterministic argmax via `max(struct(cnt, -lbl))` — an
     * aggregation, not a window, so the round needs no sort. The
-    * adjacency and node set are materialized ONCE; rounds checkpoint
-    * every `matEvery` like [[pageRankM]], keeping lineage flat. Fixed
+    * adjacency and node set are materialized ONCE; rounds run through
+    * [[iterate]] like [[pageRank]], keeping lineage flat. Fixed
     * `iters`, no convergence collect.
     */
-  def labelPropagationM(edges: DataFrame, aCol: String, bCol: String,
-                        iters: Int = 4,
-                        roundMat: graft.ops.MatStrategy =
-                          graft.ops.MatStrategy.Local,
-                        mat: graft.ops.MatStrategy =
-                          graft.ops.MatStrategy.Default,
-                        matEvery: Int = 2)
-      : graft.ops.Materialized = {
-    import graft.ops.Materialize
-    require(mat != graft.ops.MatStrategy.PassThrough,
-      "mat must be an eager strategy: the iterative round state this " +
-        "operator's output plan reads is released before return, so a " +
-        "PassThrough result would replay freed lineage-truncated blocks")
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(matEvery >= 1, s"matEvery must be >= 1, got $matEvery")
+  def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
+                       iters: Int = 4): DataFrame = {
     val e = canonicalEdges(edges, aCol, bCol)
     val adjM = Materialize(
       e.select(col("a").as("v"), col("b").as("n"))
         .union(e.select(col("b").as("v"), col("a").as("n")))
         .repartition(col("n")),
-      roundMat)
-    var nodesM: graft.ops.Materialized = null
+      MatStrategy.Local)
+    var nodesM: Materialized = null
     try {
       val adj = adjM.df
-      nodesM = Materialize(adj.select(col("v")).distinct(), roundMat)
-      val nodes = nodesM.df
-      var labels = nodes.withColumn("lbl", col("v"))
-      var freeLabels: () => Unit = () => ()
-      for (i <- 1 to iters) {
-        val votes = adj
-          .join(labels.withColumnRenamed("v", "n"), "n")
+      nodesM = Materialize(adj.select(col("v")).distinct(),
+        MatStrategy.Local)
+      iterate(nodesM.df.withColumn("lbl", col("v")), iters) { (labels, _) =>
+        adj.join(labels.withColumnRenamed("v", "n"), "n")
           .select(col("v"), col("lbl"))
           .union(labels.select(col("v"), col("lbl")))
-        val nextDf = votes
           .groupBy(col("v"), col("lbl"))
           .agg(count(lit(1)).as("cnt"))
           .groupBy(col("v"))
           .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
           .select(col("v"), (-col("m.nl")).as("lbl"))
-        if (i % matEvery == 0 || i == iters) {
-          val next = Materialize(nextDf, roundMat)
-          freeLabels()
-          labels = next.df
-          freeLabels = next.release
-        } else labels = nextDf
-      }
-      val out = Materialize(
-        labels.select(col("v").as("node"), col("lbl").as("community")),
-        mat)
-      freeLabels()
-      out
+      } (_.select(col("v").as("node"), col("lbl").as("community")))
     } finally {
       adjM.release()
       if (nodesM != null) nodesM.release()
     }
   }
-
-  /** [[labelPropagationM]] with default materialization, returning the
-    * bare frame: no RDD blocks outlive the call. */
-  def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
-                       iters: Int = 4): DataFrame =
-    labelPropagationM(edges, aCol, bCol, iters).df
 
   /** k-core decomposition by synchronous peeling (Seidman 1983; the
     * distributed formulation of Montresor, De Pellegrini & Miorandi
@@ -1006,30 +831,23 @@ object Graph {
     * witness (edge count, the [[Dedup.connectedComponentsM]] device).
     * Rounds run at most `maxRounds` ≈ O(peel depth); real similarity
     * graphs converge in a handful. Each round's adjacency is
-    * checkpoint-truncated so lineage stays flat.
+    * checkpoint-truncated so lineage stays flat, and the survivors
+    * are spill-materialized so no RDD blocks outlive the call.
     */
-  def kCoreM(edges: DataFrame, aCol: String, bCol: String, k: Int,
-             maxRounds: Int = 8,
-             roundMat: graft.ops.MatStrategy = graft.ops.MatStrategy.Local,
-             mat: graft.ops.MatStrategy = graft.ops.MatStrategy.Default)
-      : graft.ops.Materialized =
-    kCoreWitnessedM(edges, aCol, bCol, k, maxRounds, roundMat, mat).nodes
+  def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
+            maxRounds: Int = 8): DataFrame =
+    kCoreWitnessed(edges, aCol, bCol, k, maxRounds).nodes
 
-  /** [[kCoreM]]'s result WITH its fixed-point witness — same honesty
-    * contract as [[kTrussWitnessedM]]: `converged` false means
+  /** [[kCore]]'s result WITH its fixed-point witness — same honesty
+    * contract as [[kTrussWitnessed]]: `converged` false means
     * `maxRounds` ran out mid-cascade and the survivors are a SUPERSET
     * of the k-core (some may still have degree < k); `rounds` is how
     * many peels ran. */
-  final case class CoreResult(nodes: graft.ops.Materialized,
-                              converged: Boolean, rounds: Int)
+  final case class CoreResult(nodes: DataFrame, converged: Boolean,
+                              rounds: Int)
 
-  def kCoreWitnessedM(edges: DataFrame, aCol: String, bCol: String,
-                      k: Int, maxRounds: Int = 8,
-                      roundMat: graft.ops.MatStrategy =
-                        graft.ops.MatStrategy.Local,
-                      mat: graft.ops.MatStrategy =
-                        graft.ops.MatStrategy.Default): CoreResult = {
-    import graft.ops.Materialize
+  def kCoreWitnessed(edges: DataFrame, aCol: String, bCol: String,
+                     k: Int, maxRounds: Int = 8): CoreResult = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val e = canonicalEdges(edges, aCol, bCol)
@@ -1037,8 +855,8 @@ object Graph {
       e.select(col("a").as("src"), col("b").as("dst"))
         .union(e.select(col("b").as("src"), col("a").as("dst")))
         .repartition(col("src")),
-      roundMat)
-    var keepM: graft.ops.Materialized = null
+      MatStrategy.Local)
+    var keepM: Materialized = null
     try {
       var nEdges = adjM.df.count()
       var round = 0
@@ -1053,10 +871,10 @@ object Graph {
           adj.groupBy("src").agg(count(lit(1)).as("d"))
             .where(col("d") >= k)
             .select(col("src").as("v"), col("d")),
-          roundMat)
+          MatStrategy.Local)
         val keep = nextKeepM.df
         // swap keepM in BEFORE materializing nextM: if that
-        // materialization throws, the catch below releases keepM —
+        // materialization throws, the finally below releases keepM —
         // which must by then be the round's fresh relation, or it
         // would leak (the old one is released here instead)
         if (keepM != null) keepM.release()
@@ -1067,7 +885,7 @@ object Graph {
             .join(keep.select(col("v").as("dst")), Seq("dst"),
               "left_semi")
             .select(col("src"), col("dst")),
-          roundMat)
+          MatStrategy.Local)
         val nNext = nextM.df.count() // O(1) convergence witness
         converged = nNext == nEdges
         nEdges = nNext
@@ -1080,41 +898,36 @@ object Graph {
           s"kCore(k=$k) did not reach its fixed point in $maxRounds " +
             "rounds: returning a partially peeled SUPERSET of the " +
             "core (check CoreResult.converged)")
-      val outM = Materialize(
+      val out = Materialize(
         if (converged && keepM != null)
           keepM.df.select(col("v").as("node"), col("d").as("core_deg"))
         else
           adjM.df.groupBy("src").agg(count(lit(1)).as("core_deg"))
             .select(col("src").as("node"), col("core_deg")),
-        mat)
-      val out =
-        if (mat == graft.ops.MatStrategy.PassThrough) {
-          // lazy result re-reads the final round's blocks (adjacency
-          // or, when converged, the kept-degree relation): defer both
-          // releases into the handle (same contract as kTrussM)
-          val depA = adjM
-          val depK = keepM
-          graft.ops.Materialized(outM.df,
-            () => { outM.release(); depA.release()
-              if (depK != null) depK.release() })
-        } else {
-          adjM.release()
-          if (keepM != null) keepM.release()
-          outM
-        }
-      CoreResult(out, converged, round)
-    } catch { case t: Throwable =>
+        MatStrategy.Default)
+      CoreResult(out.df, converged, round)
+    } finally {
       adjM.release()
       if (keepM != null) keepM.release()
-      throw t
     }
   }
 
-  /** [[kCoreM]] with default materialization, returning the bare
-    * frame: no RDD blocks outlive the call. */
-  def kCore(edges: DataFrame, aCol: String, bCol: String, k: Int,
-            maxRounds: Int = 8): DataFrame =
-    kCoreM(edges, aCol, bCol, k, maxRounds).df
+  /** [[hits]]'s half-round core, exposed for the plan spec:
+    * materialize the raw `(v, s)` scores AND fetch their max in ONE
+    * job ([[graft.ops.Materialize.localWithScalar]]), then splice the
+    * max back as a literal — so the renormalized frame is a bare
+    * shuffle-free PROJECTION over the checkpointed blocks, where the
+    * crossJoin(broadcast(agg(max))) formulation cost a second barrier
+    * aggregation plus a broadcast exchange per half-round. An empty
+    * node set yields a null max; the frame is empty then, so the
+    * divisor value is irrelevant — 1 keeps the expression total.
+    */
+  private[graft] def renormFused(raw: DataFrame)
+      : (Materialized, DataFrame) = {
+    val (m, row) = Materialize.localWithScalar(raw, Seq(max(col("s"))))
+    val mx = if (row.isNullAt(0)) 1L else row.getLong(0)
+    (m, m.df.select(col("v"), expr(s"s * 1000000 div ${mx}L").as("s")))
+  }
 
   /** Deterministic integer HITS (Kleinberg, JACM 1999) over the
     * DIRECTED canonical edge set — each undirected pair contributes
@@ -1138,55 +951,23 @@ object Graph {
     * The edge list and node set are materialized once; each
     * half-round's raw sums are checkpointed and the previous round's
     * blocks released as soon as their last consumer has landed, so
-    * lineage stays flat at any `iters` (the [[pageRankM]] contract).
+    * lineage stays flat at any `iters` (the [[pageRank]] contract).
     * The renorm max is fetched IN THE SAME JOB that materializes the
     * raw sums ([[graft.ops.Materialize.localWithScalar]]) and spliced
     * back as a literal — the K5 collect→literal pattern, one bounded
     * row — so each half-round costs ONE barrier, not the two (checkpoint
     * job + broadcast-max job) of the crossJoin formulation this
-    * replaced. Values are identical; only the stage count halves.
+    * replaced. Values are identical; only the stage count halves. The
+    * result is spill-materialized so no RDD blocks outlive the call.
     */
-  /** [[hitsM]]'s half-round core, exposed for the plan spec:
-    * materialize the raw `(v, s)` scores AND fetch their max in ONE
-    * job ([[graft.ops.Materialize.localWithScalar]]), then splice the
-    * max back as a literal — so the renormalized frame is a bare
-    * shuffle-free PROJECTION over the checkpointed blocks, where the
-    * crossJoin(broadcast(agg(max))) formulation cost a second barrier
-    * aggregation plus a broadcast exchange per half-round. An empty
-    * node set yields a null max; the frame is empty then, so the
-    * divisor value is irrelevant — 1 keeps the expression total.
-    */
-  private[graft] def renormFused(raw: DataFrame,
-                                 roundMat: graft.ops.MatStrategy)
-      : (graft.ops.Materialized, DataFrame) = {
-    import graft.ops.Materialize
-    val (m, row) = roundMat match {
-      case graft.ops.MatStrategy.Local =>
-        Materialize.localWithScalar(raw, Seq(max(col("s"))))
-      case other =>
-        val mm = Materialize(raw, other)
-        (mm, mm.df.agg(max(col("s"))).head())
-    }
-    val mx = if (row.isNullAt(0)) 1L else row.getLong(0)
-    (m, m.df.select(col("v"), expr(s"s * 1000000 div ${mx}L").as("s")))
-  }
-
-  def hitsM(edges: DataFrame, aCol: String, bCol: String,
-            iters: Int = 4,
-            roundMat: graft.ops.MatStrategy = graft.ops.MatStrategy.Local,
-            mat: graft.ops.MatStrategy = graft.ops.MatStrategy.Default)
-      : graft.ops.Materialized = {
-    import graft.ops.Materialize
-    require(mat != graft.ops.MatStrategy.PassThrough,
-      "mat must be an eager strategy: the iterative round state this " +
-        "operator's output plan reads is released before return, so a " +
-        "PassThrough result would replay freed lineage-truncated blocks")
+  def hits(edges: DataFrame, aCol: String, bCol: String,
+           iters: Int = 4): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val eM = Materialize(
       canonicalEdges(edges, aCol, bCol)
         .select(col("a").as("src"), col("b").as("dst")),
-      roundMat)
-    var nodesM: graft.ops.Materialized = null
+      MatStrategy.Local)
+    var nodesM: Materialized = null
     var freeHub: () => Unit = () => ()
     var freeAuth: () => Unit = () => ()
     try {
@@ -1194,20 +975,19 @@ object Graph {
       nodesM = Materialize(
         e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
           .distinct(),
-        roundMat)
+        MatStrategy.Local)
       val nodes = nodesM.df
-      def matRenorm(raw: DataFrame) = renormFused(raw, roundMat)
       var hub: DataFrame = nodes.withColumn("s", lit(1000000L))
       var auth: DataFrame = nodes.withColumn("s", lit(1000000L))
       // node completion rides each half-round's aggregation as a
-      // zero-score union row per node (the pageRankM device): one
+      // zero-score union row per node (the rankRounds device): one
       // join + one aggregation per half-round, the node-set left join
       // is gone. sum(0 ∪ scores) = coalesce(sum(scores), 0) exactly —
       // integer lanes unchanged.
       val zeros = nodes.select(col("v"), lit(0L).as("s"))
       for (_ <- 1 to iters) {
         // hub half-round: h_raw(v) = Σ_{v→w} auth(w)
-        val (hRawM, hubN) = matRenorm(
+        val (hRawM, hubN) = renormFused(
           e.join(auth.withColumnRenamed("v", "dst"), "dst")
             .select(col("src").as("v"), col("s"))
             .union(zeros)
@@ -1217,7 +997,7 @@ object Graph {
         hub = hubN
         freeHub = hRawM.release
         // authority half-round: a_raw(w) = Σ_{v→w} hub(v)
-        val (aRawM, authN) = matRenorm(
+        val (aRawM, authN) = renormFused(
           e.join(hub.withColumnRenamed("v", "src"), "src")
             .select(col("dst").as("v"), col("s"))
             .union(zeros)
@@ -1225,22 +1005,15 @@ object Graph {
         auth = authN
         freeAuth = aRawM.release
       }
-      val out = Materialize(
+      Materialize(
         hub.select(col("v"), col("s").as("hub"))
           .join(auth.select(col("v"), col("s").as("auth")), Seq("v"))
           .select(col("v").as("node"), col("hub"), col("auth")),
-        mat)
-      out
+        MatStrategy.Default).df
     } finally {
       freeHub(); freeAuth()
       eM.release()
       if (nodesM != null) nodesM.release()
     }
   }
-
-  /** [[hitsM]] with default materialization, returning the bare frame:
-    * no RDD blocks outlive the call. */
-  def hits(edges: DataFrame, aCol: String, bCol: String,
-           iters: Int = 4): DataFrame =
-    hitsM(edges, aCol, bCol, iters).df
 }

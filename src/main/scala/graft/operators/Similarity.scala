@@ -1002,16 +1002,16 @@ object Similarity {
     * `negativePool` rows PER INPUT PARTITION, never the corpus — no
     * bucket-shaped skew, no straggler task per bucket.
     */
-  def contrastiveTripletsM(corpus: DataFrame, idCol: String, vecCol: String,
-                           threshold: Double, tables: Int = 16,
-                           bits: Int = 12, negativePool: Int = 64,
-                           mat: graft.ops.MatStrategy = graft.ops.MatStrategy.Default): graft.ops.Materialized = {
+  def contrastiveTriplets(corpus: DataFrame, idCol: String, vecCol: String,
+                          threshold: Double, tables: Int = 16,
+                          bits: Int = 12,
+                          negativePool: Int = 64): DataFrame = {
     import graft.functions.TextFns
     // the positive relation feeds three consumers (triplet build, the
     // degenerate filter's anchor side, and the false-negative
     // anti-join) — persist it so the LSH screen runs once, and release
-    // after the eager materialization (same contract as
-    // minhashNearDupPairsM)
+    // it after the eager spill materialization: no RDD blocks outlive
+    // the call (same contract as minhashNearDupPairsM)
     val pos = lshNearDupPairs(corpus, idCol, vecCol, threshold, tables, bits)
       .select(col("id_a").as("anchor_id"), col("id_b").as("pos_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1057,24 +1057,9 @@ object Similarity {
       .join(pos.select(col("anchor_id").as("__x"), col("pos_id").as("__y")),
         Seq("__x", "__y"), "left_anti")
       .select(col("anchor_id"), col("pos_id"), col("neg_id"))
-    mat match {
-      case graft.ops.MatStrategy.PassThrough =>
-        val m = graft.ops.Materialize(triplets, mat)
-        m.copy(release = () => { m.release(); pos.unpersist(false); () })
-      case _ =>
-        try graft.ops.Materialize(triplets, mat)
-        finally pos.unpersist(false)
-    }
+    try graft.ops.Materialize(triplets, graft.ops.MatStrategy.Default).df
+    finally pos.unpersist(false)
   }
-
-  /** [[contrastiveTripletsM]] with the zero-leak default
-    * materialization, returning the bare frame. */
-  def contrastiveTriplets(corpus: DataFrame, idCol: String, vecCol: String,
-                          threshold: Double, tables: Int = 16,
-                          bits: Int = 12,
-                          negativePool: Int = 64): DataFrame =
-    contrastiveTripletsM(corpus, idCol, vecCol, threshold, tables, bits,
-      negativePool).df
 
   /** Trained centroid table `(c_id, c_v: array<double>, c_norm)` from
     * [[kmeansQuantized]] — the integer sum-vectors scaled back to
@@ -1092,7 +1077,7 @@ object Similarity {
       .withColumn("c_norm", norm(col("c_v")))
   }
 
-  /** Plan-stat-derived cluster count for [[semanticDedupM]]: the floor
+  /** Plan-stat-derived cluster count for [[semanticDedup]]: the floor
     * (16, the pre-r5 fixed default) widened by the OPTIMIZER'S SIZE
     * ESTIMATE of the corpus at `bytesPerCluster` worth of vectors each
     * — the [[Dedup.ccIterWidth]] device applied to occupancy instead of
@@ -1140,13 +1125,12 @@ object Similarity {
     *    row-local per pair + one distinct — no transitive closure
     *    needed, unlike the text-side connected components.
     *
-    * Returns (id, c_id, dropped) for EVERY corpus row, materialized via
-    * `mat` with the assignment cache released (LeakSpec-clean).
+    * Returns (id, c_id, dropped) for EVERY corpus row, spill-
+    * materialized with the assignment cache released (LeakSpec-clean).
     */
-  def semanticDedupM(corpus: DataFrame, idCol: String, vecCol: String,
-                     threshold: Double, nlist: Int = 0, iters: Int = 2,
-                     trainSample: Int = 0,
-                     mat: graft.ops.MatStrategy = graft.ops.MatStrategy.Default): graft.ops.Materialized = {
+  def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
+                    threshold: Double, nlist: Int = 0, iters: Int = 2,
+                    trainSample: Int = 0): DataFrame = {
     val k = if (nlist > 0) nlist else autoNlist(corpus)
     val cents = trainedCentroidTable(corpus, idCol, vecCol, k, iters,
       trainSample)
@@ -1183,27 +1167,11 @@ object Similarity {
     val result = assigned.select(col("id"), col("c_id"))
       .join(dropped.withColumn("__d", lit(1)), Seq("id"), "left")
       .select(col("id"), col("c_id"), col("__d").isNotNull.as("dropped"))
-    mat match {
-      // PassThrough is lazy: the assignment cache must outlive this
-      // call (three plan branches read it) — fold the unpersist into
-      // the release handle instead of dropping it before first use
-      case graft.ops.MatStrategy.PassThrough =>
-        val m = graft.ops.Materialize(result, mat)
-        m.copy(release = () => { m.release(); assigned.unpersist(false); () })
-      // eager strategies consume the cache inside Materialize; the
-      // finally keeps a failed spill write from leaking the blocks
-      case _ =>
-        try graft.ops.Materialize(result, mat)
-        finally assigned.unpersist(false)
-    }
+    // the spill consumes the cache; the finally keeps a failed spill
+    // write from leaking the blocks
+    try graft.ops.Materialize(result, graft.ops.MatStrategy.Default).df
+    finally assigned.unpersist(false)
   }
-
-  /** [[semanticDedupM]] with the zero-leak default materialization. */
-  def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
-                    threshold: Double, nlist: Int = 0,
-                    iters: Int = 2, trainSample: Int = 0): DataFrame =
-    semanticDedupM(corpus, idCol, vecCol, threshold, nlist, iters,
-      trainSample).df
 
   /** Trained IVF over the SQ8-COMPRESSED corpus — the two ANN levers
     * stacked: [[sqDecode]] shrinks the corpus to 1-byte-per-dimension

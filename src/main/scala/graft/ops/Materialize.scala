@@ -135,13 +135,14 @@ object Materialize {
   }
 
   /** Spill dirs created through [[MatStrategy.Default]] whose handles
-    * were never released — the footprint of the bare-DataFrame operator
-    * wrappers (minhashNearDupPairs, connectedComponents, …), which drop
-    * the release handle by design. Bounded for batch jobs (JVM-exit
+    * were never released — the footprint of the operators that return
+    * a bare DataFrame (minhashNearDupPairs, connectedComponents, the
+    * Graph and Similarity iterative operators, …), which drop the
+    * release handle by design. Bounded for batch jobs (JVM-exit
     * cleanup reclaims everything), but a long-lived SERVICE session
-    * accumulates one dir per call: such callers should prefer the *M
-    * variants and release(), or call [[reapDefaultSpills]] at a point
-    * where no bare-wrapper result is still in use.
+    * accumulates one dir per call: such callers should prefer the
+    * Dedup `*M` variants and release(), or call [[reapDefaultSpills]]
+    * at a point where no bare-DataFrame result is still in use.
     */
   private val defaultSpills =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

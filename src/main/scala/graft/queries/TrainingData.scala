@@ -1486,7 +1486,11 @@ object TrainingData {
     * `j` (verified pairs) CTE — shared by the pairs query, the
     * connected-components clustering oracle, and the end-to-end drop
     * oracle. `corpusSql` supplies the `corpus(doc_id, text)` relation
-    * body. */
+    * body. `sh` and `j` are `AS MATERIALIZED`: `sh` is read by `hr` and
+    * by both sides of `j`, and the graph oracles reach `j` from every
+    * unrolled round, so DuckDB would otherwise re-evaluate the shingle
+    * hashing and the pair verification at every reference (minutes per
+    * graph oracle, for identical results). */
   private def minhashCtesOver(corpusSql: String): String = {
     val p = TextFns.MinhashP
     val mins = TextFns.MinhashSeeds.zipWithIndex.map { case ((a, b), j) =>
@@ -1498,7 +1502,7 @@ object TrainingData {
     }
     s"""corpus AS (
        |  $corpusSql),
-       |sh AS (
+       |sh AS MATERIALIZED (
        |  SELECT doc_id,
        |    list_distinct(list_transform(
        |      list_transform(range(1, greatest(length(text)-4, 1)+1),
@@ -1520,7 +1524,7 @@ object TrainingData {
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |j AS (
+       |j AS MATERIALIZED (
        |  SELECT c.doc_a, c.doc_b,
        |    round(len(list_filter(sa.hashes, x -> list_contains(sb.hashes, x)))::DOUBLE /
        |          (len(sa.hashes) + len(sb.hashes)
@@ -2023,7 +2027,7 @@ object TrainingData {
        |FROM e5 e LEFT JOIN sup6 s ON s.a = e.a AND s.b = e.b""".stripMargin
 
   // ------------------------------------- truss convergence witness
-  // Graph.kTrussWitnessedM's fixed-point flag gated end to end (r7
+  // Graph.kTrussWitnessed's fixed-point flag gated end to end (r7
   // verdict item 5): the loop's surviving-edge count plus whether the
   // peel actually CONVERGED inside maxRounds — the honesty bit a
   // production caller needs before trusting a bounded-depth truss.
@@ -2031,12 +2035,12 @@ object TrainingData {
   // decreasing until its fixed point: converged within 5 rounds
   // ⟺ |e5| = |e4| on the same unrolled CTEs.
   def ktrussWitnessQ(spark: SparkSession, dir: String): DataFrame = {
-    val res = graft.operators.Graph.kTrussWitnessedM(
+    val res = graft.operators.Graph.kTrussWitnessed(
       Dedup.nearDupPairsFromSigs(spark,
         sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
         threshold = 0.2),
       "doc_a", "doc_b", k = 3, maxRounds = 5)
-    res.edges.df.agg(count(lit(1)).as("n_edges"))
+    res.edges.agg(count(lit(1)).as("n_edges"))
       .select(col("n_edges"), lit(res.converged).as("converged"))
   }
   val ktrussWitnessSql: String =
@@ -2655,19 +2659,19 @@ object TrainingData {
        |SELECT src AS node, count(*) AS core_deg FROM e8 GROUP BY 1""".stripMargin
 
   // -------------------------------------- core convergence witness
-  // Graph.kCoreWitnessedM's fixed-point flag gated end to end — the
+  // Graph.kCoreWitnessed's fixed-point flag gated end to end — the
   // k-core twin of x_ktruss_witness, on the same oracle device: the
   // synchronous peel is strictly decreasing until its fixed point, so
   // converged within 8 rounds ⟺ |e8| = |e7| directed adjacency rows.
   // deg_sum doubles as the surviving-adjacency row count, checking
   // the witness is computed over the SAME subgraph the core reports.
   def kcoreWitnessQ(spark: SparkSession, dir: String): DataFrame = {
-    val res = graft.operators.Graph.kCoreWitnessedM(
+    val res = graft.operators.Graph.kCoreWitnessed(
       Dedup.nearDupPairsFromSigs(spark,
         sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
         threshold = 0.5),
       "doc_a", "doc_b", k = 2, maxRounds = 8)
-    res.nodes.df
+    res.nodes
       .agg(count(lit(1)).as("n_nodes"),
         coalesce(sum(col("core_deg")), lit(0L)).as("deg_sum"))
       .select(col("n_nodes"), col("deg_sum"),

@@ -623,23 +623,19 @@ class GraphSpec extends SparkSpec {
     val spine = (1 until T).map(t => ((100 + t).toLong, (101 + t).toLong))
     val chords = (2 until T).map(t => ((99 + t).toLong, (101 + t).toLong))
     val g = (core ++ wings ++ spine ++ chords).toDF("a", "b")
-    val partial = Graph.kTrussWitnessedM(g, "a", "b", k = 4)
-    try {
-      assert(!partial.converged,
-        "maxRounds=5 must be insufficient on an 11-deep cascade")
-      assert(partial.rounds == 5)
-      // the partial result is an honest SUPERSET: edges with support
-      // below k-2 remain because the peel was cut short
-      assert(partial.edges.df.where($"support" < 2).count() > 0)
-    } finally partial.edges.release()
-    val full = Graph.kTrussWitnessedM(g, "a", "b", k = 4, maxRounds = 40)
-    try {
-      assert(full.converged && full.rounds == 11)
-      val edges = full.edges.df.collect()
-      assert(edges.length == 86)
-      // fixed point: every surviving edge truss-certified
-      assert(edges.forall(_.getLong(2) >= 2L))
-    } finally full.edges.release()
+    val partial = Graph.kTrussWitnessed(g, "a", "b", k = 4)
+    assert(!partial.converged,
+      "maxRounds=5 must be insufficient on an 11-deep cascade")
+    assert(partial.rounds == 5)
+    // the partial result is an honest SUPERSET: edges with support
+    // below k-2 remain because the peel was cut short
+    assert(partial.edges.where($"support" < 2).count() > 0)
+    val full = Graph.kTrussWitnessed(g, "a", "b", k = 4, maxRounds = 40)
+    assert(full.converged && full.rounds == 11)
+    val edges = full.edges.collect()
+    assert(edges.length == 86)
+    // fixed point: every surviving edge truss-certified
+    assert(edges.forall(_.getLong(2) >= 2L))
   }
 
   test("kCoreWitnessed reports non-convergence on a long-path cascade") {
@@ -648,36 +644,15 @@ class GraphSpec extends SparkSpec {
     // the no-op confirming round makes 8 — maxRounds=3 must return a
     // SUPERSET with converged=false
     val path = (1L until 14L).map(i => (i, i + 1)).toDF("a", "b")
-    val partial = Graph.kCoreWitnessedM(path, "a", "b", k = 2,
+    val partial = Graph.kCoreWitnessed(path, "a", "b", k = 2,
       maxRounds = 3)
-    try {
-      assert(!partial.converged && partial.rounds == 3)
-      assert(partial.nodes.df.count() > 0,
-        "cut-short peel must keep interior nodes")
-    } finally partial.nodes.release()
-    val full = Graph.kCoreWitnessedM(path, "a", "b", k = 2,
+    assert(!partial.converged && partial.rounds == 3)
+    assert(partial.nodes.count() > 0,
+      "cut-short peel must keep interior nodes")
+    val full = Graph.kCoreWitnessed(path, "a", "b", k = 2,
       maxRounds = 20)
-    try {
-      assert(full.converged && full.rounds == 8)
-      assert(full.nodes.df.count() == 0, "a path has no 2-core")
-    } finally full.nodes.release()
-  }
-
-  test("kTrussM and kCoreM PassThrough results stay usable until " +
-    "their own release (deferred round-state release)") {
-    val g = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (3L, 4L), (4L, 5L)).toDF("a", "b")
-    val t = Graph.kTrussM(g, "a", "b", k = 3,
-      mat = graft.ops.MatStrategy.PassThrough)
-    // would throw "RDD ... locally checkpointed ... cannot be
-    // recomputed" under the old eager release of the round state
-    assert(t.df.count() == 6)
-    assert(t.df.count() == 6) // repeatable until released
-    t.release()
-    val c = Graph.kCoreM(g, "a", "b", k = 3,
-      mat = graft.ops.MatStrategy.PassThrough)
-    assert(c.df.count() == 4)
-    c.release()
+    assert(full.converged && full.rounds == 8)
+    assert(full.nodes.count() == 0, "a path has no 2-core")
   }
 
   test("clusteringCoefficientsIncremental equals from-scratch on the " +

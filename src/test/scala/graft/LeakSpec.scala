@@ -91,25 +91,28 @@ class LeakSpec extends SparkSpec {
     assert(leaked.isEmpty, s"leaked RDD blocks: $leaked")
   }
 
-  test("labelPropagation (x_label_prop) leaves no persistent RDD blocks") {
-    val leaked = leakedBlocks {
-      TrainingData.labelPropQ(spark, sf0001).count()
+  // Every iterative graph operator, through the query that gates it:
+  // each materializes its round state locally and must release all of
+  // it, so an action on the result leaves no persistent RDD blocks.
+  Seq(
+    "pageRank (x_pagerank)" -> (TrainingData.pageRankQ _),
+    "pageRankWarm (x_pagerank_incr)" -> (TrainingData.pageRankIncrQ _),
+    "pageRankWarmWitness (x_pagerank_witness)" ->
+      (TrainingData.pageRankWitnessQ _),
+    "personalizedPageRank (x_ppr_leakage)" ->
+      (TrainingData.pprLeakageQ _),
+    "labelPropagation (x_label_prop)" -> (TrainingData.labelPropQ _),
+    "kCore (x_kcore)" -> (TrainingData.kcoreQ _),
+    "kCoreWitnessed (x_kcore_witness)" -> (TrainingData.kcoreWitnessQ _),
+    "kTruss (x_ktruss)" -> (TrainingData.ktrussQ _),
+    "kTrussWitnessed (x_ktruss_witness)" ->
+      (TrainingData.ktrussWitnessQ _),
+    "hits (x_hits)" -> (TrainingData.hitsQ _)
+  ).foreach { case (name, q) =>
+    test(s"$name leaves no persistent RDD blocks") {
+      val leaked = leakedBlocks { q(spark, sf0001).count() }
+      assert(leaked.isEmpty, s"leaked RDD blocks: $leaked")
     }
-    assert(leaked.isEmpty, s"leaked RDD blocks: $leaked")
-  }
-
-  test("kCore (x_kcore) leaves no persistent RDD blocks") {
-    val leaked = leakedBlocks {
-      TrainingData.kcoreQ(spark, sf0001).count()
-    }
-    assert(leaked.isEmpty, s"leaked RDD blocks: $leaked")
-  }
-
-  test("hits (x_hits) leaves no persistent RDD blocks") {
-    val leaked = leakedBlocks {
-      TrainingData.hitsQ(spark, sf0001).count()
-    }
-    assert(leaked.isEmpty, s"leaked RDD blocks: $leaked")
   }
 
   test("connectedComponents over the Reliable strategy survives and cleans up") {

@@ -590,13 +590,12 @@ class PlanSpec extends SparkSpec {
       s"support aggregation must have a partial phase:\n$p")
   }
 
-  test("hitsM renorm is a shuffle-free projection over the checkpoint " +
+  test("hits renorm is a shuffle-free projection over the checkpoint " +
     "(max fused into the materializing job, values identical)") {
     import spark.implicits._
     val raw = Seq((1L, 250000L), (2L, 1000000L), (3L, 499999L))
       .toDF("v", "s")
-    val (m, norm) = graft.operators.Graph.renormFused(
-      raw, graft.ops.MatStrategy.Local)
+    val (m, norm) = graft.operators.Graph.renormFused(raw)
     try {
       // structural claim: renorm costs NO second aggregation barrier —
       // no crossJoin, no broadcast, no exchange; just a projection

@@ -7,9 +7,12 @@ the same sfDir tables.
 Compare semantics (mirroring the stated driver behavior): sort columns by
 name, then row-wise compare after sorting rows by all columns; values
 compared with a small float tolerance report plus an exact-hash verdict.
+Each verdict line carries the seconds DuckDB spent on that oracle, and the
+run ends with the five slowest oracles.
 """
 import json
 import sys
+import time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -32,17 +35,21 @@ def main(sf_dir: str, out_dir: str) -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    secs = {}
     for name, sql in sorted(oracles.items()):
         try:
             got = pd.read_parquet(f"{out_dir}/{name}")
+            t0 = time.perf_counter()
             exp = con.execute(sql).df()
+            secs[name] = time.perf_counter() - t0
+            dt = f"{secs[name]:.1f}s"
             g, e = canon(got), canon(exp)
             if list(g.columns) != list(e.columns):
-                print(f"FAIL {name}: columns {list(g.columns)} != {list(e.columns)}")
+                print(f"FAIL {name}: columns {list(g.columns)} != {list(e.columns)} ({dt})")
                 n_fail += 1
                 continue
             if len(g) != len(e):
-                print(f"FAIL {name}: rows {len(g)} != {len(e)}")
+                print(f"FAIL {name}: rows {len(g)} != {len(e)} ({dt})")
                 n_fail += 1
                 continue
             diffs = []
@@ -57,7 +64,7 @@ def main(sf_dir: str, out_dir: str) -> int:
                 if not exact:
                     diffs.append(c)
             if diffs:
-                print(f"FAIL {name}: value mismatch in {diffs}")
+                print(f"FAIL {name}: value mismatch in {diffs} ({dt})")
                 for c in diffs[:2]:
                     mask = ~(g[c].fillna("§") == e[c].fillna("§")) if not pd.api.types.is_float_dtype(g[c]) \
                         else ~np.isclose(g[c], e[c], rtol=0, atol=0, equal_nan=True)
@@ -65,11 +72,14 @@ def main(sf_dir: str, out_dir: str) -> int:
                           " exp:", e.loc[mask, c].head(3).tolist())
                 n_fail += 1
             else:
-                print(f"PASS {name} ({len(g)} rows)")
+                print(f"PASS {name} ({len(g)} rows, {dt})")
                 n_pass += 1
         except Exception as ex:
             print(f"ERROR {name}: {str(ex)[:300]}")
             n_fail += 1
+    slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
+    print("slowest oracles: " +
+          ", ".join(f"{n} {t:.1f}s" for n, t in slowest))
     print(f"== {n_pass} pass / {n_fail} fail ==")
     return 1 if n_fail else 0
 
