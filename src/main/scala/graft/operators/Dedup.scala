@@ -100,6 +100,60 @@ object Dedup {
         sum(expr("n * (n - 1) div 2")).as("implied_pairs"))
   }
 
+  /** The banded self-join of a signature relation: every (a, b) band
+    * collision with a.doc_id < b.doc_id, one row per colliding band,
+    * sides aliased `a` and `b`.
+    */
+  private def bandSelfJoin(sig: DataFrame): DataFrame = {
+    val bands = bandsOf(sig)
+    bands.as("a").join(bands.as("b"),
+      col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
+        col("a.doc_id") < col("b.doc_id"))
+  }
+
+  /** Distinct self-join candidate pairs `(doc_a, doc_b)`, doc_a < doc_b. */
+  private def selfCandidates(sig: DataFrame): DataFrame =
+    bandSelfJoin(sig)
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+
+  /** Distinct batch×corpus candidate pairs `(batch_id, corpus_id)`: the
+    * batch's band keys joined against the corpus's, so corpus×corpus
+    * pairs are never generated.
+    */
+  private def crossCandidates(sigB: DataFrame, sigC: DataFrame): DataFrame =
+    bandsOf(sigB).withColumnRenamed("doc_id", "batch_id")
+      .join(bandsOf(sigC).withColumnRenamed("doc_id", "corpus_id"),
+        Seq("band", "bkey"))
+      .select(col("batch_id"), col("corpus_id"))
+      .distinct()
+
+  /** Candidate pairs with both sides' shingle sets pulled back by id:
+    * the first two columns of `cand` are the pair's ids, looked up in
+    * `sigA` (as `sh_a`) and `sigB` (as `sh_b`) — two hash joins, so the
+    * verify cost is O(candidates).
+    */
+  private def withShingles(cand: DataFrame, sigA: DataFrame,
+                           sigB: DataFrame): DataFrame = {
+    val Array(aId, bId) = cand.columns.take(2)
+    cand
+      .join(sigA.select(col("doc_id").as(aId), col("__sh").as("sh_a")), aId)
+      .join(sigB.select(col("doc_id").as(bId), col("__sh").as("sh_b")), bId)
+  }
+
+  /** Exact shingle-hash Jaccard verification of candidate pairs: the
+    * candidate columns plus `jaccard` (rounded to 4 decimals) for every
+    * pair at or above `threshold`.
+    */
+  private def jaccardVerified(cand: DataFrame, sigA: DataFrame,
+                              sigB: DataFrame, threshold: Double): DataFrame =
+    withShingles(cand, sigA, sigB)
+      .withColumn("jaccard", round(
+        graft.functions.native.NativeFns.jaccardNative(
+          col("sh_a"), col("sh_b")), 4))
+      .where(col("jaccard") >= threshold)
+      .select((cand.columns :+ "jaccard").map(col): _*)
+
   /** LSH candidate pairs + exact shingle-hash-Jaccard verification.
     *
     * Banding: 4 bands × 4 rows over the 16-slot signature. Documents
@@ -112,58 +166,28 @@ object Dedup {
     * across them — a production LSH dedup materializes signatures between
     * candidate generation and verification (MEMORY_AND_DISK: spills
     * instead of recomputing at 100 TB). The verified pair list (orders of
-    * magnitude smaller than the corpus) is then materialized eagerly via
-    * `mat` and the signature cache is RELEASED before returning, so
-    * repeated calls don't accumulate executor cache blocks (round-1
-    * advice); callers get a materialized frame they can join/write
-    * without recomputing the pipeline, plus the handle that frees it
-    * (round-2 advice: the previous localCheckpoint-based output itself
-    * leaked blocks for the session lifetime).
+    * magnitude smaller than the corpus) is then spilled to parquet
+    * ([[MatStrategy.Default]]) and the signature cache is RELEASED
+    * before returning, so no RDD blocks outlive the call (LeakSpec).
+    *
+    * Each call leaves one spill dir on disk until JVM exit — fine for
+    * batch jobs; a long-lived SERVICE session should periodically call
+    * Materialize.reapDefaultSpills. (Same contract for every operator in
+    * this file that returns a spilled frame.)
     *
     * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard rounded
     * to 4 decimals.
     */
-  def minhashNearDupPairsM(docs: DataFrame, textCol: String, idCol: String,
-                           k: Int = 5, threshold: Double = 0.5,
-                           mat: MatStrategy = MatStrategy.Default): Materialized = {
+  def minhashNearDupPairs(docs: DataFrame, textCol: String, idCol: String,
+                          k: Int = 5, threshold: Double = 0.5): DataFrame = {
     val sig = sigOf(docs, textCol, idCol, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = bandsOf(sig)
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val shSets = sig.select(col("doc_id"), col("__sh"))
-    val verified = cand
-      .join(shSets.select(col("doc_id").as("doc_a"), col("__sh").as("sh_a")),
-        "doc_a")
-      .join(shSets.select(col("doc_id").as("doc_b"), col("__sh").as("sh_b")),
-        "doc_b")
-      .withColumn("jaccard", round(
-        graft.functions.native.NativeFns.jaccardNative(
-          col("sh_a"), col("sh_b")), 4))
-      .where(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    // eager materialization of the small pair list, then release the
-    // signature cache (blocks would otherwise live for the session)
-    val out = Materialize(verified, mat)
+    val out = Materialize(
+      jaccardVerified(selfCandidates(sig), sig, sig, threshold),
+      MatStrategy.Default)
     sig.unpersist(false)
-    out
+    out.df
   }
-
-  /** [[minhashNearDupPairsM]] with the default parquet-spill
-    * materialization, returning the bare frame: no RDD blocks outlive
-    * the call (LeakSpec) and the spill files are reclaimed on JVM exit.
-    *
-    * Each bare call leaves one spill dir on disk until then — fine for
-    * batch jobs; a long-lived SERVICE session should use the *M variant
-    * and release(), or periodically call Materialize.reapDefaultSpills.
-    * (Same contract for every bare wrapper in this file.)
-    */
-  def minhashNearDupPairs(docs: DataFrame, textCol: String, idCol: String,
-                          k: Int = 5, threshold: Double = 0.5): DataFrame =
-    minhashNearDupPairsM(docs, textCol, idCol, k, threshold).df
 
   /** Incremental NEAR-dup: which documents of a new batch near-duplicate
     * the already-ingested corpus — the fuzzy twin of
@@ -180,42 +204,22 @@ object Dedup {
     * sets back by id — O(candidates).
     *
     * Returns (batch_id, corpus_id, jaccard) for every cross pair at or
-    * above `threshold`, materialized via `mat` with both signature
-    * caches released (LeakSpec-clean).
+    * above `threshold`, spilled to parquet with both signature caches
+    * released (LeakSpec-clean).
     */
-  def incrementalNearDupM(batch: DataFrame, corpus: DataFrame,
-                          textCol: String, idCol: String,
-                          k: Int = 5, threshold: Double = 0.5,
-                          mat: MatStrategy = MatStrategy.Default): Materialized = {
+  def incrementalNearDup(batch: DataFrame, corpus: DataFrame,
+                         textCol: String, idCol: String,
+                         k: Int = 5, threshold: Double = 0.5): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sigB = sigOf(batch, textCol, idCol, k).persist(lvl)
     val sigC = sigOf(corpus, textCol, idCol, k).persist(lvl)
-    val cand = bandsOf(sigB).withColumnRenamed("doc_id", "batch_id")
-      .join(bandsOf(sigC).withColumnRenamed("doc_id", "corpus_id"),
-        Seq("band", "bkey"))
-      .select(col("batch_id"), col("corpus_id"))
-      .distinct()
-    val verified = cand
-      .join(sigB.select(col("doc_id").as("batch_id"), col("__sh").as("sh_b")),
-        "batch_id")
-      .join(sigC.select(col("doc_id").as("corpus_id"), col("__sh").as("sh_c")),
-        "corpus_id")
-      .withColumn("jaccard", round(
-        graft.functions.native.NativeFns.jaccardNative(
-          col("sh_b"), col("sh_c")), 4))
-      .where(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
-    val out = Materialize(verified, mat)
+    val out = Materialize(
+      jaccardVerified(crossCandidates(sigB, sigC), sigB, sigC, threshold),
+      MatStrategy.Default)
     sigB.unpersist(false)
     sigC.unpersist(false)
-    out
+    out.df
   }
-
-  /** [[incrementalNearDupM]] with the zero-leak default materialization. */
-  def incrementalNearDup(batch: DataFrame, corpus: DataFrame,
-                         textCol: String, idCol: String,
-                         k: Int = 5, threshold: Double = 0.5): DataFrame =
-    incrementalNearDupM(batch, corpus, textCol, idCol, k, threshold).df
 
   /** Persist the corpus's signature relation `(doc_id, __sh, m0..m15)`
     * as a parquet table — the MAINTAINED side of incremental near-dup
@@ -234,15 +238,33 @@ object Dedup {
     // O(candidates), not O(corpus))
     graft.sources.MaintainedIndex.writeClusteredIndexed(
       sigOf(corpus, textCol, idCol, k), path, "doc_id")
-    // record the shingle size next to the data (underscore-prefixed:
-    // parquet readers skip it): signatures built with one k are
-    // meaningless against a batch hashed with another, and without this
-    // marker a mismatched screen would silently admit every duplicate
+    writeShingleK(corpus.sparkSession, path, k)
+  }
+
+  /** Record the shingle size next to a signature table's data
+    * (underscore-prefixed: parquet readers skip it): signatures built
+    * with one k are meaningless against a batch hashed with another,
+    * and without this marker a mismatched screen would silently admit
+    * every duplicate. */
+  private def writeShingleK(spark: org.apache.spark.sql.SparkSession,
+                            path: String, k: Int): Unit = {
     val meta = new org.apache.hadoop.fs.Path(path, "_graft_shingle_k")
-    val fs = meta.getFileSystem(
-      corpus.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(meta, true)
     try out.write(k.toString.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Refuse a signature table whose recorded shingle size is not `k`:
+    * mixed-k shingle sets never intersect, so screening (or appending)
+    * across them would silently admit every duplicate. */
+  private[graft] def requireShingleK(spark: org.apache.spark.sql.SparkSession,
+                                     path: String, k: Int): Unit = {
+    val storedK = signatureTableK(spark, path)
+    require(storedK == k,
+      s"signature table at $path was written with k=$storedK but the " +
+        s"batch is hashed with k=$k — shingle sets would never intersect " +
+        "and every duplicate would be silently admitted; refusing to mix " +
+        "shingle sizes")
   }
 
   /** Append an ADMITTED batch's signatures to a maintained signature
@@ -250,15 +272,11 @@ object Dedup {
     * with [[incrementalNearDupAgainstSigsM]], admit the survivors, then
     * append their signatures so the NEXT batch screens against them
     * too. Refuses a table whose recorded shingle size differs (same
-    * guarantee as the screen itself: mixed-k signatures never
-    * intersect and would silently admit every duplicate). */
+    * guarantee as the screen itself, [[requireShingleK]]). */
   def appendToSignatureTable(batch: DataFrame, textCol: String,
                              idCol: String, path: String,
                              k: Int = 5): Unit = {
-    val storedK = signatureTableK(batch.sparkSession, path)
-    require(storedK == k,
-      s"signature table at $path was written with k=$storedK but the " +
-        s"batch is hashed with k=$k — refusing to mix shingle sizes")
+    requireShingleK(batch.sparkSession, path, k)
     graft.sources.MaintainedIndex.clusteredIdempotentAppend(
       sigOf(batch, textCol, idCol, k), path,
       s"gen_${java.util.UUID.randomUUID().toString.take(8)}_", "doc_id")
@@ -274,10 +292,7 @@ object Dedup {
     val k = signatureTableK(spark, inPath)
     graft.sources.MaintainedIndex.compactClusteredIndexed(
       spark, inPath, outPath, "doc_id", targetFileBytes)
-    val meta = new org.apache.hadoop.fs.Path(outPath, "_graft_shingle_k")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(meta, true)
-    try out.write(k.toString.getBytes("UTF-8")) finally out.close()
+    writeShingleK(spark, outPath, k)
   }
 
   /** Shingle size a signature table was written with. */
@@ -296,27 +311,23 @@ object Dedup {
     new String(buf, "UTF-8").trim.toInt
   }
 
-  /** [[incrementalNearDupM]] against a MAINTAINED signature table
+  /** [[incrementalNearDup]] against a MAINTAINED signature table
     * ([[writeSignatureTable]]) instead of raw corpus text. Identical
     * results (the signature relation is deterministic in the text);
     * SigTableSpec asserts the equality. The corpus side of the plan is
     * a column-pruned scan of the stored table — band keys read m0..m15,
-    * verification reads __sh — with no text ever touched.
+    * verification reads __sh — with no text ever touched. Returns
+    * [[incrementalNearDupAgainstPreSigsM]]'s executor-local handle; the
+    * caller releases it.
     */
   def incrementalNearDupAgainstSigsM(batch: DataFrame, sigTablePath: String,
                                      textCol: String, idCol: String,
-                                     k: Int = 5, threshold: Double = 0.5,
-                                     mat: MatStrategy = MatStrategy.Default): Materialized = {
-    val spark = batch.sparkSession
-    val storedK = signatureTableK(spark, sigTablePath)
-    require(storedK == k,
-      s"signature table at $sigTablePath was written with k=$storedK " +
-        s"but the screen hashes the batch with k=$k — shingle sets would " +
-        "never intersect and every duplicate would be silently admitted")
+                                     k: Int = 5,
+                                     threshold: Double = 0.5): Materialized = {
+    requireShingleK(batch.sparkSession, sigTablePath, k)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sigB = sigOf(batch, textCol, idCol, k).persist(lvl)
-    val out = incrementalNearDupAgainstPreSigsM(sigB, sigTablePath,
-      threshold, mat)
+    val out = incrementalNearDupAgainstPreSigsM(sigB, sigTablePath, threshold)
     sigB.unpersist(false)
     out
   }
@@ -329,21 +340,21 @@ object Dedup {
     * filtering beats tokenizing twice). No k-check here: the caller
     * owns the signature computation and the guard that matched it to
     * the table.
+    *
+    * The verified pairs are materialized [[MatStrategy.Local]]: they
+    * never escape the caller's batch, which releases the handle, and a
+    * retry rebuilds them, so a DFS spill would buy nothing.
     */
   private[graft] def incrementalNearDupAgainstPreSigsM(
-      sigB: DataFrame, sigTablePath: String, threshold: Double = 0.5,
-      mat: MatStrategy = MatStrategy.Default): Materialized = {
+      sigB: DataFrame, sigTablePath: String,
+      threshold: Double): Materialized = {
     val spark = sigB.sparkSession
     val sigC = spark.read.parquet(sigTablePath)
     // candidate generation reads the 68 B/doc band-key projection of
     // the whole table — the documented tolerable full scan. It is
     // MATERIALIZED (held) because the candidate set feeds both the
     // verify join and the file prune of the __sh pull below.
-    val cand = bandsOf(sigB).withColumnRenamed("doc_id", "batch_id")
-      .join(bandsOf(sigC).withColumnRenamed("doc_id", "corpus_id"),
-        Seq("band", "bkey"))
-      .select(col("batch_id"), col("corpus_id"))
-      .distinct()
+    val cand = crossCandidates(sigB, sigC)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the verify pull reads the table's BIG column (__sh, the full
@@ -370,17 +381,8 @@ object Dedup {
         if (smallTable || candIds.length > nFiles) sigC
         else graft.sources.MaintainedIndex.readPruned(
           spark, sigTablePath, "doc_id", candIds)
-      val verified = cand
-        .join(sigB.select(col("doc_id").as("batch_id"), col("__sh").as("sh_b")),
-          "batch_id")
-        .join(shC.select(col("doc_id").as("corpus_id"), col("__sh").as("sh_c")),
-          "corpus_id")
-        .withColumn("jaccard", round(
-          graft.functions.native.NativeFns.jaccardNative(
-            col("sh_b"), col("sh_c")), 4))
-        .where(col("jaccard") >= threshold)
-        .select(col("batch_id"), col("corpus_id"), col("jaccard"))
-      Materialize(verified, mat)
+      Materialize(jaccardVerified(cand, sigB, shC, threshold),
+        MatStrategy.Local)
     } finally { cand.unpersist(false); () }
   }
 
@@ -389,47 +391,23 @@ object Dedup {
     * [[incrementalNearDupAgainstSigsM]], and the shape a re-clustering
     * run (threshold change, report refresh) takes once the corpus's
     * signatures are on disk: identical results to
-    * [[minhashNearDupPairsM]] (the signature relation is deterministic
+    * [[minhashNearDupPairs]] (the signature relation is deterministic
     * in the text; SigTableSpec asserts the equality) with the corpus
     * text never touched. Candidate generation reads only
     * (doc_id, m0..m15) and verification only (doc_id, __sh) — two
     * column-pruned scans of the stored table — so at 100 TB the corpus
     * is tokenized once at ingest and every later screen is IO-bound on
     * a 20-byte-per-doc projection. No persist is needed: the parquet
-    * table IS the materialized signature stage.
-    */
-  def nearDupPairsFromSigsM(spark: org.apache.spark.sql.SparkSession,
-                            sigTablePath: String,
-                            threshold: Double = 0.5,
-                            mat: MatStrategy = MatStrategy.Default): Materialized = {
-    val sig = spark.read.parquet(sigTablePath)
-    val bands = bandsOf(sig)
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val shSets = sig.select(col("doc_id"), col("__sh"))
-    val verified = cand
-      .join(shSets.select(col("doc_id").as("doc_a"), col("__sh").as("sh_a")),
-        "doc_a")
-      .join(shSets.select(col("doc_id").as("doc_b"), col("__sh").as("sh_b")),
-        "doc_b")
-      .withColumn("jaccard", round(
-        graft.functions.native.NativeFns.jaccardNative(
-          col("sh_a"), col("sh_b")), 4))
-      .where(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    Materialize(verified, mat)
-  }
-
-  /** [[nearDupPairsFromSigsM]] with the zero-leak default
-    * materialization, returning the bare frame.
+    * table IS the materialized signature stage. The verified pairs are
+    * spilled to parquet, as in [[minhashNearDupPairs]].
     */
   def nearDupPairsFromSigs(spark: org.apache.spark.sql.SparkSession,
                            sigTablePath: String,
-                           threshold: Double = 0.5): DataFrame =
-    nearDupPairsFromSigsM(spark, sigTablePath, threshold).df
+                           threshold: Double = 0.5): DataFrame = {
+    val sig = spark.read.parquet(sigTablePath)
+    Materialize(jaccardVerified(selfCandidates(sig), sig, sig, threshold),
+      MatStrategy.Default).df
+  }
 
   /** LSH calibration record over a maintained signature table: every
     * verified near-dup pair with HOW MANY of the bands bucketed it —
@@ -439,7 +417,7 @@ object Dedup {
     * per band loses it next); pairs hit by every band are deep inside.
     * Tuning b×r against THIS table — instead of the textbook curve —
     * is how a production screen is recalibrated after a corpus shift.
-    * Same plan shape as [[nearDupPairsFromSigsM]] with the candidate
+    * Same plan shape as [[nearDupPairsFromSigs]] with the candidate
     * `distinct` replaced by a count aggregation: band keys read
     * (doc_id, m0..m15), verification reads (doc_id, __sh), text never
     * touched.
@@ -448,23 +426,10 @@ object Dedup {
                          sigTablePath: String,
                          threshold: Double = 0.5): DataFrame = {
     val sig = spark.read.parquet(sigTablePath)
-    val bands = bandsOf(sig)
-    val collisions = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
+    val collisions = bandSelfJoin(sig)
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_bands"))
-    val shSets = sig.select(col("doc_id"), col("__sh"))
-    collisions
-      .join(shSets.select(col("doc_id").as("doc_a"), col("__sh").as("sh_a")),
-        "doc_a")
-      .join(shSets.select(col("doc_id").as("doc_b"), col("__sh").as("sh_b")),
-        "doc_b")
-      .withColumn("jaccard", round(
-        graft.functions.native.NativeFns.jaccardNative(
-          col("sh_a"), col("sh_b")), 4))
-      .where(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("n_bands"), col("jaccard"))
+    jaccardVerified(collisions, sig, sig, threshold)
   }
 
   /** Near-dup drop that keeps the BEST member of each cluster, over a
@@ -540,7 +505,7 @@ object Dedup {
     * collide); the wide-recall path for that regime is the winnowing
     * fingerprint screen (Corpus.winnowingFingerprints), whose grammar
     * is positional, not set-shaped. Plan shape is
-    * [[nearDupPairsFromSigsM]]'s: band keys read (doc_id, m0..m15),
+    * [[nearDupPairsFromSigs]]'s: band keys read (doc_id, m0..m15),
     * verification reads (doc_id, __sh), text never touched; ties in
     * set size resolve to the lower id as "small" so the output is
     * deterministic. Output: (doc_small, doc_large, n_small, n_large,
@@ -552,18 +517,7 @@ object Dedup {
     require(minContainmentBp >= 0 && minContainmentBp <= 10000,
       s"containment is in basis points 0..10000, got $minContainmentBp")
     val sig = spark.read.parquet(sigTablePath)
-    val bands = bandsOf(sig)
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val shSets = sig.select(col("doc_id"), col("__sh"))
-    cand
-      .join(shSets.select(col("doc_id").as("doc_a"), col("__sh").as("sh_a")),
-        "doc_a")
-      .join(shSets.select(col("doc_id").as("doc_b"), col("__sh").as("sh_b")),
-        "doc_b")
+    withShingles(selfCandidates(sig), sig, sig)
       .select(col("doc_a"), col("doc_b"),
         size(col("sh_a")).cast("long").as("n_a"),
         size(col("sh_b")).cast("long").as("n_b"),
@@ -607,27 +561,14 @@ object Dedup {
     require(minContainmentBp >= 0 && minContainmentBp <= 10000,
       s"containment is in basis points 0..10000, got $minContainmentBp")
     val spark = batch.sparkSession
-    val storedK = signatureTableK(spark, sigTablePath)
-    require(storedK == k,
-      s"signature table at $sigTablePath was written with k=$storedK " +
-        s"but the screen hashes the batch with k=$k — shingle sets " +
-        "would never intersect and every excerpt would be admitted")
+    requireShingleK(spark, sigTablePath, k)
     val sigB = sigOf(batch, textCol, idCol, k)
     val sigC = spark.read.parquet(sigTablePath)
-    val cand = bandsOf(sigB).withColumnRenamed("doc_id", "batch_id")
-      .join(bandsOf(sigC).withColumnRenamed("doc_id", "corpus_id"),
-        Seq("band", "bkey"))
-      .select(col("batch_id"), col("corpus_id"))
-      .distinct()
-    cand
-      .join(sigB.select(col("doc_id").as("batch_id"), col("__sh").as("sh_b")),
-        "batch_id")
-      .join(sigC.select(col("doc_id").as("corpus_id"), col("__sh").as("sh_c")),
-        "corpus_id")
+    withShingles(crossCandidates(sigB, sigC), sigB, sigC)
       .select(col("batch_id"), col("corpus_id"),
-        size(col("sh_b")).cast("long").as("n_batch"),
-        size(col("sh_c")).cast("long").as("n_corpus"),
-        size(array_intersect(col("sh_b"), col("sh_c"))).cast("long")
+        size(col("sh_a")).cast("long").as("n_batch"),
+        size(col("sh_b")).cast("long").as("n_corpus"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long")
           .as("inter"))
       .select(col("batch_id"), col("corpus_id"), col("n_batch"),
         col("n_corpus"),
@@ -691,43 +632,8 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** Connected components over an undirected pair graph: every PAIRED
-    * node is labeled with the minimum node id of its component (the
-    * cluster representative). Nodes with no pair do not appear in the
-    * output — a dedup drop-stage must left-join and
-    * `coalesce(cluster_rep, doc_id)` to keep singletons.
-    *
-    * Iterative min-label propagation with pointer doubling: each round
-    * every node takes the min of (its label, its neighbors' labels, its
-    * label's label). The compression hop halves chain lengths, so rounds
-    * needed = O(log diameter), not O(diameter).
-    *
-    * Per-round mechanics, tuned for iteration cost:
-    *  - self-loop edges are folded into the edge set once, so the
-    *    neighbor-min aggregation yields min(own, neighbors) directly —
-    *    no separate left-join with the previous labels;
-    *  - labels only ever DECREASE, so convergence is detected by
-    *    comparing sum(label) (exact decimal) between rounds — a narrow
-    *    scan of the just-checkpointed result instead of a join;
-    *  - each round ends with a `roundMat` materialization: it pins the
-    *    round's result and truncates the logical plan (without which
-    *    per-round plan nesting grows until driver-side analysis OOMs);
-    *    the previous round's storage is released as soon as the new
-    *    round lands, so long runs don't accumulate executor storage.
-    *    `roundMat` is the durability knob: Local (default) is fastest
-    *    for local/bounded runs; Reliable survives executor loss
-    *    mid-iteration — the right setting for a 1000-executor run where
-    *    a single lost executor must not kill round 37 of 40.
-    *
-    * The returned frame is materialized via `mat` (parquet spill by
-    * default) and all per-round storage is released before returning;
-    * `release()` frees the final result too.
-    *
-    * Throws if `maxRounds` is hit without convergence — silent partial
-    * labels would poison the downstream drop decisions.
-    */
-  /** Per-round iteration width for [[connectedComponentsM]]: the floor
-    * (the caller's `iterPartitions`) widened by the OPTIMIZER'S SIZE
+  /** Per-round iteration width for [[connectedComponents]]: the floor
+    * ([[CcIterPartitions]]) widened by the OPTIMIZER'S SIZE
     * ESTIMATE of the pair graph at one AQE-advisory-sized partition's
     * worth of edges each, capped at the session's shuffle parallelism.
     *
@@ -751,7 +657,7 @@ object Dedup {
   }
 
   /** Edge-count ceiling for the small-graph fast path: at or below it,
-    * [[connectedComponentsM]] folds the materialized edge set with a
+    * [[connectedComponents]] folds the materialized edge set with a
     * single-stage union-find instead of iterating — per-round fixed
     * costs (4 stages of scheduling + a materialization + a convergence
     * scan, times O(log d) rounds) dominate tiny graphs by 10-100×. The
@@ -800,22 +706,72 @@ object Dedup {
         col("cluster_rep").cast(idType).as("cluster_rep"))
   }
 
-  def connectedComponentsM(pairs: DataFrame, aCol: String, bCol: String,
-                           maxRounds: Int = 50,
-                           iterPartitions: Int = 8,
-                           roundMat: MatStrategy = MatStrategy.Local,
-                           mat: MatStrategy = MatStrategy.Default,
-                           smallGraphMaxEdges: Long = SmallGraphMaxEdges): Materialized = {
-    def checkpointTracked(df: DataFrame): (DataFrame, () => Unit) = {
-      val m = Materialize(df, roundMat); (m.df, m.release)
+  /** Round cap of [[connectedComponents]]: pointer doubling needs
+    * O(log diameter) rounds, so 50 covers any chain a pair graph holds.
+    */
+  private val CcMaxRounds = 50
+
+  /** Floor of the per-round iteration width ([[ccIterWidth]]): the
+    * label/edge relations are usually tiny compared to the
+    * pair-generation work upstream, and iterating at full shuffle
+    * parallelism pays ~4 stages of task-scheduling overhead per round
+    * for near-empty partitions.
+    */
+  private val CcIterPartitions = 8
+
+  /** Connected components over an undirected pair graph: every PAIRED
+    * node is labeled with the minimum node id of its component (the
+    * cluster representative). Nodes with no pair do not appear in the
+    * output — a dedup drop-stage must left-join and
+    * `coalesce(cluster_rep, doc_id)` to keep singletons.
+    *
+    * Node ids must be integral (byte/short/int/long): the union-find
+    * fold runs on longs and the convergence witness below is a label
+    * sum, neither of which has a meaning for string ids. Other id types
+    * are refused at entry (map them to a dense long id first).
+    *
+    * Graphs of at most `smallGraphMaxEdges` edges take the one-task
+    * union-find fold. Larger ones run iterative min-label propagation
+    * with pointer doubling: each round every node takes the min of (its
+    * label, its neighbors' labels, its label's label). The compression
+    * hop halves chain lengths, so rounds needed = O(log diameter), not
+    * O(diameter).
+    *
+    * Per-round mechanics, tuned for iteration cost:
+    *  - self-loop edges are folded into the edge set once, so the
+    *    neighbor-min aggregation yields min(own, neighbors) directly —
+    *    no separate left-join with the previous labels;
+    *  - labels only ever DECREASE, so convergence is detected by
+    *    comparing sum(label) (exact decimal) between rounds — a narrow
+    *    scan of the just-checkpointed result instead of a join;
+    *  - each round ends with a [[MatStrategy.Local]] materialization: it
+    *    pins the round's result and truncates the logical plan (without
+    *    which per-round plan nesting grows until driver-side analysis
+    *    OOMs); the previous round's storage is released as soon as the
+    *    new round lands, so long runs don't accumulate executor storage.
+    *
+    * The returned frame is spilled to parquet ([[MatStrategy.Default]])
+    * and all per-round storage is released before returning: no RDD
+    * blocks outlive the call (LeakSpec, DedupSpec).
+    *
+    * Throws if the round cap is hit without convergence — silent
+    * partial labels would poison the downstream drop decisions.
+    */
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
+                          smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    Seq(aCol, bCol).foreach { c =>
+      val t = pairs.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"connectedComponents needs integral node ids (byte/short/int/" +
+          s"long), but column $c is ${t.simpleString}")
     }
-    // the label/edge relations are usually tiny compared to the
-    // pair-generation work upstream; iterating at full shuffle
-    // parallelism pays ~4 stages of task-scheduling overhead per round
-    // for near-empty partitions. `iterPartitions` is the FLOOR of the
-    // per-round width; a genuinely huge pair graph widens automatically
-    // (ccIterWidth) instead of funneling through the floor.
-    val width = ccIterWidth(pairs, iterPartitions)
+    def checkpointTracked(df: DataFrame): (DataFrame, () => Unit) = {
+      val m = Materialize(df, MatStrategy.Local); (m.df, m.release)
+    }
+    // a genuinely huge pair graph widens past the floor automatically
+    // (ccIterWidth) instead of funneling through it
+    val width = ccIterWidth(pairs, CcIterPartitions)
     val directed = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
     val (edges, freeEdges) = checkpointTracked(
@@ -823,15 +779,10 @@ object Dedup {
         .union(directed.select(col("src"), col("src").as("dst"))) // self-loops
         .distinct()
         .repartition(width))
-    val idType = edges.schema("src").dataType
-    val integralIds =
-      idType == org.apache.spark.sql.types.LongType ||
-        idType == org.apache.spark.sql.types.IntegerType ||
-        idType == org.apache.spark.sql.types.ShortType
-    if (integralIds && edges.count() <= smallGraphMaxEdges) {
-      val out = Materialize(ccFoldSmall(edges), mat)
+    if (edges.count() <= smallGraphMaxEdges) {
+      val out = Materialize(ccFoldSmall(edges), MatStrategy.Default)
       freeEdges()
-      return out
+      return out.df
     }
     var labels = edges.where(col("src") === col("dst"))
       .select(col("src").as("doc_id"), col("src").as("label"))
@@ -839,7 +790,7 @@ object Dedup {
     var prevSum: java.math.BigDecimal = null
     var converged = false
     var rounds = 0
-    while (!converged && rounds < maxRounds) {
+    while (!converged && rounds < CcMaxRounds) {
       // min over own + neighbor labels in ONE join+agg (self-loops make
       // the node's current label flow through the same path)
       val merged = edges
@@ -872,27 +823,19 @@ object Dedup {
     if (!converged) {
       freeLabels()
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds " +
-          "(component diameter too large) — raise maxRounds")
+        s"connectedComponents did not converge in $CcMaxRounds rounds " +
+          "(component diameter too large)")
     }
     val out = Materialize(
-      labels.select(col("doc_id"), col("label").as("cluster_rep")), mat)
+      labels.select(col("doc_id"), col("label").as("cluster_rep")),
+      MatStrategy.Default)
     freeLabels()
-    out
+    out.df
   }
-
-  /** [[connectedComponentsM]] with default materialization, returning
-    * the bare frame: no RDD blocks outlive the call (LeakSpec); spill
-    * files are reclaimed on JVM exit.
-    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxRounds: Int = 50,
-                          iterPartitions: Int = 8): DataFrame =
-    connectedComponentsM(pairs, aCol, bCol, maxRounds, iterPartitions).df
 
   /** Incrementally MAINTAIN a cluster assignment as new near-dup pairs
     * arrive — the continuous-ingest companion of
-    * [[connectedComponentsM]]: instead of re-clustering the full pair
+    * [[connectedComponents]]: instead of re-clustering the full pair
     * graph (which at 100 TB means re-reading every historical pair),
     * the existing `(doc_id, cluster_rep)` assignment is folded in as
     * STAR EDGES (each member → its rep) and only the NEW pairs add
@@ -911,27 +854,16 @@ object Dedup {
     * Nodes appearing only in `newPairs` join the graph as usual;
     * nodes only in `existing` keep their old assignment (possibly
     * re-labeled if a new edge merges their component with a
-    * lower-minimum one).
+    * lower-minimum one). Returns the same spilled frame as
+    * [[connectedComponents]].
     */
-  def incrementalClustersM(existing: DataFrame, newPairs: DataFrame,
-                           aCol: String, bCol: String,
-                           existingIdCol: String = "doc_id",
-                           existingRepCol: String = "cluster_rep",
-                           maxRounds: Int = 50,
-                           iterPartitions: Int = 8,
-                           roundMat: MatStrategy = MatStrategy.Local,
-                           mat: MatStrategy = MatStrategy.Default): Materialized = {
-    val stars = existing.select(col(existingIdCol).as(aCol),
-      col(existingRepCol).as(bCol))
-    connectedComponentsM(stars.union(newPairs.select(col(aCol), col(bCol))),
-      aCol, bCol, maxRounds, iterPartitions, roundMat, mat)
-  }
-
-  /** [[incrementalClustersM]] with the zero-leak default
-    * materialization. */
   def incrementalClusters(existing: DataFrame, newPairs: DataFrame,
-                          aCol: String, bCol: String): DataFrame =
-    incrementalClustersM(existing, newPairs, aCol, bCol).df
+                          aCol: String, bCol: String): DataFrame = {
+    val stars = existing.select(col("doc_id").as(aCol),
+      col("cluster_rep").as(bCol))
+    connectedComponents(stars.union(newPairs.select(col(aCol), col(bCol))),
+      aCol, bCol)
+  }
 
   /** Incremental dedup: which rows of a NEW batch are novel relative to
     * an already-ingested corpus — the shape every continuously-fed

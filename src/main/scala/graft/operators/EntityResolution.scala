@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *  - Candidate pairs are ID-ONLY through the block self-join and the
   *    multi-pass distinct; attributes join back afterwards (two hash
   *    joins), so wide records never ride the pair-shaped shuffle — the
-  *    same shape [[Dedup.minhashNearDupPairsM]] and
+  *    same shape [[Dedup.minhashNearDupPairs]] and
   *    [[Similarity.lshNearDupPairs]] use.
   *  - Scoring is row-local codegen'd expressions (levenshtein, exact
   *    matches, numeric closeness) on the joined pair — no UDFs.
@@ -173,8 +173,8 @@ object EntityResolution {
   /** Entity assignment from linked pairs: every record gets the minimum
     * record id of its transitive link component; unlinked records are
     * their own entity. Clustering is [[Dedup.connectedComponents]]
-    * (pointer doubling, per-round materialization); the singleton
-    * completion is one left join.
+    * (pointer doubling, per-round materialization), so the link ids
+    * must be integral; the singleton completion is one left join.
     *
     * Returns (id, entity_id) for EVERY record.
     */

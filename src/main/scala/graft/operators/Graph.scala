@@ -828,7 +828,7 @@ object Graph {
     * Scale shape: each round is one degree aggregation plus two hash
     * semi-joins of the adjacency against the surviving node set —
     * never a window, never a collect beyond the O(1) convergence
-    * witness (edge count, the [[Dedup.connectedComponentsM]] device).
+    * witness (edge count, the [[Dedup.connectedComponents]] device).
     * Rounds run at most `maxRounds` ≈ O(peel depth); real similarity
     * graphs converge in a handful. Each round's adjacency is
     * checkpoint-truncated so lineage stays flat, and the survivors

@@ -1011,7 +1011,7 @@ object Similarity {
     // degenerate filter's anchor side, and the false-negative
     // anti-join) — persist it so the LSH screen runs once, and release
     // it after the eager spill materialization: no RDD blocks outlive
-    // the call (same contract as minhashNearDupPairsM)
+    // the call (same contract as minhashNearDupPairs)
     val pos = lshNearDupPairs(corpus, idCol, vecCol, threshold, tables, bits)
       .select(col("id_a").as("anchor_id"), col("id_b").as("pos_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -5,41 +5,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Eager-materialization strategies for operators that must pin an
   * intermediate result — iterative algorithms that truncate their
-  * lineage every round (connected components) and pipelines whose
-  * output feeds several consumers (the MinHash verified-pair list).
-  *
-  * The strategy choice is exactly the 100 TB durability trade-off:
+  * lineage every round (connected components, the graph rounds) and
+  * pipelines whose output feeds several consumers (the MinHash
+  * verified-pair list).
   *
   *  - [[MatStrategy.Local]] — `localCheckpoint`: executor-local,
   *    NON-replicated blocks. Fastest (no DFS round-trip), right for
-  *    bounded intra-job state that a retry can rebuild from scratch —
-  *    but one lost executor kills the job, so it is NOT the shape for a
-  *    1000-executor run.
-  *  - [[MatStrategy.Reliable]] — RDD checkpoint into
-  *    `sc.setCheckpointDir` (any Hadoop scheme). Survives executor loss;
-  *    the standard choice for long iterative jobs on a real cluster.
-  *  - [[MatStrategy.Spill]] — parquet round-trip through a directory on
-  *    any Hadoop filesystem. Durable AND columnar (later consumers get
-  *    pushdown/pruning against the spill), and the files outlive the
-  *    Spark session — the right shape when the materialized result
-  *    escapes the operator (returned to a caller who will run further
-  *    actions on it).
-  *  - [[MatStrategy.Default]] — a per-session spill root on the
-  *    session's DEFAULT Hadoop filesystem (local temp dir on a laptop,
-  *    a `/tmp` dir on the cluster DFS under `fs.defaultFS`), removed on
-  *    JVM exit. A hard-coded driver-local temp dir would break on a
-  *    real cluster: executors would each write their tasks to their own
-  *    local disks.
+  *    bounded intra-job state that a retry can rebuild from scratch:
+  *    per-round iteration state and per-batch screen results that never
+  *    leave the operator or the micro-batch.
+  *  - [[MatStrategy.Default]] — parquet round-trip through a per-session
+  *    spill root on the session's DEFAULT Hadoop filesystem (local temp
+  *    dir on a laptop, a `/tmp` dir on the cluster DFS under
+  *    `fs.defaultFS`), removed on JVM exit. Durable AND columnar (later
+  *    consumers get pushdown/pruning against the spill) — the shape for
+  *    results that escape the operator. A hard-coded driver-local temp
+  *    dir would break on a real cluster: executors would each write
+  *    their tasks to their own local disks.
   *
   * Every materialization returns a [[Materialized]] handle whose
   * `release()` frees exactly the storage that call created: the blocks
-  * of the RDD behind the returned frame (Local), that RDD's checkpoint
-  * directory (Reliable) or the spill directory (Spill/Default). Each
-  * handle reaches its storage through its own frame, never through
-  * session-wide state, so no lock is needed: materializations on
-  * concurrent driver threads run concurrently and never release each
-  * other's storage. Caches the caller persisted upstream stay the
-  * caller's to unpersist. Operators that return a
+  * of the RDD behind the returned frame (Local) or the spill directory
+  * (Default). Each handle reaches its storage through its own frame,
+  * never through session-wide state, so no lock is needed:
+  * materializations on concurrent driver threads run concurrently and
+  * never release each other's storage. Caches the caller persisted
+  * upstream stay the caller's to unpersist. Operators that return a
   * plain DataFrame use [[MatStrategy.Default]] so NO RDD blocks outlive
   * the call — `sc.getPersistentRDDs` stays empty (asserted in LeakSpec).
   */
@@ -47,35 +38,11 @@ sealed trait MatStrategy
 
 object MatStrategy {
   case object Local extends MatStrategy
-  case object Reliable extends MatStrategy
-  final case class Spill(dir: String) extends MatStrategy
-
-  /** No materialization: hand back the lazy frame with a no-op release.
-    * For callers that want the OPERATOR'S full plan — composing it into
-    * a larger pipeline Catalyst should optimize end to end, or
-    * asserting plan shape in tests — and accept recomputation on every
-    * action in exchange. */
-  case object PassThrough extends MatStrategy
 
   /** Spill to a per-session default root resolved against the session's
     * default filesystem at materialization time (see class doc).
     */
   case object Default extends MatStrategy
-
-  /** Per-JVM LOCAL spill root (deleted on JVM exit) — for tests and
-    * explicitly-local runs; [[Default]] is the deployment-safe choice.
-    */
-  lazy val spillDefault: Spill = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-spill")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(dir.toFile)
-    }))
-    Spill(dir.toString)
-  }
 }
 
 /** An eagerly-computed DataFrame plus the action that frees its backing
@@ -86,6 +53,21 @@ final case class Materialized(df: DataFrame, release: () => Unit)
 object Materialize {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Per-JVM local spill root (deleted on JVM exit): the default root
+    * when the default filesystem is the local one.
+    */
+  private lazy val localSpillRoot: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-spill")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+        f.delete(); ()
+      }
+      rm(dir.toFile)
+    }))
+    dir.toString
+  }
 
   /** Default spill root per (JVM, default filesystem): a temp dir on
     * the session's `fs.defaultFS` so executor tasks of a real cluster
@@ -99,7 +81,7 @@ object Materialize {
     defaultRoots.computeIfAbsent(fsUri, _ => {
       val fs = org.apache.hadoop.fs.FileSystem.get(conf)
       if ("file".equalsIgnoreCase(fs.getScheme)) {
-        MatStrategy.spillDefault.dir
+        localSpillRoot
       } else {
         val root = new Path(
           s"/tmp/graft-spill-${java.util.UUID.randomUUID().toString}")
@@ -140,9 +122,9 @@ object Materialize {
     * Graph and Similarity iterative operators, …), which drop the
     * release handle by design. Bounded for batch jobs (JVM-exit
     * cleanup reclaims everything), but a long-lived SERVICE session
-    * accumulates one dir per call: such callers should prefer the
-    * Dedup `*M` variants and release(), or call [[reapDefaultSpills]]
-    * at a point where no bare-DataFrame result is still in use.
+    * accumulates one dir per call: such callers should call
+    * [[reapDefaultSpills]] at a point where no bare-DataFrame result is
+    * still in use.
     */
   private val defaultSpills =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -165,9 +147,8 @@ object Materialize {
     n
   }
 
-  /** The RDD a checkpointed frame reads: `checkpoint` and
-    * `localCheckpoint` return a frame over exactly one `LogicalRDD`,
-    * whose RDD owns the blocks (Local) or the checkpoint dir (Reliable).
+  /** The RDD a checkpointed frame reads: `localCheckpoint` returns a
+    * frame over exactly one `LogicalRDD`, whose RDD owns the blocks.
     */
   private def checkpointRdd(out: DataFrame): org.apache.spark.rdd.RDD[_] =
     out.queryExecution.logical match {
@@ -206,34 +187,16 @@ object Materialize {
   }
 
   def apply(df: DataFrame, mat: MatStrategy): Materialized = mat match {
-
-    case MatStrategy.PassThrough => Materialized(df, () => ())
-
-    case MatStrategy.Default =>
-      val (m, path) = spill(df, defaultSpillRoot(df.sparkSession))
-      defaultSpills.add(path)
-      Materialized(m.df, () => { defaultSpills.remove(path); m.release() })
-
+    case MatStrategy.Default => spill(df)
     case MatStrategy.Local => local(df, eager = true)._1
-
-    case MatStrategy.Reliable =>
-      val sc = df.sparkSession.sparkContext
-      // reliable checkpoint needs a checkpoint dir; default to a local
-      // temp one so tests/local runs work — production sets a DFS path.
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(
-          java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-      val out = df.checkpoint(true)
-      val dir = checkpointRdd(out).getCheckpointFile.map(new Path(_))
-      Materialized(out, () => dir.foreach { d =>
-        d.getFileSystem(sc.hadoopConfiguration).delete(d, true); () })
-
-    case MatStrategy.Spill(root) => spill(df, root)._1
   }
 
-  private def spill(df: DataFrame, root: String): (Materialized, String) = {
+  /** Parquet round-trip through the default spill root, registered for
+    * [[reapDefaultSpills]] until released. */
+  private def spill(df: DataFrame): Materialized = {
     val spark = df.sparkSession
-    val path = s"$root/spill-${counter.incrementAndGet()}"
+    val path =
+      s"${defaultSpillRoot(spark)}/spill-${counter.incrementAndGet()}"
     df.write.mode("overwrite").parquet(path)
     // explicit schema: an empty result writes no part files, and a
     // schemaless read of the empty dir would fail instead of
@@ -242,10 +205,12 @@ object Materialize {
     val out = spark.read.schema(
       relaxNullability(df.schema)
         .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(path)
-    (Materialized(out, () => {
+    defaultSpills.add(path)
+    Materialized(out, () => {
+      defaultSpills.remove(path)
       val p = new Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(p, true); ()
-    }), path)
+    })
   }
 }

@@ -376,11 +376,7 @@ object StreamingOps {
     // at query start (the table's k cannot change mid-stream — appends
     // reuse it) so a mismatched table is refused before any write and
     // each micro-batch skips the metadata read round-trip
-    val storedK = graft.operators.Dedup
-      .signatureTableK(src.sparkSession, sigTablePath)
-    require(storedK == k,
-      s"signature table at $sigTablePath was written with " +
-        s"k=$storedK but the curate loop hashes with k=$k")
+    graft.operators.Dedup.requireShingleK(src.sparkSession, sigTablePath, k)
     // fingerprint geometry likewise read once at query start; the
     // table's own marker is the single source of truth (callers don't
     // pass k/window — a curate loop must match whatever the table holds)
@@ -450,7 +446,7 @@ object StreamingOps {
             import scala.concurrent.duration.Duration
             val fScr = Future(graft.operators.Dedup
               .incrementalNearDupAgainstPreSigsM(sigB, sigTablePath,
-                threshold, graft.ops.MatStrategy.Local))
+                threshold))
             // quote screen: batch fingerprints vs the maintained table,
             // under the replay contract — the batch's own ids excluded
             // from the corpus side and df deltas read below its batch

@@ -132,17 +132,32 @@ class DedupSpec extends SparkSpec {
     // rounds; both must produce the identical assignment
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (9L, 4L), (10L, 11L),
       (7L, 7L), (100L, 5L)).toDF("doc_a", "doc_b")
-    def run(maxEdges: Long) = {
-      val m = Dedup.connectedComponentsM(pairs, "doc_a", "doc_b",
-        smallGraphMaxEdges = maxEdges)
-      try m.df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally m.release()
-    }
+    def run(maxEdges: Long) =
+      Dedup.connectedComponents(pairs, "doc_a", "doc_b",
+          smallGraphMaxEdges = maxEdges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val fast = run(Dedup.SmallGraphMaxEdges)
+    // the iterative rounds release every block they pinned
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     val iter = run(0L)
+    assert(sc.getPersistentRDDs.keySet == before,
+      "iterative CC left round state persisted")
     assert(fast === iter)
     assert(fast(4L) === 1L && fast(9L) === 1L, "merged chain takes min rep")
     assert(fast(7L) === 7L && fast(100L) === 5L)
+  }
+
+  test("connectedComponents refuses non-integral ids, naming the column") {
+    // a string chain n00-n01-…-n12: neither the union-find fold nor the
+    // label-sum witness has a meaning for string ids
+    val pairs = (0 until 12).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
+      .toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+    }
+    assert(e.getMessage.contains("doc_a") && e.getMessage.contains("string"),
+      e.getMessage)
   }
 
   test("simhash banded pairs find exact copies at hamming 0") {

@@ -21,26 +21,6 @@ class MaterializeSpec extends SparkSpec {
       "release must unpersist exactly the blocks it created")
   }
 
-  test("Reliable checkpoints to the checkpoint dir and release deletes it") {
-    val sc = spark.sparkContext
-    def dirs(): Set[String] = sc.getCheckpointDir.map { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(sc.hadoopConfiguration)
-      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.toString).toSet
-      else Set.empty[String]
-    }.getOrElse(Set.empty)
-    val before = dirs()
-    val m = Materialize(df, MatStrategy.Reliable)
-    assert(m.df.count() == 3)
-    val created = dirs().diff(before)
-    assert(created.nonEmpty, "checkpoint files must exist")
-    m.release()
-    // only THIS materialization's dirs must be gone — other suites may
-    // legitimately have live checkpoints in the shared session root
-    assert(dirs().intersect(created).isEmpty,
-      "release must delete the rdd checkpoint dirs it created")
-  }
-
   test("two Local materializations on two threads run concurrently and " +
     "each release frees only its own blocks") {
     import scala.concurrent.{Await, Future}
@@ -73,18 +53,19 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("Spill round-trips rows+schema through parquet; release deletes files") {
-    val root = java.nio.file.Files.createTempDirectory("graft_mat").toString
     val src = df.withColumn("d", col("id").cast("double"))
-    val m = Materialize(src, MatStrategy.Spill(root))
+    val m = Materialize(src, MatStrategy.Default)
     // parquet reads relax nullability — names and types must survive
     assert(m.df.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
       src.schema.fields.map(f => (f.name, f.dataType)).toSeq)
     assert(m.df.orderBy("id").collect().toSeq ==
       src.orderBy("id").collect().toSeq)
-    m.release()
-    val p = new org.apache.hadoop.fs.Path(root)
+    // the handle's own spill dir: the parent of its part files
+    val p = new org.apache.hadoop.fs.Path(m.df.inputFiles.head).getParent
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.listStatus(p).isEmpty, "release must delete the spill dir")
+    assert(fs.exists(p))
+    m.release()
+    assert(!fs.exists(p), "release must delete the spill dir")
   }
 
   test("reapDefaultSpills deletes unreleased Default spill dirs; " +
@@ -100,9 +81,8 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("Spill of an EMPTY frame keeps the schema (explicit-schema read)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_mat_e").toString
     val empty = df.where(lit(false))
-    val m = Materialize(empty, MatStrategy.Spill(root))
+    val m = Materialize(empty, MatStrategy.Default)
     assert(m.df.count() == 0)
     assert(m.df.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
       empty.schema.fields.map(f => (f.name, f.dataType)).toSeq)

@@ -131,11 +131,9 @@ class PropertiesSpec extends SparkSpec {
         val fast = graft.operators.Dedup.connectedComponents(
           edges.toDF("a", "b"), "a", "b")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val iterM = graft.operators.Dedup.connectedComponentsM(
+        val iter = graft.operators.Dedup.connectedComponents(
           edges.toDF("a", "b"), "a", "b", smallGraphMaxEdges = 0L)
-        val iter =
-          try iterM.df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          finally iterM.release()
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(fast == expected, s"fast-path cc mismatch on sample $i: $edges")
         assert(iter == expected, s"iterative cc mismatch on sample $i: $edges")
       }

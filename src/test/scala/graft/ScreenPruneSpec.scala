@@ -389,9 +389,11 @@ class ScreenPruneSpec extends SparkSpec {
       (1003L, doc(3L)._2.substring(6)),
       (2002L, "novel aaa bbb ccc ddd eee fff ggg hhh iii jjj kkk lll"))
       .toDF("doc_id", "text")
-    val viaTable = Dedup.incrementalNearDupAgainstSigsM(
-      batch, sigPath, "text", "doc_id").df
-      .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
+    val m = Dedup.incrementalNearDupAgainstSigsM(
+      batch, sigPath, "text", "doc_id")
+    val viaTable =
+      try m.df.orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
+      finally m.release()
     val direct = Dedup.incrementalNearDup(batch, corpus, "text", "doc_id")
       .orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
     assert(viaTable == direct)

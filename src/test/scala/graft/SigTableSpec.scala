@@ -20,9 +20,10 @@ class SigTableSpec extends SparkSpec {
     val path = java.nio.file.Files
       .createTempDirectory("graft_sigs").toString + "/sigs"
     Dedup.writeSignatureTable(d, "text", "doc_id", path)
-    val viaTable = Dedup.incrementalNearDupAgainstSigsM(
-      batch, path, "text", "doc_id").df
-      .orderBy("batch_id", "corpus_id").collect().toSeq
+    val m = Dedup.incrementalNearDupAgainstSigsM(batch, path, "text", "doc_id")
+    val viaTable =
+      try m.df.orderBy("batch_id", "corpus_id").collect().toSeq
+      finally m.release()
     val viaText = Dedup.incrementalNearDup(batch, d, "text", "doc_id")
       .orderBy("batch_id", "corpus_id").collect().toSeq
     assert(viaTable == viaText,

@@ -16,7 +16,10 @@ it counts as referenced by `Owner.name` anywhere, or by an unqualified
 `Owner._` / `Owner.name`. Members of classes and traits, and `apply`,
 `unapply` and `main`, are reached through instances, constructor
 syntax or the JVM, so they count any occurrence of their name.
-Comments are stripped before counting. String literals count only for
+Comments are stripped before counting, and so are match-arm patterns
+(`case Name =>`, `case Owner.Name | Other =>`): naming a case object in
+its own dispatch does not construct it, so a sealed-trait case that only
+tests select is listed. String literals count only for
 names that are not object members, so a class named in a conf string
 counts as a reference to it, while the word `compact` in an error
 message does not call `Sinks.compact`.
@@ -42,6 +45,7 @@ IDENT = re.compile(r"[A-Za-z_]\w*")
 TOKEN = re.compile(r"[A-Za-z_]\w*|\S")
 INTERP = re.compile(r"(\$\{[^}]*\}|\$\w+|\n)|.")
 HEADER_GOES_ON = re.compile(r"\s*(?:extends|with|derives|\(|\[)")
+CASE_ARM = re.compile(r"\bcase\s+(?:\w+\.)?\w+(?:\s*\|\s*(?:\w+\.)?\w+)*(?=\s*=>)")
 LOOSE = {"apply", "unapply", "main"}
 
 
@@ -59,6 +63,13 @@ def strip(text, tokens, comment_starts, keep_strings):
             return INTERP.sub(lambda i: i.group(1) or " ", s)
         return re.sub(r"[^\n]", " ", s)
     return tokens.sub(blank, text)
+
+
+def drop_case_arms(code):
+    """Blank every match-arm pattern made only of stable identifiers
+    (`case [Owner.]Name [| …] =>`), keeping the `case` keyword."""
+    return CASE_ARM.sub(lambda m: "case" + " " * (len(m.group(0)) - 4),
+                        code)
 
 
 def body_open(code, i):
@@ -148,9 +159,10 @@ def main():
         files, codes = {}, {}
         for p in sorted(root.glob(glob)):
             raw = p.read_text()
-            codes[p] = strip(raw, SCALA_TOKENS, ("//", "/*"), False)
-            every = Counter(IDENT.findall(
-                strip(raw, SCALA_TOKENS, ("//", "/*"), True)))
+            codes[p] = drop_case_arms(
+                strip(raw, SCALA_TOKENS, ("//", "/*"), False))
+            every = Counter(IDENT.findall(drop_case_arms(
+                strip(raw, SCALA_TOKENS, ("//", "/*"), True))))
             files[p] = (every, tally(codes[p]), imports(codes[p]))
         return files, codes
 
