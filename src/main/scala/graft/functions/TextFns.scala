@@ -27,7 +27,9 @@ object TextFns {
   /** Polynomial rolling hash over code points:
     * fold(h = (h*31 + codepoint) mod 1e9+7). Mirrors DuckDB
     * list_reduce over unicode(); used as a cheap order-sensitive
-    * document fingerprint.
+    * document fingerprint. It is also the portable shingle hash:
+    * ShingleHashesExpr and PositionalShingleHashesExpr compute it per
+    * k-window in one native pass.
     */
   def rollingHash(text: Column): Column =
     aggregate(
@@ -77,18 +79,6 @@ object TextFns {
       .when(fr >= es, lit("fr"))
       .otherwise(lit("es"))
   }
-
-  /** Polynomial codepoint hash of a string:
-    * fold(h = (h*31 + codepoint) mod 1e9+7) — the portable shingle hash.
-    * DuckDB computes the identical value with list_reduce over
-    * unicode(); ShingleHashesExpr is the fused one-pass native form.
-    */
-  val PolyP: Long = 1000000007L
-  def polyHash(s: Column): Column =
-    aggregate(
-      transform(split(s, ""), c => ascii(c).cast("long")),
-      lit(0L),
-      (acc, c) => (acc * 31 + c) % PolyP)
 
   /** Portable 32-bit hash: first 8 hex chars of md5 as an unsigned int.
     * DuckDB computes the identical value from the same md5 hex. */

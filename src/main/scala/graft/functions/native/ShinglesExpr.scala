@@ -86,7 +86,7 @@ case class ShingleHashesExpr(child: Expression, k: Int)
   * empty string hashes to 0), matching the short-text rule of the
   * sibling expressions and of the HOF form
   * `transform(sequence(1, greatest(len-k+1, 1)), i ->
-  * polyHash(substring(text, i, k)))`.
+  * rollingHash(substring(text, i, k)))` (TextFns.rollingHash).
   *
   * The HOF form is O(n²) on large documents: each lambda-evaluated
   * `substring` re-scans the source string (UTF8String's ascii check +

@@ -1193,14 +1193,18 @@ object TrainingData {
   // flagged positions collapse via the gaps-and-islands device
   // (pos - row_number is constant within a run — the x_interval_merge
   // idea applied to character positions). Cost is O(total chars); the
-  // comparison unit is the window, never a doc pair.
+  // comparison unit is the window, never a doc pair. Windows are hashed
+  // by the native one-pass positional kernel (x_dup_spans' hash), after
+  // a doc-keyed fan-out so the explosion does not run at the scan's
+  // split count. Null text yields no windows, hence longest_run 0.
   def dupLongestQ(spark: SparkSession, dir: String): DataFrame = {
+    import graft.functions.native.NativeFns
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
-    val w = d.select(col("doc_id"),
-      posexplode(expr("transform(sequence(1, greatest(length(text)-19, 1))," +
-        " i -> substring(text, i, 20))")).as(Seq("p", "win")))
-      .select(col("doc_id"), (col("p") + 1).as("pos"),
-        TextFns.polyHash(col("win")).as("h"))
+    val fan = spark.sessionState.conf.numShufflePartitions
+    val w = d.repartition(fan, col("doc_id")).select(col("doc_id"),
+      posexplode(NativeFns.positionalShingleHashes(col("text"), 20))
+        .as(Seq("p", "h")))
+      .select(col("doc_id"), (col("p") + 1).as("pos"), col("h"))
     val nd = w.select(col("doc_id"), col("h")).distinct()
       .groupBy(col("h")).agg(count(lit(1)).as("ndocs"))
       .where(col("ndocs") >= 2)

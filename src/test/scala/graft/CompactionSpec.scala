@@ -42,7 +42,10 @@ class CompactionSpec extends SparkSpec {
       .repartition(8).write.parquet(s"$root/frag")
     withPlans(Compaction.compact(spark, s"$root/frag", s"$root/out",
         targetFileBytes = 1L << 20)) { plans =>
-      val p = plans.find(_.contains("InsertIntoHadoopFsRelationCommand"))
+      // the fixture write above can reach the listener late: pick the
+      // compaction's own write by its output path
+      val p = plans.find(q => q.contains("InsertIntoHadoopFsRelationCommand")
+        && q.contains(s"$root/out"))
       assert(p.exists(_.contains("Coalesce")), s"no coalesce:\n$plans")
       assert(!p.exists(_.contains("Exchange")), s"unexpected shuffle:\n$p")
     }

@@ -21,7 +21,7 @@ object HofReference {
     * k-shingles; distinctness on the hash value). */
   def shingleHashes(text: Column, k: Int): Column =
     array_distinct(transform(shingles(text, k),
-      s => graft.functions.TextFns.polyHash(s)))
+      s => graft.functions.TextFns.rollingHash(s)))
 
   /** Dot product as an ascending-index fold in DOUBLE. */
   def dotHof(a: Column, b: Column): Column =

@@ -173,6 +173,20 @@ class PlanSpec extends SparkSpec {
       s"no keyed join on the window hash:\n$p")
   }
 
+  test("dupLongest hashes windows natively past a doc-keyed fan-out and " +
+    "keeps its left join") {
+    val p = plan(graft.queries.TrainingData.dupLongestQ(spark, sf0001))
+    assert(p.contains("graft_pos_shingle_hashes"),
+      s"windows not hashed by the native kernel:\n$p")
+    assert(!p.contains("lambdafunction"),
+      s"an interpreted lambda is left on the window path:\n$p")
+    // the explicit-width fan-out ahead of the window explosion survives
+    // optimization (AQE must not coalesce it away)
+    assert(p.contains("REPARTITION_BY_NUM"),
+      s"window explosion runs at scan parallelism:\n$p")
+    assert(p.contains("LeftOuter"), s"left join to the doc table lost:\n$p")
+  }
+
   test("heavyHitters sketch combines map-side and fans past the scan " +
     "split count; candidates broadcast for the recount") {
     val p = plan(graft.queries.TrainingData.heavyHittersQ(spark, sf0001))

@@ -28,6 +28,30 @@ class ShinglesSpec extends SparkSpec {
     assert(r.getSeq[Long](1) == Seq(ph("中文字符测"), ph("文字符测试")))
   }
 
+  test("native positional hashes at k=20 == HOF window form; null text " +
+    "yields no rows") {
+    import graft.functions.TextFns
+    val texts = Seq("", "seven c", "exactly twenty chars",
+      "Ünïcödé àccents çà et là, déjà vu", "emoji 😀 beyond 🎉 the BMP 🚀 plane")
+    assert(texts(2).length == 20 && texts(1).length == 7)
+    val hof = transform(
+      sequence(lit(1), greatest(length($"text") - 19, lit(1))),
+      i => TextFns.rollingHash($"text".substr(i, lit(20))))
+    val r = texts.toDF("text").select($"text",
+      NativeFns.positionalShingleHashes($"text", 20).as("native"),
+      hof.as("hof")).collect()
+    r.foreach(row => assert(row.getSeq[Long](1) == row.getSeq[Long](2),
+      s"window hashes differ for '${row.getString(0)}'"))
+    // The HOF form turns null text into one (pos 1, h null) row; the
+    // kernel returns null, which posexplode drops. x_dup_longest is
+    // unchanged: a null h never equi-joins the shared-window set, so a
+    // null-text document still reaches the output only through the
+    // left join, as 0 / 0.
+    val nulls = Seq((1L, null: String)).toDF("doc_id", "text")
+      .select(posexplode(NativeFns.positionalShingleHashes($"text", 20)))
+    assert(nulls.count() == 0)
+  }
+
   test("native jaccard on long arrays == intersect/union sizes") {
     val docs = Tables.load(spark, sf0001, "documents").limit(60)
       .select($"doc_id",

@@ -9,8 +9,18 @@ name, then row-wise compare after sorting rows by all columns; values
 compared with a small float tolerance report plus an exact-hash verdict.
 Each verdict line carries the seconds DuckDB spent on that oracle, and the
 run ends with the five slowest oracles.
+
+    python3 tools/verify_local.py --against <parentOut> <out>
+
+compares two graft.Verify dumps instead, e.g. of a parent commit and of a
+change. graft.Verify's row order is not stable between runs, so each
+query's two parquet outputs are compared as `canon`-sorted frames (the
+sort the oracle compare uses), with exact values. Prints one line per
+query, `same`, `DIFFERS` (with the reason) or `MISSING` (dumped on one
+side only), then a count line; exits 1 on any DIFFERS or MISSING.
 """
 import json
+import os
 import sys
 import time
 import duckdb
@@ -83,6 +93,42 @@ def main(sf_dir: str, out_dir: str) -> int:
     print(f"== {n_pass} pass / {n_fail} fail ==")
     return 1 if n_fail else 0
 
+def dump_names(out_dir: str) -> set:
+    return {n for n in os.listdir(out_dir)
+            if os.path.isdir(os.path.join(out_dir, n))}
+
+def compare_dumps(parent_dir: str, out_dir: str) -> int:
+    """Per-query row-multiset compare of two Verify dumps."""
+    names = dump_names(parent_dir) | dump_names(out_dir)
+    counts = {"same": 0, "DIFFERS": 0, "MISSING": 0}
+    for name in sorted(names):
+        where = [d for d in (parent_dir, out_dir)
+                 if not os.path.isdir(os.path.join(d, name))]
+        if where:
+            print(f"MISSING {name}: not in {where[0]}")
+            counts["MISSING"] += 1
+            continue
+        try:
+            p = canon(pd.read_parquet(f"{parent_dir}/{name}"))
+            g = canon(pd.read_parquet(f"{out_dir}/{name}"))
+            if list(p.columns) != list(g.columns):
+                why = f"columns {list(p.columns)} -> {list(g.columns)}"
+            elif len(p) != len(g):
+                why = f"rows {len(p)} -> {len(g)}"
+            else:
+                cols = [c for c in p.columns if not p[c].equals(g[c])]
+                why = f"values in {cols}" if cols else None
+        except Exception as ex:
+            why = str(ex)[:300]
+        if why:
+            print(f"DIFFERS {name}: {why}")
+            counts["DIFFERS"] += 1
+        else:
+            print(f"same {name} ({len(g)} rows)")
+            counts["same"] += 1
+    print("== " + " / ".join(f"{n} {k}" for k, n in counts.items()) + " ==")
+    return 1 if counts["DIFFERS"] or counts["MISSING"] else 0
+
 def check_bands(bench_path: str, bands_path: str = "BANDS.json",
                 tol=2.0) -> int:
     """Adjudicate a bench reading against the committed per-query bands
@@ -148,4 +194,6 @@ def check_bands(bench_path: str, bands_path: str = "BANDS.json",
 if __name__ == "__main__":
     if sys.argv[1] == "--bands":
         sys.exit(check_bands(*sys.argv[2:]))
+    if sys.argv[1] == "--against":
+        sys.exit(compare_dumps(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
