@@ -45,6 +45,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** Seconds that the re-runs of flagged rows may spend, in total,
+    * waiting for the host load to drop. */
+  private val RerunWaitS = 120.0
+
   /** Nearest ancestor directory containing build.sbt (the repo root),
     * falling back to the CWD: BENCH_RUNS.jsonl is append-only HISTORY
     * and a CWD-relative path would silently start a new one per
@@ -114,19 +118,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to every available core (capped at 32 — the harness's
-    // local[32] contract): round-1 defaulted to 4, which made the
-    // driver-run bench measure a quarter-width machine.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
     val root = repoRoot()
     val loadStart = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    val cpus = spark.sparkContext.defaultParallelism
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM warmup
     // C2-compile the heavy shared expression machinery BEFORE timing.
     // The recorded bimodality (x_dedup_drop 2.75-10.4 s, x_semdedup
@@ -321,8 +316,7 @@ object Bench {
     // a deferred re-run is visible in BENCH_RUNS.jsonl history.
     val firstWall = results.toMap
     val loadFloor = cpus.toDouble / 4.0
-    var rerunBudgetS = sys.env.getOrElse("GRAFT_BENCH_RERUN_WAIT", "120")
-      .toDouble
+    var rerunBudgetS = RerunWaitS
     val rerunWaits = scala.collection.mutable.Map.empty[String, Double]
     val second: Seq[(String, Reading)] = flagged.flatMap { case (name, _, _) =>
       queryFns.find(_._1 == name).map { case (_, fn) =>

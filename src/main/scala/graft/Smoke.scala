@@ -1,17 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirror of the driver's t1 smoke: SparkEntry.entry must return >0 rows
   * on sf0.001. Run: sbt "runMain graft.Smoke"
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows=$n " + (if (n > 0) "OK" else "FAIL"))

@@ -20,6 +20,19 @@ object Jobs {
 
   private val T0 = EtlOps.FixedClock
 
+  /** screen_blocklist's terms, review and block hit thresholds, and the
+    * text that replaces a hit. */
+  private val BlockTerms = Seq("merge", "scan", "batch stream")
+  private val BlockReviewAt = 12L
+  private val BlockAt = 20L
+  private val BlockRepl = "<BLOCKED>"
+
+  /** Likelihood merges learned by train_wordpiece. */
+  private val WordpieceRounds = 3
+
+  /** Batch-perceptron rounds run by train_quality_model. */
+  private val QualityModelRounds = 4
+
   /** Pattern A (reference SimpleDataCleanUtils.processTable, 5 jobs):
     * latest partition → audit stamp → append into DWD. */
   private def auditAppendJob(table: String, dateCol: Option[String])(
@@ -774,22 +787,7 @@ object Jobs {
     if (!fs.exists(marker))
       Unigram.trainVocab(d, "text", topMulti = 96, maxWordLen = 64)
         .write.mode("overwrite").parquet(vocabPath)
-    // vocab budget (GRAFT_VOCAB_BUDGET, the CLI surface's env-based
-    // parameterization, like SPARK_GRAFT_CPUS): when set, the seed
-    // vocabulary is refined by the budgeted hard-EM loop (two
-    // segment→usage→cut→rescore rounds — Unigram.trainToBudget, the
-    // x_unigram_budget lane) and THAT artifact ships; unset keeps the
-    // seed vocabulary.
-    val vocabDf = sys.env.get("GRAFT_VOCAB_BUDGET").map(_.toInt) match {
-      case Some(b) =>
-        val budgeted = s"$outDir/unigram_vocab_budgeted"
-        Unigram.trainToBudget(
-            Unigram.wordCounts(d, "text", maxWordLen = 64),
-            spark.read.parquet(vocabPath), b, rounds = 2)
-          .write.mode("overwrite").parquet(budgeted)
-        spark.read.parquet(budgeted)
-      case None => spark.read.parquet(vocabPath)
-    }
+    val vocabDf = spark.read.parquet(vocabPath)
     val vocab = vocabDf.orderBy(col("piece"))
       .collect().map(r => (r.getString(0), r.getLong(2))).toSeq
     val seg = Unigram.segmentWords(
@@ -847,23 +845,6 @@ object Jobs {
         graft.multimodal.Multimodal.withMediaBinary(
           Tables.load(spark, sfDir, "documents"), "text"))
       .write.mode("overwrite").parquet(s"$outDir/media_exif")
-    // GRAFT_EXIF_SCRUB=1: the quarantine-preserving location scrub —
-    // image-borne GPS is PII the text scrub lane structurally cannot
-    // see. The scrubbed table nulls the coordinates; the quarantine
-    // table keeps every row a privacy gate must hold back (GPS-bearing
-    // OR corrupt-claim — a malformed GPS IFD is never silently passed).
-    if (sys.env.get("GRAFT_EXIF_SCRUB").contains("1")) {
-      val exif = spark.read.parquet(s"$outDir/media_exif")
-      exif.withColumn("gps_lat_udeg", lit(null).cast("long"))
-        .withColumn("gps_lon_udeg", lit(null).cast("long"))
-        .write.mode("overwrite").parquet(s"$outDir/media_exif_scrubbed")
-      exif.where(col("gps_lat_udeg").isNotNull ||
-          col("gps_lon_udeg").isNotNull || col("quarantined"))
-        .select(col("doc_id"), col("quarantined"),
-          (col("gps_lat_udeg").isNotNull ||
-            col("gps_lon_udeg").isNotNull).as("located"))
-        .write.mode("overwrite").parquet(s"$outDir/media_gps_quarantine")
-    }
   }
 
   /** PCA artifacts for the embedding corpus: the top principal
@@ -889,26 +870,19 @@ object Jobs {
   }
 
   /** Blocklist screen over documents: per-(doc, term) Aho–Corasick hit
-    * counts plus the per-doc policy verdict. Terms from
-    * GRAFT_BLOCK_TERMS (comma-separated), thresholds from
-    * GRAFT_BLOCK_REVIEW_AT / GRAFT_BLOCK_AT. One automaton pass per
-    * document, zero exchanges in both outputs. */
+    * counts, the per-doc policy verdict under the [[BlockReviewAt]] /
+    * [[BlockAt]] thresholds, and the text with every [[BlockTerms]] hit
+    * replaced by [[BlockRepl]]. One automaton pass per document, zero
+    * exchanges in all three outputs. */
   private def screenBlocklistJob(spark: SparkSession, sfDir: String,
                                  outDir: String): Unit = {
-    val terms = sys.env.getOrElse("GRAFT_BLOCK_TERMS",
-      "merge,scan,batch stream").split(",").map(_.trim)
-      .filter(_.nonEmpty).toSeq
-    val reviewAt = sys.env.getOrElse("GRAFT_BLOCK_REVIEW_AT", "12").toLong
-    val blockAt = sys.env.getOrElse("GRAFT_BLOCK_AT", "20").toLong
     val d = Tables.load(spark, sfDir, "documents")
-    graft.operators.Blocklist.scanCounts(d, "text", "doc_id", terms)
+    graft.operators.Blocklist.scanCounts(d, "text", "doc_id", BlockTerms)
       .write.mode("overwrite").parquet(s"$outDir/blocklist_hits")
     graft.operators.Blocklist
-      .policyReport(d, "text", "doc_id", terms, reviewAt, blockAt)
+      .policyReport(d, "text", "doc_id", BlockTerms, BlockReviewAt, BlockAt)
       .write.mode("overwrite").parquet(s"$outDir/blocklist_verdicts")
-    graft.operators.Blocklist
-      .scrub(d, "text", terms,
-        sys.env.getOrElse("GRAFT_BLOCK_REPL", "<BLOCKED>"))
+    graft.operators.Blocklist.scrub(d, "text", BlockTerms, BlockRepl)
       .write.mode("overwrite").parquet(s"$outDir/blocklist_clean")
   }
 
@@ -938,17 +912,17 @@ object Jobs {
       .write.mode("overwrite").parquet(s"$outDir/wer_report")
   }
 
-  /** WordPiece trainer pipeline: learn GRAFT_WP_ROUNDS likelihood
-    * merges (default 3) over the corpus, persist the merge table and
+  /** WordPiece trainer pipeline: learn [[WordpieceRounds]] likelihood
+    * merges over the corpus, persist the merge table and
     * the greedy segmentation of the corpus's distinct pretokens under
     * the trained vocabulary — the BERT-family third trainer beside
     * train_tokenizer's BPE+unigram lanes. */
   private def trainWordpieceJob(spark: SparkSession, sfDir: String,
                                 outDir: String): Unit = {
     import org.apache.spark.sql.functions._
-    val rounds = sys.env.getOrElse("GRAFT_WP_ROUNDS", "3").toInt
     val d = Tables.load(spark, sfDir, "documents")
-    val merges = graft.operators.WordPiece.trainMerges(d, "text", rounds)
+    val merges =
+      graft.operators.WordPiece.trainMerges(d, "text", WordpieceRounds)
     merges.write.mode("overwrite").parquet(s"$outDir/wordpiece_merges")
     val learned = merges.orderBy(col("ord")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -958,15 +932,14 @@ object Jobs {
       .write.mode("overwrite").parquet(s"$outDir/wordpiece_segments")
   }
 
-  /** Model-based quality screen: train GRAFT_QM_ROUNDS batch-perceptron
-    * rounds (default 4, exact integers) over token-statistic features
+  /** Model-based quality screen: train [[QualityModelRounds]]
+    * batch-perceptron rounds (exact integers) over token-statistic features
     * with the diversity-rule label, persist the per-round weight table
     * and the corpus scored under the final weights — the trainable
     * filter beside govern_corpus's rule-based gates. */
   private def trainQualityModelJob(spark: SparkSession, sfDir: String,
                                    outDir: String): Unit = {
     import org.apache.spark.sql.functions._
-    val rounds = sys.env.getOrElse("GRAFT_QM_ROUNDS", "4").toInt
     val feats = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
         split(lower(trim(col("text"))), "\\s+").as("t"))
@@ -978,7 +951,8 @@ object Jobs {
         (size(col("t")) - size(array_distinct(col("t"))))
           .cast("long").as("f4"))
     val fc = Seq("f1", "f2", "f3", "f4")
-    val trained = graft.operators.Perceptron.train(feats, "y", fc, rounds)
+    val trained =
+      graft.operators.Perceptron.train(feats, "y", fc, QualityModelRounds)
     trained.write.mode("overwrite").parquet(s"$outDir/quality_weights")
     val last = trained.orderBy(col("round").desc).limit(1).collect()(0)
     graft.operators.Perceptron
@@ -1076,14 +1050,7 @@ object Jobs {
 object JobRunner {
   def main(args: Array[String]): Unit = {
     val Array(jobName, sfDir, outDir) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val targets =
       if (jobName == "all") Jobs.all.toSeq.sortBy(_._1)
       else Seq(jobName -> Jobs.all.getOrElse(jobName, {

@@ -95,6 +95,29 @@ class CatalogSpec extends SparkSpec {
     assert(!fs.exists(lock), "lock must be released after the commit")
   }
 
+  test("p_insert_into writes one file per month per write it touches") {
+    val back = graft.queries.Parity.insertIntoQ(spark, sf0001)
+    val expected = graft.Tables.load(spark, sf0001, "orders")
+      .where($"o_custkey" < 100).count()
+    assert(back.count() == expected)
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
+        "graft_dwd_orders")).location)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(loc).filter(_.getPath.getName
+        .startsWith("etl_date=")).map { d =>
+      d.getPath.getName.stripPrefix("etl_date=") ->
+        fs.listStatus(d.getPath).count(_.getPath.getName.startsWith("part-"))
+    }.toMap
+    val latest = back.agg(max($"etl_date")).head().getString(0)
+    assert(files.keySet == back.select($"etl_date").distinct()
+      .collect().map(_.getString(0)).toSet)
+    // b1 and b2 each touch a month at most once; the reload rewrites
+    // the latest month in one file
+    assert(files.values.forall(n => n >= 1 && n <= 2), files)
+    assert(files(latest) == 1, files)
+  }
+
   test("saveAsTableOverwrite refuses qualified names and non-table dirs") {
     intercept[IllegalArgumentException] {
       CatalogSinks.saveAsTableOverwrite(
