@@ -257,15 +257,15 @@ object AhoAutomaton {
     None
   }
 
-  /** Builds goto trie + BFS failure links; output lists are the
-    * union of the node's own terms and its failure chain's outputs
-    * (folded once at build, so scan never walks the chain).
-    */
   /** Build-event counter — test instrumentation only (BlocklistSpec
     * pins one build per partition on the table path; local mode shares
     * the JVM, and the forked test JVM runs suites sequentially). */
   private[graft] val builds = new java.util.concurrent.atomic.AtomicLong
 
+  /** Builds goto trie + BFS failure links; output lists are the
+    * union of the node's own terms and its failure chain's outputs
+    * (folded once at build, so scan never walks the chain).
+    */
   def build(terms: Seq[String]): AhoAutomaton = {
     builds.incrementAndGet()
     require(terms.nonEmpty, "empty dictionary")

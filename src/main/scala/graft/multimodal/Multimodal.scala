@@ -127,8 +127,8 @@ object Multimodal {
     * generator for decode tests — the planted width/height are what an
     * oracle checks the decoder's output against (dimensions survive
     * every format, including palettized GIF and lossy JPEG).
-    */
-  /** Deterministic synthetic raster (formula pixels so SQL oracles can
+    *
+    * Deterministic synthetic raster (formula pixels so SQL oracles can
     * replay them); `xorPixel` flips bits of pixel (0,0) — the planted
     * near-duplicate perturbation the perceptual-hash screen detects. */
   def syntheticImage(w: Int, h: Int, seed: Long,

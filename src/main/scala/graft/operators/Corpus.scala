@@ -152,37 +152,6 @@ object Corpus {
             col("n_tokens").cast("double"), 4)).as("oov_rate"))
   }
 
-  /** Line-level boilerplate removal (the CCNet-style pass a web-crawl
-    * pipeline runs before document dedup): a LINE that occurs more than
-    * `maxOccurrences` times across the whole corpus — nav menus, cookie
-    * banners, copyright footers — is deleted from every document; each
-    * document's surviving lines are re-joined in their original order.
-    *
-    * Scale shape (100 TB corpus):
-    *  - the per-line occurrence count is ONE hash aggregation with
-    *    map-side partial combine (a nav line repeated 10^7 times ships
-    *    one partial count per task, not 10^7 rows);
-    *  - the boilerplate relation (`count > maxOccurrences`) is small
-    *    when the threshold is set for true boilerplate — only lines
-    *    frequent enough to repeat corpus-wide — so by default the
-    *    removal is a BROADCAST left-anti join against it: the exploded
-    *    corpus is never shuffled by line, and the hot-key skew a plain
-    *    `count <= max` equi-join would hit (every copy of the same
-    *    banner landing on one reducer) never exists. The set's size is
-    *    DATA-DEPENDENT, though: an aggressive threshold over a
-    *    duplicate-heavy corpus can make it millions of full text lines
-    *    — set `broadcastBoilerplate = false` there to fall back to a
-    *    shuffled anti-join (AQE handles the remaining skew) instead of
-    *    building an oversized broadcast on the driver;
-    *  - the rebuild sorts each document's kept lines row-locally
-    *    (collect_list → array_sort on (pos, line)) — the only exchange
-    *    is the groupBy on the document id.
-    *
-    * Returns (idCol, clean_text, n_kept, n_dropped) for EVERY input
-    * document; a fully-boilerplate document keeps an empty clean_text.
-    * Callers wanting normalized matching (case/digit-insensitive)
-    * should pre-normalize a shadow column and split on that.
-    */
   /** Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken,
     * SIGMOD 2003): of every `window` consecutive k-shingle hashes,
     * keep the minimum — the guarantee-bearing sparse fingerprint set
@@ -967,6 +936,37 @@ object Corpus {
     rebuildCleanDocs(batch, kept, textCol, idCol, sep)
   }
 
+  /** Line-level boilerplate removal (the CCNet-style pass a web-crawl
+    * pipeline runs before document dedup): a LINE that occurs more than
+    * `maxOccurrences` times across the whole corpus — nav menus, cookie
+    * banners, copyright footers — is deleted from every document; each
+    * document's surviving lines are re-joined in their original order.
+    *
+    * Scale shape (100 TB corpus):
+    *  - the per-line occurrence count is ONE hash aggregation with
+    *    map-side partial combine (a nav line repeated 10^7 times ships
+    *    one partial count per task, not 10^7 rows);
+    *  - the boilerplate relation (`count > maxOccurrences`) is small
+    *    when the threshold is set for true boilerplate — only lines
+    *    frequent enough to repeat corpus-wide — so by default the
+    *    removal is a BROADCAST left-anti join against it: the exploded
+    *    corpus is never shuffled by line, and the hot-key skew a plain
+    *    `count <= max` equi-join would hit (every copy of the same
+    *    banner landing on one reducer) never exists. The set's size is
+    *    DATA-DEPENDENT, though: an aggressive threshold over a
+    *    duplicate-heavy corpus can make it millions of full text lines
+    *    — set `broadcastBoilerplate = false` there to fall back to a
+    *    shuffled anti-join (AQE handles the remaining skew) instead of
+    *    building an oversized broadcast on the driver;
+    *  - the rebuild sorts each document's kept lines row-locally
+    *    (collect_list → array_sort on (pos, line)) — the only exchange
+    *    is the groupBy on the document id.
+    *
+    * Returns (idCol, clean_text, n_kept, n_dropped) for EVERY input
+    * document; a fully-boilerplate document keeps an empty clean_text.
+    * Callers wanting normalized matching (case/digit-insensitive)
+    * should pre-normalize a shadow column and split on that.
+    */
   def removeBoilerplateLines(docs: DataFrame, textCol: String,
                              idCol: String, maxOccurrences: Long,
                              sep: String = "\n",

@@ -50,10 +50,7 @@ object Similarity {
     * window this replaces).
     */
   private[graft] def argmaxPick(df: DataFrame, keys: Seq[String],
-                                ordCol: String, tieCol: String,
-                                keep: Seq[String] = Nil): DataFrame = {
-    require(keep.isEmpty, "argmaxPick carries no payload — re-attach " +
-      "wide columns with a post-argmax key join (see doc)")
+                                ordCol: String, tieCol: String): DataFrame = {
     // the aggregate's caller contract (non-null ord/tie) made
     // STRUCTURAL: a group whose every ord is null would otherwise
     // evaluate to the initial buffer (Long.MaxValue) and emit a garbage
@@ -114,27 +111,85 @@ object Similarity {
     -array_max(array(cands: _*)).getField("nc")
   }
 
+  /** `(p_id, p_v: array<double>, p_norm)` for prefix `p`: the vector
+    * projection every search side starts from. */
+  private def vecs(df: DataFrame, idCol: String, vecCol: String,
+                   p: String): DataFrame =
+    df.select(col(idCol).as(s"${p}_id"), asDouble(col(vecCol)).as(s"${p}_v"))
+      .withColumn(s"${p}_norm", norm(col(s"${p}_v")))
+
+  /** Nearest-centroid assignment `(c_id, id, carry…)` of every row:
+    * the c_id maximizing dot(v, c_v)/(norm·c_norm), ties to the
+    * smallest c_id. Bounded codebooks assign row-locally (zero
+    * exchange, argmax fused into the scan); large ones take the
+    * broadcast + thin argmax shape, re-attaching the `carry` columns by
+    * id only when there are any (an id-only caller gains no join). */
+  private def assignNearest(rows: DataFrame, id: String, v: String,
+                            vNorm: String, cents: DataFrame,
+                            carry: Seq[String]): DataFrame = {
+    val out = (Seq("c_id", id) ++ carry).map(col)
+    centsLocal(cents) match {
+      case Some(cl) =>
+        rows.withColumn("c_id", nearestCidExpr(col(v), col(vNorm), cl))
+          .select(out: _*)
+      case None =>
+        val picked = argmaxPick(
+          rows.crossJoin(broadcast(cents))
+            .withColumn("c_sim",
+              dot(col(v), col("c_v")) / (col(vNorm) * col("c_norm")))
+            .select(col(id), col("c_id"), col("c_sim")),
+          Seq(id), "c_sim", "c_id")
+        (if (carry.isEmpty) picked
+         else picked.join(rows.select((id +: carry).map(col): _*), id))
+          .select(out: _*)
+    }
+  }
+
+  /** Probe selection: each query's `nprobe` nearest centroids by
+    * (cosine desc, c_id) as `(q_id, q_v, q_norm, c_id)` — queries
+    * `(q_id, q_v, q_norm)` × the broadcast centroid table, no corpus
+    * input. */
+  private def probes(q: DataFrame, cents: DataFrame,
+                     nprobe: Int): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("c_sim").desc, col("c_id"))
+    q.crossJoin(broadcast(cents))
+      .withColumn("c_sim",
+        dot(col("q_v"), col("c_v")) / (col("q_norm") * col("c_norm")))
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") <= nprobe)
+      .select(col("q_id"), col("q_v"), col("q_norm"), col("c_id"))
+  }
+
+  /** Exact rerank of candidate `pairs` carrying `(q_id, q_v, q_norm,
+    * n_id, nv, nn)`: sim = round(cos, 4), ranked per query on
+    * (sim desc, n_id) — a total, oracle-stable order — and cut at `k`.
+    * Output: `(q_id, n_id, sim, rank: long)`. */
+  private def rankTopK(pairs: DataFrame, nv: String, nn: String,
+                       k: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("sim").desc, col("n_id"))
+    pairs
+      .withColumn("sim", round(
+        dot(col("q_v"), col(nv)) / (col("q_norm") * col(nn)), 4))
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select(col("q_id"), col("n_id"), col("sim"),
+        col("rank").cast("long").as("rank"))
+  }
+
   /** Exact cosine top-k: for each query row (small side, broadcast), the
     * k nearest corpus rows by cosine, ranked on (round(sim,4) desc, id)
     * so ordering is total and oracle-stable.
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"),
-      asDouble(col(vecCol)).as("q_v"))
-      .withColumn("q_norm", norm(col("q_v")))
-    val c = corpus.select(col(idCol).as("n_id"),
-      asDouble(col(vecCol)).as("n_v"))
-      .withColumn("n_norm", norm(col("n_v")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    broadcast(q).join(c, col("q_id") =!= col("n_id"))
-      .withColumn("sim", round(
-        dot(col("q_v"), col("n_v")) / (col("q_norm") * col("n_norm")), 4))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"),
-        col("rank").cast("long").as("rank"))
+    val q = vecs(queries, idCol, vecCol, "q")
+    val c = vecs(corpus, idCol, vecCol, "n")
+    rankTopK(broadcast(q).join(c, col("q_id") =!= col("n_id")),
+      "n_v", "n_norm", k)
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009)
@@ -239,48 +294,11 @@ object Similarity {
   private def ivfSearch(queries: DataFrame, corpus: DataFrame,
                         cents: DataFrame, idCol: String, vecCol: String,
                         k: Int, nprobe: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("n_id"),
-      asDouble(col(vecCol)).as("n_v"))
-      .withColumn("n_norm", norm(col("n_v")))
-    // bounded codebooks assign row-locally (zero exchange, argmax
-    // fused into the scan); large ones take the broadcast + thin
-    // argmax + vector re-attach shape
-    val assigned = centsLocal(cents) match {
-      case Some(cl) =>
-        c.withColumn("c_id",
-            nearestCidExpr(col("n_v"), col("n_norm"), cl))
-          .select(col("c_id"), col("n_id"), col("n_v"), col("n_norm"))
-      case None => argmaxPick(
-          c.crossJoin(broadcast(cents))
-            .withColumn("c_sim",
-              dot(col("n_v"), col("c_v")) /
-                (col("n_norm") * col("c_norm")))
-            .select(col("n_id"), col("c_id"), col("c_sim")),
-          Seq("n_id"), "c_sim", "c_id", Nil)
-          .join(c, "n_id")
-          .select(col("c_id"), col("n_id"), col("n_v"), col("n_norm"))
-    }
-    val q = queries.select(col(idCol).as("q_id"),
-      asDouble(col(vecCol)).as("q_v"))
-      .withColumn("q_norm", norm(col("q_v")))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("c_sim",
-        dot(col("q_v"), col("c_v")) / (col("q_norm") * col("c_norm")))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nprobe)
-      .select(col("q_id"), col("q_v"), col("q_norm"), col("c_id"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    probes.join(assigned, Seq("c_id"))
-      .where(col("q_id") =!= col("n_id"))
-      .withColumn("sim", round(
-        dot(col("q_v"), col("n_v")) / (col("q_norm") * col("n_norm")), 4))
-      .withColumn("rank", row_number().over(wRank))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"),
-        col("rank").cast("long").as("rank"))
+    val assigned = assignNearest(vecs(corpus, idCol, vecCol, "n"), "n_id",
+      "n_v", "n_norm", cents, Seq("n_v", "n_norm"))
+    val probed = probes(vecs(queries, idCol, vecCol, "q"), cents, nprobe)
+    rankTopK(probed.join(assigned, Seq("c_id"))
+      .where(col("q_id") =!= col("n_id")), "n_v", "n_norm", k)
   }
 
   /** Fixed-point quantization scale for k-means: 2^20 per unit. */
@@ -398,7 +416,7 @@ object Similarity {
                   dotDec(col("qv"), col("csum")).cast("double") /
                     (sqrt(col("qn2")) * sqrt(col("cn2"))))
                 .select(col("n_id"), col("c_id"), col("c_sim")),
-              Seq("n_id"), "c_sim", "c_id", Nil)
+              Seq("n_id"), "c_sim", "c_id")
               .join(mat.df.select(col("n_id"), col("qv")), "n_id")
               .select(col("c_id"), col("qv"))
         val updated = assigned
@@ -458,18 +476,9 @@ object Similarity {
                      trainSample: Int = 0): DataFrame = {
     val cents = trainedCentroidTable(corpus, idCol, vecCol, nlist, iters,
       trainSample)
-    val c = corpus.select(col(idCol).as("n_id"),
-        asDouble(col(vecCol)).as("n_v"))
-      .withColumn("n_norm", norm(col("n_v")))
-    (centsLocal(cents) match {
-      case Some(cl) => c.withColumn("c_id",
-        nearestCidExpr(col("n_v"), col("n_norm"), cl))
-      case None => argmaxPick(
-        c.crossJoin(broadcast(cents))
-          .withColumn("c_sim",
-            dot(col("n_v"), col("c_v")) / (col("n_norm") * col("c_norm"))),
-        Seq("n_id"), "c_sim", "c_id", Nil)
-    }).select(col("n_id").as(idCol), col("c_id"))
+    assignNearest(vecs(corpus, idCol, vecCol, "n"), "n_id", "n_v", "n_norm",
+        cents, Nil)
+      .select(col("n_id").as(idCol), col("c_id"))
   }
 
   /** Product-quantization codebooks (Jégou, Douze, Schmid 2011): the
@@ -558,7 +567,7 @@ object Similarity {
       exploded.join(broadcast(cb), "s")
         .withColumn("c_sim",
           dot(col("sub_v"), col("c_v")) / (col("sub_norm") * col("c_norm"))),
-      Seq("n_id", "s"), "c_sim", "c_id", Nil)
+      Seq("n_id", "s"), "c_sim", "c_id")
       .select(col("n_id"), col("s"), col("c_id").as("code"))
   }
 
@@ -584,19 +593,9 @@ object Similarity {
     val cbs = pqCodebooks(corpus, idCol, vecCol, m, ksub, iters,
       trainSample)
     val recon = pqReconTable(corpus, idCol, vecCol, cbs, m)
-    val q = queries.select(col(idCol).as("q_id"),
-        asDouble(col(vecCol)).as("q_v"))
-      .withColumn("q_norm", norm(col("q_v")))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    recon.crossJoin(broadcast(q))
-      .where(col("q_id") =!= col("n_id"))
-      .withColumn("sim", round(
-        dot(col("q_v"), col("r_v")) / (col("q_norm") * col("r_norm")), 4))
-      .withColumn("rank", row_number().over(wRank))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"),
-        col("rank").cast("long").as("rank"))
+    val q = vecs(queries, idCol, vecCol, "q")
+    rankTopK(recon.crossJoin(broadcast(q))
+      .where(col("q_id") =!= col("n_id")), "r_v", "r_norm", k)
   }
 
   /** PQ reconstruction table `(n_id, r_v, r_norm)`: every corpus row's
@@ -651,43 +650,15 @@ object Similarity {
                 iters: Int = 2, trainSample: Int = 0): DataFrame = {
     val cents = trainedCentroidTable(corpus, idCol, vecCol, nlist, iters,
       trainSample)
-    val c = corpus.select(col(idCol).as("n_id"),
-        asDouble(col(vecCol)).as("n_v"))
-      .withColumn("n_norm", norm(col("n_v")))
-    val assigned = (centsLocal(cents) match {
-      case Some(cl) => c.withColumn("c_id",
-        nearestCidExpr(col("n_v"), col("n_norm"), cl))
-      case None => argmaxPick(
-        c.crossJoin(broadcast(cents))
-          .withColumn("c_sim",
-            dot(col("n_v"), col("c_v")) / (col("n_norm") * col("c_norm"))),
-        Seq("n_id"), "c_sim", "c_id", Nil)
-    }).select(col("c_id"), col("n_id"))
+    val assigned = assignNearest(vecs(corpus, idCol, vecCol, "n"), "n_id",
+      "n_v", "n_norm", cents, Nil)
     val cbs = pqCodebooks(corpus, idCol, vecCol, m, ksub, iters,
       trainSample)
     val recon = pqReconTable(corpus, idCol, vecCol, cbs, m)
-    val q = queries.select(col(idCol).as("q_id"),
-        asDouble(col(vecCol)).as("q_v"))
-      .withColumn("q_norm", norm(col("q_v")))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("c_sim",
-        dot(col("q_v"), col("c_v")) / (col("q_norm") * col("c_norm")))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nprobe)
-      .select(col("q_id"), col("q_v"), col("q_norm"), col("c_id"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    probes.join(assigned, Seq("c_id"))
+    val probed = probes(vecs(queries, idCol, vecCol, "q"), cents, nprobe)
+    rankTopK(probed.join(assigned, Seq("c_id"))
       .where(col("q_id") =!= col("n_id"))
-      .join(recon, Seq("n_id"))
-      .withColumn("sim", round(
-        dot(col("q_v"), col("r_v")) / (col("q_norm") * col("r_norm")), 4))
-      .withColumn("rank", row_number().over(wRank))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"),
-        col("rank").cast("long").as("rank"))
+      .join(recon, Seq("n_id")), "r_v", "r_norm", k)
   }
 
   /** Near-dup PAIRS via LSH bucketing — the 100 TB upgrade of
@@ -759,23 +730,9 @@ object Similarity {
       .where(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"))
       .dropDuplicates("q_id", "n_id")
-    val q = queries.select(col(idCol).as("q_id"),
-        asDouble(col(vecCol)).as("q_v"))
-      .withColumn("q_norm", norm(col("q_v")))
-    val c = corpus.select(col(idCol).as("n_id"),
-        asDouble(col(vecCol)).as("n_v"))
-      .withColumn("n_norm", norm(col("n_v")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    cand
-      .join(q, "q_id")
-      .join(c, "n_id")
-      .withColumn("sim", round(
-        dot(col("q_v"), col("n_v")) / (col("q_norm") * col("n_norm")), 4))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"),
-        col("rank").cast("long").as("rank"))
+    rankTopK(cand
+      .join(vecs(queries, idCol, vecCol, "q"), "q_id")
+      .join(vecs(corpus, idCol, vecCol, "n"), "n_id"), "n_v", "n_norm", k)
   }
 
   /** Margin-based bitext mining (the Artetxe & Schwenk ratio margin —
@@ -824,29 +781,6 @@ object Similarity {
       .select(col("src_id"), col("tgt_id"), col("sim"), col("margin"))
   }
 
-  /** Scalar-quantized (SQ8) cosine top-k — the compressed-corpus search
-    * path: each dimension is affinely mapped to an 8-bit code against
-    * per-dimension corpus min/max, and search scores the full-precision
-    * query against the DECODED corpus (asymmetric distance, the FAISS
-    * SQ8 shape). At scale this is a memory/IO play, not a candidate
-    * pruning play: codes are 1 byte per dimension where the raw column
-    * is 4-8, so a 100 TB embedding corpus scans and caches at 4-8x
-    * less — stack it under the IVF/LSH candidate generators for both
-    * wins. The encode is one tiny stats aggregate (2 doubles per
-    * dimension, broadcast back) plus a row-local map; everything is
-    * deterministic (min/max are exact, the affine map evaluates in one
-    * IEEE order on every engine), so the quantized results — unlike a
-    * sampled or RNG-trained quantizer — are bit-reproducible.
-    *
-    * Returns (q_id, n_id, sim, rank) like the other top-k variants,
-    * sim = cosine of (exact query, decoded neighbor) rounded to 4.
-    */
-  /** SQ8 encode+decode of a corpus: per-dimension min/max stats (one
-    * tiny aggregate, broadcast back) then the row-local affine code and
-    * its reconstruction. Returns (`idCol`, dv: array&lt;double&gt;) —
-    * the decoded corpus that [[sqTopK]] scores directly and
-    * [[ivfSqTopK]] feeds to the trained IVF as ITS corpus. Split out so
-    * both compose the identical, oracle-replayable quantization. */
   /** Per-dimension SQ8 stats of a `(id, v: array<double>)` relation —
     * ONE row `(mnv, mxv)` (2 doubles per dimension), broadcast wherever
     * the affine code is applied and persisted verbatim by
@@ -879,6 +813,12 @@ object Similarity {
       |                  (cd, r) -> cd * r / 255.0D),
       |         mnv, (s, mn) -> mn + s)""".stripMargin)
 
+  /** SQ8 encode+decode of a corpus: per-dimension min/max stats (one
+    * tiny aggregate, broadcast back) then the row-local affine code and
+    * its reconstruction. Returns (`idCol`, dv: array&lt;double&gt;) —
+    * the decoded corpus that [[sqTopK]] scores directly and
+    * [[ivfSqTopK]] feeds to the trained IVF as ITS corpus. Split out so
+    * both compose the identical, oracle-replayable quantization. */
   def sqDecode(corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val c = corpus.select(col(idCol), asDouble(col(vecCol)).as("v"))
     c.crossJoin(broadcast(sqStats(c)))
@@ -887,23 +827,31 @@ object Similarity {
       .select(col(idCol), col("dv"))
   }
 
+  /** Scalar-quantized (SQ8) cosine top-k — the compressed-corpus search
+    * path: each dimension is affinely mapped to an 8-bit code against
+    * per-dimension corpus min/max, and search scores the full-precision
+    * query against the DECODED corpus (asymmetric distance, the FAISS
+    * SQ8 shape). At scale this is a memory/IO play, not a candidate
+    * pruning play: codes are 1 byte per dimension where the raw column
+    * is 4-8, so a 100 TB embedding corpus scans and caches at 4-8x
+    * less — stack it under the IVF/LSH candidate generators for both
+    * wins. The encode is one tiny stats aggregate (2 doubles per
+    * dimension, broadcast back) plus a row-local map; everything is
+    * deterministic (min/max are exact, the affine map evaluates in one
+    * IEEE order on every engine), so the quantized results — unlike a
+    * sampled or RNG-trained quantizer — are bit-reproducible.
+    *
+    * Returns (q_id, n_id, sim, rank) like the other top-k variants,
+    * sim = cosine of (exact query, decoded neighbor) rounded to 4.
+    */
   def sqTopK(queries: DataFrame, corpus: DataFrame,
              idCol: String, vecCol: String, k: Int): DataFrame = {
     val enc = sqDecode(corpus, idCol, vecCol)
       .withColumnRenamed(idCol, "n_id")
       .withColumn("n_norm", norm(col("dv")))
-    val q = queries.select(col(idCol).as("q_id"),
-        asDouble(col(vecCol)).as("q_v"))
-      .withColumn("q_norm", norm(col("q_v")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    broadcast(q).join(enc, col("q_id") =!= col("n_id"))
-      .withColumn("sim", round(
-        dot(col("q_v"), col("dv")) / (col("q_norm") * col("n_norm")), 4))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"),
-        col("rank").cast("long").as("rank"))
+    val q = vecs(queries, idCol, vecCol, "q")
+    rankTopK(broadcast(q).join(enc, col("q_id") =!= col("n_id")),
+      "dv", "n_norm", k)
   }
 
   /** Two-stage search: COMPRESSED candidate generation, EXACT rerank —
@@ -925,21 +873,10 @@ object Similarity {
     require(cand >= k, s"candidate count $cand must be >= k=$k")
     val cands = sqTopK(queries, corpus, idCol, vecCol, cand)
       .select(col("q_id"), col("n_id"))
-    val q = queries.select(col(idCol).as("q_id"),
-        asDouble(col(vecCol)).as("q_v"))
-      .withColumn("q_norm", norm(col("q_v")))
-    val c = corpus.select(col(idCol).as("n_id"),
-        asDouble(col(vecCol)).as("n_v"))
-      .withColumn("n_norm", norm(col("n_v")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    cands.join(broadcast(q), Seq("q_id")).join(c, Seq("n_id"))
-      .withColumn("sim", round(
-        dot(col("q_v"), col("n_v")) / (col("q_norm") * col("n_norm")), 4))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"),
-        col("rank").cast("long").as("rank"))
+    val q = vecs(queries, idCol, vecCol, "q")
+    val c = vecs(corpus, idCol, vecCol, "n")
+    rankTopK(cands.join(broadcast(q), Seq("q_id")).join(c, Seq("n_id")),
+      "n_v", "n_norm", k)
   }
 
   /** Johnson-Lindenstrauss random projection with a PORTABLE sign
@@ -1137,19 +1074,8 @@ object Similarity {
     val c = corpus.select(col(idCol).as("id"),
         asDouble(col(vecCol)).as("n_v"))
       .withColumn("n_norm", norm(col("n_v")))
-    val assigned = (centsLocal(cents) match {
-      case Some(cl) =>
-        c.withColumn("c_id",
-          nearestCidExpr(col("n_v"), col("n_norm"), cl))
-      case None => argmaxPick(
-          c.crossJoin(broadcast(cents))
-            .withColumn("c_sim",
-              dot(col("n_v"), col("c_v")) /
-                (col("n_norm") * col("c_norm")))
-            .select(col("id"), col("c_id"), col("c_sim")),
-          Seq("id"), "c_sim", "c_id", Nil)
-          .join(c, "id")
-    }).select(col("c_id"), col("id"), col("n_v"), col("n_norm"))
+    val assigned = assignNearest(c, "id", "n_v", "n_norm", cents,
+        Seq("n_v", "n_norm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ids = assigned.select(col("c_id"), col("id"))
     val pairs = ids.as("a").join(ids.as("b"),
@@ -1239,20 +1165,8 @@ object Similarity {
         .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
       // assignment: identical rule to the search phase (cosine desc,
       // c_id tie-break) so the stored list_id IS ivfSearch's assignment
-      val withNorm = enc
-        .withColumn("n_norm", norm(col("dv")))
-      (centsLocal(cents) match {
-        case Some(cl) => withNorm.withColumn("c_id",
-          nearestCidExpr(col("dv"), col("n_norm"), cl))
-        case None => argmaxPick(
-            withNorm.crossJoin(broadcast(cents))
-              .withColumn("c_sim",
-                dot(col("dv"), col("c_v")) /
-                  (col("n_norm") * col("c_norm")))
-              .select(col("n_id"), col("c_id"), col("c_sim")),
-            Seq("n_id"), "c_sim", "c_id", Nil)
-            .join(enc.select(col("n_id"), col("codes")), "n_id")
-      })
+      assignNearest(enc.withColumn("n_norm", norm(col("dv"))), "n_id", "dv",
+          "n_norm", cents, Seq("codes"))
         .select(col("n_id"),
           transform(col("codes"), x => x.cast("smallint")).as("codes"),
           col("c_id").as("list_id"))
@@ -1286,29 +1200,16 @@ object Similarity {
   def appendToIvfSqIndex(batch: DataFrame, idCol: String, vecCol: String,
                          path: String): Unit = {
     val spark = batch.sparkSession
-    ivfSqIndexNlist(spark, path) // layout guard before any write
+    val cents = storedCents(spark, path) // layout guard before any write
     val sv = spark.read.parquet(s"$path/sq_stats")
-    val cents = spark.read.parquet(s"$path/centroids")
-      .withColumn("c_norm", norm(col("c_v")))
     val bEnc = batch
       .select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("v"))
       .crossJoin(broadcast(sv))
       .withColumn("codes", sqEncodeExpr)
       .withColumn("dv", sqDecodeExpr)
       .withColumn("n_norm", norm(col("dv")))
-    val assigned = (centsLocal(cents) match {
-      case Some(cl) => bEnc.withColumn("c_id",
-        nearestCidExpr(col("dv"), col("n_norm"), cl))
-      case None => argmaxPick(
-          bEnc
-            .crossJoin(broadcast(cents))
-            .withColumn("c_sim",
-              dot(col("dv"), col("c_v")) /
-                (col("n_norm") * col("c_norm")))
-            .select(col("n_id"), col("c_id"), col("c_sim")),
-          Seq("n_id"), "c_sim", "c_id", Nil)
-          .join(bEnc.select(col("n_id"), col("codes")), "n_id")
-    })
+    val assigned = assignNearest(bEnc, "n_id", "dv", "n_norm", cents,
+        Seq("codes"))
       .select(col("n_id"), col("codes"), col("c_id").as("list_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1350,6 +1251,33 @@ object Similarity {
     new String(buf, "UTF-8").trim.stripPrefix("v1 nlist=").toInt
   }
 
+  /** The stored index's centroid table `(c_id, c_v, c_norm)`, after
+    * the layout guard. */
+  private def storedCents(spark: org.apache.spark.sql.SparkSession,
+                          path: String): DataFrame = {
+    ivfSqIndexNlist(spark, path)
+    spark.read.parquet(s"$path/centroids")
+      .withColumn("c_norm", norm(col("c_v")))
+  }
+
+  /** Probe selection against a STORED index's centroid table: each
+    * query's `nprobe` nearest stored centroids as (q_id, c_id) rows —
+    * the ranking is identical (same cosine, same (sim desc, c_id)
+    * tie-break) to the one [[ivfSqTopKFromIndex]] uses internally.
+    * This is the COST half of the recall/cost tradeoff: joined to the
+    * stored lists' occupancy it prices a search — candidate rows the
+    * probe join would touch — without running it, which is what an
+    * nprobe-tuning sweep wants. Queries × broadcast centroids only;
+    * the corpus is never read.
+    */
+  def ivfIndexProbeLists(queries: DataFrame, idCol: String,
+                         vecCol: String, path: String,
+                         nprobe: Int): DataFrame = {
+    val cents = storedCents(queries.sparkSession, path)
+    probes(vecs(queries, idCol, vecCol, "q"), cents, nprobe)
+      .select(col("q_id"), col("c_id"))
+  }
+
   /** Search a STORED SQ8∘IVF index ([[writeIvfSqIndex]]): the union of
     * every query's probed `list_id`s is collected (≤ `nlist` ints after
     * the distinct — the documented O(KB) driver-scalar pattern, K5) and
@@ -1364,60 +1292,17 @@ object Similarity {
     * restricted scoring to probed lists, so pre-pruning the scan removes
     * IO, never rows.
     */
-  /** Probe selection against a STORED index's centroid table: each
-    * query's `nprobe` nearest stored centroids as (q_id, c_id) rows —
-    * the ranking is identical (same cosine, same (sim desc, c_id)
-    * tie-break) to the one [[ivfSqTopKFromIndex]] uses internally.
-    * This is the COST half of the recall/cost tradeoff: joined to the
-    * stored lists' occupancy it prices a search — candidate rows the
-    * probe join would touch — without running it, which is what an
-    * nprobe-tuning sweep wants. Queries × broadcast centroids only;
-    * the corpus is never read.
-    */
-  def ivfIndexProbeLists(queries: DataFrame, idCol: String,
-                         vecCol: String, path: String,
-                         nprobe: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val spark = queries.sparkSession
-    ivfSqIndexNlist(spark, path) // layout guard
-    val cents = spark.read.parquet(s"$path/centroids")
-      .withColumn("c_norm", norm(col("c_v")))
-    val q = queries.select(col(idCol).as("q_id"),
-        asDouble(col(vecCol)).as("q_v"))
-      .withColumn("q_norm", norm(col("q_v")))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_id"))
-    q.crossJoin(broadcast(cents))
-      .withColumn("c_sim",
-        dot(col("q_v"), col("c_v")) / (col("q_norm") * col("c_norm")))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nprobe)
-      .select(col("q_id"), col("c_id"))
-  }
-
   def ivfSqTopKFromIndex(queries: DataFrame, idCol: String, vecCol: String,
                          path: String, k: Int,
                          nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    ivfSqIndexNlist(spark, path) // layout guard
+    val cents = storedCents(spark, path)
     val sv = spark.read.parquet(s"$path/sq_stats")
-    val cents = spark.read.parquet(s"$path/centroids")
-      .withColumn("c_norm", norm(col("c_v")))
-    val q = queries.select(col(idCol).as("q_id"),
-        asDouble(col(vecCol)).as("q_v"))
-      .withColumn("q_norm", norm(col("q_v")))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("c_id"))
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("c_sim",
-        dot(col("q_v"), col("c_v")) / (col("q_norm") * col("c_norm")))
-      .withColumn("rn", row_number().over(wProbe))
-      .where(col("rn") <= nprobe)
-      .select(col("q_id"), col("q_v"), col("q_norm"), col("c_id"))
+    val probed = probes(vecs(queries, idCol, vecCol, "q"), cents, nprobe)
     // distinct probed lists: bounded by nlist regardless of query count,
     // so the collect is O(KB); the probe stage itself is queries × a
     // broadcast centroid table — no corpus input
-    val probedIds = probes.select(col("c_id")).distinct()
+    val probedIds = probed.select(col("c_id")).distinct()
       .collect().map(_.get(0))
     val assigned = spark.read.parquet(s"$path/codes")
       .where(col("list_id").isin(probedIds.toIndexedSeq: _*))
@@ -1427,16 +1312,8 @@ object Similarity {
       .withColumn("n_norm", norm(col("n_v")))
       .select(col("list_id").as("c_id"), col("n_id"), col("n_v"),
         col("n_norm"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    probes.join(assigned, Seq("c_id"))
-      .where(col("q_id") =!= col("n_id"))
-      .withColumn("sim", round(
-        dot(col("q_v"), col("n_v")) / (col("q_norm") * col("n_norm")), 4))
-      .withColumn("rank", row_number().over(wRank))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"),
-        col("rank").cast("long").as("rank"))
+    rankTopK(probed.join(assigned, Seq("c_id"))
+      .where(col("q_id") =!= col("n_id")), "n_v", "n_norm", k)
   }
 
   // ------------------------------------------------------------- PCA

@@ -346,6 +346,18 @@ object StreamingOps {
     * width, and the per-task scheduling floor (32 near-empty tasks per
     * stage, several stages per batch) dominates its wall. At cluster
     * scale callers pass None and inherit the session's parallelism.
+    *
+    * A stateful query creates one state store per shuffle partition
+    * per operator, and every micro-batch pays per-store maintenance
+    * (delta + snapshot files under the checkpoint) whether or not
+    * the partition saw data — for a small-throughput stream, 32
+    * near-empty stores per batch is almost pure overhead. The
+    * partition count is locked into the checkpoint from
+    * spark.sql.shuffle.partitions at the FIRST batch, so it must be
+    * set for the whole run; the window is serialized against this
+    * API's other callers and the session value restored after
+    * (same set/execute/restore discipline as
+    * CatalogSinks.insertOverwritePartitions).
     */
   private def withShufflePartitions[A](spark: SparkSession,
                                        n: Option[Int])(body: => A): A =
@@ -364,12 +376,12 @@ object StreamingOps {
                                 idCol: String,
                                 k: Int, threshold: Double,
                                 checkpointDir: String,
-                                winnowTablePath: Option[String] = None,
-                                minContainmentBp: Long = 8000L,
-                                winnowMaxDf: Long = 50L,
-                                blocklist: Seq[String] = Nil,
-                                blocklistBlockAt: Long = 1L,
-                                blocklistFold: Boolean = true): Unit = {
+                                winnowTablePath: Option[String],
+                                minContainmentBp: Long,
+                                winnowMaxDf: Long,
+                                blocklist: Seq[String],
+                                blocklistBlockAt: Long,
+                                blocklistFold: Boolean): Unit = {
     val ckpt = Option(checkpointDir).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_curate_ckpt").toString)
     // same shingle-size refusal as appendToSignatureTable, checked ONCE
@@ -674,40 +686,14 @@ object StreamingOps {
   def runToMemory(df: DataFrame, name: String,
                   outputMode: OutputMode = OutputMode.Append(),
                   statePartitions: Option[Int] = None): Unit =
-    statePartitions match {
-      case None => runToMemory0(df, name, outputMode)
-      case Some(n) =>
-        // A stateful query creates one state store per shuffle partition
-        // per operator, and every micro-batch pays per-store maintenance
-        // (delta + snapshot files under the checkpoint) whether or not
-        // the partition saw data — for a small-throughput stream, 32
-        // near-empty stores per batch is almost pure overhead. The
-        // partition count is locked into the checkpoint from
-        // spark.sql.shuffle.partitions at the FIRST batch, so it must be
-        // set for the whole run; the window is serialized against this
-        // API's other callers and the session value restored after
-        // (same set/execute/restore discipline as
-        // CatalogSinks.insertOverwritePartitions). At cluster scale
-        // callers pass None and inherit the session's parallelism.
-        confLock.synchronized {
-          val spark = df.sparkSession
-          val key = "spark.sql.shuffle.partitions"
-          val prev = spark.conf.get(key)
-          spark.conf.set(key, n.toString)
-          try runToMemory0(df, name, outputMode)
-          finally spark.conf.set(key, prev)
-        }
+    withShufflePartitions(df.sparkSession, statePartitions) {
+      val q = df.writeStream.outputMode(outputMode)
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory(s"graft_ckpt_$name").toString)
+        .format("memory").queryName(name).start()
+      try q.processAllAvailable()
+      finally q.stop()
     }
 
   private val confLock = new Object
-
-  private def runToMemory0(df: DataFrame, name: String,
-                           outputMode: OutputMode): Unit = {
-    val q = df.writeStream.outputMode(outputMode)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory(s"graft_ckpt_$name").toString)
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable()
-    finally q.stop()
-  }
 }

@@ -17,9 +17,11 @@ import graft.operators.Similarity
   *     window formulation it replaced, ties and NaN included;
   *  3. end to end — a >128-centroid index build takes the fallback and
   *     a conf-forced fallback build of a SMALL index equals the
-  *     literal-path build artifact for artifact (lists and search);
-  *     conf-forced k-means training and PQ encoding equal their literal
-  *     paths, each run's plan showing the broadcast + argmax shape.
+  *     literal-path build artifact for artifact (lists, search and an
+  *     append), as do the other assignment sites (trained IVF search,
+  *     IVF assignments, IVF∘PQ search, semantic dedup); conf-forced
+  *     k-means training and PQ encoding equal their literal paths,
+  *     each run's plan showing the broadcast + argmax shape.
   */
 class AnnFallbackSpec extends SparkSpec {
   import spark.implicits._
@@ -115,6 +117,49 @@ class AnnFallbackSpec extends SparkSpec {
     }
     assert(sLit.nonEmpty && sLit == sFb,
       "fallback search diverged from the literal path")
+    // an append under the frozen quantizer assigns like the build
+    val batch = (300L until 340L).map(i => (i, vec(i))).toDF("id", "emb")
+    Similarity.appendToIvfSqIndex(batch, "id", "emb", pLit)
+    withPlans(withSQLConf("graft.ann.maxLiteralCents" -> "0") {
+      Similarity.appendToIvfSqIndex(batch, "id", "emb", pFb)
+    }) { plans =>
+      assert(plans.exists(isArgmaxFallback),
+        "forced append never ran the broadcast + argmax assignment")
+    }
+    assert(listsOf(pLit).size == 340 && listsOf(pLit) == listsOf(pFb),
+      "fallback append diverged from the literal path")
+    // every other nearest-centroid assignment site, on the same data
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val searches = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "ivfTopKTrained" -> (() => Similarity.ivfTopKTrained(queries, corpus,
+        "id", "emb", k = 5, nlist = 12, nprobe = 3)),
+      "ivfAssignments" -> (() => Similarity.ivfAssignments(corpus, "id",
+        "emb", nlist = 12)),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(queries, corpus, "id",
+        "emb", k = 5, nlist = 12, nprobe = 3, m = 2, ksub = 8)))
+    searches.foreach { case (name, run) =>
+      val viaLit = run()
+      val forced = withSQLConf("graft.ann.maxLiteralCents" -> "0")(run())
+      val fbPlan = forced.queryExecution.executedPlan.toString
+      assert(isArgmaxFallback(fbPlan),
+        s"forced $name did not take the broadcast + argmax path:\n$fbPlan")
+      val litRows = rows(viaLit)
+      assert(litRows.nonEmpty && litRows == rows(forced),
+        s"fallback $name diverged from the literal path")
+    }
+    // semanticDedup returns its spilled result: its plans come from a
+    // query listener
+    def semDedup() = rows(Similarity.semanticDedup(corpus, "id", "emb",
+      threshold = 0.99, nlist = 12))
+    val dLit = semDedup()
+    val dFb = withPlans(
+      withSQLConf("graft.ann.maxLiteralCents" -> "0")(semDedup())) { plans =>
+      assert(plans.exists(isArgmaxFallback),
+        "forced semanticDedup never ran the broadcast + argmax assignment")
+    }
+    assert(dLit.size == 300 && dLit == dFb,
+      "fallback semanticDedup diverged from the literal path")
   }
 
   test("conf-forced fallback k-means training equals the literal path, " +

@@ -22,6 +22,24 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("top-k cores refuse k < 1 and nprobe < 1 instead of returning " +
+    "no rows") {
+    val emb = Tables.load(spark, sf0001, "embeddings").filter($"vec_id" < 40)
+    val ek = intercept[IllegalArgumentException] {
+      Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", 0)
+    }
+    assert(ek.getMessage.contains("k must be >= 1, got 0"))
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_topk_req").toString + "/idx"
+    Similarity.writeIvfSqIndex(emb, "vec_id", "embedding", path,
+      nlist = 4, iters = 1)
+    val ep = intercept[IllegalArgumentException] {
+      Similarity.ivfSqTopKFromIndex(emb, "vec_id", "embedding", path,
+        k = 3, nprobe = 0)
+    }
+    assert(ep.getMessage.contains("nprobe must be >= 1, got 0"))
+  }
+
   test("lshTopK achieves reasonable recall@5 against the exact baseline") {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val q = emb.filter($"vec_id" < 50)
