@@ -54,20 +54,11 @@ object Materialize {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Per-JVM local spill root (deleted on JVM exit): the default root
-    * when the default filesystem is the local one.
+  /** Per-JVM local spill root, a [[graft.Scratch]] child (deleted on
+    * JVM exit): the default root when the default filesystem is the
+    * local one.
     */
-  private lazy val localSpillRoot: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-spill")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(dir.toFile)
-    }))
-    dir.toString
-  }
+  private lazy val localSpillRoot: String = graft.Scratch.dir("spill").toString
 
   /** Default spill root per (JVM, default filesystem): a temp dir on
     * the session's `fs.defaultFS` so executor tasks of a real cluster

@@ -1,10 +1,11 @@
 package graft.queries
 
 /** Query-local fixture directories: built once per (tag, key), cached
-  * for the session, recursively deleted by a shutdown hook. `build`
-  * receives the fresh root and returns the path the cache hands out
-  * (usually a subdirectory it wrote) — the single implementation of the
-  * temp-dir/cleanup shape every fixture-building query shares.
+  * for the session, under a [[graft.Scratch]] child (deleted on JVM
+  * exit). `build` receives the fresh root and returns the path the
+  * cache hands out (usually a subdirectory it wrote) — the single
+  * implementation of the temp-dir/cleanup shape every fixture-building
+  * query shares.
   */
 private[queries] object Fixtures {
 
@@ -29,19 +30,31 @@ private[queries] object Fixtures {
       val again = dirs.get(k)
       if (again != null) again
       else {
-        val root = java.nio.file.Files
-          .createTempDirectory(s"graft-$tag").toFile
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
-          }
-          rm(root)
-        }))
-        val v = build(root)
+        val v = build(graft.Scratch.dir(tag))
         dirs.put(k, v)
         v
       }
     }
+  }
+
+  /** Stage a micro-batch feed under `root`: batch i becomes the single
+    * file `src/b<i>.parquet`, its mtime pinned i minutes after a fixed
+    * epoch — FileStreamSource orders files by modification time, so
+    * with `maxFilesPerTrigger` 1 batch i is exactly micro-batch i.
+    * Returns the `src` directory to stream from.
+    */
+  def feed(root: java.io.File,
+           batches: Seq[org.apache.spark.sql.DataFrame]): String = {
+    val srcDir = new java.io.File(root, "src")
+    srcDir.mkdirs()
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val tmp = new java.io.File(root, s"tmp$i")
+      b.coalesce(1).write.parquet(tmp.toString)
+      val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(srcDir, s"b$i.parquet")
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      dst.setLastModified(1000000000000L + i * 60000L)
+    }
+    srcDir.toString
   }
 }

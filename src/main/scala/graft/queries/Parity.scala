@@ -439,17 +439,8 @@ object Parity {
   private def twoBatchEventsDir(spark: SparkSession, dir: String): String =
     Fixtures.cached("streamsrc", dir) { root =>
       val ev = Tables.load(spark, dir, "events")
-      val srcDir = new java.io.File(root, "src")
-      srcDir.mkdirs()
-      Seq(0, 1).foreach { half =>
-        val tmp = new java.io.File(root, s"tmp$half").toString
-        ev.where(col("event_id") % 2 === half).coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          new java.io.File(srcDir, s"b$half.parquet").toPath)
-      }
-      srcDir.toString
+      Fixtures.feed(root,
+        Seq(0, 1).map(half => ev.where(col("event_id") % 2 === half)))
     }
 
   def streamScdQ(spark: SparkSession, dir: String): DataFrame = {
@@ -458,8 +449,7 @@ object Parity {
       .option("maxFilesPerTrigger", 1) // one file per micro-batch
       .parquet(twoBatchEventsDir(spark, dir))
       .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-    val target = java.nio.file.Files
-      .createTempDirectory("graft-streamscd").toString + "/snap"
+    val target = graft.Scratch.dir("streamscd").toString + "/snap"
     graft.streaming.StreamingOps.continuousScdMerge(
       src, target, Seq("user_id"), "ts", Seq("event_id"))
     spark.read.parquet(target).select(
@@ -500,23 +490,10 @@ object Parity {
         lit("__sentinel__").as("event_type"),
         lit(0.0d).as("value"),
         lit(null).cast("string").as("props"))
-      val srcDir = new java.io.File(root, "src")
-      srcDir.mkdirs()
-      val batches = Seq(
-        ev.where(col("ts") <= midNs), ev.where(col("ts") > midNs), sentinel)
-      batches.zipWithIndex.foreach { case (b, i) =>
-        val tmp = new java.io.File(root, s"tmp$i").toString
-        b.coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(srcDir, s"b$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        // FileStreamSource orders files by modification time; pin an
-        // ascending order so batch 2 (the sentinel) really arrives last
-        dst.setLastModified(1000000000000L + i * 60000L)
-        ()
-      }
-      srcDir.toString
+      // the feed's pinned mtimes make batch 2 (the sentinel) really
+      // arrive last
+      Fixtures.feed(root, Seq(
+        ev.where(col("ts") <= midNs), ev.where(col("ts") > midNs), sentinel))
     }
 
   def streamWindowQ(spark: SparkSession, dir: String): DataFrame = {
@@ -531,15 +508,12 @@ object Parity {
       unix_micros(col("window.start")).as("win_start_us"),
       col("event_type"), col("n"),
       round(col("sum_value"), 2).as("sum_value"))
-    val qname = "graft_stream_win_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     // 8 state partitions: this fixture streams ~1e5 rows, where 32
     // near-empty state stores per micro-batch are pure maintenance cost
-    graft.streaming.StreamingOps.runToMemory(out, qname,
-      statePartitions = Some(8))
-    // the sentinel's own window never closes, so it is absent anyway;
-    // the filter just pins that invariant against config drift
-    spark.table(qname).where(col("event_type") =!= "__sentinel__")
+    graft.streaming.StreamingOps.runToMemory(out, statePartitions = Some(8))
+      // the sentinel's own window never closes, so it is absent anyway;
+      // the filter just pins that invariant against config drift
+      .where(col("event_type") =!= "__sentinel__")
   }
   val streamWindowSql: String =
     """SELECT (epoch_ns(ts) // 1000 // 300000000) * 300000000 AS win_start_us,
@@ -598,17 +572,14 @@ object Parity {
       .parquet(windowBatchesDir(spark, dir))
       .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
     val joined = graft.streaming.StreamingOps.streamStreamAttribution(src)
-    val qname = "graft_stream_join_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     // 4 state partitions, not 8: the stream-stream join keeps FOUR
     // state stores per partition (two per side), so it pays double the
     // per-store maintenance of the single-operator gates — at this
     // fixture's throughput the narrower width is pure overhead removed
     // (isolated 7.1 -> 3.6 s; the single-store gates measured WORSE at
     // 4 — they move real data per store and want the parallelism)
-    graft.streaming.StreamingOps.runToMemory(joined, qname,
+    graft.streaming.StreamingOps.runToMemory(joined,
       statePartitions = Some(4))
-    spark.table(qname)
   }
   val streamJoinSql: String =
     """SELECT p.user_id, p.event_id AS purchase_id, c.event_id AS click_id
@@ -639,11 +610,8 @@ object Parity {
       unix_micros(col("session_start")).as("session_start_us"),
       unix_micros(col("session_end")).as("session_end_us"),
       col("n_events"), round(col("sum_value"), 2).as("sum_value"))
-    val qname = "graft_stream_sess_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamingOps.runToMemory(out, qname,
-      statePartitions = Some(8))
-    spark.table(qname).where(col("user_id") >= 0)
+    graft.streaming.StreamingOps.runToMemory(out, statePartitions = Some(8))
+      .where(col("user_id") >= 0)
   }
   val streamSessionsSql: String =
     """WITH e AS (
@@ -683,12 +651,10 @@ object Parity {
       .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
     val deduped = graft.streaming.StreamingOps.dedupKeysStream(
       mkSrc.union(mkSrc), Seq("event_id"), "30 minutes")
-    val qname = "graft_stream_dedup_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     graft.streaming.StreamingOps.runToMemory(
-      deduped.select(col("event_id"), col("user_id")), qname,
-      statePartitions = Some(8))
-    spark.table(qname).where(col("user_id") >= 0)
+        deduped.select(col("event_id"), col("user_id")),
+        statePartitions = Some(8))
+      .where(col("user_id") >= 0)
       .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
   }
   val streamDedupSql: String =
@@ -719,11 +685,8 @@ object Parity {
     // counts, boundaries, and timeout-driven closes, all exact.
     val out = sess.toDF().select(col("user_id"), col("n_events"),
       col("session_start_us"), col("session_end_us"))
-    val qname = "graft_stream_state_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamingOps.runToMemory(out, qname,
-      statePartitions = Some(8))
-    spark.table(qname).where(col("user_id") >= 0)
+    graft.streaming.StreamingOps.runToMemory(out, statePartitions = Some(8))
+      .where(col("user_id") >= 0)
   }
   val streamStateSql: String =
     """WITH e AS (

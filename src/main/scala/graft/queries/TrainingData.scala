@@ -5831,38 +5831,7 @@ object TrainingData {
   // - dup1). Within-batch pairs are ignored on both sides (documented
   // screen semantics).
   def streamCurateQ(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Dedup
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-curate").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(root)
-    }))
-    val sigPath = new java.io.File(root, "sigs").toString
-    val outPath = new java.io.File(root, "admitted").toString
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
-    // the corpus signature table is a deterministic function of the
-    // corpus, so it is built once per session (the sigTableFor
-    // contract: tokenize at ingest, never again) — but THIS query's
-    // stream APPENDS to its table, so each run works on a cheap
-    // file-level copy of the cached base rather than recomputing it
-    val baseSigs = Fixtures.cached("sigs-curate-base", dir) { base =>
-      val p = new java.io.File(base, "sigs").toString
-      Dedup.writeSignatureTable(d, "text", "doc_id", p, k = 5)
-      p
-    }
-    locally {
-      val from = java.nio.file.Paths.get(baseSigs)
-      val to = java.nio.file.Paths.get(sigPath)
-      java.nio.file.Files.createDirectories(to)
-      java.nio.file.Files.list(from).forEach { f =>
-        java.nio.file.Files.copy(f, to.resolve(f.getFileName.toString))
-        ()
-      }
-    }
     val chain = concat(md5(col("text")), md5(concat(col("text"), lit("a"))),
       md5(concat(col("text"), lit("b"))))
     val b0 = d.where(col("doc_id") % 5 === 0).select(
@@ -5881,31 +5850,63 @@ object TrainingData {
         concat(md5(concat(col("text"), lit("c"))),
           md5(concat(col("text"), lit("d"))),
           md5(concat(col("text"), lit("e")))).as("text")))
-    // the staged feed is deterministic in the corpus and READ-ONLY to
-    // the stream (each run replays it from a fresh checkpoint), so it
-    // too is built once per session
-    val feedDir = Fixtures.cached("curate-src", dir) { base =>
-      val sd = new java.io.File(base, "src")
-      sd.mkdirs()
-      Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
-        val tmp = new java.io.File(base, s"tmp$i").toString
-        b.coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(sd, s"b$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(1000000000000L + i * 60000L)
-        ()
-      }
-      sd.toString
+    curateLane(spark, dir, "curate-src", winnow = false, Seq(b0, b1)) {
+      (src, path) =>
+        graft.streaming.StreamingOps.continuousCurate(
+          src, path("sigs"), path("admitted"), "text", "doc_id", k = 5,
+          threshold = 0.5, shufflePartitions = Some(8))
     }
-    val src = spark.readStream.schema(b0.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
-    graft.streaming.StreamingOps.continuousCurate(
-      src, sigPath, outPath, "text", "doc_id", k = 5, threshold = 0.5,
-      shufflePartitions = Some(8))
-    spark.read.parquet(outPath).select(col("doc_id"))
+  }
+
+  /** One run of a continuous-curate lane. The maintained tables are
+    * deterministic functions of the corpus, so they are built once per
+    * (session, sf-dir) — the sigTableFor contract: tokenize at ingest,
+    * never again — the signature table always, the winnow table when
+    * `winnow`. The stream APPENDS to them, so each run works on a cheap
+    * file-level copy in a fresh run root. The staged feed (`batches`,
+    * one file per micro-batch) is deterministic in the corpus and
+    * READ-ONLY to the stream (each run replays it from a fresh
+    * checkpoint), so it too is built once per session, under
+    * `feedTag`. `curate` gets the stream and the run root's `path`
+    * (`sigs`, `fps`, `admitted`); the admitted ids are returned.
+    */
+  private def curateLane(spark: SparkSession, dir: String, feedTag: String,
+                         winnow: Boolean, batches: Seq[DataFrame])(
+      curate: (DataFrame, String => String) => Unit): DataFrame = {
+    import graft.operators.{Corpus, Dedup}
+    val d = docs(spark, dir).select(col("doc_id"), col("text"))
+    val baseSigs = Fixtures.cached("sigs-curate-base", dir) { base =>
+      val p = new java.io.File(base, "sigs").toString
+      Dedup.writeSignatureTable(d, "text", "doc_id", p, k = 5)
+      p
+    }
+    val baseFps =
+      if (!winnow) Nil
+      else Seq("fps" -> Fixtures.cached("winnow-table-base", dir) { base =>
+        val p = new java.io.File(base, "fps").toString
+        Corpus.writeWinnowTable(d, "text", "doc_id", p, k = 5, window = 4)
+        p
+      })
+    val root = graft.Scratch.dir("curate")
+    def path(name: String) = new java.io.File(root, name).toString
+    (("sigs" -> baseSigs) +: baseFps).foreach { case (name, base) =>
+      val from = java.nio.file.Paths.get(base)
+      val to = java.nio.file.Paths.get(path(name))
+      // recursive: the winnow table carries its df-state sidecar in an
+      // underscore subdirectory, and a shallow copy would strand it
+      val files = java.nio.file.Files.walk(from)
+      try files.forEach { f =>
+        val dst = to.resolve(from.relativize(f).toString)
+        if (java.nio.file.Files.isDirectory(f))
+          java.nio.file.Files.createDirectories(dst)
+        else java.nio.file.Files.copy(f, dst)
+        ()
+      } finally files.close()
+    }
+    val feedDir = Fixtures.cached(feedTag, dir)(Fixtures.feed(_, batches))
+    curate(spark.readStream.schema(batches.head.schema)
+      .option("maxFilesPerTrigger", 1).parquet(feedDir), path)
+    spark.read.parquet(path("admitted")).select(col("doc_id"))
   }
   val streamCurateSql: String = {
     val chain = "md5(text) || md5(text || 'a') || md5(text || 'b')"
@@ -5960,35 +5961,7 @@ object TrainingData {
   // (the planted 'QzxBlockA'/'qzxblocka' pair counts 2 under one
   // lowercase dictionary entry).
   def streamCuratePolicyQ(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Dedup
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-curatep").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(root)
-    }))
-    val sigPath = new java.io.File(root, "sigs").toString
-    val outPath = new java.io.File(root, "admitted").toString
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
-    val baseSigs = Fixtures.cached("sigs-curate-base", dir) { base =>
-      val p = new java.io.File(base, "sigs").toString
-      Dedup.writeSignatureTable(d, "text", "doc_id", p, k = 5)
-      p
-    }
-    locally {
-      val from = java.nio.file.Paths.get(baseSigs)
-      val to = java.nio.file.Paths.get(sigPath)
-      java.nio.file.Files.walk(from).forEach { f =>
-        val dst = to.resolve(from.relativize(f).toString)
-        if (java.nio.file.Files.isDirectory(f))
-          java.nio.file.Files.createDirectories(dst)
-        else java.nio.file.Files.copy(f, dst)
-        ()
-      }
-    }
     val chain = concat(md5(col("text")), md5(concat(col("text"), lit("a"))),
       md5(concat(col("text"), lit("b"))))
     val chain2 = concat(md5(concat(col("text"), lit("p"))),
@@ -6013,29 +5986,13 @@ object TrainingData {
       .union(d.where(col("doc_id") % 5 === 1).select(
         (col("doc_id") + 9000000L).as("doc_id"),
         substring(chain, 11, 86).as("text")))
-    val feedDir = Fixtures.cached("curatep-src", dir) { base =>
-      val sd = new java.io.File(base, "src")
-      sd.mkdirs()
-      Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
-        val tmp = new java.io.File(base, s"tmp$i").toString
-        b.coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(sd, s"b$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(1000000000000L + i * 60000L)
-        ()
-      }
-      sd.toString
+    curateLane(spark, dir, "curatep-src", winnow = false, Seq(b0, b1)) {
+      (src, path) =>
+        graft.streaming.StreamingOps.continuousCurate(
+          src, path("sigs"), path("admitted"), "text", "doc_id", k = 5,
+          threshold = 0.5, shufflePartitions = Some(8),
+          blocklist = Seq("qzxblocka"), blocklistBlockAt = 2L)
     }
-    val src = spark.readStream.schema(b0.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
-    graft.streaming.StreamingOps.continuousCurate(
-      src, sigPath, outPath, "text", "doc_id", k = 5, threshold = 0.5,
-      shufflePartitions = Some(8),
-      blocklist = Seq("qzxblocka"), blocklistBlockAt = 2L)
-    spark.read.parquet(outPath).select(col("doc_id"))
   }
   val streamCuratePolicySql: String = {
     val chain = "md5(text) || md5(text || 'a') || md5(text || 'b')"
@@ -6109,47 +6066,7 @@ object TrainingData {
   // re-aggregates the corpus; the oracle, being SQL over raw tables,
   // replays the same value the slow way.
   def streamCurateQuotesQ(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Corpus, Dedup}
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-curateq").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(root)
-    }))
-    val sigPath = new java.io.File(root, "sigs").toString
-    val fpPath = new java.io.File(root, "fps").toString
-    val outPath = new java.io.File(root, "admitted").toString
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
-    // both maintained tables are deterministic functions of the corpus
-    // — built once per (session, sf-dir), file-copied per run because
-    // the stream APPENDS to them (the streamCurateQ contract)
-    val baseSigs = Fixtures.cached("sigs-curate-base", dir) { base =>
-      val p = new java.io.File(base, "sigs").toString
-      Dedup.writeSignatureTable(d, "text", "doc_id", p, k = 5)
-      p
-    }
-    val baseFps = Fixtures.cached("winnow-table-base", dir) { base =>
-      val p = new java.io.File(base, "fps").toString
-      Corpus.writeWinnowTable(d, "text", "doc_id", p, k = 5, window = 4)
-      p
-    }
-    Seq((baseSigs, sigPath), (baseFps, fpPath)).foreach { case (b, t) =>
-      val from = java.nio.file.Paths.get(b)
-      val to = java.nio.file.Paths.get(t)
-      // recursive: the winnow table carries its df-state sidecar in an
-      // underscore subdirectory, and a shallow copy would strand it
-      java.nio.file.Files.walk(from).forEach { f =>
-        val dst = to.resolve(from.relativize(f).toString)
-        if (java.nio.file.Files.isDirectory(f))
-          java.nio.file.Files.createDirectories(dst)
-        else
-          java.nio.file.Files.copy(f, dst)
-        ()
-      }
-    }
     // 160-char chain: long enough that a 40-char excerpt sits below the
     // LSH threshold (J ≈ 36/156) while winnowing reads containment 10^4
     val chain5 = concat(md5(col("text")),
@@ -6173,37 +6090,23 @@ object TrainingData {
         concat(md5(concat(col("text"), lit("x"))),
           md5(concat(col("text"), lit("y"))),
           md5(concat(col("text"), lit("z")))).as("text")))
-    val feedDir = Fixtures.cached("curateq-src", dir) { base =>
-      val sd = new java.io.File(base, "src")
-      sd.mkdirs()
-      Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
-        val tmp = new java.io.File(base, s"tmp$i").toString
-        b.coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(sd, s"b$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(1000000000000L + i * 60000L)
-        ()
-      }
-      sd.toString
+    curateLane(spark, dir, "curateq-src", winnow = true, Seq(b0, b1)) {
+      (src, path) =>
+        graft.streaming.StreamingOps.continuousCurate(
+          src, path("sigs"), path("admitted"), "text", "doc_id", k = 5,
+          threshold = 0.5,
+          // 16, not the sibling lanes' 8: the batch FINGERPRINTING
+          // fan-out (the lane's CPU) still wants width. The r11
+          // rationale for 32 — corpus-side distincts over millions of
+          // fingerprint rows per batch — is gone since the bulk screen
+          // reads the pre-deduped doc-keyed projection and folds the df
+          // sidecar (r12); measured 16 ≈ 32 on the lane total, and
+          // narrower stages cut the many-tiny-stages floor everywhere
+          // else in the batch body
+          shufflePartitions = Some(16),
+          winnowTablePath = path("fps"), minContainmentBp = 8000L,
+          winnowMaxDf = 50L)
     }
-    val src = spark.readStream.schema(b0.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
-    graft.streaming.StreamingOps.continuousCurate(
-      src, sigPath, outPath, "text", "doc_id", k = 5, threshold = 0.5,
-      // 16, not the sibling lanes' 8: the batch FINGERPRINTING fan-out
-      // (the lane's CPU) still wants width. The r11 rationale for 32 —
-      // corpus-side distincts over millions of fingerprint rows per
-      // batch — is gone since the bulk screen reads the pre-deduped
-      // doc-keyed projection and folds the df sidecar (r12); measured
-      // 16 ≈ 32 on the lane total, and narrower stages cut the
-      // many-tiny-stages floor everywhere else in the batch body
-      shufflePartitions = Some(16),
-      winnowTablePath = fpPath, minContainmentBp = 8000L,
-      winnowMaxDf = 50L)
-    spark.read.parquet(outPath).select(col("doc_id"))
   }
   lazy val streamCurateQuotesSql: String = {
     val chain5 = "md5(text) || md5(text || 'a') || md5(text || 'b') || " +
@@ -6733,22 +6636,14 @@ object TrainingData {
     }
     val out = Fixtures.cached("stream-select", dir) { root =>
       val d = docs(spark, dir)
-      val srcDir = new java.io.File(root, "src"); srcDir.mkdirs()
-      Seq((0L, 250L), (250L, 100000L)).zipWithIndex.foreach {
-        case ((lo, hi), i) =>
-          val tmp = new java.io.File(root, s"tmp$i").toString
+      val feedDir = Fixtures.feed(root,
+        Seq((0L, 250L), (250L, 100000L)).map { case (lo, hi) =>
           d.filter(col("doc_id") >= lo && col("doc_id") < hi)
-            .coalesce(1).write.parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(srcDir, s"b$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          dst.setLastModified(1000000000000L + i * 60000L); ()
-      }
+        })
       val served = new java.io.File(root, "served").toString
       graft.streaming.StreamingOps.continuousSelectServe(
         spark.readStream.schema(d.schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir.toString),
+          .option("maxFilesPerTrigger", 1).parquet(feedDir),
         model, served, "text", "doc_id")
       served
     }
@@ -8691,21 +8586,14 @@ object TrainingData {
     val idx = ivfSqIndexFor(spark, dir)
     val out = Fixtures.cached("stream-ann", dir) { root =>
       val emb = Tables.load(spark, dir, "embeddings")
-      val srcDir = new java.io.File(root, "src"); srcDir.mkdirs()
-      Seq((0L, 10L), (10L, 20L)).zipWithIndex.foreach { case ((lo, hi), i) =>
-        val tmp = new java.io.File(root, s"tmp$i").toString
-        emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
-          .coalesce(1).write.parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(srcDir, s"b$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(1000000000000L + i * 60000L); ()
-      }
+      val feedDir = Fixtures.feed(root,
+        Seq((0L, 10L), (10L, 20L)).map { case (lo, hi) =>
+          emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
+        })
       val served = new java.io.File(root, "served").toString
       graft.streaming.StreamingOps.continuousAnnServe(
         spark.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir.toString),
+          .option("maxFilesPerTrigger", 1).parquet(feedDir),
         idx, served, "vec_id", "embedding", 5, nprobe = 4)
       served
     }

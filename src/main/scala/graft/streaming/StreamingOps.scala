@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
 
 /** Structured Streaming variants of the batch pipeline patterns.
   *
@@ -178,20 +179,20 @@ object StreamingOps {
     * cannot overwrite a path it is lazily reading; the checkpoint
     * materializes executor-side blocks and truncates the file lineage,
     * no driver collect). At scale the target would be a transactional
-    * table format; the merge logic is unchanged.
+    * table format; the merge logic is unchanged. `targetDir` may be a
+    * plain path or any Hadoop URI (`file:`, `hdfs:`, ...): the snapshot
+    * is looked up on its own filesystem.
     */
   def continuousScdMerge(src: DataFrame, targetDir: String,
                          keys: Seq[String], orderCol: String,
-                         tieBreakers: Seq[String]): Unit = {
-    import org.apache.spark.sql.DataFrame
-    val q = src.writeStream
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_scd_ckpt").toString)
+                         tieBreakers: Seq[String]): Unit =
+    drain(src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val tgt = new java.io.File(targetDir)
+        val tgt = new org.apache.hadoop.fs.Path(targetDir)
         val (merged, releaseSnapshot) =
-          if (tgt.exists()) {
+          if (tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+                .exists(tgt)) {
             // materialized with a release handle: the snapshot blocks are
             // freed after the write instead of leaking once per batch
             val snapshot = graft.ops.Materialize(
@@ -210,11 +211,7 @@ object StreamingOps {
         try merged.drop("data_source").write.mode("overwrite").parquet(targetDir)
         finally releaseSnapshot()
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+      }, null)
 
   /** Continuous incremental-aggregate maintenance: each micro-batch is
     * aggregated ALONE and merged with the latest maintained snapshot
@@ -232,10 +229,8 @@ object StreamingOps {
     */
   def continuousAggMaintenance(src: DataFrame, table: String,
                                keys: Seq[String],
-                               sums: Seq[String]): Unit = {
-    val q = src.writeStream
-      .option("checkpointLocation", java.nio.file.Files
-        .createTempDirectory("graft_agg_ckpt").toString)
+                               sums: Seq[String]): Unit =
+    drain(src.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         // foreachBatch is at-least-once and sum/count merges are not
@@ -261,11 +256,7 @@ object StreamingOps {
             note = Some(batchId.toString))
         }
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+      }, null)
 
   /** Continuous corpus curation: screen each arriving batch of documents
     * against a maintained MinHash signature table
@@ -319,7 +310,8 @@ object StreamingOps {
     * Within-batch duplicates are NOT collapsed (documented screen
     * semantics — run exact dedup upstream if a feed can self-duplicate
     * inside one trigger). `checkpointDir` MUST be durable storage in
-    * production (the temp default exists for single-run tests).
+    * production: the null default runs on a temporary checkpoint that is
+    * deleted on return, so a restart cannot resume from it.
     */
   def continuousCurate(src: DataFrame, sigTablePath: String,
                        admittedDir: String, textCol: String, idCol: String,
@@ -382,8 +374,6 @@ object StreamingOps {
                                 blocklist: Seq[String],
                                 blocklistBlockAt: Long,
                                 blocklistFold: Boolean): Unit = {
-    val ckpt = Option(checkpointDir).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_curate_ckpt").toString)
     // same shingle-size refusal as appendToSignatureTable, checked ONCE
     // at query start (the table's k cannot change mid-stream — appends
     // reuse it) so a mismatched table is refused before any write and
@@ -405,8 +395,7 @@ object StreamingOps {
     // never O(corpus)) with nothing to heal
     winnowTablePath.foreach(p =>
       graft.operators.Corpus.ensureWinnowScreenIndex(src.sparkSession, p))
-    val q = src.writeStream
-      .option("checkpointLocation", ckpt)
+    drain(src.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val admPath = new org.apache.hadoop.fs.Path(admittedDir)
@@ -596,10 +585,7 @@ object StreamingOps {
           }
         }
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      }, checkpointDir)
   }
 
   /** Online ANN serving: each arriving micro-batch of query vectors is
@@ -620,27 +606,21 @@ object StreamingOps {
     * batch-named files — a replayed batch rewrites its own files
     * instead of appending a duplicate copy (same commit protocol as
     * [[continuousCurate]]).
-    * `checkpointDir` MUST be durable storage in production; the temp
-    * default exists for single-run tests.
+    * `checkpointDir` MUST be durable storage in production: the null
+    * default runs on a temporary checkpoint that is deleted on return,
+    * so a restart cannot resume from it.
     */
   def continuousAnnServe(src: DataFrame, indexPath: String,
                          outDir: String, idCol: String, vecCol: String,
                          k: Int, nprobe: Int = 4,
-                         checkpointDir: String = null): Unit = {
-    val ckpt = Option(checkpointDir).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_ann_ckpt").toString)
-    val q = src.writeStream
-      .option("checkpointLocation", ckpt)
+                         checkpointDir: String = null): Unit =
+    drain(src.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.MaintainedIndex.idempotentAppend(
           graft.operators.Similarity
             .ivfSqTopKFromIndex(batch, idCol, vecCol, indexPath, k, nprobe),
           outDir, s"b${batchId}_")
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+      }, checkpointDir)
 
   /** Online DSIR scoring: each arriving micro-batch of documents is
     * scored against a STORED `(bucket, lr_micro)` model
@@ -656,44 +636,59 @@ object StreamingOps {
     * EXACTLY-ONCE at the sink via
     * [[graft.sources.MaintainedIndex.idempotentAppend]] under
     * batch-named files (the [[continuousAnnServe]] commit protocol).
-    * `checkpointDir` MUST be durable storage in production; the temp
-    * default exists for single-run tests. `n`/`buckets` must match
-    * the stored model's training parameters.
+    * `checkpointDir` MUST be durable storage in production: the null
+    * default runs on a temporary checkpoint that is deleted on return,
+    * so a restart cannot resume from it. `n`/`buckets` must match the
+    * stored model's training parameters.
     */
   def continuousSelectServe(src: DataFrame, modelPath: String,
                             outDir: String, textCol: String,
                             idCol: String, n: Int = 2,
                             buckets: Int = 256,
                             checkpointDir: String = null): Unit = {
-    val ckpt = Option(checkpointDir).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_select_ckpt").toString)
     val model = src.sparkSession.read.parquet(modelPath)
-    val q = src.writeStream
-      .option("checkpointLocation", ckpt)
+    drain(src.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.MaintainedIndex.idempotentAppend(
           graft.operators.Selection
             .scoreWithModel(batch, textCol, idCol, model, n, buckets),
           outDir, s"b${batchId}_")
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      }, checkpointDir)
   }
 
-  /** Run a streaming DataFrame to a named in-memory sink until all
-    * currently-available input is processed (local smoke harness). */
-  def runToMemory(df: DataFrame, name: String,
+  /** Run a streaming DataFrame to an in-memory sink until all
+    * currently-available input is processed, and return the sink's
+    * table (local smoke harness). */
+  def runToMemory(df: DataFrame,
                   outputMode: OutputMode = OutputMode.Append(),
-                  statePartitions: Option[Int] = None): Unit =
+                  statePartitions: Option[Int] = None): DataFrame = {
+    val name = "graft_mem_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
     withShufflePartitions(df.sparkSession, statePartitions) {
-      val q = df.writeStream.outputMode(outputMode)
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"graft_ckpt_$name").toString)
-        .format("memory").queryName(name).start()
+      drain(df.writeStream.outputMode(outputMode)
+        .format("memory").queryName(name), null)
+    }
+    df.sparkSession.table(name)
+  }
+
+  /** The one micro-batch drain every driver above shares: start
+    * `writer`, process all currently-available input, and stop the
+    * query, also when it fails. The checkpoint is `checkpointDir` when
+    * the caller passes one (never touched here: a restart resumes from
+    * it), else a fresh [[graft.Scratch]] dir deleted once the query has
+    * stopped, whether it succeeded or not.
+    */
+  private def drain(writer: DataStreamWriter[_],
+                    checkpointDir: String): Unit = {
+    val temp = if (checkpointDir == null) Some(graft.Scratch.dir("ckpt"))
+      else None
+    try {
+      val q = writer.option("checkpointLocation",
+        temp.fold(checkpointDir)(_.toString)).start()
       try q.processAllAvailable()
       finally q.stop()
-    }
+    } finally temp.foreach(graft.Scratch.delete)
+  }
 
   private val confLock = new Object
 }

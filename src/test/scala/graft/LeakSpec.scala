@@ -146,6 +146,9 @@ class LeakSpec extends SparkSpec {
         winnowTablePath = path("fps"), blocklist = Seq("qzxspam"))
     }
     assert(leaked.isEmpty, s"leaked RDD blocks: $leaked")
+    // the default (temporary) checkpoint is gone from disk too
+    val ckpts = Scratch.list().filter(_.startsWith("ckpt-"))
+    assert(ckpts.isEmpty, s"leaked checkpoint dirs: $ckpts")
     val admitted = spark.read.parquet(path("admitted"))
       .select(col("doc_id")).as[Long].collect().toSet
     assert(admitted == Set(102L, 200L),

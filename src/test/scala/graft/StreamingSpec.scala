@@ -34,12 +34,10 @@ class StreamingSpec extends SparkSpec {
 
   test("watermarked windowed aggregation produces event-time windows") {
     val src = eventStream(eventsDir, eventsSchema)
-    StreamingOps.runToMemory(
-      StreamingOps.windowedEventStats(src), "win_out",
-      OutputMode.Append())
+    val out = StreamingOps.runToMemory(
+      StreamingOps.windowedEventStats(src), OutputMode.Append())
     // append mode emits only watermark-closed windows; the finite input
     // closes all but the trailing watermark interval
-    val out = spark.table("win_out")
     assert(out.count() > 0)
     assert(out.columns.toSet ==
       Set("window", "event_type", "n", "sum_value"))
@@ -47,9 +45,8 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream attribution join equals the batch theta join") {
     val src = eventStream(eventsDir, eventsSchema)
-    StreamingOps.runToMemory(
-      StreamingOps.streamStreamAttribution(src), "attr_out")
-    val out = spark.table("attr_out")
+    val out = StreamingOps.runToMemory(
+        StreamingOps.streamStreamAttribution(src))
       .collect().map(_.toSeq).toSet
     val ev = Tables.load(spark, sf0001, "events")
     val W = 600L * 1000000000L
@@ -71,23 +68,59 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("continuous SCD merge converges to the batch merge result") {
-    val target = java.nio.file.Files
-      .createTempDirectory("graft_scd_target").toString + "/snap"
-    // stream the events dir through foreachBatch scd-merge
-    val src = eventStream(eventsDir, eventsSchema)
-    StreamingOps.continuousScdMerge(src, target,
-      Seq("user_id"), "ts", Seq("event_id"))
-    val streamed = spark.read.parquet(target)
-      .select("user_id", "event_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // two micro-batches split by event_id parity, so one user's rows
+    // span both and the second batch merges against the first's snapshot
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_scd_target").toString
+    val ev = Tables.load(spark, sf0001, "events")
+    Seq(0, 1).foreach(h => ev.where(col("event_id") % 2 === h)
+      .coalesce(1).write.parquet(s"$root/src/b$h"))
     // batch reference: newest event per user over the same input
-    val batch = graft.ops.EtlOps.dedupLatest(
-      Tables.load(spark, sf0001, "events"), Seq("user_id"),
-      Seq(org.apache.spark.sql.functions.col("ts").desc,
-        org.apache.spark.sql.functions.col("event_id").desc))
+    val batch = graft.ops.EtlOps.dedupLatest(ev, Seq("user_id"),
+        Seq(col("ts").desc, col("event_id").desc))
       .select("user_id", "event_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == batch)
+    // a plain path and a file: URI: the snapshot must be found on its
+    // own filesystem, or each batch overwrites it with that batch alone
+    Seq(s"$root/snap", new java.io.File(s"$root/snap_uri").toURI.toString)
+      .foreach { target =>
+        val src = spark.readStream.schema(eventsSchema)
+          .option("maxFilesPerTrigger", 1).parquet(s"$root/src/*")
+          .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+        StreamingOps.continuousScdMerge(src, target,
+          Seq("user_id"), "ts", Seq("event_id"))
+        val streamed = spark.read.parquet(target)
+          .select("user_id", "event_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(streamed == batch, s"target $target")
+      }
+  }
+
+  test("a drain deletes the checkpoint it made and keeps the one it " +
+    "was given") {
+    val before = Scratch.list()
+    assert(StreamingOps.runToMemory(StreamingOps.dedupKeysStream(
+      eventStream(eventsDir, eventsSchema), Seq("user_id"))).count() > 0)
+    StreamingOps.continuousScdMerge(eventStream(eventsDir, eventsSchema),
+      java.nio.file.Files.createTempDirectory("graft_scd_scratch")
+        .toString + "/snap", Seq("user_id"), "ts", Seq("event_id"))
+    assert(Scratch.list() == before)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_ann_ckpt_kept").toString
+    val emb = Tables.load(spark, sf0001, "embeddings")
+      .filter(col("vec_id") < 40)
+    graft.operators.Similarity.writeIvfSqIndex(emb, "vec_id", "embedding",
+      s"$root/idx", nlist = 4, iters = 1)
+    emb.filter(col("vec_id") < 10).coalesce(1).write.parquet(s"$root/feed")
+    StreamingOps.continuousAnnServe(
+      spark.readStream.schema(emb.schema).parquet(s"$root/feed"),
+      s"$root/idx", s"$root/out", "vec_id", "embedding", k = 3,
+      checkpointDir = s"$root/ckpt")
+    assert(spark.read.parquet(s"$root/out").count() > 0)
+    Seq("offsets", "commits").foreach { d =>
+      assert(Option(new java.io.File(s"$root/ckpt/$d").list())
+        .exists(_.nonEmpty), s"the given checkpoint lost $d/")
+    }
   }
 
   test("continuous SCD merge is idempotent against an existing snapshot") {
@@ -110,9 +143,8 @@ class StreamingSpec extends SparkSpec {
 
   test("dropDuplicatesWithinWatermark collapses each key to one row") {
     val src = eventStream(eventsDir, eventsSchema)
-    StreamingOps.runToMemory(
-      StreamingOps.dedupKeysStream(src, Seq("user_id")), "dedupk_out")
-    val out = spark.table("dedupk_out").select("user_id")
+    val out = StreamingOps.runToMemory(
+        StreamingOps.dedupKeysStream(src, Seq("user_id"))).select("user_id")
       .collect().map(_.getLong(0))
     val users = Tables.load(spark, sf0001, "events")
       .select("user_id").distinct().collect().map(_.getLong(0)).toSet
@@ -125,17 +157,13 @@ class StreamingSpec extends SparkSpec {
   test("session_window aggregation matches the stateful sessionizer on " +
     "closed sessions") {
     val src = eventStream(eventsDir, eventsSchema)
-    StreamingOps.runToMemory(
-      StreamingOps.sessionWindowStream(src), "sessw_out",
-      OutputMode.Append())
-    val built = spark.table("sessw_out")
+    val built = StreamingOps.runToMemory(
+        StreamingOps.sessionWindowStream(src), OutputMode.Append())
       .select(col("user_id"), unix_micros(col("session_start")).as("start_us"),
         col("n_events"))
       .collect().map(_.toSeq).toSet
-    StreamingOps.runToMemory(
-      StreamingOps.userSessionStream(src).toDF(), "sessc_out",
-      OutputMode.Append())
-    val custom = spark.table("sessc_out")
+    val custom = StreamingOps.runToMemory(
+        StreamingOps.userSessionStream(src).toDF(), OutputMode.Append())
       .select(col("user_id"), col("session_start_us"), col("n_events"))
       .collect().map(_.toSeq).toSet
     // both emit exactly the closed sessions; trailing-session timeout
@@ -208,10 +236,8 @@ class StreamingSpec extends SparkSpec {
   test("session stream emits gap-closed sessions that match the batch " +
     "sessionizer (open trailing sessions excluded)") {
     val src = eventStream(eventsDir, eventsSchema)
-    StreamingOps.runToMemory(
-      StreamingOps.userSessionStream(src).toDF(), "sess_out",
-      OutputMode.Append())
-    val out = spark.table("sess_out")
+    val out = StreamingOps.runToMemory(
+        StreamingOps.userSessionStream(src).toDF(), OutputMode.Append())
       .select("user_id", "n_events", "session_start_us", "session_end_us")
       .collect().map(_.toSeq).toSet
     // batch reference: gap-closed sessions MUST all be emitted; trailing
