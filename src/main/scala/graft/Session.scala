@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session recipe of the program's mains (JobRunner, Bench,
   * Verify, Smoke): `local[cores]` with as many shuffle partitions, UTC
-  * session time and no UI. */
+  * session time, no UI and a generated-class cache sized so a steady
+  * state of repeated queries compiles nothing (Spark's default of 100
+  * entries thrashes on one round of six queries). */
 object Session {
 
   /** Core count from a `SPARK_GRAFT_CPUS` setting: the positive integer
@@ -23,6 +25,7 @@ object Session {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

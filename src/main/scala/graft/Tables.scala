@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.MaintainedIndex.FileKey
 
 /** Loaders for the driver's parquet testdata (TESTDATA.md).
   *
@@ -8,7 +12,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (reference common/SimpleDataCleanUtils.scala:19-20,
   * handler/CustomerAddrLevelAggrDataClean.scala:23-25): each table is a
   * parquet directory; Catalyst still gets full pushdown/pruning because
-  * the read is declarative.
+  * the read is declarative. Like the metastore, [[parquet]] hands Spark
+  * a directory's schema without re-running inference while the
+  * directory is unchanged.
   */
 object Tables {
   val All: Seq[String] = Seq(
@@ -41,7 +47,7 @@ object Tables {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+
           graft.plans.RegexPrefixPruning
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val raw = parquet(spark, s"$sfDir/$name.parquet")
     if (name != "events") raw
     else raw.schema.fields.collect {
       case f if f.dataType == org.apache.spark.sql.types.TimestampNTZType =>
@@ -52,6 +58,63 @@ object Tables {
           .cast("timestamp")) * 1000L)
     }
   }
+
+  /** A listed directory's identity for the schema cache: every file
+    * Spark's file index would read, plus the session confs that change
+    * parquet schema inference. */
+  private[graft] final case class SchemaKey(files: Set[FileKey],
+                                            confs: Map[String, String])
+
+  /** Inferred schema per parquet directory, with the key it was
+    * inferred under; one entry per directory, replaced on a miss. */
+  private[graft] val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (SchemaKey, StructType)]
+
+  /** `spark.read.parquet(dir)`, minus the schema-inference job while
+    * the listing of `dir` (a parquet directory or single file) and the
+    * parquet confs are unchanged: a hit reads with the cached schema.
+    * Every call still builds a fresh relation (distinct attribute ids,
+    * so self-joins resolve). Partitioned, missing and empty directories
+    * take the plain read: Spark lists the first with parallel partition
+    * discovery, and raises its own errors for the other two. An append
+    * changes the listing, so an append-only table simply misses. */
+  def parquet(spark: SparkSession, dir: String): DataFrame =
+    schemaKey(spark, dir) match {
+      case None => spark.read.parquet(dir)
+      case Some(key) => Option(schemaCache.get(dir)) match {
+        case Some((`key`, schema)) => spark.read.schema(schema).parquet(dir)
+        case _ =>
+          val df = spark.read.parquet(dir)
+          schemaCache.put(dir, (key, df.schema))
+          df
+      }
+    }
+
+  /** None for a partitioned, missing or empty directory. */
+  private def schemaKey(spark: SparkSession, dir: String): Option[SchemaKey] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed = try fs.listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val visible = listed.filterNot(s => hidden(s.getPath.getName))
+    if (visible.isEmpty || visible.exists(_.isDirectory)) None
+    else Some(SchemaKey(
+      visible.map(s =>
+        FileKey(s.getPath.getName, s.getLen, s.getModificationTime)).toSet,
+      spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.") ||
+          k == "spark.sql.caseSensitive"
+      }))
+  }
+
+  /** The names Spark's file index skips: `_`/`.` prefixes and in-flight
+    * `._COPYING_` copies, but not the parquet summary files. A copy of
+    * `HadoopFSUtils.shouldFilterOutPathName`, which is private to Spark. */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
 
   /** Register every table as a temp view so `spark.sql` works against the
     * same names DuckDB sees (mirrors reference S1/S2 catalog access).

@@ -91,7 +91,7 @@ object Dedup {
     */
   def signatureTableStats(spark: org.apache.spark.sql.SparkSession,
                           sigTablePath: String): DataFrame = {
-    val occ = bandsOf(spark.read.parquet(sigTablePath))
+    val occ = bandsOf(graft.Tables.parquet(spark, sigTablePath))
       .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("n"))
     occ.groupBy(col("band").cast("long").as("band"))
       .agg(count(lit(1)).as("n_buckets"),
@@ -349,7 +349,7 @@ object Dedup {
       sigB: DataFrame, sigTablePath: String,
       threshold: Double): Materialized = {
     val spark = sigB.sparkSession
-    val sigC = spark.read.parquet(sigTablePath)
+    val sigC = graft.Tables.parquet(spark, sigTablePath)
     // candidate generation reads the 68 B/doc band-key projection of
     // the whole table — the documented tolerable full scan. It is
     // MATERIALIZED (held) because the candidate set feeds both the
@@ -404,7 +404,7 @@ object Dedup {
   def nearDupPairsFromSigs(spark: org.apache.spark.sql.SparkSession,
                            sigTablePath: String,
                            threshold: Double = 0.5): DataFrame = {
-    val sig = spark.read.parquet(sigTablePath)
+    val sig = graft.Tables.parquet(spark, sigTablePath)
     Materialize(jaccardVerified(selfCandidates(sig), sig, sig, threshold),
       MatStrategy.Default).df
   }
@@ -425,7 +425,7 @@ object Dedup {
   def nearDupBandProfile(spark: org.apache.spark.sql.SparkSession,
                          sigTablePath: String,
                          threshold: Double = 0.5): DataFrame = {
-    val sig = spark.read.parquet(sigTablePath)
+    val sig = graft.Tables.parquet(spark, sigTablePath)
     val collisions = bandSelfJoin(sig)
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_bands"))
@@ -516,7 +516,7 @@ object Dedup {
                                minContainmentBp: Long = 7000L): DataFrame = {
     require(minContainmentBp >= 0 && minContainmentBp <= 10000,
       s"containment is in basis points 0..10000, got $minContainmentBp")
-    val sig = spark.read.parquet(sigTablePath)
+    val sig = graft.Tables.parquet(spark, sigTablePath)
     withShingles(selfCandidates(sig), sig, sig)
       .select(col("doc_a"), col("doc_b"),
         size(col("sh_a")).cast("long").as("n_a"),
@@ -563,7 +563,7 @@ object Dedup {
     val spark = batch.sparkSession
     requireShingleK(spark, sigTablePath, k)
     val sigB = sigOf(batch, textCol, idCol, k)
-    val sigC = spark.read.parquet(sigTablePath)
+    val sigC = graft.Tables.parquet(spark, sigTablePath)
     withShingles(crossCandidates(sigB, sigC), sigB, sigC)
       .select(col("batch_id"), col("corpus_id"),
         size(col("sh_a")).cast("long").as("n_batch"),

@@ -658,17 +658,24 @@ object StreamingOps {
 
   /** Run a streaming DataFrame to an in-memory sink until all
     * currently-available input is processed, and return the sink's
-    * table (local smoke harness). */
+    * rows as a local relation (local smoke harness). The sink's temp
+    * view is dropped before returning, so no streamed row outlives the
+    * caller's frame. */
   def runToMemory(df: DataFrame,
                   outputMode: OutputMode = OutputMode.Append(),
                   statePartitions: Option[Int] = None): DataFrame = {
+    val spark = df.sparkSession
     val name = "graft_mem_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    withShufflePartitions(df.sparkSession, statePartitions) {
-      drain(df.writeStream.outputMode(outputMode)
-        .format("memory").queryName(name), null)
-    }
-    df.sparkSession.table(name)
+    try {
+      withShufflePartitions(spark, statePartitions) {
+        drain(df.writeStream.outputMode(outputMode)
+          .format("memory").queryName(name), null)
+      }
+      val sink = spark.table(name)
+      spark.createDataFrame(
+        java.util.Arrays.asList(sink.collect(): _*), sink.schema)
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** The one micro-batch drain every driver above shares: start

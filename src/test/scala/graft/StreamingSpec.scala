@@ -41,6 +41,9 @@ class StreamingSpec extends SparkSpec {
     assert(out.count() > 0)
     assert(out.columns.toSet ==
       Set("window", "event_type", "n", "sum_value"))
+    // the memory sink's view is gone: the rows live only in `out`
+    assert(!spark.catalog.listTables().collect()
+      .exists(_.name.startsWith("graft_mem_")))
   }
 
   test("stream-stream attribution join equals the batch theta join") {
