@@ -4,12 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.{Analytics, Parity, TrainingData}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registered query: its name, the Spark query over an sf dir, and
+  * the DuckDB oracle SQL over the same parquet tables. */
+final case class Query(name: String,
+                       run: (SparkSession, String) => DataFrame,
+                       oracle: String)
+
+/** The query contract — see SURVEY.md §7.
   *
-  * Every entry in `queries` has a matching DuckDB oracle in `oracleSql`
-  * unless the operator is not SQL-expressible (those get the driver's
-  * weaker rows-only check). Column names/aliases are identical on both
-  * sides — the driver sorts columns by name before hashing values.
+  * Every entry in `queries` has its DuckDB oracle in `oracleSql`.
+  * Column names/aliases are identical on both sides — the oracle check
+  * sorts columns by name before hashing values.
   */
 object SparkEntry {
 
@@ -20,12 +25,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.regionRevenueQ(spark, "/root/testdata/sf0.001")
 
+  private val registry: Seq[Query] = {
+    val all = Parity.queries ++ Analytics.queries ++ TrainingData.queries
+    val names = all.map(_.name)
+    val dups = names.diff(names.distinct)
+    require(dups.isEmpty, s"query declared twice: ${dups.mkString(", ")}")
+    all
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Parity.queries ++ Analytics.queries ++ TrainingData.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Parity.oracles ++ Analytics.oracles ++ TrainingData.oracles
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

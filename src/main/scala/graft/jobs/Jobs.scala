@@ -712,7 +712,7 @@ object Jobs {
     * export leaves the boundary. */
   private def governCorpusJob(spark: SparkSession, sfDir: String,
                               outDir: String): Unit = {
-    import graft.queries.TrainingData.queries
+    import graft.SparkEntry.queries
     Seq("x_pii_summary" -> "pii_summary",
       "x_l_diversity" -> "l_diversity",
       "x_eval_balance" -> "eval_balance",
@@ -731,7 +731,7 @@ object Jobs {
     * attribute). */
   private def auditPrivacyJob(spark: SparkSession, sfDir: String,
                               outDir: String): Unit = {
-    import graft.queries.TrainingData.queries
+    import graft.SparkEntry.queries
     Seq("x_k_anonymity" -> "release_k_anon",
       "x_l_diversity" -> "audit_l_diversity",
       "x_t_closeness" -> "audit_t_closeness",
@@ -765,7 +765,7 @@ object Jobs {
     * production (nprobe, latency) point. */
   private def tuneAnnJob(spark: SparkSession, sfDir: String,
                          outDir: String): Unit =
-    graft.queries.TrainingData.queries("x_ann_pareto")(spark, sfDir)
+    graft.SparkEntry.queries("x_ann_pareto")(spark, sfDir)
       .write.mode("overwrite").parquet(s"$outDir/ann_pareto")
 
   /** Unigram-LM tokenizer training pipeline — the BPE lane's

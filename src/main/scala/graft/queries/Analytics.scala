@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Analytic queries over the TPC-H-ish testdata: grouped aggregation,
   * multi-way joins, window top-k, ordered limits. The reference itself
@@ -605,8 +605,9 @@ object Analytics {
       |FROM e JOIN f USING (user_id)
       |GROUP BY 1, 2""".stripMargin
 
-  // Star-join rollup: revenue by region/nation (denormalize → aggregate).
-  def regionRevenueQ(spark: SparkSession, dir: String): DataFrame = {
+  /** The orders star: each order with its customer, nation and region
+    * (broadcast dimensions). */
+  private def orderStar(spark: SparkSession, dir: String): DataFrame = {
     val cust = Tables.load(spark, dir, "customer")
     val nat = Tables.load(spark, dir, "nation")
     val reg = Tables.load(spark, dir, "region")
@@ -614,10 +615,14 @@ object Analytics {
     ord.join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
       .join(broadcast(nat), cust("c_nationkey") === nat("n_nationkey"))
       .join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey"))
+  }
+
+  // Star-join rollup: revenue by region/nation (denormalize → aggregate).
+  def regionRevenueQ(spark: SparkSession, dir: String): DataFrame =
+    orderStar(spark, dir)
       .groupBy(col("r_name"), col("n_name"))
       .agg(count(lit(1)).as("n_orders"),
         round(sum(col("o_totalprice")), 2).as("total_revenue"))
-  }
   val regionRevenueSql: String =
     """SELECT r_name, n_name, count(*) AS n_orders,
       |       round(sum(o_totalprice), 2) AS total_revenue
@@ -629,18 +634,11 @@ object Analytics {
 
   // Hierarchical rollup (region → nation → grand total) — subtotal rows
   // carry NULL group keys in both engines.
-  def rollupRevenueQ(spark: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.load(spark, dir, "customer")
-    val nat = Tables.load(spark, dir, "nation")
-    val reg = Tables.load(spark, dir, "region")
-    val ord = Tables.load(spark, dir, "orders")
-    ord.join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-      .join(broadcast(nat), cust("c_nationkey") === nat("n_nationkey"))
-      .join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey"))
+  def rollupRevenueQ(spark: SparkSession, dir: String): DataFrame =
+    orderStar(spark, dir)
       .rollup(col("r_name"), col("n_name"))
       .agg(count(lit(1)).as("n_orders"),
         round(sum(col("o_totalprice")), 2).as("total_revenue"))
-  }
   val rollupRevenueSql: String =
     """SELECT r_name, n_name, count(*) AS n_orders,
       |       round(sum(o_totalprice), 2) AS total_revenue
@@ -1698,15 +1696,10 @@ object Analytics {
       |JOIN supplier s ON l.l_suppkey = s.s_suppkey
       |GROUP BY 1, 2""".stripMargin
 
-  // Herfindahl–Hirschman concentration of supplier revenue per nation
-  // — the market-concentration dual of x_lang_diversity's Simpson
-  // index: hhi_bp = Σᵢ revᵢ²·10⁴ div total² over each nation's
-  // suppliers (10000 = monopoly, 10000/n = perfectly even). Revenue
-  // rides the cents lane and the squared sums a decimal(38,0) /
-  // HUGEINT lane, so the index is an exact integer rational in both
-  // engines. Two hash aggregations (supplier, then nation) and one
-  // broadcastable supplier-dimension join.
-  def hhiQ(spark: SparkSession, dir: String): DataFrame = {
+  /** Each supplier's revenue in exact cents (`rev_c`) beside its
+    * `nation`: one lineitem aggregation and a broadcast supplier join. */
+  private def supplierRevenue(spark: SparkSession,
+                              dir: String): DataFrame = {
     val rev = Tables.load(spark, dir, "lineitem")
       .groupBy(col("l_suppkey"))
       .agg(sum(floor(col("l_extendedprice") * 100).cast("long"))
@@ -1715,6 +1708,18 @@ object Analytics {
       .select(col("s_suppkey"), col("s_nationkey").cast("long")
         .as("nation"))
     rev.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+  }
+
+  // Herfindahl–Hirschman concentration of supplier revenue per nation
+  // — the market-concentration dual of x_lang_diversity's Simpson
+  // index: hhi_bp = Σᵢ revᵢ²·10⁴ div total² over each nation's
+  // suppliers (10000 = monopoly, 10000/n = perfectly even). Revenue
+  // rides the cents lane and the squared sums a decimal(38,0) /
+  // HUGEINT lane, so the index is an exact integer rational in both
+  // engines. Two hash aggregations (supplier, then nation) and one
+  // broadcastable supplier-dimension join.
+  def hhiQ(spark: SparkSession, dir: String): DataFrame =
+    supplierRevenue(spark, dir)
       .groupBy(col("nation"))
       .agg(count(lit(1)).as("n_suppliers"),
         sum(col("rev_c")).as("total_c"),
@@ -1723,7 +1728,6 @@ object Analytics {
         expr("cast(ss * 10000 div" +
           " (cast(total_c as decimal(38,0)) * total_c) as bigint)")
           .as("hhi_bp"))
-  }
   val hhiSql: String =
     """WITH rev AS (
       |  SELECT l_suppkey,
@@ -2298,18 +2302,11 @@ object Analytics {
   // lane with total window orderings; the 80% boundary compares
   // cum·5 ≥ total·4, never a float share.
   def paretoRevenueQ(spark: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.load(spark, dir, "lineitem")
-      .groupBy(col("l_suppkey"))
-      .agg(sum(floor(col("l_extendedprice") * 100).cast("long"))
-        .as("rev_c"))
-    val sup = Tables.load(spark, dir, "supplier")
-      .select(col("s_suppkey"), col("s_nationkey").cast("long")
-        .as("nation"))
     val w = Window.partitionBy(col("nation"))
       .orderBy(col("rev_c").desc, col("l_suppkey"))
     val wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wall = Window.partitionBy(col("nation"))
-    rev.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+    supplierRevenue(spark, dir)
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("cum_c", sum(col("rev_c")).over(wcum))
       .withColumn("total_c", sum(col("rev_c")).over(wall))
@@ -2350,142 +2347,73 @@ object Analytics {
       |FROM rk WHERE cum_c * 5 >= total_c * 4
       |GROUP BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_benford" -> (benfordQ _),
-    "q_pareto_revenue" -> (paretoRevenueQ _),
-    "q_attribution" -> (attributionQ _),
-    "q_transitions" -> (transitionsQ _),
-    "q_rfm" -> (rfmQ _),
-    "q_order_dist" -> (orderDistQ _),
-    "q_promo_share" -> (promoShareQ _),
-    "q_top_supplier" -> (topSupplierQ _),
-    "q_small_qty" -> (smallQtyQ _),
-    "q_big_orders" -> (bigOrdersQ _),
-    "q_brand_revenue" -> (brandRevenueQ _),
-    "q_blame_supplier" -> (blameSupplierQ _),
-    "q_idle_capital" -> (idleCapitalQ _),
-    "q_winsorize" -> (winsorizeQ _),
-    "q_iqr_outliers" -> (iqrOutliersQ _),
-    "q_approx_quantile" -> (approxQuantileQ _),
-    "q_histogram" -> (histogramQ _),
-    "q_equidepth" -> (equidepthQ _),
-    "q_copurchase" -> (copurchaseQ _),
-    "q_basket_lift" -> (basketLiftQ _),
-    "q_skyline" -> (skylineQ _),
-    "q_concurrency" -> (concurrencyQ _),
-    "q_weighted_median" -> (weightedMedianQ _),
-    "q_mad" -> (madQ _),
-    "q_trimmed_mean" -> (trimmedMeanQ _),
-    "q_mode" -> (modeQ _),
-    "q_mad_outliers" -> (madOutliersQ _),
-    "q_hhi" -> (hhiQ _),
-    "q_trade_matrix" -> (tradeMatrixQ _),
-    "q_growth_accounting" -> (growthAccountingQ _),
-    "q_discount_effect" -> (discountEffectQ _),
-    "q_fulfillment" -> (fulfillmentQ _),
-    "q_corr_exact" -> (corrExactQ _),
-    "q1_pricing_summary" -> (pricingSummaryQ _),
-    "q3_top_revenue" -> (topRevenueQ _),
-    "q_window_topk" -> (windowTopKQ _),
-    "q_event_stats" -> (eventStatsQ _),
-    "q_ohlc" -> (ohlcQ _),
-    "q_hll_merge" -> (hllMergeQ _),
-    "q_unpivot" -> (unpivotQ _),
-    "q_join_profile" -> (joinProfileQ _),
-    "q_ewma" -> (ewmaQ _),
-    "q_gapfill" -> (gapFillQ _),
-    "q_set_ops" -> (setOpsQ _),
-    "q_exists" -> (existsQ _),
-    "q_correlated_scalar" -> (correlatedScalarQ _),
-    "q_lag_delta" -> (lagDeltaQ _),
-    "q_range_frame" -> (rangeFrameQ _),
-    "q_window_suite" -> (windowSuiteQ _),
-    "q_decimal_sum" -> (decimalSumQ _),
-    "q_complex_agg" -> (complexAggQ _),
-    "q_funnel" -> (funnelQ _),
-    "q_cohort" -> (cohortQ _),
-    "q_key_histogram" -> (keyHistogramQ _),
-    "q_region_revenue" -> (regionRevenueQ _),
-    "q_rollup_revenue" -> (rollupRevenueQ _),
-    "q_anti_join" -> (antiJoinQ _),
-    "q_salted_agg" -> (saltedAggQ _),
-    "q_percentiles" -> (percentilesQ _),
-    "q_semi_join" -> (semiJoinQ _),
-    "q_cube_status" -> (cubeStatusQ _),
-    "q_range_join" -> (rangeJoinQ _),
-    "q_json_extract" -> (jsonExtractQ _),
-    "q_pivot" -> (pivotQ _),
-    "q_grouping_sets" -> (groupingSetsQ _),
-    "q_salted_join" -> (saltedJoinQ _),
-    "q_approx_distinct" -> (approxDistinctQ _))
-
-  val oracles: Map[String, String] = Map(
-    "q_benford" -> benfordSql,
-    "q_pareto_revenue" -> paretoRevenueSql,
-    "q_attribution" -> attributionSql,
-    "q_transitions" -> transitionsSql,
-    "q_rfm" -> rfmSql,
-    "q_order_dist" -> orderDistSql,
-    "q_promo_share" -> promoShareSql,
-    "q_top_supplier" -> topSupplierSql,
-    "q_small_qty" -> smallQtySql,
-    "q_big_orders" -> bigOrdersSql,
-    "q_brand_revenue" -> brandRevenueSql,
-    "q_blame_supplier" -> blameSupplierSql,
-    "q_idle_capital" -> idleCapitalSql,
-    "q_winsorize" -> winsorizeSql,
-    "q_iqr_outliers" -> iqrOutliersSql,
-    "q_approx_quantile" -> approxQuantileSql,
-    "q_histogram" -> histogramSql,
-    "q_equidepth" -> equidepthSql,
-    "q_copurchase" -> copurchaseSql,
-    "q_basket_lift" -> basketLiftSql,
-    "q_skyline" -> skylineSql,
-    "q_concurrency" -> concurrencySql,
-    "q_weighted_median" -> weightedMedianSql,
-    "q_mad" -> madSql,
-    "q_trimmed_mean" -> trimmedMeanSql,
-    "q_mode" -> modeSql,
-    "q_mad_outliers" -> madOutliersSql,
-    "q_hhi" -> hhiSql,
-    "q_trade_matrix" -> tradeMatrixSql,
-    "q_growth_accounting" -> growthAccountingSql,
-    "q_discount_effect" -> discountEffectSql,
-    "q_fulfillment" -> fulfillmentSql,
-    "q_corr_exact" -> corrExactSql,
-    "q1_pricing_summary" -> pricingSummarySql,
-    "q3_top_revenue" -> topRevenueSql,
-    "q_window_topk" -> windowTopKSql,
-    "q_event_stats" -> eventStatsSql,
-    "q_ohlc" -> ohlcSql,
-    "q_hll_merge" -> hllMergeSql,
-    "q_unpivot" -> unpivotSql,
-    "q_join_profile" -> joinProfileSql,
-    "q_ewma" -> ewmaSql,
-    "q_gapfill" -> gapFillSql,
-    "q_set_ops" -> setOpsSql,
-    "q_exists" -> existsSql,
-    "q_correlated_scalar" -> correlatedScalarSql,
-    "q_lag_delta" -> lagDeltaSql,
-    "q_range_frame" -> rangeFrameSql,
-    "q_window_suite" -> windowSuiteSql,
-    "q_decimal_sum" -> decimalSumSql,
-    "q_complex_agg" -> complexAggSql,
-    "q_funnel" -> funnelSql,
-    "q_cohort" -> cohortSql,
-    "q_key_histogram" -> keyHistogramSql,
-    "q_region_revenue" -> regionRevenueSql,
-    "q_rollup_revenue" -> rollupRevenueSql,
-    "q_anti_join" -> antiJoinSql,
-    "q_salted_agg" -> saltedAggSql,
-    "q_percentiles" -> percentilesSql,
-    "q_semi_join" -> semiJoinSql,
-    "q_cube_status" -> cubeStatusSql,
-    "q_range_join" -> rangeJoinSql,
-    "q_json_extract" -> jsonExtractSql,
-    "q_pivot" -> pivotSql,
-    "q_grouping_sets" -> groupingSetsSql,
-    "q_salted_join" -> saltedJoinSql,
+  val queries: Seq[Query] = Seq(
+    Query("q_benford", benfordQ, benfordSql),
+    Query("q_pareto_revenue", paretoRevenueQ, paretoRevenueSql),
+    Query("q_attribution", attributionQ, attributionSql),
+    Query("q_transitions", transitionsQ, transitionsSql),
+    Query("q_rfm", rfmQ, rfmSql),
+    Query("q_order_dist", orderDistQ, orderDistSql),
+    Query("q_promo_share", promoShareQ, promoShareSql),
+    Query("q_top_supplier", topSupplierQ, topSupplierSql),
+    Query("q_small_qty", smallQtyQ, smallQtySql),
+    Query("q_big_orders", bigOrdersQ, bigOrdersSql),
+    Query("q_brand_revenue", brandRevenueQ, brandRevenueSql),
+    Query("q_blame_supplier", blameSupplierQ, blameSupplierSql),
+    Query("q_idle_capital", idleCapitalQ, idleCapitalSql),
+    Query("q_winsorize", winsorizeQ, winsorizeSql),
+    Query("q_iqr_outliers", iqrOutliersQ, iqrOutliersSql),
+    Query("q_approx_quantile", approxQuantileQ, approxQuantileSql),
+    Query("q_histogram", histogramQ, histogramSql),
+    Query("q_equidepth", equidepthQ, equidepthSql),
+    Query("q_copurchase", copurchaseQ, copurchaseSql),
+    Query("q_basket_lift", basketLiftQ, basketLiftSql),
+    Query("q_skyline", skylineQ, skylineSql),
+    Query("q_concurrency", concurrencyQ, concurrencySql),
+    Query("q_weighted_median", weightedMedianQ, weightedMedianSql),
+    Query("q_mad", madQ, madSql),
+    Query("q_trimmed_mean", trimmedMeanQ, trimmedMeanSql),
+    Query("q_mode", modeQ, modeSql),
+    Query("q_mad_outliers", madOutliersQ, madOutliersSql),
+    Query("q_hhi", hhiQ, hhiSql),
+    Query("q_trade_matrix", tradeMatrixQ, tradeMatrixSql),
+    Query("q_growth_accounting", growthAccountingQ, growthAccountingSql),
+    Query("q_discount_effect", discountEffectQ, discountEffectSql),
+    Query("q_fulfillment", fulfillmentQ, fulfillmentSql),
+    Query("q_corr_exact", corrExactQ, corrExactSql),
+    Query("q1_pricing_summary", pricingSummaryQ, pricingSummarySql),
+    Query("q3_top_revenue", topRevenueQ, topRevenueSql),
+    Query("q_window_topk", windowTopKQ, windowTopKSql),
+    Query("q_event_stats", eventStatsQ, eventStatsSql),
+    Query("q_ohlc", ohlcQ, ohlcSql),
+    Query("q_hll_merge", hllMergeQ, hllMergeSql),
+    Query("q_unpivot", unpivotQ, unpivotSql),
+    Query("q_join_profile", joinProfileQ, joinProfileSql),
+    Query("q_ewma", ewmaQ, ewmaSql),
+    Query("q_gapfill", gapFillQ, gapFillSql),
+    Query("q_set_ops", setOpsQ, setOpsSql),
+    Query("q_exists", existsQ, existsSql),
+    Query("q_correlated_scalar", correlatedScalarQ, correlatedScalarSql),
+    Query("q_lag_delta", lagDeltaQ, lagDeltaSql),
+    Query("q_range_frame", rangeFrameQ, rangeFrameSql),
+    Query("q_window_suite", windowSuiteQ, windowSuiteSql),
+    Query("q_decimal_sum", decimalSumQ, decimalSumSql),
+    Query("q_complex_agg", complexAggQ, complexAggSql),
+    Query("q_funnel", funnelQ, funnelSql),
+    Query("q_cohort", cohortQ, cohortSql),
+    Query("q_key_histogram", keyHistogramQ, keyHistogramSql),
+    Query("q_region_revenue", regionRevenueQ, regionRevenueSql),
+    Query("q_rollup_revenue", rollupRevenueQ, rollupRevenueSql),
+    Query("q_anti_join", antiJoinQ, antiJoinSql),
+    Query("q_salted_agg", saltedAggQ, saltedAggSql),
+    Query("q_percentiles", percentilesQ, percentilesSql),
+    Query("q_semi_join", semiJoinQ, semiJoinSql),
+    Query("q_cube_status", cubeStatusQ, cubeStatusSql),
+    Query("q_range_join", rangeJoinQ, rangeJoinSql),
+    Query("q_json_extract", jsonExtractQ, jsonExtractSql),
+    Query("q_pivot", pivotQ, pivotSql),
+    Query("q_grouping_sets", groupingSetsQ, groupingSetsSql),
+    Query("q_salted_join", saltedJoinQ, saltedJoinSql),
     // the sketch VALUE can't cross engines; the bounded-error flag can
-    "q_approx_distinct" -> approxDistinctSql)
+    Query("q_approx_distinct", approxDistinctQ, approxDistinctSql))
 }

@@ -5,7 +5,9 @@ package graft.queries
   * exit). `build` receives the fresh root and returns the path the
   * cache hands out (usually a subdirectory it wrote) — the single
   * implementation of the temp-dir/cleanup shape every fixture-building
-  * query shares.
+  * query shares. The first `build` to run for a (tag, key) wins, so each
+  * tag has ONE `build`, passed from one call site: a fixture several
+  * queries share sits behind one helper that they all call.
   */
 private[queries] object Fixtures {
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.ops.EtlOps
 
 /** Parity queries: one per reference operator family (SURVEY.md §2),
@@ -1297,85 +1297,45 @@ object Parity {
       |       c_acctbal, c_mktsegment
       |FROM customer""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p_insert_into" -> (insertIntoQ _),
-    "p_typed_decode" -> (typedDecodeQ _),
-    "p_latest_partition" -> (latestPartitionQ _),
-    "p_latest_partition_pruned" -> (latestPartitionPrunedQ _),
-    "p_audit_append" -> (auditAppendQ _),
-    "p_dedup_latest" -> (dedupLatestQ _),
-    "p_scd_merge" -> (scdMergeQ _),
-    "p_coalesce_merge" -> (coalesceMergeQ _),
-    "p_keyed_snapshot_scan" -> (keyedSnapshotScanQ _),
-    "p_denormalize" -> (denormalizeQ _),
-    "p_union_by_name" -> (unionByNameQ _),
-    "p_sql_scalar_subquery" -> (sqlScalarSubqueryQ _),
-    "p_bistore_merge" -> (bistoreMergeQ _),
-    "p_scd2_history" -> (scd2HistoryQ _),
-    "p_stream_scd" -> (streamScdQ _),
-    "p_stream_window" -> (streamWindowQ _),
-    "p_stream_sessions" -> (streamSessionsQ _),
-    "p_stream_join" -> (streamJoinQ _),
-    "p_stream_dedup" -> (streamDedupQ _),
-    "p_stream_state" -> (streamStateQ _),
-    "p_cdc_apply" -> (cdcApplyQ _),
-    "p_jsonl_ingest" -> (jsonlIngestQ _),
-    "p_csv_ingest" -> (csvIngestQ _),
-    "p_orc_roundtrip" -> (orcRoundtripQ _),
-    "p_clustered_scan" -> (clusteredScanQ _),
-    "p_fileskip_scan" -> (fileskipScanQ _),
-    "p_bloomskip_scan" -> (bloomskipScanQ _),
-    "p_compaction" -> (compactionQ _),
-    "p_schema_evolution" -> (schemaEvolutionQ _),
-    "p_zorder_scan" -> (zorderScanQ _),
-    "p_hilbert_scan" -> (hilbertScanQ _),
-    "p_time_travel" -> (timeTravelQ _),
-    "p_quality_checks" -> (qualityChecksQ _),
-    "p_snapshot_diff" -> (snapshotDiffQ _),
-    "p_incremental_agg" -> (incrementalAggQ _),
-    "p_join_view_incr" -> (joinViewIncrQ _),
-    "p_rowkey_prefix_scan" -> (rowkeyPrefixScanQ _),
-    "p_bucketed_join" -> (bucketedJoinQ _),
-    "p_stream_incr_agg" -> (streamIncrAggQ _))
-
-  val oracles: Map[String, String] = Map(
-    "p_insert_into" -> insertIntoSql,
-    "p_typed_decode" -> typedDecodeSql,
-    "p_latest_partition" -> latestPartitionSql,
-    "p_latest_partition_pruned" -> latestPartitionPrunedSql,
-    "p_audit_append" -> auditAppendSql,
-    "p_dedup_latest" -> dedupLatestSql,
-    "p_scd_merge" -> scdMergeSql,
-    "p_coalesce_merge" -> coalesceMergeSql,
-    "p_keyed_snapshot_scan" -> keyedSnapshotScanSql,
-    "p_denormalize" -> denormalizeSql,
-    "p_union_by_name" -> unionByNameSql,
-    "p_sql_scalar_subquery" -> sqlScalarSubquerySql,
-    "p_bistore_merge" -> bistoreMergeSql,
-    "p_scd2_history" -> scd2HistorySql,
-    "p_stream_scd" -> streamScdSql,
-    "p_stream_window" -> streamWindowSql,
-    "p_stream_sessions" -> streamSessionsSql,
-    "p_stream_join" -> streamJoinSql,
-    "p_stream_dedup" -> streamDedupSql,
-    "p_stream_state" -> streamStateSql,
-    "p_cdc_apply" -> cdcApplySql,
-    "p_jsonl_ingest" -> ingestRoundtripSql,
-    "p_csv_ingest" -> ingestRoundtripSql,
-    "p_orc_roundtrip" -> ingestRoundtripSql,
-    "p_clustered_scan" -> clusteredScanSql,
-    "p_fileskip_scan" -> fileskipScanSql,
-    "p_bloomskip_scan" -> bloomskipScanSql,
-    "p_compaction" -> compactionSql,
-    "p_schema_evolution" -> schemaEvolutionSql,
-    "p_zorder_scan" -> zorderScanSql,
-    "p_hilbert_scan" -> hilbertScanSql,
-    "p_time_travel" -> timeTravelSql,
-    "p_quality_checks" -> qualityChecksSql,
-    "p_snapshot_diff" -> snapshotDiffSql,
-    "p_incremental_agg" -> incrementalAggSql,
-    "p_join_view_incr" -> joinViewIncrSql,
-    "p_rowkey_prefix_scan" -> rowkeyPrefixScanSql,
-    "p_bucketed_join" -> bucketedJoinSql,
-    "p_stream_incr_agg" -> streamIncrAggSql)
+  val queries: Seq[Query] = Seq(
+    Query("p_insert_into", insertIntoQ, insertIntoSql),
+    Query("p_typed_decode", typedDecodeQ, typedDecodeSql),
+    Query("p_latest_partition", latestPartitionQ, latestPartitionSql),
+    Query("p_latest_partition_pruned", latestPartitionPrunedQ,
+      latestPartitionPrunedSql),
+    Query("p_audit_append", auditAppendQ, auditAppendSql),
+    Query("p_dedup_latest", dedupLatestQ, dedupLatestSql),
+    Query("p_scd_merge", scdMergeQ, scdMergeSql),
+    Query("p_coalesce_merge", coalesceMergeQ, coalesceMergeSql),
+    Query("p_keyed_snapshot_scan", keyedSnapshotScanQ, keyedSnapshotScanSql),
+    Query("p_denormalize", denormalizeQ, denormalizeSql),
+    Query("p_union_by_name", unionByNameQ, unionByNameSql),
+    Query("p_sql_scalar_subquery", sqlScalarSubqueryQ, sqlScalarSubquerySql),
+    Query("p_bistore_merge", bistoreMergeQ, bistoreMergeSql),
+    Query("p_scd2_history", scd2HistoryQ, scd2HistorySql),
+    Query("p_stream_scd", streamScdQ, streamScdSql),
+    Query("p_stream_window", streamWindowQ, streamWindowSql),
+    Query("p_stream_sessions", streamSessionsQ, streamSessionsSql),
+    Query("p_stream_join", streamJoinQ, streamJoinSql),
+    Query("p_stream_dedup", streamDedupQ, streamDedupSql),
+    Query("p_stream_state", streamStateQ, streamStateSql),
+    Query("p_cdc_apply", cdcApplyQ, cdcApplySql),
+    Query("p_jsonl_ingest", jsonlIngestQ, ingestRoundtripSql),
+    Query("p_csv_ingest", csvIngestQ, ingestRoundtripSql),
+    Query("p_orc_roundtrip", orcRoundtripQ, ingestRoundtripSql),
+    Query("p_clustered_scan", clusteredScanQ, clusteredScanSql),
+    Query("p_fileskip_scan", fileskipScanQ, fileskipScanSql),
+    Query("p_bloomskip_scan", bloomskipScanQ, bloomskipScanSql),
+    Query("p_compaction", compactionQ, compactionSql),
+    Query("p_schema_evolution", schemaEvolutionQ, schemaEvolutionSql),
+    Query("p_zorder_scan", zorderScanQ, zorderScanSql),
+    Query("p_hilbert_scan", hilbertScanQ, hilbertScanSql),
+    Query("p_time_travel", timeTravelQ, timeTravelSql),
+    Query("p_quality_checks", qualityChecksQ, qualityChecksSql),
+    Query("p_snapshot_diff", snapshotDiffQ, snapshotDiffSql),
+    Query("p_incremental_agg", incrementalAggQ, incrementalAggSql),
+    Query("p_join_view_incr", joinViewIncrQ, joinViewIncrSql),
+    Query("p_rowkey_prefix_scan", rowkeyPrefixScanQ, rowkeyPrefixScanSql),
+    Query("p_bucketed_join", bucketedJoinQ, bucketedJoinSql),
+    Query("p_stream_incr_agg", streamIncrAggQ, streamIncrAggSql))
 }

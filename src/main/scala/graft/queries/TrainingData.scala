@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.TextFns
 import graft.multimodal.Multimodal
 import graft.operators.{Dedup, Sessionize, Similarity, SparseSim, TimeSeries, UrlOps}
@@ -84,6 +84,22 @@ object TrainingData {
        |FROM documents""".stripMargin
   }
 
+  /** The twin-detector logit over `text`, in integer micro-units. */
+  private def twinLogit: Column = {
+    val t = col("text")
+    lit(-900000L) +
+      lit(60000L) * TextFns.wordSetCount(t, TextFns.EnWords) +
+      lit(9000L) * TextFns.tokenCount(t) -
+      lit(150000L) * TextFns.punctCount(t) +
+      lit(500L) * length(t).cast("long")
+  }
+
+  /** [[nearDupCorpus]] scored by [[twinLogit]]: (score, pos), where pos
+    * marks a planted twin. */
+  private def twinScored(spark: SparkSession, dir: String): DataFrame =
+    nearDupCorpus(spark, dir).select(
+      twinLogit.as("score"), (col("doc_id") >= 1000000L).as("pos"))
+
   // ------------------------------------------- model-as-literal scoring
   // The "apply a trained quality classifier at 100 TB" pattern: a
   // linear model whose weights were fit OFFLINE ships as integer
@@ -96,12 +112,7 @@ object TrainingData {
   // Weights are illustrative; the operator pattern — broadcast-free
   // literal model, codegen'd features — is what is being pinned.
   def qualityLogitQ(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    val logit = lit(-900000L) +
-      lit(60000L) * TextFns.wordSetCount(t, TextFns.EnWords) +
-      lit(9000L) * TextFns.tokenCount(t) -
-      lit(150000L) * TextFns.punctCount(t) +
-      lit(500L) * length(t).cast("long")
+    val logit = twinLogit
     docs(spark, dir).select(
       col("doc_id"), logit.as("logit_micro"),
       (logit > 0L).as("keep"))
@@ -135,14 +146,7 @@ object TrainingData {
   // (bounded by the integer score domain, not the corpus), one window
   // over that small relation, one final rollup.
   def aucQ(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    val logit = lit(-900000L) +
-      lit(60000L) * TextFns.wordSetCount(t, TextFns.EnWords) +
-      lit(9000L) * TextFns.tokenCount(t) -
-      lit(150000L) * TextFns.punctCount(t) +
-      lit(500L) * length(t).cast("long")
-    val scored = nearDupCorpus(spark, dir).select(
-      logit.as("score"), (col("doc_id") >= 1000000L).as("pos"))
+    val scored = twinScored(spark, dir)
     val g = scored.groupBy(col("score")).agg(
       sum(when(col("pos"), 1L).otherwise(0L)).as("np"),
       sum(when(col("pos"), 0L).otherwise(1L)).as("nn"))
@@ -200,14 +204,7 @@ object TrainingData {
   // broadcast-crosses the scored rows and map-side combine collapses
   // each task to ≤ 5 partial rows before the shuffle.
   def prCurveQ(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    val logit = lit(-900000L) +
-      lit(60000L) * TextFns.wordSetCount(t, TextFns.EnWords) +
-      lit(9000L) * TextFns.tokenCount(t) -
-      lit(150000L) * TextFns.punctCount(t) +
-      lit(500L) * length(t).cast("long")
-    val scored = nearDupCorpus(spark, dir).select(
-      logit.as("score"), (col("doc_id") >= 1000000L).as("pos"))
+    val scored = twinScored(spark, dir)
     val th = spark.range(1).select(explode(array(
       Seq(-500000L, 0L, 500000L, 1000000L, 2000000L).map(lit): _*))
       .as("thresh"))
@@ -270,14 +267,7 @@ object TrainingData {
   // calibratable score; one hash aggregate, the cheapest plan in the
   // eval family.
   def calibrationBinsQ(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    val logit = lit(-900000L) +
-      lit(60000L) * TextFns.wordSetCount(t, TextFns.EnWords) +
-      lit(9000L) * TextFns.tokenCount(t) -
-      lit(150000L) * TextFns.punctCount(t) +
-      lit(500L) * length(t).cast("long")
-    nearDupCorpus(spark, dir)
-      .select(logit.as("score"), (col("doc_id") >= 1000000L).as("pos"))
+    twinScored(spark, dir)
       // +1e9 shift keeps the dividend positive: truncating (Spark div)
       // and flooring (DuckDB //) division only agree on non-negatives
       .groupBy(expr("(score + 1000000000) div 200000").as("bin"))
@@ -321,14 +311,7 @@ object TrainingData {
   // engines bucket ties identically; buckets a giant group skips are
   // simply absent.
   def gainsCurveQ(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    val logit = lit(-900000L) +
-      lit(60000L) * TextFns.wordSetCount(t, TextFns.EnWords) +
-      lit(9000L) * TextFns.tokenCount(t) -
-      lit(150000L) * TextFns.punctCount(t) +
-      lit(500L) * length(t).cast("long")
-    val scored = nearDupCorpus(spark, dir).select(
-      logit.as("score"), (col("doc_id") >= 1000000L).as("pos"))
+    val scored = twinScored(spark, dir)
     val g = scored.groupBy(col("score")).agg(
       sum(when(col("pos"), 1L).otherwise(0L)).as("np"),
       count(lit(1)).as("nr"))
@@ -593,8 +576,7 @@ object TrainingData {
   // signatures + banding from the corpus and must land identical
   // occupancies.
   def sigStatsQ(spark: SparkSession, dir: String): DataFrame =
-    Dedup.signatureTableStats(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)))
+    Dedup.signatureTableStats(spark, nearDupSigs(spark, dir))
   val sigStatsSql: String =
     s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
        |occ AS (SELECT band, bkey, count(*) AS n FROM bands GROUP BY 1, 2)
@@ -644,9 +626,7 @@ object TrainingData {
   // screen runs at its loosest production setting (0.2) so the table
   // covers the whole operating range.
   def screenRecallQ(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.2)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.2)
     val planted = col("doc_b") - col("doc_a") === 1000000L
     val total = docs(spark, dir).agg(count(lit(1)).as("n_planted"))
     pairs
@@ -679,9 +659,7 @@ object TrainingData {
   // into every threshold row it clears). Pair counts and exact
   // distinct-doc counts only; thresholds ride a 3-row broadcast.
   def thresholdSweepQ(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.2)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.2)
     val ths = spark.createDataFrame(Seq(Tuple1(3L), Tuple1(5L),
       Tuple1(7L))).toDF("th_band")
     val hit = pairs.crossJoin(broadcast(ths))
@@ -721,9 +699,7 @@ object TrainingData {
   // twins map to their source via doc_id mod 1e6, the source pair is
   // canonicalized (least/greatest) so each relationship is one row.
   def syndicationQ(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.5)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     val src = docs(spark, dir)
       .select(col("doc_id").as("orig_id"), col("source"))
     pairs
@@ -761,9 +737,7 @@ object TrainingData {
   // AFTER the id-only candidate generation (the r3 occupancy rule).
   def neardupVerifiedQ(spark: SparkSession, dir: String): DataFrame = {
     val corpus = nearDupCorpus(spark, dir)
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.2)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.2)
     pairs
       .join(corpus.select(col("doc_id").as("doc_a"),
         col("text").as("__ta")), "doc_a")
@@ -882,7 +856,7 @@ object TrainingData {
   // replayed signatures.
   def neardupBandsQ(spark: SparkSession, dir: String): DataFrame =
     Dedup.nearDupBandProfile(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
+      nearDupSigs(spark, dir),
       threshold = 0.5)
   val neardupBandsSql: String =
     s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
@@ -913,7 +887,7 @@ object TrainingData {
   def dedupKeepBestQ(spark: SparkSession, dir: String): DataFrame = {
     val corpus = nearDupCorpus(spark, dir)
     Dedup.dedupKeepBestFromSigs(spark, corpus,
-      sigTableFor(spark, dir, "neardup", corpus), "doc_id",
+      nearDupSigs(spark, dir), "doc_id",
       length(col("text")), threshold = 0.5)
   }
   val dedupKeepBestSql: String =
@@ -956,7 +930,7 @@ object TrainingData {
       expr("substring(text, 1, greatest((length(text) * 6) div 10, 60))")
         .as("text"))
     Dedup.containmentAgainstSigs(batch,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
+      nearDupSigs(spark, dir),
       "text", "doc_id", k = 5, minContainmentBp = 7000L)
   }
   val containmentIncrSql: String = {
@@ -1002,9 +976,7 @@ object TrainingData {
   // over the verified pair list, never 8 screens.
   def dedupSweepQ(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.2)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.2)
     val th = Seq(0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9).toDF("threshold")
     val pt = pairs.crossJoin(broadcast(th))
       .where(col("jaccard") >= col("threshold"))
@@ -1263,22 +1235,30 @@ object TrainingData {
   // nominated (verified with 6x margin on this corpus at every scale
   // factor) and the published counts come from the exact pass, so
   // merge-order noise in the candidate TAIL cannot reach the output.
-  def heavyHittersQ(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.native.NativeFns
-    // every 5-char window WITH multiplicity (the shingle expressions
-    // dedupe per doc, which is the wrong stream for frequency counting).
-    // The gram explosion is the CPU of this query and runs BEFORE any
-    // shuffle, so its parallelism is the scan's split count — a corpus
-    // packed into few row groups would run it near-serially. One cheap
-    // doc-level repartition (explicit width: AQE would coalesce the
-    // ~MB-scale exchange back to one partition) fans the heavy stage
-    // out; at real scale the shuffle moves text bytes once, orders of
-    // magnitude less data than the grams it unlocks parallelism for.
+  def heavyHittersQ(spark: SparkSession, dir: String): DataFrame =
+    topGrams(fiveGrams(spark, docs(spark, dir)))
+
+  /** Every 5-char window of `d`'s text WITH multiplicity (the shingle
+    * expressions dedupe per doc, which is the wrong stream for frequency
+    * counting). The gram explosion is the CPU of these queries and runs
+    * BEFORE any shuffle, so its parallelism is the scan's split count —
+    * a corpus packed into few row groups would run it near-serially.
+    * One cheap doc-level repartition (explicit width: AQE would coalesce
+    * the ~MB-scale exchange back to one partition) fans the heavy stage
+    * out; at real scale the shuffle moves text bytes once, orders of
+    * magnitude less data than the grams it unlocks parallelism for. */
+  private def fiveGrams(spark: SparkSession, d: DataFrame): DataFrame = {
     val width = spark.sessionState.conf.numShufflePartitions
-    val grams = docs(spark, dir).repartition(width, col("doc_id")).select(
+    d.repartition(width, col("doc_id")).select(
       explode(expr("transform(sequence(1, greatest(length(text)-4, 1))," +
         " i -> substring(text, i, 5))")).as("gram"))
-    val cand = grams.agg(NativeFns.heavyHitters(col("gram"), 1024).as("c"))
+  }
+
+  /** The exact top-20 of a gram stream as (gram, cnt, rank): the
+    * Misra-Gries sketch nominates, one semi-join pass recounts. */
+  private def topGrams(grams: DataFrame): DataFrame = {
+    val cand = grams.agg(graft.functions.native.NativeFns
+        .heavyHitters(col("gram"), 1024).as("c"))
       .select(explode(col("c")).as("gram"))
     val counts = grams.join(broadcast(cand), Seq("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
@@ -1287,6 +1267,16 @@ object TrainingData {
     counts.withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= 20)
   }
+
+  /** `top` with each gram's Count-Min estimate from `sketch` and the
+    * overcount against its exact count. */
+  private def cmAudit(sketch: DataFrame, top: DataFrame, depth: Int,
+                      width: Int): DataFrame =
+    graft.ops.Sketches
+      .cmEstimate(sketch, top.select(col("gram")), "gram", depth, width)
+      .join(top, Seq("gram"))
+      .select(col("gram"), col("cnt"), col("cm_est"),
+        (col("cm_est") - col("cnt")).as("overcount"), col("rank"))
   val heavyHittersSql: String =
     """WITH g AS (
       |  SELECT unnest(list_transform(range(1, greatest(length(text)-4, 1)+1),
@@ -1308,26 +1298,11 @@ object TrainingData {
   // gated result. Cell-wise-sum merge is commutative — the sketch is
   // bit-identical under any partitioning, unlike the MG candidate tail.
   def countMinQ(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.native.NativeFns
-    import graft.ops.Sketches
     val (depth, width) = (3, 2048)
-    val fan = spark.sessionState.conf.numShufflePartitions
-    val grams = docs(spark, dir).repartition(fan, col("doc_id")).select(
-      explode(expr("transform(sequence(1, greatest(length(text)-4, 1))," +
-        " i -> substring(text, i, 5))")).as("gram"))
-    val sketch = Sketches.countMinTable(grams, "gram", depth, width)
+    val grams = fiveGrams(spark, docs(spark, dir))
+    val sketch = graft.ops.Sketches.countMinTable(grams, "gram", depth, width)
     // probe set: exact top-20 via the MG nominate + exact recount device
-    val cand = grams.agg(NativeFns.heavyHitters(col("gram"), 1024).as("c"))
-      .select(explode(col("c")).as("gram"))
-    val counts = grams.join(broadcast(cand), Seq("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy(col("cnt").desc, col("gram"))
-    val top = counts.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= 20)
-    Sketches.cmEstimate(sketch, top.select(col("gram")), "gram", depth, width)
-      .join(top, Seq("gram"))
-      .select(col("gram"), col("cnt"), col("cm_est"),
-        (col("cm_est") - col("cnt")).as("overcount"), col("rank"))
+    cmAudit(sketch, topGrams(grams), depth, width)
   }
   val countMinSql: String =
     s"""WITH g AS (
@@ -1370,31 +1345,15 @@ object TrainingData {
   // history. Probe set and exact counts unchanged (the audit side
   // still reads the full stream; the SKETCH side is what increments).
   def countMinIncrQ(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.native.NativeFns
     import graft.ops.Sketches
     val (depth, width) = (3, 2048)
-    val fan = spark.sessionState.conf.numShufflePartitions
-    def gramsOf(d: DataFrame) = d.repartition(fan, col("doc_id")).select(
-      explode(expr("transform(sequence(1, greatest(length(text)-4, 1))," +
-        " i -> substring(text, i, 5))")).as("gram"))
     val d = docs(spark, dir)
     val sketch = Sketches.mergeCm(
-      Sketches.countMinTable(gramsOf(d.where(col("doc_id") % 2 === 0)),
+      Sketches.countMinTable(fiveGrams(spark, d.where(col("doc_id") % 2 === 0)),
         "gram", depth, width),
-      Sketches.countMinTable(gramsOf(d.where(col("doc_id") % 2 === 1)),
+      Sketches.countMinTable(fiveGrams(spark, d.where(col("doc_id") % 2 === 1)),
         "gram", depth, width))
-    val grams = gramsOf(d)
-    val cand = grams.agg(NativeFns.heavyHitters(col("gram"), 1024).as("c"))
-      .select(explode(col("c")).as("gram"))
-    val counts = grams.join(broadcast(cand), Seq("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy(col("cnt").desc, col("gram"))
-    val top = counts.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= 20)
-    Sketches.cmEstimate(sketch, top.select(col("gram")), "gram", depth, width)
-      .join(top, Seq("gram"))
-      .select(col("gram"), col("cnt"), col("cm_est"),
-        (col("cm_est") - col("cnt")).as("overcount"), col("rank"))
+    cmAudit(sketch, topGrams(fiveGrams(spark, d)), depth, width)
   }
 
   // ------------------------------------- group-aware (leakage-free) split
@@ -1555,7 +1514,7 @@ object TrainingData {
   // winnowing screen. All-integer lane: bit-identical across engines.
   def containmentPairsQ(spark: SparkSession, dir: String): DataFrame =
     Dedup.containmentPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
+      nearDupSigs(spark, dir),
       minContainmentBp = 7000L)
   val containmentPairsSql: String =
     s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
@@ -1592,8 +1551,7 @@ object TrainingData {
   // corpus is shingled once per session, not once per query.
   def splitLeakageQ(spark: SparkSession, dir: String): DataFrame = {
     val corpus = nearDupCorpus(spark, dir)
-    val sigs = sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir))
-    val pairs = Dedup.nearDupPairsFromSigs(spark, sigs, threshold = 0.5)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     val bucket = TextFns.hash32(col("text")) % 100
     val split = corpus.select(col("doc_id"),
       when(bucket < 80, "train").when(bucket < 90, "valid")
@@ -1632,9 +1590,7 @@ object TrainingData {
   // pair feed reads the maintained signature table, not corpus text.
   def trianglesQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.triangleCounts(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.5),
+      nearDupPairs(spark, dir, threshold = 0.5),
       "doc_a", "doc_b")
   val trianglesSql: String =
     s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
@@ -1650,6 +1606,16 @@ object TrainingData {
        |n AS (SELECT unnest([x, y, z]) AS node FROM t)
        |SELECT node, count(*) AS n_tri FROM n GROUP BY 1""".stripMargin
 
+  /** The planted bridge delta appended to the near-dup graph: two new
+    * edges per anchor (`doc_id % 10 = 0`), k—(k+1) and k—(k+1000001). */
+  private def bridgeDelta(spark: SparkSession, dir: String): DataFrame = {
+    val anchors = docs(spark, dir).where(col("doc_id") % 10 === 0)
+    anchors
+      .select(col("doc_id").as("doc_a"), (col("doc_id") + 1L).as("doc_b"))
+      .union(anchors.select(col("doc_id").as("doc_a"),
+        (col("doc_id") + 1000001L).as("doc_b")))
+  }
+
   // ----------------------------------- incremental triangle counts
   // The incremental-maintenance story extended to graph analytics:
   // stored per-node triangle counts folded with ONLY the triangles the
@@ -1658,17 +1624,10 @@ object TrainingData {
   // Oracle computes from scratch over the combined edge set; the
   // incremental path must match it exactly.
   def trianglesIncrQ(spark: SparkSession, dir: String): DataFrame = {
-    val oldPairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.5)
-    // two new edges per anchor: k—(k+1) and k—(k+1's twin); where the
-    // old twin edge (k+1)—(k+1000001) exists, the append closes a
-    // triangle with TWO new sides — exercising the delta dedup
-    val anchors = docs(spark, dir).where(col("doc_id") % 10 === 0)
-    val bridges = anchors
-      .select(col("doc_id").as("doc_a"), (col("doc_id") + 1L).as("doc_b"))
-      .union(anchors.select(col("doc_id").as("doc_a"),
-        (col("doc_id") + 1000001L).as("doc_b")))
+    val oldPairs = nearDupPairs(spark, dir, threshold = 0.5)
+    // where the old twin edge (k+1)—(k+1000001) exists, the append
+    // closes a triangle with TWO new sides — exercising the delta dedup
+    val bridges = bridgeDelta(spark, dir)
     graft.operators.Graph.triangleCountsIncremental(
       graft.operators.Graph.triangleCounts(oldPairs, "doc_a", "doc_b"),
       oldPairs, bridges, "doc_a", "doc_b")
@@ -1704,14 +1663,8 @@ object TrainingData {
   // combined edge set; the incremental path must match bit-exactly
   // (integer folds feeding an integer division).
   def clusteringIncrQ(spark: SparkSession, dir: String): DataFrame = {
-    val oldPairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.5)
-    val anchors = docs(spark, dir).where(col("doc_id") % 10 === 0)
-    val bridges = anchors
-      .select(col("doc_id").as("doc_a"), (col("doc_id") + 1L).as("doc_b"))
-      .union(anchors.select(col("doc_id").as("doc_a"),
-        (col("doc_id") + 1000001L).as("doc_b")))
+    val oldPairs = nearDupPairs(spark, dir, threshold = 0.5)
+    val bridges = bridgeDelta(spark, dir)
     val countsOld =
       graft.operators.Graph.triangleCounts(oldPairs, "doc_a", "doc_b")
     val degOld = graft.operators.Graph
@@ -1763,9 +1716,7 @@ object TrainingData {
   // floor/truncate differently across engines, so they never divide
   // here).
   def modularityQ(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.5)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     val assign = nearDupCorpus(spark, dir).select(col("doc_id"))
       .join(docs(spark, dir)
         .select(col("doc_id").as("orig_id"), col("source")),
@@ -1815,9 +1766,7 @@ object TrainingData {
   // the 0.5 graph is near-1:1 twin pairs with almost no open wedges.
   def linkPredictQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.linkPrediction(
-        Dedup.nearDupPairsFromSigs(spark,
-          sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-          threshold = 0.2),
+        nearDupPairs(spark, dir, threshold = 0.2),
         "doc_a", "doc_b")
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
         col("n_common"), col("ra_u"))
@@ -1852,9 +1801,7 @@ object TrainingData {
   // self-join, but degrees (and RA scores) stay TRUE degrees.
   def linkPredictGuardedQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.linkPrediction(
-        Dedup.nearDupPairsFromSigs(spark,
-          sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-          threshold = 0.2),
+        nearDupPairs(spark, dir, threshold = 0.2),
         "doc_a", "doc_b", maxDegree = 6L)
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
         col("n_common"), col("ra_u"))
@@ -1887,9 +1834,7 @@ object TrainingData {
   // (EntityResolution.purgedBlocks contract).
   def linkHubsQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.linkPredictionDroppedHubs(
-        Dedup.nearDupPairsFromSigs(spark,
-          sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-          threshold = 0.2),
+        nearDupPairs(spark, dir, threshold = 0.2),
         "doc_a", "doc_b", maxDegree = 6L)
       .select(col("v").as("node"), col("d").as("degree"))
   val linkHubsSql: String =
@@ -1915,9 +1860,7 @@ object TrainingData {
   // set, engine-independent) and the identical floor division.
   def clusteringCoefQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.clusteringCoefficients(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.2),
+      nearDupPairs(spark, dir, threshold = 0.2),
       "doc_a", "doc_b")
   val clusteringCoefSql: String =
     s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
@@ -1952,9 +1895,7 @@ object TrainingData {
   // neighborhood agrees. The k-truss building block.
   def edgeSupportQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.edgeSupport(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.2),
+      nearDupPairs(spark, dir, threshold = 0.2),
       "doc_a", "doc_b")
   val edgeSupportSql: String =
     s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
@@ -1987,9 +1928,7 @@ object TrainingData {
   // engines, so any sufficient round count agrees.
   def ktrussQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.kTruss(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.2),
+      nearDupPairs(spark, dir, threshold = 0.2),
       "doc_a", "doc_b", k = 3, maxRounds = 5)
   /** One unrolled triangle-support round (tri + sup CTEs) over `src`
     * — shared by the truss oracle family. */
@@ -2040,9 +1979,7 @@ object TrainingData {
   // ⟺ |e5| = |e4| on the same unrolled CTEs.
   def ktrussWitnessQ(spark: SparkSession, dir: String): DataFrame = {
     val res = graft.operators.Graph.kTrussWitnessed(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.2),
+      nearDupPairs(spark, dir, threshold = 0.2),
       "doc_a", "doc_b", k = 3, maxRounds = 5)
     res.edges.agg(count(lit(1)).as("n_edges"))
       .select(col("n_edges"), lit(res.converged).as("converged"))
@@ -2061,14 +1998,8 @@ object TrainingData {
   // Oracle computes edge support from scratch over the combined edge
   // set; the fold must match bit-exactly.
   def edgeSupportIncrQ(spark: SparkSession, dir: String): DataFrame = {
-    val oldPairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.5)
-    val anchors = docs(spark, dir).where(col("doc_id") % 10 === 0)
-    val bridges = anchors
-      .select(col("doc_id").as("doc_a"), (col("doc_id") + 1L).as("doc_b"))
-      .union(anchors.select(col("doc_id").as("doc_a"),
-        (col("doc_id") + 1000001L).as("doc_b")))
+    val oldPairs = nearDupPairs(spark, dir, threshold = 0.5)
+    val bridges = bridgeDelta(spark, dir)
     graft.operators.Graph.edgeSupportIncremental(
       graft.operators.Graph.edgeSupport(oldPairs, "doc_a", "doc_b"),
       oldPairs, bridges, "doc_a", "doc_b")
@@ -2110,9 +2041,7 @@ object TrainingData {
   // of the loose screen's tail the certified backbone discards before
   // trusting CC merges through it.
   def trussPrecisionQ(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.2)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.2)
     val truss = graft.operators.Graph.kTruss(pairs, "doc_a", "doc_b",
         k = 3, maxRounds = 5)
       .select(col("a"), col("b"), lit(1L).as("in_truss"))
@@ -2173,9 +2102,7 @@ object TrainingData {
   // exactly — the PageRank device applied to community detection.
   def labelPropQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.labelPropagation(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.2),
+      nearDupPairs(spark, dir, threshold = 0.2),
       "doc_a", "doc_b", iters = 4)
   val labelPropSql: String = {
     def round(k: Int) =
@@ -2351,9 +2278,7 @@ object TrainingData {
   // table (sig-table results are hash-equal to from-text, SigTableSpec).
   def pageRankQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.pageRank(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.5),
+      nearDupPairs(spark, dir, threshold = 0.5),
       "doc_a", "doc_b", iters = 10)
   val pageRankSql: String = {
     val rounds = (1 to 10).map { i =>
@@ -2394,14 +2319,8 @@ object TrainingData {
     * 10 cold rounds over the near-dup graph, bridge-edge delta. */
   private def pageRankWarmInputs(spark: SparkSession,
                                  dir: String): (DataFrame, DataFrame) = {
-    val oldPairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.5)
-    val anchors = docs(spark, dir).where(col("doc_id") % 10 === 0)
-    val bridges = anchors
-      .select(col("doc_id").as("doc_a"), (col("doc_id") + 1L).as("doc_b"))
-      .union(anchors.select(col("doc_id").as("doc_a"),
-        (col("doc_id") + 1000001L).as("doc_b")))
+    val oldPairs = nearDupPairs(spark, dir, threshold = 0.5)
+    val bridges = bridgeDelta(spark, dir)
     val oldRanks = graft.operators.Graph.pageRank(
       oldPairs, "doc_a", "doc_b", iters = 10)
     (oldPairs.select(col("doc_a"), col("doc_b")).union(bridges),
@@ -2495,9 +2414,7 @@ object TrainingData {
     val seeds = nearDupCorpus(spark, dir)
       .select(col("doc_id")).where(col("doc_id") % 1000000L < 10)
     graft.operators.Graph.personalizedPageRank(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.5),
+      nearDupPairs(spark, dir, threshold = 0.5),
       "doc_a", "doc_b", seeds, "doc_id", iters = 6)
   }
   val pprLeakageSql: String = {
@@ -2543,9 +2460,7 @@ object TrainingData {
   // in high buckets before any clustering runs. Pair feed: the
   // maintained signature table; two aggregations, no pair-pair work.
   def degreeDistQ(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.5)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     val deg = pairs
       .select(explode(array(col("doc_a"), col("doc_b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
@@ -2578,9 +2493,7 @@ object TrainingData {
   // maintained signature table, like the rest of the graph family.
   def hitsQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.hits(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.5),
+      nearDupPairs(spark, dir, threshold = 0.5),
       "doc_a", "doc_b", iters = 4)
   val hitsSql: String = {
     val rounds = (1 to 4).map { i =>
@@ -2626,9 +2539,7 @@ object TrainingData {
   // the maintained signature table, like the rest of the graph family.
   def kcoreQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.kCore(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.5),
+      nearDupPairs(spark, dir, threshold = 0.5),
       "doc_a", "doc_b", k = 2, maxRounds = 8)
   /** The unrolled 8-round k=2 core peel over the tight (0.5) pair
     * graph, ending in the directed adjacency `e8` — shared by the
@@ -2671,9 +2582,7 @@ object TrainingData {
   // the witness is computed over the SAME subgraph the core reports.
   def kcoreWitnessQ(spark: SparkSession, dir: String): DataFrame = {
     val res = graft.operators.Graph.kCoreWitnessed(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-        threshold = 0.5),
+      nearDupPairs(spark, dir, threshold = 0.5),
       "doc_a", "doc_b", k = 2, maxRounds = 8)
     res.nodes
       .agg(count(lit(1)).as("n_nodes"),
@@ -2822,6 +2731,16 @@ object TrainingData {
       path
     }
 
+  /** The maintained signature table of [[nearDupCorpus]]. */
+  private def nearDupSigs(spark: SparkSession, dir: String): String =
+    sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir))
+
+  /** Verified near-dup pairs of [[nearDupCorpus]] at `threshold`, read
+    * from [[nearDupSigs]]. */
+  private def nearDupPairs(spark: SparkSession, dir: String,
+                           threshold: Double): DataFrame =
+    Dedup.nearDupPairsFromSigs(spark, nearDupSigs(spark, dir), threshold)
+
   // ------------------------------------------- near-dup clustering
   // Connected components over the verified near-dup pair graph, each doc
   // labeled with its cluster representative (the component's min doc_id)
@@ -2833,8 +2752,7 @@ object TrainingData {
   // the corpus text — identical results (SigTableSpec), and the shape a
   // re-clustering run takes at 100 TB.
   def dedupClustersQ(spark: SparkSession, dir: String): DataFrame = {
-    val sigs = sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir))
-    val pairs = Dedup.nearDupPairsFromSigs(spark, sigs, threshold = 0.5)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     Dedup.connectedComponents(pairs, "doc_a", "doc_b")
   }
   /** Shared closure CTE prefix ending in `reps(doc_id, cluster_rep)` —
@@ -2877,8 +2795,7 @@ object TrainingData {
           (least(TextFns.tokenCount(t), lit(200L)).cast("double") / 200.0d),
         4).as("score"))
     val clusters = Dedup.connectedComponents(
-      Dedup.nearDupPairsFromSigs(spark,
-        sigTableFor(spark, dir, "neardup", corpus), threshold = 0.5),
+      nearDupPairs(spark, dir, threshold = 0.5),
       "doc_a", "doc_b")
     scored.join(clusters, Seq("doc_id"), "left")
       .select(
@@ -2923,9 +2840,7 @@ object TrainingData {
   // to their source via doc_id mod 1e6.
   def dupInflationQ(spark: SparkSession, dir: String): DataFrame = {
     val corpus = nearDupCorpus(spark, dir)
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.5)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     val clusters = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
     val tok = corpus.select(col("doc_id"),
       TextFns.tokenCount(col("text")).as("n_tok"))
@@ -2980,9 +2895,7 @@ object TrainingData {
   // join, one aggregation.
   def dupQualityQ(spark: SparkSession, dir: String): DataFrame = {
     val corpus = nearDupCorpus(spark, dir)
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.5)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     val clusters = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
     val scored = corpus.select(col("doc_id"),
       expr("""cast(
@@ -3048,9 +2961,7 @@ object TrainingData {
   // x_dedup_clusters; one size aggregation and two id-keyed joins on
   // top. Integer division only — engine-identical weights.
   def dedupSoftQ(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.nearDupPairsFromSigs(spark,
-      sigTableFor(spark, dir, "neardup", nearDupCorpus(spark, dir)),
-      threshold = 0.5)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     val clusters = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
     val sizes = clusters.groupBy(col("cluster_rep"))
       .agg(count(lit(1)).as("cluster_size"))
@@ -3899,6 +3810,20 @@ object TrainingData {
       |FROM documents""".stripMargin
 
   // ------------------------------------------------- video frame sampling
+  /** The planted media column (doc_id, media): `payload(doc_id, text)`
+    * per document, built per partition with ImageIO's disk cache off. */
+  private def syntheticMedia(spark: SparkSession, dir: String)(
+      payload: (Long, String) => Array[Byte]): DataFrame = {
+    import spark.implicits._
+    docs(spark, dir)
+      .select(col("doc_id"), col("text"))
+      .as[(Long, String)]
+      .mapPartitions { it =>
+        javax.imageio.ImageIO.setUseCache(false)
+        it.map { case (id, text) => (id, payload(id, text)) }
+      }.toDF("doc_id", "media")
+  }
+
   // ---------------------------------------------- multimodal REAL decode
   // Mixed media column across TWO real formats plus the failure mode a
   // crawl always carries: doc_id%4==0 → REAL PNG (planted dims
@@ -4000,30 +3925,22 @@ object TrainingData {
   // (has_exif, no orientation tag — probed: MM order, no 0x0112/0x0132),
   // and plain text (absent). The oracle replays the id arithmetic.
   def multimodalExifQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     def dtOf(id: Long): String =
       f"2026:${id % 12 + 1}%02d:${id % 28 + 1}%02d " +
         f"${id % 24}%02d:${id % 60}%02d:${id * 7 % 60}%02d"
-    val media = docs(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map { case (id, text) =>
-          val payload = (id % 5) match {
-            case 0 => Multimodal.syntheticExifJpeg(3, 3, id,
-              (id % 8).toInt + 1, dtOf(id), bigEndian = false)
-            case 1 => Multimodal.syntheticExifJpeg(3, 3, id,
-              (id % 8).toInt + 1, dtOf(id), bigEndian = true)
-            case 2 => Multimodal.truncatedExifJpeg(id,
-              (id % 8).toInt + 1, dtOf(id))
-            case 3 => Multimodal.syntheticImage(
-              (id % 9).toInt + 1, (id % 6).toInt + 1, id, "tiff")
-            case _ => text.getBytes("UTF-8")
-          }
-          (id, payload)
-        }
-      }.toDF("doc_id", "media")
+    val media = syntheticMedia(spark, dir) { (id, text) =>
+      (id % 5) match {
+        case 0 => Multimodal.syntheticExifJpeg(3, 3, id,
+          (id % 8).toInt + 1, dtOf(id), bigEndian = false)
+        case 1 => Multimodal.syntheticExifJpeg(3, 3, id,
+          (id % 8).toInt + 1, dtOf(id), bigEndian = true)
+        case 2 => Multimodal.truncatedExifJpeg(id,
+          (id % 8).toInt + 1, dtOf(id))
+        case 3 => Multimodal.syntheticImage(
+          (id % 9).toInt + 1, (id % 6).toInt + 1, id, "tiff")
+        case _ => text.getBytes("UTF-8")
+      }
+    }
     Multimodal.extractExif(media)
   }
   val multimodalExifSql: String =
@@ -4056,35 +3973,27 @@ object TrainingData {
   // null coordinates. Image-borne GPS is the PII axis the text-scrub
   // lane (x_pii_scrub) structurally cannot reach.
   def multimodalGpsQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     def dtOf(id: Long): String =
       f"2026:${id % 12 + 1}%02d:${id % 28 + 1}%02d " +
         f"${id % 24}%02d:${id % 60}%02d:${id * 7 % 60}%02d"
-    val media = docs(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map { case (id, text) =>
-          def gps(big: Boolean, corrupt: Boolean) =
-            Multimodal.syntheticExifGpsJpeg(3, 3, id,
-              (id % 8).toInt + 1, dtOf(id), big,
-              (id % 90).toInt, (id % 60).toInt,
-              (id * 7 % 6000).toInt, 100, id % 2 == 0,
-              (id % 180).toInt, (id * 3 % 60).toInt,
-              (id * 11 % 6000).toInt, 100, id % 3 == 0,
-              corruptGps = corrupt)
-          val payload = (id % 5) match {
-            case 0 => gps(big = false, corrupt = false)
-            case 1 => gps(big = true, corrupt = false)
-            case 2 => gps(big = false, corrupt = true)
-            case 3 => Multimodal.syntheticExifJpeg(3, 3, id,
-              (id % 8).toInt + 1, dtOf(id), bigEndian = false)
-            case _ => text.getBytes("UTF-8")
-          }
-          (id, payload)
-        }
-      }.toDF("doc_id", "media")
+    val media = syntheticMedia(spark, dir) { (id, text) =>
+      def gps(big: Boolean, corrupt: Boolean) =
+        Multimodal.syntheticExifGpsJpeg(3, 3, id,
+          (id % 8).toInt + 1, dtOf(id), big,
+          (id % 90).toInt, (id % 60).toInt,
+          (id * 7 % 6000).toInt, 100, id % 2 == 0,
+          (id % 180).toInt, (id * 3 % 60).toInt,
+          (id * 11 % 6000).toInt, 100, id % 3 == 0,
+          corruptGps = corrupt)
+      (id % 5) match {
+        case 0 => gps(big = false, corrupt = false)
+        case 1 => gps(big = true, corrupt = false)
+        case 2 => gps(big = false, corrupt = true)
+        case 3 => Multimodal.syntheticExifJpeg(3, 3, id,
+          (id % 8).toInt + 1, dtOf(id), bigEndian = false)
+        case _ => text.getBytes("UTF-8")
+      }
+    }
     Multimodal.extractExif(media)
   }
   val multimodalGpsSql: String =
@@ -4126,24 +4035,16 @@ object TrainingData {
   // Corrupt claims quarantine; text rows take the digest-cycled stub
   // whose byte-sum replays from md5(text).
   def resizeRealQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val media = docs(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map { case (id, text) =>
-          val payload = (id % 4) match {
-            case 0 => Multimodal.syntheticImage(
-              (id % 13).toInt + 1, (id % 7).toInt + 1, id, "png")
-            case 1 => Multimodal.syntheticImage(
-              (id % 11).toInt + 1, (id % 5).toInt + 1, id, "bmp")
-            case 2 => Multimodal.corruptImagePayload(id)
-            case _ => text.getBytes("UTF-8")
-          }
-          (id, payload)
-        }
-      }.toDF("doc_id", "media")
+    val media = syntheticMedia(spark, dir) { (id, text) =>
+      (id % 4) match {
+        case 0 => Multimodal.syntheticImage(
+          (id % 13).toInt + 1, (id % 7).toInt + 1, id, "png")
+        case 1 => Multimodal.syntheticImage(
+          (id % 11).toInt + 1, (id % 5).toInt + 1, id, "bmp")
+        case 2 => Multimodal.corruptImagePayload(id)
+        case _ => text.getBytes("UTF-8")
+      }
+    }
     Multimodal.resizeReal(media, 4, 3)
       .select(col("doc_id"), col("path"), col("out_w"), col("out_h"),
         col("pix_sum"))
@@ -4174,6 +4075,18 @@ object TrainingData {
        |FROM documents""".stripMargin
   }
 
+  /** The planted audio column: a REAL PCM WAV every 3rd doc, a corrupt
+    * RIFF every 3rd+1, text bytes otherwise. */
+  private def audioMedia(spark: SparkSession, dir: String): DataFrame =
+    syntheticMedia(spark, dir) { (id, text) =>
+      (id % 3) match {
+        case 0 => Multimodal.syntheticWav((id % 400).toInt + 100,
+          8000 + (id % 5).toInt * 1000, id)
+        case 1 => Multimodal.corruptAudioPayload(id)
+        case _ => text.getBytes("UTF-8")
+      }
+    }
+
   // ------------------------------------------- multimodal REAL audio
   // The audio twin of the real image decode: every 3rd doc carries a
   // REAL PCM WAV payload (planted sample count doc_id%400+100 and rate
@@ -4183,24 +4096,8 @@ object TrainingData {
   // rate / sample count / duration come from the DECODER; the oracle
   // checks them against the planted truth. Compressed codecs (MP3/AAC)
   // remain honestly stubbed — no decoder ships in the container.
-  def multimodalAudioQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val media = docs(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val payload = (id % 3) match {
-            case 0 => Multimodal.syntheticWav((id % 400).toInt + 100,
-              8000 + (id % 5).toInt * 1000, id)
-            case 1 => Multimodal.corruptAudioPayload(id)
-            case _ => text.getBytes("UTF-8")
-          }
-          (id, payload)
-        }
-      }.toDF("doc_id", "media")
-    Multimodal.extractAudioMeta(media)
-  }
+  def multimodalAudioQ(spark: SparkSession, dir: String): DataFrame =
+    Multimodal.extractAudioMeta(audioMedia(spark, dir))
   val multimodalAudioSql: String =
     """SELECT doc_id,
       |  doc_id % 3 = 0 AS is_audio,
@@ -4225,24 +4122,8 @@ object TrainingData {
   // which SQL reproduces with // 65536 and % 65536 (all operands
   // nonnegative). Corrupt-RIFF and text rows pass through as nulls —
   // the quarantine DECISION stays with extractAudioMeta.
-  def audioFeaturesQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val media = docs(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val payload = (id % 3) match {
-            case 0 => Multimodal.syntheticWav((id % 400).toInt + 100,
-              8000 + (id % 5).toInt * 1000, id)
-            case 1 => Multimodal.corruptAudioPayload(id)
-            case _ => text.getBytes("UTF-8")
-          }
-          (id, payload)
-        }
-      }.toDF("doc_id", "media")
-    Multimodal.extractAudioFeatures(media)
-  }
+  def audioFeaturesQ(spark: SparkSession, dir: String): DataFrame =
+    Multimodal.extractAudioFeatures(audioMedia(spark, dir))
   val audioFeaturesSql: String =
     """WITH s AS (
       |  SELECT doc_id,
@@ -4277,23 +4158,15 @@ object TrainingData {
   // resizeReal contract extended from sampled pixels to whole-raster
   // aggregates. Text rows pass through as nulls.
   def imageFeaturesQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val media = docs(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map { case (id, text) =>
-          val payload = (id % 3) match {
-            case 0 => Multimodal.syntheticImage((id % 6).toInt + 2,
-              (id % 4).toInt + 2, id, "png")
-            case 1 => Multimodal.syntheticImage((id % 6).toInt + 2,
-              (id % 4).toInt + 2, id, "bmp")
-            case _ => text.getBytes("UTF-8")
-          }
-          (id, payload)
-        }
-      }.toDF("doc_id", "media")
+    val media = syntheticMedia(spark, dir) { (id, text) =>
+      (id % 3) match {
+        case 0 => Multimodal.syntheticImage((id % 6).toInt + 2,
+          (id % 4).toInt + 2, id, "png")
+        case 1 => Multimodal.syntheticImage((id % 6).toInt + 2,
+          (id % 4).toInt + 2, id, "bmp")
+        case _ => text.getBytes("UTF-8")
+      }
+    }
     Multimodal.extractImageFeatures(media)
   }
   val imageFeaturesSql: String =
@@ -4388,21 +4261,12 @@ object TrainingData {
   // 2nd frame of each payload. The stub variant (x_frame_sample) keys
   // off arithmetic frames — this one's counts come from the container.
   def frameSampleRealQ(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val media = docs(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        javax.imageio.ImageIO.setUseCache(false)
-        it.map { case (id, text) =>
-          val payload =
-            if (id % 2 == 0)
-              Multimodal.syntheticAnimatedGif((id % 5).toInt + 1,
-                (id % 3).toInt + 1, (id % 6).toInt + 2, id)
-            else text.getBytes("UTF-8")
-          (id, payload)
-        }
-      }.toDF("doc_id", "media")
+    val media = syntheticMedia(spark, dir) { (id, text) =>
+      if (id % 2 == 0)
+        Multimodal.syntheticAnimatedGif((id % 5).toInt + 1,
+          (id % 3).toInt + 1, (id % 6).toInt + 2, id)
+      else text.getBytes("UTF-8")
+    }
     Multimodal.sampleFramesDecoded(media, 2)
   }
   val frameSampleRealSql: String =
@@ -5740,8 +5604,7 @@ object TrainingData {
   // work after the clustering, nothing rescanned.
   def dedupBestKeeperQ(spark: SparkSession, dir: String): DataFrame = {
     val corpus = nearDupCorpus(spark, dir)
-    val sigs = sigTableFor(spark, dir, "neardup", corpus)
-    val pairs = Dedup.nearDupPairsFromSigs(spark, sigs, threshold = 0.5)
+    val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     val clusters = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
     val lens = corpus.select(col("doc_id"),
       length(col("text")).cast("long").as("len"))
@@ -5868,7 +5731,8 @@ object TrainingData {
     * READ-ONLY to the stream (each run replays it from a fresh
     * checkpoint), so it too is built once per session, under
     * `feedTag`. `curate` gets the stream and the run root's `path`
-    * (`sigs`, `fps`, `admitted`); the admitted ids are returned.
+    * (`sigs`, `fps`, `admitted`). The admitted ids come back as a
+    * local relation, so the run root is deleted before the call returns.
     */
   private def curateLane(spark: SparkSession, dir: String, feedTag: String,
                          winnow: Boolean, batches: Seq[DataFrame])(
@@ -5887,26 +5751,30 @@ object TrainingData {
         Corpus.writeWinnowTable(d, "text", "doc_id", p, k = 5, window = 4)
         p
       })
+    val feedDir = Fixtures.cached(feedTag, dir)(Fixtures.feed(_, batches))
     val root = graft.Scratch.dir("curate")
     def path(name: String) = new java.io.File(root, name).toString
-    (("sigs" -> baseSigs) +: baseFps).foreach { case (name, base) =>
-      val from = java.nio.file.Paths.get(base)
-      val to = java.nio.file.Paths.get(path(name))
-      // recursive: the winnow table carries its df-state sidecar in an
-      // underscore subdirectory, and a shallow copy would strand it
-      val files = java.nio.file.Files.walk(from)
-      try files.forEach { f =>
-        val dst = to.resolve(from.relativize(f).toString)
-        if (java.nio.file.Files.isDirectory(f))
-          java.nio.file.Files.createDirectories(dst)
-        else java.nio.file.Files.copy(f, dst)
-        ()
-      } finally files.close()
-    }
-    val feedDir = Fixtures.cached(feedTag, dir)(Fixtures.feed(_, batches))
-    curate(spark.readStream.schema(batches.head.schema)
-      .option("maxFilesPerTrigger", 1).parquet(feedDir), path)
-    spark.read.parquet(path("admitted")).select(col("doc_id"))
+    try {
+      (("sigs" -> baseSigs) +: baseFps).foreach { case (name, base) =>
+        val from = java.nio.file.Paths.get(base)
+        val to = java.nio.file.Paths.get(path(name))
+        // recursive: the winnow table carries its df-state sidecar in an
+        // underscore subdirectory, and a shallow copy would strand it
+        val files = java.nio.file.Files.walk(from)
+        try files.forEach { f =>
+          val dst = to.resolve(from.relativize(f).toString)
+          if (java.nio.file.Files.isDirectory(f))
+            java.nio.file.Files.createDirectories(dst)
+          else java.nio.file.Files.copy(f, dst)
+          ()
+        } finally files.close()
+      }
+      curate(spark.readStream.schema(batches.head.schema)
+        .option("maxFilesPerTrigger", 1).parquet(feedDir), path)
+      val admitted = spark.read.parquet(path("admitted")).select(col("doc_id"))
+      spark.createDataFrame(
+        java.util.Arrays.asList(admitted.collect(): _*), admitted.schema)
+    } finally graft.Scratch.delete(root)
   }
   val streamCurateSql: String = {
     val chain = "md5(text) || md5(text || 'a') || md5(text || 'b')"
@@ -7033,6 +6901,20 @@ object TrainingData {
        |WHERE (pr.shared * 10000) // least(na.n, nb.n) >= 8000""".stripMargin
   }
 
+  /** Winnowing fingerprints of the planted quote batch: chars 21-180
+    * of every 7th document, ids +8e6. Built once per (session, sf-dir). */
+  private def quoteBatchFps(spark: SparkSession, dir: String): String =
+    Fixtures.cached("winnow-fps-contain-batch", dir) { root =>
+      val path = new java.io.File(root, "fps").toString
+      val quotes = docs(spark, dir).where(col("doc_id") % 7 === 0)
+        .select((col("doc_id") + 8000000L).as("doc_id"),
+          expr("substring(text, 21, 160)").as("text"))
+      graft.operators.Corpus
+        .winnowingFingerprints(quotes, "text", "doc_id", k = 5, window = 4)
+        .write.mode("overwrite").parquet(path)
+      path
+    }
+
   // -------------------------- incremental winnowing containment screen
   // The winnowing containment screen MAINTAINED: a batch of planted
   // tiny quotes (substr(text, 21, 160), ids +8e6, every 7th doc)
@@ -7047,16 +6929,7 @@ object TrainingData {
   // — so the output equals the full screen filtered to batch pairs,
   // which is what the oracle computes.
   def containmentWinnowIncrQ(spark: SparkSession, dir: String): DataFrame = {
-    val batchFps = Fixtures.cached("winnow-fps-contain-batch", dir) { root =>
-      val path = new java.io.File(root, "fps").toString
-      val quotes = docs(spark, dir).where(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 8000000L).as("doc_id"),
-          expr("substring(text, 21, 160)").as("text"))
-      graft.operators.Corpus
-        .winnowingFingerprints(quotes, "text", "doc_id", k = 5, window = 4)
-        .write.mode("overwrite").parquet(path)
-      path
-    }
+    val batchFps = quoteBatchFps(spark, dir)
     graft.operators.Corpus.winnowingContainment(
         spark.read.parquet(winnowTableFor(spark, dir), batchFps),
         maxDf = 50, minContainmentBp = 8000L)
@@ -7107,16 +6980,7 @@ object TrainingData {
   // only skips files whose key envelope misses every probe, and each
   // pruned read feeds an equi-semi-join on that key.
   def quoteScreenPrunedQ(spark: SparkSession, dir: String): DataFrame = {
-    val batchFps = Fixtures.cached("winnow-fps-contain-batch", dir) { root =>
-      val path = new java.io.File(root, "fps").toString
-      val quotes = docs(spark, dir).where(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 8000000L).as("doc_id"),
-          expr("substring(text, 21, 160)").as("text"))
-      graft.operators.Corpus
-        .winnowingFingerprints(quotes, "text", "doc_id", k = 5, window = 4)
-        .write.mode("overwrite").parquet(path)
-      path
-    }
+    val batchFps = quoteBatchFps(spark, dir)
     // the fingerprint relation's id column is already named "id"
     // (the winnowingFingerprints output contract)
     graft.operators.Corpus.winnowingContainmentScreen(
@@ -7160,16 +7024,7 @@ object TrainingData {
   // fixture appends a batch to a copied table first, so the compaction
   // genuinely folds multiple generations.
   def quoteScreenCompactedQ(spark: SparkSession, dir: String): DataFrame = {
-    val batchFps = Fixtures.cached("winnow-fps-contain-batch", dir) { root =>
-      val path = new java.io.File(root, "fps").toString
-      val quotes = docs(spark, dir).where(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 8000000L).as("doc_id"),
-          expr("substring(text, 21, 160)").as("text"))
-      graft.operators.Corpus
-        .winnowingFingerprints(quotes, "text", "doc_id", k = 5, window = 4)
-        .write.mode("overwrite").parquet(path)
-      path
-    }
+    val batchFps = quoteBatchFps(spark, dir)
     // two-generation maintained table (base write + one append), then
     // compacted - built once per (session, sf-dir)
     val compacted = Fixtures.cached("winnow-table-compacted", dir) { root =>
@@ -10487,471 +10342,241 @@ object TrainingData {
          |       THEN 1 ELSE -1 END AS BIGINT) AS predicted
          |FROM f, r$PerceptronRounds w""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_perceptron_train" -> (perceptronTrainQ _),
-    "x_perceptron_screen" -> (perceptronScreenQ _),
-    "x_token_edit" -> (tokenEditQ _),
-    "x_wordpiece_train" -> (wordpieceTrainQ _),
-    "x_wordpiece_apply" -> (wordpieceApplyQ _),
-    "x_line_dedup_roi" -> (lineDedupRoiQ _),
-    "x_line_dedup_incr" -> (lineDedupIncrQ _),
-    "x_kfold" -> (kfoldQ _),
-    "x_source_gini" -> (sourceGiniQ _),
-    "x_c4_clean" -> (c4CleanQ _),
-    "x_line_dedup" -> (lineDedupQ _),
-    "x_repetition" -> (repetitionQ _),
-    "x_novelty" -> (noveltyQ _),
-    "x_frame_sample" -> (frameSampleQ _),
-    "x_html_strip" -> (htmlStripQ _),
-    "x_vocab_topk" -> (vocabTopKQ _),
-    "x_coverage_curve" -> (coverageCurveQ _),
-    "x_burstiness" -> (burstinessQ _),
-    "x_cooccurrence" -> (cooccurrenceQ _),
-    "x_sample_stratified" -> (sampleStratifiedQ _),
-    "x_sample_audit" -> (sampleAuditQ _),
-    "x_dedup_incremental" -> (dedupIncrementalQ _),
-    "x_neardup_incremental" -> (neardupIncrementalQ _),
-    "x_lang_stats" -> (langStatsQ _),
-    "x_lang_diversity" -> (langDiversityQ _),
-    "x_decontaminate" -> (decontaminateQ _),
-    "x_edit_distance" -> (editDistanceQ _),
-    "x_dedup_exact" -> (dedupExactQ _),
-    "x_text_stats" -> (textStatsQ _),
-    "x_length_histogram" -> (lengthHistogramQ _),
-    "x_lang_id" -> (langIdQ _),
-    "x_lang_confusion" -> (langConfusionQ _),
-    "x_fingerprint" -> (fingerprintQ _),
-    "x_simhash" -> (simhashQ _),
-    "x_ngram_jaccard" -> (ngramJaccardQ _),
-    "x_minhash_dedup" -> (minhashDedupQ _),
-    "x_cosine_topk" -> (cosineTopKQ _),
-    "x_embedding_neardup" -> (embeddingNearDupQ _),
-    "x_neardup_lsh" -> (neardupLshQ _),
-    "x_sessionize" -> (sessionizeQ _),
-    "x_interval_merge" -> (intervalMergeQ _),
-    "x_k_anonymity" -> (kAnonymityQ _),
-    "x_l_diversity" -> (lDiversityQ _),
-    "x_t_closeness" -> (tClosenessQ _),
-    "x_dp_release" -> (dpReleaseQ _),
-    "x_seasonality" -> (seasonalityQ _),
-    "x_rolling_anomaly" -> (rollingAnomalyQ _),
-    "x_multimodal_meta" -> (multimodalMetaQ _),
-    "x_multimodal_decode" -> (multimodalDecodeQ _),
-    "x_multimodal_tiff" -> (multimodalTiffQ _),
-    "x_multimodal_exif" -> (multimodalExifQ _),
-    "x_multimodal_gps" -> (multimodalGpsQ _),
-    "x_resize_real" -> (resizeRealQ _),
-    "x_ann_lsh" -> (annLshQ _),
-    "x_asof_join" -> (asOfJoinQ _),
-    "x_quality_filter" -> (qualityFilterQ _),
-    "x_quality_logit" -> (qualityLogitQ _),
-    "x_auc" -> (aucQ _),
-    "x_pr_curve" -> (prCurveQ _),
-    "x_gains_curve" -> (gainsCurveQ _),
-    "x_calibration_bins" -> (calibrationBinsQ _),
-    "x_bootstrap_ci" -> (bootstrapCiQ _),
-    "x_dedup_clusters" -> (dedupClustersQ _),
-    "x_dedup_report" -> (dedupReportQ _),
-    "x_dup_quality" -> (dupQualityQ _),
-    "x_dup_inflation" -> (dupInflationQ _),
-    "x_dataset_split" -> (datasetSplitQ _),
-    "x_eval_balance" -> (evalBalanceQ _),
-    "x_split_temporal" -> (splitTemporalQ _),
-    "x_tfidf" -> (tfidfQ _),
-    "x_simhash_pairs" -> (simhashPairsQ _),
-    "x_token_bpe" -> (tokenBpeQ _),
-    "x_unigram_train" -> (unigramTrainQ _),
-    "x_unigram_apply" -> (unigramApplyQ _),
-    "x_unigram_em" -> (unigramEmQ _),
-    "x_unigram_fertility" -> (unigramFertilityQ _),
-    "x_unigram_prune" -> (unigramPruneQ _),
-    "x_unigram_oov" -> (unigramOovQ _),
-    "x_unigram_oov_usage" -> (unigramOovUsageQ _),
-    "x_unigram_budget" -> (unigramBudgetQ _),
-    "x_pca_project" -> (pcaProjectQ _),
-    "x_pca_residual" -> (pcaResidualQ _),
-    "x_tok_fertility" -> (tokFertilityQ _),
-    "x_pii_scrub" -> (piiScrubQ _),
-    "x_blocklist_scan" -> (blocklistScanQ _),
-    "x_blocklist_policy" -> (blocklistPolicyQ _),
-    "x_blocklist_scrub" -> (blocklistScrubQ _),
-    "x_rouge_bleu" -> (rougeBleuQ _),
-    "x_gopher_repetition" -> (gopherRepetitionQ _),
-    "x_blocklist_fold" -> (blocklistFoldQ _),
-    "x_blocklist_fold_scrub" -> (blocklistFoldScrubQ _),
-    "x_blocklist_table" -> (blocklistTableQ _),
-    "x_rouge_l" -> (rougeLQ _),
-    "x_bleu34" -> (bleu34Q _),
-    "x_chrf" -> (chrfQ _),
-    "x_gopher_battery" -> (gopherBatteryQ _),
-    "x_pii_summary" -> (piiSummaryQ _),
-    "x_ann_ivf" -> (annIvfQ _),
-    "x_ann_pq" -> (annPqQ _),
-    "x_ann_ivf_pq" -> (annIvfPqQ _),
-    "x_ann_ivf_pq_sampled" -> (annIvfPqSampledQ _),
-    "x_ann_recall" -> (annRecallQ _),
-    "x_ann_filtered" -> (annFilteredQ _),
-    "x_dedup_drop" -> (dedupDropQ _),
-    "x_curate_e2e" -> (curateE2eQ _),
-    "x_dedup_drop_sigtable" -> (dedupDropSigQ _),
-    "x_containment" -> (containmentQ _),
-    "x_source_report" -> (sourceReportQ _),
-    "x_source_overlap" -> (sourceOverlapQ _),
-    "x_embedding_clusters" -> (embeddingClustersQ _),
-    "x_cluster_purity" -> (clusterPurityQ _),
-    "x_class_balance" -> (classBalanceQ _),
-    "x_embedding_audit" -> (embeddingAuditQ _),
-    "x_dup_spans" -> (dupSpansQ _),
-    "x_dup_longest" -> (dupLongestQ _),
-    "x_split_by_source" -> (splitBySourceQ _),
-    "x_heavy_hitters" -> (heavyHittersQ _),
-    "x_count_min" -> (countMinQ _),
-    "x_count_min_incr" -> (countMinIncrQ _),
-    "x_ann_sq8" -> (annSq8Q _),
-    "x_chunk" -> (chunkQ _),
-    "x_chunk_dedup" -> (chunkDedupQ _),
-    "x_lm_score" -> (lmScoreQ _),
-    "x_bm25" -> (bm25Q _),
-    "x_shard_export" -> (shardExportQ _),
-    "x_knn_graph" -> (knnGraphQ _),
-    "x_triangles" -> (trianglesQ _),
-    "x_triangles_incr" -> (trianglesIncrQ _),
-    "x_modularity" -> (modularityQ _),
-    "x_degree_dist" -> (degreeDistQ _),
-    "x_link_predict" -> (linkPredictQ _),
-    "x_link_predict_guarded" -> (linkPredictGuardedQ _),
-    "x_link_hubs" -> (linkHubsQ _),
-    "x_clustering_coef" -> (clusteringCoefQ _),
-    "x_containment_pairs" -> (containmentPairsQ _),
-    "x_containment_incr" -> (containmentIncrQ _),
-    "x_dedup_keep_best" -> (dedupKeepBestQ _),
-    "x_quality_dedup" -> (qualityDedupQ _),
-    "x_dedup_sweep" -> (dedupSweepQ _),
-    "x_ann_dim_sweep" -> (annDimSweepQ _),
-    "x_ann_dim_rerank" -> (annDimRerankQ _),
-    "x_clustering_incr" -> (clusteringIncrQ _),
-    "x_edge_support" -> (edgeSupportQ _),
-    "x_edge_support_incr" -> (edgeSupportIncrQ _),
-    "x_ktruss" -> (ktrussQ _),
-    "x_ktruss_witness" -> (ktrussWitnessQ _),
-    "x_truss_precision" -> (trussPrecisionQ _),
-    "x_label_prop" -> (labelPropQ _),
-    "x_neardup_verified" -> (neardupVerifiedQ _),
-    "x_screen_calibration" -> (screenCalibrationQ _),
-    "x_sig_stats" -> (sigStatsQ _),
-    "x_screen_recall" -> (screenRecallQ _),
-    "x_threshold_sweep" -> (thresholdSweepQ _),
-    "x_syndication" -> (syndicationQ _),
-    "x_neardup_bands" -> (neardupBandsQ _),
-    "x_sparse_sim" -> (sparseSimQ _),
-    "x_pagerank" -> (pageRankQ _),
-    "x_pagerank_incr" -> (pageRankIncrQ _),
-    "x_pagerank_witness" -> (pageRankWitnessQ _),
-    "x_ppr_leakage" -> (pprLeakageQ _),
-    "x_hits" -> (hitsQ _),
-    "x_kcore" -> (kcoreQ _),
-    "x_kcore_witness" -> (kcoreWitnessQ _),
-    "x_dsir_select" -> (dsirSelectQ _),
-    "x_curriculum" -> (curriculumQ _),
-    "x_ann_rerank" -> (annRerankQ _),
-    "x_rank_fusion" -> (rankFusionQ _),
-    "x_random_projection" -> (randomProjectionQ _),
-    "x_bpe_merges" -> (bpeMergesQ _),
-    "x_winnowing" -> (winnowingQ _),
-    "x_eval_proximity" -> (evalProximityQ _),
-    "x_mmr_diverse" -> (mmrDiverseQ _),
-    "p_stream_select" -> (streamSelectQ _),
-    "x_dedup_soft" -> (dedupSoftQ _),
-    "x_bpe_train" -> (bpeTrainQ _),
-    "x_audio_features" -> (audioFeaturesQ _),
-    "x_image_features" -> (imageFeaturesQ _),
-    "x_image_phash" -> (imagePhashQ _),
-    "x_winnow_pairs" -> (winnowPairsQ _),
-    "x_containment_winnow" -> (containmentWinnowQ _),
-    "x_containment_winnow_incr" -> (containmentWinnowIncrQ _),
-    "x_quote_screen_pruned" -> (quoteScreenPrunedQ _),
-    "x_quote_screen_compacted" -> (quoteScreenCompactedQ _),
-    "x_screen_overlap" -> (screenOverlapQ _),
-    "x_winnow_incremental" -> (winnowIncrementalQ _),
-    "x_bpe_apply" -> (bpeApplyQ _),
-    "x_drift" -> (driftQ _),
-    "x_url_canon" -> (urlCanonQ _),
-    "x_url_dedup" -> (urlDedupQ _),
-    "x_domain_cap" -> (domainCapQ _),
-    "x_seq_pack" -> (seqPackQ _),
-    "x_pack_report" -> (packReportQ _),
-    "x_stream_curate" -> (streamCurateQ _),
-    "x_stream_curate_quotes" -> (streamCurateQuotesQ _),
-    "x_stream_curate_policy" -> (streamCuratePolicyQ _),
-    "x_quality_quantile" -> (qualityQuantileQ _),
-    "x_ann_ivf_sq8" -> (annIvfSq8Q _),
-    "x_ann_ivf_sq8_table" -> (annIvfSq8TableQ _),
-    "x_ann_pareto" -> (annParetoQ _),
-    "x_ann_index_stats" -> (annIndexStatsQ _),
-    "x_index_drift" -> (indexDriftQ _),
-    "x_dedup_best_keeper" -> (dedupBestKeeperQ _),
-    "x_mixture_temperature" -> (mixtureTemperatureQ _),
-    "x_quota_mix" -> (quotaMixQ _),
-    "x_token_budget" -> (tokenBudgetQ _),
-    "x_er_linkage" -> (erLinkageQ _),
-    "x_er_golden" -> (erGoldenQ _),
-    "x_profile" -> (profileQ _),
-    "x_label_vote" -> (labelVoteQ _),
-    "x_weighted_sample" -> (weightedSampleQ _),
-    "x_boilerplate" -> (boilerplateQ _),
-    "x_semdedup" -> (semdedupQ _),
-    "x_dedup_clusters_incr" -> (dedupClustersIncrQ _),
-    "x_fuzzy_join" -> (fuzzyJoinQ _),
-    "x_er_block_guard" -> (erBlockGuardQ _),
-    "x_forward_fill" -> (forwardFillQ _),
-    "x_unicode_norm" -> (unicodeNormQ _),
-    "x_dedup_normalized" -> (dedupNormalizedQ _),
-    "x_oov_rate" -> (oovRateQ _),
-    "x_contrastive" -> (contrastiveQ _),
-    "x_bitext_mine" -> (bitextMineQ _),
-    "x_split_leakage" -> (splitLeakageQ _),
-    "x_multimodal_audio" -> (multimodalAudioQ _),
-    "x_frame_sample_real" -> (frameSampleRealQ _),
-    "x_ann_index_incr" -> (annIndexIncrQ _),
-    "p_stream_ann" -> (streamAnnQ _),
-    "x_quality_buckets" -> (qualityBucketsQ _),
-    "x_deflate_gate" -> (deflateGateQ _),
-    "x_er_purge_report" -> (erPurgeReportQ _),
-    "x_label_kappa" -> (labelKappaQ _))
-
-  val oracles: Map[String, String] = Map(
-    "x_repetition" -> repetitionSql,
-    "x_novelty" -> noveltySql,
-    "x_frame_sample" -> frameSampleSql,
-    "x_html_strip" -> htmlStripSql,
-    "x_vocab_topk" -> vocabTopKSql,
-    "x_coverage_curve" -> coverageCurveSql,
-    "x_burstiness" -> burstinessSql,
-    "x_cooccurrence" -> cooccurrenceSql,
-    "x_sample_stratified" -> sampleStratifiedSql,
-    "x_sample_audit" -> sampleAuditSql,
-    "x_dedup_incremental" -> dedupIncrementalSql,
-    "x_neardup_incremental" -> neardupIncrementalSql,
-    "x_lang_stats" -> langStatsSql,
-    "x_lang_diversity" -> langDiversitySql,
-    "x_decontaminate" -> decontaminateSql,
-    "x_edit_distance" -> editDistanceSql,
-    "x_dedup_exact" -> dedupExactSql,
-    "x_text_stats" -> textStatsSql,
-    "x_length_histogram" -> lengthHistogramSql,
-    "x_lang_id" -> langIdSql,
-    "x_lang_confusion" -> langConfusionSql,
-    "x_fingerprint" -> fingerprintSql,
-    "x_simhash" -> simhashSql,
-    "x_ngram_jaccard" -> ngramJaccardSql,
-    "x_minhash_dedup" -> minhashDedupSql,
-    "x_cosine_topk" -> cosineTopKSql,
-    "x_embedding_neardup" -> embeddingNearDupSql,
-    "x_neardup_lsh" -> neardupLshSql,
-    "x_sessionize" -> sessionizeSql,
-    "x_interval_merge" -> intervalMergeSql,
-    "x_k_anonymity" -> kAnonymitySql,
-    "x_l_diversity" -> lDiversitySql,
-    "x_t_closeness" -> tClosenessSql,
-    "x_dp_release" -> dpReleaseSql,
-    "x_seasonality" -> seasonalitySql,
-    "x_rolling_anomaly" -> rollingAnomalySql,
-    "x_multimodal_meta" -> multimodalMetaSql,
-    "x_multimodal_decode" -> multimodalDecodeSql,
-    "x_multimodal_tiff" -> multimodalTiffSql,
-    "x_multimodal_exif" -> multimodalExifSql,
-    "x_multimodal_gps" -> multimodalGpsSql,
-    "x_resize_real" -> resizeRealSql,
-    "x_ann_lsh" -> annLshSql,
-    "x_asof_join" -> asOfJoinSql,
-    "x_quality_filter" -> qualityFilterSql,
-    "x_quality_logit" -> qualityLogitSql,
-    "x_auc" -> aucSql,
-    "x_pr_curve" -> prCurveSql,
-    "x_gains_curve" -> gainsCurveSql,
-    "x_calibration_bins" -> calibrationBinsSql,
-    "x_bootstrap_ci" -> bootstrapCiSql,
-    "x_dedup_clusters" -> dedupClustersSql,
-    "x_dedup_report" -> dedupReportSql,
-    "x_dup_quality" -> dupQualitySql,
-    "x_dup_inflation" -> dupInflationSql,
-    "x_dataset_split" -> datasetSplitSql,
-    "x_eval_balance" -> evalBalanceSql,
-    "x_split_temporal" -> splitTemporalSql,
-    "x_tfidf" -> tfidfSql,
-    "x_simhash_pairs" -> simhashPairsSql,
-    "x_token_bpe" -> tokenBpeSql,
-    "x_unigram_train" -> unigramTrainSql,
-    "x_unigram_apply" -> unigramApplySql,
-    "x_unigram_em" -> unigramEmSql,
-    "x_unigram_fertility" -> unigramFertilitySql,
-    "x_unigram_prune" -> unigramPruneSql,
-    "x_unigram_oov" -> unigramOovSql,
-    "x_unigram_oov_usage" -> unigramOovUsageSql,
-    "x_unigram_budget" -> unigramBudgetSql,
-    "x_pca_project" -> pcaProjectSql,
-    "x_pca_residual" -> pcaResidualSql,
-    "x_tok_fertility" -> tokFertilitySql,
-    "x_pii_scrub" -> piiScrubSql,
-    "x_blocklist_scan" -> blocklistScanSql,
-    "x_blocklist_policy" -> blocklistPolicySql,
-    "x_blocklist_scrub" -> blocklistScrubSql,
-    "x_rouge_bleu" -> rougeBleuSql,
-    "x_gopher_repetition" -> gopherRepetitionSql,
-    "x_blocklist_fold" -> blocklistFoldSql,
-    "x_blocklist_fold_scrub" -> blocklistFoldScrubSql,
-    "x_blocklist_table" -> blocklistTableSql,
-    "x_rouge_l" -> rougeLSql,
-    "x_bleu34" -> bleu34Sql,
-    "x_chrf" -> chrfSql,
-    "x_token_edit" -> tokenEditSql,
-    "x_wordpiece_train" -> wordpieceTrainSql,
-    "x_wordpiece_apply" -> wordpieceApplySql,
-    "x_perceptron_train" -> perceptronTrainSql,
-    "x_perceptron_screen" -> perceptronScreenSql,
-    "x_gopher_battery" -> gopherBatterySql,
-    "x_pii_summary" -> piiSummarySql,
-    "x_ann_ivf" -> annIvfSql,
-    "x_ann_pq" -> annPqSql,
-    "x_ann_ivf_pq" -> annIvfPqSql,
-    "x_ann_ivf_pq_sampled" -> annIvfPqSampledSql,
-    "x_ann_recall" -> annRecallSql,
-    "x_ann_filtered" -> annFilteredSql,
-    "x_dedup_drop" -> dedupDropSql,
-    "x_curate_e2e" -> curateE2eSql,
+  val queries: Seq[Query] = Seq(
+    Query("x_perceptron_train", perceptronTrainQ, perceptronTrainSql),
+    Query("x_perceptron_screen", perceptronScreenQ, perceptronScreenSql),
+    Query("x_token_edit", tokenEditQ, tokenEditSql),
+    Query("x_wordpiece_train", wordpieceTrainQ, wordpieceTrainSql),
+    Query("x_wordpiece_apply", wordpieceApplyQ, wordpieceApplySql),
+    Query("x_line_dedup_roi", lineDedupRoiQ, lineDedupRoiSql),
+    Query("x_line_dedup_incr", lineDedupIncrQ, lineDedupIncrSql),
+    Query("x_kfold", kfoldQ, kfoldSql),
+    Query("x_source_gini", sourceGiniQ, sourceGiniSql),
+    Query("x_c4_clean", c4CleanQ, c4CleanSql),
+    Query("x_line_dedup", lineDedupQ, lineDedupSql),
+    Query("x_repetition", repetitionQ, repetitionSql),
+    Query("x_novelty", noveltyQ, noveltySql),
+    Query("x_frame_sample", frameSampleQ, frameSampleSql),
+    Query("x_html_strip", htmlStripQ, htmlStripSql),
+    Query("x_vocab_topk", vocabTopKQ, vocabTopKSql),
+    Query("x_coverage_curve", coverageCurveQ, coverageCurveSql),
+    Query("x_burstiness", burstinessQ, burstinessSql),
+    Query("x_cooccurrence", cooccurrenceQ, cooccurrenceSql),
+    Query("x_sample_stratified", sampleStratifiedQ, sampleStratifiedSql),
+    Query("x_sample_audit", sampleAuditQ, sampleAuditSql),
+    Query("x_dedup_incremental", dedupIncrementalQ, dedupIncrementalSql),
+    Query("x_neardup_incremental", neardupIncrementalQ, neardupIncrementalSql),
+    Query("x_lang_stats", langStatsQ, langStatsSql),
+    Query("x_lang_diversity", langDiversityQ, langDiversitySql),
+    Query("x_decontaminate", decontaminateQ, decontaminateSql),
+    Query("x_edit_distance", editDistanceQ, editDistanceSql),
+    Query("x_dedup_exact", dedupExactQ, dedupExactSql),
+    Query("x_text_stats", textStatsQ, textStatsSql),
+    Query("x_length_histogram", lengthHistogramQ, lengthHistogramSql),
+    Query("x_lang_id", langIdQ, langIdSql),
+    Query("x_lang_confusion", langConfusionQ, langConfusionSql),
+    Query("x_fingerprint", fingerprintQ, fingerprintSql),
+    Query("x_simhash", simhashQ, simhashSql),
+    Query("x_ngram_jaccard", ngramJaccardQ, ngramJaccardSql),
+    Query("x_minhash_dedup", minhashDedupQ, minhashDedupSql),
+    Query("x_cosine_topk", cosineTopKQ, cosineTopKSql),
+    Query("x_embedding_neardup", embeddingNearDupQ, embeddingNearDupSql),
+    Query("x_neardup_lsh", neardupLshQ, neardupLshSql),
+    Query("x_sessionize", sessionizeQ, sessionizeSql),
+    Query("x_interval_merge", intervalMergeQ, intervalMergeSql),
+    Query("x_k_anonymity", kAnonymityQ, kAnonymitySql),
+    Query("x_l_diversity", lDiversityQ, lDiversitySql),
+    Query("x_t_closeness", tClosenessQ, tClosenessSql),
+    Query("x_dp_release", dpReleaseQ, dpReleaseSql),
+    Query("x_seasonality", seasonalityQ, seasonalitySql),
+    Query("x_rolling_anomaly", rollingAnomalyQ, rollingAnomalySql),
+    Query("x_multimodal_meta", multimodalMetaQ, multimodalMetaSql),
+    Query("x_multimodal_decode", multimodalDecodeQ, multimodalDecodeSql),
+    Query("x_multimodal_tiff", multimodalTiffQ, multimodalTiffSql),
+    Query("x_multimodal_exif", multimodalExifQ, multimodalExifSql),
+    Query("x_multimodal_gps", multimodalGpsQ, multimodalGpsSql),
+    Query("x_resize_real", resizeRealQ, resizeRealSql),
+    Query("x_ann_lsh", annLshQ, annLshSql),
+    Query("x_asof_join", asOfJoinQ, asOfJoinSql),
+    Query("x_quality_filter", qualityFilterQ, qualityFilterSql),
+    Query("x_quality_logit", qualityLogitQ, qualityLogitSql),
+    Query("x_auc", aucQ, aucSql),
+    Query("x_pr_curve", prCurveQ, prCurveSql),
+    Query("x_gains_curve", gainsCurveQ, gainsCurveSql),
+    Query("x_calibration_bins", calibrationBinsQ, calibrationBinsSql),
+    Query("x_bootstrap_ci", bootstrapCiQ, bootstrapCiSql),
+    Query("x_dedup_clusters", dedupClustersQ, dedupClustersSql),
+    Query("x_dedup_report", dedupReportQ, dedupReportSql),
+    Query("x_dup_quality", dupQualityQ, dupQualitySql),
+    Query("x_dup_inflation", dupInflationQ, dupInflationSql),
+    Query("x_dataset_split", datasetSplitQ, datasetSplitSql),
+    Query("x_eval_balance", evalBalanceQ, evalBalanceSql),
+    Query("x_split_temporal", splitTemporalQ, splitTemporalSql),
+    Query("x_tfidf", tfidfQ, tfidfSql),
+    Query("x_simhash_pairs", simhashPairsQ, simhashPairsSql),
+    Query("x_token_bpe", tokenBpeQ, tokenBpeSql),
+    Query("x_unigram_train", unigramTrainQ, unigramTrainSql),
+    Query("x_unigram_apply", unigramApplyQ, unigramApplySql),
+    Query("x_unigram_em", unigramEmQ, unigramEmSql),
+    Query("x_unigram_fertility", unigramFertilityQ, unigramFertilitySql),
+    Query("x_unigram_prune", unigramPruneQ, unigramPruneSql),
+    Query("x_unigram_oov", unigramOovQ, unigramOovSql),
+    Query("x_unigram_oov_usage", unigramOovUsageQ, unigramOovUsageSql),
+    Query("x_unigram_budget", unigramBudgetQ, unigramBudgetSql),
+    Query("x_pca_project", pcaProjectQ, pcaProjectSql),
+    Query("x_pca_residual", pcaResidualQ, pcaResidualSql),
+    Query("x_tok_fertility", tokFertilityQ, tokFertilitySql),
+    Query("x_pii_scrub", piiScrubQ, piiScrubSql),
+    Query("x_blocklist_scan", blocklistScanQ, blocklistScanSql),
+    Query("x_blocklist_policy", blocklistPolicyQ, blocklistPolicySql),
+    Query("x_blocklist_scrub", blocklistScrubQ, blocklistScrubSql),
+    Query("x_rouge_bleu", rougeBleuQ, rougeBleuSql),
+    Query("x_gopher_repetition", gopherRepetitionQ, gopherRepetitionSql),
+    Query("x_blocklist_fold", blocklistFoldQ, blocklistFoldSql),
+    Query("x_blocklist_fold_scrub", blocklistFoldScrubQ, blocklistFoldScrubSql),
+    Query("x_blocklist_table", blocklistTableQ, blocklistTableSql),
+    Query("x_rouge_l", rougeLQ, rougeLSql),
+    Query("x_bleu34", bleu34Q, bleu34Sql),
+    Query("x_chrf", chrfQ, chrfSql),
+    Query("x_gopher_battery", gopherBatteryQ, gopherBatterySql),
+    Query("x_pii_summary", piiSummaryQ, piiSummarySql),
+    Query("x_ann_ivf", annIvfQ, annIvfSql),
+    Query("x_ann_pq", annPqQ, annPqSql),
+    Query("x_ann_ivf_pq", annIvfPqQ, annIvfPqSql),
+    Query("x_ann_ivf_pq_sampled", annIvfPqSampledQ, annIvfPqSampledSql),
+    Query("x_ann_recall", annRecallQ, annRecallSql),
+    Query("x_ann_filtered", annFilteredQ, annFilteredSql),
+    Query("x_dedup_drop", dedupDropQ, dedupDropSql),
+    Query("x_curate_e2e", curateE2eQ, curateE2eSql),
     // same oracle as x_dedup_drop: the sig-table composition must
     // reproduce the from-text composition's survivor set exactly
-    "x_dedup_drop_sigtable" -> dedupDropSql,
-    "x_containment" -> containmentSql,
-    "x_source_report" -> sourceReportSql,
-    "x_source_overlap" -> sourceOverlapSql,
-    "x_embedding_clusters" -> embeddingClustersSql,
-    "x_cluster_purity" -> clusterPuritySql,
-    "x_class_balance" -> classBalanceSql,
-    "x_embedding_audit" -> embeddingAuditSql,
-    "x_dup_spans" -> dupSpansSql,
-    "x_dup_longest" -> dupLongestSql,
-    "x_split_by_source" -> splitBySourceSql,
-    "x_heavy_hitters" -> heavyHittersSql,
-    "x_count_min" -> countMinSql,
+    Query("x_dedup_drop_sigtable", dedupDropSigQ, dedupDropSql),
+    Query("x_containment", containmentQ, containmentSql),
+    Query("x_source_report", sourceReportQ, sourceReportSql),
+    Query("x_source_overlap", sourceOverlapQ, sourceOverlapSql),
+    Query("x_embedding_clusters", embeddingClustersQ, embeddingClustersSql),
+    Query("x_cluster_purity", clusterPurityQ, clusterPuritySql),
+    Query("x_class_balance", classBalanceQ, classBalanceSql),
+    Query("x_embedding_audit", embeddingAuditQ, embeddingAuditSql),
+    Query("x_dup_spans", dupSpansQ, dupSpansSql),
+    Query("x_dup_longest", dupLongestQ, dupLongestSql),
+    Query("x_split_by_source", splitBySourceQ, splitBySourceSql),
+    Query("x_heavy_hitters", heavyHittersQ, heavyHittersSql),
+    Query("x_count_min", countMinQ, countMinSql),
     // same oracle as x_count_min: the merged incremental sketch must be
     // indistinguishable from the from-scratch sketch (CM linearity)
-    "x_count_min_incr" -> countMinSql,
-    "x_ann_sq8" -> annSq8Sql,
-    "x_chunk" -> chunkSql,
-    "x_chunk_dedup" -> chunkDedupSql,
-    "x_lm_score" -> lmScoreSql,
-    "x_bm25" -> bm25Sql,
-    "x_shard_export" -> shardExportSql,
-    "x_knn_graph" -> knnGraphSql,
-    "x_triangles" -> trianglesSql,
-    "x_triangles_incr" -> trianglesIncrSql,
-    "x_modularity" -> modularitySql,
-    "x_degree_dist" -> degreeDistSql,
-    "x_link_predict" -> linkPredictSql,
-    "x_link_predict_guarded" -> linkPredictGuardedSql,
-    "x_link_hubs" -> linkHubsSql,
-    "x_clustering_coef" -> clusteringCoefSql,
-    "x_containment_pairs" -> containmentPairsSql,
-    "x_containment_incr" -> containmentIncrSql,
-    "x_dedup_keep_best" -> dedupKeepBestSql,
-    "x_quality_dedup" -> qualityDedupSql,
-    "x_dedup_sweep" -> dedupSweepSql,
-    "x_ann_dim_sweep" -> annDimSweepSql,
-    "x_ann_dim_rerank" -> annDimRerankSql,
-    "x_clustering_incr" -> clusteringIncrSql,
-    "x_edge_support" -> edgeSupportSql,
-    "x_edge_support_incr" -> edgeSupportIncrSql,
-    "x_ktruss" -> ktrussSql,
-    "x_ktruss_witness" -> ktrussWitnessSql,
-    "x_truss_precision" -> trussPrecisionSql,
-    "x_label_prop" -> labelPropSql,
-    "x_neardup_verified" -> neardupVerifiedSql,
-    "x_screen_calibration" -> screenCalibrationSql,
-    "x_sig_stats" -> sigStatsSql,
-    "x_screen_recall" -> screenRecallSql,
-    "x_threshold_sweep" -> thresholdSweepSql,
-    "x_syndication" -> syndicationSql,
-    "x_neardup_bands" -> neardupBandsSql,
-    "x_sparse_sim" -> sparseSimSql,
-    "x_pagerank" -> pageRankSql,
-    "x_pagerank_incr" -> pageRankIncrSql,
-    "x_pagerank_witness" -> pageRankWitnessSql,
-    "x_ppr_leakage" -> pprLeakageSql,
-    "x_hits" -> hitsSql,
-    "x_kcore" -> kcoreSql,
-    "x_kcore_witness" -> kcoreWitnessSql,
-    "x_dsir_select" -> dsirSelectSql,
-    "x_curriculum" -> curriculumSql,
-    "x_ann_rerank" -> annRerankSql,
-    "x_rank_fusion" -> rankFusionSql,
-    "x_random_projection" -> randomProjectionSql,
-    "x_bpe_merges" -> bpeMergesSql,
-    "x_winnowing" -> winnowingSql,
-    "x_eval_proximity" -> evalProximitySql,
-    "x_mmr_diverse" -> mmrDiverseSql,
-    "p_stream_select" -> streamSelectSql,
-    "x_dedup_soft" -> dedupSoftSql,
-    "x_bpe_train" -> bpeTrainSql,
-    "x_audio_features" -> audioFeaturesSql,
-    "x_image_features" -> imageFeaturesSql,
-    "x_image_phash" -> imagePhashSql,
-    "x_winnow_pairs" -> winnowPairsSql,
-    "x_containment_winnow" -> containmentWinnowSql,
-    "x_containment_winnow_incr" -> containmentWinnowIncrSql,
-    "x_quote_screen_pruned" -> quoteScreenPrunedSql,
-    "x_quote_screen_compacted" -> quoteScreenCompactedSql,
-    "x_screen_overlap" -> screenOverlapSql,
-    "x_winnow_incremental" -> winnowIncrementalSql,
-    "x_bpe_apply" -> bpeApplySql,
-    "x_drift" -> driftSql,
-    "x_url_canon" -> urlCanonSql,
-    "x_url_dedup" -> urlDedupSql,
-    "x_domain_cap" -> domainCapSql,
-    "x_seq_pack" -> seqPackSql,
-    "x_pack_report" -> packReportSql,
-    "x_stream_curate" -> streamCurateSql,
-    "x_stream_curate_quotes" -> streamCurateQuotesSql,
-    "x_stream_curate_policy" -> streamCuratePolicySql,
-    "x_quality_quantile" -> qualityQuantileSql,
-    "x_ann_ivf_sq8" -> annIvfSq8Sql,
-    "x_ann_ivf_sq8_table" -> annIvfSq8Sql,
-    "x_ann_pareto" -> annParetoSql,
-    "x_ann_index_stats" -> annIndexStatsSql,
-    "x_index_drift" -> indexDriftSql,
-    "x_dedup_best_keeper" -> dedupBestKeeperSql,
-    "x_mixture_temperature" -> mixtureTemperatureSql,
-    "x_quota_mix" -> quotaMixSql,
-    "x_token_budget" -> tokenBudgetSql,
-    "x_er_linkage" -> erLinkageSql,
-    "x_er_golden" -> erGoldenSql,
-    "x_profile" -> profileSql,
-    "x_label_vote" -> labelVoteSql,
-    "x_weighted_sample" -> weightedSampleSql,
-    "x_boilerplate" -> boilerplateSql,
-    "x_c4_clean" -> c4CleanSql,
-    "x_line_dedup" -> lineDedupSql,
-    "x_line_dedup_incr" -> lineDedupIncrSql,
-    "x_line_dedup_roi" -> lineDedupRoiSql,
-    "x_kfold" -> kfoldSql,
-    "x_source_gini" -> sourceGiniSql,
-    "x_semdedup" -> semdedupSql,
-    "x_dedup_clusters_incr" -> dedupClustersIncrSql,
-    "x_fuzzy_join" -> fuzzyJoinSql,
-    "x_er_block_guard" -> erBlockGuardSql,
-    "x_forward_fill" -> forwardFillSql,
-    "x_unicode_norm" -> unicodeNormSql,
-    "x_dedup_normalized" -> dedupNormalizedSql,
-    "x_oov_rate" -> oovRateSql,
-    "x_contrastive" -> contrastiveSql,
-    "x_bitext_mine" -> bitextMineSql,
-    "x_split_leakage" -> splitLeakageSql,
-    "x_multimodal_audio" -> multimodalAudioSql,
-    "x_frame_sample_real" -> frameSampleRealSql,
-    "x_ann_index_incr" -> annIndexIncrSql,
-    "p_stream_ann" -> streamAnnSql,
-    "x_quality_buckets" -> qualityBucketsSql,
-    "x_deflate_gate" -> deflateGateSql,
-    "x_er_purge_report" -> erPurgeReportSql,
-    "x_label_kappa" -> labelKappaSql)
+    Query("x_count_min_incr", countMinIncrQ, countMinSql),
+    Query("x_ann_sq8", annSq8Q, annSq8Sql),
+    Query("x_chunk", chunkQ, chunkSql),
+    Query("x_chunk_dedup", chunkDedupQ, chunkDedupSql),
+    Query("x_lm_score", lmScoreQ, lmScoreSql),
+    Query("x_bm25", bm25Q, bm25Sql),
+    Query("x_shard_export", shardExportQ, shardExportSql),
+    Query("x_knn_graph", knnGraphQ, knnGraphSql),
+    Query("x_triangles", trianglesQ, trianglesSql),
+    Query("x_triangles_incr", trianglesIncrQ, trianglesIncrSql),
+    Query("x_modularity", modularityQ, modularitySql),
+    Query("x_degree_dist", degreeDistQ, degreeDistSql),
+    Query("x_link_predict", linkPredictQ, linkPredictSql),
+    Query("x_link_predict_guarded", linkPredictGuardedQ, linkPredictGuardedSql),
+    Query("x_link_hubs", linkHubsQ, linkHubsSql),
+    Query("x_clustering_coef", clusteringCoefQ, clusteringCoefSql),
+    Query("x_containment_pairs", containmentPairsQ, containmentPairsSql),
+    Query("x_containment_incr", containmentIncrQ, containmentIncrSql),
+    Query("x_dedup_keep_best", dedupKeepBestQ, dedupKeepBestSql),
+    Query("x_quality_dedup", qualityDedupQ, qualityDedupSql),
+    Query("x_dedup_sweep", dedupSweepQ, dedupSweepSql),
+    Query("x_ann_dim_sweep", annDimSweepQ, annDimSweepSql),
+    Query("x_ann_dim_rerank", annDimRerankQ, annDimRerankSql),
+    Query("x_clustering_incr", clusteringIncrQ, clusteringIncrSql),
+    Query("x_edge_support", edgeSupportQ, edgeSupportSql),
+    Query("x_edge_support_incr", edgeSupportIncrQ, edgeSupportIncrSql),
+    Query("x_ktruss", ktrussQ, ktrussSql),
+    Query("x_ktruss_witness", ktrussWitnessQ, ktrussWitnessSql),
+    Query("x_truss_precision", trussPrecisionQ, trussPrecisionSql),
+    Query("x_label_prop", labelPropQ, labelPropSql),
+    Query("x_neardup_verified", neardupVerifiedQ, neardupVerifiedSql),
+    Query("x_screen_calibration", screenCalibrationQ, screenCalibrationSql),
+    Query("x_sig_stats", sigStatsQ, sigStatsSql),
+    Query("x_screen_recall", screenRecallQ, screenRecallSql),
+    Query("x_threshold_sweep", thresholdSweepQ, thresholdSweepSql),
+    Query("x_syndication", syndicationQ, syndicationSql),
+    Query("x_neardup_bands", neardupBandsQ, neardupBandsSql),
+    Query("x_sparse_sim", sparseSimQ, sparseSimSql),
+    Query("x_pagerank", pageRankQ, pageRankSql),
+    Query("x_pagerank_incr", pageRankIncrQ, pageRankIncrSql),
+    Query("x_pagerank_witness", pageRankWitnessQ, pageRankWitnessSql),
+    Query("x_ppr_leakage", pprLeakageQ, pprLeakageSql),
+    Query("x_hits", hitsQ, hitsSql),
+    Query("x_kcore", kcoreQ, kcoreSql),
+    Query("x_kcore_witness", kcoreWitnessQ, kcoreWitnessSql),
+    Query("x_dsir_select", dsirSelectQ, dsirSelectSql),
+    Query("x_curriculum", curriculumQ, curriculumSql),
+    Query("x_ann_rerank", annRerankQ, annRerankSql),
+    Query("x_rank_fusion", rankFusionQ, rankFusionSql),
+    Query("x_random_projection", randomProjectionQ, randomProjectionSql),
+    Query("x_bpe_merges", bpeMergesQ, bpeMergesSql),
+    Query("x_winnowing", winnowingQ, winnowingSql),
+    Query("x_eval_proximity", evalProximityQ, evalProximitySql),
+    Query("x_mmr_diverse", mmrDiverseQ, mmrDiverseSql),
+    Query("p_stream_select", streamSelectQ, streamSelectSql),
+    Query("x_dedup_soft", dedupSoftQ, dedupSoftSql),
+    Query("x_bpe_train", bpeTrainQ, bpeTrainSql),
+    Query("x_audio_features", audioFeaturesQ, audioFeaturesSql),
+    Query("x_image_features", imageFeaturesQ, imageFeaturesSql),
+    Query("x_image_phash", imagePhashQ, imagePhashSql),
+    Query("x_winnow_pairs", winnowPairsQ, winnowPairsSql),
+    Query("x_containment_winnow", containmentWinnowQ, containmentWinnowSql),
+    Query("x_containment_winnow_incr", containmentWinnowIncrQ,
+      containmentWinnowIncrSql),
+    Query("x_quote_screen_pruned", quoteScreenPrunedQ, quoteScreenPrunedSql),
+    Query("x_quote_screen_compacted", quoteScreenCompactedQ,
+      quoteScreenCompactedSql),
+    Query("x_screen_overlap", screenOverlapQ, screenOverlapSql),
+    Query("x_winnow_incremental", winnowIncrementalQ, winnowIncrementalSql),
+    Query("x_bpe_apply", bpeApplyQ, bpeApplySql),
+    Query("x_drift", driftQ, driftSql),
+    Query("x_url_canon", urlCanonQ, urlCanonSql),
+    Query("x_url_dedup", urlDedupQ, urlDedupSql),
+    Query("x_domain_cap", domainCapQ, domainCapSql),
+    Query("x_seq_pack", seqPackQ, seqPackSql),
+    Query("x_pack_report", packReportQ, packReportSql),
+    Query("x_stream_curate", streamCurateQ, streamCurateSql),
+    Query("x_stream_curate_quotes", streamCurateQuotesQ, streamCurateQuotesSql),
+    Query("x_stream_curate_policy", streamCuratePolicyQ, streamCuratePolicySql),
+    Query("x_quality_quantile", qualityQuantileQ, qualityQuantileSql),
+    Query("x_ann_ivf_sq8", annIvfSq8Q, annIvfSq8Sql),
+    Query("x_ann_ivf_sq8_table", annIvfSq8TableQ, annIvfSq8Sql),
+    Query("x_ann_pareto", annParetoQ, annParetoSql),
+    Query("x_ann_index_stats", annIndexStatsQ, annIndexStatsSql),
+    Query("x_index_drift", indexDriftQ, indexDriftSql),
+    Query("x_dedup_best_keeper", dedupBestKeeperQ, dedupBestKeeperSql),
+    Query("x_mixture_temperature", mixtureTemperatureQ, mixtureTemperatureSql),
+    Query("x_quota_mix", quotaMixQ, quotaMixSql),
+    Query("x_token_budget", tokenBudgetQ, tokenBudgetSql),
+    Query("x_er_linkage", erLinkageQ, erLinkageSql),
+    Query("x_er_golden", erGoldenQ, erGoldenSql),
+    Query("x_profile", profileQ, profileSql),
+    Query("x_label_vote", labelVoteQ, labelVoteSql),
+    Query("x_weighted_sample", weightedSampleQ, weightedSampleSql),
+    Query("x_boilerplate", boilerplateQ, boilerplateSql),
+    Query("x_semdedup", semdedupQ, semdedupSql),
+    Query("x_dedup_clusters_incr", dedupClustersIncrQ, dedupClustersIncrSql),
+    Query("x_fuzzy_join", fuzzyJoinQ, fuzzyJoinSql),
+    Query("x_er_block_guard", erBlockGuardQ, erBlockGuardSql),
+    Query("x_forward_fill", forwardFillQ, forwardFillSql),
+    Query("x_unicode_norm", unicodeNormQ, unicodeNormSql),
+    Query("x_dedup_normalized", dedupNormalizedQ, dedupNormalizedSql),
+    Query("x_oov_rate", oovRateQ, oovRateSql),
+    Query("x_contrastive", contrastiveQ, contrastiveSql),
+    Query("x_bitext_mine", bitextMineQ, bitextMineSql),
+    Query("x_split_leakage", splitLeakageQ, splitLeakageSql),
+    Query("x_multimodal_audio", multimodalAudioQ, multimodalAudioSql),
+    Query("x_frame_sample_real", frameSampleRealQ, frameSampleRealSql),
+    Query("x_ann_index_incr", annIndexIncrQ, annIndexIncrSql),
+    Query("p_stream_ann", streamAnnQ, streamAnnSql),
+    Query("x_quality_buckets", qualityBucketsQ, qualityBucketsSql),
+    Query("x_deflate_gate", deflateGateQ, deflateGateSql),
+    Query("x_er_purge_report", erPurgeReportQ, erPurgeReportSql),
+    Query("x_label_kappa", labelKappaQ, labelKappaSql))
 }

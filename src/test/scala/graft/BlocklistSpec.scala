@@ -103,15 +103,15 @@ class BlocklistSpec extends SparkSpec {
     // the automaton projection must survive as its own project (one
     // scan per row), referenced — not re-inlined thrice — downstream;
     // parquet-backed input so ConvertToLocalRelation can't fold it
-    val plan = queries.TrainingData.queries("x_blocklist_policy")(
+    val plan = SparkEntry.queries("x_blocklist_policy")(
       spark, sf0001).queryExecution.optimizedPlan.toString
     assert("graft_aho_counts".r.findAllIn(plan).size == 1, plan)
   }
 
   test("both blocklist lanes are zero-exchange row-local plans") {
     Seq(
-      queries.TrainingData.queries("x_blocklist_scan"),
-      queries.TrainingData.queries("x_blocklist_policy")
+      SparkEntry.queries("x_blocklist_scan"),
+      SparkEntry.queries("x_blocklist_policy")
     ).foreach { q =>
       val df = q(spark, sf0001)
       val physical = df.queryExecution.executedPlan.toString
@@ -143,7 +143,7 @@ class BlocklistSpec extends SparkSpec {
   }
 
   test("x_blocklist_scrub masks the planted tail in every document") {
-    val q = queries.TrainingData.queries("x_blocklist_scrub")
+    val q = SparkEntry.queries("x_blocklist_scrub")
     val df = q(spark, sf0001)
     // ' banana bananana' always yields ana + (ana, nana) = 3 spans
     assert(df.filter($"n_masked" < 3).count() == 0)
@@ -151,7 +151,7 @@ class BlocklistSpec extends SparkSpec {
   }
 
   test("x_blocklist_scan finds the planted overlapping terms in every doc") {
-    val q = queries.TrainingData.queries("x_blocklist_scan")
+    val q = SparkEntry.queries("x_blocklist_scan")
     val nDocs = Tables.load(spark, sf0001, "documents").count()
     val planted = q(spark, sf0001)
       .filter($"term" === "ana" && $"cnt" === 5L).count()
@@ -263,7 +263,7 @@ class BlocklistSpec extends SparkSpec {
   }
 
   test("x_blocklist_fold: every planted form registers in every doc") {
-    val q = queries.TrainingData.queries("x_blocklist_fold")
+    val q = SparkEntry.queries("x_blocklist_fold")
     val nDocs = Tables.load(spark, sf0001, "documents").count()
     val df = q(spark, sf0001).cache()
     try {

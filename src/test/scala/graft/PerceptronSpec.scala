@@ -49,14 +49,14 @@ class PerceptronSpec extends SparkSpec {
   }
 
   test("x_perceptron lanes: round-1 misses everything, screen is total") {
-    val train = queries.TrainingData
+    val train = SparkEntry
       .queries("x_perceptron_train")(spark, sf0001)
       .orderBy("round").collect()
     val docs = Tables.load(spark, sf0001, "documents").count()
     assert(train.length == 4)
     assert(train(0).getLong(1) == docs) // w=0: margin 0 misses all
     assert(train(3).getLong(1) < docs)  // later rounds do better
-    val screen = queries.TrainingData
+    val screen = SparkEntry
       .queries("x_perceptron_screen")(spark, sf0001)
     assert(screen.count() == docs)
     assert(screen.where(col("predicted") =!= 1L &&

@@ -16,7 +16,14 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a matching query") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  test("each query is declared once, with one non-empty oracle") {
+    import graft.queries.{Analytics, Parity, TrainingData}
+    val rows = Parity.queries ++ Analytics.queries ++ TrainingData.queries
+    assert(rows.map(_.name).distinct.size == rows.size)
+    assert(SparkEntry.queries.size == rows.size)
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    // a row that read a *Sql val declared after it would capture null
+    val empty = rows.filter(q => q.oracle == null || q.oracle.trim.isEmpty)
+    assert(empty.isEmpty, empty.map(_.name).mkString(", "))
   }
 }

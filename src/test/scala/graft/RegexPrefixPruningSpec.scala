@@ -77,7 +77,7 @@ class RegexPrefixPruningSpec extends SparkSpec {
   }
 
   test("the gated prefix-scan query pushes its range to the scan") {
-    val scan = graft.queries.Parity.queries("p_rowkey_prefix_scan")(
+    val scan = SparkEntry.queries("p_rowkey_prefix_scan")(
       spark, sf0001).queryExecution.executedPlan.toString
     assert(scan.contains("GreaterThanOrEqual(source,src1)") &&
       scan.contains("LessThan(source,src2)"),
@@ -116,7 +116,7 @@ class RegexPrefixPruningSpec extends SparkSpec {
 
   test("unanchored or computed-column regexes are left untouched " +
        "(the reference's .*-style rowkey scan keeps its exact plan)") {
-    val p = graft.queries.Parity.queries("p_keyed_snapshot_scan")(
+    val p = SparkEntry.queries("p_keyed_snapshot_scan")(
       spark, sf0001).queryExecution.optimizedPlan.toString
     assert(p.contains("RLIKE") && !p.contains(">="),
       s"conservative rule fired on an unanchored pattern:\n$p")

@@ -108,6 +108,13 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_scd_scratch")
         .toString + "/snap", Seq("user_id"), "ts", Seq("event_id"))
     assert(Scratch.list() == before)
+    // a curate lane's run root goes with the call; the fixture dirs it
+    // caches (curate-src-<n>, sigs-curate-base-<n>) stay on purpose
+    Seq(1, 2).foreach { _ =>
+      assert(SparkEntry.queries("x_stream_curate")(spark, sf0001).count() > 0)
+      assert(!Scratch.list().exists(_.matches("curate-\\d+")),
+        Scratch.list().mkString(", "))
+    }
     val root = java.nio.file.Files
       .createTempDirectory("graft_ann_ckpt_kept").toString
     val emb = Tables.load(spark, sf0001, "embeddings")

@@ -81,7 +81,7 @@ class TextEvalSpec extends SparkSpec {
   }
 
   test("x_gopher_repetition lane: the planted 3x phrase registers everywhere") {
-    val q = queries.TrainingData.queries("x_gopher_repetition")
+    val q = SparkEntry.queries("x_gopher_repetition")
     val df = q(spark, sf0001).cache()
     try {
       assert(df.count() == Tables.load(spark, sf0001, "documents").count())
@@ -272,7 +272,7 @@ class TextEvalSpec extends SparkSpec {
   }
 
   test("x_token_edit lane: sorted-prefix reference varies per doc") {
-    val q = queries.TrainingData.queries("x_token_edit")
+    val q = SparkEntry.queries("x_token_edit")
     val df = q(spark, sf0001).cache()
     try {
       assert(df.count() == Tables.load(spark, sf0001, "documents").count())
@@ -284,7 +284,7 @@ class TextEvalSpec extends SparkSpec {
   }
 
   test("x_rouge_bleu lane: near-dup candidate keeps recall below precision") {
-    val q = queries.TrainingData.queries("x_rouge_bleu")
+    val q = SparkEntry.queries("x_rouge_bleu")
     val df = q(spark, sf0001).cache()
     try {
       assert(df.count() == Tables.load(spark, sf0001, "documents").count())

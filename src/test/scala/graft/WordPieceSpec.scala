@@ -116,7 +116,7 @@ class WordPieceSpec extends SparkSpec {
   }
 
   test("x_wordpiece lanes return plausible shapes on sf0.001") {
-    val train = queries.TrainingData.queries("x_wordpiece_train")(spark, sf0001)
+    val train = SparkEntry.queries("x_wordpiece_train")(spark, sf0001)
     val rows = train.orderBy("ord").collect()
     assert(rows.length == 3)
     rows.foreach { r =>
@@ -124,7 +124,7 @@ class WordPieceSpec extends SparkSpec {
       assert(r.getLong(4) >= r.getLong(3)) // lhs_count ≥ pair_count
       assert(r.getLong(5) >= r.getLong(3))
     }
-    val apply = queries.TrainingData
+    val apply = SparkEntry
       .queries("x_wordpiece_apply")(spark, sf0001).cache()
     try {
       assert(apply.count() > 0)
