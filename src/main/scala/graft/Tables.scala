@@ -70,6 +70,19 @@ object Tables {
   private[graft] val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, (SchemaKey, StructType)]
 
+  /** Drop the [[schemaCache]] and `MaintainedIndex.envelopeCache`
+    * entries of every table under local directory `root`, for a caller
+    * that deletes it: a deleted table's entries would only ever miss. */
+  private[graft] def forgetUnder(root: java.io.File): Unit = {
+    val prefix = root.getAbsolutePath + "/"
+    // keys are table dirs, plain or as `file:` URIs
+    def under(dir: String) = new Path(dir).toUri.getPath.startsWith(prefix)
+    schemaCache.keySet.removeIf((d: String) => under(d))
+    graft.sources.MaintainedIndex.envelopeCache.keySet.removeIf(
+      (k: (String, String)) => under(k._1))
+    ()
+  }
+
   /** `spark.read.parquet(dir)`, minus the schema-inference job while
     * the listing of `dir` (a parquet directory or single file) and the
     * parquet confs are unchanged: a hit reads with the cached schema.

@@ -1208,21 +1208,25 @@ object Parity {
   // and aggregated READING FROM THE BUCKETED TABLES — the repeated-join
   // pre-partitioning strategy (bucket join runs with no exchange,
   // asserted by BucketedJoinSpec; this gates the content round-trip
-  // through the bucketed layout). Table names carry a per-JVM tag so
-  // stale warehouse directories from other sessions can't collide.
+  // through the bucketed layout). The tables are path tables under the
+  // fixture's scratch dir, so their files go with the JVM and none land
+  // in the session's warehouse; table names carry a per-JVM tag so a
+  // persistent catalog's entries from other sessions can't collide.
   private lazy val bucketTag =
     java.util.UUID.randomUUID().toString.replace("-", "").take(12)
   def bucketedJoinQ(spark: SparkSession, dir: String): DataFrame = {
-    val prefix = Fixtures.cached("bkt", dir) { _ =>
+    val prefix = Fixtures.cached("bkt", dir) { root =>
       val tag = s"${bucketTag}_${math.abs(dir.hashCode)}"
       Tables.load(spark, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
         .write.bucketBy(8, "o_custkey").sortBy("o_custkey")
+        .option("path", new java.io.File(root, "ord").toString)
         .saveAsTable(s"graft_bkt_ord_$tag")
       Tables.load(spark, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
         .write.bucketBy(8, "c_custkey").sortBy("c_custkey")
+        .option("path", new java.io.File(root, "cust").toString)
         .saveAsTable(s"graft_bkt_cust_$tag")
       tag
     }

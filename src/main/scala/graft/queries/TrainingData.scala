@@ -5732,7 +5732,9 @@ object TrainingData {
     * checkpoint), so it too is built once per session, under
     * `feedTag`. `curate` gets the stream and the run root's `path`
     * (`sigs`, `fps`, `admitted`). The admitted ids come back as a
-    * local relation, so the run root is deleted before the call returns.
+    * local relation, so the run root is deleted before the call returns,
+    * and with it the schema and footer-envelope cache entries of its
+    * tables.
     */
   private def curateLane(spark: SparkSession, dir: String, feedTag: String,
                          winnow: Boolean, batches: Seq[DataFrame])(

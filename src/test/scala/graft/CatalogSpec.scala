@@ -118,6 +118,27 @@ class CatalogSpec extends SparkSpec {
     assert(files(latest) == 1, files)
   }
 
+  test("p_bucketed_join adds no table to the warehouse dir") {
+    val wh = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def bkt() = (if (fs.exists(wh)) fs.listStatus(wh).toSeq else Nil)
+      .map(_.getPath.getName).filter(_.startsWith("graft_bkt_")).toSet
+    val before = bkt()
+    assert(graft.SparkEntry.queries("p_bucketed_join")(spark, sf0001)
+      .count() > 0)
+    assert(bkt() == before)
+    val tables = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_bkt_"))
+    assert(tables.length >= 2, tables.mkString(", "))
+    tables.foreach { t =>
+      val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
+        .location).toUri.getPath
+      assert(!loc.startsWith(wh.toUri.getPath), s"$t lives at $loc")
+    }
+  }
+
   test("saveAsTableOverwrite refuses qualified names and non-table dirs") {
     intercept[IllegalArgumentException] {
       CatalogSinks.saveAsTableOverwrite(

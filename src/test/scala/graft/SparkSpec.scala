@@ -40,11 +40,17 @@ trait SparkSpec extends AnyFunSuite {
     * the queries and writes it ran — for operators that return no frame
     * to inspect. Listener events arrive asynchronously, hence the wait.
     */
-  def withPlans[A](f: => A)(check: Seq[String] => Unit): A = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def withPlans[A](f: => A)(check: Seq[String] => Unit): A =
+    withExecutions(f)(qes => check(qes.map(_.executedPlan.toString)))
+
+  /** [[withPlans]] over the executions themselves. A stream started
+    * inside `f` clones the session with its listeners, so its
+    * micro-batches' executions are seen too. */
+  def withExecutions[A](f: => A)(check: Seq[QueryExecution] => Unit): A = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+        qes.add(qe)
       override def onFailure(fn: String, qe: QueryExecution,
                              e: Exception): Unit = ()
     }
@@ -52,7 +58,7 @@ trait SparkSpec extends AnyFunSuite {
     try {
       val out = f
       eventually(timeout(30.seconds), interval(100.millis)) {
-        check(plans.toArray(new Array[String](0)).toSeq)
+        check(qes.toArray(new Array[QueryExecution](0)).toSeq)
       }
       out
     } finally spark.listenerManager.unregister(listener)

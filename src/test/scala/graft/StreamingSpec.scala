@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import scala.jdk.CollectionConverters._
 
 import graft.streaming.StreamingOps
 
@@ -108,12 +109,17 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_scd_scratch")
         .toString + "/snap", Seq("user_id"), "ts", Seq("event_id"))
     assert(Scratch.list() == before)
-    // a curate lane's run root goes with the call; the fixture dirs it
+    // a curate lane's run root goes with the call, and so do the schema
+    // and envelope cache entries of its tables; the fixture dirs it
     // caches (curate-src-<n>, sigs-curate-base-<n>) stay on purpose
+    val runDir = ".*/curate-\\d+(/.*)?"
     Seq(1, 2).foreach { _ =>
       assert(SparkEntry.queries("x_stream_curate")(spark, sf0001).count() > 0)
       assert(!Scratch.list().exists(_.matches("curate-\\d+")),
         Scratch.list().mkString(", "))
+      val cached = Tables.schemaCache.keySet.asScala ++
+        graft.sources.MaintainedIndex.envelopeCache.keySet.asScala.map(_._1)
+      assert(!cached.exists(_.matches(runDir)), cached.mkString(", "))
     }
     val root = java.nio.file.Files
       .createTempDirectory("graft_ann_ckpt_kept").toString
@@ -272,28 +278,24 @@ class StreamingSpec extends SparkSpec {
     assert(out.size > nonTrailing.size, "no trailing session ever timed out")
   }
 
-  test("continuousCurate: a batch-1 near-copy of a batch-0 admit is " +
-    "rejected (the signature table is live)") {
+  // the curate tests' documents: a corpus page, a page near nothing
+  // in it, and a third page near neither
+  private val corpusText = "alpha beta gamma delta epsilon zeta eta " +
+    "theta iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
+  private val novelText = "one two three four five six seven eight nine " +
+    "ten eleven twelve thirteen fourteen fifteen sixteen seventeen eighteen"
+  private val freshText = "red orange yellow green blue indigo violet " +
+    "black white brown crimson scarlet amber teal navy maroon olive silver"
+
+  /** A curate feed under `root`: batch i of (doc_id, text) rows is the
+    * single file `src/b<i>.parquet`, its mtime pinned i minutes after a
+    * fixed epoch, so with `maxFilesPerTrigger` 1 it is micro-batch i. */
+  private def curateFeed(root: java.io.File,
+                         batches: Seq[Seq[(Long, String)]]): DataFrame = {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_curate_spec").toFile
-    def path(n: String) = new java.io.File(root, n).toString
-    val corpusText = "alpha beta gamma delta epsilon zeta eta theta " +
-      "iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val novelText = "one two three four five six seven eight nine ten " +
-      "eleven twelve thirteen fourteen fifteen sixteen seventeen eighteen"
-    val freshText = "red orange yellow green blue indigo violet black " +
-      "white brown crimson scarlet amber teal navy maroon olive silver"
-    val corpus = Seq((1L, corpusText)).toDF("doc_id", "text")
-    graft.operators.Dedup.writeSignatureTable(
-      corpus, "text", "doc_id", path("sigs"), k = 5)
     val srcDir = new java.io.File(root, "src"); srcDir.mkdirs()
-    val batches = Seq(
-      Seq((100L, novelText)),                           // novel: admit
-      Seq((200L, novelText.substring(10)),              // echo of 100: REJECT
-        (201L, freshText)))                             // novel: admit
     batches.zipWithIndex.foreach { case (rows, i) =>
-      val tmp = path(s"tmp$i")
+      val tmp = new java.io.File(root, s"tmp$i").toString
       rows.toDF("doc_id", "text").coalesce(1).write.parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -301,9 +303,24 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.move(part.toPath, dst.toPath)
       dst.setLastModified(1000000000000L + i * 60000L)
     }
-    val src = spark.readStream
-      .schema(corpus.schema).option("maxFilesPerTrigger", 1)
+    spark.readStream
+      .schema("doc_id BIGINT, text STRING").option("maxFilesPerTrigger", 1)
       .parquet(srcDir.toString)
+  }
+
+  test("continuousCurate: a batch-1 near-copy of a batch-0 admit is " +
+    "rejected (the signature table is live)") {
+    import spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_curate_spec").toFile
+    def path(n: String) = new java.io.File(root, n).toString
+    val corpus = Seq((1L, corpusText)).toDF("doc_id", "text")
+    graft.operators.Dedup.writeSignatureTable(
+      corpus, "text", "doc_id", path("sigs"), k = 5)
+    val src = curateFeed(root, Seq(
+      Seq((100L, novelText)),                           // novel: admit
+      Seq((200L, novelText.substring(10)),              // echo of 100: REJECT
+        (201L, freshText))))                            // novel: admit
     StreamingOps.continuousCurate(
       src, path("sigs"), path("admitted"), "text", "doc_id")
     val admitted = spark.read.parquet(path("admitted"))
@@ -320,17 +337,10 @@ class StreamingSpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("graft_curate_policy").toFile
     def path(n: String) = new java.io.File(root, n).toString
-    val corpusText = "alpha beta gamma delta epsilon zeta eta theta " +
-      "iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val novelText = "one two three four five six seven eight nine ten " +
-      "eleven twelve thirteen fourteen fifteen sixteen seventeen eighteen"
-    val freshText = "red orange yellow green blue indigo violet black " +
-      "white brown crimson scarlet amber teal navy maroon olive silver"
     val corpus = Seq((1L, corpusText)).toDF("doc_id", "text")
     graft.operators.Dedup.writeSignatureTable(
       corpus, "text", "doc_id", path("sigs"), k = 5)
-    val srcDir = new java.io.File(root, "src"); srcDir.mkdirs()
-    val batches = Seq(
+    val src = curateFeed(root, Seq(
       // 100: novel but BLOCKED (two folded hits of 'qzxspam') — must
       // reject AND leave no signatures behind
       Seq((100L, novelText + " QzxSpam qzxspam")),
@@ -338,19 +348,7 @@ class StreamingSpec extends SparkSpec {
       // because a rejected page is not dedup evidence
       Seq((200L, novelText.substring(10)),
         // 201: blocked in its own batch
-        (201L, freshText + " qzxspam QZXSPAM extra")))
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      val tmp = path(s"tmp$i")
-      rows.toDF("doc_id", "text").coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(srcDir, s"b$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(1000000000000L + i * 60000L)
-    }
-    val src = spark.readStream
-      .schema(corpus.schema).option("maxFilesPerTrigger", 1)
-      .parquet(srcDir.toString)
+        (201L, freshText + " qzxspam QZXSPAM extra"))))
     StreamingOps.continuousCurate(
       src, path("sigs"), path("admitted"), "text", "doc_id",
       blocklist = Seq("qzxspam"), blocklistBlockAt = 2L)
@@ -362,6 +360,78 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(sigIds == Set(1L, 200L),
       s"blocked docs leaked signatures: $sigIds")
+  }
+
+  /** Finds nodes through AQE wrappers: Spark wraps each write's plan
+    * in an `AdaptiveSparkPlan`. */
+  private val aqe =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  private def codegens(qe: org.apache.spark.sql.execution.QueryExecution) =
+    aqe.find(qe.executedPlan)(
+      _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
+
+  /** A two-batch curate with both screens and a blocklist, run on a
+    * signature table grown on disk by `sigPad` bytes of sparse hidden
+    * file (which no read sees). `check` gets the executions of the
+    * batches' writes; the caller's codegen setting must read the same
+    * after return. */
+  private def curateWrites(sigPad: Long)(
+      check: Seq[org.apache.spark.sql.execution.QueryExecution] => Unit)
+      : Unit = {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_curate_codegen").toFile
+    def path(n: String) = new java.io.File(root, n).toString
+    val corpus = Seq((1L, corpusText), (2L, freshText)).toDF("doc_id", "text")
+    graft.operators.Dedup.writeSignatureTable(
+      corpus, "text", "doc_id", path("sigs"), k = 5)
+    graft.operators.Corpus.writeWinnowTable(
+      corpus, "text", "doc_id", path("fps"), k = 5, window = 4)
+    val pad = new java.io.RandomAccessFile(path("sigs/_pad"), "rw")
+    try pad.setLength(sigPad) finally pad.close()
+    val src = curateFeed(root, Seq(
+      Seq((100L, novelText), (101L, "quoted: " + corpusText.take(60))),
+      Seq((200L, novelText.substring(10)), (201L, "qzxspam " + novelText))))
+    val key = "spark.sql.codegen.wholeStage"
+    val before = spark.conf.get(key)
+    withExecutions {
+      StreamingOps.continuousCurate(src, path("sigs"), path("admitted"),
+        "text", "doc_id", winnowTablePath = path("fps"),
+        blocklist = Seq("qzxspam"))
+    } { qes =>
+      val writes = qes.filter(qe => aqe.find(qe.executedPlan)(
+        _.isInstanceOf[DataWritingCommandExec]).isDefined)
+      // admits, signatures and three fingerprint artifacts per batch
+      assert(writes.size >= 10, s"${writes.size} batch writes seen")
+      writes.foreach(qe => assert(qe.sparkSession ne spark,
+        "a batch wrote on the caller's session"))
+      check(writes)
+    }
+    assert(spark.conf.get(key) == before)
+    assert(spark.read.parquet(path("admitted")).select("doc_id")
+      .as[Long].collect().toSet == Set(100L))
+  }
+
+  test("a curate batch's writes plan without whole-stage codegen on a " +
+    "small signature table, and the caller's session keeps its setting") {
+    curateWrites(0L)(_.foreach(qe => assert(codegens(qe).isEmpty,
+      s"a batch write ran whole-stage codegen:\n${qe.executedPlan}")))
+  }
+
+  test("a curate batch keeps whole-stage codegen on a signature table " +
+    "of 16 MiB or more") {
+    curateWrites(16L << 20)(writes => assert(writes.exists(
+      codegens(_).isDefined), "no batch write ran whole-stage codegen"))
+  }
+
+  test("curate batches run interpreted only under a small codegen cache " +
+    "and a small signature table") {
+    assert(StreamingOps.curateInterpreted(100, (16L << 20) - 1))
+    assert(!StreamingOps.curateInterpreted(100, 16L << 20))
+    assert(StreamingOps.curateInterpreted(999, 0L))
+    assert(!StreamingOps.curateInterpreted(1000, 0L))
   }
 
   test("continuousAggMaintenance commits one Versioned snapshot per " +

@@ -170,4 +170,19 @@ class TablesSpec extends SparkSpec {
     assert(Tables.schemaCache.size == before + 1)
     assert(Tables.parquet(spark, dir.toString).columns.length == 3)
   }
+
+  test("Scratch.delete drops the cache entries of the tables under it") {
+    val root = Scratch.dir("tables-forget")
+    val dir = new File(root, "t")
+    write(ids(30), dir)
+    assertSame(dir.toString)
+    graft.sources.MaintainedIndex.pruneFiles(spark, dir.toString, "id",
+      Array(0L))
+    val envKey = (new org.apache.hadoop.fs.Path(dir.toString).toString, "id")
+    assert(Tables.schemaCache.containsKey(dir.toString))
+    assert(graft.sources.MaintainedIndex.envelopeCache.containsKey(envKey))
+    Scratch.delete(root)
+    assert(!Tables.schemaCache.containsKey(dir.toString))
+    assert(!graft.sources.MaintainedIndex.envelopeCache.containsKey(envKey))
+  }
 }
