@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -42,146 +42,129 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  /** One registry row `(name, doc, builder)`. The builder checks the
+    * call before it builds: exactly `arity` arguments, and at each index
+    * in `intArgs` a foldable integral literal in int range (those values
+    * are baked into the expression, so they must be known at analysis;
+    * `build` reads them with [[intArg]]). SQL text is outside input, so
+    * a bad call fails as an AnalysisException that names the function,
+    * never as an IndexOutOfBounds or a ClassCastException. */
+  private def fn(name: String, doc: String, arity: Int, intArgs: Int*)(
+      build: Seq[Expression] => Expression)
+      : (String, String, Seq[Expression] => Expression) =
+    (name, doc, es => {
+      val usage = doc.split(" - ", 2).head
+      def fail(msg: String): Nothing = throw new AnalysisException(
+        errorClass = "_LEGACY_ERROR_TEMP_1332",
+        messageParameters = Map("errorMessage" -> s"$usage: $msg"))
+      if (es.length != arity)
+        fail(s"expects $arity arguments, got ${es.length} arguments")
+      intArgs.foreach { i =>
+        if (!es(i).foldable)
+          fail(s"argument ${i + 1} must be a literal (foldable) integer")
+        es(i).eval() match {
+          case v @ (_: java.lang.Byte | _: java.lang.Short |
+                    _: java.lang.Integer | _: java.lang.Long)
+              if v.asInstanceOf[Number].longValue.isValidInt =>
+          case other =>
+            fail(s"argument ${i + 1} must be an int-range integer, got $other")
+        }
+      }
+      build(es)
+    })
+
+  /** An integer argument that [[fn]] has checked. */
+  private def intArg(e: Expression): Int =
+    e.eval().asInstanceOf[Number].intValue
+
   /** (name, one-line doc, builder) for every native expression; the
     * single source of truth shared by the extension injection and
     * NativeFns.register. */
   val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    (NativeFns.DotName,
-      "graft_dot(a, b) - double-array dot product (codegen'd)",
+    fn(NativeFns.DotName,
+      "graft_dot(a, b) - double-array dot product (codegen'd)", 2)(
       es => DotProductExpr(es(0), es(1))),
-    (NativeFns.MinhashName,
-      "graft_minhash_sig(hashes) - 16-slot MinHash signature, one pass",
-      es => MinhashSigExpr(es.head)),
-    (NativeFns.LshName,
+    fn(NativeFns.MinhashName,
+      "graft_minhash_sig(hashes) - 16-slot MinHash signature, one pass", 1)(
+      es => MinhashSigExpr(es(0))),
+    fn(NativeFns.LshName,
       "graft_lsh_buckets(vec, tables, bits) - hyperplane LSH bucket ids",
-      es => LshBucketsExpr(es(0),
-        es(1).eval().asInstanceOf[Int],
-        es(2).eval().asInstanceOf[Int])),
-    (NativeFns.ShingleHashesName,
+      3, 1, 2)(
+      es => LshBucketsExpr(es(0), intArg(es(1)), intArg(es(2)))),
+    fn(NativeFns.ShingleHashesName,
       "graft_shingle_hashes(text, k) - distinct poly-hashes of k-shingles",
-      es => ShingleHashesExpr(es(0), es(1).eval().asInstanceOf[Int])),
-    (NativeFns.PosShingleHashesName,
+      2, 1)(
+      es => ShingleHashesExpr(es(0), intArg(es(1)))),
+    fn(NativeFns.PosShingleHashesName,
       "graft_pos_shingle_hashes(text, k) - positional poly-hashes, one pass",
-      es => PositionalShingleHashesExpr(es(0), es(1).eval().asInstanceOf[Int])),
-    (NativeFns.JaccardName,
-      "graft_jaccard(a, b) - Jaccard similarity of two long arrays",
+      2, 1)(
+      es => PositionalShingleHashesExpr(es(0), intArg(es(1)))),
+    fn(NativeFns.JaccardName,
+      "graft_jaccard(a, b) - Jaccard similarity of two long arrays", 2)(
       es => JaccardExpr(es(0), es(1))),
-    (NativeFns.SimhashName,
-      "graft_simhash(text) - 48-bit SimHash over token hashes, one pass",
-      es => SimhashExpr(es.head)),
-    (NativeFns.ArgMaxLongName,
+    fn(NativeFns.SimhashName,
+      "graft_simhash(text) - 48-bit SimHash over token hashes, one pass", 1)(
+      es => SimhashExpr(es(0))),
+    fn(NativeFns.ArgMaxLongName,
       "graft_argmax_long(ord, tie) - tie value of the max-ord row " +
-        "(ties to smallest tie); primitive-buffer hash aggregate",
+        "(ties to smallest tie); primitive-buffer hash aggregate", 2)(
       es => ArgMaxLongAgg(es(0), es(1))),
-    (NativeFns.HeavyHittersName,
+    fn(NativeFns.HeavyHittersName,
       "graft_heavy_hitters(item, k) - Misra-Gries candidate heavy hitters",
-      es => HeavyHittersAgg(es(0), es(1).eval().asInstanceOf[Int])),
-    (NativeFns.NfcName,
-      "graft_nfc(s) - Unicode NFC canonical normalization",
-      es => NfcNormalizeExpr(es.head)),
-    (NativeFns.StripAccentsName,
-      "graft_strip_accents(s) - NFD, drop combining marks, recompose",
-      es => StripAccentsExpr(es.head)),
-    (NativeFns.DeflateRatioName,
-      "graft_deflate_ratio(s) - deflate-compressed/raw byte ratio",
-      es => DeflateRatioExpr(es.head)),
-    (NativeFns.HilbertName,
+      2, 1)(
+      es => HeavyHittersAgg(es(0), intArg(es(1)))),
+    fn(NativeFns.NfcName,
+      "graft_nfc(s) - Unicode NFC canonical normalization", 1)(
+      es => NfcNormalizeExpr(es(0))),
+    fn(NativeFns.StripAccentsName,
+      "graft_strip_accents(s) - NFD, drop combining marks, recompose", 1)(
+      es => StripAccentsExpr(es(0))),
+    fn(NativeFns.DeflateRatioName,
+      "graft_deflate_ratio(s) - deflate-compressed/raw byte ratio", 1)(
+      es => DeflateRatioExpr(es(0))),
+    fn(NativeFns.HilbertName,
       "graft_hilbert(x, y, bits) - Hilbert curve index of a 2-D point",
-      es => {
-        // bits is baked into the generated loop, so it must be a
-        // foldable literal — validated HERE as an AnalysisException
-        // (arity, foldability, numeric type), not a ClassCastException
-        // or IndexOutOfBounds at analysis (ADVICE r9)
-        if (es.length != 3)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "_LEGACY_ERROR_TEMP_1332",
-            messageParameters = Map("errorMessage" ->
-              s"graft_hilbert expects (x, y, bits), got ${es.length} arguments"))
-        if (!es(2).foldable)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "_LEGACY_ERROR_TEMP_1332",
-            messageParameters = Map("errorMessage" ->
-              "graft_hilbert bits must be a literal (foldable) integer"))
-        val bits = es(2).eval() match {
-          case i: java.lang.Integer => i.intValue()
-          case l: java.lang.Long => l.intValue()
-          case s: java.lang.Short => s.intValue()
-          case b: java.lang.Byte => b.intValue()
-          case other => throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "_LEGACY_ERROR_TEMP_1332",
-            messageParameters = Map("errorMessage" ->
-              s"graft_hilbert bits must be integral, got $other"))
-        }
-        HilbertIndexExpr(es(0), es(1), bits)
-      }),
-    (NativeFns.UnigramSegmentName,
+      3, 2)(
+      es => HilbertIndexExpr(es(0), es(1), intArg(es(2)))),
+    fn(NativeFns.UnigramSegmentName,
       "graft_unigram_segment(word, pieces, scores) - Viterbi unigram-LM " +
-        "segmentation under a literal vocabulary",
+        "segmentation under a literal vocabulary", 3)(
       es => UnigramSegmentExpr(es(0), es(1), es(2))),
-    (NativeFns.AhoFoldCountsName,
+    fn(NativeFns.AhoFoldCountsName,
       "graft_aho_fold_counts(text, terms) - aho counts under the " +
-        "case/NFC fold (terms and text fold through the same map)",
-      es => {
-        if (es.length != 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "_LEGACY_ERROR_TEMP_1332",
-            messageParameters = Map("errorMessage" ->
-              "graft_aho_fold_counts expects (text, terms)"))
-        AhoCountsExpr(es(0), es(1), fold = true)
-      }),
-    (NativeFns.AhoFoldScrubName,
+        "case/NFC fold (terms and text fold through the same map)", 2)(
+      es => AhoCountsExpr(es(0), es(1), fold = true)),
+    fn(NativeFns.AhoFoldScrubName,
       "graft_aho_fold_scrub(text, terms, repl) - leftmost-longest " +
-        "masking under the case/NFC fold; original-text spans masked",
-      es => {
-        if (es.length != 3)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "_LEGACY_ERROR_TEMP_1332",
-            messageParameters = Map("errorMessage" ->
-              "graft_aho_fold_scrub expects (text, terms, repl)"))
-        AhoScrubExpr(es(0), es(1), es(2), fold = true)
-      }),
-    (NativeFns.LcsLenName,
+        "masking under the case/NFC fold; original-text spans masked", 3)(
+      es => AhoScrubExpr(es(0), es(1), es(2), fold = true)),
+    fn(NativeFns.LcsLenName,
       "graft_lcs_len(a, b) - longest-common-subsequence length of two " +
-        "token arrays (ROUGE-L core)",
+        "token arrays (ROUGE-L core)", 2)(
       es => LcsLenExpr(es(0), es(1))),
-    (NativeFns.TokenEditName,
+    fn(NativeFns.TokenEditName,
       "graft_tok_edit(a, b) - Levenshtein edit distance over token " +
-        "arrays (word-error-rate core)",
+        "arrays (word-error-rate core)", 2)(
       es => TokenEditExpr(es(0), es(1))),
-    (NativeFns.WordPieceSegmentName,
+    fn(NativeFns.WordPieceSegmentName,
       "graft_wordpiece_segment(word, vocab) - greedy longest-match " +
-        "WordPiece segmentation under a literal vocabulary",
+        "WordPiece segmentation under a literal vocabulary", 2)(
       es => WordPieceSegmentExpr(es(0), es(1))),
-    (NativeFns.CmCellsName,
+    fn(NativeFns.CmCellsName,
       "graft_cm_cells(key, depth, width) - Count-Min md5-fold cell " +
-        "vector of a string key, one pass",
-      es => CmCellsExpr(es(0),
-        es(1).eval().asInstanceOf[Int],
-        es(2).eval().asInstanceOf[Int])),
-    (NativeFns.VocabHitsName,
+        "vector of a string key, one pass", 3, 1, 2)(
+      es => CmCellsExpr(es(0), intArg(es(1)), intArg(es(2)))),
+    fn(NativeFns.VocabHitsName,
       "graft_vocab_hits(text, vocab) - sorted distinct vocabulary " +
-        "tokens of lower(trim(text)), one pass",
+        "tokens of lower(trim(text)), one pass", 2)(
       es => VocabHitsExpr(es(0), es(1))),
-    (NativeFns.AhoCountsName,
+    fn(NativeFns.AhoCountsName,
       "graft_aho_counts(text, terms) - per-term Aho-Corasick occurrence " +
-        "counts under a literal dictionary",
-      es => {
-        if (es.length != 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "_LEGACY_ERROR_TEMP_1332",
-            messageParameters = Map("errorMessage" ->
-              s"graft_aho_counts expects (text, terms), got ${es.length} arguments"))
-        AhoCountsExpr(es(0), es(1))
-      }),
-    (NativeFns.AhoScrubName,
+        "counts under a literal dictionary", 2)(
+      es => AhoCountsExpr(es(0), es(1))),
+    fn(NativeFns.AhoScrubName,
       "graft_aho_scrub(text, terms, repl) - leftmost-longest " +
-        "non-overlapping masking of a literal dictionary",
-      es => {
-        if (es.length != 3)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "_LEGACY_ERROR_TEMP_1332",
-            messageParameters = Map("errorMessage" ->
-              s"graft_aho_scrub expects (text, terms, repl), got ${es.length} arguments"))
-        AhoScrubExpr(es(0), es(1), es(2))
-      }))
+        "non-overlapping masking of a literal dictionary", 3)(
+      es => AhoScrubExpr(es(0), es(1), es(2))))
 }

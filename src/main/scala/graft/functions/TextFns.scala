@@ -40,6 +40,23 @@ object TextFns {
   /** Whitespace tokens of the trimmed text. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
+  /** The corpus word rule: whitespace tokens of the lower-cased,
+    * trimmed text, which the DuckDB oracles mirror as
+    * string_split_regex(lower(trim(s)), '\s+'). `trim` strips spaces
+    * only, so a tab or newline at either end (or an all-space text)
+    * leaves a "" token; "" maps to [""] and null to null. */
+  def words(text: Column): Column = split(lower(trim(text)), "\\s+")
+
+  /** Word n-grams, joined with single spaces, of an already-tokenized
+    * column (so a multi-n consumer tokenizes once). Fewer than n
+    * tokens, or a null array, give an empty array: Spark's sequence()
+    * would descend on start > stop, so the short case is guarded. */
+  def wordGrams(words: Column, n: Int): Column =
+    when(size(words) >= n,
+      transform(sequence(lit(1), size(words) - (n - 1)),
+        i => concat_ws(" ", slice(words, i, lit(n)))))
+      .otherwise(array().cast("array<string>"))
+
   def tokenCount(text: Column): Column =
     size(tokens(text)).cast("long")
 
@@ -135,11 +152,7 @@ object TextFns {
     * Gopher-style "repetitious document" quality signal. 0.0 when the
     * text has fewer than n tokens (no grams → nothing repeated). */
   def repetitionRatio(text: Column, n: Int): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    val grams = when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
+    val grams = wordGrams(words(text), n)
     round(when(size(grams) === 0, lit(0.0d))
       .otherwise(lit(1.0d) -
         size(array_distinct(grams)).cast("double") /

@@ -213,9 +213,8 @@ object Jobs {
     val corpus = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val sigPath = s"$outDir/corpus_sigs"
-    val fs = new org.apache.hadoop.fs.Path(sigPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(sigPath, "_graft_shingle_k")))
+    if (graft.sources.MaintainedIndex
+        .readMarker(spark, sigPath, Dedup.ShingleKMarker).isEmpty)
       Dedup.writeSignatureTable(corpus, "text", "doc_id", sigPath, k = 5)
     val srcDir = s"$outDir/feed"
     corpus.where(col("doc_id") % 4 === 0)
@@ -596,9 +595,8 @@ object Jobs {
     import graft.operators.Corpus
     val fps = s"$outDir/winnow_fps"
     val d = Tables.load(spark, sfDir, "documents")
-    val marker = new org.apache.hadoop.fs.Path(fps, "_graft_winnow_kw")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+    if (graft.sources.MaintainedIndex
+        .readMarker(spark, fps, Corpus.WinnowKwMarker).isEmpty) {
       Corpus.writeWinnowTable(d, "text", "doc_id", fps, k = 5, window = 4)
     } else {
       val (k, w) = Corpus.winnowTableParams(spark, fps)
@@ -942,7 +940,7 @@ object Jobs {
     import org.apache.spark.sql.functions._
     val feats = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"),
-        split(lower(trim(col("text"))), "\\s+").as("t"))
+        graft.functions.TextFns.words(col("text")).as("t"))
       .select(col("doc_id"),
         when(lit(4) * size(array_distinct(col("t"))) >=
           lit(3) * size(col("t")), 1L).otherwise(-1L).as("y"),

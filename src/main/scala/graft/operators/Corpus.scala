@@ -31,7 +31,7 @@ object Corpus {
     */
   def topKVocab(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     val counts = docs
-      .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("token"))
+      .select(explode(TextFns.words(col(textCol))).as("token"))
       .where(length(col("token")) > 0)
       .groupBy("token").agg(count(lit(1)).as("cnt"))
     counts.orderBy(col("cnt").desc, col("token")).limit(k)
@@ -58,7 +58,7 @@ object Corpus {
                  k: Int): DataFrame = {
     val toks = docs
       .select(col(idCol).as("id"),
-        explode(split(lower(trim(col(textCol))), "\\s+")).as("token"))
+        explode(TextFns.words(col(textCol))).as("token"))
       .where(length(col("token")) > 0)
     val perDoc = toks.groupBy(col("token"), col("id"))
       .agg(count(lit(1)).as("n"))
@@ -89,7 +89,7 @@ object Corpus {
         "between chunks — every token must land in at least one chunk")
     docs
       .select(col(idCol),
-        split(lower(trim(col(textCol))), "\\s+").as("__ta"))
+        TextFns.words(col(textCol)).as("__ta"))
       .select(col(idCol),
         posexplode(expr(
           s"transform(sequence(0, greatest(0, " +
@@ -135,7 +135,7 @@ object Corpus {
                     vocab: DataFrame,
                     tokenCol: String = "token"): DataFrame = {
     val toks = docs.select(col(idCol),
-        explode(split(lower(trim(col(textCol))), "\\s+")).as("__tok"))
+        explode(TextFns.words(col(textCol))).as("__tok"))
       .where(length(col("__tok")) > 0)
     val v = vocab.select(col(tokenCol).as("__tok")).distinct()
       .withColumn("__in", lit(1))
@@ -350,11 +350,8 @@ object Corpus {
     MaintainedIndex.writeClusteredIndexed(
       winnowingFingerprints(corpus, textCol, idCol, k, window),
       path, "h")
-    val meta = new org.apache.hadoop.fs.Path(path, "_graft_winnow_kw")
-    val fs = meta.getFileSystem(
-      corpus.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(meta, true)
-    try out.write(s"$k,$window".getBytes("UTF-8")) finally out.close()
+    MaintainedIndex.writeMarker(corpus.sparkSession, path, WinnowKwMarker,
+      s"$k,$window")
     // df state rides beside the data from birth: the containment
     // screens read corpus-wide document frequencies from this sidecar
     // instead of re-aggregating the whole fingerprint table per call.
@@ -406,10 +403,7 @@ object Corpus {
     ensureWinnowScreenIndex(spark, inPath)
     MaintainedIndex.compactClusteredIndexed(
       spark, inPath, outPath, "h", targetFileBytes)
-    val meta = new org.apache.hadoop.fs.Path(outPath, "_graft_winnow_kw")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(meta, true)
-    try out.write(s"$k,$w".getBytes("UTF-8")) finally out.close()
+    MaintainedIndex.writeMarker(spark, outPath, WinnowKwMarker, s"$k,$w")
     MaintainedIndex.compactClusteredIndexed(spark,
       winnowByIdPath(inPath), winnowByIdPath(outPath), "id",
       targetFileBytes)
@@ -474,21 +468,20 @@ object Corpus {
     ()
   }
 
+  /** Marker holding the `k,window` geometry of a winnow table. */
+  private[graft] val WinnowKwMarker = "_graft_winnow_kw"
+
   /** (k, window) a winnowing fingerprint table was written with. */
   def winnowTableParams(spark: org.apache.spark.sql.SparkSession,
                         path: String): (Int, Int) = {
-    val meta = new org.apache.hadoop.fs.Path(path, "_graft_winnow_kw")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(meta))
-      throw new IllegalArgumentException(
-        s"no _graft_winnow_kw marker at $path — not a graft winnowing " +
+    val parts = graft.sources.MaintainedIndex
+      .readMarker(spark, path, WinnowKwMarker)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no $WinnowKwMarker marker at $path — not a graft winnowing " +
           "fingerprint table (or written by another tool / path typo); " +
           "write it with Corpus.writeWinnowTable, which records the " +
-          "(k, window) geometry")
-    val buf = new Array[Byte](fs.getFileStatus(meta).getLen.toInt)
-    val in = fs.open(meta)
-    try in.readFully(buf) finally in.close()
-    val parts = new String(buf, "UTF-8").trim.split(",")
+          "(k, window) geometry"))
+      .split(",")
     (parts(0).toInt, parts(1).toInt)
   }
 

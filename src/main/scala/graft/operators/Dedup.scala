@@ -238,21 +238,15 @@ object Dedup {
     // O(candidates), not O(corpus))
     graft.sources.MaintainedIndex.writeClusteredIndexed(
       sigOf(corpus, textCol, idCol, k), path, "doc_id")
-    writeShingleK(corpus.sparkSession, path, k)
+    graft.sources.MaintainedIndex.writeMarker(corpus.sparkSession, path,
+      ShingleKMarker, k.toString)
   }
 
-  /** Record the shingle size next to a signature table's data
-    * (underscore-prefixed: parquet readers skip it): signatures built
-    * with one k are meaningless against a batch hashed with another,
-    * and without this marker a mismatched screen would silently admit
-    * every duplicate. */
-  private def writeShingleK(spark: org.apache.spark.sql.SparkSession,
-                            path: String, k: Int): Unit = {
-    val meta = new org.apache.hadoop.fs.Path(path, "_graft_shingle_k")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(meta, true)
-    try out.write(k.toString.getBytes("UTF-8")) finally out.close()
-  }
+  /** Marker holding the shingle size a signature table was written
+    * with: signatures built with one k are meaningless against a batch
+    * hashed with another, and without it a mismatched screen would
+    * silently admit every duplicate. */
+  private[graft] val ShingleKMarker = "_graft_shingle_k"
 
   /** Refuse a signature table whose recorded shingle size is not `k`:
     * mixed-k shingle sets never intersect, so screening (or appending)
@@ -269,7 +263,7 @@ object Dedup {
 
   /** Append an ADMITTED batch's signatures to a maintained signature
     * table — the live-table half of the ingest loop: screen the batch
-    * with [[incrementalNearDupAgainstSigsM]], admit the survivors, then
+    * with [[incrementalNearDupAgainstPreSigsM]], admit the survivors, then
     * append their signatures so the NEXT batch screens against them
     * too. Refuses a table whose recorded shingle size differs (same
     * guarantee as the screen itself, [[requireShingleK]]). */
@@ -292,54 +286,33 @@ object Dedup {
     val k = signatureTableK(spark, inPath)
     graft.sources.MaintainedIndex.compactClusteredIndexed(
       spark, inPath, outPath, "doc_id", targetFileBytes)
-    writeShingleK(spark, outPath, k)
+    graft.sources.MaintainedIndex.writeMarker(spark, outPath,
+      ShingleKMarker, k.toString)
   }
 
   /** Shingle size a signature table was written with. */
   def signatureTableK(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Int = {
-    val meta = new org.apache.hadoop.fs.Path(path, "_graft_shingle_k")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(meta))
-      throw new IllegalArgumentException(
-        s"no _graft_shingle_k marker at $path — not a graft signature " +
+                      path: String): Int =
+    graft.sources.MaintainedIndex.readMarker(spark, path, ShingleKMarker)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no $ShingleKMarker marker at $path — not a graft signature " +
           "table (or written by another tool / path typo); write it with " +
-          "Dedup.writeSignatureTable, which records the shingle size")
-    val buf = new Array[Byte](fs.getFileStatus(meta).getLen.toInt)
-    val in = fs.open(meta)
-    try in.readFully(buf) finally in.close()
-    new String(buf, "UTF-8").trim.toInt
-  }
+          "Dedup.writeSignatureTable, which records the shingle size"))
+      .toInt
 
   /** [[incrementalNearDup]] against a MAINTAINED signature table
-    * ([[writeSignatureTable]]) instead of raw corpus text. Identical
-    * results (the signature relation is deterministic in the text);
-    * SigTableSpec asserts the equality. The corpus side of the plan is
-    * a column-pruned scan of the stored table — band keys read m0..m15,
-    * verification reads __sh — with no text ever touched. Returns
-    * [[incrementalNearDupAgainstPreSigsM]]'s executor-local handle; the
-    * caller releases it.
-    */
-  def incrementalNearDupAgainstSigsM(batch: DataFrame, sigTablePath: String,
-                                     textCol: String, idCol: String,
-                                     k: Int = 5,
-                                     threshold: Double = 0.5): Materialized = {
-    requireShingleK(batch.sparkSession, sigTablePath, k)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sigB = sigOf(batch, textCol, idCol, k).persist(lvl)
-    val out = incrementalNearDupAgainstPreSigsM(sigB, sigTablePath, threshold)
-    sigB.unpersist(false)
-    out
-  }
-
-  /** [[incrementalNearDupAgainstSigsM]] over an ALREADY-COMPUTED batch
-    * signature relation (`(doc_id, __sh, m0..m15)`, typically persisted
-    * by the caller) — the shape for callers that need the batch's
-    * signatures again after the screen (the curate loop appends the
-    * survivors' signatures to the table: tokenizing the batch once and
-    * filtering beats tokenizing twice). No k-check here: the caller
-    * owns the signature computation and the guard that matched it to
-    * the table.
+    * ([[writeSignatureTable]]) instead of raw corpus text, over an
+    * ALREADY-COMPUTED batch signature relation ([[signatureRelation]],
+    * `(doc_id, __sh, m0..m15)`, typically persisted by the caller).
+    * Identical results (the signature relation is deterministic in the
+    * text); SigTableSpec asserts the equality. The corpus side of the
+    * plan is a column-pruned scan of the stored table — band keys read
+    * m0..m15, verification reads __sh — with no text ever touched.
+    * Callers that need the batch's signatures again after the screen
+    * (the curate loop appends the survivors' signatures to the table)
+    * tokenize the batch once. No k-check here: the caller owns the
+    * signature computation and the guard that matched it to the table
+    * ([[requireShingleK]]).
     *
     * The verified pairs are materialized [[MatStrategy.Local]]: they
     * never escape the caller's batch, which releases the handle, and a
@@ -388,7 +361,7 @@ object Dedup {
 
   /** Whole-corpus near-dup pairs over a MAINTAINED signature table
     * ([[writeSignatureTable]]) — the self-join twin of
-    * [[incrementalNearDupAgainstSigsM]], and the shape a re-clustering
+    * [[incrementalNearDupAgainstPreSigsM]], and the shape a re-clustering
     * run (threshold change, report refresh) takes once the corpus's
     * signatures are on disk: identical results to
     * [[minhashNearDupPairs]] (the signature relation is deterministic
@@ -543,7 +516,7 @@ object Dedup {
     * [[containmentPairsFromSigs]], and the shape a live ingest runs to
     * ask "is this new document an excerpt (or an expansion) of
     * something already in the corpus?" before admitting it. Banded
-    * candidates exactly like [[incrementalNearDupAgainstSigsM]]
+    * candidates exactly like [[incrementalNearDupAgainstPreSigsM]]
     * (corpus text never touched; band keys read m0..m15, verification
     * reads __sh), then the exact asymmetric score in integer basis
     * points, reported in BOTH directions so the caller can tell
@@ -890,6 +863,11 @@ object Dedup {
     keep.join(seen, Seq("fingerprint"), "left_anti")
   }
 
+  /** Distinct word n-grams of a text: the gram set of the three
+    * n-gram reports below (empty below n tokens and on null text). */
+  private[graft] def distinctGrams(text: Column, n: Int): Column =
+    array_distinct(TextFns.wordGrams(TextFns.words(text), n))
+
   /** Benchmark decontamination report: for every corpus document, how
     * much of it appears verbatim in an evaluation set — the fraction of
     * its distinct word n-grams that occur in ANY eval document. Training
@@ -908,16 +886,10 @@ object Dedup {
   def contaminationReport(corpus: DataFrame, evalSet: DataFrame,
                           textCol: String, idCol: String,
                           n: Int = 8): DataFrame = {
-    def grams(t: Column): Column = {
-      val toks = split(lower(trim(t)), "\\s+")
-      when(size(toks) >= n,
-        array_distinct(transform(
-          sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n))))))
-        .otherwise(array().cast("array<string>"))
-    }
-    val cg = corpus.select(col(idCol), grams(col(textCol)).as("grams"))
-    val ev = evalSet.select(explode(grams(col(textCol))).as("gr")).distinct()
+    val cg = corpus.select(col(idCol),
+      distinctGrams(col(textCol), n).as("grams"))
+    val ev = evalSet.select(explode(distinctGrams(col(textCol), n)).as("gr"))
+      .distinct()
     val matched = cg.select(col(idCol), explode(col("grams")).as("gr"))
       .join(broadcast(ev), Seq("gr"))
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_matched"))
@@ -957,12 +929,7 @@ object Dedup {
     */
   def noveltyReport(corpus: DataFrame, textCol: String, idCol: String,
                     n: Int = 2): DataFrame = {
-    val toks = split(lower(trim(col(textCol))), "\\s+")
-    val grams = when(size(toks) >= n,
-      array_distinct(transform(
-        sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n))))))
-      .otherwise(array().cast("array<string>"))
+    val grams = distinctGrams(col(textCol), n)
     // the gram fan-out is this operator's CPU and runs before any
     // shuffle — one doc-keyed repartition at explicit width fans it
     // past the scan's split count (the SparseSim device)
@@ -986,16 +953,8 @@ object Dedup {
     * rules, so short texts stay engine-portable).
     */
   def ngramJaccard(a: Column, b: Column, n: Int): Column = {
-    def grams(t: Column): Column = {
-      val toks = split(lower(trim(t)), "\\s+")
-      when(size(toks) >= n,
-        array_distinct(transform(
-          sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n))))))
-        .otherwise(array().cast("array<string>"))
-    }
-    val ga = grams(a)
-    val gb = grams(b)
+    val ga = distinctGrams(a, n)
+    val gb = distinctGrams(b, n)
     val inter = size(array_intersect(ga, gb))
     val union = size(array_union(ga, gb))
     round(when(union === 0, lit(0.0d))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFns
+
 /** Statistical language-model scoring over a document corpus — the
   * CCNet/Gopher-style quality signals that need a MODEL OF THE CORPUS
   * rather than a single row: bigram cross-entropy (perplexity filtering)
@@ -29,7 +31,7 @@ object LanguageModel {
   private def tokens(docs: DataFrame, textCol: String,
                      idCol: String): DataFrame =
     docs.select(col(idCol),
-      split(lower(trim(col(textCol))), "\\s+").as("__ta"))
+      TextFns.words(col(textCol)).as("__ta"))
 
   /** Add-one-smoothed bigram cross-entropy of each document under the
     * corpus's own bigram distribution: xent = -(1/m) Σ ln p(w2|w1),

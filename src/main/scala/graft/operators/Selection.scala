@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFns
+
 /** Distribution-matched data selection over hashed n-gram features —
   * the DSIR recipe (Xie, Santurkar, Ma & Liang, "Data Selection for
   * Language Models via Importance Resampling", NeurIPS 2023): score
@@ -121,16 +123,12 @@ object Selection {
   private def gramBuckets(corpus: DataFrame, textCol: String,
                           idCol: String, isTarget: Column, n: Int,
                           buckets: Int): DataFrame = {
-    val toks = split(lower(trim(col(textCol))), "\\s+")
-    val grams = when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
+    val grams = TextFns.wordGrams(TextFns.words(col(textCol)), n)
     corpus
       .select(col(idCol).as("id"), isTarget.as("is_tgt"),
         explode(grams).as("g"))
       .select(col("id"), col("is_tgt"),
-        (graft.functions.TextFns.hash32(col("g")) % buckets).as("bucket"))
+        (TextFns.hash32(col("g")) % buckets).as("bucket"))
   }
 
   /** The selection decision over an already-computed (id, w_micro)

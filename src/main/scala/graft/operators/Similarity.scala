@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.MaintainedIndex
+
 /** Embedding similarity search over an ArrayType(FloatType) column:
   * brute-force cosine top-k as the exact baseline, and a deterministic
   * random-hyperplane LSH bucketing as the 100 TB scale path.
@@ -1173,11 +1175,11 @@ object Similarity {
         .write.mode("overwrite").partitionBy("list_id")
         .parquet(s"$path/codes")
     } finally enc.unpersist(false)
-    val meta = new org.apache.hadoop.fs.Path(path, "_graft_ivfsq_meta")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(meta, true)
-    try out.write(s"v1 nlist=$nlist".getBytes("UTF-8")) finally out.close()
+    MaintainedIndex.writeMarker(spark, path, IvfSqMarker, s"v1 nlist=$nlist")
   }
+
+  /** Format marker of a stored index: `v1 nlist=<nlist>`. */
+  private val IvfSqMarker = "_graft_ivfsq_meta"
 
   /** Append a NEW batch of embeddings to a stored SQ8∘IVF index under
     * the FROZEN quantizer — the live-table half of the ANN ingest loop
@@ -1237,19 +1239,13 @@ object Similarity {
     * [[Dedup.signatureTableK]]'s guarantee — a stale or foreign layout
     * must fail loudly, not silently return wrong neighbors). */
   def ivfSqIndexNlist(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Int = {
-    val meta = new org.apache.hadoop.fs.Path(path, "_graft_ivfsq_meta")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(meta))
+                      path: String): Int =
+    MaintainedIndex.readMarker(spark, path, IvfSqMarker).getOrElse(
       throw new IllegalArgumentException(
-        s"no _graft_ivfsq_meta marker at $path — not a graft SQ8/IVF " +
+        s"no $IvfSqMarker marker at $path — not a graft SQ8/IVF " +
           "index (or written by another tool / path typo); write it " +
-          "with Similarity.writeIvfSqIndex")
-    val buf = new Array[Byte](fs.getFileStatus(meta).getLen.toInt)
-    val in = fs.open(meta)
-    try in.readFully(buf) finally in.close()
-    new String(buf, "UTF-8").trim.stripPrefix("v1 nlist=").toInt
-  }
+          "with Similarity.writeIvfSqIndex"))
+      .stripPrefix("v1 nlist=").toInt
 
   /** The stored index's centroid table `(c_id, c_v, c_norm)`, after
     * the layout guard. */

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFns
+
 /** Sparse lexical similarity: TF-IDF-weighted cosine over word n-gram
   * features, computed with an inverted-index (posting-list) join — the
   * classic term-at-a-time all-pairs similarity plan (Elsayed/Lin/Oard,
@@ -51,11 +53,7 @@ object SparseSim {
                     n: Int = 3, maxDf: Long = 50): DataFrame = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
     require(maxDf >= 1, s"df cap must be >= 1, got $maxDf")
-    val toks = split(lower(trim(col(textCol))), "\\s+")
-    val grams = when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
+    val grams = TextFns.wordGrams(TextFns.words(col(textCol)), n)
     // The gram explosion is this operator's CPU and runs BEFORE any
     // shuffle, so its parallelism is the scan's split count; a corpus
     // packed into few row groups would run it near-serially. One cheap

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFns
+
 /** Generation-eval overlap metrics — ROUGE-n/ROUGE-L precision/recall/
   * F1 and BLEU's clipped modified n-gram precision (Papineni et al.,
   * ACL 2002; Lin, ACL 2004) — in the library's exact-integer
@@ -35,26 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object TextEval {
 
-  /** Whitespace word tokens, lowercased — the corpus tokenization the
-    * oracle mirrors with string_split_regex(lower(trim(s)), '\s+'). */
-  private def toks(c: Column): Column = split(lower(trim(c)), "\\s+")
-
-  /** Word n-grams joined with single spaces; fewer than n tokens →
-    * empty array (Spark's sequence() would DESCEND on start>stop, so
-    * the short case is guarded explicitly). */
-  private[graft] def wordGrams(c: Column, n: Int): Column =
-    gramsOfToks(toks(c), n)
-
-  /** n-grams over an ALREADY-TOKENIZED array column — the shared form,
-    * so multi-n consumers tokenize once and derive every n from it. */
-  private def gramsOfToks(t: Column, n: Int): Column = {
-    require(n >= 1)
-    if (n == 1) t
-    else when(size(t) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), size(t) - (n - 1)),
-        i => array_join(slice(t, i, lit(n)), " ")))
-  }
-
   /** The shared overlap engine: for each requested n, per-pair
     * (clip, n_cand, n_ref) — ONE explode over a side- and n-tagged
     * gram stream, ONE (pair, n, gram) aggregation with conditional
@@ -73,14 +55,19 @@ object TextEval {
   private def overlapStats(pairs: DataFrame, idCol: String,
                            candCol: String, refCol: String,
                            ns: Seq[Int]): DataFrame = {
-    require(ns.nonEmpty && ns.forall(_ >= 1))
+    require(ns.contains(1) && ns.forall(_ >= 1))
     val id = col(idCol)
     val base = pairs.select(id,
-      toks(col(candCol)).as("ct"), toks(col(refCol)).as("rt"))
+      TextFns.words(col(candCol)).as("ct"),
+      TextFns.words(col(refCol)).as("rt"))
+    // unigrams are the tokens themselves (ns holds 1), so a null side
+    // (null text) nulls the flatten/concat below and drops the pair's
+    // whole gram stream
     def tagged(t: Column, side: Int): Column =
-      flatten(array(ns.map(n =>
-        transform(gramsOfToks(t, n), g =>
-          struct(lit(n).as("n"), lit(side).as("side"), g.as("g")))): _*))
+      flatten(array(ns.map { n =>
+        transform(if (n == 1) t else TextFns.wordGrams(t, n), g =>
+          struct(lit(n).as("n"), lit(side).as("side"), g.as("g")))
+      }: _*))
     base
       .select(id, explode(
         concat(tagged(col("ct"), 0), tagged(col("rt"), 1))).as("u"))
@@ -176,7 +163,8 @@ object TextEval {
     graft.functions.native.NativeFns.register(pairs.sparkSession)
     val id = col(idCol)
     pairs
-      .select(id, toks(col(candCol)).as("ct"), toks(col(refCol)).as("rt"))
+      .select(id, TextFns.words(col(candCol)).as("ct"),
+        TextFns.words(col(refCol)).as("rt"))
       .select(id,
         graft.functions.native.NativeFns.lcsLen(col("ct"), col("rt"))
           .as("lcs"),
@@ -207,7 +195,8 @@ object TextEval {
     graft.functions.native.NativeFns.register(pairs.sparkSession)
     val id = col(idCol)
     pairs
-      .select(id, toks(col(candCol)).as("ct"), toks(col(refCol)).as("rt"))
+      .select(id, TextFns.words(col(candCol)).as("ct"),
+        TextFns.words(col(refCol)).as("rt"))
       .select(id,
         graft.functions.native.NativeFns.tokenEdit(col("ct"), col("rt"))
           .as("edits"),
@@ -242,7 +231,7 @@ object TextEval {
       regexp_replace(lower(c), "\\s+", "")
     def charGrams(t: String, n: Int): Column =
       // short case guarded explicitly: Spark's sequence() DESCENDS on
-      // start > stop (the wordGrams lesson)
+      // start > stop (as in TextFns.wordGrams)
       expr(s"CASE WHEN char_length($t) < $n " +
         s"THEN CAST(array() AS array<string>) " +
         s"ELSE transform(sequence(1, char_length($t) - ${n - 1}), " +
@@ -306,9 +295,9 @@ object TextEval {
     val id = col(idCol)
     val ns = (topNs ++ dupNs).distinct.sorted
     require(ns.forall(_ >= 2), "gram sizes must be >= 2")
-    val base = docs.select(id, toks(col(textCol)).as("t"))
+    val base = docs.select(id, TextFns.words(col(textCol)).as("t"))
     val taggedGrams = flatten(array(ns.map(n =>
-      transform(gramsOfToks(col("t"), n), (g, i) =>
+      transform(TextFns.wordGrams(col("t"), n), (g, i) =>
         struct(lit(n).as("n"), (i + 1).as("pos"), g.as("g")))): _*))
     val u = base
       .select(id, explode(taggedGrams).as("u"))
@@ -368,7 +357,7 @@ object TextEval {
                        idCol: String): DataFrame = {
     val id = col(idCol)
     val nt = docs.select(id,
-      size(toks(col(textCol))).cast("long").as("n_tokens"))
+      size(TextFns.words(col(textCol))).cast("long").as("n_tokens"))
     val gs = repetitionCore(docs, textCol, idCol,
       topNs = Seq(2), dupNs = Seq(5))
     nt.join(gs, Seq(idCol), "left")
@@ -406,7 +395,7 @@ object TextEval {
                         idCol: String): DataFrame = {
     val id = col(idCol)
     val nt = docs.select(id,
-      size(toks(col(textCol))).cast("long").as("n_tokens"))
+      size(TextFns.words(col(textCol))).cast("long").as("n_tokens"))
     val gs = repetitionCore(docs, textCol, idCol,
       topNs = Seq(2, 3, 4), dupNs = Seq(5))
     val lines = docs

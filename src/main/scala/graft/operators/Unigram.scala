@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFns
 import graft.functions.native.{NativeFns, UnigramSegmentExpr}
 
 /** Unigram-LM (SentencePiece-style) tokenizer — the probabilistic
@@ -53,7 +54,7 @@ object Unigram {
     * handles any length). */
   def wordCounts(docs: DataFrame, textCol: String,
                  maxWordLen: Int): DataFrame =
-    docs.select(explode(split(lower(trim(col(textCol))), "\\s+")).as("w"))
+    docs.select(explode(TextFns.words(col(textCol))).as("w"))
       .where(length(col("w")).between(1, maxWordLen))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFns
+
 /** WordPiece tokenizer training and application (Schuster & Nakajima,
   * ICASSP 2012; the BERT tokenizer family) — the third trainer family
   * beside the BPE lane (frequency-ranked merges) and the unigram-LM
@@ -53,7 +55,7 @@ object WordPiece {
     * '#'-free (the continuation marker's reservation), separator-free. */
   def pretokens(docsDf: DataFrame, textCol: String): DataFrame =
     docsDf
-      .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
+      .select(explode(TextFns.words(col(textCol))).as("word"))
       .where(length(col("word")) >= 1 &&
         !col("word").contains("#") && !col("word").contains(Sep))
 

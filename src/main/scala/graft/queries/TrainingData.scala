@@ -2685,7 +2685,7 @@ object TrainingData {
     val rot = Window.partitionBy(col("source"))
       .orderBy(col("cycle"), col("tier"), col("doc_id"))
     docs(spark, dir).select(col("doc_id"), col("source"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
+        TextFns.tokenCount(col("text")).as("n_tok"))
       .withColumn("tier", ntile(5).over(diff).cast("long"))
       .withColumn("cycle", row_number().over(inTier).cast("long"))
       .withColumn("pos", row_number().over(rot).cast("long"))
@@ -2897,12 +2897,12 @@ object TrainingData {
     val corpus = nearDupCorpus(spark, dir)
     val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     val clusters = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+    val words = TextFns.words(col("text"))
+    val stop = size(filter(words,
+      t => t.isin("the", "a", "of", "and", "in", "to", "is")))
     val scored = corpus.select(col("doc_id"),
-      expr("""cast(
-        size(filter(split(lower(trim(text)), '\\s+'),
-          t -> t in ('the','a','of','and','in','to','is')))
-        * 10000 div greatest(size(split(lower(trim(text)), '\\s+')), 1)
-        as bigint)""").as("q_bp"))
+      call_function("div", stop * 10000, greatest(size(words), lit(1)))
+        .cast("bigint").as("q_bp"))
     scored.join(clusters, Seq("doc_id"), "left")
       .select(col("q_bp"),
         when(col("cluster_rep").isNull, "singleton")
@@ -5127,7 +5127,7 @@ object TrainingData {
   // oracle's inner scan is O(lr^2) per DP row; the operator itself has
   // no such bound).
   def rougeLQ(spark: SparkSession, dir: String): DataFrame = {
-    val t8 = slice(split(lower(trim(col("text"))), "\\s+"), 1, 8)
+    val t8 = slice(TextFns.words(col("text")), 1, 8)
     val candArr = concat(slice(t8, 1, 3), slice(t8, 5, 4),
       array(lit("zzquux")))
     val pairs = docs(spark, dir).select(col("doc_id"),
@@ -6210,7 +6210,7 @@ object TrainingData {
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs(spark, dir).select(col("doc_id"), col("source"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
+        TextFns.tokenCount(col("text")).as("n_tok"))
       .withColumn("cum", sum(col("n_tok")).over(w))
       .withColumn("seq_id", expr("(cum - n_tok) div 2048"))
       .drop("cum")
@@ -6242,7 +6242,7 @@ object TrainingData {
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs(spark, dir).select(col("doc_id"), col("source"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
+        TextFns.tokenCount(col("text")).as("n_tok"))
       .withColumn("cum", sum(col("n_tok")).over(w))
       .withColumn("straddles",
         expr("(cum - n_tok) div 2048") =!= expr("(cum - 1) div 2048"))
@@ -7119,7 +7119,7 @@ object TrainingData {
   def bpeMergesQ(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy(col("cnt").desc, col("pair"))
     docs(spark, dir)
-      .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
+      .select(explode(TextFns.words(col("text"))).as("w"))
       .where(length(col("w")) >= 2)
       .select(explode(expr(
         "transform(sequence(1, length(w) - 1), i -> substr(w, i, 2))"))
@@ -7161,7 +7161,7 @@ object TrainingData {
   def bpeTrainQ(spark: SparkSession, dir: String): DataFrame = {
     val sep = "\u001f" // unit separator: joins symbols, never in corpus text
     var vocab = docs(spark, dir)
-      .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
+      .select(explode(TextFns.words(col("text"))).as("w"))
       .where(length(col("w")) >= 1)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
       .select(col("cnt"), array_join(split(col("w"), ""), sep).as("rep"))
@@ -7250,7 +7250,7 @@ object TrainingData {
           .collect().map(r => (r.getString(1), r.getString(2))).toSeq
       }
     val base = docs(spark, dir).select(col("doc_id"),
-      array_join(transform(split(lower(trim(col("text"))), "\\s+"),
+      array_join(transform(TextFns.words(col("text")),
         w => array_join(split(w, ""), sep)), sep + " " + sep).as("rep"))
     val applied = merges.foldLeft(base) { case (df, (l, r)) =>
       df.withColumn("rep", org.apache.spark.sql.functions
@@ -7471,7 +7471,7 @@ object TrainingData {
       .collect().map(r => (r.getString(0), r.getLong(2))).toSeq
     docs(spark, dir)
       .select(col("doc_id"),
-        explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
+        explode(TextFns.words(col("text"))).as("w"))
       .where(length(col("w")).between(1, UnigramMaxWordLen))
       .withColumn("np", size(split(
         graft.functions.native.NativeFns.unigramSegment(col("w"),
@@ -7585,7 +7585,7 @@ object TrainingData {
       .orderBy(col("piece"))
       .collect().map(r => (r.getString(0), r.getLong(2))).toSeq
     val awords = docs(spark, dir)
-      .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
+      .select(explode(TextFns.words(col("text"))).as("w"))
       .where(length(col("w")).between(1, UnigramMaxWordLen))
       .select(translate(col("w"), "ae", "äé").as("w"))
       .distinct()
@@ -8628,7 +8628,7 @@ object TrainingData {
   def tfidfQ(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
     val toks = d.select(col("doc_id"),
-      explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
+      explode(TextFns.words(col("text"))).as("term"))
     val tf = toks.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("c"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("d"))
@@ -10069,7 +10069,7 @@ object TrainingData {
   // (the oracle's inner scan is O(lr²) per DP row; the operator itself
   // has no such bound).
   def tokenEditQ(spark: SparkSession, dir: String): DataFrame = {
-    val t8 = slice(split(lower(trim(col("text"))), "\\s+"), 1, 8)
+    val t8 = slice(TextFns.words(col("text")), 1, 8)
     val pairs = docs(spark, dir).select(col("doc_id"),
       array_join(t8, " ").as("cand"),
       array_join(array_sort(t8), " ").as("ref"))
@@ -10272,7 +10272,7 @@ object TrainingData {
                                  dir: String): DataFrame =
     docs(spark, dir)
       .select(col("doc_id"),
-        split(lower(trim(col("text"))), "\\s+").as("t"))
+        TextFns.words(col("text")).as("t"))
       .select(col("doc_id"),
         when(lit(4) * size(array_distinct(col("t"))) >=
           lit(3) * size(col("t")), 1L).otherwise(-1L).as("y"),

@@ -68,6 +68,31 @@ object MaintainedIndex {
     dataFiles(fs, p).size
   }
 
+  /** Record `value` in the marker file `name` beside the table at
+    * `dir` (an underscore name: parquet readers skip it). A marker
+    * holds the parameters the table was built with, which every reader
+    * must match. Overwrites. */
+  private[graft] def writeMarker(spark: SparkSession, dir: String,
+                                 name: String, value: String): Unit = {
+    val (fs, p) = fsOf(spark, dir)
+    val out = fs.create(new Path(p, name), true)
+    try out.write(value.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The trimmed text of the marker file `name` at `dir`, or None when
+    * the table has no such marker. */
+  private[graft] def readMarker(spark: SparkSession, dir: String,
+                                name: String): Option[String] = {
+    val (fs, p) = fsOf(spark, dir)
+    val m = new Path(p, name)
+    if (!fs.exists(m)) None
+    else {
+      val in = fs.open(m)
+      try Some(new String(in.readAllBytes(), "UTF-8").trim)
+      finally in.close()
+    }
+  }
+
   /** Visible data files of a parquet directory — the same filter
     * Spark's own listing applies (no underscore/dot names). */
   private[sources] def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =

@@ -264,7 +264,7 @@ object StreamingOps {
     * survivors to `admittedDir`, and append THEIR signatures back to the
     * table so the next batch screens against them too — the live-table
     * ingest loop of a training-data pipeline. The screen itself is the
-    * batch operator (incrementalNearDupAgainstSigsM): batch and
+    * batch operator (incrementalNearDupAgainstPreSigsM): batch and
     * continuous ingestion share one implementation, so their admit
     * decisions are identical by construction.
     *

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftExtensions must make the native functions SQL-resolvable in a
@@ -60,6 +60,54 @@ class ExtensionsSpec extends AnyFunSuite {
         .contains("got 2 arguments"))
       assert(analysisMessage("SELECT graft_hilbert(3L, 5L, " +
         "CAST(id AS INT)) FROM range(1)").contains("foldable"))
+      // the same checks for every registered function: one argument too
+      // few and one too many fail at analysis naming the function, and
+      // a BIGINT literal works wherever an integer literal is baked in.
+      // A valid call per function; `#` marks an integer literal.
+      val calls = Map(
+        "graft_dot" -> Seq("array(1.0D, 2.0D)", "array(3.0D, 4.0D)"),
+        "graft_minhash_sig" -> Seq("array(1L, 2L, 3L)"),
+        "graft_lsh_buckets" -> Seq("array(1.0D, -2.0D)", "#2", "#4"),
+        "graft_shingle_hashes" -> Seq("'hello world'", "#5"),
+        "graft_pos_shingle_hashes" -> Seq("'hello world'", "#5"),
+        "graft_jaccard" -> Seq("array(1L, 2L)", "array(2L, 3L)"),
+        "graft_simhash" -> Seq("'hello world'"),
+        "graft_argmax_long" -> Seq("id", "-id"),
+        "graft_heavy_hitters" -> Seq("CAST(id % 2 AS STRING)", "#2"),
+        "graft_nfc" -> Seq("'e\u0301'"),
+        "graft_strip_accents" -> Seq("'é'"),
+        "graft_deflate_ratio" -> Seq("'aaaaaaaa'"),
+        "graft_hilbert" -> Seq("3L", "5L", "#8"),
+        "graft_unigram_segment" ->
+          Seq("'ab'", "array('a', 'b', 'ab')", "array(-2L, -2L, -1L)"),
+        "graft_aho_fold_counts" -> Seq("'Ab ab'", "array('ab')"),
+        "graft_aho_fold_scrub" -> Seq("'Ab ab'", "array('ab')", "'*'"),
+        "graft_lcs_len" -> Seq("array('a', 'b')", "array('b')"),
+        "graft_tok_edit" -> Seq("array('a', 'b')", "array('b')"),
+        "graft_wordpiece_segment" -> Seq("'ab'", "array('a', '##b')"),
+        "graft_cm_cells" -> Seq("'key'", "#3", "#64"),
+        "graft_vocab_hits" -> Seq("'a b'", "array('a')"),
+        "graft_aho_counts" -> Seq("'ab ab'", "array('ab')"),
+        "graft_aho_scrub" -> Seq("'ab ab'", "array('ab')", "'*'"))
+      assert(calls.keySet == GraftExtensions.functions.map(_._1).toSet)
+      calls.foreach { case (name, args) =>
+        def sql(as: Seq[String]) =
+          s"SELECT $name(${as.mkString(", ")}) FROM range(3)"
+        def ints(lit: String => String) =
+          args.map(a => if (a.startsWith("#")) lit(a.tail) else a)
+        for (bad <- Seq(ints(identity).init, ints(identity) :+ "1")) {
+          val e = intercept[Exception] { spark.sql(sql(bad)).collect() }
+          val chain = Iterator.iterate(e: Throwable)(_.getCause)
+            .takeWhile(_ != null).toSeq
+          assert(chain.exists(_.isInstanceOf[AnalysisException]) &&
+            chain.exists(c => String.valueOf(c.getMessage).contains(name)),
+            s"${sql(bad)}: $e")
+        }
+        if (args.exists(_.startsWith("#")))
+          assert(spark.sql(sql(ints(k => s"CAST($k AS BIGINT)")))
+            .collect().toSeq ==
+            spark.sql(sql(ints(identity))).collect().toSeq, name)
+      }
     } finally {
       spark.stop()
       SparkSession.clearActiveSession()

@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
   * registration-free references the native `graft_dot`,
   * `graft_simhash` and `graft_shingle_hashes` are compared against bit
   * for bit (DotProductSpec, ShinglesSpec, PropertiesSpec). Interpreted
-  * lambdas — correct, slow.
+  * lambdas — correct, slow. Also the word n-gram chains that
+  * `TextFns.words` + `TextFns.wordGrams` replaced, verbatim as each
+  * call site had them (NativeParitySpec).
   */
 object HofReference {
 
@@ -52,4 +54,55 @@ object HofReference {
        |                       CAST(1 AS BIGINT), CAST(-1 AS BIGINT))
        |    ) > 0,
        |    shiftleft(CAST(1 AS BIGINT), k), CAST(0 AS BIGINT)))""".stripMargin)
+
+  /** The guarded word n-gram chain of Selection.gramBuckets,
+    * SparseSim.tfidfPostings and TextFns.repetitionRatio. */
+  def wordGrams(t: Column, n: Int): Column = {
+    val toks = split(lower(trim(t)), "\\s+")
+    when(size(toks) >= n,
+      transform(sequence(lit(1), size(toks) - (n - 1)),
+        i => concat_ws(" ", slice(toks, i, lit(n)))))
+      .otherwise(array().cast("array<string>"))
+  }
+
+  /** The distinct-gram chain of Dedup.contaminationReport,
+    * noveltyReport and ngramJaccard. */
+  def distinctWordGrams(t: Column, n: Int): Column = {
+    val toks = split(lower(trim(t)), "\\s+")
+    when(size(toks) >= n,
+      array_distinct(transform(
+        sequence(lit(1), size(toks) - (n - 1)),
+        i => concat_ws(" ", slice(toks, i, lit(n))))))
+      .otherwise(array().cast("array<string>"))
+  }
+
+  /** TextEval's tokenizer and n-gram form: n = 1 is the tokens
+    * themselves, and a null text stays null. */
+  def textEvalToks(c: Column): Column = split(lower(trim(c)), "\\s+")
+  def textEvalGrams(t: Column, n: Int): Column = {
+    require(n >= 1)
+    if (n == 1) t
+    else when(size(t) < n, array().cast("array<string>"))
+      .otherwise(transform(sequence(lit(1), size(t) - (n - 1)),
+        i => array_join(slice(t, i, lit(n)), " ")))
+  }
+
+  /** TextFns.repetitionRatio over its pasted chain. */
+  def repetitionRatio(text: Column, n: Int): Column = {
+    val grams = wordGrams(text, n)
+    round(when(size(grams) === 0, lit(0.0d))
+      .otherwise(lit(1.0d) -
+        size(array_distinct(grams)).cast("double") /
+          size(grams).cast("double")), 4)
+  }
+
+  /** Dedup.ngramJaccard over its pasted chain. */
+  def ngramJaccard(a: Column, b: Column, n: Int): Column = {
+    val ga = distinctWordGrams(a, n)
+    val gb = distinctWordGrams(b, n)
+    val inter = size(array_intersect(ga, gb))
+    val union = size(array_union(ga, gb))
+    round(when(union === 0, lit(0.0d))
+      .otherwise(inter.cast("double") / union.cast("double")), 4)
+  }
 }

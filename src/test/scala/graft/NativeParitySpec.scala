@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
 import graft.functions.native.NativeFns
+import graft.operators.Dedup
 
 /** Bit-parity of the r12 native expressions against the expression
   * chains they replaced — the same contract every earlier native
@@ -81,5 +82,49 @@ class NativeParitySpec extends SparkSpec {
     assert(native("\tapple pear") == Seq("", "apple", "pear"))
     assert(native("apple pear") == Seq("apple", "pear"))
     assert(native("ÄRGER Straße") == Seq("straße", "ärger"))
+  }
+
+  test("TextFns.words + wordGrams == each call site's pasted n-gram " +
+    "chain, null text included") {
+    // the shared corpus plus the edges: tab/newline-led and all-space
+    // text (trim strips spaces only), non-BMP and uppercase non-ASCII
+    // tokens, empty and null text
+    val edges = Seq[String]("\tapple pear", "apple pear\n", "\n", "",
+      "   ", " \t ", "a b a b a b", "𝒜𝒷 😀 w 😀 w 𝒜𝒷", "ÄRGER Straße ΣΟΦΟΣ İSTANBUL", null)
+    val texts = Tables.load(spark, sf0001, "documents").select(col("text"))
+      .union(edges.toDF("text"))
+    val t = col("text")
+    val w = TextFns.words(t)
+    val near = substring(t, 11, 1 << 20) // the pair site's second side
+    def evalOld(n: Int) =
+      HofReference.textEvalGrams(HofReference.textEvalToks(t), n)
+    // (site, pasted chain, new form) for n = 1..4 and for an n above
+    // every text's token count
+    val sites = Seq(1, 2, 3, 4, 100000).flatMap { n => Seq(
+      (s"Dedup gram sets n=$n", HofReference.distinctWordGrams(t, n),
+        Dedup.distinctGrams(t, n)),
+      (s"Dedup.ngramJaccard n=$n", HofReference.ngramJaccard(t, near, n),
+        Dedup.ngramJaccard(t, near, n)),
+      (s"gramBuckets/tfidfPostings n=$n", HofReference.wordGrams(t, n),
+        TextFns.wordGrams(w, n)),
+      (s"repetitionRatio n=$n", HofReference.repetitionRatio(t, n),
+        TextFns.repetitionRatio(t, n)),
+      // rougeBleuReportN flattens the grams of 1..maxN: the unigrams
+      // (the tokens) null the list on null text, old and new alike
+      (s"TextEval overlap 1,n=$n", flatten(array(Seq(1, n).distinct.map(
+          evalOld): _*)), flatten(array(Seq(1, n).distinct.map(k =>
+          if (k == 1) w else TextFns.wordGrams(w, k)): _*))),
+      // repetitionCore explodes its grams: null and [] both give no rows
+      (s"TextEval repetition n=$n",
+        coalesce(evalOld(n), array().cast("array<string>")),
+        TextFns.wordGrams(w, n)))
+    }
+    val diverged = texts
+      .select(t, filter(array(sites.map { case (site, old, now) =>
+        when(!(old <=> now), lit(site)) }: _*), _.isNotNull).as("sites"))
+      .where(size(col("sites")) > 0)
+    assert(diverged.count() == 0,
+      diverged.collect().take(3).mkString("diverged: ", " | ", ""))
+    assert(texts.count() > edges.size, "the shared corpus must be read")
   }
 }

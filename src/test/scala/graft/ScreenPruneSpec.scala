@@ -389,8 +389,9 @@ class ScreenPruneSpec extends SparkSpec {
       (1003L, doc(3L)._2.substring(6)),
       (2002L, "novel aaa bbb ccc ddd eee fff ggg hhh iii jjj kkk lll"))
       .toDF("doc_id", "text")
-    val m = Dedup.incrementalNearDupAgainstSigsM(
-      batch, sigPath, "text", "doc_id")
+    Dedup.requireShingleK(spark, sigPath, 5)
+    val m = Dedup.incrementalNearDupAgainstPreSigsM(
+      Dedup.signatureRelation(batch, "text", "doc_id", 5), sigPath, 0.5)
     val viaTable =
       try m.df.orderBy("batch_id", "corpus_id").collect().map(_.toString).toSeq
       finally m.release()

@@ -20,7 +20,9 @@ class SigTableSpec extends SparkSpec {
     val path = java.nio.file.Files
       .createTempDirectory("graft_sigs").toString + "/sigs"
     Dedup.writeSignatureTable(d, "text", "doc_id", path)
-    val m = Dedup.incrementalNearDupAgainstSigsM(batch, path, "text", "doc_id")
+    Dedup.requireShingleK(spark, path, 5)
+    val m = Dedup.incrementalNearDupAgainstPreSigsM(
+      Dedup.signatureRelation(batch, "text", "doc_id", 5), path, 0.5)
     val viaTable =
       try m.df.orderBy("batch_id", "corpus_id").collect().toSeq
       finally m.release()

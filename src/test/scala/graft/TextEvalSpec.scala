@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFns
 import graft.operators.TextEval
 
 class TextEvalSpec extends SparkSpec {
@@ -49,8 +50,8 @@ class TextEvalSpec extends SparkSpec {
 
   test("wordGrams guards the short case (Spark sequence would descend)") {
     val df = Seq(("one two", "x")).toDF("a", "b")
-    val r = df.select(TextEval.wordGrams($"a", 3).as("ga"),
-      TextEval.wordGrams($"b", 2).as("gb")).head()
+    val r = df.select(TextFns.wordGrams(TextFns.words($"a"), 3).as("ga"),
+      TextFns.wordGrams(TextFns.words($"b"), 2).as("gb")).head()
     assert(r.getSeq[String](0).isEmpty && r.getSeq[String](1).isEmpty)
   }
 

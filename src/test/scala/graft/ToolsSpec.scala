@@ -31,9 +31,6 @@ class ToolsSpec extends AnyFunSuite {
       (loc.split(':').head, s"$kind $name")
     }.toSet
     assert(entries == Set(
-      "src/main/scala/graft/operators/Dedup.scala" ->
-        "def incrementalNearDupAgainstSigsM",
-      "src/main/scala/graft/operators/TextEval.scala" -> "def wordGrams",
       "src/main/scala/graft/ops/Materialize.scala" -> "def reapDefaultSpills",
       "src/main/scala/graft/sources/Versioned.scala" -> "def vacuum"),
       lines.mkString("\n"))
