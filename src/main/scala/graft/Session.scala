@@ -4,9 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session recipe of the program's mains (JobRunner, Bench,
   * Verify, Smoke): `local[cores]` with as many shuffle partitions, UTC
-  * session time, no UI and a generated-class cache sized so a steady
+  * session time, no UI, a generated-class cache sized so a steady
   * state of repeated queries compiles nothing (Spark's default of 100
-  * entries thrashes on one round of six queries). */
+  * entries thrashes on one round of six queries), and a catalog
+  * warehouse under [[Scratch]]: the in-memory catalog forgets its
+  * tables at JVM exit, so their files go with it instead of piling up
+  * in `./spark-warehouse`. */
 object Session {
 
   /** Core count from a `SPARK_GRAFT_CPUS` setting: the positive integer
@@ -26,6 +29,8 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.warehouse.dir",
+        Scratch.dir("warehouse").getAbsolutePath)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,6 +1,5 @@
 package graft.functions.native
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -55,11 +54,6 @@ case class MinhashSigExpr(child: Expression)
       i += 1
     }
     new GenericArrayData(mins)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -152,11 +146,6 @@ case class SimhashExpr(child: Expression)
     out
   }
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -214,11 +203,6 @@ case class LshBucketsExpr(child: Expression, tables: Int, bits: Int)
       t += 1
     }
     new GenericArrayData(buckets)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

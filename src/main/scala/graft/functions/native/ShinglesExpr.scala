@@ -1,6 +1,5 @@
 package graft.functions.native
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -69,11 +68,6 @@ case class ShingleHashesExpr(child: Expression, k: Int)
     new GenericArrayData(arr)
   }
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -130,11 +124,6 @@ case class PositionalShingleHashesExpr(child: Expression, k: Int)
       while (i <= n - k) { out(i) = windowHash(i, i + k); i += 1 }
       new GenericArrayData(out)
     }
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

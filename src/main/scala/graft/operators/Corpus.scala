@@ -414,8 +414,8 @@ object Corpus {
 
   /** Heal a winnow table that predates the doc-keyed projection: build
     * it once from the table. No-op when present. */
-  def ensureWinnowScreenIndex(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Unit = {
+  private def ensureWinnowScreenIndex(spark: org.apache.spark.sql.SparkSession,
+                                      path: String): Unit = {
     import graft.sources.MaintainedIndex
     val bp = new org.apache.hadoop.fs.Path(winnowByIdPath(path))
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -456,8 +456,8 @@ object Corpus {
   /** Build the df sidecar for a winnow table that predates it (or whose
     * copy lost the sidecar): one df aggregation over the fingerprint
     * table, stamped batch_id = -1. No-op when delta files exist. */
-  def ensureWinnowDfState(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
+  private def ensureWinnowDfState(spark: org.apache.spark.sql.SparkSession,
+                                  path: String): Unit = {
     val sp = new org.apache.hadoop.fs.Path(winnowDfStatePath(path))
     val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasData = fs.exists(sp) && fs.listStatus(sp)

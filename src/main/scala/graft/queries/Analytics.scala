@@ -1181,6 +1181,31 @@ object Analytics {
         .agg(min(col(valueCol)).as(outCol), max(col("__n")).as("n_rows"))
     }
 
+  /** `li(l_returnflag, cents)` and `<r>`, its per-flag value ranks
+    * `rn` of `n` — the rank-selection device of the robust-stats
+    * oracles. */
+  private def centsRankedCtes(r: String): String =
+    s"""li AS (
+       |  SELECT l_returnflag,
+       |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
+       |  FROM lineitem),
+       |$r AS (
+       |  SELECT l_returnflag, cents,
+       |    row_number() OVER (PARTITION BY l_returnflag
+       |      ORDER BY cents) AS rn,
+       |    count(*) OVER (PARTITION BY l_returnflag) AS n
+       |  FROM li)""".stripMargin
+  /** `dev(l_returnflag, d)`, each row's absolute deviation from the
+    * `med` median, and `r2`, its per-flag ranks — the MAD pass. */
+  private val madDevCtes: String =
+    """dev AS (
+      |  SELECT li.l_returnflag, abs(li.cents - m.median_cents) AS d
+      |  FROM li JOIN med m USING (l_returnflag)),
+      |r2 AS (
+      |  SELECT l_returnflag, d,
+      |    row_number() OVER (PARTITION BY l_returnflag ORDER BY d) AS rn,
+      |    count(*) OVER (PARTITION BY l_returnflag) AS n
+      |  FROM dev)""".stripMargin
   def madQ(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(spark, dir, "lineitem").select(
       col("l_returnflag"),
@@ -1200,33 +1225,17 @@ object Analytics {
         col("mad_cents"), col("n_rows"))
   }
   val madSql: String =
-    """WITH li AS (
-      |  SELECT l_returnflag,
-      |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-      |  FROM lineitem),
-      |r1 AS (
-      |  SELECT l_returnflag, cents,
-      |    row_number() OVER (PARTITION BY l_returnflag
-      |      ORDER BY cents) AS rn,
-      |    count(*) OVER (PARTITION BY l_returnflag) AS n
-      |  FROM li),
-      |med AS (
-      |  SELECT l_returnflag, CAST(min(cents) AS BIGINT) AS median_cents,
-      |    CAST(max(n) AS BIGINT) AS n_rows
-      |  FROM r1 WHERE rn * 2 >= n GROUP BY 1),
-      |dev AS (
-      |  SELECT li.l_returnflag, abs(li.cents - m.median_cents) AS d
-      |  FROM li JOIN med m USING (l_returnflag)),
-      |r2 AS (
-      |  SELECT l_returnflag, d,
-      |    row_number() OVER (PARTITION BY l_returnflag ORDER BY d) AS rn,
-      |    count(*) OVER (PARTITION BY l_returnflag) AS n
-      |  FROM dev)
-      |SELECT r2.l_returnflag, m.median_cents,
-      |  CAST(min(r2.d) AS BIGINT) AS mad_cents, m.n_rows
-      |FROM r2 JOIN med m USING (l_returnflag)
-      |WHERE r2.rn * 2 >= r2.n
-      |GROUP BY 1, 2, 4""".stripMargin
+    s"""WITH ${centsRankedCtes("r1")},
+       |med AS (
+       |  SELECT l_returnflag, CAST(min(cents) AS BIGINT) AS median_cents,
+       |    CAST(max(n) AS BIGINT) AS n_rows
+       |  FROM r1 WHERE rn * 2 >= n GROUP BY 1),
+       |$madDevCtes
+       |SELECT r2.l_returnflag, m.median_cents,
+       |  CAST(min(r2.d) AS BIGINT) AS mad_cents, m.n_rows
+       |FROM r2 JOIN med m USING (l_returnflag)
+       |WHERE r2.rn * 2 >= r2.n
+       |GROUP BY 1, 2, 4""".stripMargin
 
   // 10% two-sided trimmed mean per return flag — the robust-location
   // companion of q_mad: drop the lowest and highest n div 10 ranks,
@@ -1273,23 +1282,14 @@ object Analytics {
     }
   }
   val trimmedMeanSql: String =
-    """WITH li AS (
-      |  SELECT l_returnflag,
-      |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-      |  FROM lineitem),
-      |r AS (
-      |  SELECT l_returnflag, cents,
-      |    row_number() OVER (PARTITION BY l_returnflag
-      |      ORDER BY cents) AS rn,
-      |    count(*) OVER (PARTITION BY l_returnflag) AS n
-      |  FROM li)
-      |SELECT l_returnflag,
-      |  CAST(sum(cents) // count(*) AS BIGINT) AS trimmed_mean_cents,
-      |  count(*) AS n_kept,
-      |  CAST(max(n) AS BIGINT) AS n_rows
-      |FROM r
-      |WHERE rn > n // 10 AND rn <= n - n // 10
-      |GROUP BY 1""".stripMargin
+    s"""WITH ${centsRankedCtes("r")}
+       |SELECT l_returnflag,
+       |  CAST(sum(cents) // count(*) AS BIGINT) AS trimmed_mean_cents,
+       |  count(*) AS n_kept,
+       |  CAST(max(n) AS BIGINT) AS n_rows
+       |FROM r
+       |WHERE rn > n // 10 AND rn <= n - n // 10
+       |GROUP BY 1""".stripMargin
 
   // Robust outlier rate: rows beyond 3×MAD of the median, per return
   // flag — the outlier DETECTOR q_mad's statistic exists to feed
@@ -1316,43 +1316,27 @@ object Analytics {
         expr("n_outliers * 10000 div n_rows").as("outlier_rate_bp"))
   }
   val madOutliersSql: String =
-    """WITH li AS (
-      |  SELECT l_returnflag,
-      |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-      |  FROM lineitem),
-      |r1 AS (
-      |  SELECT l_returnflag, cents,
-      |    row_number() OVER (PARTITION BY l_returnflag
-      |      ORDER BY cents) AS rn,
-      |    count(*) OVER (PARTITION BY l_returnflag) AS n
-      |  FROM li),
-      |med AS (
-      |  SELECT l_returnflag, CAST(min(cents) AS BIGINT) AS median_cents
-      |  FROM r1 WHERE rn * 2 >= n GROUP BY 1),
-      |dev AS (
-      |  SELECT li.l_returnflag, abs(li.cents - m.median_cents) AS d
-      |  FROM li JOIN med m USING (l_returnflag)),
-      |r2 AS (
-      |  SELECT l_returnflag, d,
-      |    row_number() OVER (PARTITION BY l_returnflag ORDER BY d) AS rn,
-      |    count(*) OVER (PARTITION BY l_returnflag) AS n
-      |  FROM dev),
-      |mad AS (
-      |  SELECT l_returnflag, CAST(min(d) AS BIGINT) AS mad_cents
-      |  FROM r2 WHERE rn * 2 >= n GROUP BY 1)
-      |SELECT li.l_returnflag, count(*) AS n_rows,
-      |  CAST(sum(CASE WHEN abs(li.cents - m.median_cents)
-      |                     > 3 * d.mad_cents THEN 1 ELSE 0 END)
-      |    AS BIGINT) AS n_outliers,
-      |  CAST(max(m.median_cents) AS BIGINT) AS median_cents,
-      |  CAST(max(d.mad_cents) AS BIGINT) AS mad_cents,
-      |  CAST(sum(CASE WHEN abs(li.cents - m.median_cents)
-      |                     > 3 * d.mad_cents THEN 1 ELSE 0 END) * 10000
-      |    // count(*) AS BIGINT) AS outlier_rate_bp
-      |FROM li
-      |JOIN med m USING (l_returnflag)
-      |JOIN mad d USING (l_returnflag)
-      |GROUP BY 1""".stripMargin
+    s"""WITH ${centsRankedCtes("r1")},
+       |med AS (
+       |  SELECT l_returnflag, CAST(min(cents) AS BIGINT) AS median_cents
+       |  FROM r1 WHERE rn * 2 >= n GROUP BY 1),
+       |$madDevCtes,
+       |mad AS (
+       |  SELECT l_returnflag, CAST(min(d) AS BIGINT) AS mad_cents
+       |  FROM r2 WHERE rn * 2 >= n GROUP BY 1)
+       |SELECT li.l_returnflag, count(*) AS n_rows,
+       |  CAST(sum(CASE WHEN abs(li.cents - m.median_cents)
+       |                     > 3 * d.mad_cents THEN 1 ELSE 0 END)
+       |    AS BIGINT) AS n_outliers,
+       |  CAST(max(m.median_cents) AS BIGINT) AS median_cents,
+       |  CAST(max(d.mad_cents) AS BIGINT) AS mad_cents,
+       |  CAST(sum(CASE WHEN abs(li.cents - m.median_cents)
+       |                     > 3 * d.mad_cents THEN 1 ELSE 0 END) * 10000
+       |    // count(*) AS BIGINT) AS outlier_rate_bp
+       |FROM li
+       |JOIN med m USING (l_returnflag)
+       |JOIN mad d USING (l_returnflag)
+       |GROUP BY 1""".stripMargin
 
   // Exact per-group MODE with a deterministic tie-break: the most
   // frequent quantity per return flag, ties resolved to the SMALLEST

@@ -26,6 +26,12 @@ object TrainingData {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
 
+  /** TextFns.PunctClass quote-escaped for DuckDB, and the English
+    * stopword pattern of TextFns.wordSetCount — the text-feature
+    * oracles' two literals. */
+  private val duckPunct = TextFns.PunctClass.replace("'", "''")
+  private val duckStopRe = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
+
   /** documents ∪ near-copies (first 10 chars dropped, ids +1e6).
     * (Package-visible: LeakSpec drives the dedup operators over it.) */
   private[graft] def nearDupCorpus(spark: SparkSession, dir: String): DataFrame = {
@@ -69,20 +75,17 @@ object TrainingData {
         greatest(length(t).cast("long"), lit(1L)).cast("double"), 4)
         .as("punct_ratio"))
   }
-  val textStatsSql: String = {
-    val punct = TextFns.PunctClass.replace("'", "''")
-    val sw = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
+  val textStatsSql: String =
     s"""SELECT doc_id,
        |  CAST(length(text) AS BIGINT) AS char_len,
        |  CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS token_cnt,
-       |  CAST(length(text) - length(regexp_replace(text, '$punct', '', 'g')) AS BIGINT) AS punct_cnt,
-       |  CAST(len(regexp_extract_all(lower(text), '$sw')) AS BIGINT) AS stopword_cnt,
-       |  round(len(regexp_extract_all(lower(text), '$sw'))::DOUBLE /
+       |  CAST(length(text) - length(regexp_replace(text, '$duckPunct', '', 'g')) AS BIGINT) AS punct_cnt,
+       |  CAST(len(regexp_extract_all(lower(text), '$duckStopRe')) AS BIGINT) AS stopword_cnt,
+       |  round(len(regexp_extract_all(lower(text), '$duckStopRe'))::DOUBLE /
        |        greatest(len(string_split_regex(trim(text), '\\s+')), 1), 4) AS stopword_ratio,
-       |  round((length(text) - length(regexp_replace(text, '$punct', '', 'g')))::DOUBLE /
+       |  round((length(text) - length(regexp_replace(text, '$duckPunct', '', 'g')))::DOUBLE /
        |        greatest(length(text), 1), 4) AS punct_ratio
        |FROM documents""".stripMargin
-  }
 
   /** The twin-detector logit over `text`, in integer micro-units. */
   private def twinLogit: Column = {
@@ -99,6 +102,20 @@ object TrainingData {
   private def twinScored(spark: SparkSession, dir: String): DataFrame =
     nearDupCorpus(spark, dir).select(
       twinLogit.as("score"), (col("doc_id") >= 1000000L).as("pos"))
+  /** Oracle twin of [[twinScored]]: `corpus` ([[nearDupCorpusSql]]) and
+    * `f(pos, score)`. */
+  private val twinScoredCtes: String =
+    s"""corpus AS (
+       |  $nearDupCorpusSql),
+       |f AS (
+       |  SELECT doc_id >= 1000000 AS pos,
+       |    -900000
+       |    + 60000*CAST(len(regexp_extract_all(lower(text), '$duckStopRe')) AS BIGINT)
+       |    + 9000*CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
+       |    - 150000*CAST(length(text) -
+       |        length(regexp_replace(text, '$duckPunct', '', 'g')) AS BIGINT)
+       |    + 500*CAST(length(text) AS BIGINT) AS score
+       |  FROM corpus)""".stripMargin
 
   // ------------------------------------------- model-as-literal scoring
   // The "apply a trained quality classifier at 100 TB" pattern: a
@@ -117,14 +134,12 @@ object TrainingData {
       col("doc_id"), logit.as("logit_micro"),
       (logit > 0L).as("keep"))
   }
-  val qualityLogitSql: String = {
-    val punct = TextFns.PunctClass.replace("'", "''")
-    val sw = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
+  val qualityLogitSql: String =
     s"""WITH f AS (
        |  SELECT doc_id,
-       |    CAST(len(regexp_extract_all(lower(text), '$sw')) AS BIGINT) AS sw,
+       |    CAST(len(regexp_extract_all(lower(text), '$duckStopRe')) AS BIGINT) AS sw,
        |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS tc,
-       |    CAST(length(text) - length(regexp_replace(text, '$punct', '', 'g'))
+       |    CAST(length(text) - length(regexp_replace(text, '$duckPunct', '', 'g'))
        |         AS BIGINT) AS pc,
        |    CAST(length(text) AS BIGINT) AS cl
        |  FROM documents)
@@ -132,7 +147,6 @@ object TrainingData {
        |  -900000 + 60000*sw + 9000*tc - 150000*pc + 500*cl AS logit_micro,
        |  (-900000 + 60000*sw + 9000*tc - 150000*pc + 500*cl) > 0 AS keep
        |FROM f""".stripMargin
-  }
 
   // --------------------------------------------- exact rank-sum AUC
   // The model-eval primitive: AUC of the quality-logit score as a
@@ -159,22 +173,8 @@ object TrainingData {
       .select(col("n_pos"), col("n_neg"),
         expr("(10000 * __u2) div (2 * n_pos * n_neg)").as("auc_bp"))
   }
-  val aucSql: String = {
-    val punct = TextFns.PunctClass.replace("'", "''")
-    val sw = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 1000000, substr(text, 11) FROM documents),
-       |f AS (
-       |  SELECT doc_id >= 1000000 AS pos,
-       |    -900000
-       |    + 60000*CAST(len(regexp_extract_all(lower(text), '$sw')) AS BIGINT)
-       |    + 9000*CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-       |    - 150000*CAST(length(text) -
-       |        length(regexp_replace(text, '$punct', '', 'g')) AS BIGINT)
-       |    + 500*CAST(length(text) AS BIGINT) AS score
-       |  FROM corpus),
+  val aucSql: String =
+    s"""WITH $twinScoredCtes,
        |g AS (
        |  SELECT score,
        |    sum(CASE WHEN pos THEN 1 ELSE 0 END) AS np,
@@ -194,7 +194,6 @@ object TrainingData {
        |  CAST(n_neg AS BIGINT) AS n_neg,
        |  CAST((10000 * u2) // (2 * n_pos * n_neg) AS BIGINT) AS auc_bp
        |FROM u""".stripMargin
-  }
 
   // ------------------------------------- precision/recall curve
   // x_auc's operating-point companion: the twin-detector logit swept
@@ -225,22 +224,8 @@ object TrainingData {
           .otherwise(expr("(10000 * tp) div (tp + fn)"))
           .as("recall_bp"))
   }
-  val prCurveSql: String = {
-    val punct = TextFns.PunctClass.replace("'", "''")
-    val sw = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 1000000, substr(text, 11) FROM documents),
-       |f AS (
-       |  SELECT doc_id >= 1000000 AS pos,
-       |    -900000
-       |    + 60000*CAST(len(regexp_extract_all(lower(text), '$sw')) AS BIGINT)
-       |    + 9000*CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-       |    - 150000*CAST(length(text) -
-       |        length(regexp_replace(text, '$punct', '', 'g')) AS BIGINT)
-       |    + 500*CAST(length(text) AS BIGINT) AS score
-       |  FROM corpus),
+  val prCurveSql: String =
+    s"""WITH $twinScoredCtes,
        |th AS (SELECT * FROM (VALUES (-500000), (0), (500000),
        |         (1000000), (2000000)) t(thresh)),
        |c AS (
@@ -256,7 +241,6 @@ object TrainingData {
        |  CAST(CASE WHEN tp + fn = 0 THEN 0
        |       ELSE (10000 * tp) // (tp + fn) END AS BIGINT) AS recall_bp
        |FROM c""".stripMargin
-  }
 
   // ------------------------------------------- calibration/reliability
   // The fourth eval surface: does a HIGHER detector score actually mean
@@ -275,29 +259,14 @@ object TrainingData {
         sum(when(col("pos"), 1L).otherwise(0L)).as("n_pos"))
       .withColumn("pos_rate_bp", expr("(10000 * n_pos) div n"))
   }
-  val calibrationBinsSql: String = {
-    val punct = TextFns.PunctClass.replace("'", "''")
-    val sw = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 1000000, substr(text, 11) FROM documents),
-       |f AS (
-       |  SELECT doc_id >= 1000000 AS pos,
-       |    -900000
-       |    + 60000*CAST(len(regexp_extract_all(lower(text), '$sw')) AS BIGINT)
-       |    + 9000*CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-       |    - 150000*CAST(length(text) -
-       |        length(regexp_replace(text, '$punct', '', 'g')) AS BIGINT)
-       |    + 500*CAST(length(text) AS BIGINT) AS score
-       |  FROM corpus)
+  val calibrationBinsSql: String =
+    s"""WITH $twinScoredCtes
        |SELECT (score + 1000000000) // 200000 AS bin,
        |  count(*) AS n,
        |  CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
        |  CAST((10000 * sum(CASE WHEN pos THEN 1 ELSE 0 END)) // count(*)
        |       AS BIGINT) AS pos_rate_bp
        |FROM f GROUP BY 1""".stripMargin
-  }
 
   // ------------------------------------------- cumulative gains table
   // The third eval-metric surface (with x_auc and x_pr_curve): rank by
@@ -330,22 +299,8 @@ object TrainingData {
         expr("(10000 * max(cum_pos)) div max(tot_pos)")
           .as("capture_bp"))
   }
-  val gainsCurveSql: String = {
-    val punct = TextFns.PunctClass.replace("'", "''")
-    val sw = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 1000000, substr(text, 11) FROM documents),
-       |f AS (
-       |  SELECT doc_id >= 1000000 AS pos,
-       |    -900000
-       |    + 60000*CAST(len(regexp_extract_all(lower(text), '$sw')) AS BIGINT)
-       |    + 9000*CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-       |    - 150000*CAST(length(text) -
-       |        length(regexp_replace(text, '$punct', '', 'g')) AS BIGINT)
-       |    + 500*CAST(length(text) AS BIGINT) AS score
-       |  FROM corpus),
+  val gainsCurveSql: String =
+    s"""WITH $twinScoredCtes,
        |g AS (
        |  SELECT score,
        |    sum(CASE WHEN pos THEN 1 ELSE 0 END) AS np,
@@ -367,7 +322,6 @@ object TrainingData {
        |  CAST((10000 * max(cum_pos)) // max(tot_pos) AS BIGINT)
        |    AS capture_bp
        |FROM c GROUP BY 1""".stripMargin
-  }
 
   // ------------------------------------------------- per-source curation
   // The per-source (≈ per-domain) corpus report every curation pipeline
@@ -511,16 +465,15 @@ object TrainingData {
       .union(d.select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
   }
   private val simhashCorpusSql =
-    """corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL SELECT doc_id + 1000000, substr(text, 11) FROM documents
-      |  UNION ALL SELECT doc_id + 2000000, text FROM documents)""".stripMargin
+    s"""$nearDupCorpusSql
+       |  UNION ALL SELECT doc_id + 2000000, text FROM documents""".stripMargin
 
   def simhashPairsQ(spark: SparkSession, dir: String): DataFrame =
     Dedup.simhashNearDupPairs(simhashCorpus(spark, dir), "text", "doc_id",
       maxHamming = 6)
   val simhashPairsSql: String =
-    s"""WITH $simhashCorpusSql,
+    s"""WITH corpus AS (
+       |  $simhashCorpusSql),
        |${simhashCtes("corpus")},
        |bands AS (
        |  SELECT doc_id, simhash, b AS band,
@@ -893,14 +846,7 @@ object TrainingData {
   val dedupKeepBestSql: String =
     s"""WITH RECURSIVE ${minhashCtesOver(nearDupCorpusSql)},
        |pairs AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-       |edges AS (
-       |  SELECT doc_a AS a, doc_b AS b FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
-       |cnodes AS (SELECT DISTINCT a AS n FROM edges),
-       |reach(n, m) AS (
-       |  SELECT n, n FROM cnodes
-       |  UNION
-       |  SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a),
+       |${closureCtes("pairs", nodes = "cnodes")},
        |reps AS (SELECT n AS doc_id, min(m) AS rep FROM reach GROUP BY n),
        |asg AS (
        |  SELECT c.doc_id, coalesce(r.rep, c.doc_id) AS cluster_rep,
@@ -1592,19 +1538,48 @@ object TrainingData {
     graft.operators.Graph.triangleCounts(
       nearDupPairs(spark, dir, threshold = 0.5),
       "doc_a", "doc_b")
-  val trianglesSql: String =
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |e AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.5),
-       |t AS (
+  /** `<t> AS (…)`: every triangle x<y<z of the canonical edge CTE `e` —
+    * the naive id-ordered enumeration, the same set Graph's
+    * degree-oriented wedge join counts. */
+  private def trianglesCte(e: String, t: String = "t",
+                           materialized: Boolean = false): String =
+    s"""$t AS${if (materialized) " MATERIALIZED" else ""} (
        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-       |  FROM e e1 JOIN e e2 ON e1.b = e2.a
-       |  WHERE EXISTS (SELECT 1 FROM e e3
-       |                WHERE e3.a = e1.a AND e3.b = e2.b)),
+       |  FROM $e e1 JOIN $e e2 ON e1.b = e2.a
+       |  WHERE EXISTS (SELECT 1 FROM $e e3
+       |                WHERE e3.a = e1.a AND e3.b = e2.b))""".stripMargin
+  // The query tails over a canonical edge CTE `e`, oracles of
+  // Graph.triangleCounts, clusteringCoefficients and edgeSupport.
+  private val triangleCountsOverE: String =
+    s"""${trianglesCte("e")},
        |n AS (SELECT unnest([x, y, z]) AS node FROM t)
        |SELECT node, count(*) AS n_tri FROM n GROUP BY 1""".stripMargin
+  private val clusteringOverE: String =
+    s"""${trianglesCte("e")},
+       |tn AS (SELECT unnest([x, y, z]) AS node FROM t),
+       |tc AS (SELECT node, count(*) AS n_tri FROM tn GROUP BY 1),
+       |adj AS (SELECT a AS node FROM e UNION ALL SELECT b FROM e),
+       |deg AS (SELECT node, count(*) AS degree FROM adj GROUP BY 1)
+       |SELECT deg.node, CAST(deg.degree AS BIGINT) AS degree,
+       |  CAST(coalesce(tc.n_tri, 0) AS BIGINT) AS n_tri,
+       |  CAST(CASE WHEN deg.degree >= 2
+       |    THEN (coalesce(tc.n_tri, 0) * 20000)
+       |         // (deg.degree * (deg.degree - 1))
+       |    ELSE 0 END AS BIGINT) AS cc_bp
+       |FROM deg LEFT JOIN tc ON tc.node = deg.node""".stripMargin
+  private val edgeSupportOverE: String =
+    s"""${trianglesCte("e")},
+       |te AS (
+       |  SELECT x AS a, y AS b FROM t
+       |  UNION ALL SELECT x, z FROM t
+       |  UNION ALL SELECT y, z FROM t),
+       |sup AS (SELECT a, b, count(*) AS support FROM te GROUP BY 1, 2)
+       |SELECT e.a, e.b,
+       |  CAST(coalesce(sup.support, 0) AS BIGINT) AS support
+       |FROM e LEFT JOIN sup ON sup.a = e.a AND sup.b = e.b""".stripMargin
+  val trianglesSql: String =
+    s"""WITH ${nearDupEdgeCtes(0.5)},
+       |$triangleCountsOverE""".stripMargin
 
   /** The planted bridge delta appended to the near-dup graph: two new
     * edges per anchor (`doc_id % 10 = 0`), k—(k+1) and k—(k+1000001). */
@@ -1615,6 +1590,19 @@ object TrainingData {
       .union(anchors.select(col("doc_id").as("doc_a"),
         (col("doc_id") + 1000001L).as("doc_b")))
   }
+  /** Oracle twin of the 0.5 [[nearDupPairs]] plus [[bridgeDelta]]:
+    * `mp`, `pairs` and their canonical edge CTE `e`. */
+  private def bridgedEdgeCtes: String =
+    s"""${minhashCtesOver(nearDupCorpusSql)},
+       |mp AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
+       |pairs AS (
+       |  SELECT doc_a, doc_b FROM mp
+       |  UNION ALL
+       |  SELECT doc_id, doc_id + 1 FROM documents WHERE doc_id % 10 = 0
+       |  UNION ALL
+       |  SELECT doc_id, doc_id + 1000001 FROM documents
+       |  WHERE doc_id % 10 = 0),
+       |${canonEdgesCte("e", "pairs")}""".stripMargin
 
   // ----------------------------------- incremental triangle counts
   // The incremental-maintenance story extended to graph analytics:
@@ -1633,26 +1621,8 @@ object TrainingData {
       oldPairs, bridges, "doc_a", "doc_b")
   }
   val trianglesIncrSql: String =
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |mp AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-       |pairs AS (
-       |  SELECT doc_a, doc_b FROM mp
-       |  UNION ALL
-       |  SELECT doc_id, doc_id + 1 FROM documents WHERE doc_id % 10 = 0
-       |  UNION ALL
-       |  SELECT doc_id, doc_id + 1000001 FROM documents
-       |  WHERE doc_id % 10 = 0),
-       |e AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM pairs),
-       |t AS (
-       |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-       |  FROM e e1 JOIN e e2 ON e1.b = e2.a
-       |  WHERE EXISTS (SELECT 1 FROM e e3
-       |                WHERE e3.a = e1.a AND e3.b = e2.b)),
-       |n AS (SELECT unnest([x, y, z]) AS node FROM t)
-       |SELECT node, count(*) AS n_tri FROM n GROUP BY 1""".stripMargin
+    s"""WITH $bridgedEdgeCtes,
+       |$triangleCountsOverE""".stripMargin
 
   // ----------------------------- incremental clustering coefficients
   // Graph.clusteringCoefficientsIncremental on the x_triangles_incr
@@ -1675,35 +1645,8 @@ object TrainingData {
       countsOld, degOld, oldPairs, bridges, "doc_a", "doc_b")
   }
   val clusteringIncrSql: String =
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |mp AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-       |pairs AS (
-       |  SELECT doc_a, doc_b FROM mp
-       |  UNION ALL
-       |  SELECT doc_id, doc_id + 1 FROM documents WHERE doc_id % 10 = 0
-       |  UNION ALL
-       |  SELECT doc_id, doc_id + 1000001 FROM documents
-       |  WHERE doc_id % 10 = 0),
-       |e AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM pairs),
-       |t AS (
-       |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-       |  FROM e e1 JOIN e e2 ON e1.b = e2.a
-       |  WHERE EXISTS (SELECT 1 FROM e e3
-       |                WHERE e3.a = e1.a AND e3.b = e2.b)),
-       |tn AS (SELECT unnest([x, y, z]) AS node FROM t),
-       |tc AS (SELECT node, count(*) AS n_tri FROM tn GROUP BY 1),
-       |adj AS (SELECT a AS node FROM e UNION ALL SELECT b FROM e),
-       |deg AS (SELECT node, count(*) AS degree FROM adj GROUP BY 1)
-       |SELECT deg.node, CAST(deg.degree AS BIGINT) AS degree,
-       |  CAST(coalesce(tc.n_tri, 0) AS BIGINT) AS n_tri,
-       |  CAST(CASE WHEN deg.degree >= 2
-       |    THEN (coalesce(tc.n_tri, 0) * 20000)
-       |         // (deg.degree * (deg.degree - 1))
-       |    ELSE 0 END AS BIGINT) AS cc_bp
-       |FROM deg LEFT JOIN tc ON tc.node = deg.node""".stripMargin
+    s"""WITH $bridgedEdgeCtes,
+       |$clusteringOverE""".stripMargin
 
   // ------------------------------------------------ source modularity
   // Graph.modularityReport over the same signature-table pair feed as
@@ -1726,11 +1669,7 @@ object TrainingData {
       assign, "doc_id", "source")
   }
   val modularitySql: String =
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |e AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.5),
+    s"""WITH ${nearDupEdgeCtes(0.5)},
        |m AS (SELECT count(*) AS m FROM e),
        |deg AS (SELECT node, count(*) AS deg FROM (
        |  SELECT a AS node FROM e UNION ALL SELECT b FROM e) u
@@ -1770,18 +1709,20 @@ object TrainingData {
         "doc_a", "doc_b")
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
         col("n_common"), col("ra_u"))
-  val linkPredictSql: String =
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |e AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.2),
+  /** The 0.2 near-dup graph as canonical edges `e`, the symmetric
+    * adjacency `adj(v, n)` and true degrees `deg(v, d)` — the input of
+    * the Graph.linkPrediction oracles. */
+  private val linkAdjCtes: String =
+    s"""${nearDupEdgeCtes(0.2)},
        |adj AS (SELECT a AS v, b AS n FROM e
        |        UNION ALL SELECT b, a FROM e),
-       |deg AS (SELECT v, count(*) AS d FROM adj GROUP BY v),
-       |w AS (
+       |deg AS (SELECT v, count(*) AS d FROM adj GROUP BY v)""".stripMargin
+  /** Common-neighbor and resource-allocation scores of the non-edges
+    * two hops apart through the wedge centers of `centers(v, n)`. */
+  private def linkScoresSql(centers: String): String =
+    s"""w AS (
        |  SELECT x.n AS a, y.n AS b, x.v AS via
-       |  FROM adj x JOIN adj y ON x.v = y.v AND x.n < y.n),
+       |  FROM $centers x JOIN $centers y ON x.v = y.v AND x.n < y.n),
        |s AS (
        |  SELECT w.a, w.b, count(*) AS n_common,
        |         CAST(sum(1000000 // d.d) AS BIGINT) AS ra_u
@@ -1790,6 +1731,9 @@ object TrainingData {
        |FROM s
        |WHERE NOT EXISTS (SELECT 1 FROM e
        |                  WHERE e.a = s.a AND e.b = s.b)""".stripMargin
+  val linkPredictSql: String =
+    s"""WITH $linkAdjCtes,
+       |${linkScoresSql("adj")}""".stripMargin
 
   // -------------------------------- link prediction, hub-guarded form
   // The same ranker under the maxDegree wedge-center guard — the shape
@@ -1806,28 +1750,11 @@ object TrainingData {
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
         col("n_common"), col("ra_u"))
   val linkPredictGuardedSql: String =
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |e AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.2),
-       |adj AS (SELECT a AS v, b AS n FROM e
-       |        UNION ALL SELECT b, a FROM e),
-       |deg AS (SELECT v, count(*) AS d FROM adj GROUP BY v),
+    s"""WITH $linkAdjCtes,
        |adjg AS (
        |  SELECT adj.v, adj.n FROM adj
        |  JOIN deg ON deg.v = adj.v WHERE deg.d <= 6),
-       |w AS (
-       |  SELECT x.n AS a, y.n AS b, x.v AS via
-       |  FROM adjg x JOIN adjg y ON x.v = y.v AND x.n < y.n),
-       |s AS (
-       |  SELECT w.a, w.b, count(*) AS n_common,
-       |         CAST(sum(1000000 // d.d) AS BIGINT) AS ra_u
-       |  FROM w JOIN deg d ON w.via = d.v GROUP BY 1, 2)
-       |SELECT s.a AS doc_a, s.b AS doc_b, s.n_common, s.ra_u
-       |FROM s
-       |WHERE NOT EXISTS (SELECT 1 FROM e
-       |                  WHERE e.a = s.a AND e.b = s.b)""".stripMargin
+       |${linkScoresSql("adjg")}""".stripMargin
 
   // The guard's audit twin: the (node, degree) rows the cap purges —
   // run FIRST by any pipeline that cannot tolerate evidence loss
@@ -1838,14 +1765,7 @@ object TrainingData {
         "doc_a", "doc_b", maxDegree = 6L)
       .select(col("v").as("node"), col("d").as("degree"))
   val linkHubsSql: String =
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |e AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.2),
-       |adj AS (SELECT a AS v, b AS n FROM e
-       |        UNION ALL SELECT b, a FROM e),
-       |deg AS (SELECT v, count(*) AS d FROM adj GROUP BY v)
+    s"""WITH $linkAdjCtes
        |SELECT v AS node, CAST(d AS BIGINT) AS degree
        |FROM deg WHERE d > 6""".stripMargin
 
@@ -1863,27 +1783,8 @@ object TrainingData {
       nearDupPairs(spark, dir, threshold = 0.2),
       "doc_a", "doc_b")
   val clusteringCoefSql: String =
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |e AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.2),
-       |t AS (
-       |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-       |  FROM e e1 JOIN e e2 ON e1.b = e2.a
-       |  WHERE EXISTS (SELECT 1 FROM e e3
-       |                WHERE e3.a = e1.a AND e3.b = e2.b)),
-       |tn AS (SELECT unnest([x, y, z]) AS node FROM t),
-       |tc AS (SELECT node, count(*) AS n_tri FROM tn GROUP BY 1),
-       |adj AS (SELECT a AS node FROM e UNION ALL SELECT b FROM e),
-       |deg AS (SELECT node, count(*) AS degree FROM adj GROUP BY 1)
-       |SELECT deg.node, CAST(deg.degree AS BIGINT) AS degree,
-       |  CAST(coalesce(tc.n_tri, 0) AS BIGINT) AS n_tri,
-       |  CAST(CASE WHEN deg.degree >= 2
-       |    THEN (coalesce(tc.n_tri, 0) * 20000)
-       |         // (deg.degree * (deg.degree - 1))
-       |    ELSE 0 END AS BIGINT) AS cc_bp
-       |FROM deg LEFT JOIN tc ON tc.node = deg.node""".stripMargin
+    s"""WITH ${nearDupEdgeCtes(0.2)},
+       |$clusteringOverE""".stripMargin
 
   // -------------------------------------------------- edge support
   // Graph.edgeSupport over the loose-threshold (0.2) pair graph: the
@@ -1898,24 +1799,8 @@ object TrainingData {
       nearDupPairs(spark, dir, threshold = 0.2),
       "doc_a", "doc_b")
   val edgeSupportSql: String =
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |e AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.2),
-       |t AS (
-       |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-       |  FROM e e1 JOIN e e2 ON e1.b = e2.a
-       |  WHERE EXISTS (SELECT 1 FROM e e3
-       |                WHERE e3.a = e1.a AND e3.b = e2.b)),
-       |te AS (
-       |  SELECT x AS a, y AS b FROM t
-       |  UNION ALL SELECT x, z FROM t
-       |  UNION ALL SELECT y, z FROM t),
-       |sup AS (SELECT a, b, count(*) AS support FROM te GROUP BY 1, 2)
-       |SELECT e.a, e.b,
-       |  CAST(coalesce(sup.support, 0) AS BIGINT) AS support
-       |FROM e LEFT JOIN sup ON sup.a = e.a AND sup.b = e.b""".stripMargin
+    s"""WITH ${nearDupEdgeCtes(0.2)},
+       |$edgeSupportOverE""".stripMargin
 
   // ------------------------------------------------------ 3-truss core
   // Graph.kTruss(k=3) over the loose (0.2) pair graph: iteratively
@@ -1933,11 +1818,7 @@ object TrainingData {
   /** One unrolled triangle-support round (tri + sup CTEs) over `src`
     * — shared by the truss oracle family. */
   private def trussTri(i: Int, src: String): String =
-    s"""t$i AS MATERIALIZED (
-       |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-       |  FROM $src e1 JOIN $src e2 ON e1.b = e2.a
-       |  WHERE EXISTS (SELECT 1 FROM $src e3
-       |                WHERE e3.a = e1.a AND e3.b = e2.b)),
+    s"""${trianglesCte(src, s"t$i", materialized = true)},
        |sup$i AS MATERIALIZED (
        |  SELECT a, b, count(*) AS s FROM (
        |    SELECT x AS a, y AS b FROM t$i
@@ -1945,24 +1826,22 @@ object TrainingData {
        |    UNION ALL SELECT y, z FROM t$i) u$i
        |  GROUP BY 1, 2)""".stripMargin
 
-  /** The unrolled 5-round 3-truss peel over the loose (0.2) pair
-    * graph, ending in `e5` (the x_kcore unrolling device: rounds past
-    * the fixed point are no-ops on both engines). */
-  private lazy val ktrussPeelCtes: String = {
-    val rounds = (1 to 5).map { i =>
+  /** The unrolled 5-round 3-truss peel from `e0` to `e5` (the x_kcore
+    * unrolling device: rounds past the fixed point are no-ops on both
+    * engines). */
+  private def trussPeelRounds: String =
+    (1 to 5).map { i =>
       s"""${trussTri(i, s"e${i - 1}")},
          |e$i AS MATERIALIZED (
          |  SELECT e.a, e.b FROM e${i - 1} e
          |  JOIN sup$i s ON s.a = e.a AND s.b = e.b
          |  WHERE s.s >= 1)""".stripMargin
     }.mkString(",\n")
-    s"""${minhashCtesOver(nearDupCorpusSql)},
-       |e0 AS MATERIALIZED (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.2),
-       |$rounds""".stripMargin
-  }
+
+  /** [[trussPeelRounds]] over the loose (0.2) pair graph. */
+  private lazy val ktrussPeelCtes: String =
+    s"""${nearDupEdgeCtes(0.2, "e0", materialized = true)},
+       |$trussPeelRounds""".stripMargin
   val ktrussSql: String =
     s"""WITH $ktrussPeelCtes,
        |${trussTri(6, "e5")}
@@ -2005,32 +1884,8 @@ object TrainingData {
       oldPairs, bridges, "doc_a", "doc_b")
   }
   val edgeSupportIncrSql: String =
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |mp AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-       |pairs AS (
-       |  SELECT doc_a, doc_b FROM mp
-       |  UNION ALL
-       |  SELECT doc_id, doc_id + 1 FROM documents WHERE doc_id % 10 = 0
-       |  UNION ALL
-       |  SELECT doc_id, doc_id + 1000001 FROM documents
-       |  WHERE doc_id % 10 = 0),
-       |e AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM pairs),
-       |t AS (
-       |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-       |  FROM e e1 JOIN e e2 ON e1.b = e2.a
-       |  WHERE EXISTS (SELECT 1 FROM e e3
-       |                WHERE e3.a = e1.a AND e3.b = e2.b)),
-       |te AS (
-       |  SELECT x AS a, y AS b FROM t
-       |  UNION ALL SELECT x, z FROM t
-       |  UNION ALL SELECT y, z FROM t),
-       |sup AS (SELECT a, b, count(*) AS support FROM te GROUP BY 1, 2)
-       |SELECT e.a, e.b,
-       |  CAST(coalesce(sup.support, 0) AS BIGINT) AS support
-       |FROM e LEFT JOIN sup ON sup.a = e.a AND sup.b = e.b""".stripMargin
+    s"""WITH $bridgedEdgeCtes,
+       |$edgeSupportOverE""".stripMargin
 
   // -------------------------------------- truss survival by jaccard
   // The precision gradient that justifies the truss screen: per
@@ -2055,32 +1910,13 @@ object TrainingData {
       .select(col("jaccard_band"), col("n_edges"), col("n_in_truss"),
         expr("n_in_truss * 10000 div n_edges").as("survival_bp"))
   }
-  val trussPrecisionSql: String = {
-    def tri(i: Int, src: String) =
-      s"""t$i AS MATERIALIZED (
-         |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |  FROM $src e1 JOIN $src e2 ON e1.b = e2.a
-         |  WHERE EXISTS (SELECT 1 FROM $src e3
-         |                WHERE e3.a = e1.a AND e3.b = e2.b)),
-         |sup$i AS MATERIALIZED (
-         |  SELECT a, b, count(*) AS s FROM (
-         |    SELECT x AS a, y AS b FROM t$i
-         |    UNION ALL SELECT x, z FROM t$i
-         |    UNION ALL SELECT y, z FROM t$i) u$i
-         |  GROUP BY 1, 2)""".stripMargin
-    val rounds = (1 to 5).map { i =>
-      s"""${tri(i, s"e${i - 1}")},
-         |e$i AS MATERIALIZED (
-         |  SELECT e.a, e.b FROM e${i - 1} e
-         |  JOIN sup$i s ON s.a = e.a AND s.b = e.b
-         |  WHERE s.s >= 1)""".stripMargin
-    }.mkString(",\n")
+  val trussPrecisionSql: String =
     s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
        |p AS (
        |  SELECT doc_a AS a, doc_b AS b, jaccard
        |  FROM j WHERE jaccard >= 0.2),
        |e0 AS MATERIALIZED (SELECT DISTINCT a, b FROM p),
-       |$rounds
+       |$trussPeelRounds
        |SELECT CAST(floor(p.jaccard * 10) AS BIGINT) AS jaccard_band,
        |  count(*) AS n_edges,
        |  CAST(sum(CASE WHEN e5.a IS NOT NULL THEN 1 ELSE 0 END)
@@ -2089,7 +1925,6 @@ object TrainingData {
        |    // count(*) AS BIGINT) AS survival_bp
        |FROM p LEFT JOIN e5 ON e5.a = p.a AND e5.b = p.b
        |GROUP BY 1""".stripMargin
-  }
 
   // --------------------------------------- label-propagation communities
   // Graph.labelPropagation over the same loose-threshold (0.2)
@@ -2118,11 +1953,7 @@ object TrainingData {
          |        UNION ALL SELECT v, lbl FROM lp${k - 1}) t$k
          |      GROUP BY 1, 2) c$k) r$k
          |  WHERE rn = 1)""".stripMargin
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |ce AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.2),
+    s"""WITH ${nearDupEdgeCtes(0.2, "ce")},
        |adj AS (SELECT a AS v, b AS n FROM ce
        |        UNION ALL SELECT b, a FROM ce),
        |nodes AS (SELECT DISTINCT v FROM adj),
@@ -2276,6 +2107,14 @@ object TrainingData {
   // as chained CTEs (recursive CTEs can't aggregate) and must match
   // exactly, no tolerance. The pair feed reads the maintained signature
   // table (sig-table results are hash-equal to from-text, SigTableSpec).
+  /** `<p>e(src, dst)` (both directions of the canonical edge CTE
+    * `src`), `<p>deg(src, d)` and `<p>nodes(v)` — the adjacency the
+    * Graph.pageRank oracles propagate rank over. */
+  private def rankAdjCtes(src: String, p: String = ""): String =
+    s"""${p}e AS (SELECT a AS src, b AS dst FROM $src
+       |      UNION ALL SELECT b, a FROM $src),
+       |${p}deg AS (SELECT src, count(*) AS d FROM ${p}e GROUP BY 1),
+       |${p}nodes AS (SELECT DISTINCT src AS v FROM ${p}e)""".stripMargin
   def pageRankQ(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.pageRank(
       nearDupPairs(spark, dir, threshold = 0.5),
@@ -2292,15 +2131,8 @@ object TrainingData {
          |    JOIN e ON e.src = p.v
          |    GROUP BY 1) s ON s.v = n.v)""".stripMargin
     }.mkString(",\n")
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |ce AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.5),
-       |e AS (SELECT a AS src, b AS dst FROM ce
-       |      UNION ALL SELECT b, a FROM ce),
-       |deg AS (SELECT src, count(*) AS d FROM e GROUP BY 1),
-       |nodes AS (SELECT DISTINCT src AS v FROM e),
+    s"""WITH ${nearDupEdgeCtes(0.5, "ce")},
+       |${rankAdjCtes("ce")},
        |pr0 AS (SELECT v, CAST(1000000 AS BIGINT) AS r FROM nodes),
        |$rounds
        |SELECT v AS node, CAST(r AS BIGINT) AS rank FROM pr10""".stripMargin
@@ -2361,15 +2193,10 @@ object TrainingData {
            |    JOIN ${tbl}_e e ON e.src = p.v
            |    GROUP BY 1) s ON s.v = n.v)""".stripMargin
       }.mkString(",\n")
-    s"""${minhashCtesOver(nearDupCorpusSql)},
-       |ce AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.5),
-       |old_e AS (SELECT a AS src, b AS dst FROM ce
-       |          UNION ALL SELECT b, a FROM ce),
-       |old_deg AS (SELECT src, count(*) AS d FROM old_e GROUP BY 1),
-       |old_nodes AS (SELECT DISTINCT src AS v FROM old_e),
+    val newPairs = "(SELECT a AS doc_a, b AS doc_b FROM ce " +
+      "UNION ALL SELECT doc_a, doc_b FROM bridges)"
+    s"""${nearDupEdgeCtes(0.5, "ce")},
+       |${rankAdjCtes("ce", "old_")},
        |cold0 AS (SELECT v, CAST(1000000 AS BIGINT) AS r FROM old_nodes),
        |${rounds("old", "cold", 10, "cold0")},
        |bridges AS (
@@ -2378,15 +2205,8 @@ object TrainingData {
        |  UNION ALL
        |  SELECT doc_id, doc_id + 1000001 FROM documents
        |  WHERE doc_id % 10 = 0),
-       |nce AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM (SELECT a AS doc_a, b AS doc_b FROM ce
-       |        UNION ALL SELECT doc_a, doc_b FROM bridges)),
-       |new_e AS (SELECT a AS src, b AS dst FROM nce
-       |          UNION ALL SELECT b, a FROM nce),
-       |new_deg AS (SELECT src, count(*) AS d FROM new_e GROUP BY 1),
-       |new_nodes AS (SELECT DISTINCT src AS v FROM new_e),
+       |${canonEdgesCte("nce", newPairs)},
+       |${rankAdjCtes("nce", "new_")},
        |warm0 AS (
        |  SELECT n.v, COALESCE(c.r, CAST(1000000 AS BIGINT)) AS r
        |  FROM new_nodes n LEFT JOIN cold10 c ON c.v = n.v),
@@ -2429,15 +2249,8 @@ object TrainingData {
          |    JOIN e ON e.src = p.v
          |    GROUP BY 1) s ON s.v = b.v)""".stripMargin
     }.mkString(",\n")
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |ce AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.5),
-       |e AS (SELECT a AS src, b AS dst FROM ce
-       |      UNION ALL SELECT b, a FROM ce),
-       |deg AS (SELECT src, count(*) AS d FROM e GROUP BY 1),
-       |nodes AS (SELECT DISTINCT src AS v FROM e),
+    s"""WITH ${nearDupEdgeCtes(0.5, "ce")},
+       |${rankAdjCtes("ce")},
        |seedset AS (
        |  SELECT v FROM nodes WHERE v % 1000000 < 10),
        |base AS (
@@ -2514,11 +2327,7 @@ object TrainingData {
          |  SELECT v, s * 1000000 // (SELECT max(s) FROM ar$i) AS s
          |  FROM ar$i)""".stripMargin
     }.mkString(",\n")
-    s"""WITH ${minhashCtesOver(nearDupCorpusSql)},
-       |ce AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.5),
+    s"""WITH ${nearDupEdgeCtes(0.5, "ce")},
        |e AS MATERIALIZED (SELECT a AS src, b AS dst FROM ce),
        |nodes AS MATERIALIZED (
        |  SELECT src AS v FROM e UNION SELECT dst FROM e),
@@ -2559,11 +2368,7 @@ object TrainingData {
          |  JOIN kp$i a ON e.src = a.v
          |  JOIN kp$i b ON e.dst = b.v)""".stripMargin
     }.mkString(",\n")
-    s"""${minhashCtesOver(nearDupCorpusSql)},
-       |ce AS (
-       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
-       |         greatest(doc_a, doc_b) AS b
-       |  FROM j WHERE jaccard >= 0.5),
+    s"""${nearDupEdgeCtes(0.5, "ce")},
        |e0 AS MATERIALIZED (
        |       SELECT a AS src, b AS dst FROM ce
        |       UNION ALL SELECT b, a FROM ce),
@@ -2624,8 +2429,11 @@ object TrainingData {
         .write.mode("overwrite").parquet(path)
       path
     }
-  val dsirSelectSql: String =
-    s"""WITH toks AS (
+  /** Oracle twin of [[dsirWeightTableFor]] applied to every document:
+    * hashed-bigram bucket counts, their micro-nat log-ratios `lr` and
+    * the per-doc sums `sums(doc_id, w)`. */
+  private val dsirSumsCtes: String =
+    s"""toks AS (
        |  SELECT doc_id,
        |    (lang = 'en' AND source IN ('src0','src1','src2')) AS is_tgt,
        |    string_split_regex(lower(trim(text)), '\\s+') AS ta
@@ -2653,7 +2461,9 @@ object TrainingData {
        |  FROM counts, tot),
        |sums AS (
        |  SELECT o.doc_id, sum(l.lr_micro) AS w
-       |  FROM occ o JOIN lr l USING (bucket) GROUP BY 1),
+       |  FROM occ o JOIN lr l USING (bucket) GROUP BY 1)""".stripMargin
+  val dsirSelectSql: String =
+    s"""WITH $dsirSumsCtes,
        |wts AS (
        |  SELECT d.doc_id, CAST(coalesce(s.w, 0) AS BIGINT) AS w_micro
        |  FROM documents d LEFT JOIN sums s ON s.doc_id = d.doc_id),
@@ -2740,6 +2550,20 @@ object TrainingData {
   private def nearDupPairs(spark: SparkSession, dir: String,
                            threshold: Double): DataFrame =
     Dedup.nearDupPairsFromSigs(spark, nearDupSigs(spark, dir), threshold)
+  /** `<cte> AS (…)`: the canonical a<b edge set of the pair relation
+    * `src(doc_a, doc_b)` — the oracle of Graph.canonicalEdges. */
+  private def canonEdgesCte(cte: String, src: String,
+                            materialized: Boolean = false): String =
+    s"""$cte AS${if (materialized) " MATERIALIZED" else ""} (
+       |  SELECT DISTINCT least(doc_a, doc_b) AS a,
+       |         greatest(doc_a, doc_b) AS b
+       |  FROM $src)""".stripMargin
+  /** Oracle twin of [[nearDupPairs]] at `threshold`: the minhash CTEs
+    * over [[nearDupCorpusSql]] and the canonical edge CTE `cte`. */
+  private def nearDupEdgeCtes(threshold: Double, cte: String = "e",
+                              materialized: Boolean = false): String =
+    s"""${minhashCtesOver(nearDupCorpusSql)},
+       |${canonEdgesCte(cte, s"j WHERE jaccard >= $threshold", materialized)}""".stripMargin
 
   // ------------------------------------------- near-dup clustering
   // Connected components over the verified near-dup pair graph, each doc
@@ -2755,22 +2579,37 @@ object TrainingData {
     val pairs = nearDupPairs(spark, dir, threshold = 0.5)
     Dedup.connectedComponents(pairs, "doc_a", "doc_b")
   }
+  /** `<nodes>(n)` and the recursive `reach(n, m)` closure over the
+    * symmetric `edges(a, b)`: min(m) per n is the component label of
+    * Dedup.connectedComponents. */
+  private def reachCtes(nodes: String = "nodes"): String =
+    s"""$nodes AS (SELECT DISTINCT a AS n FROM edges),
+       |reach(n, m) AS (
+       |  SELECT n, n FROM $nodes
+       |  UNION
+       |  SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a)""".stripMargin
+  /** [[reachCtes]] over `edges`, the symmetric closure of the pair CTE
+    * `pairs(<a>, <b>)`. */
+  private def closureCtes(pairs: String, a: String = "doc_a",
+                          b: String = "doc_b",
+                          nodes: String = "nodes"): String =
+    s"""edges AS (
+       |  SELECT $a AS a, $b AS b FROM $pairs
+       |  UNION SELECT $b, $a FROM $pairs),
+       |${reachCtes(nodes)}""".stripMargin
+  /** The minhash CTEs' 0.5 pairs as `<pairs>`, closed into
+    * `reps(doc_id, cluster_rep)`. */
+  private def clusterRepsCtes(pairs: String = "pairs"): String =
+    s"""$pairs AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
+       |${closureCtes(pairs)},
+       |reps AS (SELECT n AS doc_id, min(m) AS cluster_rep
+       |         FROM reach GROUP BY n)""".stripMargin
   /** Shared closure CTE prefix ending in `reps(doc_id, cluster_rep)` —
     * used by the clusters query and the cluster-size report so both
     * oracles describe the SAME clustering. */
   private val clustersClosureCtes: String =
     s"""WITH RECURSIVE ${minhashCtesOver(nearDupCorpusSql)},
-       |pairs AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-       |edges AS (
-       |  SELECT doc_a AS a, doc_b AS b FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
-       |nodes AS (SELECT DISTINCT a AS n FROM edges),
-       |reach(n, m) AS (
-       |  SELECT n, n FROM nodes
-       |  UNION
-       |  SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a),
-       |reps AS (SELECT n AS doc_id, min(m) AS cluster_rep
-       |         FROM reach GROUP BY n)""".stripMargin
+       |${clusterRepsCtes()}""".stripMargin
   val dedupClustersSql: String =
     s"""$clustersClosureCtes
        |SELECT doc_id, cluster_rep FROM reps""".stripMargin
@@ -2807,13 +2646,12 @@ object TrainingData {
       .select(col("band"), col("n_docs"), col("n_kept"),
         expr("n_kept * 10000 div n_docs").as("keep_rate_bp"))
   }
-  val qualityDedupSql: String = {
-    val sw = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
+  val qualityDedupSql: String =
     s"""$clustersClosureCtes,
        |scored AS (
        |  SELECT c.doc_id,
        |    round(
-       |      len(regexp_extract_all(lower(c.text), '$sw'))::DOUBLE /
+       |      len(regexp_extract_all(lower(c.text), '$duckStopRe'))::DOUBLE /
        |        greatest(len(string_split_regex(trim(c.text), '\\s+')), 1) +
        |      least(len(string_split_regex(trim(c.text), '\\s+')),
        |            200)::DOUBLE / 200.0, 4) AS score
@@ -2828,7 +2666,6 @@ object TrainingData {
        |  CAST(sum(kept) AS BIGINT) AS n_kept,
        |  CAST(sum(kept) * 10000 // count(*) AS BIGINT) AS keep_rate_bp
        |FROM k GROUP BY 1""".stripMargin
-  }
 
   // ----------------------------------------------- dedup ROI table
   // What dedup actually SAVES, by source: the twin corpus's document
@@ -3029,25 +2866,14 @@ object TrainingData {
     val survivorsCorpus =
       "SELECT c.doc_id, c.text FROM corpus3 c JOIN keep1 USING (doc_id)"
     s"""WITH RECURSIVE corpus3 AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT doc_id + 1000000, substr(text, 11) FROM documents
-       |  UNION ALL SELECT doc_id + 2000000, text FROM documents),
+       |  $simhashCorpusSql),
        |fp AS (
        |  SELECT doc_id,
        |    md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS f
        |  FROM corpus3),
        |keep1 AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY f),
        |${minhashCtesOver(survivorsCorpus)},
-       |pairs AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-       |edges AS (
-       |  SELECT doc_a AS a, doc_b AS b FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
-       |nodes AS (SELECT DISTINCT a AS n FROM edges),
-       |reach(n, m) AS (
-       |  SELECT n, n FROM nodes
-       |  UNION
-       |  SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a),
-       |reps AS (SELECT n AS doc_id, min(m) AS cluster_rep FROM reach GROUP BY n)
+       |${clusterRepsCtes()}
        |SELECT k.doc_id FROM keep1 k LEFT JOIN reps r USING (doc_id)
        |WHERE r.cluster_rep IS NULL OR r.cluster_rep = k.doc_id""".stripMargin
   }
@@ -3086,8 +2912,7 @@ object TrainingData {
         sum(length(col("text")).cast("long")).as("sum_chars"),
         sum(col("doc_id")).as("sum_ids"))
   }
-  val curateE2eSql: String = {
-    val punct = TextFns.PunctClass.replace("'", "''")
+  val curateE2eSql: String =
     s"""WITH RECURSIVE corpus0 AS (
        |  $nearDupCorpusSql),
        |qual AS (
@@ -3095,20 +2920,10 @@ object TrainingData {
        |  WHERE length(text) >= 100
        |    AND len(string_split_regex(trim(text), '\\s+')) >= 15
        |    AND round((length(text)
-       |          - length(regexp_replace(text, '$punct', '', 'g')))::DOUBLE /
+       |          - length(regexp_replace(text, '$duckPunct', '', 'g')))::DOUBLE /
        |          greatest(length(text), 1), 4) <= 0.1),
        |${minhashCtesOver("SELECT doc_id, text FROM qual")},
-       |prs AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
-       |edges AS (
-       |  SELECT doc_a AS a, doc_b AS b FROM prs
-       |  UNION SELECT doc_b, doc_a FROM prs),
-       |nodes AS (SELECT DISTINCT a AS n FROM edges),
-       |reach(n, m) AS (
-       |  SELECT n, n FROM nodes
-       |  UNION
-       |  SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a),
-       |reps AS (SELECT n AS doc_id, min(m) AS cluster_rep
-       |         FROM reach GROUP BY n),
+       |${clusterRepsCtes("prs")},
        |surv AS (
        |  SELECT qq.doc_id, qq.text FROM qual qq
        |  LEFT JOIN reps r USING (doc_id)
@@ -3123,29 +2938,32 @@ object TrainingData {
        |  CAST(sum(length(text)) AS BIGINT) AS sum_chars,
        |  CAST(sum(doc_id) AS BIGINT) AS sum_ids
        |FROM sp GROUP BY 1""".stripMargin
-  }
 
   // -------------------------------------------------------- cosine top-k
+  /** The top-`k` rows per query of `src(q_id, n_id, sim)`, ranked by
+    * (sim DESC, n_id) — the output of every vector-search oracle. */
+  private def topKSql(src: String, k: Int): String =
+    s"""SELECT q_id, n_id, sim,
+       |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id)
+       |       AS BIGINT) AS rank
+       |FROM $src
+       |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) <= $k""".stripMargin
   def cosineTopKQ(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(spark, dir, "embeddings")
     Similarity.bruteForceTopK(emb.filter(col("vec_id") < 20), emb,
       "vec_id", "embedding", 5)
   }
   val cosineTopKSql: String =
-    """WITH v AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-      |q AS (SELECT vec_id AS q_id, vec AS q_v FROM v WHERE vec_id < 20),
-      |s AS (
-      |  SELECT q.q_id, c.vec_id AS n_id,
-      |    round(list_dot_product(q.q_v, c.vec) /
-      |          (sqrt(list_dot_product(q.q_v, q.q_v)) *
-      |           sqrt(list_dot_product(c.vec, c.vec))), 4) AS sim
-      |  FROM q JOIN v c ON c.vec_id != q.q_id)
-      |SELECT q_id, n_id, sim,
-      |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id)
-      |       AS BIGINT) AS rank
-      |FROM s
-      |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) <= 5""".stripMargin
+    s"""WITH v AS (
+       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+       |q AS (SELECT vec_id AS q_id, vec AS q_v FROM v WHERE vec_id < 20),
+       |s AS (
+       |  SELECT q.q_id, c.vec_id AS n_id,
+       |    round(list_dot_product(q.q_v, c.vec) /
+       |          (sqrt(list_dot_product(q.q_v, q.q_v)) *
+       |           sqrt(list_dot_product(c.vec, c.vec))), 4) AS sim
+       |  FROM q JOIN v c ON c.vec_id != q.q_id)
+       |${topKSql("s", 5)}""".stripMargin
 
   // ------------------------------------------- ANN dimension tradeoff
   // Matryoshka-style truncation audit: recall@5 of the exact search
@@ -3178,22 +2996,27 @@ object TrainingData {
         expr("(coalesce(n_hits, 0L) * 10000) div n_results")
           .as("recall_bp"))
   }
+  /** `fs` and `fk(q_id, n_id)`: the exact cosine top-5 of every query
+    * in `q(q_id, q_v)` over `v(vec_id, vec)` — the oracle of
+    * Similarity.bruteForceTopK, the ground truth of the recall audits. */
+  private val exactTop5Ctes: String =
+    """fs AS (
+      |  SELECT q.q_id, c.vec_id AS n_id,
+      |    round(list_dot_product(q.q_v, c.vec) /
+      |          (sqrt(list_dot_product(q.q_v, q.q_v)) *
+      |           sqrt(list_dot_product(c.vec, c.vec))), 4) AS sim
+      |  FROM q JOIN v c ON c.vec_id != q.q_id),
+      |fk AS (
+      |  SELECT q_id, n_id FROM fs
+      |  QUALIFY row_number() OVER (PARTITION BY q_id
+      |    ORDER BY sim DESC, n_id) <= 5)""".stripMargin
   val annDimSweepSql: String = {
     def sliced(e: String) = s"list_slice($e, 1, CAST(d.dims AS INT))"
     s"""WITH v AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec
        |  FROM embeddings),
        |q AS (SELECT vec_id AS q_id, vec AS q_v FROM v WHERE vec_id < 20),
-       |fs AS (
-       |  SELECT q.q_id, c.vec_id AS n_id,
-       |    round(list_dot_product(q.q_v, c.vec) /
-       |          (sqrt(list_dot_product(q.q_v, q.q_v)) *
-       |           sqrt(list_dot_product(c.vec, c.vec))), 4) AS sim
-       |  FROM q JOIN v c ON c.vec_id != q.q_id),
-       |fk AS (
-       |  SELECT q_id, n_id FROM fs
-       |  QUALIFY row_number() OVER (PARTITION BY q_id
-       |    ORDER BY sim DESC, n_id) <= 5),
+       |$exactTop5Ctes,
        |d AS (SELECT unnest([8, 16, 32]) AS dims),
        |ts AS (
        |  SELECT d.dims, q.q_id, c.vec_id AS n_id,
@@ -3259,53 +3082,44 @@ object TrainingData {
         coalesce(col("in_exact"), lit(false)).as("in_exact"))
   }
   val annDimRerankSql: String =
-    """WITH v AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec
-      |  FROM embeddings),
-      |q AS (SELECT vec_id AS q_id, vec AS q_v FROM v WHERE vec_id < 20),
-      |ts AS (
-      |  SELECT q.q_id, c.vec_id AS n_id,
-      |    round(list_dot_product(list_slice(q.q_v, 1, 16),
-      |                           list_slice(c.vec, 1, 16)) /
-      |          (sqrt(list_dot_product(list_slice(q.q_v, 1, 16),
-      |                                 list_slice(q.q_v, 1, 16))) *
-      |           sqrt(list_dot_product(list_slice(c.vec, 1, 16),
-      |                                 list_slice(c.vec, 1, 16)))), 4)
-      |      AS sim
-      |  FROM q JOIN v c ON c.vec_id != q.q_id),
-      |ck AS (
-      |  SELECT q_id, n_id FROM ts
-      |  QUALIFY row_number() OVER (PARTITION BY q_id
-      |    ORDER BY sim DESC, n_id) <= 20),
-      |rr AS (
-      |  SELECT ck.q_id, ck.n_id,
-      |    round(list_dot_product(q.q_v, c.vec) /
-      |          (sqrt(list_dot_product(q.q_v, q.q_v)) *
-      |           sqrt(list_dot_product(c.vec, c.vec))), 4) AS sim
-      |  FROM ck
-      |  JOIN q ON q.q_id = ck.q_id
-      |  JOIN v c ON c.vec_id = ck.n_id),
-      |rk AS (
-      |  SELECT q_id, n_id, sim,
-      |    CAST(row_number() OVER (PARTITION BY q_id
-      |      ORDER BY sim DESC, n_id) AS BIGINT) AS rank
-      |  FROM rr
-      |  QUALIFY row_number() OVER (PARTITION BY q_id
-      |    ORDER BY sim DESC, n_id) <= 5),
-      |fs AS (
-      |  SELECT q.q_id, c.vec_id AS n_id,
-      |    round(list_dot_product(q.q_v, c.vec) /
-      |          (sqrt(list_dot_product(q.q_v, q.q_v)) *
-      |           sqrt(list_dot_product(c.vec, c.vec))), 4) AS sim
-      |  FROM q JOIN v c ON c.vec_id != q.q_id),
-      |fk AS (
-      |  SELECT q_id, n_id FROM fs
-      |  QUALIFY row_number() OVER (PARTITION BY q_id
-      |    ORDER BY sim DESC, n_id) <= 5)
-      |SELECT rk.q_id, rk.n_id, rk.sim, rk.rank,
-      |  (fk.n_id IS NOT NULL) AS in_exact
-      |FROM rk LEFT JOIN fk
-      |  ON fk.q_id = rk.q_id AND fk.n_id = rk.n_id""".stripMargin
+    s"""WITH v AS (
+       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec
+       |  FROM embeddings),
+       |q AS (SELECT vec_id AS q_id, vec AS q_v FROM v WHERE vec_id < 20),
+       |ts AS (
+       |  SELECT q.q_id, c.vec_id AS n_id,
+       |    round(list_dot_product(list_slice(q.q_v, 1, 16),
+       |                           list_slice(c.vec, 1, 16)) /
+       |          (sqrt(list_dot_product(list_slice(q.q_v, 1, 16),
+       |                                 list_slice(q.q_v, 1, 16))) *
+       |           sqrt(list_dot_product(list_slice(c.vec, 1, 16),
+       |                                 list_slice(c.vec, 1, 16)))), 4)
+       |      AS sim
+       |  FROM q JOIN v c ON c.vec_id != q.q_id),
+       |ck AS (
+       |  SELECT q_id, n_id FROM ts
+       |  QUALIFY row_number() OVER (PARTITION BY q_id
+       |    ORDER BY sim DESC, n_id) <= 20),
+       |rr AS (
+       |  SELECT ck.q_id, ck.n_id,
+       |    round(list_dot_product(q.q_v, c.vec) /
+       |          (sqrt(list_dot_product(q.q_v, q.q_v)) *
+       |           sqrt(list_dot_product(c.vec, c.vec))), 4) AS sim
+       |  FROM ck
+       |  JOIN q ON q.q_id = ck.q_id
+       |  JOIN v c ON c.vec_id = ck.n_id),
+       |rk AS (
+       |  SELECT q_id, n_id, sim,
+       |    CAST(row_number() OVER (PARTITION BY q_id
+       |      ORDER BY sim DESC, n_id) AS BIGINT) AS rank
+       |  FROM rr
+       |  QUALIFY row_number() OVER (PARTITION BY q_id
+       |    ORDER BY sim DESC, n_id) <= 5),
+       |$exactTop5Ctes
+       |SELECT rk.q_id, rk.n_id, rk.sim, rk.rank,
+       |  (fk.n_id IS NOT NULL) AS in_exact
+       |FROM rk LEFT JOIN fk
+       |  ON fk.q_id = rk.q_id AND fk.n_id = rk.n_id""".stripMargin
 
   /** embeddings ∪ perturbed twins (+0.05 on dim 0, ids +1e5) — the
     * shared fixture of the embedding near-dup family; the oracle twin
@@ -3359,52 +3173,57 @@ object TrainingData {
     val corpus = twinEmbCorpus(spark, dir)
     Similarity.lshNearDupPairs(corpus, "vec_id", "v", 0.98)
   }
+  /** `projs`, `buckets` and `bands(vec_id, tbl, bucket)`: the 16-table,
+    * `bits`-bit hyperplane buckets of `src(vec_id, <vec>)` — the oracle
+    * of LshBucketsExpr's affine ±1 plane signs. */
+  private def lshBandCtes(src: String, vec: String, bits: Int): String =
+    s"""projs AS (
+       |  SELECT vec_id, $vec,
+       |    list_transform(range(${16 * bits}), j ->
+       |      list_sum(list_transform(range(1, len($vec)+1), i ->
+       |        $vec[CAST(i AS INT)] *
+       |        CASE WHEN ((j*2654435761 + i*40503) % 97) % 2 = 0
+       |             THEN 1.0 ELSE -1.0 END))) AS pj
+       |  FROM $src),
+       |buckets AS (
+       |  SELECT vec_id,
+       |    list_transform(range(16), t ->
+       |      list_sum(list_transform(range($bits), r ->
+       |        CASE WHEN pj[CAST(t*$bits+r+1 AS INT)] > 0
+       |             THEN (CAST(1 AS BIGINT) << r) ELSE CAST(0 AS BIGINT) END)))
+       |      AS bk
+       |  FROM projs),
+       |bands AS (
+       |  SELECT vec_id, t AS tbl, bk[CAST(t+1 AS INT)] AS bucket
+       |  FROM buckets, range(16) tt(t))""".stripMargin
   /** The LSH near-dup pipeline as a WITH-clause body ending in the
     * `scored(id_a, id_b, sim)` CTE — shared by the pairs query and the
     * embedding-clusters closure so both oracles describe the SAME
     * candidate generation and verification. */
   private val neardupLshCtes: String =
-    """base AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |corpus AS (
-      |  SELECT vec_id, v FROM base
-      |  UNION ALL
-      |  SELECT vec_id + 100000,
-      |    list_transform(range(1, len(v) + 1),
-      |      i -> CASE WHEN i = 1 THEN v[CAST(i AS INT)] + 0.05
-      |                ELSE v[CAST(i AS INT)] END)
-      |  FROM base),
-      |projs AS (
-      |  SELECT vec_id, v,
-      |    list_transform(range(192), j ->
-      |      list_sum(list_transform(range(1, len(v)+1), i ->
-      |        v[CAST(i AS INT)] *
-      |        CASE WHEN ((j*2654435761 + i*40503) % 97) % 2 = 0
-      |             THEN 1.0 ELSE -1.0 END))) AS pj
-      |  FROM corpus),
-      |buckets AS (
-      |  SELECT vec_id,
-      |    list_transform(range(16), t ->
-      |      list_sum(list_transform(range(12), r ->
-      |        CASE WHEN pj[CAST(t*12+r+1 AS INT)] > 0
-      |             THEN (CAST(1 AS BIGINT) << r) ELSE CAST(0 AS BIGINT) END)))
-      |      AS bk
-      |  FROM projs),
-      |bands AS (
-      |  SELECT vec_id, t AS tbl, bk[CAST(t+1 AS INT)] AS bucket
-      |  FROM buckets, range(16) tt(t)),
-      |cand AS (
-      |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-      |  FROM bands a JOIN bands b
-      |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-      |scored AS (
-      |  SELECT cand.id_a, cand.id_b,
-      |    round(list_dot_product(av.v, bv.v) /
-      |          (sqrt(list_dot_product(av.v, av.v)) *
-      |           sqrt(list_dot_product(bv.v, bv.v))), 4) AS sim
-      |  FROM cand
-      |  JOIN corpus av ON av.vec_id = cand.id_a
-      |  JOIN corpus bv ON bv.vec_id = cand.id_b)""".stripMargin
+    s"""base AS (
+       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |corpus AS (
+       |  SELECT vec_id, v FROM base
+       |  UNION ALL
+       |  SELECT vec_id + 100000,
+       |    list_transform(range(1, len(v) + 1),
+       |      i -> CASE WHEN i = 1 THEN v[CAST(i AS INT)] + 0.05
+       |                ELSE v[CAST(i AS INT)] END)
+       |  FROM base),
+       |${lshBandCtes("corpus", "v", 12)},
+       |cand AS (
+       |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+       |  FROM bands a JOIN bands b
+       |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
+       |scored AS (
+       |  SELECT cand.id_a, cand.id_b,
+       |    round(list_dot_product(av.v, bv.v) /
+       |          (sqrt(list_dot_product(av.v, av.v)) *
+       |           sqrt(list_dot_product(bv.v, bv.v))), 4) AS sim
+       |  FROM cand
+       |  JOIN corpus av ON av.vec_id = cand.id_a
+       |  JOIN corpus bv ON bv.vec_id = cand.id_b)""".stripMargin
 
   val neardupLshSql: String =
     s"""WITH $neardupLshCtes
@@ -3467,14 +3286,7 @@ object TrainingData {
   val embeddingClustersSql: String =
     s"""WITH RECURSIVE $neardupLshCtes,
        |pairs AS (SELECT id_a, id_b FROM scored WHERE sim >= 0.98),
-       |edges AS (
-       |  SELECT id_a AS a, id_b AS b FROM pairs
-       |  UNION SELECT id_b, id_a FROM pairs),
-       |nodes AS (SELECT DISTINCT a AS n FROM edges),
-       |reach(n, m) AS (
-       |  SELECT n, n FROM nodes
-       |  UNION
-       |  SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a)
+       |${closureCtes("pairs", "id_a", "id_b")}
        |SELECT n AS vec_id, min(m) AS cluster_rep FROM reach GROUP BY n""".stripMargin
 
   // ----------------------------------------------------- cluster purity
@@ -4389,11 +4201,10 @@ object TrainingData {
       .select(col("doc_id"), col("lang"), col("signal"),
         col("tier_num"), col("tier"))
   }
-  val qualityBucketsSql: String = {
-    val sw = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
+  val qualityBucketsSql: String =
     s"""WITH scored AS (
        |  SELECT doc_id, lang,
-       |    round(len(regexp_extract_all(lower(text), '$sw'))::DOUBLE /
+       |    round(len(regexp_extract_all(lower(text), '$duckStopRe'))::DOUBLE /
        |          greatest(len(string_split_regex(trim(text), '\\s+')), 1),
        |          4) AS signal
        |  FROM documents),
@@ -4406,7 +4217,6 @@ object TrainingData {
        |SELECT doc_id, lang, signal, tier_num,
        |  (['head', 'middle', 'tail'])[CAST(tier_num AS INT)] AS tier
        |FROM tiered""".stripMargin
-  }
 
   // ------------------------------------------------------- PII scrubbing
   // The synthetic corpus carries no natural PII, so deterministic PII is
@@ -4456,46 +4266,29 @@ object TrainingData {
     Similarity.lshTopK(emb.filter(col("vec_id") < 20), emb,
       "vec_id", "embedding", 5)
   }
+  /** The oracle of Similarity.lshTopK: every vector of `queries` (a
+    * `bands` relation) against its `bits`-bit bucket-mates, cosine-ranked,
+    * top `k`. */
+  private def lshTopKSql(queries: String, bits: Int, k: Int): String =
+    s"""WITH v AS (
+       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+       |${lshBandCtes("v", "vec", bits)},
+       |cand AS (
+       |  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS n_id
+       |  FROM $queries q
+       |  JOIN bands c ON q.tbl = c.tbl AND q.bucket = c.bucket
+       |              AND q.vec_id != c.vec_id),
+       |scored AS (
+       |  SELECT cand.q_id, cand.n_id,
+       |    round(list_dot_product(qv.vec, cv.vec) /
+       |          (sqrt(list_dot_product(qv.vec, qv.vec)) *
+       |           sqrt(list_dot_product(cv.vec, cv.vec))), 4) AS sim
+       |  FROM cand
+       |  JOIN v qv ON qv.vec_id = cand.q_id
+       |  JOIN v cv ON cv.vec_id = cand.n_id)
+       |${topKSql("scored", k)}""".stripMargin
   val annLshSql: String =
-    """WITH v AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-      |projs AS (
-      |  SELECT vec_id, vec,
-      |    list_transform(range(96), j ->
-      |      list_sum(list_transform(range(1, len(vec)+1), i ->
-      |        vec[CAST(i AS INT)] *
-      |        CASE WHEN ((j*2654435761 + i*40503) % 97) % 2 = 0
-      |             THEN 1.0 ELSE -1.0 END))) AS pj
-      |  FROM v),
-      |buckets AS (
-      |  SELECT vec_id,
-      |    list_transform(range(16), t ->
-      |      list_sum(list_transform(range(6), r ->
-      |        CASE WHEN pj[CAST(t*6+r+1 AS INT)] > 0
-      |             THEN (CAST(1 AS BIGINT) << r) ELSE CAST(0 AS BIGINT) END)))
-      |      AS bk
-      |  FROM projs),
-      |bands AS (
-      |  SELECT vec_id, t AS tbl, bk[CAST(t+1 AS INT)] AS bucket
-      |  FROM buckets, range(16) tt(t)),
-      |cand AS (
-      |  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS n_id
-      |  FROM (SELECT * FROM bands WHERE vec_id < 20) q
-      |  JOIN bands c ON q.tbl = c.tbl AND q.bucket = c.bucket
-      |              AND q.vec_id != c.vec_id),
-      |scored AS (
-      |  SELECT cand.q_id, cand.n_id,
-      |    round(list_dot_product(qv.vec, cv.vec) /
-      |          (sqrt(list_dot_product(qv.vec, qv.vec)) *
-      |           sqrt(list_dot_product(cv.vec, cv.vec))), 4) AS sim
-      |  FROM cand
-      |  JOIN v qv ON qv.vec_id = cand.q_id
-      |  JOIN v cv ON cv.vec_id = cand.n_id)
-      |SELECT q_id, n_id, sim,
-      |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id)
-      |       AS BIGINT) AS rank
-      |FROM scored
-      |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) <= 5""".stripMargin
+    lshTopKSql("(SELECT * FROM bands WHERE vec_id < 20)", bits = 6, k = 5)
 
   // ------------------------------------------------- bitext mining
   // Margin-based parallel-pair harvesting over a shared embedding
@@ -4543,25 +4336,7 @@ object TrainingData {
          |  FROM top_$tag GROUP BY q_id)""".stripMargin
     s"""WITH v AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-       |projs AS (
-       |  SELECT vec_id, vec,
-       |    list_transform(range(96), j ->
-       |      list_sum(list_transform(range(1, len(vec)+1), i ->
-       |        vec[CAST(i AS INT)] *
-       |        CASE WHEN ((j*2654435761 + i*40503) % 97) % 2 = 0
-       |             THEN 1.0 ELSE -1.0 END))) AS pj
-       |  FROM v),
-       |buckets AS (
-       |  SELECT vec_id,
-       |    list_transform(range(16), t ->
-       |      list_sum(list_transform(range(6), r ->
-       |        CASE WHEN pj[CAST(t*6+r+1 AS INT)] > 0
-       |             THEN (CAST(1 AS BIGINT) << r) ELSE CAST(0 AS BIGINT) END)))
-       |      AS bk
-       |  FROM projs),
-       |bands AS (
-       |  SELECT vec_id, t AS tbl, bk[CAST(t+1 AS INT)] AS bucket
-       |  FROM buckets, range(16) tt(t)),
+       |${lshBandCtes("v", "vec", 6)},
        |${side("f", 0, 1)},
        |${side("r", 1, 0)},
        |m AS (
@@ -4595,47 +4370,7 @@ object TrainingData {
     Similarity.lshTopK(emb, emb, "vec_id", "embedding", 3,
       tables = 16, bits = 12)
   }
-  val knnGraphSql: String =
-    """WITH v AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-      |projs AS (
-      |  SELECT vec_id, vec,
-      |    list_transform(range(192), j ->
-      |      list_sum(list_transform(range(1, len(vec)+1), i ->
-      |        vec[CAST(i AS INT)] *
-      |        CASE WHEN ((j*2654435761 + i*40503) % 97) % 2 = 0
-      |             THEN 1.0 ELSE -1.0 END))) AS pj
-      |  FROM v),
-      |buckets AS (
-      |  SELECT vec_id,
-      |    list_transform(range(16), t ->
-      |      list_sum(list_transform(range(12), r ->
-      |        CASE WHEN pj[CAST(t*12+r+1 AS INT)] > 0
-      |             THEN (CAST(1 AS BIGINT) << r) ELSE CAST(0 AS BIGINT) END)))
-      |      AS bk
-      |  FROM projs),
-      |bands AS (
-      |  SELECT vec_id, t AS tbl, bk[CAST(t+1 AS INT)] AS bucket
-      |  FROM buckets, range(16) tt(t)),
-      |cand AS (
-      |  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS n_id
-      |  FROM bands q
-      |  JOIN bands c ON q.tbl = c.tbl AND q.bucket = c.bucket
-      |              AND q.vec_id != c.vec_id),
-      |scored AS (
-      |  SELECT cand.q_id, cand.n_id,
-      |    round(list_dot_product(qv.vec, cv.vec) /
-      |          (sqrt(list_dot_product(qv.vec, qv.vec)) *
-      |           sqrt(list_dot_product(cv.vec, cv.vec))), 4) AS sim
-      |  FROM cand
-      |  JOIN v qv ON qv.vec_id = cand.q_id
-      |  JOIN v cv ON cv.vec_id = cand.n_id)
-      |SELECT q_id, n_id, sim,
-      |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id)
-      |       AS BIGINT) AS rank
-      |FROM scored
-      |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) <= 3"""
-      .stripMargin
+  val knnGraphSql: String = lshTopKSql("bands", bits = 12, k = 3)
 
   // --------------------------------------------------- ANN via IVF
   // IVF with a deterministically stubbed coarse quantizer (centroids =
@@ -4979,6 +4714,32 @@ object TrainingData {
       docs(spark, dir).select(col("doc_id"), planted.as("text")),
       "text", "doc_id")
   }
+  /** `g5(doc_id, pos, g)`, every word 5-gram of `tok(doc_id, t)`, and
+    * `cov(doc_id, covered)`, the token count of the union of the
+    * duplicated 5-grams' intervals (running-max window) — the oracle of
+    * TextEval's dup-5-gram coverage. */
+  private val dup5CoverageCtes: String =
+    """g5 AS (
+      |  SELECT doc_id, u.pos AS pos, u.g AS g FROM (
+      |    SELECT doc_id, unnest(CASE WHEN len(t) < 5 THEN [] ELSE
+      |      list_transform(range(1, len(t) - 3), i ->
+      |        struct_pack(pos := i, g := t[i] || ' ' || t[i+1] || ' ' ||
+      |          t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) END) AS u
+      |    FROM tok)),
+      |dup5 AS (SELECT doc_id, g FROM g5 GROUP BY 1, 2
+      |         HAVING count(*) >= 2),
+      |cov0 AS (
+      |  SELECT g5.doc_id, g5.pos, g5.pos + 5 AS e
+      |  FROM g5 JOIN dup5 USING (doc_id, g)),
+      |cov1 AS (
+      |  SELECT doc_id, pos, e,
+      |    max(e) OVER (PARTITION BY doc_id ORDER BY pos
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
+      |  FROM cov0),
+      |cov AS (
+      |  SELECT doc_id,
+      |    sum(greatest(e - greatest(pos, coalesce(pe, pos)), 0)) AS covered
+      |  FROM cov1 GROUP BY 1)""".stripMargin
   val gopherRepetitionSql: String =
     raw"""WITH docs AS (
        |  SELECT doc_id,
@@ -4998,27 +4759,7 @@ object TrainingData {
        |  GROUP BY 1, 2
        |  QUALIFY row_number() OVER (PARTITION BY doc_id
        |    ORDER BY count(*) DESC, g) = 1),
-       |g5 AS (
-       |  SELECT doc_id, u.pos AS pos, u.g AS g FROM (
-       |    SELECT doc_id, unnest(CASE WHEN len(t) < 5 THEN [] ELSE
-       |      list_transform(range(1, len(t) - 3), i ->
-       |        struct_pack(pos := i, g := t[i] || ' ' || t[i+1] || ' '
-       |          || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) END) AS u
-       |    FROM tok)),
-       |dup5 AS (SELECT doc_id, g FROM g5 GROUP BY 1, 2
-       |         HAVING count(*) >= 2),
-       |cov0 AS (
-       |  SELECT g5.doc_id, g5.pos, g5.pos + 5 AS e
-       |  FROM g5 JOIN dup5 USING (doc_id, g)),
-       |cov1 AS (
-       |  SELECT doc_id, pos, e,
-       |    max(e) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
-       |  FROM cov0),
-       |cov AS (
-       |  SELECT doc_id,
-       |    sum(greatest(e - greatest(pos, coalesce(pe, pos)), 0)) AS covered
-       |  FROM cov1 GROUP BY 1)
+       |$dup5CoverageCtes
        |SELECT n.doc_id,
        |  coalesce(top2_gram, '') AS top2_gram,
        |  CAST(coalesce(top2_n, 0) AS BIGINT) AS top2_n,
@@ -5295,27 +5036,7 @@ object TrainingData {
        |${gn(2)},
        |${gn(3)},
        |${gn(4)},
-       |g5 AS (
-       |  SELECT doc_id, u.pos AS pos, u.g AS g FROM (
-       |    SELECT doc_id, unnest(CASE WHEN len(t) < 5 THEN [] ELSE
-       |      list_transform(range(1, len(t) - 3), i ->
-       |        struct_pack(pos := i, g := t[i] || ' ' || t[i+1] || ' '
-       |          || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) END) AS u
-       |    FROM tok)),
-       |dup5 AS (SELECT doc_id, g FROM g5 GROUP BY 1, 2
-       |         HAVING count(*) >= 2),
-       |cov0 AS (
-       |  SELECT g5.doc_id, g5.pos, g5.pos + 5 AS e
-       |  FROM g5 JOIN dup5 USING (doc_id, g)),
-       |cov1 AS (
-       |  SELECT doc_id, pos, e,
-       |    max(e) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe
-       |  FROM cov0),
-       |cov AS (
-       |  SELECT doc_id,
-       |    sum(greatest(e - greatest(pos, coalesce(pe, pos)), 0)) AS covered
-       |  FROM cov1 GROUP BY 1),
+       |$dup5CoverageCtes,
        |lines AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line
        |  FROM docsb),
        |lagg AS (SELECT doc_id, line, count(*) AS lc FROM lines
@@ -5660,12 +5381,11 @@ object TrainingData {
     scored.withColumn("pr", round(percent_rank().over(w), 6))
       .where(col("pr") >= 0.2d)
   }
-  val qualityQuantileSql: String = {
-    val sw = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
+  val qualityQuantileSql: String =
     s"""WITH scored AS (
        |  SELECT doc_id, lang,
        |    round(
-       |      len(regexp_extract_all(lower(text), '$sw'))::DOUBLE /
+       |      len(regexp_extract_all(lower(text), '$duckStopRe'))::DOUBLE /
        |        greatest(len(string_split_regex(trim(text), '\\s+')), 1) +
        |      least(len(string_split_regex(trim(text), '\\s+')), 200)::DOUBLE
        |        / 200.0, 4) AS score
@@ -5676,7 +5396,6 @@ object TrainingData {
        |FROM scored
        |QUALIFY round(percent_rank() OVER
        |    (PARTITION BY lang ORDER BY score, doc_id), 6) >= 0.2""".stripMargin
-  }
 
   // ------------------------------------------- continuous curation loop
   // The live ingest pipeline end to end: a corpus's signature table is
@@ -5999,17 +5718,6 @@ object TrainingData {
          |  SELECT doc_id + 9000000,
          |         md5(text || 'x') || md5(text || 'y') || md5(text || 'z')
          |  FROM documents WHERE doc_id % 7 = 3""".stripMargin
-    // the winnowing fp chain shares CTE names with the minhash chain —
-    // suffix it (the x_screen_overlap device)
-    val winnowSuffixed = winnowCtes
-      .replace("FROM documents", "FROM corpus")
-      .replace("sh AS (", "sh_w AS (")
-      .replace("FROM sh)", "FROM sh_w)")
-      .replace("hr AS (", "hr_w AS (")
-      .replace("FROM hr)", "FROM hr_w)")
-      .replace("win AS (", "win_w AS (")
-      .replace("FROM win WHERE", "FROM win_w WHERE")
-      .replace("fp AS MATERIALIZED (", "fp_w AS MATERIALIZED (")
     // one quote-screen replay: held ids vs batch ids, df cap over both.
     // Conditions use the %ID% placeholder (a blind textual doc_id
     // replace would also rewrite subquery columns).
@@ -6035,7 +5743,7 @@ object TrainingData {
          |  JOIN n$sfx nb ON nb.doc_id = qp$sfx.bid
          |  WHERE (shared * 10000) // least(na.n, nb.n) >= 8000)""".stripMargin
     s"""WITH ${minhashCtesOver(tagged)},
-       |$winnowSuffixed,
+       |${winnowCtesW("corpus")},
        |ih AS (SELECT DISTINCT doc_id, h FROM fp_w),
        |mh AS (SELECT doc_a, doc_b FROM j WHERE jaccard >= 0.5),
        |b0 AS (SELECT doc_id FROM corpus
@@ -6520,35 +6228,7 @@ object TrainingData {
     spark.read.parquet(out).select(col("id").as("doc_id"), col("w_micro"))
   }
   val streamSelectSql: String =
-    s"""WITH toks AS (
-       |  SELECT doc_id,
-       |    (lang = 'en' AND source IN ('src0','src1','src2')) AS is_tgt,
-       |    string_split_regex(lower(trim(text)), '\\s+') AS ta
-       |  FROM documents),
-       |occ AS (
-       |  SELECT doc_id, is_tgt, ${duckHash32("g")} % 256 AS bucket
-       |  FROM (
-       |    SELECT doc_id, is_tgt, unnest(
-       |      CASE WHEN len(ta) >= 2 THEN
-       |        list_transform(range(1, len(ta)),
-       |          i -> ta[CAST(i AS INT)] || ' ' || ta[CAST(i AS INT)+1])
-       |      ELSE [] END) AS g
-       |    FROM toks)),
-       |counts AS (
-       |  SELECT bucket,
-       |    sum(CASE WHEN is_tgt THEN 1 ELSE 0 END) AS ct,
-       |    count(*) AS cr
-       |  FROM occ GROUP BY 1),
-       |tot AS (SELECT sum(ct) AS nt, sum(cr) AS nr FROM counts),
-       |lr AS (
-       |  SELECT bucket,
-       |    CAST(round(ln(((ct + 1) * (nr + 256))::DOUBLE /
-       |                  ((cr + 1) * (nt + 256))) * 1000000, 0) AS BIGINT)
-       |      AS lr_micro
-       |  FROM counts, tot),
-       |sums AS (
-       |  SELECT o.doc_id, sum(l.lr_micro) AS w
-       |  FROM occ o JOIN lr l USING (bucket) GROUP BY 1)
+    s"""WITH $dsirSumsCtes
        |SELECT d.doc_id, CAST(coalesce(s.w, 0) AS BIGINT) AS w_micro
        |FROM documents d LEFT JOIN sums s ON s.doc_id = d.doc_id""".stripMargin
 
@@ -6745,6 +6425,25 @@ object TrainingData {
       |    CAST(sel % 2147483648 AS BIGINT) AS pos,
       |    CAST(sel // 2147483648 AS BIGINT) AS h
       |  FROM win WHERE pos <= n - 4)""".stripMargin
+  /** `ih`, `rare` and `p(doc_id, h)`: the distinct fingerprints of
+    * `fp` under the df cap of 50 — the screen input of
+    * Corpus.winnowingCandidatesFrom and the containment screens. */
+  private val rareFpCtes: String =
+    """ih AS (SELECT DISTINCT doc_id, h FROM fp),
+      |rare AS (SELECT h FROM ih GROUP BY h HAVING count(*) <= 50),
+      |p AS MATERIALIZED (
+      |  SELECT ih.doc_id, ih.h FROM ih JOIN rare USING (h))""".stripMargin
+  /** [[winnowCtes]] over `src` with every CTE name suffixed `_w`, for
+    * statements whose minhash chain already uses those names. */
+  private def winnowCtesW(src: String): String = winnowCtes
+    .replace("FROM documents", s"FROM $src")
+    .replace("sh AS (", "sh_w AS (")
+    .replace("FROM sh)", "FROM sh_w)")
+    .replace("hr AS (", "hr_w AS (")
+    .replace("FROM hr)", "FROM hr_w)")
+    .replace("win AS (", "win_w AS (")
+    .replace("FROM win WHERE", "FROM win_w WHERE")
+    .replace("fp AS MATERIALIZED (", "fp_w AS MATERIALIZED (")
   val winnowingSql: String =
     s"""WITH $winnowCtes
        |SELECT doc_id, pos, h FROM fp""".stripMargin
@@ -6775,10 +6474,7 @@ object TrainingData {
     }
   val winnowPairsSql: String =
     s"""WITH $winnowCtes,
-       |ih AS (SELECT DISTINCT doc_id, h FROM fp),
-       |rare AS (SELECT h FROM ih GROUP BY h HAVING count(*) <= 50),
-       |p AS MATERIALIZED (
-       |  SELECT ih.doc_id, ih.h FROM ih JOIN rare USING (h))
+       |$rareFpCtes
        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        |  count(*) AS n_shared
        |FROM p a JOIN p b ON a.h = b.h AND a.doc_id < b.doc_id
@@ -6832,10 +6528,7 @@ object TrainingData {
     }
   val winnowIncrementalSql: String =
     s"""WITH $winnowCtes,
-       |ih AS (SELECT DISTINCT doc_id, h FROM fp),
-       |rare AS (SELECT h FROM ih GROUP BY h HAVING count(*) <= 50),
-       |p AS MATERIALIZED (
-       |  SELECT ih.doc_id, ih.h FROM ih JOIN rare USING (h)),
+       |$rareFpCtes,
        |pairs AS (
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        |    count(*) AS n_shared
@@ -6874,23 +6567,9 @@ object TrainingData {
     graft.operators.Corpus.winnowingContainment(
       spark.read.parquet(fps), maxDf = 50, minContainmentBp = 8000L)
   }
-  val containmentWinnowSql: String = {
-    val ctes = winnowCtes.replace("FROM documents", "FROM corpus_q")
-    s"""WITH corpus_q AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 8000000, substr(text, 21, 160)
-       |  FROM documents WHERE doc_id % 7 = 0),
-       |$ctes,
-       |ih AS (SELECT DISTINCT doc_id, h FROM fp),
-       |rare AS (SELECT h FROM ih GROUP BY h HAVING count(*) <= 50),
-       |p AS MATERIALIZED (
-       |  SELECT ih.doc_id, ih.h FROM ih JOIN rare USING (h)),
-       |nf AS (SELECT doc_id, count(*) AS n FROM p GROUP BY doc_id),
-       |pr AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-       |  FROM p a JOIN p b ON a.h = b.h AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
+  val containmentWinnowSql: String =
+    s"""WITH $quoteBatchCtes,
+       |$containPairCtes
        |SELECT
        |  CASE WHEN na.n <= nb.n THEN pr.id_a ELSE pr.id_b END AS doc_small,
        |  CASE WHEN na.n <= nb.n THEN pr.id_b ELSE pr.id_a END AS doc_large,
@@ -6901,7 +6580,6 @@ object TrainingData {
        |FROM pr JOIN nf na ON na.doc_id = pr.id_a
        |        JOIN nf nb ON nb.doc_id = pr.id_b
        |WHERE (pr.shared * 10000) // least(na.n, nb.n) >= 8000""".stripMargin
-  }
 
   /** Winnowing fingerprints of the planted quote batch: chars 21-180
     * of every 7th document, ids +8e6. Built once per (session, sf-dir). */
@@ -6916,6 +6594,26 @@ object TrainingData {
         .write.mode("overwrite").parquet(path)
       path
     }
+  /** Oracle twin of the corpus fingerprints plus [[quoteBatchFps]]:
+    * `corpus_q` (documents ∪ the planted quotes) winnowed to `fp` and
+    * df-capped to `p(doc_id, h)`. */
+  private def quoteBatchCtes: String =
+    s"""corpus_q AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL
+       |  SELECT doc_id + 8000000, substr(text, 21, 160)
+       |  FROM documents WHERE doc_id % 7 = 0),
+       |${winnowCtes.replace("FROM documents", "FROM corpus_q")},
+       |$rareFpCtes""".stripMargin
+  /** `nf(doc_id, n)`, each doc's capped fingerprint count, and
+    * `pr(id_a, id_b, shared)`, every pair sharing one of `p`'s
+    * fingerprints — Corpus.winnowingContainment's counts. */
+  private def containPairCtes: String =
+    """nf AS (SELECT doc_id, count(*) AS n FROM p GROUP BY doc_id),
+      |pr AS (
+      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
+      |  FROM p a JOIN p b ON a.h = b.h AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
 
   // -------------------------- incremental winnowing containment screen
   // The winnowing containment screen MAINTAINED: a batch of planted
@@ -6937,23 +6635,9 @@ object TrainingData {
         maxDf = 50, minContainmentBp = 8000L)
       .where(col("doc_small") >= 8000000L || col("doc_large") >= 8000000L)
   }
-  val containmentWinnowIncrSql: String = {
-    val ctes = winnowCtes.replace("FROM documents", "FROM corpus_q")
-    s"""WITH corpus_q AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 8000000, substr(text, 21, 160)
-       |  FROM documents WHERE doc_id % 7 = 0),
-       |$ctes,
-       |ih AS (SELECT DISTINCT doc_id, h FROM fp),
-       |rare AS (SELECT h FROM ih GROUP BY h HAVING count(*) <= 50),
-       |p AS MATERIALIZED (
-       |  SELECT ih.doc_id, ih.h FROM ih JOIN rare USING (h)),
-       |nf AS (SELECT doc_id, count(*) AS n FROM p GROUP BY doc_id),
-       |pr AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-       |  FROM p a JOIN p b ON a.h = b.h AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
+  val containmentWinnowIncrSql: String =
+    s"""WITH $quoteBatchCtes,
+       |$containPairCtes
        |SELECT * FROM (
        |  SELECT
        |    CASE WHEN na.n <= nb.n THEN pr.id_a ELSE pr.id_b END
@@ -6968,7 +6652,6 @@ object TrainingData {
        |          JOIN nf nb ON nb.doc_id = pr.id_b) s
        |WHERE containment_bp >= 8000
        |  AND (doc_small >= 8000000 OR doc_large >= 8000000)""".stripMargin
-  }
 
   // ------------------------ PRUNED maintained quote screen (batch mode)
   // winnowingContainmentScreen driven as a batch audit: the
@@ -6990,18 +6673,8 @@ object TrainingData {
       winnowTableFor(spark, dir),
       maxDf = 50, minContainmentBp = 8000L).df
   }
-  val quoteScreenPrunedSql: String = {
-    val ctes = winnowCtes.replace("FROM documents", "FROM corpus_q")
-    s"""WITH corpus_q AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 8000000, substr(text, 21, 160)
-       |  FROM documents WHERE doc_id % 7 = 0),
-       |$ctes,
-       |ih AS (SELECT DISTINCT doc_id, h FROM fp),
-       |rare AS (SELECT h FROM ih GROUP BY h HAVING count(*) <= 50),
-       |p AS MATERIALIZED (
-       |  SELECT ih.doc_id, ih.h FROM ih JOIN rare USING (h)),
+  val quoteScreenPrunedSql: String =
+    s"""WITH $quoteBatchCtes,
        |pb AS (SELECT doc_id, h FROM p WHERE doc_id >= 8000000),
        |pc AS (SELECT doc_id, h FROM p WHERE doc_id < 8000000),
        |nb AS (SELECT doc_id, count(*) AS n_batch FROM pb GROUP BY 1),
@@ -7015,7 +6688,6 @@ object TrainingData {
        |FROM pr JOIN nb ON nb.doc_id = pr.batch_id
        |        JOIN nc ON nc.doc_id = pr.corpus_id
        |WHERE (shared * 10000) // least(n_batch, n_corpus) >= 8000""".stripMargin
-  }
 
   // ------------------- the same screen against a COMPACTED table
   // Corpus.compactWinnowTable re-clusters a maintained table's append
@@ -7075,20 +6747,12 @@ object TrainingData {
         .otherwise("winnow_only").as("found_by"))
       .groupBy(col("found_by")).agg(count(lit(1)).as("n_pairs"))
   }
-  lazy val screenOverlapPairsSql: String = {
-    val winnowSuffixed = winnowCtes
-      .replace("sh AS (", "sh_w AS (")
-      .replace("FROM sh)", "FROM sh_w)")
-      .replace("hr AS (", "hr_w AS (")
-      .replace("FROM hr)", "FROM hr_w)")
-      .replace("win AS (", "win_w AS (")
-      .replace("FROM win WHERE", "FROM win_w WHERE")
-      .replace("fp AS MATERIALIZED (", "fp_w AS MATERIALIZED (")
+  lazy val screenOverlapPairsSql: String =
     s"""${minhashCtesOver("SELECT doc_id, text FROM documents")},
        |mh AS (
        |  SELECT doc_a AS id_a, doc_b AS id_b FROM j
        |  WHERE jaccard >= 0.2),
-       |$winnowSuffixed,
+       |${winnowCtesW("documents")},
        |ih_w AS (SELECT DISTINCT doc_id, h FROM fp_w),
        |rare_w AS (SELECT h FROM ih_w GROUP BY h HAVING count(*) <= 50),
        |p_w AS MATERIALIZED (
@@ -7097,7 +6761,6 @@ object TrainingData {
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM p_w a JOIN p_w b ON a.h = b.h AND a.doc_id < b.doc_id
        |  GROUP BY 1, 2 HAVING count(*) >= 5)""".stripMargin
-  }
   lazy val screenOverlapSql: String =
     s"""WITH $screenOverlapPairsSql
        |SELECT CASE
@@ -7192,7 +6855,10 @@ object TrainingData {
       merges.toSeq.toDF("ord", "lhs", "rhs", "pair_count")
     } finally { vocab.unpersist(false); () }
   }
-  val bpeTrainSql: String = {
+  /** `w0`, the word vocabulary as chr(31)-joined symbols, and three
+    * p/b/w merge rounds ending in the merges `b1..b3(lhs, rhs,
+    * pair_count)` — the oracle of [[bpeTrainQ]]'s training loop. */
+  private val bpeTrainCtes: String = {
     val rounds = (1 to 3).map { r =>
       s"""p$r AS (
          |  SELECT p.lhs, p.rhs, sum(cnt) AS pair_count FROM (
@@ -7210,7 +6876,7 @@ object TrainingData {
          |    replace(rep, b.lhs || chr(31) || b.rhs, b.lhs || b.rhs) AS rep
          |  FROM w${r - 1}, b$r b)""".stripMargin
     }.mkString(",\n")
-    s"""WITH w0 AS MATERIALIZED (
+    s"""w0 AS MATERIALIZED (
        |  SELECT count(*) AS cnt,
        |    array_to_string(string_split(w, ''), chr(31)) AS rep
        |  FROM (SELECT unnest(
@@ -7218,14 +6884,16 @@ object TrainingData {
        |        FROM documents)
        |  WHERE length(w) >= 1
        |  GROUP BY w),
-       |$rounds
+       |$rounds""".stripMargin
+  }
+  val bpeTrainSql: String =
+    s"""WITH $bpeTrainCtes
        |SELECT CAST(ord AS BIGINT) AS ord, lhs, rhs,
        |  CAST(pair_count AS BIGINT) AS pair_count
        |FROM (
        |  SELECT 1 AS ord, lhs, rhs, pair_count FROM b1
        |  UNION ALL SELECT 2, lhs, rhs, pair_count FROM b2
        |  UNION ALL SELECT 3, lhs, rhs, pair_count FROM b3)""".stripMargin
-  }
 
   // ---------------------------------------------- BPE merge application
   // The learned merge table CONSUMED: every document re-tokenized with
@@ -7266,35 +6934,10 @@ object TrainingData {
         round(col("n_after").cast("double") /
           col("n_before").cast("double"), 4).as("compression"))
   }
-  val bpeApplySql: String = {
-    // the same three training rounds as bpeTrainSql, then one
-    // application pass over the document representations
-    val trainRounds = (1 to 3).map { r =>
-      s"""p$r AS (
-         |  SELECT p.lhs, p.rhs, sum(cnt) AS pair_count FROM (
-         |    SELECT cnt, unnest(list_transform(range(1, len(syms)),
-         |      i -> struct_pack(lhs := syms[CAST(i AS INT)],
-         |                       rhs := syms[CAST(i AS INT)+1]))) AS p
-         |    FROM (SELECT cnt, string_split(rep, chr(31)) AS syms
-         |          FROM w${r - 1}))
-         |  GROUP BY 1, 2),
-         |b$r AS MATERIALIZED (
-         |  SELECT lhs, rhs, pair_count FROM p$r
-         |  ORDER BY pair_count DESC, lhs, rhs LIMIT 1),
-         |w$r AS MATERIALIZED (
-         |  SELECT cnt,
-         |    replace(rep, b.lhs || chr(31) || b.rhs, b.lhs || b.rhs) AS rep
-         |  FROM w${r - 1}, b$r b)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH w0 AS MATERIALIZED (
-       |  SELECT count(*) AS cnt,
-       |    array_to_string(string_split(w, ''), chr(31)) AS rep
-       |  FROM (SELECT unnest(
-       |          string_split_regex(lower(trim(text)), '\\s+')) AS w
-       |        FROM documents)
-       |  WHERE length(w) >= 1
-       |  GROUP BY w),
-       |$trainRounds,
+  // the same three training rounds as bpeTrainSql, then one
+  // application pass over the document representations
+  val bpeApplySql: String =
+    s"""WITH $bpeTrainCtes,
        |d0 AS (
        |  SELECT doc_id,
        |    array_to_string(list_transform(
@@ -7319,7 +6962,6 @@ object TrainingData {
        |    (length(d0.rep) - length(replace(d0.rep, chr(31), '')) + 1),
        |    4) AS compression
        |FROM d0 JOIN d3 USING (doc_id)""".stripMargin
-  }
 
   // -------------------------------------- unigram-LM tokenizer (3 lanes)
   // The SentencePiece-style sibling of the BPE lane (Kudo, ACL 2018):
@@ -7916,12 +7558,8 @@ object TrainingData {
          |  CAST(c.cand_rows AS BIGINT) AS cand_rows
          |FROM base b, hit$np h, cand$np c""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""${ivfAssignCtes(sq8DecodedPrelude)},
-       |probes AS (
-       |  SELECT q.vec_id AS q_id, q.vec AS q_v, c.c_id,
-       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |      ${ivfCos("q.vec", "c.c_v")} DESC, c.c_id) AS rn
-       |  FROM vq q CROSS JOIN cents c WHERE q.vec_id < 20),
+    s"""${ivfAssignCtes(sq8DecodedPrelude())},
+       |${ivfProbesCte("vq")},
        |occ AS (SELECT c_id, count(*) AS sz FROM a2 GROUP BY 1),
        |ext AS (
        |  SELECT q_id, n_id FROM (
@@ -7963,39 +7601,16 @@ object TrainingData {
     Similarity.pqTopK(emb.filter(col("vec_id") < 20), emb,
       "vec_id", "embedding", 5, m = 4, ksub = 16, iters = 2)
   }
-  lazy val annPqSql: String = {
-    val m = 4; val sub = 16
-    val preludes = (0 until m).map(s =>
-      s"vc_s$s AS (SELECT vec_id, " +
-        s"vec[${s * sub + 1}:${(s + 1) * sub}] AS vec FROM v0)")
-      .mkString(",\n")
-    val bodies = (0 until m).map(s =>
-      ivfAssignBody(s"_s$s", s"vc_s$s", 16)).mkString(",\n")
+  lazy val annPqSql: String =
     s"""WITH v0 AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-       |$preludes,
-       |$bodies,
-       |rec AS (
-       |  SELECT a0.n_id,
-       |    c0.c_v || c1.c_v || c2.c_v || c3.c_v AS r_v
-       |  FROM a2_s0 a0 JOIN cents_s0 c0 ON a0.c_id = c0.c_id
-       |  JOIN a2_s1 x1 ON x1.n_id = a0.n_id
-       |  JOIN cents_s1 c1 ON x1.c_id = c1.c_id
-       |  JOIN a2_s2 x2 ON x2.n_id = a0.n_id
-       |  JOIN cents_s2 c2 ON x2.c_id = c2.c_id
-       |  JOIN a2_s3 x3 ON x3.n_id = a0.n_id
-       |  JOIN cents_s3 c3 ON x3.c_id = c3.c_id),
+       |${pqRecCtes()},
        |scored AS (
        |  SELECT q.vec_id AS q_id, r.n_id,
        |    round(${ivfCos("q.vec", "r.r_v")}, 4) AS sim
        |  FROM v0 q CROSS JOIN rec r
        |  WHERE q.vec_id < 20 AND q.vec_id != r.n_id)
-       |SELECT q_id, n_id, sim,
-       |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id)
-       |       AS BIGINT) AS rank
-       |FROM scored
-       |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) <= 5""".stripMargin
-  }
+       |${topKSql("scored", 5)}""".stripMargin
 
   // --------------------------------------------------- IVF∘PQ (IVFPQ)
   // Similarity.ivfPqTopK gated end to end: the coarse trained-IVF
@@ -8011,47 +7626,7 @@ object TrainingData {
       "vec_id", "embedding", 5, nlist = 16, nprobe = 4,
       m = 4, ksub = 16, iters = 2)
   }
-  lazy val annIvfPqSql: String = {
-    val m = 4; val sub = 16
-    val preludes = (0 until m).map(s =>
-      s"vc_s$s AS (SELECT vec_id, " +
-        s"vec[${s * sub + 1}:${(s + 1) * sub}] AS vec FROM v0)")
-      .mkString(",\n")
-    val bodies = (0 until m).map(s =>
-      ivfAssignBody(s"_s$s", s"vc_s$s", 16)).mkString(",\n")
-    s"""WITH v0 AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-       |vc AS (SELECT vec_id, vec FROM v0),
-       |${ivfAssignBody("", "vc", 16)},
-       |$preludes,
-       |$bodies,
-       |rec AS (
-       |  SELECT a0.n_id,
-       |    c0.c_v || c1.c_v || c2.c_v || c3.c_v AS r_v
-       |  FROM a2_s0 a0 JOIN cents_s0 c0 ON a0.c_id = c0.c_id
-       |  JOIN a2_s1 x1 ON x1.n_id = a0.n_id
-       |  JOIN cents_s1 c1 ON x1.c_id = c1.c_id
-       |  JOIN a2_s2 x2 ON x2.n_id = a0.n_id
-       |  JOIN cents_s2 c2 ON x2.c_id = c2.c_id
-       |  JOIN a2_s3 x3 ON x3.n_id = a0.n_id
-       |  JOIN cents_s3 c3 ON x3.c_id = c3.c_id),
-       |probes AS (
-       |  SELECT q.vec_id AS q_id, q.vec AS q_v, c.c_id,
-       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |      ${ivfCos("q.vec", "c.c_v")} DESC, c.c_id) AS rn
-       |  FROM v0 q CROSS JOIN cents c WHERE q.vec_id < 20),
-       |p2 AS (SELECT q_id, q_v, c_id FROM probes WHERE rn <= 4),
-       |scored AS (
-       |  SELECT p2.q_id, a2.n_id,
-       |    round(${ivfCos("p2.q_v", "r.r_v")}, 4) AS sim
-       |  FROM p2 JOIN a2 USING (c_id) JOIN rec r ON r.n_id = a2.n_id
-       |  WHERE p2.q_id != a2.n_id)
-       |SELECT q_id, n_id, sim,
-       |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id)
-       |       AS BIGINT) AS rank
-       |FROM scored
-       |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) <= 5""".stripMargin
-  }
+  lazy val annIvfPqSql: String = ivfPqSql(trainSample = 0)
 
   // ------------------------------------- IVF∘PQ with sampled training
   // The actual 100 TB configuration of x_ann_ivf_pq: ALL FIVE
@@ -8070,47 +7645,7 @@ object TrainingData {
       "vec_id", "embedding", 5, nlist = 16, nprobe = 4,
       m = 4, ksub = 16, iters = 2, trainSample = 64)
   }
-  lazy val annIvfPqSampledSql: String = {
-    val m = 4; val sub = 16; val smp = 64
-    val preludes = (0 until m).map(s =>
-      s"vc_s$s AS (SELECT vec_id, " +
-        s"vec[${s * sub + 1}:${(s + 1) * sub}] AS vec FROM v0)")
-      .mkString(",\n")
-    val bodies = (0 until m).map(s =>
-      ivfAssignBody(s"_s$s", s"vc_s$s", 16, smp)).mkString(",\n")
-    s"""WITH v0 AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-       |vc AS (SELECT vec_id, vec FROM v0),
-       |${ivfAssignBody("", "vc", 16, smp)},
-       |$preludes,
-       |$bodies,
-       |rec AS (
-       |  SELECT a0.n_id,
-       |    c0.c_v || c1.c_v || c2.c_v || c3.c_v AS r_v
-       |  FROM a2_s0 a0 JOIN cents_s0 c0 ON a0.c_id = c0.c_id
-       |  JOIN a2_s1 x1 ON x1.n_id = a0.n_id
-       |  JOIN cents_s1 c1 ON x1.c_id = c1.c_id
-       |  JOIN a2_s2 x2 ON x2.n_id = a0.n_id
-       |  JOIN cents_s2 c2 ON x2.c_id = c2.c_id
-       |  JOIN a2_s3 x3 ON x3.n_id = a0.n_id
-       |  JOIN cents_s3 c3 ON x3.c_id = c3.c_id),
-       |probes AS (
-       |  SELECT q.vec_id AS q_id, q.vec AS q_v, c.c_id,
-       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |      ${ivfCos("q.vec", "c.c_v")} DESC, c.c_id) AS rn
-       |  FROM v0 q CROSS JOIN cents c WHERE q.vec_id < 20),
-       |p2 AS (SELECT q_id, q_v, c_id FROM probes WHERE rn <= 4),
-       |scored AS (
-       |  SELECT p2.q_id, a2.n_id,
-       |    round(${ivfCos("p2.q_v", "r.r_v")}, 4) AS sim
-       |  FROM p2 JOIN a2 USING (c_id) JOIN rec r ON r.n_id = a2.n_id
-       |  WHERE p2.q_id != a2.n_id)
-       |SELECT q_id, n_id, sim,
-       |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id)
-       |       AS BIGINT) AS rank
-       |FROM scored
-       |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) <= 5""".stripMargin
-  }
+  lazy val annIvfPqSampledSql: String = ivfPqSql(trainSample = 64)
 
   // --------------------------------------------- filtered ANN search
   // Attribute-filtered vector search — top-5 among vectors WHERE the
@@ -8156,11 +7691,7 @@ object TrainingData {
         """v0 AS (
           |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
           |vc AS (SELECT vec_id, vec FROM v0)""".stripMargin)},
-       |probes AS (
-       |  SELECT q.vec_id AS q_id, q.vec AS q_v, c.c_id,
-       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |      ${ivfCos("q.vec", "c.c_v")} DESC, c.c_id) AS rn
-       |  FROM v0 q CROSS JOIN cents c WHERE q.vec_id < 20),
+       |${ivfProbesCte("v0")},
        |p2 AS (SELECT q_id, q_v, c_id FROM probes WHERE rn <= 4),
        |apx AS (
        |  SELECT q_id, n_id FROM (
@@ -8188,12 +7719,7 @@ object TrainingData {
        |FROM ext e LEFT JOIN hits h ON h.q_id = e.q_id
        |GROUP BY e.q_id""".stripMargin
 
-  /** The trained-IVF oracle chain, parameterized by a CTE prelude that
-    * must define `vc(vec_id, vec)` — the corpus the quantizer trains
-    * on, assigns, and scores — and `vq(vec_id, vec)` — the query
-    * vectors (probe selection filters vec_id < 20 inside the chain).
-    * x_ann_ivf instantiates both as the raw embeddings; x_ann_ivf_sq8
-    * instantiates vc as the SQ8-decoded corpus and vq raw. */
+  /** The cosine of list vectors `a` and `b` (unrounded). */
   private def ivfCos(a: String, b: String) =
     s"""list_dot_product($a, $b) /
        |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))""".stripMargin
@@ -8291,26 +7817,75 @@ object TrainingData {
        |a2$sfx AS (SELECT c_id, n_id, n_v FROM assigned$sfx WHERE rn = 1)""".stripMargin
   }
 
-  private def ivfChainSql(prelude: String,
-                          trainWhere: String = ""): String = {
-    def cos(a: String, b: String) = ivfCos(a, b)
-    s"""${ivfAssignCtes(prelude, trainWhere = trainWhere)},
-       |probes AS (
+  /** `probes(q_id, q_v, c_id, rn)`: every query vector of `q` (vec_id
+    * < 20) against the trained centroids `cents`, ranked by cosine. */
+  private def ivfProbesCte(q: String): String =
+    s"""probes AS (
        |  SELECT q.vec_id AS q_id, q.vec AS q_v, c.c_id,
        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |      ${cos("q.vec", "c.c_v")} DESC, c.c_id) AS rn
-       |  FROM vq q CROSS JOIN cents c WHERE q.vec_id < 20),
+       |      ${ivfCos("q.vec", "c.c_v")} DESC, c.c_id) AS rn
+       |  FROM $q q CROSS JOIN cents c WHERE q.vec_id < 20)""".stripMargin
+
+  /** The trained-IVF oracle chain, parameterized by a CTE prelude that
+    * must define `vc(vec_id, vec)` — the corpus the quantizer trains
+    * on, assigns, and scores — and `vq(vec_id, vec)` — the query
+    * vectors (probe selection filters vec_id < 20 inside the chain).
+    * x_ann_ivf instantiates both as the raw embeddings; x_ann_ivf_sq8
+    * instantiates vc as the SQ8-decoded corpus and vq raw. */
+  private def ivfChainSql(prelude: String,
+                          trainWhere: String = ""): String =
+    s"""${ivfAssignCtes(prelude, trainWhere = trainWhere)},
+       |${ivfProbesCte("vq")},
        |p2 AS (SELECT q_id, q_v, c_id FROM probes WHERE rn <= 4),
        |scored AS (
        |  SELECT p2.q_id, a2.n_id,
-       |    round(${cos("p2.q_v", "a2.n_v")}, 4) AS sim
+       |    round(${ivfCos("p2.q_v", "a2.n_v")}, 4) AS sim
        |  FROM p2 JOIN a2 USING (c_id) WHERE p2.q_id != a2.n_id)
-       |SELECT q_id, n_id, sim,
-       |  CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id)
-       |       AS BIGINT) AS rank
-       |FROM scored
-       |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) <= 5""".stripMargin
+       |${topKSql("scored", 5)}""".stripMargin
+
+  /** The 4×16 PQ codebook replays over `v0(vec_id, vec)`, one
+    * [[ivfAssignBody]] per 16-dim subspace, ending in `rec(n_id, r_v)`:
+    * every corpus vector reconstructed from its codes. */
+  private def pqRecCtes(trainSample: Int = 0): String = {
+    val m = 4; val sub = 16
+    val preludes = (0 until m).map(s =>
+      s"vc_s$s AS (SELECT vec_id, " +
+        s"vec[${s * sub + 1}:${(s + 1) * sub}] AS vec FROM v0)")
+      .mkString(",\n")
+    val bodies = (0 until m).map(s =>
+      ivfAssignBody(s"_s$s", s"vc_s$s", 16, trainSample)).mkString(",\n")
+    s"""$preludes,
+       |$bodies,
+       |rec AS (
+       |  SELECT a0.n_id,
+       |    c0.c_v || c1.c_v || c2.c_v || c3.c_v AS r_v
+       |  FROM a2_s0 a0 JOIN cents_s0 c0 ON a0.c_id = c0.c_id
+       |  JOIN a2_s1 x1 ON x1.n_id = a0.n_id
+       |  JOIN cents_s1 c1 ON x1.c_id = c1.c_id
+       |  JOIN a2_s2 x2 ON x2.n_id = a0.n_id
+       |  JOIN cents_s2 c2 ON x2.c_id = c2.c_id
+       |  JOIN a2_s3 x3 ON x3.n_id = a0.n_id
+       |  JOIN cents_s3 c3 ON x3.c_id = c3.c_id)""".stripMargin
   }
+
+  /** The IVF∘PQ search oracle: the coarse quantizer and the four PQ
+    * codebooks, each trained on the `trainSample`-row hash sample (the
+    * full corpus at 0), 4 probed lists scored against the
+    * reconstructions. */
+  private def ivfPqSql(trainSample: Int): String =
+    s"""WITH v0 AS (
+       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+       |vc AS (SELECT vec_id, vec FROM v0),
+       |${ivfAssignBody("", "vc", 16, trainSample)},
+       |${pqRecCtes(trainSample)},
+       |${ivfProbesCte("v0")},
+       |p2 AS (SELECT q_id, q_v, c_id FROM probes WHERE rn <= 4),
+       |scored AS (
+       |  SELECT p2.q_id, a2.n_id,
+       |    round(${ivfCos("p2.q_v", "r.r_v")}, 4) AS sim
+       |  FROM p2 JOIN a2 USING (c_id) JOIN rec r ON r.n_id = a2.n_id
+       |  WHERE p2.q_id != a2.n_id)
+       |${topKSql("scored", 5)}""".stripMargin
 
   val annIvfSql: String = ivfChainSql(
     """v0 AS (
@@ -8327,38 +7902,39 @@ object TrainingData {
     Similarity.ivfSqTopK(emb.filter(col("vec_id") < 20), emb,
       "vec_id", "embedding", 5, nlist = 16, nprobe = 4, iters = 2)
   }
-  /** SQ8-decoded corpus prelude (v0 raw, vc decoded, vq raw) — shared
-    * by the from-scratch SQ8∘IVF chain, its stored-index twin, and the
+  /** SQ8-decoded corpus prelude (v0 raw, vc decoded, vq raw), the
+    * per-dimension ranges taken over `statsSrc` — shared by the
+    * from-scratch SQ8∘IVF chain, its stored-index twins, and the
     * index-health oracle. */
-  private val sq8DecodedPrelude: String =
-    """v0 AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-      |stats8 AS (
-      |  SELECT pos, min(val) AS mn, max(val) AS mx FROM (
-      |    SELECT unnest(vec) AS val, generate_subscripts(vec, 1) AS pos
-      |    FROM v0)
-      |  GROUP BY pos),
-      |sv8 AS (
-      |  SELECT list(mn ORDER BY pos) AS mnv, list(mx ORDER BY pos) AS mxv
-      |  FROM stats8),
-      |enc8 AS (
-      |  SELECT vec_id,
-      |    list_transform(range(1, len(vec) + 1), i -> CASE
-      |      WHEN mxv[CAST(i AS INT)] = mnv[CAST(i AS INT)] THEN 0.0
-      |      ELSE floor((vec[CAST(i AS INT)] - mnv[CAST(i AS INT)])
-      |           / (mxv[CAST(i AS INT)] - mnv[CAST(i AS INT)]) * 255.0)
-      |      END) AS codes
-      |  FROM v0, sv8),
-      |vc AS (
-      |  SELECT vec_id,
-      |    list_transform(range(1, len(codes) + 1),
-      |      i -> mnv[CAST(i AS INT)] + codes[CAST(i AS INT)]
-      |           * (mxv[CAST(i AS INT)] - mnv[CAST(i AS INT)]) / 255.0)
-      |      AS vec
-      |  FROM enc8, sv8),
-      |vq AS (SELECT vec_id, vec FROM v0)""".stripMargin
+  private def sq8DecodedPrelude(statsSrc: String = "v0"): String =
+    s"""v0 AS (
+       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
+       |stats8 AS (
+       |  SELECT pos, min(val) AS mn, max(val) AS mx FROM (
+       |    SELECT unnest(vec) AS val, generate_subscripts(vec, 1) AS pos
+       |    FROM $statsSrc)
+       |  GROUP BY pos),
+       |sv8 AS (
+       |  SELECT list(mn ORDER BY pos) AS mnv, list(mx ORDER BY pos) AS mxv
+       |  FROM stats8),
+       |enc8 AS (
+       |  SELECT vec_id,
+       |    list_transform(range(1, len(vec) + 1), i -> CASE
+       |      WHEN mxv[CAST(i AS INT)] = mnv[CAST(i AS INT)] THEN 0.0
+       |      ELSE floor((vec[CAST(i AS INT)] - mnv[CAST(i AS INT)])
+       |           / (mxv[CAST(i AS INT)] - mnv[CAST(i AS INT)]) * 255.0)
+       |      END) AS codes
+       |  FROM v0, sv8),
+       |vc AS (
+       |  SELECT vec_id,
+       |    list_transform(range(1, len(codes) + 1),
+       |      i -> mnv[CAST(i AS INT)] + codes[CAST(i AS INT)]
+       |           * (mxv[CAST(i AS INT)] - mnv[CAST(i AS INT)]) / 255.0)
+       |      AS vec
+       |  FROM enc8, sv8),
+       |vq AS (SELECT vec_id, vec FROM v0)""".stripMargin
 
-  val annIvfSq8Sql: String = ivfChainSql(sq8DecodedPrelude)
+  val annIvfSq8Sql: String = ivfChainSql(sq8DecodedPrelude())
 
   // ------------------------------------------- index health report
   // The index-ops monitoring table a serving deployment reads every
@@ -8381,7 +7957,7 @@ object TrainingData {
         expr("n_vecs * 10000 * n_lists div total").as("load_bp"))
   }
   lazy val annIndexStatsSql: String =
-    s"""${ivfAssignCtes(sq8DecodedPrelude)},
+    s"""${ivfAssignCtes(sq8DecodedPrelude())},
        |occ AS (
        |  SELECT c_id AS list_id, count(*) AS n_vecs FROM a2 GROUP BY 1),
        |tot AS (
@@ -8416,7 +7992,7 @@ object TrainingData {
           .as("drift_bp"))
   }
   lazy val indexDriftSql: String =
-    s"""${ivfAssignCtes(sq8DecodedPrelude)},
+    s"""${ivfAssignCtes(sq8DecodedPrelude())},
        |occ AS (
        |  SELECT c_id AS list_id, count(*) AS n_total,
        |    count(CASE WHEN n_id % 10 = 0 THEN 1 END) AS n_batch
@@ -8482,33 +8058,7 @@ object TrainingData {
       "vec_id", "embedding", path, 5, nprobe = 4)
   }
   val annIndexIncrSql: String = ivfChainSql(
-    """v0 AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-      |stats8 AS (
-      |  SELECT pos, min(val) AS mn, max(val) AS mx FROM (
-      |    SELECT unnest(vec) AS val, generate_subscripts(vec, 1) AS pos
-      |    FROM v0 WHERE vec_id >= 50)
-      |  GROUP BY pos),
-      |sv8 AS (
-      |  SELECT list(mn ORDER BY pos) AS mnv, list(mx ORDER BY pos) AS mxv
-      |  FROM stats8),
-      |enc8 AS (
-      |  SELECT vec_id,
-      |    list_transform(range(1, len(vec) + 1), i -> CASE
-      |      WHEN mxv[CAST(i AS INT)] = mnv[CAST(i AS INT)] THEN 0.0
-      |      ELSE floor((vec[CAST(i AS INT)] - mnv[CAST(i AS INT)])
-      |           / (mxv[CAST(i AS INT)] - mnv[CAST(i AS INT)]) * 255.0)
-      |      END) AS codes
-      |  FROM v0, sv8),
-      |vc AS (
-      |  SELECT vec_id,
-      |    list_transform(range(1, len(codes) + 1),
-      |      i -> mnv[CAST(i AS INT)] + codes[CAST(i AS INT)]
-      |           * (mxv[CAST(i AS INT)] - mnv[CAST(i AS INT)]) / 255.0)
-      |      AS vec
-      |  FROM enc8, sv8),
-      |vq AS (SELECT vec_id, vec FROM v0)""".stripMargin,
-    trainWhere = "n_id >= 50")
+    sq8DecodedPrelude("v0 WHERE vec_id >= 50"), trainWhere = "n_id >= 50")
 
   // ------------------------------------------------------- as-of join
   // For every purchase, the user's latest click at-or-before it
@@ -8558,8 +8108,6 @@ object TrainingData {
         col("punct_ratio") <= 0.1)
   }
   val qualityFilterSql: String = {
-    val punct = TextFns.PunctClass.replace("'", "''")
-    val sw = "\\b(" + TextFns.EnWords.mkString("|") + ")\\b"
     def cnt(words: Seq[String]) =
       s"len(regexp_extract_all(lower(text), '\\b(${words.mkString("|")})\\b'))"
     val (en, de, fr, es) = (cnt(TextFns.EnWords), cnt(TextFns.DeWords),
@@ -8568,10 +8116,10 @@ object TrainingData {
        |  SELECT doc_id,
        |    CAST(length(text) AS BIGINT) AS char_len,
        |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS token_cnt,
-       |    round(len(regexp_extract_all(lower(text), '$sw'))::DOUBLE /
+       |    round(len(regexp_extract_all(lower(text), '$duckStopRe'))::DOUBLE /
        |          greatest(len(string_split_regex(trim(text), '\\s+')), 1), 4)
        |      AS stopword_ratio,
-       |    round((length(text) - length(regexp_replace(text, '$punct', '', 'g')))::DOUBLE /
+       |    round((length(text) - length(regexp_replace(text, '$duckPunct', '', 'g')))::DOUBLE /
        |          greatest(length(text), 1), 4) AS punct_ratio,
        |    CASE WHEN len(regexp_extract_all(text, '[一-鿿]')) > 0 THEN 'zh'
        |         WHEN $en >= $de AND $en >= $fr AND $en >= $es THEN 'en'
@@ -9426,11 +8974,7 @@ object TrainingData {
     s"""WITH RECURSIVE $erLinksCtes,
        |edges AS (SELECT id_a AS a, id_b AS b FROM links
        |          UNION SELECT id_b, id_a FROM links),
-       |nodes AS (SELECT DISTINCT a AS n FROM edges),
-       |reach(n, m) AS (
-       |  SELECT n, n FROM nodes
-       |  UNION
-       |  SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a),
+       |${reachCtes()},
        |reps AS (SELECT n AS id, min(m) AS rep FROM reach GROUP BY n),
        |assigned AS (
        |  SELECT r.id, r.name, r.acctbal, r.segment,
@@ -9786,14 +9330,7 @@ object TrainingData {
        |  SELECT doc_a, doc_b FROM mp
        |  UNION ALL
        |  SELECT doc_id, doc_id + 1 FROM documents WHERE doc_id % 10 = 0),
-       |edges AS (
-       |  SELECT doc_a AS a, doc_b AS b FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
-       |nodes AS (SELECT DISTINCT a AS n FROM edges),
-       |reach(n, m) AS (
-       |  SELECT n, n FROM nodes
-       |  UNION
-       |  SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a)
+       |${closureCtes("pairs")}
        |SELECT n AS doc_id, min(m) AS cluster_rep FROM reach GROUP BY n""".stripMargin
 
   // ------------------------------------------------- semantic dedup

@@ -426,17 +426,6 @@ object StreamingOps {
     // pass k/window — a curate loop must match whatever the table holds)
     val winnowKw = winnowTablePath.map(p =>
       graft.operators.Corpus.winnowTableParams(src.sparkSession, p))
-    // the df sidecar must exist before the first batch screens — a
-    // pre-sidecar table is healed ONCE here (one df aggregation), and
-    // every micro-batch after reads maintained state only
-    winnowTablePath.foreach(p =>
-      graft.operators.Corpus.ensureWinnowDfState(src.sparkSession, p))
-    // likewise the doc-keyed projection heals ONCE for pre-projection
-    // tables; per-file envelopes come from the data files' own footers,
-    // so every micro-batch probe is a file-pruned read (O(batch) IO,
-    // never O(corpus)) with nothing to heal
-    winnowTablePath.foreach(p =>
-      graft.operators.Corpus.ensureWinnowScreenIndex(src.sparkSession, p))
     // the caller's codegen setting, which a batch keeps unless
     // curateInterpreted says otherwise
     val wholeStage = src.sparkSession.conf.get(wholeStageKey)

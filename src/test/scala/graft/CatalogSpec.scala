@@ -118,6 +118,15 @@ class CatalogSpec extends SparkSpec {
     assert(files(latest) == 1, files)
   }
 
+  test("p_insert_into's table lives outside the working directory") {
+    graft.SparkEntry.queries("p_insert_into")(spark, sf0001).count()
+    val loc = new java.io.File(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
+        "graft_dwd_orders")).location).getCanonicalPath
+    val cwdWarehouse = new java.io.File("spark-warehouse").getCanonicalPath
+    assert(!(loc + "/").startsWith(cwdWarehouse + "/"), loc)
+  }
+
   test("p_bucketed_join adds no table to the warehouse dir") {
     val wh = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"))

@@ -26,4 +26,15 @@ class QueriesSmokeSpec extends SparkSpec {
     val empty = rows.filter(q => q.oracle == null || q.oracle.trim.isEmpty)
     assert(empty.isEmpty, empty.map(_.name).mkString(", "))
   }
+
+  test("no oracle line starts with a lone '|' (a margin stripped twice)") {
+    // an outer .stripMargin also strips the lines of an interpolated
+    // builder, so a builder line starting `||` would lose one `|`
+    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
+      case (name, sql) => sql.split("\n").map(_.dropWhile(_.isWhitespace))
+        .filter(l => l.startsWith("|") && !l.startsWith("||"))
+        .map(l => s"$name: $l")
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
 }

@@ -15,6 +15,8 @@ trait SparkSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir",
+        graft.Scratch.dir("warehouse").getAbsolutePath)
       .getOrCreate()
     graft.functions.native.NativeFns.register(s)
     s.experimental.extraOptimizations =
