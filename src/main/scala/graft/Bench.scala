@@ -136,7 +136,6 @@ object Bench {
     // HOF lambda eval, Deflater JNI) is shared and compiles once.
     locally {
       import org.apache.spark.sql.functions._
-      graft.functions.native.NativeFns.register(spark)
       val warm = spark.range(4000).selectExpr(
         "id",
         "repeat(concat('warm token ', cast(id as string), ' '), 24) AS text",

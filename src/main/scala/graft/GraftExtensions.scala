@@ -6,25 +6,19 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.native._
 
-/** Cluster-grade registration of graft's native Catalyst expressions.
-  *
-  * On a real deployment the library's functions should exist in every
-  * session from the moment it is built — not be patched into the
-  * registry by the first table load — so this is the standard Spark
-  * plug-in shape:
+/** The one way graft's native Catalyst expressions and its optimizer
+  * rule ([[graft.plans.RegexPrefixPruning]]) get into a session: the
+  * standard Spark plug-in shape, applied when the session is built.
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * or `SparkSession.builder.withExtensions(new GraftExtensions)`.
-  * Injected functions become catalog-resolvable in SQL text
+  * [[Session.local]] (every main) sets the same conf, and so do the
+  * test session and perfbench; a caller-owned session needs it too.
+  * Injected functions are catalog-resolvable in SQL text
   * (`SELECT graft_dot(a, b)`) as well as through the
   * [[graft.functions.native.NativeFns]] Column wrappers.
-  *
-  * `NativeFns.register` remains as the sessionized fallback for
-  * sessions built without the extension (e.g. the driver's own
-  * harness), and both paths install the exact same builders.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -78,9 +72,7 @@ object GraftExtensions {
   private def intArg(e: Expression): Int =
     e.eval().asInstanceOf[Number].intValue
 
-  /** (name, one-line doc, builder) for every native expression; the
-    * single source of truth shared by the extension injection and
-    * NativeFns.register. */
+  /** (name, one-line doc, builder) for every native expression. */
   val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     fn(NativeFns.DotName,
       "graft_dot(a, b) - double-array dot product (codegen'd)", 2)(

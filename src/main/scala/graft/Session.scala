@@ -9,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   * entries thrashes on one round of six queries), and a catalog
   * warehouse under [[Scratch]]: the in-memory catalog forgets its
   * tables at JVM exit, so their files go with it instead of piling up
-  * in `./spark-warehouse`. */
+  * in `./spark-warehouse`. It installs graft's native functions and
+  * optimizer rule through `spark.sql.extensions` ([[GraftExtensions]]),
+  * the same setting a cluster `spark-submit` uses. */
 object Session {
 
   /** Core count from a `SPARK_GRAFT_CPUS` setting: the positive integer
@@ -29,6 +31,7 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.sql.warehouse.dir",
         Scratch.dir("warehouse").getAbsolutePath)
       .getOrCreate()

@@ -14,7 +14,9 @@ final case class Query(name: String,
   *
   * Every entry in `queries` has its DuckDB oracle in `oracleSql`.
   * Column names/aliases are identical on both sides — the oracle check
-  * sorts columns by name before hashing values.
+  * sorts columns by name before hashing values. A query runs in a
+  * session built with `spark.sql.extensions=graft.GraftExtensions`
+  * ([[Session.local]] sets it), which holds graft's native functions.
   */
 object SparkEntry {
 

@@ -37,16 +37,6 @@ object Tables {
     // timezone every main/spec/oracle already runs) so a caller-owned
     // session with a different zone cannot shift ts.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // Native expressions ride along on every load so each query path
-    // (driver sessions included) can resolve them. Idempotent.
-    graft.functions.native.NativeFns.register(spark)
-    // Likewise the sargable-regex optimizer rule (itself idempotent,
-    // but don't stack registrations on repeated loads)
-    if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.RegexPrefixPruning))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.RegexPrefixPruning
     val raw = parquet(spark, s"$sfDir/$name.parquet")
     if (name != "events") raw
     else raw.schema.fields.collect {

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -330,17 +330,14 @@ object AhoAutomaton {
   */
 case class AhoCountsExpr(left: Expression, right: Expression,
                          fold: Boolean = false)
-  extends BinaryExpression with CodegenFallback {
+  extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
+
+  override def inputTypes: Seq[DataType] =
+    Seq(StringType, ArrayType(StringType))
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val typesOk = left.dataType == StringType &&
-      (right.dataType match {
-        case ArrayType(StringType, _) => true
-        case _ => false
-      })
-    if (!typesOk) TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, array<string>), got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
+    val types = super.checkInputDataTypes()
+    if (types.isFailure) types
     else if (!right.foldable) TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a literal (foldable) dictionary")
     else AhoAutomaton.checkFoldableDict(right) match {
@@ -394,18 +391,14 @@ case class AhoCountsExpr(left: Expression, right: Expression,
 case class AhoScrubExpr(first: Expression, second: Expression,
                         third: Expression, fold: Boolean = false)
   extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-  with CodegenFallback {
+  with CodegenFallback with ExpectsInputTypes {
+
+  override def inputTypes: Seq[DataType] =
+    Seq(StringType, ArrayType(StringType), StringType)
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val typesOk = first.dataType == StringType &&
-      (second.dataType match {
-        case ArrayType(StringType, _) => true
-        case _ => false
-      }) && third.dataType == StringType
-    if (!typesOk) TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, array<string>, string), got " +
-        s"${first.dataType.simpleString} / ${second.dataType.simpleString}" +
-        s" / ${third.dataType.simpleString}")
+    val types = super.checkInputDataTypes()
+    if (types.isFailure) types
     else if (!second.foldable || !third.foldable)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires a literal (foldable) dictionary and " +

@@ -1,7 +1,6 @@
 package graft.functions.native
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GreaterThan, If, IsNotNull, LessThan, Literal, Or}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, ExpectsInputTypes, Expression, GreaterThan, If, IsNotNull, LessThan, Literal, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
@@ -36,7 +35,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * table (bounded non-negative ids, non-null similarities).
   */
 case class ArgMaxLongAgg(left: Expression, right: Expression)
-  extends DeclarativeAggregate with BinaryLike[Expression] {
+  extends DeclarativeAggregate with BinaryLike[Expression]
+  with ExpectsInputTypes {
 
   private def ord: Expression = left
   private def tie: Expression = right
@@ -45,12 +45,7 @@ case class ArgMaxLongAgg(left: Expression, right: Expression)
   override def nullable: Boolean = false
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ord.dataType == DoubleType && tie.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (double, bigint) inputs, got " +
-        s"${ord.dataType.simpleString} / ${tie.dataType.simpleString}")
+  override def inputTypes: Seq[DataType] = Seq(DoubleType, LongType)
 
   private lazy val bOrd =
     AttributeReference("bOrd", DoubleType, nullable = false)()

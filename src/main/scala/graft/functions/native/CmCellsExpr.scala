@@ -1,8 +1,7 @@
 package graft.functions.native
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -31,16 +30,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * CodegenFallback: the md5 digest dominates; the loop shell is noise.
   */
 case class CmCellsExpr(child: Expression, depth: Int, width: Int)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
 
   require(depth >= 1 && width >= 2,
     s"need depth >= 1 and width >= 2, got d=$depth w=$width")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${dt.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
 

@@ -1,8 +1,7 @@
 package graft.functions.native
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -23,18 +22,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * null ELEMENTS are not expected (embedding vectors) and read as 0.0.
   */
 case class DotProductExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double> inputs, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
   override def dataType: DataType = DoubleType
 
@@ -73,10 +64,10 @@ case class DotProductExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column-level access for the native expressions.
-  * Spark 4 no longer exposes public Column-from-Expression construction,
-  * so the expression is exposed through the session function registry and
-  * invoked with call_function.
+/** Names and Column-level access for the native expressions. Spark 4
+  * no longer exposes public Column-from-Expression construction, so each
+  * wrapper calls its function by name with call_function; the name
+  * resolves in every session built with [[graft.GraftExtensions]].
   */
 object NativeFns {
   val DotName = "graft_dot"
@@ -102,20 +93,6 @@ object NativeFns {
   val WordPieceSegmentName = "graft_wordpiece_segment"
   val CmCellsName = "graft_cm_cells"
   val VocabHitsName = "graft_vocab_hits"
-
-  /** Idempotent; called from Tables.load so every query path (including
-    * driver-built sessions) has the functions available. Sessions built
-    * with [[graft.GraftExtensions]] already have them injected; skipping
-    * the already-registered names keeps re-loads from logging a
-    * "function replaced" warning per query. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    graft.GraftExtensions.functions.foreach { case (name, _, builder) =>
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
 
   def dotNative(a: Column, b: Column): Column = call_function(DotName, a, b)
 

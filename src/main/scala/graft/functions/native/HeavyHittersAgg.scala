@@ -5,7 +5,7 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -44,13 +44,14 @@ case class HeavyHittersAgg(
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[mutable.HashMap[String, Long]]
-  with UnaryLike[Expression] {
+  with UnaryLike[Expression] with ExpectsInputTypes {
 
   require(k >= 2, s"heavy-hitters sketch needs k >= 2, got $k")
 
   override def prettyName: String = "graft_heavy_hitters"
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def createAggregationBuffer(): mutable.HashMap[String, Long] =
     mutable.HashMap.empty

@@ -1,7 +1,6 @@
 package graft.functions.native
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -32,16 +31,11 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * domains first). 2·bits ≤ 62 keeps the index in a signed long.
   */
 case class HilbertIndexExpr(left: Expression, right: Expression, bits: Int)
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
 
   require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (bigint, bigint) inputs, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
+  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
 
   override def dataType: DataType = LongType
 

@@ -1,7 +1,6 @@
 package graft.functions.native
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -28,19 +27,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * family per the training-data-pipeline mandate.
   */
 case class LcsLenExpr(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
+  extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def isStrArr(t: DataType) = t match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (isStrArr(left.dataType) && isStrArr(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<string>, array<string>), got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
 
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_lcs_len"

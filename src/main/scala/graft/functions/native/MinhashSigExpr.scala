@@ -1,10 +1,9 @@
 package graft.functions.native
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 
 /** Native MinHash signature: array<long> shingle hashes (from
   * ShingleHashesExpr) → array<long>(16).
@@ -22,16 +21,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * shell would not move the needle.
   */
 case class MinhashSigExpr(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
 
   private val seeds = graft.functions.TextFns.MinhashSeeds.toArray
   private val p = graft.functions.TextFns.MinhashP
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<long>, got ${dt.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -74,16 +69,11 @@ case class MinhashSigExpr(child: Expression)
   * unchanged x_simhash DuckDB oracle.
   */
 case class SimhashExpr(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType =>
-      TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${dt.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType = LongType
 
   override def prettyName: String = "graft_simhash"
 
@@ -159,14 +149,9 @@ case class SimhashExpr(child: Expression)
   * interpreted aggregate+transform per plane (96 passes at 16×6).
   */
 case class LshBucketsExpr(child: Expression, tables: Int, bits: Int)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${dt.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 

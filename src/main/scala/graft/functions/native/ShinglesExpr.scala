@@ -1,7 +1,7 @@
 package graft.functions.native
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
@@ -24,15 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * strings.
   */
 case class ShingleHashesExpr(child: Expression, k: Int)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
 
   require(k > 0)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${dt.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -90,15 +86,11 @@ case class ShingleHashesExpr(child: Expression, k: Int)
   * hashes every window in a single sweep: O(n·k).
   */
 case class PositionalShingleHashesExpr(child: Expression, k: Int)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
 
   require(k > 0)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${dt.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 

@@ -1,7 +1,6 @@
 package graft.functions.native
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,13 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * surrounding stage codegen intact.
   */
 case class NfcNormalizeExpr(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${dt.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_nfc"
@@ -62,13 +57,9 @@ case class NfcNormalizeExpr(child: Expression)
   * decompose-only implementation would diverge exactly there).
   */
 case class StripAccentsExpr(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${dt.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_strip_accents"
@@ -145,13 +136,9 @@ object DeflateRatioExpr {
   * exception in the function family, documented in SURVEY.
   */
 case class DeflateRatioExpr(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${dt.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_deflate_ratio"

@@ -1,7 +1,7 @@
 package graft.functions.native
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -49,22 +49,14 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class UnigramSegmentExpr(first: Expression, second: Expression,
                               third: Expression)
-  extends TernaryExpression {
+  extends TernaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[DataType] =
+    Seq(StringType, ArrayType(StringType), ArrayType(LongType))
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = first.dataType == StringType &&
-      (second.dataType match {
-        case ArrayType(StringType, _) => true
-        case _ => false
-      }) &&
-      (third.dataType match {
-        case ArrayType(LongType, _) => true
-        case _ => false
-      })
-    if (!ok) TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, array<string>, array<bigint>), " +
-        s"got ${first.dataType.simpleString} / " +
-        s"${second.dataType.simpleString} / ${third.dataType.simpleString}")
+    val types = super.checkInputDataTypes()
+    if (types.isFailure) types
     else if (!second.foldable || !third.foldable)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires a literal vocabulary (pieces and scores " +

@@ -2,7 +2,7 @@ package graft.functions.native
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -41,17 +41,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * mandate.
   */
 case class WordPieceSegmentExpr(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
+  extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
+
+  override def inputTypes: Seq[DataType] =
+    Seq(StringType, ArrayType(StringType))
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val typesOk = left.dataType == StringType &&
-      (right.dataType match {
-        case ArrayType(StringType, _) => true
-        case _ => false
-      })
-    if (!typesOk) TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, array<string>), got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
+    val types = super.checkInputDataTypes()
+    if (types.isFailure) types
     else if (!right.foldable) TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a literal (foldable) vocabulary")
     else AhoAutomaton.checkFoldableDict(right) match {

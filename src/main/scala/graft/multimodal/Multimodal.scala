@@ -1,5 +1,8 @@
 package graft.multimodal
 
+import java.nio.ByteBuffer
+import java.nio.ByteOrder.{BIG_ENDIAN, LITTLE_ENDIAN}
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -42,6 +45,24 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  /** Unsigned 16/32-bit reads and writes at absolute offsets of `bytes`
+    * in one byte order. */
+  private final class Bytes(bytes: Array[Byte], order: java.nio.ByteOrder) {
+    private val buf = ByteBuffer.wrap(bytes).order(order)
+    def u16(o: Int): Int = java.lang.Short.toUnsignedInt(buf.getShort(o))
+    def u32(o: Int): Long = Integer.toUnsignedLong(buf.getInt(o))
+    def p16(o: Int, v: Int): Unit = { buf.putShort(o, v.toShort); () }
+    def p32(o: Int, v: Long): Unit = { buf.putInt(o, v.toInt); () }
+  }
+
+  /** The raster the JDK's codecs (javax.imageio) decode `bytes` to, or
+    * null when none can. Any decoder failure counts, not just
+    * IOException: a malformed header can throw from deep inside a
+    * reader plugin. */
+  private def readRaster(bytes: Array[Byte]): java.awt.image.BufferedImage =
+    try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    catch { case scala.util.control.NonFatal(_) => null }
+
   /** Typed metadata row a real decoder would emit. */
   case class MediaMeta(doc_id: Long, n_bytes: Long, content_id: String,
                        width: Long, height: Long, frames: Long)
@@ -69,15 +90,12 @@ object Multimodal {
     * (a still); anything else falls back to [[decodeStub]]. Returns the
     * meta plus whether the real decoder handled the row — the contract
     * a mixed media column needs, since a crawl's "image" column always
-    * contains some undecodable bytes. Any decoder failure (not just
-    * IOException — a malformed header can throw from deep inside a
-    * reader plugin) means "not an image".
+    * contains some undecodable bytes. Any decoder failure means "not
+    * an image".
     */
   def decodeImage(docId: Long, bytes: Array[Byte], nChars: Long,
                   digest: java.security.MessageDigest): (MediaMeta, Boolean) = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case scala.util.control.NonFatal(_) => null }
+    val img = readRaster(bytes)
     if (img == null) (decodeStub(docId, bytes, nChars, digest), false)
     else {
       digest.reset()
@@ -99,13 +117,11 @@ object Multimodal {
     // BITMAPFILEHEADER is 14 bytes with reserved words 6-9 zero and a
     // pixel-data offset (bytes 10-13, LE) that lands inside the payload
     // past the header — both violated by ASCII text.
-    def u32le(o: Int): Long =
-      (bytes(o) & 0xFFL) | ((bytes(o + 1) & 0xFFL) << 8) |
-        ((bytes(o + 2) & 0xFFL) << 16) | ((bytes(o + 3) & 0xFFL) << 24)
     def bmpClaim: Boolean =
       bytes.length >= 14 && bytes(0) == 'B' && bytes(1) == 'M' &&
         bytes(6) == 0 && bytes(7) == 0 && bytes(8) == 0 && bytes(9) == 0 &&
-        { val off = u32le(10); off >= 14L && off <= bytes.length.toLong }
+        { val off = new Bytes(bytes, LITTLE_ENDIAN).u32(10)
+          off >= 14L && off <= bytes.length.toLong }
     bytes.length >= 4 && (
       ((bytes(0) & 0xFF) == 0x89 && bytes(1) == 'P' && bytes(2) == 'N') ||
       ((bytes(0) & 0xFF) == 0xFF && (bytes(1) & 0xFF) == 0xD8) ||
@@ -286,11 +302,8 @@ object Multimodal {
     * container ships no decoders for them.
     */
   def decodeWav(bytes: Array[Byte]): Option[WavMeta] = {
-    def u16(o: Int): Int =
-      (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-    def u32(o: Int): Long =
-      (bytes(o) & 0xFFL) | ((bytes(o + 1) & 0xFFL) << 8) |
-        ((bytes(o + 2) & 0xFFL) << 16) | ((bytes(o + 3) & 0xFFL) << 24)
+    val le = new Bytes(bytes, LITTLE_ENDIAN)
+    import le.{u16, u32}
     def tag(o: Int): String =
       if (o + 4 > bytes.length) ""
       else new String(bytes, o, 4, "US-ASCII")
@@ -335,9 +348,7 @@ object Multimodal {
   def looksLikeAudio(bytes: Array[Byte]): Boolean =
     bytes.length >= 12 && bytes(0) == 'R' && bytes(1) == 'I' &&
       bytes(2) == 'F' && bytes(3) == 'F' && {
-        val sz = (bytes(4) & 0xFFL) | ((bytes(5) & 0xFFL) << 8) |
-          ((bytes(6) & 0xFFL) << 16) | ((bytes(7) & 0xFFL) << 24)
-        sz <= bytes.length.toLong - 8L
+        new Bytes(bytes, LITTLE_ENDIAN).u32(4) <= bytes.length.toLong - 8L
       }
 
   /** Deterministic REAL PCM16 mono WAV payload: standard 44-byte header
@@ -349,10 +360,8 @@ object Multimodal {
     val out = new Array[Byte](44 + data)
     def put(o: Int, s: String): Unit = { s.getBytes("US-ASCII")
       .copyToArray(out, o); () }
-    def p32(o: Int, v: Long): Unit = { var i = 0
-      while (i < 4) { out(o + i) = ((v >> (8 * i)) & 0xFF).toByte; i += 1 } }
-    def p16(o: Int, v: Int): Unit = {
-      out(o) = (v & 0xFF).toByte; out(o + 1) = ((v >> 8) & 0xFF).toByte }
+    val le = new Bytes(out, LITTLE_ENDIAN)
+    import le.{p16, p32}
     put(0, "RIFF"); p32(4, 36L + data); put(8, "WAVE")
     put(12, "fmt "); p32(16, 16L); p16(20, 1); p16(22, 1)
     p32(24, sampleRate.toLong); p32(28, sampleRate.toLong * 2)
@@ -409,11 +418,8 @@ object Multimodal {
     * [[decodeWav]]; None for anything that isn't uncompressed 16-bit
     * mono PCM. */
   def wavSamples(bytes: Array[Byte]): Option[Array[Int]] = {
-    def u16(o: Int): Int =
-      (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-    def u32(o: Int): Long =
-      (bytes(o) & 0xFFL) | ((bytes(o + 1) & 0xFFL) << 8) |
-        ((bytes(o + 2) & 0xFFL) << 16) | ((bytes(o + 3) & 0xFFL) << 24)
+    val le = new Bytes(bytes, LITTLE_ENDIAN)
+    import le.{u16, u32}
     def tag(o: Int): String =
       if (o + 4 > bytes.length) ""
       else new String(bytes, o, 4, "US-ASCII")
@@ -469,10 +475,7 @@ object Multimodal {
       .mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false)
         it.map { case (id, bytes) =>
-          val img =
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            catch { case scala.util.control.NonFatal(_) => null }
+          val img = readRaster(bytes)
           if (img == null)
             (id, false, None: Option[Long], None: Option[Long],
               None: Option[Long], None: Option[Long], None: Option[Long])
@@ -518,10 +521,7 @@ object Multimodal {
       .mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false)
         it.map { case (id, bytes) =>
-          val img =
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            catch { case scala.util.control.NonFatal(_) => null }
+          val img = readRaster(bytes)
           if (img == null || img.getWidth * img.getHeight > 63)
             (id, false, None: Option[Long], None: Option[Long],
               None: Option[Long])
@@ -686,16 +686,8 @@ object Multimodal {
       if (bytes(tiff) == 'M' && bytes(tiff + 1) == 'M') true
       else if (bytes(tiff) == 'I' && bytes(tiff + 1) == 'I') false
       else return None
-    def u16(o: Int): Int =
-      if (big) ((bytes(o) & 0xFF) << 8) | (bytes(o + 1) & 0xFF)
-      else (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-    def u32(o: Int): Long =
-      if (big)
-        ((bytes(o) & 0xFFL) << 24) | ((bytes(o + 1) & 0xFFL) << 16) |
-          ((bytes(o + 2) & 0xFFL) << 8) | (bytes(o + 3) & 0xFFL)
-      else
-        (bytes(o) & 0xFFL) | ((bytes(o + 1) & 0xFFL) << 8) |
-          ((bytes(o + 2) & 0xFFL) << 16) | ((bytes(o + 3) & 0xFFL) << 24)
+    val in = new Bytes(bytes, if (big) BIG_ENDIAN else LITTLE_ENDIAN)
+    import in.{u16, u32}
     if (u16(tiff + 2) != 42) return None
     val ifdOff = u32(tiff + 4)
     if (ifdOff < 8 || tiff + ifdOff + 2 > limit) return None
@@ -806,7 +798,8 @@ object Multimodal {
     * EXIF). Anything else — including a JPEG with no APP1/Exif — is
     * ABSENT. */
   def exifMeta(bytes: Array[Byte]): ExifVerdict = {
-    def be16(o: Int): Int = ((bytes(o) & 0xFF) << 8) | (bytes(o + 1) & 0xFF)
+    val be = new Bytes(bytes, BIG_ENDIAN)
+    import be.{u16 => be16}
     if (bytes.length >= 4 &&
       ((bytes(0) == 'I' && bytes(1) == 'I' && bytes(2) == 0x2A &&
         bytes(3) == 0) ||
@@ -875,15 +868,8 @@ object Multimodal {
     val tiffLen = 8 + 2 + 24 + 4 + dt.length
     val segLen = 2 + 6 + tiffLen // length field + "Exif\0\0" + TIFF
     val b = new Array[Byte](2 + segLen)
-    def p16(o: Int, v: Int): Unit =
-      if (bigEndian) { b(o) = ((v >> 8) & 0xFF).toByte
-        b(o + 1) = (v & 0xFF).toByte }
-      else { b(o) = (v & 0xFF).toByte; b(o + 1) = ((v >> 8) & 0xFF).toByte }
-    def p32(o: Int, v: Long): Unit =
-      if (bigEndian) { var i = 0; while (i < 4) {
-        b(o + i) = ((v >> (8 * (3 - i))) & 0xFF).toByte; i += 1 } }
-      else { var i = 0; while (i < 4) {
-        b(o + i) = ((v >> (8 * i)) & 0xFF).toByte; i += 1 } }
+    val out = new Bytes(b, if (bigEndian) BIG_ENDIAN else LITTLE_ENDIAN)
+    import out.{p16, p32}
     b(0) = 0xFF.toByte; b(1) = 0xE1.toByte
     b(2) = ((segLen >> 8) & 0xFF).toByte; b(3) = (segLen & 0xFF).toByte
     "Exif".getBytes("US-ASCII").copyToArray(b, 4)
@@ -947,15 +933,8 @@ object Multimodal {
     val tiffLen = gpsIfd + 54 + 48
     val segLen = 2 + 6 + tiffLen
     val b = new Array[Byte](2 + segLen)
-    def p16(o: Int, v: Int): Unit =
-      if (bigEndian) { b(o) = ((v >> 8) & 0xFF).toByte
-        b(o + 1) = (v & 0xFF).toByte }
-      else { b(o) = (v & 0xFF).toByte; b(o + 1) = ((v >> 8) & 0xFF).toByte }
-    def p32(o: Int, v: Long): Unit =
-      if (bigEndian) { var i = 0; while (i < 4) {
-        b(o + i) = ((v >> (8 * (3 - i))) & 0xFF).toByte; i += 1 } }
-      else { var i = 0; while (i < 4) {
-        b(o + i) = ((v >> (8 * i)) & 0xFF).toByte; i += 1 } }
+    val out = new Bytes(b, if (bigEndian) BIG_ENDIAN else LITTLE_ENDIAN)
+    import out.{p16, p32}
     b(0) = 0xFF.toByte; b(1) = 0xE1.toByte
     b(2) = ((segLen >> 8) & 0xFF).toByte; b(3) = (segLen & 0xFF).toByte
     "Exif".getBytes("US-ASCII").copyToArray(b, 4)
@@ -1105,10 +1084,7 @@ object Multimodal {
         javax.imageio.ImageIO.setUseCache(false)
         val digest = java.security.MessageDigest.getInstance("MD5")
         it.map { case (id, bytes) =>
-          val img =
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            catch { case scala.util.control.NonFatal(_) => null }
+          val img = readRaster(bytes)
           if (img != null) {
             val out = new Array[Byte](w * h * 3)
             var sum = 0L

@@ -194,7 +194,6 @@ object Corpus {
     require(k >= 1, s"shingle size must be >= 1, got $k")
     require(window >= 1, s"window must be >= 1, got $window")
     import graft.functions.native.NativeFns
-    NativeFns.register(docs.sparkSession)
     val w = Window.partitionBy(col("id")).orderBy(col("pos"))
       .rowsBetween(Window.currentRow, window - 1)
     // Hash extraction is the native one-pass positional expression:

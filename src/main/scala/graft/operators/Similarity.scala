@@ -27,7 +27,7 @@ object Similarity {
   def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
   /** Native codegen'd dot product (graft.functions.native.DotProductExpr);
-    * requires NativeFns.register, which Tables.load performs. Same
+    * resolves in any session built with [[graft.GraftExtensions]]. Same
     * ascending-index fold as DuckDB list_dot_product (DotProductSpec
     * pins bit-equality with a pure higher-order-function fold). */
   def dot(a: Column, b: Column): Column =

@@ -160,7 +160,6 @@ object TextEval {
     * lower bound. */
   def rougeLReport(pairs: DataFrame, idCol: String, candCol: String,
                    refCol: String): DataFrame = {
-    graft.functions.native.NativeFns.register(pairs.sparkSession)
     val id = col(idCol)
     pairs
       .select(id, TextFns.words(col(candCol)).as("ct"),
@@ -192,7 +191,6 @@ object TextEval {
     * the metric's own lower bound. */
   def tokenEditReport(pairs: DataFrame, idCol: String, candCol: String,
                       refCol: String): DataFrame = {
-    graft.functions.native.NativeFns.register(pairs.sparkSession)
     val id = col(idCol)
     pairs
       .select(id, TextFns.words(col(candCol)).as("ct"),

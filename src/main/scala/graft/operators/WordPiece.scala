@@ -179,7 +179,6 @@ object WordPiece {
     * is_unk is 0/1 long — the all-or-nothing [UNK] collapse. */
   def segmentWords(words: DataFrame, wordCol: String,
                    vocab: Seq[String]): DataFrame = {
-    graft.functions.native.NativeFns.register(words.sparkSession)
     words
       .withColumn("__pieces", graft.functions.native.NativeFns
         .wordpieceSegment(col(wordCol), vocab))

@@ -61,7 +61,6 @@ object Sketches {
                     depth: Int, width: Int): DataFrame = {
     require(depth >= 1 && width >= 2,
       s"need depth >= 1 and width >= 2, got d=$depth w=$width")
-    graft.functions.native.NativeFns.register(stream.sparkSession)
     stream.select(cellsOf(keyCol, depth, width))
       .groupBy(col("d"), col("cell"))
       .agg(count(lit(1)).as("cnt"))
@@ -76,7 +75,6 @@ object Sketches {
     */
   def cmEstimate(sketch: DataFrame, probes: DataFrame, keyCol: String,
                  depth: Int, width: Int): DataFrame = {
-    graft.functions.native.NativeFns.register(probes.sparkSession)
     probes.select(col(keyCol), cellsOf(keyCol, depth, width))
       .join(broadcast(sketch), Seq("d", "cell"), "left")
       .groupBy(col(keyCol))

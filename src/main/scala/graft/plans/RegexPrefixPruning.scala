@@ -32,9 +32,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * dropping the preceding character for the optional quantifiers
   * (`?`, `*`, `{`). The upper bound increments the last prefix char
   * and is emitted only for ASCII (< 0x7f) finals, where the UTF-8
-  * byte-order increment is exact. Installed three ways, all
-  * equivalent: `spark.sql.extensions=graft.GraftExtensions`
-  * (cluster), `Tables.load` (harness sessions), `SparkSpec` (tests).
+  * byte-order increment is exact. Installed by
+  * [[graft.GraftExtensions]] (`spark.sql.extensions`), like the native
+  * functions; `spark.sql.optimizer.excludedRules` names [[ruleName]]
+  * to turn it off.
   */
 object RegexPrefixPruning extends Rule[LogicalPlan] {
 

@@ -77,8 +77,7 @@ class AnnFallbackSpec extends SparkSpec {
     "stays consistent") {
     val corpus = (0L until 400L).map(i => (i, vec(i)))
       .toDF("id", "emb")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ann_fb").toString + "/idx"
+    val path = Scratch.dir("spec-ann_fb").toString + "/idx"
     Similarity.writeIvfSqIndex(corpus, "id", "emb", path,
       nlist = 150, iters = 1)
     val lists = spark.read.parquet(s"$path/codes")
@@ -93,8 +92,7 @@ class AnnFallbackSpec extends SparkSpec {
     val corpus = (0L until 300L).map(i => (i, vec(i))).toDF("id", "emb")
     val queries = (0L until 20L).map(i => (i + 9000L, vec(i * 3 + 1)))
       .toDF("id", "emb")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ann_eq").toString
+    val root = Scratch.dir("spec-ann_eq").toString
     val pLit = s"$root/lit"
     val pFb = s"$root/fb"
     Similarity.writeIvfSqIndex(corpus, "id", "emb", pLit,

@@ -8,8 +8,7 @@ class BloomSkipSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeFixture(tag: String): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_bloom_$tag").toString
+    val dir = Scratch.dir(s"spec-bloom_$tag").toString
     // 400 keys hashed into 8 files: every file's [min, max] envelope
     // spans nearly the full key range (min/max skipping is useless),
     // but each key lives in exactly one file

@@ -7,8 +7,7 @@ import graft.sources.MaintainedIndex
 class ClusteredWriteSpec extends SparkSpec {
 
   private def writeFixture(): String = {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_clustered").toString + "/li"
+    val path = Scratch.dir("spec-clustered").toString + "/li"
     MaintainedIndex.writeClusteredIndexed(
       Tables.load(spark, sf0001, "lineitem")
         .select("l_orderkey", "l_shipdate", "l_quantity"),

@@ -8,7 +8,7 @@ import graft.sources.Compaction
 class CompactionSpec extends SparkSpec {
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_compact").toString
+    Scratch.dir("spec-compact").toString
 
   test("compaction collapses files toward the target size, rows exact") {
     val root = tmp()

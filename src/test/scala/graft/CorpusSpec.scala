@@ -560,8 +560,7 @@ class CorpusSpec extends SparkSpec {
 
   test("maintained winnow screen equals the one-shot screen across " +
     "appends, including batch-induced cap crossings") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_winnow_state").toFile
+    val root = Scratch.dir("spec-winnow_state")
     try {
       // S1 lands in THREE corpus docs (two appends), so its hashes sit
       // exactly AT maxDf=3 — rare without the batch; the batch's own
@@ -633,8 +632,7 @@ class CorpusSpec extends SparkSpec {
 
   test("winnow df sidecar folds to the fingerprint table's exact " +
     "document frequencies across write + append") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_winnow_fold").toFile
+    val root = Scratch.dir("spec-winnow_fold")
     val table = new java.io.File(root, "fps").toString
     try {
       val d = Tables.load(spark, sf0001, "documents")

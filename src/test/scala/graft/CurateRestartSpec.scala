@@ -29,8 +29,7 @@ class CurateRestartSpec extends SparkSpec {
     * admits 201), durable checkpoint. Returns (root, run) where run()
     * starts/restarts the loop over the same checkpoint. */
   private def fixture(): (java.io.File, () => Unit) = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_curate_restart").toFile
+    val root = Scratch.dir("spec-curate_restart")
     def path(n: String) = new java.io.File(root, n).toString
     val corpus = Seq((1L, corpusText)).toDF("doc_id", "text")
     graft.operators.Dedup.writeSignatureTable(
@@ -153,8 +152,7 @@ class CurateRestartSpec extends SparkSpec {
     * QUOTE of 100 (J ≈ 0.28 vs the LSH 0.5 bar: only the live
     * fingerprint table can reject it) — and 201 (fresh). */
   private def quoteFixture(): (java.io.File, () => Unit) = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_curateq_restart").toFile
+    val root = Scratch.dir("spec-curateq_restart")
     def path(n: String) = new java.io.File(root, n).toString
     val corpus = Seq((1L, corpusText)).toDF("doc_id", "text")
     graft.operators.Dedup.writeSignatureTable(

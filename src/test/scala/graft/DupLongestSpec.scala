@@ -18,8 +18,7 @@ class DupLongestSpec extends SparkSpec {
       (4L, null),
       (5L, "short twin text"),
       (6L, "short twin text"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dup_longest").toString
+    val dir = Scratch.dir("spec-dup_longest").toString
     docs.toDF("doc_id", "text").coalesce(1)
       .write.parquet(s"$dir/documents.parquet")
     val got = TrainingData.dupLongestQ(spark, dir).as[(Long, Long, Long)]

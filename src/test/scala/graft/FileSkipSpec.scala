@@ -11,8 +11,7 @@ class FileSkipSpec extends SparkSpec {
     .select("l_orderkey", "l_linenumber", "l_quantity")
 
   private def writeFixture(tag: String): String = {
-    val p = java.nio.file.Files
-      .createTempDirectory(s"graft_fileskip_$tag").toString + "/li"
+    val p = Scratch.dir(s"spec-fileskip_$tag").toString + "/li"
     MaintainedIndex.writeClusteredIndexed(lineitem, p, "l_orderkey",
       partitions = 8)
     p

@@ -83,8 +83,7 @@ class HilbertSpec extends SparkSpec {
 
   test("hilbert-clustered layout: disjoint h-ranges per file, a box " +
     "scan prunes files, and results equal the unclustered answer") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_hilbert").toString + "/li"
+    val path = Scratch.dir("spec-hilbert").toString + "/li"
     Hilbert.writeHilbertOrdered(
       Tables.load(spark, sf0001, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity"),

@@ -22,7 +22,7 @@ class IndexSpec extends SparkSpec {
         .cast("float")).as("embedding"))
 
   private def withIndex[A](f: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsq").toFile
+    val dir = Scratch.dir("spec-ivfsq")
     try {
       val path = new java.io.File(dir, "idx").toString
       Similarity.writeIvfSqIndex(corpus, "vec_id", "embedding", path,
@@ -80,7 +80,7 @@ class IndexSpec extends SparkSpec {
   }
 
   test("append grows the stored index under the frozen quantizer") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsq-a").toFile
+    val dir = Scratch.dir("spec-ivfsq-a")
     try {
       val path = new java.io.File(dir, "idx").toString
       val original = corpus.filter(col("vec_id") >= 20)
@@ -124,7 +124,7 @@ class IndexSpec extends SparkSpec {
     }
     val e = intercept[IllegalArgumentException] {
       Similarity.ivfSqIndexNlist(spark,
-        java.nio.file.Files.createTempDirectory("not-an-index").toString)
+        Scratch.dir("spec-not-an-index").toString)
     }
     assert(e.getMessage.contains("_graft_ivfsq_meta"))
   }

@@ -9,7 +9,7 @@ import graft.sources.Ingest
 class IngestSpec extends SparkSpec {
 
   private def tmpFeed(name: String, linesOut: Seq[String]): String = {
-    val dir = Files.createTempDirectory(s"graft_$name")
+    val dir = Scratch.dir(s"spec-$name").toPath
     Files.write(dir.resolve("part-0.txt"),
       linesOut.mkString("\n").getBytes("UTF-8"))
     dir.toString

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -9,7 +8,7 @@ import graft.jobs.Jobs
 class JobsSpec extends SparkSpec {
 
   test("every job runs end-to-end and writes non-empty output") {
-    val out = Files.createTempDirectory("graft_jobs").toString
+    val out = Scratch.dir("spec-jobs").toString
     Jobs.all.toSeq.sortBy(_._1).foreach { case (name, job) =>
       job(spark, sf0001, out)
     }
@@ -48,7 +47,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("clean_corpus drops planted near-duplicates and splits the rest") {
-    val out = Files.createTempDirectory("graft_corpus").toString
+    val out = Scratch.dir("spec-corpus").toString
     Jobs.all("clean_corpus")(spark, sf0001, out)
     val corpus = spark.read.parquet(s"$out/clean_corpus")
     val n = corpus.count()
@@ -60,7 +59,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("curate_stream screens the feed against a live signature table") {
-    val out = Files.createTempDirectory("graft_curate_job").toString
+    val out = Scratch.dir("spec-curate_job").toString
     Jobs.all("curate_stream")(spark, sf0001, out)
     val admitted = spark.read.parquet(s"$out/admitted")
     // novel md5-chain docs (+9.5e6) resemble nothing ingested: admitted
@@ -76,7 +75,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("screen_batch admits only exact-and-fuzzy-novel batch docs") {
-    val out = Files.createTempDirectory("graft_screen").toString
+    val out = Scratch.dir("spec-screen").toString
     Jobs.all("screen_batch")(spark, sf0001, out)
     val admitted = spark.read.parquet(s"$out/batch_admitted")
     val rejects = spark.read.parquet(s"$out/batch_rejects")
@@ -101,7 +100,7 @@ class JobsSpec extends SparkSpec {
 
   test("quote_audit maintains its fingerprint table: create, converge " +
     "on re-run, append only unseen docs") {
-    val out = Files.createTempDirectory("graft_quote_job").toString
+    val out = Scratch.dir("spec-quote_job").toString
     Jobs.all("quote_audit")(spark, sf0001, out)
     val fps1 = spark.read.parquet(s"$out/winnow_fps").count()
     val pairs1 = spark.read.parquet(s"$out/quote_pairs").count()
@@ -114,7 +113,7 @@ class JobsSpec extends SparkSpec {
 
     // append path: a table created over HALF the corpus must be topped
     // up to full coverage by the job, not rebuilt
-    val out2 = Files.createTempDirectory("graft_quote_job2").toString
+    val out2 = Scratch.dir("spec-quote_job2").toString
     val d = Tables.load(spark, sf0001, "documents")
     graft.operators.Corpus.writeWinnowTable(
       d.where(col("doc_id") % 2 === 0), "text", "doc_id",
@@ -129,7 +128,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("audit-append job is append-semantics (second run doubles rows)") {
-    val out = Files.createTempDirectory("graft_append").toString
+    val out = Scratch.dir("spec-append").toString
     Jobs.all("clean_region")(spark, sf0001, out)
     val once = spark.read.parquet(s"$out/dwd_region").count()
     Jobs.all("clean_region")(spark, sf0001, out)
@@ -139,7 +138,7 @@ class JobsSpec extends SparkSpec {
 
   test("train_tokenizer reads-or-creates its vocabulary and the " +
     "segmentations cover every pretoken") {
-    val out = Files.createTempDirectory("graft_tok_job").toString
+    val out = Scratch.dir("spec-tok_job").toString
     Jobs.all("train_tokenizer")(spark, sf0001, out)
     val vocab1 = spark.read.parquet(s"$out/unigram_vocab").collect()
       .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
@@ -159,7 +158,7 @@ class JobsSpec extends SparkSpec {
 
   test("refresh_pagerank cold-starts once, then refreshes warm from " +
     "the stored ranks") {
-    val out = Files.createTempDirectory("graft_pr_job").toString
+    val out = Scratch.dir("spec-pr_job").toString
     Jobs.all("refresh_pagerank")(spark, sf0001, out)
     val cold = spark.read.parquet(s"$out/pagerank_ranks").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -181,7 +180,7 @@ class JobsSpec extends SparkSpec {
 
   test("cluster_lineitem_hilbert lays files out in disjoint h-ranges " +
     "and a box scan over them equals the unclustered answer") {
-    val out = Files.createTempDirectory("graft_hilbert_job").toString
+    val out = Scratch.dir("spec-hilbert_job").toString
     Jobs.all("cluster_lineitem_hilbert")(spark, sf0001, out)
     val path = s"$out/lineitem_hilbert"
     val files = new java.io.File(path).listFiles()

@@ -62,8 +62,8 @@ class LeakSpec extends SparkSpec {
   }
 
   test("SQ8/IVF index build + append + search leave no blocks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_leak_idx")
-    val path = dir.resolve("idx").toString
+    val dir = Scratch.dir("spec-leak_idx")
+    val path = new java.io.File(dir, "idx").toString
     val emb = Tables.load(spark, sf0001, "embeddings")
     val leaked = leakedBlocks {
       graft.operators.Similarity.writeIvfSqIndex(
@@ -108,8 +108,7 @@ class LeakSpec extends SparkSpec {
     val session = spark
     import session.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft_leak_curate")
-      .toFile
+    val root = Scratch.dir("spec-leak_curate")
     def path(n: String) = new java.io.File(root, n).toString
     def text(i: Long) = (1 to 24).map(j => s"w${i}t$j").mkString(" ")
     val corpus = (0L until 30L).map(i => (i, text(i))).toDF("doc_id", "text")

@@ -14,8 +14,6 @@ import graft.operators.Dedup
 class NativeParitySpec extends SparkSpec {
   import spark.implicits._
 
-  NativeFns.register(spark)
-
   test("graft_cm_cells == hash32 chain, cell for cell") {
     val keys = Seq("", "a", "hello", "héllo wörld", "中文字符串",
       "cm0:prefix-collision", "  spaced  ", "\ttab\nnewline",

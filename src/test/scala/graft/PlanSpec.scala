@@ -54,8 +54,7 @@ class PlanSpec extends SparkSpec {
 
   test("latestPartitionPruned on a directory-partitioned table: the max " +
     "reads zero data columns and the result scan prunes partitions") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_partproof").toString + "/t"
+    val dir = Scratch.dir("spec-partproof").toString + "/t"
     Tables.load(spark, sf0001, "lineitem")
       .withColumn("etl_date", date_format(col("l_shipdate"), "yyyyMM"))
       .write.partitionBy("etl_date").parquet(dir)
@@ -205,8 +204,7 @@ class PlanSpec extends SparkSpec {
 
   test("signature-table pair generation column-prunes both scans " +
     "(bands read ids+minhashes, verification reads ids+shingle sets)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sigplan").toString + "/sigs"
+    val dir = Scratch.dir("spec-sigplan").toString + "/sigs"
     val docs = Tables.load(spark, sf0001, "documents").limit(50)
     graft.operators.Dedup.writeSignatureTable(
       docs, "text", "doc_id", dir, k = 5)
@@ -238,8 +236,7 @@ class PlanSpec extends SparkSpec {
 
   test("winnowingContainment over a stored fingerprint table: scans " +
     "prune to (id, h), joins are hash-shaped, text never read") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_winplan").toString + "/fps"
+    val dir = Scratch.dir("spec-winplan").toString + "/fps"
     val docs = Tables.load(spark, sf0001, "documents").limit(50)
     graft.operators.Corpus
       .winnowingFingerprints(docs, "text", "doc_id")
@@ -306,8 +303,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stored SQ8/IVF index search column-prunes the code lists") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfsq_plan").toFile
+    val dir = Scratch.dir("spec-ivfsq_plan")
     try {
       val emb = Tables.load(spark, sf0001, "embeddings")
       val path = new java.io.File(dir, "idx").toString
@@ -633,8 +629,7 @@ class PlanSpec extends SparkSpec {
 
   test("hilbert box scan pushes both range predicates to the parquet " +
     "scan of the clustered files") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hilplan").toString + "/li"
+    val dir = Scratch.dir("spec-hilplan").toString + "/li"
     graft.ops.Hilbert.writeHilbertOrdered(
       Tables.load(spark, sf0001, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey"),

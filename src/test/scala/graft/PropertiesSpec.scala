@@ -226,7 +226,7 @@ class PropertiesSpec extends SparkSpec {
 
   test("stored-index search (pruned literal probe scan) == from-scratch " +
     "ivfSqTopK on random integer-grid embeddings") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_propidx").toFile
+    val dir = Scratch.dir("spec-propidx")
     try {
       val gen: Gen[List[Seq[Double]]] = Gen.listOfN(36,
         Gen.listOfN(6, Gen.choose(-8, 8).map(_.toDouble)).map(_.toSeq))

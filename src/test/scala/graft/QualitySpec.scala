@@ -77,8 +77,7 @@ class QualitySpec extends SparkSpec {
   }
 
   test("Versioned.diff classifies added/removed/changed") {
-    val t = java.nio.file.Files
-      .createTempDirectory("graft_diff").toString + "/t"
+    val t = Scratch.dir("spec-diff").toString + "/t"
     Versioned.write(Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("k", "v"), t)
     Versioned.write(Seq((2L, "y"), (3L, "Z"), (4L, "w")).toDF("k", "v"), t)
     val d = Versioned.diff(spark, t, Seq("k"), 1, 2)

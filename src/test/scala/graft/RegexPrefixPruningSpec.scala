@@ -31,8 +31,7 @@ class RegexPrefixPruningSpec extends SparkSpec {
   }
 
   test("anchored rlike over parquet pushes the implied range to the scan") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_rpp").toString
+    val dir = Scratch.dir("spec-rpp").toString
     (0 until 2000).map(i => (f"user$i%04d", i.toLong))
       .toDF("rowkey", "v")
       .write.mode("overwrite").parquet(dir)
@@ -48,23 +47,24 @@ class RegexPrefixPruningSpec extends SparkSpec {
   }
 
   test("results are bit-identical with the rule removed") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_rpp2").toString
+    val dir = Scratch.dir("spec-rpp2").toString
     (0 until 500).map(i => (s"k$i", i.toLong)).toDF("rowkey", "v")
       .write.mode("overwrite").parquet(dir)
-    def run() = spark.read.parquet(dir)
-      .where(col("rowkey").rlike("^k1[0-9]?$"))
-      .collect().map(_.getString(0)).sorted.toSeq
-    val withRule = run()
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == RegexPrefixPruning)
-    try {
-      val withoutRule = run()
-      assert(withRule == withoutRule && withRule.nonEmpty)
-      // k1, k10..k19
-      assert(withRule.size === 11)
-    } finally spark.experimental.extraOptimizations = saved
+    // (rows, whether the optimized plan carries the range conjunct)
+    def run() = {
+      val q = spark.read.parquet(dir)
+        .where(col("rowkey").rlike("^k1[0-9]?$"))
+      (q.collect().map(_.getString(0)).sorted.toSeq,
+        q.queryExecution.optimizedPlan.toString.contains(">= k1"))
+    }
+    val (withRule, ranged) = run()
+    val (withoutRule, rangedWithout) = withSQLConf(
+      "spark.sql.optimizer.excludedRules" -> RegexPrefixPruning.ruleName)(
+      run())
+    assert(ranged && !rangedWithout, "the rule did not run or was not removed")
+    assert(withRule == withoutRule && withRule.nonEmpty)
+    // k1, k10..k19
+    assert(withRule.size === 11)
   }
 
   test("rule is idempotent (fixpoint batch cannot stack conjuncts)") {

@@ -18,7 +18,7 @@ class ScreenPruneSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_prune_$tag")
+    Scratch.dir(s"spec-prune_$tag")
       .toString
 
   // --------------------------------------------- MaintainedIndex core

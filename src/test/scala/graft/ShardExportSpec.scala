@@ -6,7 +6,7 @@ class ShardExportSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_shardspec_$tag")
+    Scratch.dir(s"spec-shardspec_$tag")
       .toString + "/out"
 
   test("writeSharded writes one file per shard (aligned repartition)") {

@@ -17,8 +17,7 @@ class SigTableSpec extends SparkSpec {
     val batch = d.where(col("doc_id") % 7 === 0).select(
       (col("doc_id") + 5000000L).as("doc_id"),
       expr("substring(text, 11)").as("text"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigs").toString + "/sigs"
+    val path = Scratch.dir("spec-sigs").toString + "/sigs"
     Dedup.writeSignatureTable(d, "text", "doc_id", path)
     Dedup.requireShingleK(spark, path, 5)
     val m = Dedup.incrementalNearDupAgainstPreSigsM(
@@ -35,8 +34,7 @@ class SigTableSpec extends SparkSpec {
 
   test("self near-dup pairs from the stored table == recomputing") {
     val d = TrainingData.nearDupCorpus(spark, sf0001)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigs_self").toString + "/sigs"
+    val path = Scratch.dir("spec-sigs_self").toString + "/sigs"
     Dedup.writeSignatureTable(d, "text", "doc_id", path)
     val viaTable = Dedup.nearDupPairsFromSigs(spark, path, threshold = 0.5)
       .orderBy("doc_a", "doc_b").collect().toSeq
@@ -49,8 +47,7 @@ class SigTableSpec extends SparkSpec {
   }
 
   test("a missing k marker names the path and the writer to use") {
-    val bare = java.nio.file.Files
-      .createTempDirectory("graft_sigs_bare").toString + "/sigs"
+    val bare = Scratch.dir("spec-sigs_bare").toString + "/sigs"
     Tables.load(spark, sf0001, "documents")
       .select(col("doc_id")).write.parquet(bare)
     val e = intercept[IllegalArgumentException] {
@@ -63,8 +60,7 @@ class SigTableSpec extends SparkSpec {
   test("the signature table carries no text — the corpus side of a " +
     "screen is signatures only, and band scans prune to m0..m15") {
     val d = TrainingData.nearDupCorpus(spark, sf0001)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigs2").toString + "/sigs"
+    val path = Scratch.dir("spec-sigs2").toString + "/sigs"
     Dedup.writeSignatureTable(d, "text", "doc_id", path)
     val table = spark.read.parquet(path)
     assert(!table.schema.fieldNames.contains("text"),
@@ -86,8 +82,7 @@ class SigTableSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val corpus = d.union(d.select((col("doc_id") + 1000000L).as("doc_id"),
       expr("substring(text, 11)").as("text")))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bandprof").toString + "/sigs"
+    val path = Scratch.dir("spec-bandprof").toString + "/sigs"
     Dedup.writeSignatureTable(corpus, "text", "doc_id", path)
     val pairs = Dedup.nearDupPairsFromSigs(spark, path, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
@@ -122,8 +117,7 @@ class SigTableSpec extends SparkSpec {
     val d = Seq((1L, excerpt), (2L, source),
       (3L, "completely unrelated prose about glacier moraines and " +
         "the slow census of alpine lichen colonies")).toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sigs_ct").toString + "/sigs"
+    val path = Scratch.dir("spec-sigs_ct").toString + "/sigs"
     Dedup.writeSignatureTable(d, "text", "doc_id", path)
     val rows = Dedup.containmentPairsFromSigs(spark, path,
         minContainmentBp = 9000L)
@@ -201,8 +195,7 @@ class SigTableSpec extends SparkSpec {
     // the sig-table composition (the production path: pairs from the
     // maintained signature table, election unchanged) must elect
     // byte-identically to the from-text form
-    val sigPath = java.nio.file.Files
-      .createTempDirectory("graft_keepbest_sigs").toString + "/sigs"
+    val sigPath = Scratch.dir("spec-keepbest_sigs").toString + "/sigs"
     Dedup.writeSignatureTable(corpus, "text", "doc_id", sigPath)
     val viaSigs = Dedup.dedupKeepBestFromSigs(spark, corpus,
         sigPath, "doc_id",

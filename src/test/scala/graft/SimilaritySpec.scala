@@ -29,8 +29,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", 0)
     }
     assert(ek.getMessage.contains("k must be >= 1, got 0"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_topk_req").toString + "/idx"
+    val path = Scratch.dir("spec-topk_req").toString + "/idx"
     Similarity.writeIvfSqIndex(emb, "vec_id", "embedding", path,
       nlist = 4, iters = 1)
     val ep = intercept[IllegalArgumentException] {

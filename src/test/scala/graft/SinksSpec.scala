@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.Sinks
 
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_sinks").toString
+    Scratch.dir("spec-sinks").toString
 
   test("appendPartitioned accumulates rows across writes (K1)") {
     val path = tmp()

@@ -9,20 +9,15 @@ import org.scalatest.time.SpanSugar._
 
 /** Shared local session for all suites (one per forked test JVM). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        graft.Scratch.dir("warehouse").getAbsolutePath)
-      .getOrCreate()
-    graft.functions.native.NativeFns.register(s)
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations :+ graft.plans.RegexPrefixPruning
-    s
-  }
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.warehouse.dir",
+      graft.Scratch.dir("warehouse").getAbsolutePath)
+    .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+    .getOrCreate()
 
   def sf0001 = "/root/testdata/sf0.001"
 

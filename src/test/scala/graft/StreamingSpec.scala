@@ -20,7 +20,7 @@ class StreamingSpec extends SparkSpec {
   // 1000x compressed. Materializing the loaded frame bakes the
   // contract into the fixture's bytes.
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = Scratch.dir("spec-stream")
     Tables.load(spark, sf0001, "events")
       .coalesce(1).write.mode("overwrite").parquet(dir.toString)
     dir.toString
@@ -74,8 +74,7 @@ class StreamingSpec extends SparkSpec {
   test("continuous SCD merge converges to the batch merge result") {
     // two micro-batches split by event_id parity, so one user's rows
     // span both and the second batch merges against the first's snapshot
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_scd_target").toString
+    val root = Scratch.dir("spec-scd_target").toString
     val ev = Tables.load(spark, sf0001, "events")
     Seq(0, 1).foreach(h => ev.where(col("event_id") % 2 === h)
       .coalesce(1).write.parquet(s"$root/src/b$h"))
@@ -102,12 +101,14 @@ class StreamingSpec extends SparkSpec {
 
   test("a drain deletes the checkpoint it made and keeps the one it " +
     "was given") {
+    // the spec's own dirs exist before the baseline
+    val events = eventsDir
+    val snap = Scratch.dir("spec-scd_scratch").toString + "/snap"
     val before = Scratch.list()
     assert(StreamingOps.runToMemory(StreamingOps.dedupKeysStream(
-      eventStream(eventsDir, eventsSchema), Seq("user_id"))).count() > 0)
-    StreamingOps.continuousScdMerge(eventStream(eventsDir, eventsSchema),
-      java.nio.file.Files.createTempDirectory("graft_scd_scratch")
-        .toString + "/snap", Seq("user_id"), "ts", Seq("event_id"))
+      eventStream(events, eventsSchema), Seq("user_id"))).count() > 0)
+    StreamingOps.continuousScdMerge(eventStream(events, eventsSchema),
+      snap, Seq("user_id"), "ts", Seq("event_id"))
     assert(Scratch.list() == before)
     // a curate lane's run root goes with the call, and so do the schema
     // and envelope cache entries of its tables; the fixture dirs it
@@ -121,8 +122,7 @@ class StreamingSpec extends SparkSpec {
         graft.sources.MaintainedIndex.envelopeCache.keySet.asScala.map(_._1)
       assert(!cached.exists(_.matches(runDir)), cached.mkString(", "))
     }
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ann_ckpt_kept").toString
+    val root = Scratch.dir("spec-ann_ckpt_kept").toString
     val emb = Tables.load(spark, sf0001, "embeddings")
       .filter(col("vec_id") < 40)
     graft.operators.Similarity.writeIvfSqIndex(emb, "vec_id", "embedding",
@@ -143,8 +143,7 @@ class StreamingSpec extends SparkSpec {
     // a single-file source is one micro-batch, so one run only exercises
     // the bootstrap branch; a second run with a fresh checkpoint hits the
     // scdMerge-against-existing-target branch and must change nothing
-    val target = java.nio.file.Files
-      .createTempDirectory("graft_scd_idem").toString + "/snap"
+    val target = Scratch.dir("spec-scd_idem").toString + "/snap"
     def run(): Unit = StreamingOps.continuousScdMerge(
       eventStream(eventsDir, eventsSchema),
       target, Seq("user_id"), "ts", Seq("event_id"))
@@ -200,8 +199,8 @@ class StreamingSpec extends SparkSpec {
     // evictions fire between batches — the behavior a single-batch test
     // cannot exercise
     val chunks = 5
-    val stage = java.nio.file.Files.createTempDirectory("graft_mb_stage")
-    val inDir = java.nio.file.Files.createTempDirectory("graft_mb_in")
+    val stage = Scratch.dir("spec-mb_stage")
+    val inDir = Scratch.dir("spec-mb_in")
     val w = org.apache.spark.sql.expressions.Window.orderBy("ts", "event_id")
     val n = ev.count()
     val per = math.ceil(n.toDouble / chunks).toLong
@@ -216,14 +215,14 @@ class StreamingSpec extends SparkSpec {
     val q = StreamingOps.userSessionStream(src).toDF()
       .writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_mb_ckpt").toString)
+        Scratch.dir("spec-mb_ckpt").toString)
       .format("memory").queryName("mb_sess_out").start()
     try {
       (0 until chunks).foreach { i =>
         val part = new java.io.File(s"$stage/c$i").listFiles()
           .filter(_.getName.endsWith(".parquet")).head
         java.nio.file.Files.copy(part.toPath,
-          inDir.resolve(s"chunk_$i.parquet"))
+          inDir.toPath.resolve(s"chunk_$i.parquet"))
         q.processAllAvailable() // one controlled micro-batch per chunk
       }
     } finally q.stop()
@@ -311,8 +310,7 @@ class StreamingSpec extends SparkSpec {
   test("continuousCurate: a batch-1 near-copy of a batch-0 admit is " +
     "rejected (the signature table is live)") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_curate_spec").toFile
+    val root = Scratch.dir("spec-curate_spec")
     def path(n: String) = new java.io.File(root, n).toString
     val corpus = Seq((1L, corpusText)).toDF("doc_id", "text")
     graft.operators.Dedup.writeSignatureTable(
@@ -334,8 +332,7 @@ class StreamingSpec extends SparkSpec {
   test("curate policy screen: blocked docs reject, and never become " +
     "dedup evidence") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_curate_policy").toFile
+    val root = Scratch.dir("spec-curate_policy")
     def path(n: String) = new java.io.File(root, n).toString
     val corpus = Seq((1L, corpusText)).toDF("doc_id", "text")
     graft.operators.Dedup.writeSignatureTable(
@@ -381,8 +378,7 @@ class StreamingSpec extends SparkSpec {
       : Unit = {
     import spark.implicits._
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_curate_codegen").toFile
+    val root = Scratch.dir("spec-curate_codegen")
     def path(n: String) = new java.io.File(root, n).toString
     val corpus = Seq((1L, corpusText), (2L, freshText)).toDF("doc_id", "text")
     graft.operators.Dedup.writeSignatureTable(
@@ -437,8 +433,7 @@ class StreamingSpec extends SparkSpec {
   test("continuousAggMaintenance commits one Versioned snapshot per " +
     "micro-batch and the latest equals the full aggregate") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_streamagg").toString
+    val root = Scratch.dir("spec-streamagg").toString
     // two micro-batch files
     Seq((1L, 10L), (2L, 5L)).toDF("k", "c").coalesce(1)
       .write.parquet(s"$root/src/b0")

@@ -251,7 +251,6 @@ class TextEvalSpec extends SparkSpec {
       def arr() = Seq.fill(rnd.nextInt(9))(alphabet(rnd.nextInt(4)))
       (i.toLong, arr(), arr())
     }
-    graft.functions.native.NativeFns.register(spark)
     val got = cases.toDF("id", "a", "b")
       .select($"id", graft.functions.native.NativeFns
         .tokenEdit($"a", $"b").as("d"))
@@ -262,7 +261,6 @@ class TextEvalSpec extends SparkSpec {
   }
 
   test("graft_tok_edit null semantics: null side → null, null token never matches") {
-    graft.functions.native.NativeFns.register(spark)
     val r = spark.sql(
       "SELECT graft_tok_edit(array('a', CAST(NULL AS STRING)), " +
         "array('a', 'b')) AS d, " +

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The two source censuses under `tools/`, run on this tree: every knob
-  * has a README row, and `src/main` defines nothing that only tests
-  * reach beyond the kept entries named here. */
+/** The source censuses, run on this tree: every knob has a README
+  * row, `src/main` defines nothing that only tests reach beyond the
+  * kept entries named here, and graft installs itself into a session
+  * in one place. */
 class ToolsSpec extends AnyFunSuite {
 
   /** (exit code, stdout lines) of `python3 tools/<args>` at the root. */
@@ -34,5 +35,18 @@ class ToolsSpec extends AnyFunSuite {
       "src/main/scala/graft/ops/Materialize.scala" -> "def reapDefaultSpills",
       "src/main/scala/graft/sources/Versioned.scala" -> "def vacuum"),
       lines.mkString("\n"))
+  }
+
+  test("only GraftExtensions installs functions or optimizer rules") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val installs =
+      "functionRegistry|createOrReplaceTempFunction|extraOptimizations".r
+    val offenders = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "GraftExtensions.scala")
+      .filter(p => installs.findFirstIn(Files.readString(p)).isDefined)
+      .toSeq
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -8,7 +8,7 @@ class VersionedSpec extends SparkSpec {
   import spark.implicits._
 
   private def tbl(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_versioned_$tag")
+    Scratch.dir(s"spec-versioned_$tag")
       .toString + "/t"
 
   test("write assigns increasing versions and read pins or follows latest") {

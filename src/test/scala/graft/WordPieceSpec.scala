@@ -100,7 +100,6 @@ class WordPieceSpec extends SparkSpec {
   }
 
   test("malformed vocabularies fail at analysis, not mid-job") {
-    graft.functions.native.NativeFns.register(spark)
     val df = Seq("abc").toDF("word")
     def run(vocab: String): Unit =
       df.selectExpr(s"graft_wordpiece_segment(word, $vocab)").collect()

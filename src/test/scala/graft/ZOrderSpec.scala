@@ -19,8 +19,7 @@ class ZOrderSpec extends SparkSpec {
 
   test("z-ordered layout: disjoint z-ranges per file and a 2-D box " +
     "scan intersects fewer files than it would unclustered") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_zorder").toString + "/li"
+    val path = Scratch.dir("spec-zorder").toString + "/li"
     ZOrder.writeZOrdered(
       Tables.load(spark, sf0001, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity"),
