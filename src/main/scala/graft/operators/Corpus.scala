@@ -556,9 +556,13 @@ object Corpus {
     *
     * Two regimes, picked by the table's data-file count:
     *  - at most 2 × `spark.sql.shuffle.partitions` files (the table
-    *    reads whole anyway): one lazy DAG over the projection and the
-    *    sidecar — no persists, no action barriers, Catalyst shares the
-    *    exchanges;
+    *    reads whole anyway): the df cap is judged ONCE, into one
+    *    relation of tagged `(id, h, is_batch)` rows —
+    *    the batch's distinct fingerprints and the projection's rows,
+    *    kept where the hash is rare — materialized once (executor-local
+    *    blocks, released before return); the pair join and both set
+    *    sizes read its blocks. No persists of stored tables, no action
+    *    barriers, one scan each of the projection and the sidecar;
     *  - above that (the 100 TB steady state): every stored-table read
     *    is file-pruned against the batch's bounded probe sets — of the
     *    table only files whose h-envelope meets the batch's rare-hash
@@ -567,7 +571,7 @@ object Corpus {
     *    meets the batch's (then candidates') hash sets. Pruning only
     *    drops files that contain NO probe key and every pruned read
     *    feeds an equi-semi-join on that key, so the rows are those of
-    *    the bulk DAG; a file without usable footer statistics is
+    *    the bulk regime; a file without usable footer statistics is
     *    always read (MaintainedIndex's safety rule), never skipped.
     *    The probe-set collects are the screen's own broadcast sides
     *    read driver-side, bounded by the batch and its candidates;
@@ -598,33 +602,47 @@ object Corpus {
       // BULK regime: the pruned path's persist/barrier machinery buys
       // nothing here and costs plenty (four multi-million-row persists
       // and five sequential action barriers per call, measured 6.5-7.5 s
-      // per corpus-scale batch at sf0.1 against one lazy DAG).
+      // per corpus-scale batch at sf0.1).
       //  - the corpus side reads the doc-keyed PROJECTION — already
       //    distinct (id, h) (ids are unique across appends, so
       //    per-append distincts compose), so no corpus-wide distinct
       //    exchange forms and the scan carries fewer, narrower rows
       //    than the (id, pos, h) table;
-      //  - corpus dfs FOLD from the sidecar (one aggregation over
-      //    pre-aggregated `(h, d)` deltas), and the cap is judged on
-      //    stored-df + batch-df via a full-outer hash join
-      //    (corpus-scale batches make the pruned path's broadcast
-      //    semi-joins driver-sized, measured 2× slower here).
-      val ihC = exclude(spark.read.parquet(winnowByIdPath(tablePath))
-        .select(col("id"), col("h")))
+      //  - the cap is ONE aggregation by h over the batch's distinct
+      //    (id, h) rows (1 each) and the sidecar's pre-aggregated
+      //    `(h, d)` deltas: stored df + batch df, and a hash counts only
+      //    if the batch or the sidecar holds it. The rare set joins the
+      //    tagged rows by h, broadcast only while Spark sizes it under
+      //    the broadcast threshold (the sidecar's files set that size),
+      //    else a shuffled join that partitions the tagged rows by h
+      //    (forced over a 300-document corpus, the shuffled join moved
+      //    1.6× the shuffle bytes per curate batch and saved no CPU);
+      //  - the capped rows are MATERIALIZED before the consumers split
+      //    them by `is_batch`: left lazy, Catalyst pushes that filter
+      //    below the union, each consumer gets its own copy of the cap
+      //    and its scans, and the exchanges no longer match for reuse.
       val ihB = batchFps.select(col("id"), col("h")).distinct()
-      val dfB = ihB.groupBy(col("h")).agg(count(lit(1)).as("db"))
-      val dfC = spark.read.parquet(dfPath)
-        .where(col("batch_id") < lit(ownBatchId))
-        .groupBy(col("h")).agg(sum(col("d")).as("dc"))
-      val rare = dfB.join(dfC, Seq("h"), "full_outer")
-        .where(coalesce(col("db"), lit(0L)) +
-          coalesce(col("dc"), lit(0L)) <= maxDf)
+      val rare = ihB.select(col("h"), lit(1L).as("d"))
+        .unionByName(spark.read.parquet(dfPath)
+          .where(col("batch_id") < lit(ownBatchId))
+          .select(col("h"), col("d")))
+        .groupBy(col("h")).agg(sum(col("d")).as("df"))
+        .where(col("df") <= maxDf)
         .select(col("h"))
-      val pC = ihC.join(rare, Seq("h"))
-      val nC = pC.groupBy(col("id")).agg(count(lit(1)).as("n_corpus"))
-        .withColumnRenamed("id", "corpus_id")
-      graft.ops.Materialize(containment(ihB.join(rare, Seq("h")), pC, nC,
-        minContainmentBp), mat)
+      val capped = graft.ops.Materialize(
+        ihB.withColumn("is_batch", lit(true))
+          .unionByName(exclude(spark.read.parquet(winnowByIdPath(tablePath))
+            .select(col("id"), col("h"))).withColumn("is_batch", lit(false)))
+          .join(rare, Seq("h")),
+        graft.ops.MatStrategy.Local)
+      try {
+        val pC = capped.df.where(!col("is_batch")).select(col("id"), col("h"))
+        val nC = pC.groupBy(col("id")).agg(count(lit(1)).as("n_corpus"))
+          .withColumnRenamed("id", "corpus_id")
+        graft.ops.Materialize(containment(
+          capped.df.where(col("is_batch")).select(col("id"), col("h")),
+          pC, nC, minContainmentBp), mat)
+      } finally capped.release()
     } else {
       val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       def hold(df: DataFrame): DataFrame = {

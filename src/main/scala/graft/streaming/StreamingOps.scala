@@ -299,8 +299,10 @@ object StreamingOps {
     * Scale notes: per batch, the corpus side is two column-pruned scans
     * of the signature table (bands + shingle sets) — corpus text is
     * never re-tokenized; the batch side is O(batch). The quote screen
-    * adds (id, h)-pruned scans of the fingerprint table and a
-    * batch×corpus-only hash join (corpus-internal pairs never form);
+    * adds (id, h)-pruned scans of the fingerprint table (over a small
+    * table, one scan of its doc-keyed projection, capped and
+    * materialized once per batch) and a batch×corpus-only hash join
+    * (corpus-internal pairs never form);
     * its corpus-wide document frequencies come from the MAINTAINED df
     * sidecar ([[graft.operators.Corpus.winnowDfStatePath]]), appended
     * per batch beside the fingerprints — never re-aggregated from the
@@ -607,10 +609,15 @@ object StreamingOps {
                   })
               case _ => Nil
             }
-            Await.result(fAdm, scala.concurrent.duration.Duration.Inf)
-            Await.result(fSig, scala.concurrent.duration.Duration.Inf)
-            fFp.foreach(f =>
-              Await.result(f, scala.concurrent.duration.Duration.Inf))
+            // EVERY sink is awaited before the first failure re-throws
+            // (the screens' Try discipline above): rethrowing on the
+            // first failed await would leave the other appends writing
+            // into the maintained tables while the finally unpersists
+            // their inputs and a restart races them on the same
+            // batch-named prefix
+            (Seq(fAdm, fSig) ++ fFp)
+              .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+              .foreach(_.get)
             fs.create(marker, true).close()
           } finally {
             if (screened != null) screened.release()

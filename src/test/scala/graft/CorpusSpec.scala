@@ -558,56 +558,77 @@ class CorpusSpec extends SparkSpec {
     assert(incr.nonEmpty, "fixture produced no batch-involving pairs")
   }
 
+  /** Remove a scratch tree. */
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete(); ()
+  }
+
+  // S1 lands in THREE corpus docs (two appends), so its hashes sit
+  // exactly AT maxDf=3 — rare without the batch; the batch's own copy
+  // pushes them over the cap (the crossing case the screen must
+  // re-judge from stored d + batch d, never from a corpus
+  // re-aggregation)
+  private val s1 = "the quick brown fox jumps over the lazy dog repeatedly"
+  private val u1 = "an utterly unique passage about winnowing fingerprints"
+
+  /** The same three-document corpus written into `root` in both of the
+    * quote screen's regimes — under the default conf it is a few files
+    * (the bulk regime); with a one-byte file target it spreads over more
+    * than two task waves of files (the file-pruned path) — and a
+    * two-document batch whose fingerprints cross S1's hashes past
+    * maxDf=3 (doc 10) and quote doc 1's unique passage (doc 11).
+    * Returns (bulk table, pruned table, batch, batch fingerprints). */
+  private def winnowRegimes(root: java.io.File): (String, String,
+      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val appendA = Seq(
+      (1L, s"$s1 and then document one continues with $u1 for a while"),
+      (2L, s"prefix for doc two $s1 and some trailing tokens here")
+    ).toDF("doc_id", "text")
+    val appendB = Seq(
+      (3L, s"third document also contains $s1 plus its own ending")
+    ).toDF("doc_id", "text")
+    def writeTable(name: String): String = {
+      val table = new java.io.File(root, name).toString
+      Corpus.writeWinnowTable(appendA, "text", "doc_id", table)
+      Corpus.appendToWinnowTable(appendB, "text", "doc_id", table)
+      table
+    }
+    val bulk = writeTable("bulk")
+    val pruned = withSQLConf("spark.sql.shuffle.partitions" -> "16",
+      "graft.append.targetFileBytes" -> "1") { writeTable("pruned") }
+    assertRegimes(bulk, pruned)
+    val batch = Seq((10L, s1), (11L, u1)).toDF("doc_id", "text")
+    (bulk, pruned, batch,
+      Corpus.winnowingFingerprints(batch, "text", "doc_id"))
+  }
+
+  private def assertRegimes(bulk: String, pruned: String): Unit = {
+    val smallTable = 2 * spark.sessionState.conf.numShufflePartitions
+    assert(MaintainedIndex.dataFileCount(spark, bulk) <= smallTable)
+    assert(MaintainedIndex.dataFileCount(spark, pruned) > smallTable)
+  }
+
+  /** The caps and containment floors the winnow-state cases screen at. */
+  private val screenCaps = Seq((3L, 0L), (50L, 0L), (50L, 8000L))
+
+  private def screenRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+
   test("maintained winnow screen equals the one-shot screen across " +
     "appends, including batch-induced cap crossings") {
     val root = Scratch.dir("spec-winnow_state")
     try {
-      // S1 lands in THREE corpus docs (two appends), so its hashes sit
-      // exactly AT maxDf=3 — rare without the batch; the batch's own
-      // copy pushes them over the cap (the crossing case the screen
-      // must re-judge from stored d + batch d, never from a corpus
-      // re-aggregation)
-      val s1 = "the quick brown fox jumps over the lazy dog repeatedly"
-      val u1 = "an utterly unique passage about winnowing fingerprints"
-      val appendA = Seq(
-        (1L, s"$s1 and then document one continues with $u1 for a while"),
-        (2L, s"prefix for doc two $s1 and some trailing tokens here")
-      ).toDF("doc_id", "text")
-      val appendB = Seq(
-        (3L, s"third document also contains $s1 plus its own ending")
-      ).toDF("doc_id", "text")
-      def writeTable(name: String): String = {
-        val table = new java.io.File(root, name).toString
-        Corpus.writeWinnowTable(appendA, "text", "doc_id", table)
-        Corpus.appendToWinnowTable(appendB, "text", "doc_id", table)
-        table
-      }
-      // the same corpus in both of the screen's regimes: written under
-      // the default conf it is a few files (the bulk DAG); written with
-      // a one-byte file target it spreads over more than two task
-      // waves of files (the file-pruned path)
-      val bulk = writeTable("bulk")
-      val pruned = withSQLConf("spark.sql.shuffle.partitions" -> "16",
-        "graft.append.targetFileBytes" -> "1") { writeTable("pruned") }
-      val smallTable = 2 * spark.sessionState.conf.numShufflePartitions
-      assert(MaintainedIndex.dataFileCount(spark, bulk) <= smallTable)
-      assert(MaintainedIndex.dataFileCount(spark, pruned) > smallTable)
-      val batch = Seq(
-        (10L, s1), // crosses S1's hashes past maxDf=3
-        (11L, u1)  // quotes doc 1's unique passage → real containment
-      ).toDF("doc_id", "text")
-      val fpB = Corpus.winnowingFingerprints(batch, "text", "doc_id")
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+      val (bulk, pruned, _, fpB) = winnowRegimes(root)
       for (table <- Seq(bulk, pruned)) {
         def screen(maxDf: Long, minBp: Long) =
           Corpus.winnowingContainmentScreen(fpB, table,
             maxDf = maxDf, minContainmentBp = minBp).df
-        for ((maxDf, minBp) <- Seq((3L, 0L), (50L, 0L), (50L, 8000L))) {
-          val reference = rows(ScreenReference.oneShot(
+        for ((maxDf, minBp) <- screenCaps) {
+          val reference = screenRows(ScreenReference.oneShot(
             fpB, spark.read.parquet(table), maxDf, minBp))
-          assert(rows(screen(maxDf, minBp)) == reference,
+          assert(screenRows(screen(maxDf, minBp)) == reference,
             s"screen diverged at maxDf=$maxDf minBp=$minBp on $table")
         }
         // the quote of u1 must surface (proves the fixture is
@@ -621,13 +642,44 @@ class CorpusSpec extends SparkSpec {
         assert(crossed.count() == 0,
           s"cap-crossing hashes still produced containment evidence on $table")
       }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
+    } finally rmTree(root)
+  }
+
+  test("replay exactness: after a batch's own fingerprints, projection " +
+    "rows and df delta land, its replay screens as before they landed") {
+    val root = Scratch.dir("spec-winnow_replay")
+    try {
+      val (bulk, pruned, batch, fpB) = winnowRegimes(root)
+      val batchId = 7L
+      val replay = Some((batch.select(col("doc_id").as("id")), batchId))
+      def screens(table: String, replay: Option[(
+          org.apache.spark.sql.DataFrame, Long)]) = screenCaps.map {
+        case (maxDf, minBp) => screenRows(Corpus.winnowingContainmentScreen(
+          fpB, table, replay, maxDf, minBp).df)
       }
-      rm(root)
-    }
+      val before = Seq(bulk, pruned).map(t => t -> screens(t, None)).toMap
+      assert(before(bulk).exists(_.nonEmpty), "fixture screens nothing")
+      // land the batch the way a curate batch does: the three artifacts
+      // under batch-named prefixes, the df delta stamped with its id
+      for (table <- Seq(bulk, pruned)) {
+        MaintainedIndex.clusteredIdempotentAppend(fpB, table,
+          s"b${batchId}_fp_", "h")
+        MaintainedIndex.clusteredIdempotentAppend(
+          fpB.select(col("id"), col("h")).distinct(),
+          Corpus.winnowByIdPath(table), s"b${batchId}_byid_", "id")
+        MaintainedIndex.clusteredIdempotentAppend(
+          Corpus.winnowDfDelta(fpB, batchId),
+          Corpus.winnowDfStatePath(table), s"b${batchId}_", "h")
+      }
+      assertRegimes(bulk, pruned)
+      for (table <- Seq(bulk, pruned)) {
+        // landed, an unexcluded screen sees the batch's own copies
+        assert(screens(table, None) != before(table),
+          s"the landing did not reach the screen on $table")
+        assert(screens(table, replay) == before(table),
+          s"replay screened against its own landed rows on $table")
+      }
+    } finally rmTree(root)
   }
 
   test("winnow df sidecar folds to the fingerprint table's exact " +
@@ -649,13 +701,7 @@ class CorpusSpec extends SparkSpec {
       assert(folded.join(recount, Seq("h", "df")).count() == recount.count()
         && folded.count() == recount.count(),
         "sidecar fold diverged from the fingerprint-table recount")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(root)
-    }
+    } finally rmTree(root)
   }
 
   test("burstiness: spread terms score 10000, concentrated terms cf/df") {

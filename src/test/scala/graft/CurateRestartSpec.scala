@@ -279,4 +279,27 @@ class CurateRestartSpec extends SparkSpec {
     assert(fpIds(root) == Seq(1L, 100L, 201L))
     assertDfStateConsistent(root)
   }
+
+  test("a failed admit write fails the batch only after every other sink " +
+    "has finished: no job left running, no staging dir, no later write") {
+    val (root, run) = quoteFixture()
+    // the admit sink cannot stage under a regular file, so it fails at
+    // once while the signature and fingerprint appends are under way
+    assert(new java.io.File(root, "admitted").createNewFile())
+    intercept[Exception](run())
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a sink job was still running when the batch failed")
+    val maintained = Seq("sigs", "fps", "fps/_graft_winnow_byid",
+      "fps/_graft_winnow_df").map(new java.io.File(root, _))
+    def listing(d: java.io.File): Set[String] =
+      Option(d.list()).getOrElse(Array.empty[String]).toSet
+    maintained.foreach { d =>
+      assert(!listing(d).exists(_.startsWith("_stage_")),
+        s"an orphaned append is still staging under $d")
+    }
+    val before = maintained.map(listing)
+    Thread.sleep(2000)
+    assert(maintained.map(listing) == before,
+      "a maintained table changed after the batch had failed")
+  }
 }

@@ -248,6 +248,53 @@ class ScreenPruneSpec extends SparkSpec {
     (table, Corpus.winnowingFingerprints(batch, "text", "doc_id"))
   }
 
+  test("bulk-regime screen reads the df sidecar and the doc-keyed " +
+    "projection once each, with and without adaptive execution") {
+    val table = new java.io.File(tmpDir("winnow_bulk"), "fps").toString
+    val batch = Seq((1007L, (5 to 12).map(j => s"tok7x$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    def doc(i: Long) = (i,
+      s"document $i " + (1 to 12).map(j => s"tok${i}x$j").mkString(" "))
+    Corpus.writeWinnowTable((0L until 40L).map(doc).toDF("doc_id", "text"),
+      "text", "doc_id", table)
+    Corpus.appendToWinnowTable((40L until 60L).map(doc).toDF("doc_id", "text"),
+      "text", "doc_id", table)
+    assert(MaintainedIndex.dataFileCount(spark, table) <=
+      2 * spark.sessionState.conf.numShufflePartitions,
+      "fixture does not exercise the bulk regime")
+    // the directories a plan reads, stage by stage: a reused exchange
+    // or a cached relation is a leaf, not a second scan
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    def scanned(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => scanned(a.executedPlan)
+      case s: QueryStageExec => scanned(s.plan)
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
+      case other => (other.children ++ other.subqueries).flatMap(scanned)
+    }
+    for (aqe <- Seq("true", "false"))
+      withSQLConf("spark.sql.adaptive.enabled" -> aqe) {
+        // as a curate batch calls it: fingerprints persisted but not yet
+        // computed, under the replay contract
+        val batchFps = Corpus.winnowingFingerprints(batch, "text", "doc_id")
+          .persist()
+        withExecutions {
+          val m = Corpus.winnowingContainmentScreen(batchFps, table,
+            replay = Some((batch.select(col("doc_id").as("id")), 1L)),
+            mat = graft.ops.MatStrategy.Local)
+          try assert(m.df.where(col("batch_id") === 1007L).count() == 1)
+          finally { m.release(); batchFps.unpersist() }
+        } { qes =>
+          val dirs = qes.flatMap(qe => scanned(qe.executedPlan))
+          val df = dirs.count(_ == "_graft_winnow_df")
+          val byId = dirs.count(_ == "_graft_winnow_byid")
+          assert(df == 1 && byId == 1,
+            s"adaptive=$aqe: df sidecar scanned $df times, projection $byId")
+        }
+      }
+  }
+
   test("pruned screen == one-shot reference screen, and the quote is " +
     "caught") {
     val (table, batchFps) = winnowFixture()
