@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.sources.MaintainedIndex.FileKey
 
@@ -14,7 +14,8 @@ import graft.sources.MaintainedIndex.FileKey
   * parquet directory; Catalyst still gets full pushdown/pruning because
   * the read is declarative. Like the metastore, [[parquet]] hands Spark
   * a directory's schema without re-running inference while the
-  * directory is unchanged.
+  * directory is unchanged, and reads the schema Spark recorded in a
+  * footer when it is not.
   */
 object Tables {
   val All: Seq[String] = Seq(
@@ -73,43 +74,77 @@ object Tables {
     ()
   }
 
-  /** `spark.read.parquet(dir)`, minus the schema-inference job while
+  /** `spark.read.parquet(dir)`, minus the schema-inference job: while
     * the listing of `dir` (a parquet directory or single file) and the
-    * parquet confs are unchanged: a hit reads with the cached schema.
-    * Every call still builds a fresh relation (distinct attribute ids,
-    * so self-joins resolve). Partitioned, missing and empty directories
-    * take the plain read: Spark lists the first with parallel partition
-    * discovery, and raises its own errors for the other two. An append
-    * changes the listing, so an append-only table simply misses. */
+    * parquet confs are unchanged, a hit reads with the cached schema; a
+    * miss over files Spark wrote reads the schema Spark recorded in a
+    * footer ([[recordedSchema]]), so an append-only table (a new
+    * listing per append) runs no job either. Every call still builds a
+    * fresh relation (distinct attribute ids, so self-joins resolve).
+    * Partitioned, missing and empty directories take the plain read:
+    * Spark lists the first with parallel partition discovery, and
+    * raises its own errors for the other two. */
   def parquet(spark: SparkSession, dir: String): DataFrame =
-    schemaKey(spark, dir) match {
+    listing(spark, dir) match {
       case None => spark.read.parquet(dir)
-      case Some(key) => Option(schemaCache.get(dir)) match {
-        case Some((`key`, schema)) => spark.read.schema(schema).parquet(dir)
-        case _ =>
-          val df = spark.read.parquet(dir)
-          schemaCache.put(dir, (key, df.schema))
-          df
-      }
+      case Some(files) =>
+        val key = schemaKey(spark, files)
+        Option(schemaCache.get(dir)) match {
+          case Some((`key`, schema)) => spark.read.schema(schema).parquet(dir)
+          case _ =>
+            val df = recordedSchema(spark, files)
+              .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+            schemaCache.put(dir, (key, df.schema))
+            df
+        }
     }
 
-  /** None for a partitioned, missing or empty directory. */
-  private def schemaKey(spark: SparkSession, dir: String): Option[SchemaKey] = {
+  /** The files Spark's file index would read, or None for a
+    * partitioned, missing or empty directory. */
+  private def listing(spark: SparkSession,
+                      dir: String): Option[Seq[FileStatus]] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listed = try fs.listStatus(p).toSeq
       catch { case _: java.io.FileNotFoundException => Nil }
     val visible = listed.filterNot(s => hidden(s.getPath.getName))
     if (visible.isEmpty || visible.exists(_.isDirectory)) None
-    else Some(SchemaKey(
-      visible.map(s =>
+    else Some(visible)
+  }
+
+  private def schemaKey(spark: SparkSession,
+                        files: Seq[FileStatus]): SchemaKey =
+    SchemaKey(
+      files.map(s =>
         FileKey(s.getPath.getName, s.getLen, s.getModificationTime)).toSet,
       spark.conf.getAll.filter { case (k, _) =>
         k.startsWith("spark.sql.parquet.") ||
           k.startsWith("spark.sql.legacy.parquet.") ||
           k == "spark.sql.caseSensitive"
-      }))
-  }
+      })
+
+  /** The schema inference would return, read on the driver from the
+    * footer inference reads — the first data file by path, when schema
+    * merging is off and no summary file is listed — where Spark
+    * recorded its schema on write (that record wins over every parquet
+    * conf). None, and so the plain read, for anything else: files
+    * another writer wrote, a summary file, schema merging, an
+    * unreadable footer. */
+  private def recordedSchema(spark: SparkSession,
+                             files: Seq[FileStatus]): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+      files.exists(_.getPath.getName.startsWith("_"))) None
+    else scala.util.Try {
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+          files.minBy(_.getPath.toString),
+          spark.sparkContext.hadoopConfiguration),
+        org.apache.parquet.format.converter.ParquetMetadataConverter
+          .SKIP_ROW_GROUPS)
+      Option(footer.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson).collect { case st: StructType => st }
+    }.toOption.flatten
 
   /** The names Spark's file index skips: `_`/`.` prefixes and in-flight
     * `._COPYING_` copies, but not the parquet summary files. A copy of

@@ -560,9 +560,10 @@ object Corpus {
     *    relation of tagged `(id, h, is_batch)` rows —
     *    the batch's distinct fingerprints and the projection's rows,
     *    kept where the hash is rare — materialized once (executor-local
-    *    blocks, released before return); the pair join and both set
-    *    sizes read its blocks. No persists of stored tables, no action
-    *    barriers, one scan each of the projection and the sidecar;
+    *    blocks, one per shuffle partition, released before return);
+    *    the pair join and both set sizes read its blocks. No persists
+    *    of stored tables, no action barriers, one scan each of the
+    *    projection and the sidecar, and no schema-inference job;
     *  - above that (the 100 TB steady state): every stored-table read
     *    is file-pruned against the batch's bounded probe sets — of the
     *    table only files whose h-envelope meets the batch's rare-hash
@@ -621,9 +622,16 @@ object Corpus {
       //    them by `is_batch`: left lazy, Catalyst pushes that filter
       //    below the union, each consumer gets its own copy of the cap
       //    and its scans, and the exchanges no longer match for reuse.
+      //    They land in one block per shuffle partition, not one per
+      //    union input (the batch's partitions plus the projection's
+      //    splits): at curate-batch sizes per-task setup (task
+      //    deserialization, projection codegen) is about half of the
+      //    executor CPU, and every consumer stage pays it per block;
+      //  - [[graft.Tables.parquet]] reads both appended-to dirs with
+      //    no schema-inference job.
       val ihB = batchFps.select(col("id"), col("h")).distinct()
       val rare = ihB.select(col("h"), lit(1L).as("d"))
-        .unionByName(spark.read.parquet(dfPath)
+        .unionByName(graft.Tables.parquet(spark, dfPath)
           .where(col("batch_id") < lit(ownBatchId))
           .select(col("h"), col("d")))
         .groupBy(col("h")).agg(sum(col("d")).as("df"))
@@ -631,9 +639,11 @@ object Corpus {
         .select(col("h"))
       val capped = graft.ops.Materialize(
         ihB.withColumn("is_batch", lit(true))
-          .unionByName(exclude(spark.read.parquet(winnowByIdPath(tablePath))
-            .select(col("id"), col("h"))).withColumn("is_batch", lit(false)))
-          .join(rare, Seq("h")),
+          .unionByName(exclude(
+            graft.Tables.parquet(spark, winnowByIdPath(tablePath))
+              .select(col("id"), col("h"))).withColumn("is_batch", lit(false)))
+          .join(rare, Seq("h"))
+          .coalesce(spark.sessionState.conf.numShufflePartitions),
         graft.ops.MatStrategy.Local)
       try {
         val pC = capped.df.where(!col("is_batch")).select(col("id"), col("h"))

@@ -70,14 +70,49 @@ class TablesSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** A parquet file with no Spark schema record in its footer, as
+    * another writer leaves it: only inference can read its schema. */
+  private def writeForeign(file: File): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; required binary b; }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(file.toString))
+      .withType(schema).build()
+    val g = new SimpleGroupFactory(schema)
+    try (0 until 4).foreach(i =>
+      w.write(g.newGroup().append("id", i.toLong).append("b", s"v$i")))
+    finally w.close()
+  }
+
   test("an unchanged dir reads its schema once: the second read runs no job") {
     val dir = Scratch.dir("tables-unchanged")
-    write(ids(100).repartition(2), dir)
+    writeForeign(new File(dir, "part-0.parquet"))
     val miss = jobGroups(Tables.parquet(spark, dir.toString).schema)
     assert(miss.nonEmpty, "the first read infers the schema in a job")
     val hit = jobGroups(Tables.parquet(spark, dir.toString).schema)
     assert(hit.isEmpty)
     assertSame(dir.toString)
+  }
+
+  test("a dir Spark wrote runs no job even when an append changes it") {
+    val dir = Scratch.dir("tables-recorded")
+    write(ids(100).repartition(2), dir)
+    assert(jobGroups(Tables.parquet(spark, dir.toString).schema).isEmpty)
+    assertSame(dir.toString)
+    writeFile(ids(5), new File(dir, "part-appended.parquet"))
+    assert(jobGroups(Tables.parquet(spark, dir.toString).schema).isEmpty)
+    assertSame(dir.toString)
+    // one footer cannot speak for a merge of every file's schema
+    writeFile(spark.range(3).select(col("id"), lit(1).as("extra")),
+      new File(dir, "part-extra.parquet"))
+    withSQLConf("spark.sql.parquet.mergeSchema" -> "true") {
+      assertSame(dir.toString)
+      assert(Tables.parquet(spark, dir.toString).columns.toSeq ==
+        Seq("id", "s", "extra"))
+    }
   }
 
   test("a file appended with a first-sorting name and another schema") {
@@ -104,19 +139,8 @@ class TablesSpec extends SparkSpec {
   test("flipping spark.sql.parquet.binaryAsString re-infers") {
     // Spark's own files carry its schema in their footer, which wins
     // over the conf: write one with no Spark metadata
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.schema.MessageTypeParser
     val dir = Scratch.dir("tables-binary")
-    val schema = MessageTypeParser.parseMessageType(
-      "message m { required int64 id; required binary b; }")
-    val w = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"))
-      .withType(schema).build()
-    val g = new SimpleGroupFactory(schema)
-    try (0 until 4).foreach(i =>
-      w.write(g.newGroup().append("id", i.toLong).append("b", s"v$i")))
-    finally w.close()
+    writeForeign(new File(dir, "part-0.parquet"))
     assertSame(dir.toString)
     withSQLConf("spark.sql.parquet.binaryAsString" -> "true") {
       assertSame(dir.toString)
